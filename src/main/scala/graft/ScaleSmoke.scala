@@ -268,12 +268,12 @@ object ScaleSmoke {
       ops.AnnIndex.ivfIndexCompact(spark, ivfIdxDir)
     }
     // end-to-end: the pushed serve must return the identical result
-    ops.PlanCache.invalidate(spark, s"$ivfIdxDir|")
+    ops.Artifacts.invalidate(spark, s"$ivfIdxDir|")
     val servedPushed = time("ivf_index_serve 3q (pushProbedCells, compacted)") {
       topkPairs(ops.AnnIndex.ivfIndexServe(spark, ivfIdxDir, Seq(dir), q3,
         pushProbedCells = true))
     }
-    ops.PlanCache.invalidate(spark, s"$ivfIdxDir|")
+    ops.Artifacts.invalidate(spark, s"$ivfIdxDir|")
     val servedFull3 = topkPairs(ops.AnnIndex.ivfIndexServe(spark, ivfIdxDir, Seq(dir), q3))
     assert(servedPushed == servedFull3, "probed-cell pushdown changed the serve result")
     // the compressed-scan path: corpus ships as 8-byte PQ codes, queries
@@ -517,10 +517,11 @@ object ScaleSmoke {
           col("doc_id") >= lit(cand.min) && col("doc_id") <= lit(cand.max))
         .select(col("term"), col("doc_id"), col("tf")))
     }
-    // price the COLD path deliberately: the decision memo (r16) would
-    // otherwise serve the contender pass from the maxScoreContenders
-    // call above and this row would under-report the engaged cost
-    ops.DecisionMemo.clear()
+    // price the COLD path deliberately: the generation-keyed decision
+    // memo would otherwise serve the contender pass from the
+    // maxScoreContenders call above and this row would under-report
+    // the engaged cost
+    ops.Artifacts.reset()
     val tMs0 = System.nanoTime()
     val msServe = time("text_bm25_served MAXSCORE (exact, contender re-scan, COLD decision)") {
       ops.TextAnalysis.textBm25ServedMaxScore(spark, stopIdx, minMegaRows = 0L).collect().map(_.toSeq).toSeq

@@ -398,22 +398,15 @@ object SelfChecks {
     want.toSeq
   }
 
-  /** One reference training per (JVM, corpus dir): the train check and
-    * the scaled-serve encode check both need it in the same Verify run,
-    * and each would otherwise pay the driver-side corpus collect plus
-    * the O(rounds × vocab) in-memory trainer a second time. Verify (and
-    * each fuzz suite) is one fresh JVM per corpus, so staleness is not
-    * a concern here. */
-  private val refTrainMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, String, String, String, Long)]]()
-  // invalidated with the engine's own artifact memos: a library
-  // consumer that swaps corpus files at the same path and calls
-  // PlanCache.clear() per the contract gets a fresh reference train,
-  // not a phantom divergence against the retrained engine
-  ops.PlanCache.onClear("SelfChecks.refTrainMemo")(() => refTrainMemo.clear())
+  /** One reference training per (session, corpus dir): the train check
+    * and the scaled-serve encode check both need it in the same Verify
+    * run, and each would otherwise pay the driver-side corpus collect
+    * plus the O(rounds × vocab) in-memory trainer a second time. It is
+    * an [[ops.Artifacts]] memo, so a corpus swap followed by
+    * `Artifacts.clear()` retrains the reference alongside the engine. */
   private def referenceScaledMergesFor(s: SparkSession, dir: String): Seq[(Long, String, String, String, Long)] =
-    refTrainMemo.computeIfAbsent(dir,
-      _ => referenceScaledTrain(collectedSplitVocab(s, dir)))
+    ops.Artifacts.memo(s, s"$dir|bpe-reference-train")(
+      referenceScaledTrain(collectedSplitVocab(s, dir)))
 
   private def bpeTrainScaledCheck(s: SparkSession, dir: String): CheckResult = {
     val want = referenceScaledMergesFor(s, dir)

@@ -16,40 +16,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Per-session memo of loaded table DataFrames: `spark.read.parquet`
-    * re-lists files and re-reads footers (a small Spark job) on every
-    * call, so composing many queries over the same corpus would pay
-    * schema inference once per *construction* instead of once per
-    * table. Reclamation = the explicit isStopped sweep (values reference
-    * their session, so weak-key GC can't fire — see `Dedup.setsMemo`);
-    * assumes corpus files are immutable while memoized — `dropCache()`
-    * resets. These are plain lazy plans, not persisted data: memoizing
-    * costs nothing but the plan object. */
-  private val readMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
-
-  /** Forget memoized table plans (call after replacing corpus files). */
-  def dropCache(): Unit = readMemo.synchronized { readMemo.clear() }
-
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // lookup + sweep under the lock, but run load() (which triggers a
-    // schema-inference Spark job) OUTSIDE it — a cold object-store
-    // listing must not serialize every other thread's plan construction.
-    // Two threads may race the same cold load; getOrElseUpdate keeps one.
-    val hit = readMemo.synchronized {
-      val it = readMemo.entrySet().iterator()
-      while (it.hasNext) if (it.next().getKey.sparkContext.isStopped) it.remove()
-      readMemo.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
-        .get(s"$dir/$name")
-    }
-    hit.getOrElse {
-      val df = load(spark, dir, name)
-      readMemo.synchronized {
-        readMemo.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
-          .getOrElseUpdate(s"$dir/$name", df)
-      }
-    }
-  }
+  /** Loaded table plans are memoised per (session, dir, table) in
+    * [[ops.Artifacts]]: `spark.read.parquet` re-lists files and re-reads
+    * footers (a small Spark job) on every call, so composing many
+    * queries over one corpus would pay schema inference once per
+    * construction instead of once per table. The plans are lazy, not
+    * persisted data; they stand across `Artifacts.reset()` and go with
+    * `Artifacts.clear()` after a corpus swap. */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    ops.Artifacts.memo(spark, s"$dir/$name", standing = true)(load(spark, dir, name))
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {

@@ -268,21 +268,14 @@ object Curation {
         col("text"), contamShingleN)).as("h"))
       .distinct()
 
-  /** Session memo of built eval blooms (eager small build, like the PQ
-    * codebooks — the eval set is benchmark-sized by construction). */
-  private val bloomMemo = new java.util.WeakHashMap[
-    SparkSession, scala.collection.mutable.Map[String, org.apache.spark.util.sketch.BloomFilter]]()
-
+  /** The eval bloom, memoised per (session, corpus) — an eager small
+    * build, like the PQ codebooks (the eval set is benchmark-sized by
+    * construction). */
   private[graft] def evalBloom(s: SparkSession, dir: String): org.apache.spark.util.sketch.BloomFilter =
-    bloomMemo.synchronized {
-      val it = bloomMemo.entrySet().iterator()
-      while (it.hasNext) if (it.next().getKey.sparkContext.isStopped) it.remove()
-      bloomMemo.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(dir, {
-          val evalH = evalShingleHashes(s, dir)
-          val n = math.max(1024L, evalH.count())
-          evalH.stat.bloomFilter("h", n, contamBloomFpp)
-        })
+    Artifacts.memo(s, s"$dir|eval-bloom") {
+      val evalH = evalShingleHashes(s, dir)
+      val n = math.max(1024L, evalH.count())
+      evalH.stat.bloomFilter("h", n, contamBloomFpp)
     }
 
   /** PERSIST the eval-set Bloom index: one parquet row carrying the

@@ -83,17 +83,9 @@ object Dedup {
     * is shared by ngram-Jaccard, MinHash-LSH, clustering, and
     * corpus_clean — memoizing one cache here (instead of `.cache()` per
     * call) means repeated / composed invocations reuse one storage entry
-    * rather than leaking a new one each time. Mechanism in [[PlanCache]]. */
-  private def memoized(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    PlanCache.memoized(s, key)(build)
-
+    * rather than leaking a new one each time. */
   private def docSetsCached(s: SparkSession, dir: String): DataFrame =
-    memoized(s, s"$dir|sets")(docSets(s, dir))
-
-  /** Unpersist and forget every memoized plan cache — shingle tables AND
-    * the shared IVF centroids (library consumers call this when done
-    * with a corpus, or after replacing corpus files). */
-  def clearShingleCache(): Unit = PlanCache.clear()
+    Artifacts.frame(s, s"$dir|sets")(docSets(s, dir))
 
   /** Above this doc-frequency for the hottest shingle, hash-order
     * prefixes risk quadratic join fan-out (a boilerplate shingle lands in
@@ -173,7 +165,7 @@ object Dedup {
         // The 1-row statistic is itself memo-cached: the first executed
         // query pays one pass over the cached sets, every later
         // query/execution against the corpus reads the cached row.
-        val stat = memoized(s, s"$dir|maxdf")(
+        val stat = Artifacts.frame(s, s"$dir|maxdf")(
           sets.select(explode(col("hs")).as("h"))
             .groupBy(col("h")).agg(count(lit(1)).as("df"))
             .agg(coalesce(max(col("df")), lit(0L)).as("max_df")))
@@ -485,7 +477,7 @@ object Dedup {
   }
 
   private def simBandedCached(s: SparkSession, dir: String): DataFrame =
-    simBandsOf(memoized(s, s"$dir|simsig")(simSigOf(Tables(s, dir, "documents"))))
+    simBandsOf(Artifacts.frame(s, s"$dir|simsig")(simSigOf(Tables(s, dir, "documents"))))
 
   /** SimHash near-dup: 32-bit signature = sign of per-bit weight sums over
     * token hashes (with multiplicity); byte-band blocking; Hamming ≤ hammingThreshold on
@@ -991,20 +983,14 @@ object Dedup {
           org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))))
       .write.mode("overwrite").parquet(s"$indexDir/simhash")
 
-  /** One (landing split + signature index) per corpus per JVM for the
-    * registered-query form of the indexed incremental check. */
-  private val builtDedupIndexes = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  PlanCache.onClear("Dedup.builtDedupIndexes")(() =>
-    PlanCache.drainTempDirs(builtDedupIndexes))
-
   /** Registered-query form: split the corpus into the modulo landing
-    * batch and standing corpus ONCE (temp dirs), persist the standing
-    * side's signature index, and run the indexed check — byte-identical
-    * to [[dedupIncremental]], so it shares its DuckDB oracle. Bench reps
-    * measure the true incremental cost: batch hashing + one equi-join
-    * against the signature parquet. */
+    * batch and standing corpus ONCE per (JVM, corpus) (a standing temp
+    * dir), persist the standing side's signature index, and run the
+    * indexed check — byte-identical to [[dedupIncremental]], so it
+    * shares its DuckDB oracle. Bench reps measure the true incremental
+    * cost: batch hashing + one equi-join against the signature parquet. */
   def dedupIncrementalIndexedQuery(s: SparkSession, dir: String): DataFrame = {
-    val root = builtDedupIndexes.computeIfAbsent(dir, { _ =>
+    val root = Artifacts.tempDir(s"dedup-index|$dir") {
       val d = java.nio.file.Files.createTempDirectory("graft-dedup-index").toString
       val docs = Tables(s, dir, "documents")
       docs.filter(col("doc_id") % batchMod === 0)
@@ -1013,7 +999,7 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$d/corpus/documents.parquet")
       dedupIndexWrite(s, s"$d/corpus", s"$d/index")
       d
-    })
+    }
     dedupIncrementalIndexed(s, s"$root/batch", s"$root/index")
   }
 
@@ -1109,7 +1095,7 @@ object Dedup {
   /** Blocked dedup with the TRAINED (k-means) quantizer — same shape,
     * better-balanced blocks (Σ block² drops when no stride-sampled
     * centroid hoards a hot region); shares ONE trained centroid table
-    * with `sim_ivf_topk_trained` via the PlanCache memo. Rows-only for
+    * with `sim_ivf_topk_trained` via the [[Artifacts]] memo. Rows-only for
     * the same float-summation-order reason as the search variant. */
   def dedupEmbeddingBlockedTrained(s: SparkSession, dir: String): DataFrame =
     dedupEmbeddingBlockedWith(s, dir, _ => Similarity.trainedCentroidsOf(s, dir))
@@ -1364,7 +1350,7 @@ object Dedup {
     * Exact-K tie behavior: identical to the TakeOrdered form — of the
     * vectors tied at the cutoff score, the r smallest vec_ids enter
     * the head, the rest stay kept. The scores frame is memoized
-    * ([[PlanCache]]) so the cutoff collects and the returned filter
+    * ([[Artifacts]]) so the cutoff collects and the returned filter
     * evaluate the quadratic pair kernel exactly once. */
   private def semanticHeadRank(s: SparkSession, dir: String,
       scoresRaw: DataFrame, k: Long): DataFrame = {
@@ -1372,7 +1358,7 @@ object Dedup {
     // keyed by dir ALONE (budget-independent), under the repo-wide
     // "$dir|name" convention so a consumer's dir-prefix invalidation
     // after replacing corpus files sweeps this memo like every other
-    val scores = PlanCache.memoized(s, s"$dir|semantic_pctl_scores")(scoresRaw)
+    val scores = Artifacts.frame(s, s"$dir|semantic_pctl_scores")(scoresRaw)
     val cumW = Window.orderBy(col("score").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cut = scores.groupBy(col("score")).agg(count(lit(1)).as("cnt"))

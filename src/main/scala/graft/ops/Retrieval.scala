@@ -145,19 +145,16 @@ object Retrieval {
   /** The semantic ranks every hybrid form fuses — the stride query set
     * probed against the persisted LSH index, per-query-top-k bounded.
     * Memoized per INDEX GENERATION as a DISTRIBUTED cached frame
-    * ([[DecisionMemo.cachedDf]], round 17): the ranks are a pure
-    * function of the frozen bucket table + corpus query set, and each
-    * of the registered hybrid forms re-derived them per call (the
-    * bucket-scoring kernel was the single most expensive stage of the
-    * family); any append/compact/retrain of the index moves the
-    * file-listing fingerprint and the next serve re-derives. The rank
-    * rows stay on the EXECUTORS: the r16 form `collect()`ed queries ×
-    * topK ≈ corpus/5 rows into the driver's memo map — a driver-memory
-    * scale-killer the r16 verdict flagged (item 2) — where the cached
-    * frame's footprint distributes with the cluster. */
+    * ([[Artifacts.frameAtGeneration]]): the ranks are a pure function
+    * of the frozen bucket table + corpus query set, shared by every
+    * registered hybrid form (the bucket-scoring kernel is the family's
+    * most expensive stage); any append/compact/retrain of the index
+    * moves the generation and the next serve re-derives. The rank rows
+    * stay on the EXECUTORS — queries × topK ≈ corpus/5 rows never
+    * reach the driver. */
   private def semRanks(s: SparkSession, dir: String): DataFrame = {
     val idxDir = AnnIndex.lshIndexFor(s, dir)
-    DecisionMemo.cachedDf(s, idxDir, s"hybrid-sem-ranks|$dir") {
+    Artifacts.frameAtGeneration(s, idxDir, s"hybrid-sem-ranks|$dir") {
       AnnIndex.lshIndexServe(s, idxDir, Seq(dir),
           Similarity.normed(s, dir)
             .filter(col("vec_id") % Similarity.queryStride === 0)
@@ -231,14 +228,10 @@ object Retrieval {
     // banned head they were cut with: per-query-top-k bounded,
     // invalidated by any append/compact/delete of the text index
     // (pinned in BoundedServeSpec — the appended-doc arm re-derives
-    // through exactly this fingerprint). Round 17: the memo holds a
-    // DISTRIBUTED cached frame, not the r16 driver-collected snapshot
-    // (queries × topK rows grow with the corpus — verdict item 2); the
-    // lazily-cached frame snapshots decision-time index state at first
-    // materialization — the serve paths' documented snapshot
-    // semantics; hold across concurrent ingest via the `_now` form,
-    // which materializes before returning.
-    val lex = DecisionMemo.cachedDf(s, idxDir,
+    // through exactly this generation). The entry is a DISTRIBUTED
+    // cached frame, materialised inside its build, so it holds the
+    // index state it was stored under however late it is consumed.
+    val lex = Artifacts.frameAtGeneration(s, idxDir,
         s"hybrid-lex-served|${banned.sorted.mkString("\u0001")}|$dir") {
       val postings = IndexMaintenance.minusTombstones(s, s"$idxDir/postings",
           s.read.parquet(s"$idxDir/postings"), "doc_id")
@@ -539,18 +532,14 @@ object Retrieval {
     // MEMOIZED per index generation: the per-query decision AND its
     // pruned lexical ranks are a pure function of the frozen index +
     // corpus + cut, and the lex frame is per-query-top-k BOUNDED — so
-    // the whole lexical half is derived once per index file-listing
-    // fingerprint ([[DecisionMemo]]) and served until an append/
-    // compact/delete moves the fingerprint (pinned in
-    // `BoundedServeSpec`). Round 17: the memo holds the ranks as a
-    // DISTRIBUTED cached frame (the r16 driver-collected snapshot grew
-    // with the corpus — verdict item 2). The lazily-cached frame keeps
-    // the documented decision-time snapshot semantics at first
-    // materialization; [[searchHybridRrfServedMaxScoreNow]] remains
-    // the race-closing entry point for callers that hold the result
-    // across concurrent ingest. The fusion below re-evaluates per call
-    // (the semantic side has its own index).
-    val lexSnap = DecisionMemo.cachedDfOpt(s, idxDir,
+    // the whole lexical half is derived once per index generation
+    // ([[Artifacts.frameOptAtGeneration]]) and served until an append/
+    // compact/delete moves it (pinned in `BoundedServeSpec`). The
+    // frame is materialised inside the build, so a caller holding the
+    // result across concurrent ingest still reads the decision-time
+    // index state (pinned there too). The fusion below re-evaluates per
+    // call (the semantic side has its own index).
+    val lexSnap = Artifacts.frameOptAtGeneration(s, idxDir,
         s"hybrid-maxscore-lex|$maxDfShare|$dir")(
       hybridMaxScoreLex(s, dir, idxDir, maxDfShare).map(_._1))
     lexSnap match {

@@ -224,7 +224,7 @@ object Similarity {
     * query. Narrow rows (3 longs × tables per vector), MEMORY_AND_DISK. */
   private[graft] def lshBuckets(s: SparkSession, dir: String,
       tables: Int, bits: Int): DataFrame =
-    PlanCache.memoized(s, s"$dir|lsh-buckets-$tables-$bits") {
+    Artifacts.frame(s, s"$dir|lsh-buckets-$tables-$bits") {
       val planes = hyperplanesFor(tables, bits)
       val proj = (c: Column) => graft.plans.VectorFunctions.lsh_projections(c, planes, embDims)
       // per-plane threshold = the corpus-MEAN's projection = avg of per-row
@@ -433,7 +433,7 @@ object Similarity {
     * IVF search probes and the blocked dedup. */
   private[graft] def trainedCentroidsOf(s: SparkSession, dir: String,
       iters: Int = kmeansIters): DataFrame =
-    PlanCache.memoized(s, s"$dir|ivf-kmeans-$iters") {
+    Artifacts.frame(s, s"$dir|ivf-kmeans-$iters") {
       trainKmeans(s, normed(s, dir), iters, dir)
     }
 
@@ -685,8 +685,8 @@ object Similarity {
     // the built lists memoize per dir (the IVF value proposition: the
     // assignment + group shuffle are BUILD cost, paid once — steady-state
     // serving reads the cached lists), same memo the trained quantizer
-    // uses; PlanCache.clear()/invalidate on corpus replacement
-    val lists = PlanCache.memoized(s, s"$dir|ivf-auto-lists") {
+    // uses; Artifacts.clear()/invalidate on corpus replacement
+    val lists = Artifacts.frame(s, s"$dir|ivf-auto-lists") {
       asg.groupBy(col("c_id"))
         .agg(sort_array(collect_list(
           struct(col("vec_id"), col("embedding"), col("nrm")))).as("cands"))
@@ -738,12 +738,7 @@ object Similarity {
     * deviation from the lazy-plan contract, like [[trainedCentroidsOf]])
     * and memoized per (session, corpus). */
   private[graft] def pqCodebook(s: SparkSession, dir: String): Array[Double] =
-    pqMemo.synchronized {
-      val it = pqMemo.entrySet().iterator()
-      while (it.hasNext) if (it.next().getKey.sparkContext.isStopped) it.remove()
-      pqMemo.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(s"$dir|prefix", pqCodebookOfFrame(normed(s, dir)))
-    }
+    Artifacts.memo(s, s"$dir|pq-prefix")(pqCodebookOfFrame(normed(s, dir)))
 
   /** The un-memoized prefix-codebook body over an explicit normed frame
     * (shared with the retrain path). */
@@ -757,9 +752,6 @@ object Similarity {
       e.map(_ / nrm)
     }))
   }
-
-  private val pqMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Array[Double]]]()
 
   /** `entries(j)` = normalized vector j → flat `cb[(s·k+j)·dsub + d]`
     * with k = entries.length (≤ [[pqK]]; [[pqKOf]] recovers it). */
@@ -784,11 +776,7 @@ object Similarity {
     * the trained variant is rows-only. */
   private[graft] def pqCodebookTrained(s: SparkSession, dir: String,
       iters: Int = kmeansIters): Array[Double] =
-    pqMemo.synchronized {
-      pqMemo.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(s"$dir|trained-$iters",
-          pqCodebookTrainedFrom(normed(s, dir), iters))
-    }
+    Artifacts.memo(s, s"$dir|pq-trained-$iters")(pqCodebookTrainedFrom(normed(s, dir), iters))
 
   /** The un-memoized per-subspace Lloyd body over an explicit normed
     * frame, initialized from that frame's prefix codebook (shared with

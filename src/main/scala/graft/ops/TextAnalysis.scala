@@ -442,7 +442,7 @@ object TextAnalysis {
     * step), so memoizing the bounded [[bpeTrainMerges]]-row output
     * frame memoizes the training work itself. */
   private[graft] def bpeMergesDf(s: SparkSession, dir: String): DataFrame =
-    PlanCache.memoized(s, s"$dir|bpe_merges")(textBpeTrain(s, dir))
+    Artifacts.frame(s, s"$dir|bpe_merges")(textBpeTrain(s, dir))
 
   /** ENCODED VOCABULARY — every distinct word of the corpus with its
     * BPE segmentation under the learned merge table, `(word, w, freq)`
@@ -462,7 +462,7 @@ object TextAnalysis {
     * own), memoized per (session, corpus) for the queries that share
     * it. */
   private[graft] def bpeEncodedVocab(s: SparkSession, dir: String): DataFrame =
-    PlanCache.memoized(s, s"$dir|bpe_encoded_vocab") {
+    Artifacts.frame(s, s"$dir|bpe_encoded_vocab") {
       val merges = bpeMergesDf(s, dir).select(col("step"), col("lhs"), col("rhs"))
         .orderBy(col("step")).collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
@@ -644,7 +644,7 @@ object TextAnalysis {
     * InMemoryTableScan, pinned in `PlanGuardSpec`. One row per doc —
     * the same cache weight class as the dedup shingle memos. */
   private[ops] def bpeDocCounts(s: SparkSession, dir: String): DataFrame =
-    PlanCache.memoized(s, s"$dir|bpe_doc_counts")(
+    Artifacts.frame(s, s"$dir|bpe_doc_counts")(
       bpeDocCountsWith(s, dir, bpeEncodedVocab(s, dir)))
 
   /** [[bpeDocCounts]] under an explicit encoded vocabulary (the served
@@ -810,7 +810,7 @@ object TextAnalysis {
     * doctored-model arm pins that a hand-edited merge table changes the
     * output (no retraining sneaks in). */
   def textBpeEncodeServed(s: SparkSession, dir: String, modelDir: String): DataFrame = {
-    val vocab = PlanCache.memoized(s, s"$dir|bpe_encoded_vocab@$modelDir")(
+    val vocab = Artifacts.frame(s, s"$dir|bpe_encoded_vocab@$modelDir")(
       bpeApplyDispatch(bpeWordVocab(s, dir), bpeModelMerges(s, modelDir),
         bpeModelApplyForm(s, modelDir)))
     bpeEncodePresentation(bpeDocCountsWith(s, dir, vocab))
@@ -844,23 +844,15 @@ object TextAnalysis {
         sum(col("n_tokens")).cast("long").as("n_tokens"))
   }
 
-  private val builtBpeModels = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // corpus-derived like the PlanCache memos: a corpus swap at the same
-  // path must drop the frozen model too, or text_bpe_encode_served keeps
-  // serving the pre-swap merges while text_bpe_encode retrains (r13
-  // advice) — same clear() entry point, temp dirs deleted
-  PlanCache.onClear("TextAnalysis.builtBpeModels")(() =>
-    PlanCache.drainTempDirs(builtBpeModels))
-
-  /** The memoized persisted tokenizer model for `dir` (written on first
-    * use) — the served-encode registered query's artifact, mirroring
-    * [[textIndexFor]]. */
+  /** The persisted tokenizer model for `dir`, written once per (JVM,
+    * corpus) as a standing [[Artifacts]] temp dir — the served-encode
+    * registered query's artifact, mirroring [[textIndexFor]]. */
   private[graft] def bpeModelFor(s: SparkSession, dir: String): String =
-    builtBpeModels.computeIfAbsent(dir, { _ =>
+    Artifacts.tempDir(s"bpe-model|$dir") {
       val d = java.nio.file.Files.createTempDirectory("graft-bpe-model").toString
       bpeModelWrite(s, dir, d)
       d
-    })
+    }
 
   /** Registered-query form of [[textBpeEncodeServed]]: the model is the
     * demo trainer's own merge table persisted once per session, so the
@@ -870,21 +862,17 @@ object TextAnalysis {
   def textBpeEncodeServedQuery(s: SparkSession, dir: String): DataFrame =
     textBpeEncodeServed(s, dir, bpeModelFor(s, dir))
 
-  private val builtScaledBpeModels = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  PlanCache.onClear("TextAnalysis.builtScaledBpeModels")(() =>
-    PlanCache.drainTempDirs(builtScaledBpeModels))
-
-  /** The memoized persisted SCALED tokenizer artifact for `dir`: the
+  /** The persisted SCALED tokenizer artifact for `dir`: the
     * production write path ([[bpeModelWriteScaled]]) at the gate merge
     * count, once per JVM. Content-identical to the registered trainer
     * form's output — the checkpoint cadence truncates plan lineage
     * only, never the merge table. */
   private[graft] def scaledBpeModelFor(s: SparkSession, dir: String): String =
-    builtScaledBpeModels.computeIfAbsent(dir, { _ =>
+    Artifacts.tempDir(s"bpe-model-scaled|$dir") {
       val d = java.nio.file.Files.createTempDirectory("graft-bpe-model-scaled").toString
       bpeModelWriteScaled(s, dir, d, bpeScaledTrainMerges)
       d
-    })
+    }
 
   /** Registered SCALED-serve form (round 14): train the PRODUCTION
     * trainer at the gate merge count, persist with the canonical
@@ -1945,18 +1933,17 @@ object TextAnalysis {
     * unseated, a mega-only doc that could reach the floor, or a
     * contender set too large to push as an IN filter.
     *
-    * MEMOIZED per index generation (round 16): the whole decision —
-    * Some(prune) and None alike — is a pure function of the index's
-    * on-disk state and the two parameters, so it rides
-    * [[DecisionMemo]] keyed by the index file-listing fingerprint: a
-    * frozen index pays the dictionary collect + floor scan once, and
-    * any append/compact/delete moves the fingerprint and forces the
-    * re-derive (pinned in `BoundedServeSpec`). Byte-identical results
-    * by determinism. */
+    * MEMOIZED per index generation: the whole decision — Some(prune)
+    * and None alike — is a pure function of the index's on-disk state
+    * and the two parameters, so it is an [[Artifacts.atGeneration]]
+    * entry: a frozen index pays the dictionary collect + floor scan
+    * once, and any append/compact/delete moves the generation and
+    * forces the re-derive (pinned in `BoundedServeSpec`).
+    * Byte-identical results by determinism. */
   def maxScoreContenders(s: SparkSession, indexDir: String,
       maxDfShare: Double = bm25MaxDfShare,
       minMegaRows: Long = maxScoreMinMegaRows): Option[MaxScorePrune] =
-    DecisionMemo.cached(s, indexDir, s"bm25-maxscore|$maxDfShare|$minMegaRows")(
+    Artifacts.atGeneration(s, indexDir, s"bm25-maxscore|$maxDfShare|$minMegaRows")(
       maxScoreContendersUncached(s, indexDir, maxDfShare, minMegaRows))
 
   private def maxScoreContendersUncached(s: SparkSession, indexDir: String,
@@ -2240,21 +2227,16 @@ object TextAnalysis {
   def textIndexHealthQuery(s: SparkSession, dir: String): DataFrame =
     textIndexHealth(s, textIndexFor(s, dir)).filter(col("metric") =!= "data_files")
 
-  /** One persisted text index per corpus per JVM for the registered
-    * query (build lazily once; bench reps measure SERVING only). */
-  private val builtTextIndexes = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  PlanCache.onClear("TextAnalysis.builtTextIndexes")(() =>
-    PlanCache.drainTempDirs(builtTextIndexes))
-
-  /** The memoized persisted text index for `dir` (built on first use) —
-    * shared by the whole lexical serving family including the hybrid
-    * retrieval's served form. */
+  /** The persisted text index for `dir`, built once per (JVM, corpus)
+    * as a standing [[Artifacts]] temp dir (bench reps measure SERVING
+    * only) — shared by the whole lexical serving family including the
+    * hybrid retrieval's served form. */
   private[graft] def textIndexFor(s: SparkSession, dir: String): String =
-    builtTextIndexes.computeIfAbsent(dir, { _ =>
+    Artifacts.tempDir(s"text-index|$dir") {
       val d = java.nio.file.Files.createTempDirectory("graft-text-index").toString
       textIndexWrite(s, dir, d)
       d
-    })
+    }
 
   /** Registered-query form of [[textBm25Served]]. */
   def textBm25ServedQuery(s: SparkSession, dir: String): DataFrame =

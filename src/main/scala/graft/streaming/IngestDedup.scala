@@ -241,19 +241,15 @@ object IngestDedup {
     * to an in-place rebuild — what each bench rep then measures is the
     * INGEST LOOP, not repeated re-derivation of the frozen deployment
     * artifact it consumes (the [[graft.ops.TextAnalysis]] `bpeModelFor`
-    * / `textIndexFor` precedent, extended to replay seeds). Temp dirs
-    * drain with the PlanCache epoch like every artifact memo. */
-  private val protoDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  graft.ops.PlanCache.onClear("IngestDedup.protoDirs")(() =>
-    graft.ops.PlanCache.drainTempDirs(protoDirs))
-
+    * / `textIndexFor` precedent, extended to replay seeds). Each is a
+    * standing [[graft.ops.Artifacts]] temp dir. */
   private[streaming] def prototype(s: SparkSession, key: String)(
       build: String => Unit): String =
-    protoDirs.computeIfAbsent(key, { _ =>
+    graft.ops.Artifacts.tempDir(s"replay-proto|$key") {
       val d = java.nio.file.Files.createTempDirectory("graft-replay-proto").toString
       graft.ops.IndexMaintenance.labeledJob(s, s"replay prototype: $key")(build(d))
       d
-    })
+    }
 
   /** Recursive byte copy of a prototype artifact into a fresh replay
     * dir (destination must not exist). Hadoop-FS, so the replay roots

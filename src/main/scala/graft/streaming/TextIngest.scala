@@ -702,16 +702,13 @@ object TextIngest {
       n.startsWith(".") || n.startsWith("_"))
   }
 
-  /** One replayed ledger per (JVM, corpus) for the health query —
-    * the [[TextAnalysis.textIndexFor]] pattern: the health report
-    * reads state, it should not pay a fresh stream replay per call
-    * (bench reps measure the REPORT, not the replay). */
-  private val builtLedgers = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  graft.ops.PlanCache.onClear("TextIngest.builtLedgers")(() =>
-    graft.ops.PlanCache.drainTempDirs(builtLedgers))
-
+  /** One replayed ledger per (JVM, corpus) for the health query, a
+    * standing [[graft.ops.Artifacts]] temp dir — the
+    * [[TextAnalysis.textIndexFor]] pattern: the health report reads
+    * state, it should not pay a fresh stream replay per call (bench
+    * reps measure the REPORT, not the replay). */
   private[graft] def ledgerFor(s: SparkSession, dir: String): String =
-    builtLedgers.computeIfAbsent(dir, _ => ledgerReplay(s, dir))
+    graft.ops.Artifacts.tempDir(s"ledger|$dir")(ledgerReplay(s, dir))
 
   /** Registered-query form of [[ledgerHealth]] over the memoized
     * replayed ledger. The replay's final listing state is DETERMINISTIC

@@ -484,7 +484,7 @@ class BoundedServeSpec extends AnyFunSuite {
 
   test("decision memo (r16): the MaxScore decision is paid once per index generation; append/delete/compact each invalidate") {
     import spark.implicits._
-    import graft.ops.DecisionMemo
+    import graft.ops.Artifacts
     val tmp = java.nio.file.Files.createTempDirectory("maxscore-memo").toString
     def tok(i: Long): Seq[String] = {
       val b = Seq.newBuilder[String]
@@ -498,10 +498,10 @@ class BoundedServeSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$tmp/c/documents.parquet")
     TextAnalysis.textIndexWrite(spark, s"$tmp/c", s"$tmp/idx")
-    def counters() = (DecisionMemo.hits.get(), DecisionMemo.misses.get())
+    def counters() = (Artifacts.hits.get(), Artifacts.misses.get())
     def serve() = TextAnalysis.textBm25ServedMaxScore(spark, s"$tmp/idx",
       minMegaRows = 0L).collect().map(_.toSeq).toSeq
-    DecisionMemo.clear()
+    Artifacts.reset()
     val (h0, m0) = counters()
     val first = serve()
     val (h1, m1) = counters()
@@ -586,6 +586,41 @@ class BoundedServeSpec extends AnyFunSuite {
     assert(hPost ===
       Retrieval.searchHybridRrfServed(spark, tmpH).collect().map(_.toSeq).toSeq,
       "post-append hybrid serve must equal the unbounded serve over base + tail")
+  }
+
+  test("hybrid maxscore snapshot: a returned serve is pinned to its index generation across a concurrent append and compact") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("hybrid-snapshot").toString
+    def htok(i: Long): Seq[String] = {
+      val b = Seq.newBuilder[String]
+      if (i <= 116) b += "spark"
+      if (i % 4 != 0) b += "alpha"
+      if (i % 2 == 0 && i <= 60) b += "beta"
+      (0 until (3 + (i % 5)).toInt).foreach(w => b += s"f${i}w$w")
+      b.result()
+    }
+    (1L to 120L).map(i => (i, htok(i).mkString(" "), "en", "s"))
+      .toDF("doc_id", "text", "lang", "source")
+      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val rnd = new scala.util.Random(43)
+    (1L to 120L).map(i => (i, Array.fill(64)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+    val idx = TextAnalysis.textIndexFor(spark, tmp)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    val want = rows(Retrieval.searchHybridRrfServed(spark, tmp))
+    val served = Retrieval.searchHybridRrfServedMaxScore(spark, tmp)
+    // an append and a compaction land between the serve and its consumption
+    TextAnalysis.textIndexAppendBatch(spark,
+      Seq((121L, "spark alpha beta fresh", "en", "s"))
+        .toDF("doc_id", "text", "lang", "source"), idx)
+    TextAnalysis.textIndexCompact(spark, idx)
+    assert(rows(served) === want && want.nonEmpty,
+      "the late collect observed post-append index state — the served frame is not pinned")
+    // a fresh serve re-derives at the new generation
+    val fresh = rows(Retrieval.searchHybridRrfServedMaxScore(spark, tmp))
+    assert(fresh === rows(Retrieval.searchHybridRrfServed(spark, tmp)))
+    assert(fresh != want, "the append must move the top-k, or the pin is vacuous")
   }
 
   test("term dictionary: frozen between compacts, recomputed at compact") {

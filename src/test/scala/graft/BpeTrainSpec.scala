@@ -385,26 +385,7 @@ class BpeTrainSpec extends AnyFunSuite {
     assert(TextAnalysis.bpeModelApplyForm(spark, model).contains("canonical"))
   }
 
-  test("PlanCache.onClear hooks (r15): re-registration replaces — register/clear/re-register cycles don't grow the hook map") {
-    val before = graft.ops.PlanCache.clearHookCount
-    var firstRan = 0
-    var secondRan = 0
-    graft.ops.PlanCache.onClear("BpeTrainSpec.hookGrowth")(() => firstRan += 1)
-    assert(graft.ops.PlanCache.clearHookCount == before + 1)
-    (1 to 5).foreach { _ =>
-      graft.ops.PlanCache.clear()
-      // a long-lived JVM re-registering the same key must REPLACE the
-      // closure (last wins), never strand the old one
-      graft.ops.PlanCache.onClear("BpeTrainSpec.hookGrowth")(() => secondRan += 1)
-      assert(graft.ops.PlanCache.clearHookCount == before + 1,
-        "re-registration grew the hook map")
-    }
-    graft.ops.PlanCache.clear()
-    assert(firstRan == 1 && secondRan == 5,
-      s"replaced hooks kept running: first=$firstRan second=$secondRan")
-  }
-
-  test("corpus swap + PlanCache.clear drops the frozen served model: served encode retrains with the scan form") {
+  test("corpus swap + Artifacts.clear drops the frozen served model: served encode retrains with the scan form") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("bpe-swap").toString
     def write(texts: Seq[String]): Unit =
@@ -418,7 +399,7 @@ class BpeTrainSpec extends AnyFunSuite {
     // says call clear(); afterwards the served query must serve the
     // RETRAINED model, not the pre-swap frozen artifact (r13 advice)
     write(Seq("wide wider widest wide wide", "west western wests", "ban banana bananas"))
-    graft.ops.PlanCache.clear()
+    graft.ops.Artifacts.clear()
     val v2served = TextAnalysis.textBpeEncodeServedQuery(spark, tmp).collect().map(_.toString).toSeq
     val v2scan = TextAnalysis.textBpeEncode(spark, tmp).collect().map(_.toString).toSeq
     assert(v2served == v2scan,

@@ -417,7 +417,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // (a) the real corpus at several budgets: default (TakeOrdered at
     // these K) vs headTakeOrderedMax = 0 (rank-threshold forced)
     for (frac <- Seq(0.01, 0.05, 0.2)) {
-      graft.ops.PlanCache.invalidate(spark, s"$sf0001|semantic_pctl_scores")
+      graft.ops.Artifacts.invalidate(spark, s"$sf0001|semantic_pctl_scores")
       val take = rows(Dedup.dedupSemanticPercentile(spark, sf0001, frac))
       val rank = rows(Dedup.dedupSemanticPercentile(spark, sf0001, frac,
         headTakeOrderedMax = 0L))
@@ -444,8 +444,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // fill the head first, so drops are not all-or-nothing per group
     val droppedIds = take.filter(_._3 == 0L).map(_._1).toSet
     assert(droppedIds.nonEmpty && droppedIds.size == 300)
-    graft.ops.PlanCache.invalidate(spark, s"$sf0001|semantic_pctl_scores")
-    graft.ops.PlanCache.invalidate(spark, s"$tmp|semantic_pctl_scores")
+    graft.ops.Artifacts.invalidate(spark, s"$sf0001|semantic_pctl_scores")
+    graft.ops.Artifacts.invalidate(spark, s"$tmp|semantic_pctl_scores")
   }
 
   test("percentile boundary pick: adversarially packed ties recurse into the slice " +

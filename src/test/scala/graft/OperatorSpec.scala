@@ -337,7 +337,7 @@ class OperatorSpec extends AnyFunSuite {
       .withColumn("n_chars", length(col("text")).cast("long"))
     val tmp = java.nio.file.Files.createTempDirectory("manifest-corpus").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    graft.ops.Dedup.clearShingleCache()
+    graft.ops.Artifacts.clear()
     try {
       val m = graft.ops.Curation.curateManifest(spark, tmp).collect()
         .map(r => r.getLong(0) -> r).toMap
@@ -350,7 +350,7 @@ class OperatorSpec extends AnyFunSuite {
       assert(reason(4) == "contaminated" && m(4).getLong(3) >= 1L, s"doc 4: ${reason(4)}")
       assert(reason(5) == "low_quality", s"doc 5: ${reason(5)}")
       m.values.foreach(r => assert(r.getLong(7) == (if (r.getString(6) == "train") 1L else 0L)))
-    } finally graft.ops.Dedup.clearShingleCache()
+    } finally graft.ops.Artifacts.clear()
   }
 
   test("ingest manifest agrees with the batch capstone on a residue-aligned corpus") {
@@ -362,7 +362,7 @@ class OperatorSpec extends AnyFunSuite {
     // the END of the "re-run the batch manifest to learn why" gap —
     // the streamed decision IS the capstone decision.
     val root = ManifestFixture.corpusDir(spark)
-    graft.ops.Dedup.clearShingleCache()
+    graft.ops.Artifacts.clear()
     try {
       def key(r: org.apache.spark.sql.Row, off: Int) =
         (r.getLong(0), r.getLong(off), r.getLong(off + 1), r.getLong(off + 2),
@@ -378,7 +378,7 @@ class OperatorSpec extends AnyFunSuite {
       batch.zip(ingest).foreach { case (b, i) =>
         assert(b == i, s"batch/ingest manifest rows diverged:\n  batch  $b\n  ingest $i")
       }
-    } finally graft.ops.Dedup.clearShingleCache()
+    } finally graft.ops.Artifacts.clear()
   }
 
   test("decontaminate_report: planted eval exposure counted; clean eval doc zeroed") {
