@@ -1002,7 +1002,7 @@ object ScaleSmoke {
     val grownIds = spark.read.parquet(s"$aroot/index/buckets")
       .select(col("vec_id")).distinct().count()
     say(s"  -> grown LSH index covers $grownIds of $nVec vectors " +
-      s"(${graft.ops.IndexMaintenance.dataFiles(spark, s"$aroot/index/buckets").size} bucket files after cadence)")
+      s"(${graft.ops.IndexMaintenance.snapshot(spark, s"$aroot/index").filesOf("buckets").size} bucket files after cadence)")
 
     // round 8 (verdict #1): the fold must cost O(batch) however old the
     // stream is — land one LATE batch of fresh ids against the fully-
@@ -1012,7 +1012,7 @@ object ScaleSmoke {
     // guard anti-joined the standing index's distinct vec_ids per
     // trigger — O(index) bytes per batch, growing with stream age.
     val bucketsBytes = graft.ops.IndexMaintenance
-      .dataFiles(spark, s"$aroot/index/buckets").map(_.getLen).sum
+      .snapshot(spark, s"$aroot/index").filesOf("buckets").map(_.size).sum
     val lateStage = s"$aroot/stage_late"
     graft.Tables(spark, dir, "embeddings").filter(col("vec_id") < nVec / 20)
       .select((col("vec_id") + nVec).as("vec_id"), col("embedding"), col("label"))

@@ -47,8 +47,19 @@ object AnnIndex {
     * Tiny (tables·bits doubles) — broadcast into every serving plan. */
   private def metaRow(s: SparkSession, indexDir: String): DataFrame =
     Artifacts.frame(s, s"$indexDir|lsh-index-meta") {
-      s.read.parquet(s"$indexDir/meta")
+      IndexMaintenance.read(s, indexDir, "meta")
     }
+
+  /** A vec_id table of the index, tombstone-masked: through the
+    * per-session cache under `key` while no delete is pending (appends,
+    * deletes and compactions invalidate it), straight from the snapshot
+    * otherwise. */
+  private def servedTable(s: SparkSession, indexDir: String, table: String,
+      key: String): DataFrame = {
+    val snap = IndexMaintenance.snapshot(s, indexDir)
+    if (snap.tombstonesOf(table).nonEmpty) snap.scan(s, table, "vec_id")
+    else Artifacts.frame(s, s"$indexDir|$key")(snap.read(s, table))
+  }
 
   /** Hash `dir`'s embeddings against an explicit meta frame (broadcast
     * join — the thresholds are one row). Shared by build, append, and
@@ -71,41 +82,40 @@ object AnnIndex {
 
   /** Append a landed BATCH FRAME of vectors (streaming ingest form of
     * [[lshIndexAppend]]) — hashed with the index's persisted, frozen
-    * thresholds. With `tag`, the append is IDEMPOTENT under retry
-    * (deterministic file names via [[IndexMaintenance.appendBatchAs]] —
-    * the streaming loop's crash-window guard). */
+    * thresholds. With `mark`, the rows commit with the streaming batch
+    * mark, so a retry lands nothing. */
   private[graft] def lshIndexAppendBatch(s: SparkSession, batch: DataFrame,
-      indexDir: String, tag: Option[String] = None): Unit = {
+      indexDir: String, mark: Option[(String, Long)] = None): Unit = {
     val rows = hashWithDf(batch.select(col("vec_id"), col("embedding")), metaRow(s, indexDir))
-    tag match {
-      case Some(t) => IndexMaintenance.appendBatchAs(s, rows, s"$indexDir/buckets", t)
-      case None => IndexMaintenance.appendPlain(s, rows, s"$indexDir/buckets")
-    }
+    IndexMaintenance.append(s, indexDir, Seq("buckets" -> rows), mark)
     Artifacts.invalidate(s, s"$indexDir|lsh-index-buckets")
   }
 
-  /** Build the index for `corpusDir`'s embeddings into `indexDir`.
-    * Thresholds are written FIRST and read back for the bucket pass, so
-    * the persisted meta is by construction the exact doubles the buckets
-    * were hashed with — no recompute drift between the two files. */
-  def lshIndexWrite(s: SparkSession, corpusDir: String, indexDir: String,
-      tables: Int = Similarity.lshTables, bits: Int = Similarity.lshBits): Unit = {
-    Tables(s, corpusDir, "embeddings")
+  /** LSH thresholds of `corpus`: the per-plane mean projection. */
+  private def lshMeta(corpus: DataFrame, tables: Int, bits: Int): DataFrame =
+    corpus
       .select(proj(tables, bits)(col("embedding")).as("p"))
       .select(array((0 until tables * bits).map(i =>
         avg(element_at(col("p"), i + 1))): _*).as("thr"))
       .withColumn("tables", lit(tables)).withColumn("bits", lit(bits))
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
-    hashWith(s, corpusDir, s.read.parquet(s"$indexDir/meta"))
-      .write.mode("overwrite").parquet(s"$indexDir/buckets")
+
+  /** Build the index for `corpusDir`'s embeddings into `indexDir`: the
+    * thresholds are materialized once and the buckets hashed with those
+    * exact doubles, both committed together. */
+  def lshIndexWrite(s: SparkSession, corpusDir: String, indexDir: String,
+      tables: Int = Similarity.lshTables, bits: Int = Similarity.lshBits): Unit = {
+    val meta = TextAnalysis.materializedNow(s, lshMeta(Tables(s, corpusDir, "embeddings"), tables, bits))
+    IndexMaintenance.replace(s, indexDir,
+      Seq("meta" -> meta, "buckets" -> hashWith(s, corpusDir, meta)))
+    Artifacts.invalidate(s, s"$indexDir|")
   }
 
   /** Append a landing batch's vectors to an existing index, hashed with
     * the index's persisted thresholds. The batch pays only its own
     * hashing — the standing corpus is untouched. */
   def lshIndexAppend(s: SparkSession, batchDir: String, indexDir: String): Unit = {
-    IndexMaintenance.appendPlain(s, hashWith(s, batchDir, metaRow(s, indexDir)),
-      s"$indexDir/buckets")
+    IndexMaintenance.append(s, indexDir,
+      Seq("buckets" -> hashWith(s, batchDir, metaRow(s, indexDir))))
     // a serve BEFORE this append may have memoized (and cached) the old
     // bucket file set — drop it so the next serve sees the batch
     Artifacts.invalidate(s, s"$indexDir|lsh-index-buckets")
@@ -145,10 +155,7 @@ object AnnIndex {
     val meta = metaRow(s, indexDir)
     val geom = meta.select(col("tables"), col("bits")).head()
     val (tables, bits) = (geom.getInt(0), geom.getInt(1))
-    val buckets = IndexMaintenance.minusTombstones(s, s"$indexDir/buckets",
-      Artifacts.frame(s, s"$indexDir|lsh-index-buckets") {
-        s.read.parquet(s"$indexDir/buckets")
-      }, "vec_id")
+    val buckets = servedTable(s, indexDir, "buckets", "lsh-index-buckets")
     // the same zero-vector exclusion as Similarity.normed: a zero query
     // has no direction and its cosine would be NaN on every candidate
     val qn = queries
@@ -235,13 +242,17 @@ object AnnIndex {
     * bucket table). Embeddings are again NOT copied in; serving re-joins
     * them by vec_id. Training pays its usual driver-side Lloyd cost
     * once, here — which is the entire point of persisting its output. */
-  def ivfIndexWrite(s: SparkSession, corpusDir: String, indexDir: String): Unit = {
-    val cent = Similarity.trainedCentroidsOf(s, corpusDir)
-    cent.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-    val persisted = s.read.parquet(s"$indexDir/centroids")
-    Similarity.nearestCentroids(persisted)(
-        Similarity.normed(s, corpusDir), "vec_id", "embedding", "nrm", 1)
-      .write.mode("overwrite").parquet(s"$indexDir/lists")
+  def ivfIndexWrite(s: SparkSession, corpusDir: String, indexDir: String): Unit =
+    ivfIndexCommit(s, corpusDir, indexDir, Similarity.trainedCentroidsOf(s, corpusDir))
+
+  /** Commit centroids and the keep=1 assignment of `corpusDir` to them. */
+  private def ivfIndexCommit(s: SparkSession, corpusDir: String, indexDir: String,
+      centroids: DataFrame): Unit = {
+    val cent = TextAnalysis.materializedNow(s, centroids)
+    IndexMaintenance.replace(s, indexDir, Seq("centroids" -> cent.coalesce(1),
+      "lists" -> Similarity.nearestCentroids(cent)(
+        Similarity.normed(s, corpusDir), "vec_id", "embedding", "nrm", 1)))
+    Artifacts.invalidate(s, s"$indexDir|")
   }
 
   /** Build and persist the STRIDE-quantizer IVF index: centroids are
@@ -256,11 +267,7 @@ object AnnIndex {
     require(cent.limit(1).count() == 1L,
       s"ivfIndexWriteStride($corpusDir): no stride centroids " +
       s"(no vec_id % ${Similarity.centroidStride} == 1 members with nonzero norm)")
-    cent.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-    val persisted = s.read.parquet(s"$indexDir/centroids")
-    Similarity.nearestCentroids(persisted)(
-        Similarity.normed(s, corpusDir), "vec_id", "embedding", "nrm", 1)
-      .write.mode("overwrite").parquet(s"$indexDir/lists")
+    ivfIndexCommit(s, corpusDir, indexDir, cent)
   }
 
   /** Append a landing batch: assign its vectors to the PERSISTED
@@ -268,30 +275,26 @@ object AnnIndex {
     * the standing corpus, so drift means rebuild, exactly as with the
     * LSH thresholds). */
   def ivfIndexAppend(s: SparkSession, batchDir: String, indexDir: String): Unit = {
-    val cent = s.read.parquet(s"$indexDir/centroids")
-    IndexMaintenance.appendPlain(s, Similarity.nearestCentroids(cent)(
-        Similarity.normed(s, batchDir), "vec_id", "embedding", "nrm", 1),
-      s"$indexDir/lists")
+    val cent = IndexMaintenance.read(s, indexDir, "centroids")
+    IndexMaintenance.append(s, indexDir, Seq("lists" -> Similarity.nearestCentroids(cent)(
+        Similarity.normed(s, batchDir), "vec_id", "embedding", "nrm", 1)))
     Artifacts.invalidate(s, s"$indexDir|ivf-index-lists")
     Artifacts.invalidate(s, s"$indexDir|ivf-list-sizes")
   }
 
   /** Append a landed BATCH FRAME of vectors to the IVF index (streaming
     * ingest form of [[ivfIndexAppend]]) — assigned with the persisted,
-    * frozen centroids. With `tag`, idempotent under retry (see
+    * frozen centroids. With `mark`, idempotent under retry (see
     * [[lshIndexAppendBatch]]). */
   private[graft] def ivfIndexAppendBatch(s: SparkSession, batch: DataFrame,
-      indexDir: String, tag: Option[String] = None): Unit = {
-    val cent = s.read.parquet(s"$indexDir/centroids")
+      indexDir: String, mark: Option[(String, Long)] = None): Unit = {
+    val cent = IndexMaintenance.read(s, indexDir, "centroids")
     val n = batch.select(col("vec_id"), col("embedding"))
       .withColumn("nrm", sqrt(graft.plans.VectorFunctions.vec_dot(
         col("embedding"), col("embedding"))))
       .filter(col("nrm") > 0)
-    val rows = Similarity.nearestCentroids(cent)(n, "vec_id", "embedding", "nrm", 1)
-    tag match {
-      case Some(t) => IndexMaintenance.appendBatchAs(s, rows, s"$indexDir/lists", t)
-      case None => IndexMaintenance.appendPlain(s, rows, s"$indexDir/lists")
-    }
+    IndexMaintenance.append(s, indexDir,
+      Seq("lists" -> Similarity.nearestCentroids(cent)(n, "vec_id", "embedding", "nrm", 1)), mark)
     Artifacts.invalidate(s, s"$indexDir|ivf-index-lists")
     Artifacts.invalidate(s, s"$indexDir|ivf-list-sizes")
   }
@@ -321,7 +324,7 @@ object AnnIndex {
       probeOverride: Option[Int] = None,
       pushProbedCells: Boolean = false): DataFrame = {
     val cent = Artifacts.frame(s, s"$indexDir|ivf-index-centroids") {
-      s.read.parquet(s"$indexDir/centroids")
+      IndexMaintenance.read(s, indexDir, "centroids")
     }
     val qn = queries
       .select(col("q_id").as("vec_id"), col("embedding"))
@@ -360,13 +363,8 @@ object AnnIndex {
     // probed-cell predicate reach the scan (a cached InMemoryRelation
     // absorbs the filter above the already-read batches)
     val assign =
-      if (!pushProbedCells)
-        IndexMaintenance.minusTombstones(s, s"$indexDir/lists",
-          Artifacts.frame(s, s"$indexDir|ivf-index-lists") {
-            s.read.parquet(s"$indexDir/lists")
-          }, "vec_id")
-      else IndexMaintenance.minusTombstones(s, s"$indexDir/lists",
-          s.read.parquet(s"$indexDir/lists"), "vec_id")
+      if (!pushProbedCells) servedTable(s, indexDir, "lists", "ivf-index-lists")
+      else IndexMaintenance.scan(s, indexDir, "lists", "vec_id")
         .filter(col("c_id").isin(probeRows.select(col("c_id")).distinct()
           .collect().map(_.getLong(0)).toSeq: _*))
     val n = memberPool(s, corpusDirs, memberPred)
@@ -397,8 +395,7 @@ object AnnIndex {
   private[graft] def ivfServableBudget(
       s: SparkSession, indexDir: String): (DataFrame, Double) = {
     val sizes = Artifacts.frame(s, s"$indexDir|ivf-list-sizes") {
-      IndexMaintenance.minusTombstones(s, s"$indexDir/lists",
-          s.read.parquet(s"$indexDir/lists"), "vec_id")
+      IndexMaintenance.scan(s, indexDir, "lists", "vec_id")
         .groupBy(col("c_id")).agg(count(lit(1)).as("lsz"))
     }
     val rows = Option(sizes.agg(sum(col("lsz"))).collect()(0).get(0))
@@ -494,16 +491,19 @@ object AnnIndex {
     * until exact rescore: the compressed scan reads only the persisted
     * code rows of the probed lists. Embeddings are still NOT duplicated
     * (the rescore step re-joins the corpus parquet by vec_id). */
-  def ivfPqIndexWrite(s: SparkSession, corpusDir: String, indexDir: String): Unit = {
+  def ivfPqIndexWrite(s: SparkSession, corpusDir: String, indexDir: String): Unit =
+    ivfPqIndexCommit(s, indexDir, Similarity.trainedCentroidsOf(s, corpusDir),
+      Similarity.pqCodebook(s, corpusDir), Similarity.normed(s, corpusDir))
+
+  /** Commit a quantizer pair and the corpus assigned + encoded with it. */
+  private def ivfPqIndexCommit(s: SparkSession, indexDir: String, centroids: DataFrame,
+      cb: Array[Double], corpus: DataFrame): Unit = {
     import s.implicits._
-    Similarity.trainedCentroidsOf(s, corpusDir)
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-    val cb = Similarity.pqCodebook(s, corpusDir)
-    Seq((cb.toSeq, Similarity.pqM)).toDF("cb", "m")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebook")
-    val cent = s.read.parquet(s"$indexDir/centroids")
-    Similarity.ivfPqAssign(cent, cb, Similarity.normed(s, corpusDir))
-      .write.mode("overwrite").parquet(s"$indexDir/lists")
+    val cent = TextAnalysis.materializedNow(s, centroids)
+    IndexMaintenance.replace(s, indexDir, Seq("centroids" -> cent.coalesce(1),
+      "codebook" -> Seq((cb.toSeq, Similarity.pqM)).toDF("cb", "m").coalesce(1),
+      "lists" -> Similarity.ivfPqAssign(cent, cb, corpus)))
+    Artifacts.invalidate(s, s"$indexDir|")
   }
 
   /** Append a landing batch: assign + encode with the PERSISTED
@@ -511,15 +511,14 @@ object AnnIndex {
     * no-retrain-on-append semantic as the other indexes — re-training
     * either would invalidate every standing code row). */
   def ivfPqIndexAppend(s: SparkSession, batchDir: String, indexDir: String): Unit = {
-    val cent = s.read.parquet(s"$indexDir/centroids")
-    IndexMaintenance.appendPlain(s, Similarity.ivfPqAssign(cent,
-        readCodebook(s, indexDir), Similarity.normed(s, batchDir)),
-      s"$indexDir/lists")
+    val cent = IndexMaintenance.read(s, indexDir, "centroids")
+    IndexMaintenance.append(s, indexDir, Seq("lists" -> Similarity.ivfPqAssign(cent,
+        readCodebook(s, indexDir), Similarity.normed(s, batchDir))))
     Artifacts.invalidate(s, s"$indexDir|ivfpq-lists")
   }
 
   private def readCodebook(s: SparkSession, indexDir: String): Array[Double] =
-    s.read.parquet(s"$indexDir/codebook").head().getSeq[Double](0).toArray
+    IndexMaintenance.read(s, indexDir, "codebook").head().getSeq[Double](0).toArray
 
   /** Serve top-k for an external (q_id, embedding) frame from a
     * persisted IVF-PQ index: probe count from the index's own list
@@ -530,18 +529,13 @@ object AnnIndex {
   def ivfPqIndexServe(s: SparkSession, indexDir: String, corpusDirs: Seq[String],
       queries: DataFrame, pushProbedCells: Boolean = false): DataFrame = {
     val cent = Artifacts.frame(s, s"$indexDir|ivfpq-centroids") {
-      s.read.parquet(s"$indexDir/centroids")
+      IndexMaintenance.read(s, indexDir, "centroids")
     }
     // small-batch probed-cell pushdown bypasses the memoized cache —
     // see [[ivfIndexServe]]
     val assigned =
-      if (!pushProbedCells)
-        IndexMaintenance.minusTombstones(s, s"$indexDir/lists",
-          Artifacts.frame(s, s"$indexDir|ivfpq-lists") {
-            s.read.parquet(s"$indexDir/lists")
-          }, "vec_id")
-      else IndexMaintenance.minusTombstones(s, s"$indexDir/lists",
-          s.read.parquet(s"$indexDir/lists"), "vec_id")
+      if (!pushProbedCells) servedTable(s, indexDir, "lists", "ivfpq-lists")
+      else IndexMaintenance.scan(s, indexDir, "lists", "vec_id")
         .filter(col("c_id").isin(probedCellsWith(cent, queries,
           Similarity.ivfProbesFor(cent.count().toDouble)): _*))
     val n = corpusDirs.map(Similarity.normed(s, _)).reduce(_ unionAll _)
@@ -575,7 +569,7 @@ object AnnIndex {
     * uses both shapes). */
   private[graft] def probedCellsOf(s: SparkSession, indexDir: String,
       queries: DataFrame, probeOverride: Option[Int] = None): Array[Long] = {
-    val cent = s.read.parquet(s"$indexDir/centroids")
+    val cent = IndexMaintenance.read(s, indexDir, "centroids")
     probedCellsWith(cent, queries,
       probeOverride.getOrElse(Similarity.ivfProbesFor(cent.count().toDouble)))
   }
@@ -590,35 +584,22 @@ object AnnIndex {
   // new region, so recall decays silently (measured in ScaleSmoke's
   // drift experiment). Production deployments (FAISS/SPANN-style)
   // answer with an explicit OFFLINE RETRAIN on the current corpus —
-  // train fresh quantizer, rebuild the assignment tables, atomic-swap
-  // publish — which is exactly what these operators do. The retrain
+  // train fresh quantizer, rebuild the assignment tables, commit them
+  // as one log version — which is exactly what these operators do. The retrain
   // corpus is the index's CURRENT SERVABLE membership (standing ids
   // minus pending tombstones, re-joined to the corpus parquet), so a
   // retrain also physically drops retracted rows, like a compact.
   // Contract (spec-pinned): post-retrain serving == an index built
   // fresh from the current corpus.
 
-  private def retrainTmpDir(s: SparkSession, indexDir: String): String = {
-    val dest = new org.apache.hadoop.fs.Path(indexDir)
-    val tmp = new org.apache.hadoop.fs.Path(dest.getParent, s".${dest.getName}.retrain.tmp")
-    val f = dest.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (f.exists(tmp)) f.delete(tmp, true)
-    tmp.toString
-  }
-
-  /** The index's current servable corpus: standing ids minus pending
-    * tombstones, re-joined to `corpusFrame` — the EXACT frame the
-    * family's build reads (raw embeddings for LSH, whose build hashes
-    * zero-norm vectors too; normed for IVF/PQ, whose assignment needs
-    * the norm and whose serve excludes directionless vectors). Exact
-    * only under the table lock — the retrain ops snapshot it there. */
-  private def servableCorpus(s: SparkSession, tablePath: String,
-      corpusFrame: DataFrame): DataFrame = {
-    val ids = IndexMaintenance.minusTombstones(s, tablePath,
-        s.read.parquet(tablePath), "vec_id")
-      .select(col("vec_id")).distinct()
-    corpusFrame.join(ids, "vec_id")
-  }
+  /** The index's servable corpus as of `snap`: standing ids minus
+    * pending tombstones, re-joined to `corpusFrame` — the EXACT frame
+    * the family's build reads (raw embeddings for LSH, whose build
+    * hashes zero-norm vectors too; normed for IVF/PQ, whose assignment
+    * needs the norm and whose serve excludes directionless vectors). */
+  private def servableCorpus(s: SparkSession, snap: IndexMaintenance.Snapshot,
+      table: String, corpusFrame: DataFrame): DataFrame =
+    corpusFrame.join(snap.scan(s, table, "vec_id").select(col("vec_id")).distinct(), "vec_id")
 
   private def rawCorpus(s: SparkSession, corpusDirs: Seq[String]): DataFrame =
     corpusDirs.map(Tables(s, _, "embeddings")
@@ -626,67 +607,40 @@ object AnnIndex {
   private def normedCorpus(s: SparkSession, corpusDirs: Seq[String]): DataFrame =
     corpusDirs.map(Similarity.normed(s, _)).reduce(_ unionAll _)
 
-  /** Pending-tombstone snapshot the rebuild honors — the publish's
-    * compare-target for deletes that race the retrain cross-process. */
-  private def tombstoneSnapshot(s: SparkSession, tablePath: String): Set[(Long, Long)] =
-    IndexMaintenance.pendingTombstones(s, tablePath).map(_.collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet).getOrElse(Set.empty)
-
   /** Retrain the LSH thresholds on the current corpus and re-hash it.
     * Geometry (tables, bits) is preserved; only the learned component —
     * the per-plane mean thresholds — refreshes, which is what drifts as
-    * the ingested distribution moves off the seed's mean. The corpus
-    * snapshot, rebuild, and swap run under the bucket table's
-    * maintenance lock (in-JVM appends/deletes stall for the rebuild
-    * write, not the training — for LSH the two coincide, the threshold
-    * average IS the training); a delete racing from another process is
-    * preserved by the publish's late-tombstone re-apply, and every
-    * crash state heals at the next maintenance op
-    * ([[IndexMaintenance.recoverPublish]]). */
+    * the ingested distribution moves off the seed's mean. Like a
+    * compaction, one commit replaces meta and buckets and consumes the
+    * tombstones the rebuild honored; a delete that commits meanwhile
+    * stays pending and masks the rebuilt rows. */
   def lshIndexRetrain(s: SparkSession, indexDir: String, corpusDirs: Seq[String]): Unit = {
-    IndexMaintenance.withTableLock(s, s"$indexDir/buckets") {
-      IndexMaintenance.recoverPublish(s, indexDir, "buckets")
-      // geometry read AFTER recovery — a crash state may have the live
-      // index under the publish aside until the heal above
-      val geom = s.read.parquet(s"$indexDir/meta").select(col("tables"), col("bits")).head()
-      val (tables, bits) = (geom.getInt(0), geom.getInt(1))
-      val corpus = servableCorpus(s, s"$indexDir/buckets", rawCorpus(s, corpusDirs))
-      val consumed = tombstoneSnapshot(s, s"$indexDir/buckets")
-      val tmp = retrainTmpDir(s, indexDir)
-      corpus
-        .select(proj(tables, bits)(col("embedding")).as("p"))
-        .select(array((0 until tables * bits).map(i =>
-          avg(element_at(col("p"), i + 1))): _*).as("thr"))
-        .withColumn("tables", lit(tables)).withColumn("bits", lit(bits))
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-      hashWithDf(corpus.select(col("vec_id"), col("embedding")),
-          s.read.parquet(s"$tmp/meta"))
-        .write.mode("overwrite").parquet(s"$tmp/buckets")
-      IndexMaintenance.publishDir(s, tmp, indexDir, "buckets", consumed)
+    IndexMaintenance.transact(s, indexDir) { snap =>
+      val geom = snap.read(s, "meta").select(col("tables"), col("bits")).head()
+      val corpus = servableCorpus(s, snap, "buckets", rawCorpus(s, corpusDirs))
+      val meta = TextAnalysis.materializedNow(s, lshMeta(corpus, geom.getInt(0), geom.getInt(1)))
+      IndexMaintenance.Change(replace = Seq("meta" -> meta,
+        "buckets" -> hashWithDf(corpus.select(col("vec_id"), col("embedding")), meta)))
     }
     Artifacts.invalidate(s, s"$indexDir|")
   }
 
   /** Retrain the IVF coarse quantizer (k-means on the current corpus)
-    * and rebuild the inverted lists. The long k-means runs OUTSIDE the
-    * table lock (training quality tolerates a drifting-by-one-batch
-    * corpus read); the exact corpus snapshot, list rebuild, and swap
-    * run under it — see [[lshIndexRetrain]] for the race/crash
-    * contract. */
+    * and rebuild the inverted lists in one commit — see
+    * [[lshIndexRetrain]] for the race contract. The long k-means runs
+    * outside the writer lock (training quality tolerates a
+    * drifting-by-one-batch corpus read); the list rebuild reads the
+    * servable corpus of the snapshot it commits on. */
   def ivfIndexRetrain(s: SparkSession, indexDir: String, corpusDirs: Seq[String]): Unit = {
-    val cent = Similarity.trainKmeans(s,
-      servableCorpus(s, s"$indexDir/lists", normedCorpus(s, corpusDirs)),
-      Similarity.kmeansIters, s"ivfIndexRetrain($indexDir)")
-    IndexMaintenance.withTableLock(s, s"$indexDir/lists") {
-      IndexMaintenance.recoverPublish(s, indexDir, "lists")
-      val corpus = servableCorpus(s, s"$indexDir/lists", normedCorpus(s, corpusDirs))
-      val consumed = tombstoneSnapshot(s, s"$indexDir/lists")
-      val tmp = retrainTmpDir(s, indexDir)
-      cent.coalesce(1).write.mode("overwrite").parquet(s"$tmp/centroids")
-      Similarity.nearestCentroids(s.read.parquet(s"$tmp/centroids"))(
-          corpus, "vec_id", "embedding", "nrm", 1)
-        .write.mode("overwrite").parquet(s"$tmp/lists")
-      IndexMaintenance.publishDir(s, tmp, indexDir, "lists", consumed)
+    val cent = TextAnalysis.materializedNow(s, Similarity.trainKmeans(s,
+      servableCorpus(s, IndexMaintenance.snapshot(s, indexDir), "lists",
+        normedCorpus(s, corpusDirs)),
+      Similarity.kmeansIters, s"ivfIndexRetrain($indexDir)"))
+    IndexMaintenance.transact(s, indexDir) { snap =>
+      IndexMaintenance.Change(replace = Seq("centroids" -> cent.coalesce(1),
+        "lists" -> Similarity.nearestCentroids(cent)(
+          servableCorpus(s, snap, "lists", normedCorpus(s, corpusDirs)),
+          "vec_id", "embedding", "nrm", 1)))
     }
     Artifacts.invalidate(s, s"$indexDir|")
   }
@@ -696,25 +650,20 @@ object AnnIndex {
     * pair [[ivfPqIndexWrite]] builds with), then re-assign + re-encode
     * every servable vector. A codebook refresh invalidates every
     * standing code row by construction — which is why this is a rebuild
-    * operator, never an append-path option. Locking/crash contract as
+    * operator, never an append-path option. Commit contract as
     * [[ivfIndexRetrain]] (both trainings outside the lock). */
   def ivfPqIndexRetrain(s: SparkSession, indexDir: String, corpusDirs: Seq[String]): Unit = {
     import s.implicits._
-    val trainCorpus = servableCorpus(s, s"$indexDir/lists", normedCorpus(s, corpusDirs))
-    val cent = Similarity.trainKmeans(s, trainCorpus, Similarity.kmeansIters,
-      s"ivfPqIndexRetrain($indexDir)")
+    val trainCorpus = servableCorpus(s, IndexMaintenance.snapshot(s, indexDir), "lists",
+      normedCorpus(s, corpusDirs))
+    val cent = TextAnalysis.materializedNow(s, Similarity.trainKmeans(s, trainCorpus, Similarity.kmeansIters,
+      s"ivfPqIndexRetrain($indexDir)"))
     val cb = Similarity.pqCodebookOfFrame(trainCorpus)
-    IndexMaintenance.withTableLock(s, s"$indexDir/lists") {
-      IndexMaintenance.recoverPublish(s, indexDir, "lists")
-      val corpus = servableCorpus(s, s"$indexDir/lists", normedCorpus(s, corpusDirs))
-      val consumed = tombstoneSnapshot(s, s"$indexDir/lists")
-      val tmp = retrainTmpDir(s, indexDir)
-      cent.coalesce(1).write.mode("overwrite").parquet(s"$tmp/centroids")
-      Seq((cb.toSeq, Similarity.pqM)).toDF("cb", "m")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/codebook")
-      Similarity.ivfPqAssign(s.read.parquet(s"$tmp/centroids"), cb, corpus)
-        .write.mode("overwrite").parquet(s"$tmp/lists")
-      IndexMaintenance.publishDir(s, tmp, indexDir, "lists", consumed)
+    IndexMaintenance.transact(s, indexDir) { snap =>
+      IndexMaintenance.Change(replace = Seq("centroids" -> cent.coalesce(1),
+        "codebook" -> Seq((cb.toSeq, Similarity.pqM)).toDF("cb", "m").coalesce(1),
+        "lists" -> Similarity.ivfPqAssign(cent, cb,
+          servableCorpus(s, snap, "lists", normedCorpus(s, corpusDirs)))))
     }
     Artifacts.invalidate(s, s"$indexDir|")
   }
@@ -743,8 +692,8 @@ object AnnIndex {
     * distributed; only 1-row aggregates reach the driver. */
   def ivfIndexHealth(s: SparkSession, indexDir: String): DataFrame = {
     import s.implicits._
-    val lists = IndexMaintenance.minusTombstones(s, s"$indexDir/lists",
-      s.read.parquet(s"$indexDir/lists"), "vec_id")
+    val snap = IndexMaintenance.snapshot(s, indexDir)
+    val lists = snap.scan(s, "lists", "vec_id")
     // the size distribution is computed ONCE (cached — list-count-sized,
     // tiny) and feeds both bounded actions; the assignment table itself
     // is scanned a single time
@@ -759,10 +708,9 @@ object AnnIndex {
         }
       if (agg.isNullAt(0)) (0L, 0L, 0L, t5) else (agg.getLong(0), agg.getLong(1), agg.getLong(2), t5)
     } finally { sizes.unpersist(); () }
-    val pend = IndexMaintenance.pendingTombstones(s, s"$indexDir/lists")
-      .map(_.select(col("id")).distinct().count()).getOrElse(0L)
-    val nLists = s.read.parquet(s"$indexDir/centroids").count()
-    val files = IndexMaintenance.dataFiles(s, s"$indexDir/lists").size
+    val pend = snap.pendingTombstones("lists")
+    val nLists = snap.read(s, "centroids").count()
+    val files = snap.filesOf("lists").size
     Seq(
       ("data_files", files.toDouble),
       ("hot_list_skew", if (nonempty == 0) 0.0 else mx / (total.toDouble / nonempty)),
@@ -785,8 +733,8 @@ object AnnIndex {
     * `n_bucket_rows`/`nonempty_buckets`, tombstone debt and file debt. */
   def lshIndexHealth(s: SparkSession, indexDir: String): DataFrame = {
     import s.implicits._
-    val buckets = IndexMaintenance.minusTombstones(s, s"$indexDir/buckets",
-      s.read.parquet(s"$indexDir/buckets"), "vec_id")
+    val snap = IndexMaintenance.snapshot(s, indexDir)
+    val buckets = snap.scan(s, "buckets", "vec_id")
     val sizes = buckets.groupBy(col("tbl"), col("bucket")).agg(count(lit(1)).as("n")).cache()
     val (mx, nonempty, total, top5) = try {
       val agg = sizes.agg(max(col("n")).as("mx"), count(lit(1)).as("nonempty"),
@@ -803,9 +751,8 @@ object AnnIndex {
     // the rows-per-table invariant check reads from this report
     val nVec = buckets.select(col("vec_id")).distinct().count()
     val tables = metaRow(s, indexDir).select(col("tables")).head().getInt(0)
-    val pend = IndexMaintenance.pendingTombstones(s, s"$indexDir/buckets")
-      .map(_.select(col("id")).distinct().count()).getOrElse(0L)
-    val files = IndexMaintenance.dataFiles(s, s"$indexDir/buckets").size
+    val pend = snap.pendingTombstones("buckets")
+    val files = snap.filesOf("buckets").size
     Seq(
       ("data_files", files.toDouble),
       ("hot_bucket_skew", if (nonempty == 0) 0.0 else mx / (total.toDouble / nonempty)),
@@ -840,9 +787,7 @@ object AnnIndex {
     * Meta (1 row) is left alone. The serve memo of the old file set is
     * invalidated. See [[IndexMaintenance]]. */
   def lshIndexCompact(s: SparkSession, indexDir: String): (Int, Int) = {
-    IndexMaintenance.recoverPublish(s, indexDir, "buckets")
-    val r = IndexMaintenance.compactTable(s, s"$indexDir/buckets", Seq("tbl", "bucket"),
-      tombstoneCol = Some("vec_id"), markerDir = Some(s"$indexDir/_batches"))
+    val r = IndexMaintenance.compact(s, indexDir, "buckets", Seq("tbl", "bucket"), Some("vec_id"))
     Artifacts.invalidate(s, s"$indexDir|")
     r
   }
@@ -850,16 +795,12 @@ object AnnIndex {
   /** Retract vectors from the LSH bucket index (takedown): tombstoned
     * now — gone from the next serve's candidate pool — physically
     * dropped at the next [[lshIndexCompact]]. Idempotent. */
-  def lshIndexDelete(s: SparkSession, indexDir: String, vecIds: Seq[Long]): Unit = {
-    IndexMaintenance.recoverPublish(s, indexDir, "buckets")
-    IndexMaintenance.deleteIds(s, s"$indexDir/buckets", vecIds)
-  }
+  def lshIndexDelete(s: SparkSession, indexDir: String, vecIds: Seq[Long]): Unit =
+    IndexMaintenance.delete(s, indexDir, Seq("buckets"), vecIds)
 
   /** Compact the IVF inverted-list table on c_id (the probe key). */
   def ivfIndexCompact(s: SparkSession, indexDir: String): (Int, Int) = {
-    IndexMaintenance.recoverPublish(s, indexDir, "lists")
-    val r = IndexMaintenance.compactTable(s, s"$indexDir/lists", Seq("c_id", "vec_id"),
-      tombstoneCol = Some("vec_id"), markerDir = Some(s"$indexDir/_batches"))
+    val r = IndexMaintenance.compact(s, indexDir, "lists", Seq("c_id", "vec_id"), Some("vec_id"))
     Artifacts.invalidate(s, s"$indexDir|")
     r
   }
@@ -868,8 +809,7 @@ object AnnIndex {
     * quantizer is trained structure, not per-doc content — deleting a
     * member never re-trains (same frozen-quantizer semantic as append). */
   def ivfIndexDelete(s: SparkSession, indexDir: String, vecIds: Seq[Long]): Unit = {
-    IndexMaintenance.recoverPublish(s, indexDir, "lists")
-    IndexMaintenance.deleteIds(s, s"$indexDir/lists", vecIds)
+    IndexMaintenance.delete(s, indexDir, Seq("lists"), vecIds)
     // the serve-budget memo bakes the tombstone MASK into a cached
     // frame (ivfServableBudget) — unlike the raw lists memo, it goes
     // stale on delete, not just on append/compact
@@ -878,19 +818,15 @@ object AnnIndex {
 
   /** Compact the IVF-PQ code-carrying list table on c_id. */
   def ivfPqIndexCompact(s: SparkSession, indexDir: String): (Int, Int) = {
-    IndexMaintenance.recoverPublish(s, indexDir, "lists")
-    val r = IndexMaintenance.compactTable(s, s"$indexDir/lists", Seq("c_id", "vec_id"),
-      tombstoneCol = Some("vec_id"), markerDir = Some(s"$indexDir/_batches"))
+    val r = IndexMaintenance.compact(s, indexDir, "lists", Seq("c_id", "vec_id"), Some("vec_id"))
     Artifacts.invalidate(s, s"$indexDir|")
     r
   }
 
   /** Retract vectors from the IVF-PQ index (codebook + centroids stay
     * frozen, as with append). */
-  def ivfPqIndexDelete(s: SparkSession, indexDir: String, vecIds: Seq[Long]): Unit = {
-    IndexMaintenance.recoverPublish(s, indexDir, "lists")
-    IndexMaintenance.deleteIds(s, s"$indexDir/lists", vecIds)
-  }
+  def ivfPqIndexDelete(s: SparkSession, indexDir: String, vecIds: Seq[Long]): Unit =
+    IndexMaintenance.delete(s, indexDir, Seq("lists"), vecIds)
 
   /** Registered-query form: persist the IVF-PQ index once for `dir`,
     * serve the stride query set from it. Rows-only (trained quantizer);

@@ -10,10 +10,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * An entry is keyed by SCOPE (a Spark session, or the whole JVM for
   * temp-dir artifacts), a key string (conventionally `"$dir|what"`),
   * and, for generation-keyed entries, the index GENERATION it was
-  * built at — a fingerprint of the index directory's file listing,
-  * which every append/compact/delete/retrain moves because
-  * [[IndexMaintenance]] only ever adds, renames or removes files. A
-  * generation-keyed lookup re-derives when the listing has moved.
+  * built at — the version of the index's [[IndexMaintenance]] log,
+  * which every append/compact/delete/retrain moves by committing. A
+  * generation-keyed lookup re-derives when the version has moved.
   *
   * LOCKING: the map itself is a concurrent map; each entry carries its
   * own monitor and `build` runs under it, so consumers of the same key
@@ -69,10 +68,10 @@ private[graft] object Artifacts {
     lookup(Slot(s, key), Frame, standing = false, null)(build.cache())
 
   /** A decision derived from the index at `indexDir`, served for as long
-    * as the index's file listing stands. `key` must carry every
+    * as the index's log version stands. `key` must carry every
     * parameter the value depends on. */
   def atGeneration[T](s: SparkSession, indexDir: String, key: String)(build: => T): T =
-    lookup(Slot(s, s"$indexDir|$key"), Plain, standing = false, fingerprint(s, indexDir))(build)
+    lookup(Slot(s, s"$indexDir|$key"), Plain, standing = false, generation(s, indexDir))(build)
 
   /** [[atGeneration]] for a frame: cached AND materialised inside the
     * build, so the frame holds the generation it is stored under even
@@ -80,14 +79,14 @@ private[graft] object Artifacts {
   def frameAtGeneration(s: SparkSession, indexDir: String, key: String)(
       build: => DataFrame): DataFrame =
     lookup(Slot(s, s"$indexDir|$key"), Frame, standing = false,
-      fingerprint(s, indexDir))(pinned(build))
+      generation(s, indexDir))(pinned(build))
 
   /** [[frameAtGeneration]] for a decision that may conclude "no frame"
     * (the `None` is itself the memoised decision). */
   def frameOptAtGeneration(s: SparkSession, indexDir: String, key: String)(
       build: => Option[DataFrame]): Option[DataFrame] =
     lookup(Slot(s, s"$indexDir|$key"), Frame, standing = false,
-      fingerprint(s, indexDir))(build.map(pinned))
+      generation(s, indexDir))(build.map(pinned))
 
   /** A standing on-disk artifact for the whole JVM: `build` creates a
     * local temp dir, fills it and returns its path. Kept by [[reset]],
@@ -106,8 +105,8 @@ private[graft] object Artifacts {
     sweepStopped()
     val e = entries.computeIfAbsent(slot, _ => new Entry(kind, standing))
     e.synchronized {
-      // taken BEFORE the build: a writer racing it leaves the listing
-      // different from the stored generation, so the next probe misses
+      // taken BEFORE the build: a writer racing it commits a version
+      // past the stored generation, so the next probe misses
       val g = gen
       if (e.filled && e.gen == g) {
         hits.incrementAndGet()
@@ -171,31 +170,8 @@ private[graft] object Artifacts {
     out.result()
   }
 
-  /** Recursive name+length fingerprint of an index directory (depth ≤ 3:
-    * index dir → table dirs → files and marker subdirs → their files),
-    * sorted so listing order never fingerprints. No mtimes: object-store
-    * renames are copies and do not keep them, and names+lengths are
-    * collision-safe under Spark's per-write UUID part names. A dir that
-    * vanishes mid-walk folds in as a unique GONE token, so a snapshot
-    * taken mid-swap is never served twice. */
-  private[graft] def fingerprint(s: SparkSession, indexDir: String): String = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val f = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val sb = new StringBuilder
-    def walk(p: org.apache.hadoop.fs.Path, depth: Int): Unit = {
-      val listed =
-        try f.listStatus(p).sortBy(_.getPath.getName)
-        catch { case _: java.io.FileNotFoundException =>
-          sb.append(p.getName).append(":GONE-").append(System.nanoTime()).append('\n')
-          return
-        }
-      listed.foreach { st =>
-        if (st.isFile)
-          sb.append(st.getPath.toString).append(':').append(st.getLen).append('\n')
-        else if (depth > 0) walk(st.getPath, depth - 1)
-      }
-    }
-    if (f.exists(root)) walk(root, 3)
-    sb.toString
-  }
+  /** The generation of the index at `indexDir`: its log version, one
+    * `_log` listing when nothing changed. */
+  private def generation(s: SparkSession, indexDir: String): String =
+    IndexMaintenance.snapshot(s, indexDir).generation
 }

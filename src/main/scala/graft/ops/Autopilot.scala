@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Index AUTOPILOT — the round-8 health findings as an executable
+/** Index AUTOPILOT — the index health findings as an executable
   * policy. The health reports ([[AnnIndex.ivfIndexHealth]],
   * [[AnnIndex.lshIndexHealth]], [[TextAnalysis.textIndexHealth]]) give
   * a deployment the numbers to watch; this is the one entry point that
@@ -55,7 +55,7 @@ object Autopilot {
   val maxStalenessShare = 0.2
 
   /** Bloom saturation alarm for the decontamination index: cumulative
-    * inserts over the filter's sized capacity (the round-8 accounting
+    * inserts over the filter's sized capacity (the accounting
     * `decontamBloomAppend` warns on). Past 1.0 the actual FP rate
     * exceeds the built fpp — the exact-confirm tier absorbs the extra
     * false positives (correctness holds) but every FP pays a confirm
@@ -69,140 +69,53 @@ object Autopilot {
     * `ingestCompactEvery`): the leg is meant to fire only when the
     * floor's compaction failed to absorb, so a default below a
     * caller's floor would re-create the compact-per-trigger latch the
-    * round-12 A/B measured at +20–40%. */
+    * A/B measured at +20–40%. */
   val maxUnabsorbedBatches = 10
-
-  private def exists(s: SparkSession, p: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    path.getFileSystem(s.sparkContext.hadoopConfiguration).exists(path)
-  }
 
   private def healthMap(df: DataFrame): Map[String, Double] =
     df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
 
-  /** Process-level bloom saturation memo: qualified bloom dir →
-    * (file-set fingerprint, saturation share, schema-upgraded). The
-    * per-trigger alarm must not pay a Spark read per call — the 1-row
-    * parquet read is a ~200 ms job, and the decontam ingest loop
-    * rewrites the bloom EVERY trigger, so a read-on-change memo alone
-    * would still re-read per trigger. Instead the ONE bloom writer
-    * ([[Curation]]'s writeBloomRow]) notes the saturation it just
-    * published via [[noteBloomSaturation]]; any change from outside
-    * this process flips the fingerprint and forces a single re-read. */
-  private val bloomSatMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Double, Boolean)]()
-
-  private def bloomFingerprint(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String =
-    f.listStatus(p).filter(_.isFile)
-      .map(st => s"${st.getPath.getName}:${st.getLen}")
-      .sorted.mkString("|")
-
-  /** Fingerprint of a bloom table's file set for the memo protocol —
-    * the WRITER takes this of its STAGING dir BEFORE the publish
-    * rename, so a concurrent external rewrite landing right after the
-    * rename can never be memoized under OUR saturation: the on-disk
-    * fingerprint would be theirs, ours mismatches, and the next probe
-    * re-reads. Listing the destination after the rename had exactly
-    * that poisoning window. Names + lengths only, NO mtimes: Spark's
-    * per-write UUID part names already make the pair collision-safe,
-    * and on copy-based filesystems (object stores where rename = copy)
-    * mtimes do NOT survive the publish rename — an mtime term silently
-    * degraded the memo to a parquet read per streaming trigger there,
-    * the exact cost it exists to avoid. */
-  private[graft] def bloomFingerprintOf(s: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    bloomFingerprint(p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** Called by the bloom writer right after its publish rename, with
-    * the counters it just wrote and the STAGING-dir fingerprint taken
-    * before the rename — keeps [[bloomSaturationOf]] a pure FS-listing
-    * check on the hot per-trigger path. */
-  private[graft] def noteBloomSaturation(s: SparkSession, bloomDir: String,
-      fingerprint: String, nItems: Long, totalItems: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(bloomDir)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    bloomSatMemo.put(f.makeQualified(p).toString,
-      (fingerprint, totalItems.toDouble / math.max(1.0, nItems.toDouble), true))
-  }
-
-  /** A bloom table's (saturation share, schema-upgraded) — the ONE
-    * pre-upgrade guard [[indexAutopilot]] and [[maintenanceDue]] share:
-    * rows without `total_items` report the n_items LOWER BOUND 1.0
-    * (exactly full, total unknown — never over), flagged `upgraded =
-    * false` so callers can say so instead of presenting it as measured
-    * (same schema rule as `Curation.loadBloom`). Served from the
-    * writer-fed fingerprint memo when current; one parquet read
-    * otherwise (cold process or an external rewrite). */
-  private[graft] def bloomSaturationOf(
-      s: SparkSession, bloomDir: String): (Double, Boolean) = {
-    val p = new org.apache.hadoop.fs.Path(bloomDir)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val key = f.makeQualified(p).toString
-    val fp = bloomFingerprint(f, p)
-    Option(bloomSatMemo.get(key)).filter(_._1 == fp)
-      .map(c => (c._2, c._3)).getOrElse {
-        val m = s.read.parquet(bloomDir)
-        val upgraded = m.schema.fieldNames.contains("total_items")
-        val r = m.select(col("n_items"),
-          if (upgraded) col("total_items") else col("n_items")).head()
-        val sat = r.getLong(1).toDouble / math.max(1.0, r.getLong(0).toDouble)
-        bloomSatMemo.put(key, (fp, sat, upgraded))
-        (sat, upgraded)
-      }
-  }
+  /** A bloom's (saturation share, counters-known) from the capacity
+    * counters its last rewrite committed — no Spark read. A bloom
+    * committed without `bloom.total_items` reports the n_items LOWER
+    * BOUND 1.0 (exactly full, total unknown — never over), flagged
+    * `false` so callers can say so instead of presenting it as
+    * measured. */
+  private[graft] def bloomSaturationOf(snap: IndexMaintenance.Snapshot): (Double, Boolean) =
+    snap.props.get("bloom.total_items").fold((1.0, false)) { total =>
+      (total.toDouble / math.max(1.0, snap.props("bloom.n_items").toDouble), true)
+    }
 
   /** Cheap per-trigger maintenance alarm — the autopilot's debt
-    * triggers evaluated from FS LISTINGS and one 1-row metadata read
-    * only, no data aggregation: this runs inside a streaming
+    * triggers read from each dir's log snapshot only (one `_log`
+    * listing when nothing changed): this runs inside a streaming
     * foreachBatch on EVERY trigger, so the steady-state per-trigger
     * cost must stay flat (the aggregation-priced drift alarms —
     * list/bucket skew, staleness share — stay on [[indexAutopilot]]'s
     * on-demand pass, whose fix is a retrain, not a cadence compaction).
     *
-    * True when any table under `dirs` carries more un-absorbed APPEND
-    * BATCHES (distinct sequence stamps among its stamped files) than
-    * `maxAppendedBatches`, any pending tombstones, or a decontam
-    * bloom's saturation share over `bloomSaturationMax`. All three
-    * signals RESET at the compaction they trigger — appends absorb
-    * into unstamped rewrites, tombstones retire, the bloom rebuilds at
-    * fresh geometry — so the alarm can never latch. The file leg
-    * counts BATCHES, not files: an append lands one file per shuffle
-    * partition (32 at the bench SF), so a file-count threshold fires
-    * on the very first normal append and turns the cadence into a
-    * rewrite per trigger (measured +40% on the ingest family before
-    * this was caught); batch count can only exceed the floor when the
-    * floor's own compaction failed to absorb — a genuine anomaly, so
-    * this leg is a self-healing backstop, while the tombstone and
-    * saturation legs are the real early triggers. Sink dirs append
-    * unstamped files and stay bounded by the cadence FLOOR, as before.
-    * A dir entry may be an index dir (table subdirs are probed) or a
-    * bare table/sink dir of parquet files. */
+    * True when any table of a dir in `dirs` carries more un-absorbed
+    * APPEND COMMITS than `maxAppendedBatches`, any pending tombstone, or
+    * a decontam bloom whose saturation share is over
+    * `bloomSaturationMax`. All three signals RESET at the compaction
+    * they trigger — appends absorb into sequence-0 rewrites, tombstones
+    * are consumed, the bloom rebuilds at fresh geometry — so the alarm
+    * can never latch. The file leg counts COMMITS, not files: an append
+    * lands one file per shuffle partition (32 at the bench SF), so a
+    * file-count threshold fires on the very first normal append and
+    * turns the cadence into a rewrite per trigger (measured +40% on the
+    * ingest family before this was caught); commit count can only
+    * exceed the floor when the floor's own compaction failed to absorb
+    * — a self-healing backstop, while the tombstone and saturation legs
+    * are the real early triggers. A dir without a log has no debt. */
   def maintenanceDue(s: SparkSession, dirs: Seq[String],
       maxAppendedBatches: Int = maxUnabsorbedBatches,
       bloomSaturationMax: Double = maxBloomSaturation): Boolean =
     dirs.exists { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      f.exists(p) && {
-        val subs = f.listStatus(p).toSeq.filter(st => st.isDirectory &&
-          !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
-        val tables = if (subs.isEmpty) Seq(d) else subs.map(_.getPath.toString)
-        val debt = tables.exists { t =>
-          // stamp grammar owned by IndexMaintenance (fileSeqOf) — a
-          // second regex copy here would go silently dead if the
-          // naming ever changes again
-          IndexMaintenance.appendedTailFiles(s, t)
-            .map(n => IndexMaintenance.fileSeqOf(
-              new org.apache.hadoop.fs.Path(n).getName))
-            .distinct.size > maxAppendedBatches ||
-            IndexMaintenance.pendingTombstones(s, t).isDefined
-        }
-        debt || {
-          val bloomP = new org.apache.hadoop.fs.Path(s"$d/bloom")
-          f.exists(bloomP) && bloomSaturationOf(s, s"$d/bloom")._1 > bloomSaturationMax
-        }
+      IndexMaintenance.snapshotIfAny(s, d).exists { snap =>
+        snap.files.values.map(_.table).toSet.exists(t =>
+          snap.appendedBatches(t) > maxAppendedBatches || snap.pendingTombstones(t) > 0) ||
+          (snap.hasTable("bloom") && bloomSaturationOf(snap)._1 > bloomSaturationMax)
       }
     }
 
@@ -225,13 +138,15 @@ object Autopilot {
     import s.implicits._
     val rows = scala.collection.mutable.ArrayBuffer[(String, String, Double, Double, String, Boolean)]()
     var matched = false
+    val snap = IndexMaintenance.snapshotIfAny(s, indexDir)
+    def exists(table: String): Boolean = snap.exists(_.hasTable(table))
 
-    // file/tombstone maintenance debt of one table — the same values
-    // the oracled health reports emit for their families
-    def debtOf(table: String): (Double, Double) = (
-      IndexMaintenance.dataFiles(s, table).size.toDouble,
-      IndexMaintenance.pendingTombstones(s, table)
-        .map(_.count().toDouble).getOrElse(0.0))
+    // file/tombstone maintenance debt of one table, from the current
+    // snapshot — the same values the oracled health reports emit
+    def debtOf(table: String): (Double, Double) = {
+      val now = IndexMaintenance.snapshot(s, indexDir)
+      (now.filesOf(table).size.toDouble, now.pendingTombstones(table).toDouble)
+    }
 
     def vectorFamily(family: String, skewMetric: String, skewMax: Double,
         health: => Map[String, Double],
@@ -255,25 +170,25 @@ object Autopilot {
         wantCompact && pend > 0))
     }
 
-    if (exists(s, s"$indexDir/buckets") && exists(s, s"$indexDir/meta")) {
+    if (exists("buckets") && exists("meta")) {
       matched = true
       vectorFamily("lsh", "hot_bucket_skew", hotBucketSkewMax,
         healthMap(AnnIndex.lshIndexHealth(s, indexDir)),
         () => AnnIndex.lshIndexRetrain(s, indexDir, corpusDirs),
         () => { AnnIndex.lshIndexCompact(s, indexDir); () })
-    } else if (exists(s, s"$indexDir/lists") && exists(s, s"$indexDir/codebook")) {
+    } else if (exists("lists") && exists("codebook")) {
       matched = true
       vectorFamily("ivfpq", "hot_list_skew", hotListSkewMax,
         healthMap(AnnIndex.ivfIndexHealth(s, indexDir)),
         () => AnnIndex.ivfPqIndexRetrain(s, indexDir, corpusDirs),
         () => { AnnIndex.ivfPqIndexCompact(s, indexDir); () })
-    } else if (exists(s, s"$indexDir/lists") && exists(s, s"$indexDir/centroids")) {
+    } else if (exists("lists") && exists("centroids")) {
       matched = true
       vectorFamily("ivf", "hot_list_skew", hotListSkewMax,
         healthMap(AnnIndex.ivfIndexHealth(s, indexDir)),
         () => AnnIndex.ivfIndexRetrain(s, indexDir, corpusDirs),
         () => { AnnIndex.ivfIndexCompact(s, indexDir); () })
-    } else if (exists(s, s"$indexDir/postings") && exists(s, s"$indexDir/doclen")) {
+    } else if (exists("postings") && exists("doclen")) {
       matched = true
       val h = healthMap(TextAnalysis.textIndexHealth(s, indexDir))
       val statsDocs = math.max(1.0, h.getOrElse("stats_n_docs", 0.0))
@@ -291,23 +206,23 @@ object Autopilot {
     }
 
     // DECONTAMINATION family (bloom + eval shingle table). The bloom's
-    // saturation share is the round-8 capacity accounting the append
+    // saturation share is the capacity accounting the append
     // path warns on (cumulative inserts / sized capacity, both read
     // from the persisted bloom row); past the threshold the filter's
     // actual FP rate exceeds its built fpp, and the ONE fix for a
     // saturated (or retraction-stale) bloom is the compact's rebuild at
     // fresh geometry — bits cannot be unset or extended in place.
-    if (exists(s, s"$indexDir/bloom") && exists(s, s"$indexDir/eval_shingles")) {
+    if (exists("bloom") && exists("eval_shingles")) {
       matched = true
-      // pre-upgrade bloom rows lack total_items — the shared
+      // a bloom committed without its counters: the shared
       // [[bloomSaturationOf]] guard reports the n_items LOWER BOUND
       // 1.0 with upgraded = false, and the decision row says so in its
-      // action column (the r11 advice: a caller alarming below 1.0
-      // sees every pre-upgrade bloom flagged until its first rebuild
-      // writes the upgraded row — the row must read as "total
-      // unknown", not as a measured exactly-full filter).
-      val (sat, upgraded) = bloomSaturationOf(s, s"$indexDir/bloom")
-      val (files, pend) = debtOf(s"$indexDir/eval_shingles")
+      // action column (a caller alarming below 1.0 sees such a bloom
+      // flagged until its first rebuild commits the counters — the row
+      // must read as "total unknown", not as a measured exactly-full
+      // filter).
+      val (sat, upgraded) = bloomSaturationOf(IndexMaintenance.snapshot(s, indexDir))
+      val (files, pend) = debtOf("eval_shingles")
       val wantRebuild = sat > bloomSaturationMax
       val wantCompact = wantRebuild || files > dataFilesMax || pend > 0
       if (wantCompact) Curation.decontamIndexCompact(s, indexDir)
@@ -325,11 +240,11 @@ object Autopilot {
     // corpus-dependent parameters (no drift, no retrain) — the only
     // maintenance is file/tombstone debt, fixed by the ingest compact
     // (which also covers the clean store when present).
-    if (exists(s, s"$indexDir/simhash")) {
+    if (exists("simhash")) {
       matched = true
-      val (sf, sp) = debtOf(s"$indexDir/simhash")
+      val (sf, sp) = debtOf("simhash")
       val (cf, cp) =
-        if (exists(s, s"$indexDir/clean")) debtOf(s"$indexDir/clean") else (0.0, 0.0)
+        if (exists("clean")) debtOf("clean") else (0.0, 0.0)
       val files = sf + cf
       val pend = sp + cp
       val wantCompact = files > dataFilesMax || pend > 0
@@ -340,7 +255,7 @@ object Autopilot {
         "compact", wantCompact && pend > 0))
     }
 
-    // TOKEN LEDGER family (seed/b<i>/c<n> rollup grammar — round 15).
+    // TOKEN LEDGER family (seed/b<i>/c<n> rollup grammar).
     // The ledger's maintenance debt is live part-DIRECTORY count (no
     // stamped appends, tombstones, or bloom — the index-shaped alarms
     // are constant-false on it): `unrolled_batches` past the backstop
@@ -355,7 +270,7 @@ object Autopilot {
       // consumes two directory-listing numbers, and the report's
       // totals leg is a Spark aggregation (with a torn-read retry
       // budget under churn) that a per-pass alarm must not pay — the
-      // same rule the bloom saturation memo enforces for its family
+      // same rule the bloom saturation leg follows for its family
       val (_, unrolledN, _, garbageN) =
         graft.streaming.TextIngest.ledgerListingStats(s, indexDir)
       val unrolled = unrolledN.toDouble

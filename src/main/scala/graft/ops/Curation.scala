@@ -300,39 +300,26 @@ object Curation {
     // totalItems records ACTUAL inserts (cnt), not the sized capacity —
     // the floor would start small indexes' saturation accounting at
     // 100% and make the append path's overrun warning fire spuriously
-    writeBloomRow(s, indexDir, bloom, n, contamBloomFpp, totalItems = cnt)
+    IndexMaintenance.replace(s, indexDir, Seq("bloom" -> bloomRow(s, bloom, n, contamBloomFpp, cnt)),
+      bloomProps(n, cnt))
   }
 
-  /** Publish the bloom row via write-to-temp + rename: the read-modify-
-    * overwrite cycle in [[decontamBloomAppend]] must never leave a
-    * half-written index visible to a concurrent reader (parquet
-    * `overwrite` deletes the destination before the new files land). The
-    * rename is atomic on HDFS/posix per directory entry; readers see
-    * either the old or the new index, never neither. */
-  private def writeBloomRow(s: SparkSession, indexDir: String,
-      bloom: org.apache.spark.util.sketch.BloomFilter,
-      nItems: Long, fpp: Double, totalItems: Long): Unit = {
+  /** The persisted bloom: one row carrying the serialized filter plus
+    * the sizing it was built with (append needs the identical geometry
+    * to OR-merge). */
+  private def bloomRow(s: SparkSession, bloom: org.apache.spark.util.sketch.BloomFilter,
+      nItems: Long, fpp: Double, totalItems: Long): DataFrame = {
     import s.implicits._
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    val dest = new org.apache.hadoop.fs.Path(s"$indexDir/bloom")
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/.bloom.tmp")
-    val fs = dest.getFileSystem(s.sparkContext.hadoopConfiguration)
     Seq((bos.toByteArray, nItems, fpp, totalItems))
-      .toDF("bloom", "n_items", "fpp", "total_items")
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    // fingerprint the STAGING files before the rename (names + lengths
-    // survive it on every FS, including copy-based object-store
-    // renames): memoizing a post-rename listing could
-    // bind OUR saturation to a concurrent external rewrite's files
-    val fp = Autopilot.bloomFingerprintOf(s, tmp.toString)
-    if (fs.exists(dest)) fs.delete(dest, true)
-    if (!fs.rename(tmp, dest))
-      throw new java.io.IOException(s"rename $tmp -> $dest failed")
-    // feed the per-trigger alarm's saturation memo so maintenanceDue
-    // never pays a parquet read on the hot streaming path
-    Autopilot.noteBloomSaturation(s, dest.toString, fp, nItems, totalItems)
+      .toDF("bloom", "n_items", "fpp", "total_items").coalesce(1)
   }
+
+  /** The bloom's capacity counters, committed with every bloom rewrite
+    * so the saturation alarm reads them from the log, not the row. */
+  private def bloomProps(nItems: Long, totalItems: Long): Map[String, String] =
+    Map("bloom.n_items" -> nItems.toString, "bloom.total_items" -> totalItems.toString)
 
   /** PERSIST the eval slice's shingle hashes WITH their eval doc ids
     * alongside the bloom — the EXACT side of the two-tier contamination
@@ -347,13 +334,13 @@ object Curation {
     * which the bloom alone could never honor (bits cannot be unset).
     * The table is eval-sized by construction, never corpus-sized. */
   def decontamShingleWrite(s: SparkSession, evalDir: String, indexDir: String): Unit =
-    Tables(s, evalDir, "documents")
-      .filter(col("doc_id") % evalStride === 0)
-      .select(col("doc_id").as("eval_id"),
-        explode(graft.plans.VectorFunctions.word_shingle_hashes(
-          col("text"), contamShingleN)).as("h"))
-      .distinct()
-      .write.mode("overwrite").parquet(s"$indexDir/eval_shingles")
+    IndexMaintenance.replace(s, indexDir, Seq("eval_shingles" ->
+      Tables(s, evalDir, "documents")
+        .filter(col("doc_id") % evalStride === 0)
+        .select(col("doc_id").as("eval_id"),
+          explode(graft.plans.VectorFunctions.word_shingle_hashes(
+            col("text"), contamShingleN)).as("h"))
+        .distinct()))
 
   /** The eval shingle table with pending retractions filtered — the
     * read the exact confirm tier uses, so a retracted eval doc stops
@@ -361,131 +348,117 @@ object Curation {
     * in on the retracted shingles' stale bits, but the exact tier
     * refuses to confirm — one-sided error absorbs staleness). */
   private[graft] def evalShingleIndex(s: SparkSession, indexDir: String): DataFrame =
-    IndexMaintenance.minusTombstones(s, s"$indexDir/eval_shingles",
-      s.read.parquet(s"$indexDir/eval_shingles"), "eval_id")
+    IndexMaintenance.scan(s, indexDir, "eval_shingles", "eval_id")
 
   /** Retract eval documents from the contamination index (a retired or
     * re-licensed benchmark): tombstone by eval_id — exact-tier-correct
     * immediately, physically dropped and BLOOM-REBUILT at the next
     * [[decontamIndexCompact]]. Idempotent. */
   def decontamIndexDelete(s: SparkSession, indexDir: String, evalIds: Seq[Long]): Unit =
-    IndexMaintenance.deleteIds(s, s"$indexDir/eval_shingles", evalIds)
+    IndexMaintenance.delete(s, indexDir, Seq("eval_shingles"), evalIds)
 
   /** Compact the contamination index: physically drop retracted eval
-    * rows, then REBUILD the bloom from the surviving shingles — the
-    * only way to honor a delete in a bloom (bits cannot be unset), so
-    * compaction is where the screen tier catches up with the exact
-    * tier. Re-sized to the surviving distinct-hash count at the
+    * rows and REBUILD the bloom from the surviving shingles, both in one
+    * commit — the only way to honor a delete in a bloom (bits cannot be
+    * unset), so compaction is where the screen tier catches up with the
+    * exact tier. Re-sized to the surviving distinct-hash count at the
     * original fpp, so the rebuilt filter's FP budget is fresh. */
   def decontamIndexCompact(s: SparkSession, indexDir: String): (Int, Int) = {
-    val r = IndexMaintenance.compactTable(s, s"$indexDir/eval_shingles",
-      Seq("eval_id", "h"), tombstoneCol = Some("eval_id"),
-      markerDir = Some(s"$indexDir/_batches"))
-    val surviving = s.read.parquet(s"$indexDir/eval_shingles")
-      .select(col("h")).distinct()
-    val cnt = surviving.count()
-    // sized with append headroom (2× the surviving count) so the next
-    // decontamBloomAppend's cumulative-capacity accounting starts from
-    // the ACTUAL item count, not at 100% of an exactly-sized filter —
-    // which would spuriously warn of fpp overrun on the first append
-    val n = math.max(1024L, cnt * 2)
-    // stat.bloomFilter returns a null buffer on an empty frame (every
-    // eval doc retracted — legal); an explicit empty filter screens
-    // nothing, which is exactly right
-    val bloom =
-      if (cnt == 0L) org.apache.spark.util.sketch.BloomFilter.create(n, contamBloomFpp)
-      else surviving.stat.bloomFilter("h", n, contamBloomFpp)
-    writeBloomRow(s, indexDir, bloom, n, contamBloomFpp, totalItems = cnt)
-    r
+    var before = 0
+    val after = IndexMaintenance.transact(s, indexDir) { snap =>
+      before = snap.filesOf("eval_shingles").size
+      val surviving = snap.scan(s, "eval_shingles", "eval_id").select(col("h")).distinct()
+      val cnt = surviving.count()
+      // sized with append headroom (2× the surviving count) so the next
+      // append's cumulative-capacity accounting starts from the ACTUAL
+      // item count, not at 100% of an exactly-sized filter
+      val n = math.max(1024L, cnt * 2)
+      // stat.bloomFilter returns a null buffer on an empty frame (every
+      // eval doc retracted — legal); an explicit empty filter screens
+      // nothing, which is exactly right
+      val bloom =
+        if (cnt == 0L) org.apache.spark.util.sketch.BloomFilter.create(n, contamBloomFpp)
+        else surviving.stat.bloomFilter("h", n, contamBloomFpp)
+      IndexMaintenance.Change(replace = Seq(
+        "eval_shingles" -> IndexMaintenance.rewrite(s, snap, "eval_shingles",
+          Seq("eval_id", "h"), Some("eval_id")),
+        "bloom" -> bloomRow(s, bloom, n, contamBloomFpp, cnt)),
+        props = bloomProps(n, cnt))
+    }
+    (before, after.map(_.filesOf("eval_shingles").size).getOrElse(0))
   }
 
-  /** Deserialize the persisted bloom row (shared by serve/append and
-    * the ingest-time manifest probe). */
-  private[graft] def loadBloom(s: SparkSession, indexDir: String): org.apache.spark.util.sketch.BloomFilter = {
-    val meta = s.read.parquet(s"$indexDir/bloom").head()
+  /** Deserialize a persisted bloom row. */
+  private def bloomOf(meta: org.apache.spark.sql.Row): org.apache.spark.util.sketch.BloomFilter =
     org.apache.spark.util.sketch.BloomFilter.readFrom(
       new java.io.ByteArrayInputStream(meta.getAs[Array[Byte]]("bloom")))
-  }
+
+  /** The persisted bloom (shared by serve/append and the ingest-time
+    * manifest probe). */
+  private[graft] def loadBloom(s: SparkSession, indexDir: String): org.apache.spark.util.sketch.BloomFilter =
+    bloomOf(IndexMaintenance.read(s, indexDir, "bloom").head())
 
   /** Landing-zone append: OR-merge a new eval batch into the persisted
     * filter. The batch bloom is built at the INDEX's recorded geometry
     * (same expectedNumItems/fpp ⇒ same bit count and hash count —
     * `mergeInPlace`'s compatibility requirement), so merging equals
     * having built from the union. */
-  def decontamBloomAppend(s: SparkSession, evalDir: String, indexDir: String): Unit = {
-    val meta = s.read.parquet(s"$indexDir/bloom").head()
-    val existing = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(meta.getAs[Array[Byte]]("bloom")))
+  def decontamBloomAppend(s: SparkSession, evalDir: String, indexDir: String): Unit =
+    IndexMaintenance.transact(s, indexDir) { snap =>
+      val batchH = evalShingleHashes(s, evalDir)
+      mergedBloom(s, snap, indexDir, batchH, batchH.count(), "decontamBloomAppend")
+    }
+
+  /** The bloom rewrite of an append: `batchH` OR-merged into the
+    * snapshot's filter, cumulative inserts vs the sized capacity
+    * tracked — OR-merging beyond the geometry's n_items silently lifts
+    * the actual FP rate above the recorded fpp, so warn (serve re-checks
+    * it too). */
+  private def mergedBloom(s: SparkSession, snap: IndexMaintenance.Snapshot, indexDir: String,
+      batchH: DataFrame, batchN: Long, who: String): IndexMaintenance.Change = {
+    val meta = snap.read(s, "bloom").head()
+    val existing = bloomOf(meta)
     val n = meta.getAs[Long]("n_items")
     val fpp = meta.getAs[Double]("fpp")
     val priorTotal = if (meta.schema.fieldNames.contains("total_items"))
       meta.getAs[Long]("total_items") else n
-    val batchH = evalShingleHashes(s, evalDir)
-    val batchN = batchH.count()
-    val batch = batchH.stat.bloomFilter("h", n, fpp)
-    existing.mergeInPlace(batch)
-    // cumulative inserts vs the sized capacity: OR-merging beyond the
-    // geometry's n_items silently lifts the actual FP rate above the
-    // recorded fpp, so track it and warn — serve re-checks it too.
+    // empty-shingle batches are legal (all-short docs); stat.bloomFilter
+    // NPEs on an empty frame, and an empty merge is a no-op anyway
+    if (batchN > 0) existing.mergeInPlace(batchH.stat.bloomFilter("h", n, fpp))
     val total = priorTotal + batchN
     if (total > n)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"decontamBloomAppend: cumulative $total items exceed the sized capacity $n " +
-        s"at $indexDir — actual FP rate now exceeds fpp=$fpp; rebuild via " +
-        "decontamBloomWrite over the full eval union (see *IndexCompact)")
-    writeBloomRow(s, indexDir, existing, n, fpp, total)
+        s"$who: cumulative $total items exceed the sized capacity $n at $indexDir — " +
+        s"actual FP rate now exceeds fpp=$fpp (the exact-confirm tier absorbs the extra " +
+        "false positives; rebuild via decontamIndexCompact)")
+    IndexMaintenance.Change(replace = Seq("bloom" -> bloomRow(s, existing, n, fpp, total)),
+      props = bloomProps(n, total))
   }
 
   /** Fold a landed EVAL-document batch into the contamination index —
     * the streaming-ingest form of [[decontamBloomAppend]] +
-    * [[decontamShingleWrite]] in one move (a benchmark suite updates
+    * [[decontamShingleWrite]] in one commit (a benchmark suite updates
     * over time; its new eval docs must start guarding admission without
     * an index rebuild). The batch's shingle rows append to the exact
-    * tier (retraction-capable, `tag` gives the crash-safe deterministic
-    * file names), and its hashes OR-merge into the screen bloom at the
-    * index's recorded geometry. The cumulative-insert statistic is
-    * recomputed EXACTLY from the standing shingle table rather than
-    * accumulated blindly — a crash-window retry re-merges the same bits
-    * (harmless) and must not double-count the saturation estimate. */
+    * tier (retraction-capable), its hashes OR-merge into the screen
+    * bloom at the index's recorded geometry, and both commit with the
+    * batch mark, so a retry lands nothing. The batch pays only ITS OWN
+    * distinct-hash count: hashes already standing count again, an
+    * ADVISORY over-estimate reconciled exactly at the cadence
+    * compaction's rebuild (a per-batch exact recount of the standing
+    * table would be O(index) per trigger). */
   def decontamIndexAppendBatch(s: SparkSession, batch: DataFrame, indexDir: String,
-      tag: Option[String] = None): Unit = {
-    val rows = batch
-      .select(col("doc_id").as("eval_id"),
-        explode(graft.plans.VectorFunctions.word_shingle_hashes(
-          col("text"), contamShingleN)).as("h"))
-      .distinct()
-    tag match {
-      case Some(t) => IndexMaintenance.appendBatchAs(s, rows, s"$indexDir/eval_shingles", t)
-      case None => IndexMaintenance.appendPlain(s, rows, s"$indexDir/eval_shingles")
+      mark: Option[(String, Long)] = None): Unit =
+    IndexMaintenance.transact(s, indexDir, mark) { snap =>
+      val rows = batch
+        .select(col("doc_id").as("eval_id"),
+          explode(graft.plans.VectorFunctions.word_shingle_hashes(
+            col("text"), contamShingleN)).as("h"))
+        .distinct()
+      val batchH = rows.select(col("h")).distinct()
+      mergedBloom(s, snap, indexDir, batchH, batchH.count(), "decontamIndexAppendBatch")
+        .copy(append = Seq("eval_shingles" -> rows))
     }
-    val meta = s.read.parquet(s"$indexDir/bloom").head()
-    val existing = loadBloom(s, indexDir)
-    val n = meta.getAs[Long]("n_items")
-    val fpp = meta.getAs[Double]("fpp")
-    val priorTotal = meta.getAs[Long]("total_items")
-    val batchH = rows.select(col("h")).distinct()
-    // the batch pays only ITS OWN count — the saturation statistic
-    // accumulates per batch (a crash-window retry can inflate it, and
-    // hashes already standing count again: an ADVISORY over-estimate,
-    // reconciled exactly at the cadence compaction's rebuild — the same
-    // amortization the sibling loops use for checkUnique; a per-batch
-    // exact recount of the standing table would be the O(index)-per-
-    // trigger shape the marker design exists to avoid)
-    val batchCnt = batchH.count()
-    // empty-shingle batches are legal (all-short docs); stat.bloomFilter
-    // NPEs on an empty frame, and an empty merge is a no-op anyway
-    if (batchCnt > 0) {
-      val batchBloom = batchH.stat.bloomFilter("h", n, fpp)
-      existing.mergeInPlace(batchBloom)
-    }
-    val total = priorTotal + batchCnt
-    if (total > n)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"decontamIndexAppendBatch: cumulative $total items exceed the sized capacity $n " +
-        s"at $indexDir — actual FP rate now exceeds fpp=$fpp (the exact-confirm tier " +
-        "absorbs the extra false positives; rebuild via decontamIndexCompact)")
-    writeBloomRow(s, indexDir, existing, n, fpp, total)
-  }
 
   /** Two-tier contamination check served from a PERSISTED index over
     * `dir`'s train slice: bloom screen (map-only), exact confirm on the
@@ -531,9 +504,8 @@ object Curation {
     * filter would quietly flag everything as contaminated. */
   def decontamBloomCompact(s: SparkSession, indexDir: String,
       maxFpp: Double = 100 * contamBloomFpp): Double = {
-    val meta = s.read.parquet(s"$indexDir/bloom").head()
-    val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(meta.getAs[Array[Byte]]("bloom")))
+    val meta = IndexMaintenance.read(s, indexDir, "bloom").head()
+    val bloom = bloomOf(meta)
     val observed = bloom.expectedFpp()
     val sized = meta.getAs[Long]("n_items")
     val total = if (meta.schema.fieldNames.contains("total_items"))
@@ -554,9 +526,8 @@ object Curation {
     * has no eval docs to exclude, and skipping `doc_id % 50 == 0` there
     * would silently leave 1-in-50 train docs without a verdict. */
   def decontamBloomServe(s: SparkSession, indexDir: String, corpusDirs: Seq[String]): DataFrame = {
-    val meta = s.read.parquet(s"$indexDir/bloom").head()
-    val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(meta.getAs[Array[Byte]]("bloom")))
+    val meta = IndexMaintenance.read(s, indexDir, "bloom").head()
+    val bloom = bloomOf(meta)
     val sized = meta.getAs[Long]("n_items")
     val total = if (meta.schema.fieldNames.contains("total_items"))
       meta.getAs[Long]("total_items") else sized

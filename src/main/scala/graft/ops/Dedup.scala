@@ -550,75 +550,67 @@ object Dedup {
     * thresholds), so append is exact by construction and the index never
     * drifts from a rebuild. */
   def dedupIndexWrite(s: SparkSession, corpusDir: String, indexDir: String): Unit =
-    simSigOf(Tables(s, corpusDir, "documents"))
-      .write.mode("overwrite").parquet(s"$indexDir/simhash")
+    IndexMaintenance.replace(s, indexDir,
+      Seq("simhash" -> simSigOf(Tables(s, corpusDir, "documents"))))
 
   /** Fold a newly-ingested batch's signatures into the standing index
     * (call AFTER the batch passed [[dedupIncrementalIndexed]] and was
     * admitted to the corpus). */
   def dedupIndexAppend(s: SparkSession, batchDir: String, indexDir: String): Unit =
-    IndexMaintenance.appendPlain(s, simSigOf(Tables(s, batchDir, "documents")),
-      s"$indexDir/simhash")
+    IndexMaintenance.append(s, indexDir,
+      Seq("simhash" -> simSigOf(Tables(s, batchDir, "documents"))))
 
   /** Compact the signature table after a run of landing appends: few
     * files, doc_id-sorted, tombstoned docs physically dropped.
     * Signatures are content, not layout — the indexed check is
     * identical before/after. See [[IndexMaintenance]]. */
   def dedupIndexCompact(s: SparkSession, indexDir: String): (Int, Int) =
-    IndexMaintenance.compactTable(s, s"$indexDir/simhash", Seq("doc_id"),
-      tombstoneCol = Some("doc_id"))
+    IndexMaintenance.compact(s, indexDir, "simhash", Seq("doc_id"), Some("doc_id"))
 
   /** Retract documents from the signature index (takedown/opt-out):
     * tombstone now, serve-filtered immediately — a deleted doc stops
     * masking later near-dups at the NEXT micro-batch — physically
     * dropped at the next [[dedupIndexCompact]]. Idempotent. */
   def dedupIndexDelete(s: SparkSession, indexDir: String, docIds: Seq[Long]): Unit =
-    IndexMaintenance.deleteIds(s, s"$indexDir/simhash", docIds)
+    IndexMaintenance.delete(s, indexDir, Seq("simhash"), docIds)
 
   /** Retract documents from an INGEST index dir — the full takedown:
     * the signature row stops guarding dedup and the clean-store text
     * row (the corpus artifact itself) is tombstoned out of every read
     * through [[cleanStore]], both physically dropped by
-    * [[ingestIndexCompact]]. */
-  def ingestIndexDelete(s: SparkSession, indexDir: String, docIds: Seq[Long]): Unit = {
-    dedupIndexDelete(s, indexDir, docIds)
-    if (pathExists(s, s"$indexDir/clean"))
-      IndexMaintenance.deleteIds(s, s"$indexDir/clean", docIds)
-  }
+    * [[ingestIndexCompact]]. One commit covers both tables. */
+  def ingestIndexDelete(s: SparkSession, indexDir: String, docIds: Seq[Long]): Unit =
+    IndexMaintenance.delete(s, indexDir,
+      "simhash" +: Seq("clean").filter(IndexMaintenance.hasTable(s, indexDir, _)), docIds)
 
   /** The admitted clean-text corpus with pending deletes filtered out —
     * the read every training consumer should use instead of a raw
     * parquet read of `clean/`. */
   def cleanStore(s: SparkSession, indexDir: String): DataFrame =
-    IndexMaintenance.minusTombstones(s, s"$indexDir/clean",
-      s.read.parquet(s"$indexDir/clean"), "doc_id")
+    IndexMaintenance.scan(s, indexDir, "clean", "doc_id")
 
-  /** Compact an ingest VERDICT sink: few files, (batch, doc_id)-sorted —
-    * the sort is what keeps the per-batch retry probe ([[retrySafeAppends]]'
-    * `sunk` read) a row-group-pruned lookup instead of an O(stream-age)
-    * scan, and the file bound is the same small-file argument as the
-    * index stores. Wired into the same ingest cadence. */
+  /** Compact an ingest VERDICT sink (the single table `""` of its own
+    * log): few files, (batch, doc_id)-sorted — the same small-file
+    * argument as the index stores. Wired into the same ingest cadence. */
   def ingestSinkCompact(s: SparkSession, outDir: String): (Int, Int) =
-    if (IndexMaintenance.dataFiles(s, outDir).nonEmpty)
-      IndexMaintenance.compactTable(s, outDir, Seq("batch", "doc_id"))
+    if (IndexMaintenance.hasTable(s, outDir, ""))
+      IndexMaintenance.compact(s, outDir, "", Seq("batch", "doc_id"))
     else (0, 0)
 
-  /** Compact signature index AND clean store, dropping tombstones.
-    * No-data stores are skipped (a young stream may not have admitted
-    * anything yet when the compaction cadence first fires). Returns the
-    * SUMMED (files before, files after) across both stores, so callers
-    * and logs see the full maintenance work done. */
+  /** Compact signature index AND clean store in one commit, dropping
+    * tombstones. Stores without data are skipped (a young stream may
+    * not have admitted anything yet when the cadence first fires).
+    * Returns the SUMMED (files before, files after) across both. */
   def ingestIndexCompact(s: SparkSession, indexDir: String): (Int, Int) = {
-    val clean =
-      if (IndexMaintenance.dataFiles(s, s"$indexDir/clean").nonEmpty)
-        IndexMaintenance.compactTable(s, s"$indexDir/clean", Seq("doc_id"),
-          tombstoneCol = Some("doc_id"))
-      else (0, 0)
-    val sig =
-      if (IndexMaintenance.dataFiles(s, s"$indexDir/simhash").nonEmpty)
-        dedupIndexCompact(s, indexDir)
-      else (0, 0)
-    (clean._1 + sig._1, clean._2 + sig._2)
+    val stores = Seq("clean", "simhash")
+    var before = 0
+    val after = IndexMaintenance.transact(s, indexDir) { snap =>
+      val live = stores.filter(snap.filesOf(_).nonEmpty)
+      before = live.map(snap.filesOf(_).size).sum
+      IndexMaintenance.Change(replace = live.map(t =>
+        t -> IndexMaintenance.rewrite(s, snap, t, Seq("doc_id"), Some("doc_id"))))
+    }
+    (before, after.map(a => stores.map(a.filesOf(_).size).sum).getOrElse(0))
   }
 
   /** Landing-zone near-dup check against a PERSISTED signature index:
@@ -636,8 +628,7 @@ object Dedup {
     * index-side read goes through here so a retracted doc stops
     * matching immediately, before any compaction. */
   private def readSigIndex(s: SparkSession, indexDir: String): DataFrame =
-    IndexMaintenance.minusTombstones(s, s"$indexDir/simhash",
-      s.read.parquet(s"$indexDir/simhash"), "doc_id")
+    IndexMaintenance.scan(s, indexDir, "simhash", "doc_id")
 
   /** Per-micro-batch verdict + admission for the STREAMING ingest path
     * ([[graft.streaming.IngestDedup]]): flag each batch doc whose
@@ -694,7 +685,7 @@ object Dedup {
   }
 
   private[graft] def ingestBatch(s: SparkSession, batchDocs: DataFrame,
-      indexDir: String, outDir: String, batchId: Long): Unit = {
+      indexDir: String, outDir: String, batchId: Long, lineage: String = ""): Unit = {
     val docs = batchDocs.persist()
     try {
       val sig = simSigOf(docs).persist()
@@ -706,20 +697,12 @@ object Dedup {
             col("dup_of").isNotNull.as("is_dup"), col("dup_of"), col("min_hamming"))
           .persist()
         try {
-          IndexMaintenance.labeledJob(s, s"ingest-dedup b$batchId: verdicts") {
-            // one file per trigger: the verdict batch is landing-file
-            // bounded, and every later read of the sink (the retry
-            // probe, the replay read-back) pays a task per file —
-            // 32-partition appends made a 3-batch replay's sink 96
-            // files for <1 MB (guide §6; the ledger's coalesce(1)
-            // precedent). Compaction still bounds long-stream layout.
-            verdicts.coalesce(1).write.mode("append").parquet(outDir)
-          }
+          sinkVerdicts(s, outDir, verdicts, lineage, batchId, "ingest-dedup")
           IndexMaintenance.labeledJob(s, s"ingest-dedup b$batchId: sig append") {
-            IndexMaintenance.appendPlain(s,
+            IndexMaintenance.append(s, indexDir, Seq("simhash" ->
               sig.join(JoinHints.broadcastIfSmall(
-                verdicts.filter(!col("is_dup")).select(col("doc_id"))), "doc_id"),
-              s"$indexDir/simhash")
+                verdicts.filter(!col("is_dup")).select(col("doc_id"))), "doc_id")),
+              Some(lineage -> batchId))
           }
         } finally verdicts.unpersist()
       } finally sig.unpersist()
@@ -730,38 +713,18 @@ object Dedup {
     * [[TextAnalysis.qualityScore]] threshold `is_quality` uses. */
   val ingestQualityMin = 0.5
 
-  /** Hadoop-FS existence — `java.io.File` is ALWAYS false for
-    * `hdfs://`/`s3a://` paths, which would silently disable the retry
-    * anti-joins and takedown on exactly the filesystems production
-    * runs use. */
-  private def pathExists(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** The shared retry-safe append tail of the curated/manifest ingest
-    * bodies: detect an at-least-once RETRY from doubled verdict rows
-    * for this batch (`sunk` = the sink's rows for the batch — the sink
-    * is append-only, so a retry holds one row per attempt) and, only
-    * then, anti-join each store append against what the store already
-    * holds. First attempts keep the single-append hot path; the clean
-    * store is the corpus artifact itself, where a doubled row is NOT
-    * consumer-absorbable. */
-  private def retrySafeAppends(s: SparkSession, sunk: DataFrame,
-      appends: Seq[(DataFrame, String)]): Unit = {
-    val Array(total, unique) = sunk.agg(
-      count(lit(1)), count_distinct(col("doc_id"))).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    val isRetry = total != unique
-    appends.foreach { case (df, storeDir) =>
-      IndexMaintenance.appendPlain(s,
-        if (isRetry && pathExists(s, storeDir))
-          df.join(s.read.parquet(storeDir).select(col("doc_id")),
-            Seq("doc_id"), "left_anti")
-        else df,
-        storeDir)
+  /** Land one trigger's verdicts in the sink's own log, marked with the
+    * batch: a retry finds the mark and lands nothing. One file per
+    * trigger — the verdict batch is landing-file bounded, and every
+    * later read of the sink pays a task per file (32-partition appends
+    * made a 3-batch replay's sink 96 files for <1 MB); compaction
+    * bounds long-stream layout. */
+  private def sinkVerdicts(s: SparkSession, outDir: String, verdicts: DataFrame,
+      lineage: String, batchId: Long, loop: String): Unit =
+    IndexMaintenance.labeledJob(s, s"$loop b$batchId: verdicts") {
+      IndexMaintenance.append(s, outDir, Seq("" -> verdicts.coalesce(1)),
+        Some(lineage -> batchId))
     }
-  }
 
   /** Full curation-at-ingest: PII-scrub the batch, reject docs below
     * the quality floor (or with no tokens after scrubbing), near-dup
@@ -774,7 +737,7 @@ object Dedup {
     * a deterministic per-doc function or the distributive masking rule,
     * so the replay remains DuckDB-oracle-able end to end. */
   private[graft] def ingestCurateBatch(s: SparkSession, batchDocs: DataFrame,
-      indexDir: String, outDir: String, batchId: Long): Unit = {
+      indexDir: String, outDir: String, batchId: Long, lineage: String = ""): Unit = {
     val toks = TextFns.tokens(col("text"))
     val scored = batchDocs
       .select(col("doc_id"), TextAnalysis.scrubCol(col("text")).as("text"))
@@ -796,36 +759,18 @@ object Dedup {
             col("dup_of"), col("score"))
           .persist()
         try {
-          IndexMaintenance.labeledJob(s, s"ingest-curate b$batchId: verdicts") {
-            // one file per trigger — see ingestBatch
-            verdicts.coalesce(1).write.mode("append").parquet(outDir)
+          sinkVerdicts(s, outDir, verdicts, lineage, batchId, "ingest-curate")
+          // the verdicts read a pinned index snapshot, so re-evaluating
+          // them after the append below still sees the index without
+          // this batch; signatures and clean text commit with the mark
+          val admitted = JoinHints.broadcastIfSmall(
+            verdicts.filter(col("verdict") === "admitted").select(col("doc_id")))
+          IndexMaintenance.labeledJob(s, s"ingest-curate b$batchId: appends") {
+            IndexMaintenance.append(s, indexDir, Seq(
+              "simhash" -> sig.join(admitted, "doc_id"),
+              "clean" -> qualified.select(col("doc_id"), col("text")).join(admitted, "doc_id")),
+              Some(lineage -> batchId))
           }
-          // derive the admitted set from the SINK, not the live verdict
-          // lineage: verdicts' plan reads the signature index, and the
-          // simhash append below recaches-by-path — a lineage-derived
-          // `admitted` would re-evaluate against the just-appended index,
-          // every admitted doc would match its own signature, and the
-          // clean append would quietly write nothing (found by the spec).
-          // The sink is append-only, so after an at-least-once RETRY it
-          // holds one verdict row per attempt — and the clean store is
-          // the corpus artifact itself, where a doubled row is NOT
-          // consumer-absorbable (unlike the verdict sink's
-          // min/distinct-safe rows). Detect the retry from the sink (any
-          // doc with >1 verdict row for this batch) and only then pay
-          // the anti-join scans against what each store already holds;
-          // a first attempt keeps the current single-append hot path.
-          val sunk = s.read.parquet(outDir)
-            .filter(col("batch") === batchId && col("verdict") === "admitted")
-            .select(col("doc_id")).persist()
-          try {
-            val admitted = JoinHints.broadcastIfSmall(sunk.distinct())
-            IndexMaintenance.labeledJob(s, s"ingest-curate b$batchId: appends") {
-              retrySafeAppends(s, sunk, Seq(
-                sig.join(admitted, "doc_id") -> s"$indexDir/simhash",
-                qualified.select(col("doc_id"), col("text"))
-                  .join(admitted, "doc_id") -> s"$indexDir/clean"))
-            }
-          } finally sunk.unpersist()
         } finally verdicts.unpersist()
       } finally sig.unpersist()
     } finally scored.unpersist()
@@ -859,7 +804,7 @@ object Dedup {
     * map-only bloom scan, one flagged-slice join against the eval-sized
     * shingle table, zero corpus-text re-reads. */
   private[graft] def ingestManifestBatch(s: SparkSession, batchDocs: DataFrame,
-      indexDir: String, outDir: String, batchId: Long): Unit = {
+      indexDir: String, outDir: String, batchId: Long, lineage: String = ""): Unit = {
     val toks = TextFns.tokens(col("text"))
     val scrubbed = batchDocs
       .select(col("doc_id"), TextAnalysis.scrubCol(col("text")).as("text"))
@@ -924,35 +869,24 @@ object Dedup {
             (col("reason") === "train").cast("long").as("include"))
           .persist()
         try {
-          IndexMaintenance.labeledJob(s, s"ingest-manifest b$batchId: verdicts") {
-            // one file per trigger — see ingestBatch
-            verdicts.coalesce(1).write.mode("append").parquet(outDir)
+          sinkVerdicts(s, outDir, verdicts, lineage, batchId, "ingest-manifest")
+          // the index admits every NON-DUP doc (signature null for
+          // token-less ones — their banded rows never match, but the
+          // md5 side still guards their exact twins); admission reads
+          // the persisted verdicts, as in ingestCurateBatch
+          val nonDup = JoinHints.broadcastIfSmall(verdicts
+            .filter(!col("reason").isin("dup_exact", "near_dup")).select(col("doc_id")))
+          val train = JoinHints.broadcastIfSmall(verdicts
+            .filter(col("reason") === "train").select(col("doc_id")))
+          IndexMaintenance.labeledJob(s, s"ingest-manifest b$batchId: appends") {
+            IndexMaintenance.append(s, indexDir, Seq(
+              "simhash" -> scrubbed.select(col("doc_id"), col("tmd5"))
+                .join(nonDup, "doc_id")
+                .join(sig, Seq("doc_id"), "left")
+                .select(col("doc_id"), col("simhash"), col("tmd5")),
+              "clean" -> scrubbed.select(col("doc_id"), col("text")).join(train, "doc_id")),
+              Some(lineage -> batchId))
           }
-          // sink-derived admission + retry detection: see ingestCurateBatch
-          val sunk = s.read.parquet(outDir)
-            .filter(col("batch") === batchId)
-            .select(col("doc_id"), col("reason")).persist()
-          try {
-            // the index admits every NON-DUP doc (signature null for
-            // token-less ones — their banded rows never match, but the
-            // md5 side still guards their exact twins)
-            val nonDup = JoinHints.broadcastIfSmall(sunk
-              .filter(!col("reason").isin("dup_exact", "near_dup"))
-              .select(col("doc_id")).distinct())
-            val train = JoinHints.broadcastIfSmall(sunk
-              .filter(col("reason") === "train")
-              .select(col("doc_id")).distinct())
-            IndexMaintenance.labeledJob(s, s"ingest-manifest b$batchId: appends") {
-              retrySafeAppends(s, sunk, Seq(
-                scrubbed.select(col("doc_id"), col("tmd5"))
-                  .join(nonDup, "doc_id")
-                  .join(sig, Seq("doc_id"), "left")
-                  .select(col("doc_id"), col("simhash"), col("tmd5"))
-                  -> s"$indexDir/simhash",
-                scrubbed.select(col("doc_id"), col("text"))
-                  .join(train, "doc_id") -> s"$indexDir/clean"))
-            }
-          } finally sunk.unpersist()
         } finally verdicts.unpersist()
       } finally sig.unpersist()
     } finally scrubbed.unpersist()
@@ -964,12 +898,12 @@ object Dedup {
     * screen and the exact shingle table it confirms against. */
   private[graft] def ingestManifestIndexInit(s: SparkSession, indexDir: String,
       evalDir: String): Unit = {
-    s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+    IndexMaintenance.replace(s, indexDir, Seq("simhash" ->
+      s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("simhash", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("tmd5", org.apache.spark.sql.types.StringType))))
-      .write.mode("overwrite").parquet(s"$indexDir/simhash")
+          org.apache.spark.sql.types.StructField("tmd5", org.apache.spark.sql.types.StringType))))))
     Curation.decontamBloomWrite(s, evalDir, indexDir)
     Curation.decontamShingleWrite(s, evalDir, indexDir)
   }
@@ -977,11 +911,11 @@ object Dedup {
   /** Seed an EMPTY signature index (stream-from-scratch ingest; the
     * batch form seeds from a standing corpus via [[dedupIndexWrite]]). */
   private[graft] def ingestIndexInit(s: SparkSession, indexDir: String): Unit =
-    simSigOf(s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+    IndexMaintenance.replace(s, indexDir, Seq("simhash" ->
+      simSigOf(s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))))
-      .write.mode("overwrite").parquet(s"$indexDir/simhash")
+          org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))))))
 
   /** Registered-query form: split the corpus into the modulo landing
     * batch and standing corpus ONCE per (JVM, corpus) (a standing temp

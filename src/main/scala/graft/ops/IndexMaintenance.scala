@@ -1,30 +1,73 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata,
+  HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.{col, element_at, typedLit}
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Compaction for the persisted-index landing zones.
+/** The transaction log of the persisted indexes.
   *
-  * Every `*IndexAppend` writes its batch as new parquet files next to
-  * the standing ones — correct (appends never rewrite the standing
-  * corpus) but monotonic: a year of daily landing batches leaves the
-  * bucket/list/posting tables as thousands of small files, and at
-  * serve time every one costs a listing entry, a footer read, and a
-  * task. Compaction is the standard maintenance move: rewrite the
-  * table as few well-sized files, SORTED on its serve key, then swap.
+  * Every directory this object writes — a text, dedup signature,
+  * LSH/IVF/IVF-PQ, decontamination or ingest index, or an ingest
+  * verdict sink — carries ONE log at `<dir>/_log/<version>.json`. The
+  * directory's tables are its subdirectories (`postings`, `lists`, …;
+  * a sink is the single table `""`, the directory itself); data files
+  * are plain parquet files directly inside their table directory. The
+  * log, not the directory listing, says which files a table holds: a
+  * file nobody committed (a crashed writer's leftover) is invisible to
+  * every read, and the next rewrite of its directory deletes it once it
+  * is older than [[orphanRetentionMs]] — a younger one may be a live
+  * writer's staged file.
   *
-  * The sort is not cosmetic — it is what restores serve-time pruning
-  * as the table grows: row-group min/max stats on the sort key let a
-  * pushed predicate (`term IN (...)` for postings, the probed c_id set
-  * for IVF lists) skip row groups entirely, which an
-  * append-interleaved layout defeats.
+  * ACTIONS. A version file is JSON lines, one action per line:
+  *  - `add` — a data file: path relative to the directory, table, size,
+  *    the SEQUENCE its rows are valid from (the committing version for
+  *    an append, 0 for a build/compaction/retrain output), and the
+  *    table schema;
+  *  - `remove` — a data file leaves its table;
+  *  - `tombstone` — an id of a table is deleted as of this version: it
+  *    masks the id's rows in files whose sequence is BELOW the version,
+  *    so a later append of the same id serves;
+  *  - `consume` — a rewrite dropped a tombstone's rows physically;
+  *  - `batch` — the high-water mark of a streaming lineage's batch ids;
+  *  - `prop` — a small `table.key` fact (bloom counters); a rewrite of
+  *    the table drops the facts it does not restate.
   *
-  * The swap is write-to-temp, rename-aside, promote (see
-  * [[compactTable]] for the exact sequence, its crash recovery, and
-  * how deletes that race the rewrite are preserved): readers see the
-  * old or the new file set, never a mix. Serve results are IDENTICAL
-  * before/after — compaction changes layout, not content — pinned in
-  * `AnnIndexSpec`.
+  * COMMIT RULE. A write stages its parquet files under fresh names,
+  * refreshes their mtimes (failing loudly if one is gone), then creates
+  * version `v + 1` with `create(overwrite = false)`, where `v` is the
+  * snapshot it read; the version file appearing is the commit. Writers
+  * of one directory serialize on an in-JVM lock, so within a process
+  * the race is never lost. Files a commit removes are deleted before
+  * the call returns, so a plain parquet read of a quiescent table
+  * equals its snapshot.
+  *
+  * CONFLICT RULE. A commit that finds its version taken (a writer in
+  * another process) re-reads the snapshot and tries the next version.
+  * So does a commit whose create succeeded on a version a checkpoint
+  * had already retired: a later version or checkpoint in `_log` exposes
+  * it, and the stray file is deleted before anything else happens. A
+  * rewrite of a table whose file set changed since the snapshot it read
+  * (a concurrent build, rewrite or append won) fails loudly, its staged
+  * files are deleted and the table is untouched. A batch whose mark the
+  * new snapshot already holds is dropped, not landed twice.
+  *
+  * CHECKPOINT. Every [[checkpointInterval]] versions the full state is
+  * written as `<version>.checkpoint.json`; a reader replays from the
+  * newest checkpoint, and versions older than the previous checkpoint
+  * are deleted, so replay and the `_log` listing stay bounded.
+  *
+  * Rewrites sort on the serve key and size files at [[targetFileBytes]]:
+  * row-group min/max on the sort key is what lets a pushed predicate
+  * (`term IN (...)`, the probed `c_id` set) skip row groups as the
+  * table grows. Serve results are identical before and after a
+  * compaction — it changes layout, not content (pinned in
+  * `AnnIndexSpec`).
   */
 object IndexMaintenance {
 
@@ -32,8 +75,13 @@ object IndexMaintenance {
     * per file — the conventional operating point. */
   val targetFileBytes: Long = 128L * 1024 * 1024
 
-  private def fs(s: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
+  /** A checkpoint is written at every positive version divisible by this. */
+  val checkpointInterval: Long = 10L
+
+  /** An uncommitted data file younger than this may be staged by a live
+    * writer in another process; only older ones are deleted as orphans.
+    * The Delta Lake VACUUM retention idea, at the lease's stale window. */
+  val orphanRetentionMs: Long = 15L * 60 * 1000
 
   /** Run `f` with a thread-local Spark job description (guide §1.5 —
     * label your jobs): every action inside shows up in listeners/UI
@@ -46,1223 +94,483 @@ object IndexMaintenance {
     try f finally sc.setJobDescription(old)
   }
 
-  /** Parquet data files currently making up `path` (ignores _SUCCESS
-    * and hidden files). */
-  private[graft] def dataFiles(s: SparkSession, path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = fs(s, p)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
+  private def fsOf(s: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(s.sparkContext.hadoopConfiguration)
+
+  private def qualify(s: SparkSession, dir: String): Path = {
+    val p = new Path(dir)
+    fsOf(s, p).makeQualified(p)
   }
 
-  /** The table's APPENDED-TAIL data files — everything landed since the
-    * last rebuild/compact, identified from the names alone: both append
-    * paths stamp their files (`…\.sN\.parquet` — [[appendPlain]]'s
-    * `p-i.sN.parquet`, [[appendBatchAs]]'s `b$tag-i.cM.sN.parquet`)
-    * while build/compact/publish rewrites emit unstamped `part-*` files
-    * (= sequence 0, the same convention [[minusTombstones]] reads). One
-    * FS listing, no footer reads — the cheap per-serve segment probe. */
-  private[graft] def appendedTailFiles(s: SparkSession, path: String): Seq[String] =
-    dataFiles(s, path).map(_.getPath)
-      .filter(_.getName.matches(""".*\.s\d+\.parquet$"""))
-      .map(_.toString)
+  private def tableDir(root: Path, table: String): Path =
+    if (table.isEmpty) root else new Path(root, table)
 
-  /** Per-table-path maintenance locks: delete, compact, and the
-    * idempotent batch append serialize in-JVM, so a deleteIds landing
-    * mid-rewrite cannot be silently discarded by the directory swap (a
-    * lost takedown) and an append cannot land between the rewrite's
-    * file listing and the swap (a lost batch). Cross-PROCESS writers
-    * are excluded by the filesystem LEASE below ([[withLeaseScope]]):
-    * every maintenance op additionally acquires the lease of the
-    * table's enclosing INDEX directory, so a second process's
-    * maintenance op FAILS LOUDLY instead of silently corrupting the
-    * swap — with the post-promote tombstone re-check below as a second
-    * net for deletes (conservative but never lossy). */
-  // -------------------------------------- copy-rename commit markers
-  //
-  // Shared by the artifact families whose commit point must survive
-  // filesystems where rename is copy+delete (S3A): the token ledger's
-  // rollup dirs and the persisted BPE model. The marker file is
-  // created AFTER the stage→target rename RETURNS, so a crash mid-copy
-  // leaves a marker-less dir that readers treat as garbage/incomplete
-  // instead of adopting partial content. The marker cannot ride inside
-  // the staging dir — a copy-rename copies files in unspecified order,
-  // so it could land before the data it vouches for. Underscore-
-  // prefixed marker names keep parquet scans of the dir blind to it.
+  // ---------------------------------------------------------- snapshot
 
-  private[graft] def commitMarkerPresent(f: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, marker: String): Boolean =
-    f.exists(new org.apache.hadoop.fs.Path(dir, marker))
-
-  /** Create the commit marker, optionally carrying a small payload —
-    * content written at creation is part of the same commit point (the
-    * marker file appears atomically with its bytes on HDFS and object
-    * stores), which lets a committed artifact pin bounded summary
-    * stats (the token ledger's per-source totals) without a second
-    * read of the data it vouches for. Markers are immutable once
-    * created; an empty payload is a legacy/stats-less marker and
-    * readers must fall back to reading the data. */
-  private[graft] def commitMarkerCreate(f: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, marker: String, content: String = ""): Unit = {
-    val out = f.create(new org.apache.hadoop.fs.Path(dir, marker), true)
-    try if (content.nonEmpty) out.write(content.getBytes("UTF-8"))
-    finally out.close()
+  /** One committed data file. `path` is relative to the directory. */
+  final case class DataFile(path: String, table: String, size: Long, seq: Long, schema: String) {
+    def name: String = path.substring(path.lastIndexOf('/') + 1)
   }
 
-  /** The commit marker's payload, if the marker exists and carries one
-    * — None for an absent marker OR a legacy empty one (callers treat
-    * both as "read the data instead"). Bounded read: payloads are
-    * summary stats, never data. */
-  private[graft] def commitMarkerContent(f: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, marker: String): Option[String] =
-    try {
-      val in = f.open(new org.apache.hadoop.fs.Path(dir, marker))
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](8192)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        Some(buf.toString("UTF-8")).filter(_.nonEmpty)
-      } finally in.close()
-    } catch { case _: java.io.IOException => None }
+  final case class Tombstone(table: String, id: Long, seq: Long)
 
-  /** True when the maintenance lease FILE covering `indexDir` exists
-    * and is younger than [[leaseStaleMs]] — a maintenance writer (this
-    * process or a foreign one) is live on the scope, or crashed less
-    * than a stale-window ago. Listing-only health/debt probes
-    * ([[graft.streaming.TextIngest.ledgerListingStats]]) use this to
-    * classify a writer's dot-staging workspace as in-flight vs
-    * crashed: every compact holds the lease for its whole duration
-    * (heartbeated past the window by [[touchLease]]), and lease FILES
-    * carry reliable mtimes everywhere — where DIRECTORY mtimes on
-    * object stores are synthetic (commonly 0), so an age test on the
-    * staging dir itself reads a FRESH in-flight compact as stale
-    * garbage and pages on healthy maintenance. */
-  private[graft] def liveLeasePresent(s: SparkSession, indexDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val f = fs(s, p)
-    val lp = leasePath(f.makeQualified(p))
-    try System.currentTimeMillis() -
-      f.getFileStatus(lp).getModificationTime < leaseStaleMs
-    catch { case _: java.io.FileNotFoundException => false }
-  }
+  /** The state of a directory as of `version`. `stamp` identifies the
+    * version file itself (length and mtime), so a directory deleted and
+    * rebuilt at the same path is never served from a stale cache. */
+  final case class Snapshot(root: Path, version: Long, stamp: String,
+      files: Map[String, DataFile], tombstones: Set[Tombstone],
+      batches: Map[String, Long], props: Map[String, String]) {
 
-  private val tableLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def lockFor(s: SparkSession, path: String): Object = {
-    val key = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      fs(s, p).makeQualified(p).toString
+    def filesOf(table: String): Seq[DataFile] =
+      files.values.filter(_.table == table).toSeq.sortBy(_.path)
+
+    def hasTable(table: String): Boolean = files.values.exists(_.table == table)
+
+    def tombstonesOf(table: String): Seq[Tombstone] = tombstones.toSeq.filter(_.table == table)
+
+    /** Distinct ids with a pending delete. */
+    def pendingTombstones(table: String): Int = tombstonesOf(table).map(_.id).distinct.size
+
+    /** Distinct append commits since the table's last rewrite. */
+    def appendedBatches(table: String): Int =
+      filesOf(table).map(_.seq).filter(_ > 0).distinct.size
+
+    def batchSeen(lineage: String, batchId: Long): Boolean =
+      batches.get(lineage).exists(_ >= batchId)
+
+    /** The generation key of derived results: moves with every commit. */
+    def generation: String = s"$version:$stamp"
+
+    /** The table's rows as of this snapshot, no tombstone mask — for
+      * tables without an id column (metadata rows, stats, sinks). */
+    def read(s: SparkSession, table: String): DataFrame = frame(s, table, filesOf(table))
+
+    /** The table's rows minus those a pending tombstone masks. */
+    def scan(s: SparkSession, table: String, idCol: String): DataFrame =
+      masked(s, table, filesOf(table), idCol)
+
+    /** [[scan]] over the appended TAIL only (files landed since the
+      * last rewrite); None when there is none. */
+    def tail(s: SparkSession, table: String, idCol: String): Option[DataFrame] = {
+      val t = filesOf(table).filter(_.seq > 0)
+      if (t.isEmpty) None else Some(masked(s, table, t, idCol))
     }
-    tableLocks.computeIfAbsent(key, _ => new Object)
-  }
 
-  // ------------------------------------------------ cross-process lease
-  //
-  // The in-JVM monitors above serialize threads of ONE process; a second
-  // PROCESS (a parallel maintenance job, an operator re-running a
-  // backfill) used to be documented-unsupported and would silently
-  // corrupt a racing swap. The lease makes that loud: each maintenance
-  // op create-if-absent's a lease file stamped with this process's id
-  // (create(overwrite=false) is atomic on HDFS and object stores with
-  // preconditions; best-effort on raw local FS, where the in-JVM
-  // monitor already covers same-process threads). A LIVE foreign lease
-  // (younger than [[leaseStaleMs]]) aborts the op with
-  // IllegalStateException; a stale one — a crashed holder — is broken
-  // and re-taken. Reentrant per thread, so a compaction inside a
-  // retrain's table lock does not self-deadlock.
-  //
-  // SCOPE AND PLACEMENT (round 10): the lease is scoped to the table's
-  // PARENT directory — the index dir — and its file lives OUTSIDE the
-  // swapped directories, as a SIBLING of the index dir
-  // (`parent(indexDir)/.{indexDir}.lease`). Two properties the old
-  // per-table sibling placement lacked:
-  //  - a retrain's [[publishDir]] renames the whole index dir aside; a
-  //    lease INSIDE it rode into `.retrain.old` and was deleted with
-  //    it, leaving the post-promote tail (late-delete re-apply)
-  //    unprotected. The sibling placement survives every swap state.
-  //  - the old code SKIPPED the lease when the table's parent dir was
-  //    absent — which is exactly the mid-publish crash state, so lease
-  //    protection lapsed precisely in the windows it existed for.
-  //    The sibling placement never needs the skip: creating the lease
-  //    file cannot resurrect a swap discriminator (it creates only its
-  //    own parent, never the index dir).
-  // Scoping to the index dir also means ALL tables of one index share
-  // one lease — a multi-table batch or compact takes it once
-  // ([[withIndexMaintenance]]), and inner per-table ops reenter.
+    /** Build the scan straight from the logged file statuses and
+      * schema: no listing, no schema inference, no Spark job. */
+    private def frame(s: SparkSession, table: String, fs: Seq[DataFile]): DataFrame = {
+      val schema = files.values.find(_.table == table).map(_.schema).getOrElse(
+        throw new IllegalArgumentException(s"no table '$table' in the index log at $root"))
+      val statuses = fs.map(d =>
+        new FileStatus(d.size, false, 1, targetFileBytes, 0L, new Path(root, d.path)))
+      val location = new SnapshotFiles(tableDir(root, table), statuses, s"$root@v$version")
+      s.baseRelationToDataFrame(HadoopFsRelation(location, new StructType(),
+        DataType.fromJson(schema).asInstanceOf[StructType], None,
+        new ParquetFileFormat, Map.empty)(s))
+    }
 
-  /** Identity of this process for lease ownership. */
-  private[graft] val processId: String = java.util.UUID.randomUUID().toString
-
-  /** A foreign lease younger than this is LIVE (its op fails loudly);
-    * older is a crashed holder's leftover and is broken. Long ops keep
-    * ownership past this by heartbeating ([[touchLease]] after each
-    * expensive phase) and every promote re-verifies ownership
-    * immediately before its renames ([[verifyHeldLease]]) — so a
-    * stolen lease aborts the op LOUDLY instead of racing the thief's
-    * swap. */
-  val leaseStaleMs: Long = 15L * 60 * 1000
-
-  /** Scopes this PROCESS currently holds, with a hold count — the lease
-    * is reentrant per PROCESS, not per thread: its job is cross-process
-    * exclusion only (threads of this process are serialized by the
-    * in-JVM monitors), and per-thread tracking let a second thread of
-    * the same process mistake the first thread's LIVE lease for a
-    * crashed leftover, break it mid-operation, and hand the scope to a
-    * genuinely foreign process. All acquire/release file ops run under
-    * [[leaseGate]], so two same-process threads can never race the
-    * create/break sequence either. */
-  private val heldLeases = scala.collection.mutable.Map[String, Int]()
-  private val leaseGate = new Object
-
-  /** The lease scope of a table path: its parent (the index dir). A
-    * parentless path scopes to itself (degenerate — test tables at a
-    * filesystem root). */
-  private def leaseScopeOf(path: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
-    Option(path.getParent).getOrElse(path)
-
-  /** The lease FILE of a scope: a sibling of the scope directory, so it
-    * survives every rename-aside/promote of the scope or its tables. */
-  private[graft] def leasePath(scope: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path = {
-    val parent = Option(scope.getParent).getOrElse(scope)
-    new org.apache.hadoop.fs.Path(parent, s".${scope.getName}.lease")
-  }
-
-  private def readLeaseOwner(f: org.apache.hadoop.fs.FileSystem,
-      lp: org.apache.hadoop.fs.Path): Option[String] =
-    try {
-      val in = f.open(lp)
-      try { // a lease body is one 36-byte uuid
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        Some(new String(buf, 0, math.max(0, n), "UTF-8"))
-      } finally in.close()
-    } catch { case _: java.io.IOException => None }
-
-  /** Run `body` holding the cross-process lease on the table at `path`
-    * (scoped to its parent index dir; reentrant per thread — callers
-    * already hold the in-JVM monitor). */
-  private def withLease[T](s: SparkSession, path: String)(body: => T): T =
-    withLeaseScope(s, leaseScopeOf(new org.apache.hadoop.fs.Path(path)))(body)
-
-  /** Run `body` holding the cross-process lease on `scope` directly —
-    * the whole-index form ([[withIndexMaintenance]]): one acquisition
-    * covers every table op under the scope. */
-  private def withLeaseScope[T](s: SparkSession, scope: org.apache.hadoop.fs.Path)(body: => T): T = {
-    val f = fs(s, scope)
-    val key = f.makeQualified(scope).toString
-    val lp = leasePath(scope)
-    leaseGate.synchronized {
-      val held = heldLeases.getOrElse(key, 0)
-      if (held > 0) heldLeases(key) = held + 1
+    /** A row survives iff its file's sequence is at or above every
+      * pending delete of its id. Identity when nothing is pending. */
+    private def masked(s: SparkSession, table: String, fs: Seq[DataFile],
+        idCol: String): DataFrame = {
+      val base = frame(s, table, fs)
+      val tombs = tombstonesOf(table)
+      if (tombs.isEmpty) base
       else {
-        def tryAcquire(): Boolean =
-          try {
-            val out = f.create(lp, false)
-            out.write(processId.getBytes("UTF-8")); out.close(); true
-          } catch { case _: java.io.IOException => false }
-        if (!tryAcquire()) {
-          val st = try Some(f.getFileStatus(lp))
-            catch { case _: java.io.FileNotFoundException => None }
-          val owner = readLeaseOwner(f, lp).getOrElse("")
-          val live = st.exists(x =>
-            System.currentTimeMillis() - x.getModificationTime < leaseStaleMs)
-          if (live && owner != processId)
-            throw new IllegalStateException(
-              s"maintenance lease on $scope is held by process $owner — a " +
-              "concurrent maintenance writer; refusing to race the swap " +
-              s"(lease $lp, stale after ${leaseStaleMs / 1000} s)")
-          // a leftover owned by OUR id with zero holds is a leaked file
-          // (a crashed release), never a live sibling thread — live
-          // same-process holds reenter above and never reach here
-          f.delete(lp, false)
-          if (!tryAcquire()) throw new IllegalStateException(
-            s"maintenance lease on $scope: lost the acquire race after breaking " +
-            s"a stale lease ($lp)")
-        }
-        heldLeases(key) = 1
-      }
-    }
-    try body
-    finally leaseGate.synchronized {
-      val held = heldLeases.getOrElse(key, 1)
-      if (held > 1) heldLeases(key) = held - 1
-      else {
-        heldLeases.remove(key)
-        // release ONLY our own lease: a thief that judged us stale and
-        // re-took it owns the file now — deleting it would re-open the
-        // very race the steal detection exists to close
-        if (readLeaseOwner(f, lp).forall(_ == processId)) f.delete(lp, false)
-      }
-    }
-  }
-
-  /** Heartbeat: refresh the held lease's mtime so a legitimately-long
-    * op (a 100 TB rewrite can exceed [[leaseStaleMs]]) is not judged a
-    * crashed holder by a second process. Called between expensive
-    * phases; cheap (one setTimes). No-op if the lease was already
-    * stolen — the pre-promote [[verifyHeldLease]] is the loud stop. */
-  private[graft] def touchLease(s: SparkSession, path: String): Unit = {
-    val scope = leaseScopeOf(new org.apache.hadoop.fs.Path(path))
-    val f = fs(s, scope)
-    val lp = leasePath(scope)
-    if (readLeaseOwner(f, lp).contains(processId))
-      try f.setTimes(lp, System.currentTimeMillis(), -1)
-      catch { case _: java.io.IOException => () }
-  }
-
-  /** Assert this process still owns the lease covering `path` — called
-    * immediately before every promote rename. If a second process
-    * judged our lease stale (we ran past [[leaseStaleMs]] without a
-    * heartbeat) and broke it, the swap MUST NOT proceed: the thief may
-    * be mid-rewrite of the same table, and two interleaved promotes
-    * corrupt the directory state the intent machinery cannot heal.
-    * Aborting here loses only our rewrite work; the table stands. */
-  private[graft] def verifyHeldLease(s: SparkSession, path: String): Unit = {
-    val scope = leaseScopeOf(new org.apache.hadoop.fs.Path(path))
-    val f = fs(s, scope)
-    val owner = readLeaseOwner(f, leasePath(scope))
-    if (!owner.contains(processId))
-      throw new IllegalStateException(
-        s"maintenance lease on $scope was ${owner.fold("broken (missing)")(o =>
-          s"stolen by process $o")} mid-operation — this op outlived " +
-        s"leaseStaleMs (${leaseStaleMs / 1000} s) and a second maintenance " +
-        "writer re-took the lease; aborting before the promote to avoid " +
-        "racing its swap (the standing table is untouched)")
-  }
-
-  /** Serialize a multi-op maintenance SEQUENCE — one streaming
-    * trigger's appends + fold marker, or a multi-table compact —
-    * against every other maintenance writer of the index: the in-JVM
-    * index monitor plus ONE cross-process lease acquisition for the
-    * whole scope. Inner per-table ops reenter both (their lease scope
-    * is this directory), so the per-trigger cost drops from one lease
-    * create/probe/delete PER TABLE OP to one per trigger — and a
-    * multi-table batch (text: doclen then postings) is atomic against
-    * a concurrent compact, which otherwise could absorb its first
-    * table's files mid-batch. */
-  def withIndexMaintenance[T](s: SparkSession, indexDir: String)(body: => T): T =
-    lockFor(s, indexDir).synchronized {
-      val p = new org.apache.hadoop.fs.Path(indexDir)
-      withLeaseScope(s, fs(s, p).makeQualified(p))(body)
-    }
-
-  // ------------------------------------------- per-table write sequence
-  //
-  // Every append through this API stamps its landed files with a
-  // monotonic per-table SEQUENCE NUMBER in the file NAME
-  // (`….s$seq.parquet`), derived under the table lock as
-  // 1 + max(stamp of any standing data file, any pending tombstone's
-  // del_seq) — no counter file, no clock: the names ARE the state, so
-  // the sequence is crash-safe by construction and carries zero
-  // dependence on filesystem timestamp granularity (files written by
-  // the initial build or a compaction rewrite carry no stamp and rank
-  // as sequence 0, the oldest). Tombstones sequence against this
-  // ([[deleteIds]]/[[minusTombstones]]), which is what makes
-  // delete-then-re-append serve immediately on ANY filesystem —
-  // including object stores with second-granularity (or no) mtimes,
-  // where the previous mtime-watermark scheme could silently mask and
-  // then physically drop a legitimate re-append.
-  //
-  // The listing-derived value is CARRIED IN-MEMORY between calls
-  // ([[seqCache]]): a streaming loop pays the directory listing (and
-  // the 1-row pending-tombstone agg) once at its first trigger, then
-  // increments — the listing is only the cold-start/restart fallback.
-  // Safe under the single-maintenance-writer model the lease enforces:
-  // every in-process writer funnels through this API (monotonic by the
-  // table lock), and a cross-process writer CONCURRENT with us fails
-  // loudly on the lease. A foreign append strictly BETWEEN our ops is
-  // outside the model (same as round 9), and stamps only ever being
-  // bumped — never lowered — keeps any such interleaving ordered-after
-  // rather than colliding.
-
-  private val seqRe = """\.s(\d+)\.parquet$""".r
-
-  /** Sequence stamp of a data file name (0 for unstamped files: the
-    * initial build and compaction rewrites — by construction the oldest
-    * content in the table). A pre-round-9 unstamped `b$tag-*` batch
-    * file retried today therefore reuses sequence 0 — consistent with
-    * "oldest content", and the tagged sweep makes the retry
-    * byte-identical. */
-  private[graft] def fileSeqOf(name: String): Long =
-    seqRe.findFirstMatchIn(name).map(_.group(1).toLong).getOrElse(0L)
-
-  /** Last sequence stamp handed out (or observed) per qualified table
-    * path — the in-memory carry that makes [[nextSeq]] O(1) after the
-    * first call. Monotonic: entries are only ever raised. */
-  private val seqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def qualifiedOf(s: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    fs(s, p).makeQualified(p).toString
-  }
-
-  /** Raise (never lower) the carried sequence for `path` to `seq`.
-    * SEEDS a cold cache — callers must pass a value derived from the
-    * FULL sequence computation (standing files AND pending finite
-    * tombstone watermarks, i.e. [[nextSeq]]'s cold-start listing).
-    * Only [[nextSeq]] itself satisfies that; every other write path
-    * knows at most a files-only or sentinel-reused stamp and must use
-    * [[raiseSeq]], which cannot seed. Seeding from a files-only value
-    * after a crash state (high-stamped files swept, finite `del_seq`
-    * tombstone pending) would hand the next append a stamp at or below
-    * the pending watermark — the rows would be silently masked and
-    * physically dropped at the next compact, a lost append. */
-  private def noteSeq(s: SparkSession, path: String, seq: Long): Unit =
-    seqCache.merge(qualifiedOf(s, path), Long.box(seq),
-      (a, b) => if (a >= b) a else b)
-
-  /** Raise the carried sequence for `path` to `seq` ONLY if an entry
-    * already exists (i.e. some [[nextSeq]] in this process has done the
-    * full files+tombstones computation). On a cold cache this is a
-    * no-op, leaving the next [[nextSeq]] to run its listing fallback —
-    * the safe behavior when the caller's `seq` came from file names or
-    * a reuse sentinel alone and may sit below a pending tombstone
-    * watermark. */
-  private def raiseSeq(s: SparkSession, path: String, seq: Long): Unit =
-    seqCache.computeIfPresent(qualifiedOf(s, path),
-      (_, a) => if (a >= seq) a else Long.box(seq))
-
-  /** TEST ONLY: drop the carried sequence for `path`, simulating a
-    * process restart (cold cache). */
-  private[graft] def forgetSeqForTest(s: SparkSession, path: String): Unit =
-    seqCache.remove(qualifiedOf(s, path))
-
-  /** Next write sequence for the table: strictly above every standing
-    * file's stamp AND every pending finite tombstone watermark (so an
-    * append issued after a delete outranks it and serves immediately).
-    * Late-delete tombstones at Long.MaxValue are excluded — they mask
-    * everything until the next compact by design. Callers hold the
-    * table lock, which is what makes the read-modify monotonic. The
-    * listing runs only on a cold cache (process start); afterwards the
-    * carried value increments in memory. */
-  private def nextSeq(s: SparkSession, tablePath: String): Long = {
-    val key = qualifiedOf(s, tablePath)
-    val last = Option(seqCache.get(key)).map(_.longValue).getOrElse {
-      val maxFile = dataFiles(s, tablePath)
-        .map(st => fileSeqOf(st.getPath.getName)).foldLeft(0L)(math.max)
-      val maxDel = pendingTombstones(s, tablePath).map { t =>
-        val r = t.filter(col("del_seq") =!= Long.MaxValue)
-          .agg(org.apache.spark.sql.functions.max(col("del_seq"))).head()
-        if (r.isNullAt(0)) 0L else r.getLong(0)
-      }.getOrElse(0L)
-      math.max(maxFile, maxDel)
-    }
-    val next = last + 1L
-    noteSeq(s, tablePath, next)
-    next
-  }
-
-  private def oldAside(dest: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(dest.getParent, s".${dest.getName}.compact.old")
-  private def tmpAside(dest: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(dest.getParent, s".${dest.getName}.compact.tmp")
-  private def intentOf(dest: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(dest.getParent, s".${dest.getName}.promote.intent")
-  // tombstones the rewrite consumed, persisted INSIDE tmp so crash
-  // recovery can finish the late-delete check without the in-memory
-  // snapshot (underscore prefix: invisible to table reads)
-  private def consumedOf(dest: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(dest, "_consumed")
-
-  /** Re-append deletes that landed in the OLD directory after the
-    * rewrite's snapshot (`dest/_consumed`), conservatively sequenced at
-    * +infinity — every copy of the id stays masked until the next
-    * compact. Safe against delete-then-re-append: the consumed set
-    * excludes tombstones the rewrite already honored, and a LATE delete
-    * by definition postdates every row the rewrite kept. */
-  private def reappendLateDeletes(s: SparkSession, dest: org.apache.hadoop.fs.Path,
-      old: org.apache.hadoop.fs.Path): Unit = {
-    val f = fs(s, dest)
-    val lateDir = new org.apache.hadoop.fs.Path(old, "_tombstones")
-    if (f.exists(lateDir)) {
-      val consumedDir = consumedOf(dest)
-      val consumed: Set[(Long, Long)] =
-        if (f.exists(consumedDir)) s.read.parquet(consumedDir.toString)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        else Set.empty
-      val late = s.read.parquet(lateDir.toString)
-        .select(col("id"), col("del_seq")).distinct().collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet -- consumed
-      if (late.nonEmpty) {
         import s.implicits._
-        late.toSeq.map { case (id, _) => (id, Long.MaxValue) }
-          .toDF("id", "del_seq").coalesce(1)
-          .write.mode("append").parquet(s"$dest/_tombstones")
+        val dels = tombs.groupMapReduce(_.id)(_.seq)(math.max).toSeq.toDF(idCol, "_del_seq")
+        val seqOf = typedLit(fs.map(d => d.name -> d.seq).toMap)
+        val cols = base.columns.toSeq.map(col)
+        base.select(element_at(seqOf, col("_metadata.file_name")).as("_fseq") +: cols: _*)
+          // gated, not forced: a mass takedown must not be hint-collected
+          // onto the driver past the broadcast threshold
+          .join(JoinHints.broadcastIfSmall(dels), Seq(idCol), "left")
+          .filter(col("_del_seq").isNull || col("_fseq") >= col("_del_seq"))
+          .select(cols: _*)
       }
     }
   }
 
-  /** Crash recovery for the promote sequence, discriminated by the
-    * intent marker and which renames completed (renames are atomic, so
-    * exactly one state holds). Called at the head of every maintenance
-    * op on the table.
-    *
-    *  - intent + tmp still present: the promote never happened. If a
-    *    plain `mode("append")` recreated `dest` in the meantime, its
-    *    files are REAL appended batches — fold them into the aside and
-    *    restore it (never delete the aside on this branch: it IS the
-    *    standing table). Then drop the stale rewrite; the compact is
-    *    simply lost and can re-run.
-    *  - intent + tmp gone: the promote happened; `dest` is the rewrite.
-    *    Finish the tail: late-delete re-append from the aside (the
-    *    crash may have preceded it — a lost takedown otherwise), drop
-    *    the aside, clear `_consumed`, clear the intent.
-    *  - no intent: legacy pre-intent states (aside without dest =
-    *    crash-mid-swap of the old sequence → restore; aside with dest =
-    *    finished promote's leftover → drop). */
-  private[graft] def recoverPromote(s: SparkSession, path: String): Unit = {
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val f = fs(s, dest)
-    val old = oldAside(dest)
-    val tmp = tmpAside(dest)
-    val intent = intentOf(dest)
-    if (f.exists(intent)) {
-      if (f.exists(tmp)) {
-        if (f.exists(old)) {
-          if (f.exists(dest)) {
-            // appends recreated dest after the crash: fold them in
-            // (_SUCCESS markers collide and carry no data — skipped)
-            f.listStatus(dest).toSeq
-              .filterNot(_.getPath.getName == "_SUCCESS").foreach { st =>
-              val to = new org.apache.hadoop.fs.Path(old, st.getPath.getName)
-              if (st.getPath.getName == "_tombstones" && f.exists(to)) {
-                f.listStatus(st.getPath).toSeq
-                  .filterNot(_.getPath.getName == "_SUCCESS").foreach { t =>
-                  if (!f.rename(t.getPath, new org.apache.hadoop.fs.Path(to, t.getPath.getName)))
-                    throw new java.io.IOException(s"recoverPromote: fold ${t.getPath} failed")
-                }
-              } else if (!f.rename(st.getPath, to))
-                throw new java.io.IOException(s"recoverPromote: fold ${st.getPath} -> $to failed")
-            }
-            f.delete(dest, true)
-          }
-          if (!f.rename(old, dest))
-            throw new java.io.IOException(s"recoverPromote: rename $old -> $dest failed")
-        }
-        f.delete(tmp, true)
-        f.delete(intent, false)
-      } else {
-        if (f.exists(old)) {
-          reappendLateDeletes(s, dest, old)
-          f.delete(old, true)
-        }
-        f.delete(consumedOf(dest), true)
-        f.delete(intent, false)
-      }
-    } else if (!f.exists(dest) && f.exists(old)) {
-      if (!f.rename(old, dest))
-        throw new java.io.IOException(s"recoverPromote: rename $old -> $dest failed")
-    } else if (f.exists(old)) f.delete(old, true) // finished promote's leftover
+  /** The file set of one table as of one snapshot. `refresh` is a no-op:
+    * a snapshot never changes. */
+  private final class SnapshotFiles(root: Path, statuses: Seq[FileStatus], label: String)
+      extends FileIndex {
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, statuses.map(FileStatusWithMetadata(_))))
+    override def inputFiles: Array[String] = statuses.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = statuses.map(_.getLen).sum
+    override def partitionSchema: StructType = new StructType()
+    override def toString: String = s"IndexSnapshot[$label]"
   }
 
-  /** Rewrite the parquet table at `path` as ceil(bytes/128 MB) files
-    * range-partitioned + sorted on `sortCols`, swap it in, and return
-    * (files before, files after). A no-op single-file table still
-    * rewrites (the sort may be new), which keeps the contract simple:
-    * after compact, the table IS sorted. When `tombstoneCol` is given,
-    * rows masked by a pending tombstone (see [[deleteIds]]) are
-    * PHYSICALLY dropped by the rewrite, and the swap retires the
-    * tombstones consumed by it.
-    *
-    * The swap is NOT one atomic rename (no filesystem gives us that for
-    * a directory replace): it is rename-dest-aside, promote-tmp, check,
-    * delete-old — with [[recoverPromote]] healing the
-    * crash-between-renames window at the next maintenance op, the
-    * in-JVM [[tableLocks]] serializing delete/append/compact, and a
-    * post-promote re-read of the OLD directory's tombstone table
-    * re-appending any delete that a concurrent PROCESS issued after the
-    * rewrite's snapshot (conservatively sequenced at +infinity: every
-    * copy of the id stays masked until the next compact — a takedown
-    * must err toward removal). Readers see the old or the new file set,
-    * never a mix. The lease is heartbeaten after the rewrite write and
-    * ownership is re-verified immediately before the promote renames —
-    * a rewrite that outlived [[leaseStaleMs]] and lost its lease to a
-    * second process aborts LOUDLY with the standing table untouched.
-    *
-    * `markerDir` (the index's `_batches` sidecar, for tables fed by a
-    * marker-guarded streaming loop): the rewrite ABSORBS any landed
-    * `b$tag-*` batch files into anonymous part files, so before the
-    * swap their per-batch fold markers are (re)created — closing the
-    * crash window where a batch's data landed, the marker write was
-    * lost to a crash, a rewrite renamed the files away, and the retry
-    * (finding neither marker nor files) re-landed the batch as
-    * duplicate rows. Creating the marker BEFORE the promote is safe on
-    * both outcomes: if the promote never happens the batch's original
-    * files are still in the restored table, and if it does they are in
-    * the rewrite — either way "folded" is true. Markers are pinned ONLY
-    * for COMPLETE markerless batches ([[sweepIncompleteBatches]] runs
-    * first): an INCOMPLETE file set — a crash mid-[[landAs]] — is
-    * uncommitted partial output whose absorption-plus-marker would be
-    * silent data loss (the retry would skip, the missing part files'
-    * rows gone); it is swept instead, and the retry re-lands the whole
-    * batch under its persisted sequence stamp. Afterwards, markers made
-    * unreachable by the engine's commit protocol are retired
-    * ([[retireMarkers]]). */
-  def compactTable(s: SparkSession, path: String, sortCols: Seq[String],
-      tombstoneCol: Option[String] = None,
-      markerDir: Option[String] = None): (Int, Int) =
-      lockFor(s, path).synchronized { withLease(s, path) {
-    recoverPromote(s, path)
-    markerDir.foreach(md => sweepIncompleteBatches(s, Seq(path), md))
-    val before = dataFiles(s, path)
-    require(before.nonEmpty, s"compactTable: nothing to compact at $path")
-    val totalBytes = before.map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val versionRe = """^(\d{20})\.json$""".r
+  private val checkpointRe = """^(\d{20})\.checkpoint\.json$""".r
+  private def logDir(root: Path) = new Path(root, "_log")
+  private def versionFile(root: Path, v: Long) = new Path(logDir(root), f"$v%020d.json")
+  private def checkpointFile(root: Path, v: Long) =
+    new Path(logDir(root), f"$v%020d.checkpoint.json")
+
+  private def empty(root: Path) = Snapshot(root, -1L, "", Map.empty, Set.empty, Map.empty, Map.empty)
+
+  /** Latest snapshot per qualified directory, advanced incrementally. */
+  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Snapshot]()
+
+  /** The current snapshot of `dir`. One listing of `_log` when nothing
+    * changed; otherwise the new versions are replayed onto the cached
+    * state (or the newest checkpoint). A directory without a log is an
+    * error: there is no listing fallback. */
+  def snapshot(s: SparkSession, dir: String): Snapshot =
+    load(s, qualify(s, dir)).getOrElse(throw noLog(dir))
+
+  private def noLog(dir: Any) =
+    new IllegalStateException(s"$dir has no index log (_log); build the index first")
+
+  /** [[snapshot]], or None for a directory without a log. */
+  def snapshotIfAny(s: SparkSession, dir: String): Option[Snapshot] = load(s, qualify(s, dir))
+
+  private def load(s: SparkSession, root: Path, attempt: Int = 0): Option[Snapshot] = {
+    val f = fsOf(s, root)
+    val listed = try f.listStatus(logDir(root)).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val stamps = listed.flatMap(st => st.getPath.getName match {
+      case versionRe(v) => Some(v.toLong -> s"${st.getLen}:${st.getModificationTime}")
+      case _ => None
+    }).toMap
+    if (stamps.isEmpty) return None
+    val latest = stamps.keys.max
+    val cached = Option(cache.get(root.toString))
+      .filter(c => c.version <= latest && stamps.get(c.version).contains(c.stamp))
+    try {
+      val from = cached.filter(c => (c.version + 1 to latest).forall(stamps.contains)).getOrElse {
+        listed.flatMap(st => st.getPath.getName match {
+          case checkpointRe(v) if v.toLong <= latest => Some(v.toLong)
+          case _ => None
+        }).maxOption.map(v => replay(empty(root), v, stamps.getOrElse(v, ""),
+          readText(f, checkpointFile(root, v))))
+          .getOrElse(empty(root))
+      }
+      val snap = (from.version + 1 to latest).foldLeft(from)((st, v) =>
+        replay(st, v, stamps(v), readText(f, versionFile(root, v))))
+      cache.put(root.toString, snap)
+      Some(snap)
+    } catch {
+      // a checkpoint retired the versions this listing named: list again
+      case _: java.io.FileNotFoundException if attempt < 3 => load(s, root, attempt + 1)
+    }
+  }
+
+  private def readText(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  private def replay(base: Snapshot, version: Long, stamp: String, text: String): Snapshot = {
+    var files = base.files
+    var tombs = base.tombstones
+    var batches = base.batches
+    var props = base.props
+    text.split('\n').iterator.filter(_.nonEmpty).foreach { line =>
+      val e = json.readTree(line).properties().iterator().next()
+      val a = e.getValue
+      def str(k: String) = a.get(k).asText()
+      def num(k: String) = a.get(k).asLong()
+      e.getKey match {
+        case "add" => files += str("path") ->
+          DataFile(str("path"), str("table"), num("size"), num("seq"), str("schema"))
+        case "remove" => files -= str("path")
+        case "tombstone" => tombs += Tombstone(str("table"), num("id"), num("seq"))
+        case "consume" => tombs -= Tombstone(str("table"), num("id"), num("seq"))
+        case "batch" => batches += str("lineage") ->
+          math.max(batches.getOrElse(str("lineage"), -1L), num("id"))
+        case "prop" =>
+          props = if (str("value").isEmpty) props - str("key") else props + (str("key") -> str("value"))
+        case other => throw new IllegalStateException(
+          s"unknown action '$other' in version $version of ${base.root}")
+      }
+    }
+    Snapshot(base.root, version, stamp, files, tombs, batches, props)
+  }
+
+  private def action(kind: String, fields: (String, Any)*): String = {
+    val n = json.createObjectNode()
+    val a = n.putObject(kind)
+    fields.foreach {
+      case (k, v: String) => a.put(k, v)
+      case (k, v: Long) => a.put(k, v)
+      case (k, v) => throw new IllegalArgumentException(s"action field $k: $v")
+    }
+    json.writeValueAsString(n)
+  }
+
+  private def addAction(d: DataFile) = action("add", "path" -> d.path, "table" -> d.table,
+    "size" -> d.size, "seq" -> d.seq, "schema" -> d.schema)
+  private def tombAction(kind: String, t: Tombstone) =
+    action(kind, "table" -> t.table, "id" -> t.id, "seq" -> t.seq)
+
+  // ------------------------------------------------------------ commit
+
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** The in-JVM writer lock of a directory (reentrant). */
+  private def withLock[T](root: Path)(body: => T): T =
+    locks.computeIfAbsent(root.toString, _ => new Object).synchronized(body)
+
+  /** A staged file: written under its final name, not yet committed.
+    * `base` files carry sequence 0, appended ones their version. */
+  private final case class Staged(path: String, table: String, size: Long,
+      schema: String, base: Boolean)
+
+  /** What `commit` writes on top of the snapshot it read: the staged
+    * files, the tables they replace wholesale (each loses every file and
+    * pending tombstone the read snapshot held), tombstones, the batch
+    * mark and props. */
+  private final case class Actions(adds: Seq[Staged], replaced: Set[String],
+      deletes: Seq[(String, Long)], mark: Option[(String, Long)], props: Map[String, String])
+
+  /** Write `df` through an invisible staging dir and move its parts into
+    * the table directory under fresh names. */
+  private def stage(s: SparkSession, root: Path, table: String, df: DataFrame,
+      base: Boolean): Seq[Staged] = {
+    val f = fsOf(s, root)
+    val dir = tableDir(root, table)
+    val id = java.util.UUID.randomUUID().toString
+    val staging = new Path(dir, s"_staging_$id")
+    df.write.mode("overwrite").parquet(staging.toString)
+    val schema = org.apache.spark.sql.GraftBridge.asNullable(df.schema).json
+    val parts = f.listStatus(staging).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName)
+    val out = parts.zipWithIndex.map { case (st, i) =>
+      val name = f"part-$i%05d-$id.parquet"
+      if (!f.rename(st.getPath, new Path(dir, name)))
+        throw new java.io.IOException(s"stage: rename ${st.getPath} into $dir failed")
+      Staged(if (table.isEmpty) name else s"$table/$name", table, st.getLen, schema, base)
+    }
+    f.delete(staging, true)
+    out
+  }
+
+  /** Commit `a` on top of `read`, retrying on a lost version race (see
+    * the conflict rule). None when the batch mark was already there. */
+  private def commit(s: SparkSession, read: Snapshot, a: Actions): Option[Snapshot] = {
+    val root = read.root
+    val f = fsOf(s, root)
+    def dropStaged(): Unit = a.adds.foreach(st => f.delete(new Path(root, st.path), false))
+    val removes = a.replaced.toSeq.flatMap(read.filesOf)
+    var snap = read
+    while (true) {
+      val moved = a.replaced.filter(t => snap.filesOf(t) != read.filesOf(t))
+      if (moved.nonEmpty) {
+        dropStaged()
+        throw new IllegalStateException(s"commit on $root: table(s) ${moved.mkString(", ")} " +
+          s"changed between version ${read.version} and ${snap.version}; a concurrent rewrite " +
+          "or append won the race, this rewrite is abandoned and the table is untouched")
+      }
+      if (a.mark.exists { case (l, b) => snap.batchSeen(l, b) }) { dropStaged(); return None }
+      // a rewrite's orphan sweep spares files younger than the retention
+      a.adds.foreach { st =>
+        try f.setTimes(new Path(root, st.path), System.currentTimeMillis(), -1L)
+        catch { case e: java.io.FileNotFoundException =>
+          dropStaged()
+          throw new IllegalStateException(s"commit on $root: staged file ${st.path} is gone " +
+            s"(swept as an orphan after ${orphanRetentionMs / 1000} s?); nothing committed", e)
+        }
+      }
+      val v = snap.version + 1
+      val lines =
+        a.adds.map(st => addAction(DataFile(st.path, st.table, st.size,
+          if (st.base) 0L else v, st.schema))) ++
+        removes.map(r => action("remove", "path" -> r.path)) ++
+        a.deletes.map { case (t, id) => tombAction("tombstone", Tombstone(t, id, v)) } ++
+        a.replaced.toSeq.flatMap(read.tombstonesOf).map(tombAction("consume", _)) ++
+        a.mark.map { case (l, b) => action("batch", "lineage" -> l, "id" -> b) } ++
+        a.props.map { case (k, value) => action("prop", "key" -> k, "value" -> value) }
+      val won =
+        try {
+          val out = f.create(versionFile(root, v), false)
+          try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+          true
+        } catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+      // a create can succeed on a version a checkpoint retired: a later
+      // version or checkpoint exposes it, and it must not stand
+      val retired = won && f.listStatus(logDir(root)).exists(st => st.getPath.getName match {
+        case versionRe(n) => n.toLong > v
+        case checkpointRe(n) => n.toLong >= v
+        case _ => false
+      })
+      if (retired) f.delete(versionFile(root, v), false)
+      if (won && !retired) {
+        val next = snapshot(s, root.toString)
+        removes.foreach(r => f.delete(new Path(root, r.path), false))
+        if (v > 0 && v % checkpointInterval == 0) checkpoint(f, next)
+        return Some(next)
+      }
+      snap = snapshot(s, root.toString)
+    }
+    None
+  }
+
+  private def checkpoint(f: FileSystem, snap: Snapshot): Unit = {
+    val lines = snap.files.values.toSeq.sortBy(_.path).map(addAction) ++
+      snap.tombstones.toSeq.map(tombAction("tombstone", _)) ++
+      snap.batches.map { case (l, b) => action("batch", "lineage" -> l, "id" -> b) } ++
+      snap.props.map { case (k, v) => action("prop", "key" -> k, "value" -> v) }
+    val p = checkpointFile(snap.root, snap.version)
+    val tmp = new Path(logDir(snap.root), s".${p.getName}.tmp")
+    val out = f.create(tmp, true)
+    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+    if (!f.rename(tmp, p)) f.delete(tmp, false)
+    val keepFrom = snap.version - checkpointInterval
+    f.listStatus(logDir(snap.root)).foreach { st =>
+      st.getPath.getName match {
+        case versionRe(v) if v.toLong < keepFrom => f.delete(st.getPath, false)
+        case checkpointRe(v) if v.toLong < keepFrom => f.delete(st.getPath, false)
+        case _ => ()
+      }
+    }
+  }
+
+  /** What one transaction changes: `append` lands new files next to the
+    * standing ones; `replace` rewrites tables wholesale (a build,
+    * compaction or retrain), removing every file they held and
+    * consuming their pending tombstones — the replacement must be
+    * derived from the snapshot handed to the body; `deletes` tombstones
+    * (table, id) pairs. */
+  final case class Change(append: Seq[(String, DataFrame)] = Nil,
+      replace: Seq[(String, DataFrame)] = Nil, props: Map[String, String] = Map.empty,
+      deletes: Seq[(String, Long)] = Nil)
+
+  /** One write transaction on the log at `dir`, under its writer lock:
+    * `body` derives the change from the snapshot it is handed; its
+    * tables are staged and commit as ONE version, together with the
+    * batch mark. None (and `body` never runs) when `mark` is already
+    * committed. After a rewrite commits, orphan files in the directory's
+    * tables — written but never committed, older than
+    * [[orphanRetentionMs]] — are deleted. */
+  def transact(s: SparkSession, dir: String, mark: Option[(String, Long)] = None)(
+      body: Snapshot => Change): Option[Snapshot] = {
+    val root = qualify(s, dir)
+    withLock(root) {
+      val snap = load(s, root).getOrElse(empty(root))
+      if (mark.exists { case (l, b) => snap.batchSeen(l, b) }) None
+      else {
+        val c = body(snap)
+        val replaced = c.replace.map(_._1).toSet
+        val staged = c.replace.flatMap { case (t, df) => stage(s, root, t, df, base = true) } ++
+          c.append.flatMap { case (t, df) => stage(s, root, t, df, base = false) }
+        // a replaced table's facts go with it unless restated
+        val cleared = snap.props.keys.filter(k => replaced.exists(t => k.startsWith(s"$t.")))
+        val out = commit(s, snap, Actions(staged, replaced, c.deletes, mark,
+          cleared.map(_ -> "").toMap ++ c.props))
+        if (replaced.nonEmpty)
+          out.foreach(next => next.files.values.map(_.table).toSet.foreach(deleteOrphans(s, next, _)))
+        out
+      }
+    }
+  }
+
+  private def deleteOrphans(s: SparkSession, snap: Snapshot, table: String): Unit = {
+    val f = fsOf(s, snap.root)
+    val live = snap.filesOf(table).map(_.name).toSet
+    val cutoff = System.currentTimeMillis() - orphanRetentionMs
+    f.listStatus(tableDir(snap.root, table)).foreach { st =>
+      val n = st.getPath.getName
+      if (st.isFile && !n.startsWith("_") && !n.startsWith(".") && !live.contains(n) &&
+          st.getModificationTime < cutoff)
+        f.delete(st.getPath, false)
+    }
+  }
+
+  // ------------------------------------------------- the write surface
+
+  /** Append `tables` (name -> rows) in one commit, optionally with a
+    * streaming batch mark: false when the mark was already committed
+    * (an at-least-once retry) and nothing landed. */
+  def append(s: SparkSession, dir: String, tables: Seq[(String, DataFrame)],
+      mark: Option[(String, Long)] = None): Boolean =
+    transact(s, dir, mark)(_ => Change(append = tables)).isDefined
+
+  /** Build (or rebuild) `tables` from scratch in one commit. */
+  def replace(s: SparkSession, dir: String, tables: Seq[(String, DataFrame)],
+      props: Map[String, String] = Map.empty): Unit =
+    transact(s, dir)(_ => Change(replace = tables, props = props))
+
+  /** The compaction rewrite of one table as of `snap`: tombstoned rows
+    * dropped (with `idCol`), range-partitioned and sorted on `sortCols`
+    * into ceil(bytes / 128 MB) files. */
+  def rewrite(s: SparkSession, snap: Snapshot, table: String, sortCols: Seq[String],
+      idCol: Option[String]): DataFrame = {
+    val bytes = snap.filesOf(table).map(_.size).sum
+    val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val keys = sortCols.map(col)
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val tmp = tmpAside(dest)
-    // snapshot the pending tombstones the rewrite consumes (tiny —
-    // takedown-sized; compare-target for the post-promote re-check)
-    val consumed: Set[(Long, Long)] = tombstoneCol.flatMap(_ =>
-      pendingTombstones(s, path).map(_.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet)).getOrElse(Set.empty)
-    val base = s.read.parquet(path)
-    tombstoneCol.fold(base)(c => minusTombstones(s, path, base, c))
-      .repartitionByRange(nOut, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .write.mode("overwrite").parquet(tmp.toString)
-    // the rewrite was the long phase: heartbeat so a second process
-    // does not judge this op crashed during the swap tail
-    touchLease(s, path)
-    // persist the consumed snapshot inside the rewrite so a crash after
-    // the promote can still finish the late-delete check
-    if (tombstoneCol.isDefined) {
-      import s.implicits._
-      consumed.toSeq.toDF("id", "del_seq").coalesce(1)
-        .write.mode("overwrite").parquet(new org.apache.hadoop.fs.Path(tmp, "_consumed").toString)
-    }
-    val f = fs(s, dest)
-    // the rewrite read (absorbed) every landed batch file in `before` —
-    // all complete, the incomplete ones were swept above: pin their
-    // fold markers NOW, before any rename (see Scaladoc)
-    val absorbedTags = markerDir.map { md =>
-      val tags = before.flatMap(st => batchTagOf(st.getPath.getName)).distinct
-      tags.foreach { tag =>
-        val mp = new org.apache.hadoop.fs.Path(s"$md/$tag")
-        f.mkdirs(mp.getParent)
-        f.create(mp, true).close()
-      }
-      tags
-    }.getOrElse(Seq.empty)
-    val old = oldAside(dest)
-    if (f.exists(old)) f.delete(old, true)
-    // a stolen lease means a second maintenance writer may be mid-swap
-    // on this table: abort before the renames, standing table untouched
-    verifyHeldLease(s, path)
-    // intent marker: between here and its removal, recoverPromote can
-    // reconstruct exactly which renames completed (tmp's existence is
-    // the promote discriminator) and finish or unwind accordingly —
-    // including the case where a crash-window plain append recreated
-    // dest, whose files are real batches and must fold into the aside
-    val intent = intentOf(dest)
-    f.create(intent, true).close()
-    if (!f.rename(dest, old))
-      throw new java.io.IOException(s"compactTable: rename $dest -> $old failed")
-    if (!f.rename(tmp, dest)) {
-      // promote failed: put the original back before surfacing
-      f.rename(old, dest)
-      f.delete(tmp, true)
-      f.delete(intent, false)
-      throw new java.io.IOException(s"compactTable: rename $tmp -> $dest failed")
-    }
-    // late deletes: tombstones that landed in the old directory after
-    // the rewrite's snapshot (only reachable cross-process — the lock
-    // serializes in-JVM callers) must survive the swap
-    if (tombstoneCol.isDefined) reappendLateDeletes(s, dest, old)
-    f.delete(old, true)
-    f.delete(consumedOf(dest), true)
-    f.delete(intent, false)
-    markerDir.foreach { md =>
-      retireSeqSentinels(s, path, md, absorbedTags)
-      retireMarkers(s, md)
-    }
-    (before.size, dataFiles(s, path).size)
-  }}
-
-  // ------------------------------------------- index-dir publish (retrain)
-
-  /** Run `body` holding the table's maintenance lock — the retrain ops
-    * wrap their corpus snapshot + rebuild + publish in this so no
-    * in-JVM append or delete can land between the snapshot and the
-    * swap (the long quantizer TRAINING runs outside; only the rebuild
-    * write + publish stall the ingest loop). */
-  private[graft] def withTableLock[T](s: SparkSession, path: String)(body: => T): T =
-    lockFor(s, path).synchronized(withLease(s, path)(body))
-
-  private def publishAside(dest: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(dest.getParent, s".${dest.getName}.retrain.old")
-  private def publishIntent(dest: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(dest.getParent, s".${dest.getName}.publish.intent")
-
-  /** Publish a freshly-rebuilt index DIRECTORY over the live one — the
-    * retrain swap, sharing the compaction swap's machinery: intent
-    * marker, rename-aside/promote with full rollback (including the
-    * fold-marker sidecar, which carries into the rebuild FIRST — the
-    * rebuilt index contains every folded batch's vectors — and back out
-    * on every unwind path), post-promote late-delete re-apply against
-    * the `consumed` snapshot, and [[recoverPublish]] healing every
-    * crash state. `tableName` is the index's assignment table (the one
-    * carrying tombstones); the CALLER must hold [[withTableLock]] on it
-    * and have taken `consumed` = the pending-tombstone snapshot its
-    * rebuild honored. Markers are pinned for EVERY standing tag here —
-    * including an incomplete one — because the rebuild's content comes
-    * from the caller's corpus directories (which include the batch's
-    * fully-landed source file), not from the landed table files; the
-    * caller's corpus-coverage contract is what makes the pin correct.
-    * The lease (a sibling of `indexDir`, outside the swap) is
-    * re-verified immediately before the promote renames. */
-  private[graft] def publishDir(s: SparkSession, tmpDir: String, indexDir: String,
-      tableName: String, consumed: Set[(Long, Long)]): Unit = {
-    val dest = new org.apache.hadoop.fs.Path(indexDir)
-    val tmp = new org.apache.hadoop.fs.Path(tmpDir)
-    val f = fs(s, dest)
-    import s.implicits._
-    consumed.toSeq.toDF("id", "del_seq").coalesce(1)
-      .write.mode("overwrite").parquet(s"$tmpDir/$tableName/_consumed")
-    val old = publishAside(dest)
-    if (f.exists(old)) f.delete(old, true)
-    verifyHeldLease(s, s"$indexDir/$tableName")
-    val intent = publishIntent(dest)
-    f.create(intent, true).close()
-    val batches = new org.apache.hadoop.fs.Path(dest, "_batches")
-    val tmpBatches = new org.apache.hadoop.fs.Path(tmp, "_batches")
-    def restoreBatches(to: org.apache.hadoop.fs.Path): Unit =
-      if (f.exists(tmpBatches)) f.rename(tmpBatches, new org.apache.hadoop.fs.Path(to, "_batches"))
-    if (f.exists(batches) && !f.rename(batches, tmpBatches)) {
-      f.delete(intent, false)
-      throw new java.io.IOException(s"publishDir: carrying $batches into $tmp failed")
-    }
-    // the rebuild's corpus snapshot absorbed every landed batch file of
-    // the live table: pin their fold markers into the carried sidecar
-    // BEFORE the promote (safe on both outcomes — see compactTable's
-    // Scaladoc; on an unwind the sidecar rides back with restoreBatches)
-    dataFiles(s, s"$indexDir/$tableName")
-      .flatMap(st => batchTagOf(st.getPath.getName)).distinct.foreach { tag =>
-      val mp = new org.apache.hadoop.fs.Path(tmpBatches, tag)
-      f.mkdirs(tmpBatches)
-      f.create(mp, true).close()
-    }
-    if (!f.rename(dest, old)) {
-      restoreBatches(dest)
-      f.delete(intent, false)
-      throw new java.io.IOException(s"publishDir: rename $dest -> $old failed")
-    }
-    if (!f.rename(tmp, dest)) {
-      f.rename(old, dest)
-      restoreBatches(dest)
-      f.delete(intent, false)
-      throw new java.io.IOException(s"publishDir: rename $tmp -> $dest failed")
-    }
-    reappendLateDeletes(s, new org.apache.hadoop.fs.Path(s"$indexDir/$tableName"),
-      new org.apache.hadoop.fs.Path(old, tableName))
-    f.delete(old, true)
-    f.delete(consumedOf(new org.apache.hadoop.fs.Path(s"$indexDir/$tableName")), true)
-    f.delete(intent, false)
-    retireMarkers(s, s"$indexDir/_batches")
+    idCol.fold(snap.read(s, table))(snap.scan(s, table, _))
+      .repartitionByRange(nOut, keys: _*).sortWithinPartitions(keys: _*)
   }
 
-  /** Crash recovery for [[publishDir]], discriminated exactly like
-    * [[recoverPromote]] (tmp's existence tells whether the promote
-    * rename happened). Called at the head of every retrain — and safe
-    * to call any time. */
-  private[graft] def recoverPublish(s: SparkSession, indexDir: String,
-      tableName: String): Unit = {
-    val dest = new org.apache.hadoop.fs.Path(indexDir)
-    val f = fs(s, dest)
-    val old = publishAside(dest)
-    val tmp = new org.apache.hadoop.fs.Path(dest.getParent, s".${dest.getName}.retrain.tmp")
-    val intent = publishIntent(dest)
-    val destTable = new org.apache.hadoop.fs.Path(s"$indexDir/$tableName")
-    if (f.exists(intent)) {
-      if (f.exists(tmp)) {
-        // promote never happened: restore the live index and the fold
-        // markers the swap had carried into the rebuild, drop the stale
-        // rebuild — the retrain is lost and can re-run
-        if (!f.exists(dest) && f.exists(old) && !f.rename(old, dest))
-          throw new java.io.IOException(s"recoverPublish: rename $old -> $dest failed")
-        val tb = new org.apache.hadoop.fs.Path(tmp, "_batches")
-        val db = new org.apache.hadoop.fs.Path(dest, "_batches")
-        if (f.exists(tb) && f.exists(dest) && !f.exists(db)) f.rename(tb, db)
-        f.delete(tmp, true)
-        f.delete(intent, false)
-      } else {
-        // promoted: finish the tail the crash skipped
-        if (f.exists(old)) {
-          reappendLateDeletes(s, destTable, new org.apache.hadoop.fs.Path(old, tableName))
-          f.delete(old, true)
-        }
-        f.delete(consumedOf(destTable), true)
-        f.delete(intent, false)
-      }
-    } else if (!f.exists(dest) && f.exists(old)) {
-      if (!f.rename(old, dest))
-        throw new java.io.IOException(s"recoverPublish: rename $old -> $dest failed")
-    } else if (f.exists(old)) f.delete(old, true)
+  /** Compact one table: one commit removes its files and consumed
+    * tombstones and adds the sorted rewrite. Returns (files before,
+    * files after). After it, the table IS sorted. */
+  def compact(s: SparkSession, dir: String, table: String, sortCols: Seq[String],
+      idCol: Option[String] = None): (Int, Int) = {
+    var before = 0
+    val after = transact(s, dir) { snap =>
+      before = snap.filesOf(table).size
+      require(before > 0, s"compact: nothing to compact at $dir table '$table'")
+      Change(replace = Seq(table -> rewrite(s, snap, table, sortCols, idCol)))
+    }
+    (before, after.map(_.filesOf(table).size).getOrElse(0))
   }
 
-  // ------------------------------------------- idempotent batch appends
-  //
-  // foreachBatch is AT-LEAST-ONCE: a batch retried after its writes but
-  // before the checkpoint commit is re-presented with the SAME batch id.
-  // The first-cut guard anti-joined every batch against the standing
-  // index's distinct ids — an O(index) scan + shuffle per trigger that
-  // grows with stream age (and serve-key-sorted compaction makes the id
-  // read unprunable), the classic O(stream-age) failure mode. The fix is
-  // the standard idempotent-sink pattern (the shape of Delta's
-  // txnAppId/txnVersion): track WHICH batches have been folded in a
-  // per-batch marker sidecar, keyed by (checkpoint lineage, batchId) —
-  // an O(1) filesystem existence probe per trigger, zero data read —
-  // and make the data append itself self-replacing under retry via
-  // DETERMINISTIC file names, so the crash window between data append
-  // and marker append re-lands the same files instead of duplicating
-  // rows. The standing-id uniqueness the anti-join used to enforce
-  // becomes a compaction-cadence INVARIANT CHECK (amortized O(index)/N),
-  // not a per-batch cost.
-  //
-  // Markers are scoped to the checkpoint lineage: batch ids restart at 0
-  // under a NEW checkpoint, so a reprocessing run (new checkpoint dir,
-  // same index) must not be masked by a previous lineage's markers.
+  /** Tombstone `ids` in every one of `tables`, one commit. Serving masks
+    * them at once; the next rewrite drops the rows. Idempotent. */
+  def delete(s: SparkSession, dir: String, tables: Seq[String], ids: Seq[Long]): Unit = {
+    require(ids.nonEmpty, "delete: empty id list")
+    transact(s, dir) { snap =>
+      if (snap.version < 0) throw noLog(dir)
+      Change(deletes = for (t <- tables; id <- ids.distinct) yield (t, id))
+    }
+  }
 
-  /** Stable tag for a checkpoint lineage (markers from different
-    * checkpoints must not collide when batch ids restart at 0). */
+  // -------------------------------------------------- the read surface
+
+  def read(s: SparkSession, dir: String, table: String): DataFrame =
+    snapshot(s, dir).read(s, table)
+
+  def scan(s: SparkSession, dir: String, table: String, idCol: String): DataFrame =
+    snapshot(s, dir).scan(s, table, idCol)
+
+  def hasTable(s: SparkSession, dir: String, table: String): Boolean =
+    snapshotIfAny(s, dir).exists(_.hasTable(table))
+
+  /** Has (lineage, batchId) been committed to the index at `dir`? */
+  def batchSeen(s: SparkSession, dir: String, lineage: String, batchId: Long): Boolean =
+    snapshotIfAny(s, dir).exists(_.batchSeen(lineage, batchId))
+
+  /** Stable tag for a checkpoint lineage: batch ids restart at 0 under
+    * a new checkpoint, so a reprocessing run must not be masked by a
+    * previous lineage's marks. */
   def lineageTag(checkpointDir: String): String = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(checkpointDir.getBytes("UTF-8"))
     d.take(4).map("%02x".format(_)).mkString
   }
 
-  /** Canonical batch tag — used BOTH as the fold-marker file name and
-    * as the [[appendBatchAs]] tag, so a rewrite can reconstruct a
-    * batch's marker from its landed file names alone. */
-  def batchTag(lineage: String, batchId: Long): String = s"${lineage}_b$batchId"
-
-  private val tagFileRe = """^b(.+_b\d+)-\d+(?:\.c\d+)?(?:\.s\d+)?\.parquet$""".r
-  // tail-anchored: an unanchored `\.c(\d+)\.` would take the FIRST
-  // match anywhere in the name, so a tag containing a `.cN.` substring
-  // would advertise a wrong part count and tagComplete would judge the
-  // lineage's complete batches permanently incomplete (sweep/retry
-  // churn at every compact)
-  private val countRe = """\.c(\d+)(?:\.s\d+)?\.parquet$""".r
-
-  /** The batch tag a landed data file belongs to, if it is a
-    * [[appendBatchAs]] batch file (`b$tag-N[.cM][.sK].parquet`). */
-  private[graft] def batchTagOf(fileName: String): Option[String] =
-    tagFileRe.findFirstMatchIn(fileName).map(_.group(1))
-
-  /** The batch's total part count a landed file advertises (`.cM.`
-    * segment) — what makes a PARTIAL landing (crash mid-[[landAs]]
-    * renames) detectable from the names alone. Absent on pre-round-10
-    * files (treated as complete: their landing predates the check). */
-  private[graft] def partCountOf(fileName: String): Option[Int] =
-    countRe.findFirstMatchIn(fileName).map(_.group(1).toInt)
-
-  /** Is this tag's landed file set COMPLETE — every part the landing
-    * attempted is present? Complete iff all files carry the same `.cM.`
-    * advertised count and exactly M files stand. A mixed or stampless
-    * modern set is incomplete; an all-legacy (no `.c`) set is complete
-    * by grandfathering. */
-  private def tagComplete(files: Seq[org.apache.hadoop.fs.FileStatus]): Boolean = {
-    val counts = files.map(st => partCountOf(st.getPath.getName))
-    if (counts.forall(_.isEmpty)) true // pre-round-10 landing
-    else counts.flatten.distinct match {
-      case Seq(n) => counts.forall(_.isDefined) && files.size == n
-      case _ => false
-    }
-  }
-
-  /** Reconcile MARKERLESS batch tags across the tables of one index
-    * before a rewrite can absorb them — `tables` in APPEND ORDER (text:
-    * doclen then postings). The discriminator is the LAST table's file
-    * set, because [[appendBatchAs]] runs the tables in order:
-    *
-    *  - last table COMPLETE ⇒ the batch's data fully landed everywhere
-    *    (postings presence implies doclen landed — even when a crashed
-    *    earlier pass already absorbed the doclen copy and RETIRED its
-    *    marker, the legitimate state a naive
-    *    "complete-in-every-table" rule would misread as a crashed
-    *    append and silently destroy): PIN the fold marker, so the
-    *    rewrite may absorb the files and a retry skips;
-    *  - last table ABSENT or PARTIAL ⇒ the crash hit inside the batch's
-    *    append sequence; its files are uncommitted partial output:
-    *    SWEEP them all, so the rewrite cannot absorb them — the stream
-    *    re-presents the batch (the marker is written only after every
-    *    table's append, so an uncommitted batch always retries) and the
-    *    retry re-lands the whole batch under its persisted sequence
-    *    stamp ([[appendBatchAs]]'s `.seq_` sentinel survives the
-    *    sweep).
-    *
-    * Tags that already HAVE a marker are untouched: their partial
-    * presence is a previous compact having absorbed the other tables'
-    * files. */
-  private[graft] def sweepIncompleteBatches(s: SparkSession, tables: Seq[String],
-      markerDir: String): Unit = {
-    val mp = new org.apache.hadoop.fs.Path(markerDir)
-    val f = fs(s, mp)
-    val markers: Set[String] =
-      if (f.exists(mp)) f.listStatus(mp).toSeq.filter(_.isFile).map(_.getPath.getName).toSet
-      else Set.empty
-    val perTable: Seq[Map[String, Seq[org.apache.hadoop.fs.FileStatus]]] =
-      tables.map(t => dataFiles(s, t)
-        .flatMap(st => batchTagOf(st.getPath.getName).map(_ -> st))
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) })
-    val candidates = perTable.flatMap(_.keys).toSet -- markers
-    candidates.foreach { tag =>
-      val committed = perTable.last.get(tag).exists(tagComplete)
-      if (committed) {
-        f.mkdirs(mp)
-        f.create(new org.apache.hadoop.fs.Path(mp, tag), true).close()
-      } else perTable.foreach(_.get(tag).foreach(_.foreach { st =>
-        f.delete(st.getPath, false)
-      }))
-    }
-  }
-
-  private val markerNameRe = """^(.+)_b(\d+)$""".r
-  private val sentinelRe = """^(.+_b\d+)\.s(\d+)$""".r
-
-  /** Retire fold markers the engine's commit protocol makes
-    * unreachable. Structured Streaming starts micro-batch N only after
-    * batch N-1's checkpoint commit, so the EXISTENCE of a marker for
-    * batch N proves every batch below N committed and can never be
-    * re-presented — only each lineage's maximum batch id can still
-    * retry. Keeping exactly that one bounds the sidecar at one entry
-    * per checkpoint lineage regardless of stream lifetime (vs one empty
-    * file per micro-batch forever: ~0.5M namenode entries per index per
-    * year at 1-minute triggers). Runs at the compaction/publish
-    * cadence. */
-  private[graft] def retireMarkers(s: SparkSession, markerDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(markerDir)
-    val f = fs(s, p)
-    if (f.exists(p)) {
-      val parsed = f.listStatus(p).toSeq.filter(_.isFile).flatMap { st =>
-        st.getPath.getName match {
-          case markerNameRe(lineage, b) => Some((lineage, b.toLong, st.getPath))
-          case _ => None
-        }
-      }
-      parsed.groupBy(_._1).values.foreach { group =>
-        val keep = group.maxBy(_._2)._2
-        group.filter(_._2 < keep).foreach(m => f.delete(m._3, false))
-      }
-    }
-  }
-
-  /** Retire `.seq_` reuse-stamp sentinels whose batch can no longer
-    * retry: the tag was absorbed with its marker pinned this compact
-    * (the retry will skip on the marker), or a HIGHER batch id of the
-    * same lineage has a marker (the commit protocol proves this batch
-    * committed). Sentinels of swept incomplete batches stay — their
-    * retry needs the stamp. */
-  private def retireSeqSentinels(s: SparkSession, tablePath: String,
-      markerDir: String, pinnedTags: Seq[String]): Unit = {
-    val dest = new org.apache.hadoop.fs.Path(tablePath)
-    val f = fs(s, dest)
-    val mp = new org.apache.hadoop.fs.Path(markerDir)
-    val maxMarked: Map[String, Long] =
-      if (f.exists(mp)) f.listStatus(mp).toSeq.filter(_.isFile).flatMap {
-        _.getPath.getName match {
-          case markerNameRe(lineage, b) => Some(lineage -> b.toLong)
-          case _ => None
-        }
-      }.groupBy(_._1).map { case (l, v) => l -> v.map(_._2).max }
-      else Map.empty
-    val pinned = pinnedTags.toSet
-    tagSentinels(f, dest).foreach { case (tag, _, p) =>
-      val retired = pinned.contains(tag) || (tag match {
-        case markerNameRe(lineage, b) => maxMarked.get(lineage).exists(_ > b.toLong)
-        case _ => false
-      })
-      if (retired) f.delete(p, false)
-    }
-  }
-
-  private def markerPath(indexDir: String, lineage: String, batchId: Long) =
-    new org.apache.hadoop.fs.Path(s"$indexDir/_batches/${batchTag(lineage, batchId)}")
-
-  /** Has (lineage, batchId) already been folded into the index at
-    * `indexDir`? One filesystem existence probe — O(1) per trigger
-    * regardless of index size or stream age. */
-  def batchSeen(s: SparkSession, indexDir: String, lineage: String, batchId: Long): Boolean = {
-    val p = markerPath(indexDir, lineage, batchId)
-    fs(s, p).exists(p)
-  }
-
-  /** Record (lineage, batchId) as folded — called AFTER the batch's data
-    * append succeeds, so a crash in between leaves the marker absent and
-    * the retry re-lands (replaces) the batch's files. For a MULTI-TABLE
-    * index this is what defines batch commit: the marker is written only
-    * after EVERY table's append, and [[sweepIncompleteBatches]] treats a
-    * markerless tag missing from any table as uncommitted. */
-  def recordBatch(s: SparkSession, indexDir: String, lineage: String, batchId: Long): Unit = {
-    val p = markerPath(indexDir, lineage, batchId)
-    val f = fs(s, p)
-    f.mkdirs(p.getParent)
-    val out = f.create(p, true)
-    out.close()
-  }
-
-  /** Reuse-stamp sentinels live as SIBLINGS of the table directory
-    * (`parent/.seq_{table}.{tag}.s{seq}`), so the compaction swap —
-    * which replaces the table dir wholesale — cannot delete the stamp a
-    * swept incomplete batch's retry still needs. A retrain's indexDir
-    * swap does drop them, but it pins every standing tag's marker, so
-    * no retry that needed a stamp survives it. */
-  private def sentinelName(dest: org.apache.hadoop.fs.Path, tag: String, seq: Long) =
-    s".seq_${dest.getName}.$tag.s$seq"
-
-  private def tagSentinels(f: org.apache.hadoop.fs.FileSystem,
-      dest: org.apache.hadoop.fs.Path): Seq[(String, Long, org.apache.hadoop.fs.Path)] = {
-    val parent = dest.getParent
-    val prefix = s".seq_${dest.getName}."
-    if (parent == null || !f.exists(parent)) Seq.empty
-    else f.listStatus(parent).toSeq.filter(st => st.isFile &&
-        st.getPath.getName.startsWith(prefix)).flatMap { st =>
-      st.getPath.getName.substring(prefix.length) match {
-        case sentinelRe(tag, sq) => Some((tag, sq.toLong, st.getPath))
-        case _ => None
-      }
-    }
-  }
-
-  /** The persisted reuse-stamp sentinel of a tag, if present. */
-  private def sentinelSeqOf(f: org.apache.hadoop.fs.FileSystem,
-      dest: org.apache.hadoop.fs.Path, tag: String): Option[Long] =
-    tagSentinels(f, dest).collectFirst { case (t, sq, _) if t == tag => sq }
-
-  /** Append `df` to the parquet table at `tablePath` as batch `tag`,
-    * IDEMPOTENTLY: the batch's files land under deterministic names
-    * (`b$tag-N.c$parts.s$seq.parquet`) via an invisible staging dir, and
-    * any files a previous (crashed) attempt of the SAME tag left behind
-    * are swept first — so a retry replaces its own partial output
-    * instead of duplicating rows. The `.c$parts` segment advertises the
-    * landing's total part count, which is what lets a compaction detect
-    * (and refuse to absorb) a partial landing.
-    *
-    * A retry REUSES the first attempt's sequence stamp: a delete issued
-    * between the first landing and the retry watermarked its tombstone
-    * at the first attempt's sequence, and files re-landed under a fresh
-    * (higher) sequence would slip past that watermark — an acknowledged
-    * takedown silently undone. The stamp is PERSISTED in a hidden
-    * `.seq_{table}.{tag}.s{seq}` sentinel (a sibling of the table dir)
-    * BEFORE the first landing, so it
-    * survives every crash shape — including the window where the
-    * retry's sweep removed the first attempt's files but its renames
-    * never ran (zero `b$tag` files standing), which under the
-    * names-only scheme silently minted a fresh stamp. Sentinels retire
-    * at the compaction cadence once their batch is provably committed.
-    * Underscore-prefixed staging is invisible to every table read. */
-  def appendBatchAs(s: SparkSession, df: DataFrame, tablePath: String,
-      tag: String): Unit = lockFor(s, tablePath).synchronized {
-    withLease(s, tablePath) {
-      recoverPromote(s, tablePath)
-      val dest = new org.apache.hadoop.fs.Path(tablePath)
-      val f = fs(s, dest)
-      val fromFiles: Option[Long] =
-        if (!f.exists(dest)) None
-        else f.listStatus(dest).toSeq
-          .filter(st => st.isFile && st.getPath.getName.startsWith(s"b$tag-"))
-          .map(st => fileSeqOf(st.getPath.getName))
-          .reduceOption((a, b) => math.min(a, b))
-      val seq = sentinelSeqOf(f, dest, tag)
-        .orElse(fromFiles)
-        .getOrElse(nextSeq(s, tablePath))
-      // raise-only: a sentinel/files-derived stamp must not SEED a cold
-      // cache below a pending tombstone watermark (lost-append window)
-      raiseSeq(s, tablePath, seq)
-      // persist the stamp before anything can remove the files carrying
-      // it (this landing's own sweep on retry, or a maintenance sweep of
-      // an incomplete landing); sibling placement survives the compact
-      // swap of the table dir
-      if (sentinelSeqOf(f, dest, tag).isEmpty)
-        f.create(new org.apache.hadoop.fs.Path(
-          Option(dest.getParent).getOrElse(dest), sentinelName(dest, tag, seq)), true).close()
-      // round-8 batches were tagged `${lineage}_${batchId}` (no 'b'
-      // before the id): a pre-upgrade crashed attempt's files would
-      // escape the sweep under the round-9+ spelling and the retry
-      // would append alongside them as duplicates — sweep the legacy
-      // spelling too (the trailing '-' keeps batch 5 from matching 50)
-      val legacy = tag.replaceFirst("_b(\\d+)$", "_$1")
-      if (legacy != tag && f.exists(dest)) f.listStatus(dest).toSeq
-        .filter(st => st.isFile && st.getPath.getName.startsWith(s"b$legacy-"))
-        .foreach(st => f.delete(st.getPath, false))
-      landAs(s, df, dest, (i, n) => s"b$tag-$i.c$n.s$seq.parquet", s"_staging_$tag",
-        sweepPrefix = Some(s"b$tag-"))
-    }
-  }
-
-  /** Plain (un-tagged) sequenced append — the batch-mode form of
-    * [[appendBatchAs]] for direct `*IndexAppend` calls outside a
-    * streaming loop. Files land as `p-N.s$seq.parquet` under a fresh
-    * sequence stamp, so a delete-then-re-append serves immediately on
-    * any filesystem (the stamp, not the file mtime, is the row's
-    * sequence). Successive appends get distinct stamps, so names never
-    * collide. NOT retry-idempotent (no tag to sweep) — callers that
-    * can be retried use the tagged form. */
-  def appendPlain(s: SparkSession, df: DataFrame, tablePath: String): Unit =
-    lockFor(s, tablePath).synchronized {
-      withLease(s, tablePath) {
-        recoverPromote(s, tablePath)
-        val dest = new org.apache.hadoop.fs.Path(tablePath)
-        val seq = nextSeq(s, tablePath)
-        landAs(s, df, dest, (i, _) => s"p-$i.s$seq.parquet", s"_staging_p$seq",
-          sweepPrefix = None)
-      }
-    }
-
-  /** Write `df` through an invisible staging dir, then rename its parts
-    * into `dest` under `nameOf(i, parts)` (sweeping `sweepPrefix`-
-    * matching leftovers first, for the idempotent tagged form). */
-  private def landAs(s: SparkSession, df: DataFrame, dest: org.apache.hadoop.fs.Path,
-      nameOf: (Int, Int) => String, stagingName: String, sweepPrefix: Option[String]): Unit = {
-    val f = fs(s, dest)
-    val staging = new org.apache.hadoop.fs.Path(dest, stagingName)
-    df.write.mode("overwrite").parquet(staging.toString)
-    sweepPrefix.foreach { pre =>
-      // a retry may write a different part count — every match must go
-      if (f.exists(dest)) f.listStatus(dest).toSeq
-        .filter(st => st.isFile && st.getPath.getName.startsWith(pre))
-        .foreach(st => f.delete(st.getPath, false))
-    }
-    val parts = f.listStatus(staging).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    parts.zipWithIndex.foreach { case (st, i) =>
-      val to = new org.apache.hadoop.fs.Path(dest, nameOf(i, parts.size))
-      if (!f.rename(st.getPath, to))
-        throw new java.io.IOException(s"landAs: rename ${st.getPath} -> $to failed")
-    }
-    f.delete(staging, true)
-  }
-
-  /** The compaction-cadence invariant the per-batch anti-join used to
-    * enforce inline: every servable id appears at most `maxPerKey` times
-    * under `keyCols`. Raises loudly on violation (a duplicate row would
-    * double-score its vector in every probed cell). Amortized to one
-    * index aggregation per compaction cadence, not per batch. */
-  def checkUnique(s: SparkSession, tablePath: String, keyCols: Seq[String],
+  /** The invariant the batch marks guarantee: every servable id appears
+    * at most once under `keyCols`. Raises loudly on violation (a
+    * duplicate row would double-score in every probe). Run at the
+    * compaction cadence, not per batch. */
+  def checkUnique(s: SparkSession, dir: String, table: String, keyCols: Seq[String],
       idCol: String): Unit = {
     import org.apache.spark.sql.functions.{count, lit}
-    val dup = minusTombstones(s, tablePath, s.read.parquet(tablePath), idCol)
+    val dup = scan(s, dir, table, idCol)
       .groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).count()
     require(dup == 0L,
-      s"checkUnique($tablePath): duplicate ${keyCols.mkString("(", ",", ")")} rows — " +
-      "a batch was folded twice outside the idempotent-append path")
-  }
-
-  // ------------------------------------------------- delete / retraction
-  //
-  // Takedown (opt-out, contaminated-source retraction) is routine at
-  // training-data scale, and an append-only index family needs a
-  // defined path for it. The move is the standard LSM one: a DELETE
-  // appends the id to a tiny tombstone table stored INSIDE the index
-  // table's directory (`_tombstones` — the underscore prefix keeps
-  // every parquet read of the table itself from seeing it), serving
-  // anti-joins the tombstones out IMMEDIATELY (a deleted doc is gone
-  // from the next query, no rebuild on the critical path), and the
-  // next compaction physically drops the rows and retires the
-  // tombstones it consumed (with the post-promote re-check in
-  // [[compactTable]] covering deletes that raced the rewrite). Deletes
-  // are idempotent by construction: a double delete appends a duplicate
-  // tombstone row, and both the serve-time mask and the compact rewrite
-  // are set operations.
-  //
-  // Tombstones are SEQUENCED against the per-table write sequence (see
-  // the stamp machinery at the top of this file): each delete records
-  // the max file-name sequence stamp at issue — a snapshot watermark —
-  // and masks ONLY rows from files at-or-before it. An append AFTER the
-  // delete lands under a strictly higher stamp and serves immediately,
-  // so takedown-then-restored-license (delete -> re-append the same id)
-  // needs no intervening compaction; the masked older copy is
-  // physically dropped at the next compact as before. The row-side
-  // sequence is parsed from the parquet `_metadata.file_name`
-  // pseudo-column at scan time — no schema change to any index table,
-  // and (unlike the previous file-mtime watermark) no dependence on
-  // filesystem timestamp granularity: on a second-resolution or
-  // mtime-less object store the old scheme could stamp a legitimate
-  // re-append EQUAL to the delete's watermark, silently mask it, and
-  // then physically drop it at the next compact.
-
-  /** Tombstone ids against the parquet table at `tablePath`, sequenced
-    * at the current file-set watermark. Idempotent. */
-  def deleteIds(s: SparkSession, tablePath: String, ids: Seq[Long]): Unit =
-    lockFor(s, tablePath).synchronized {
-      withLease(s, tablePath) {
-        require(ids.nonEmpty, "deleteIds: empty id list")
-        recoverPromote(s, tablePath)
-        import s.implicits._
-        val seq = dataFiles(s, tablePath)
-          .map(st => fileSeqOf(st.getPath.getName)).foldLeft(0L)(math.max)
-        // raise-only: this is a files-only watermark — seeding a cold
-        // cache with it would bypass nextSeq's pending-tombstone fold
-        // and let a later append stamp under a standing watermark
-        raiseSeq(s, tablePath, seq)
-        ids.map(i => (i, seq)).toDF("id", "del_seq").coalesce(1)
-          .write.mode("append").parquet(s"$tablePath/_tombstones")
-      }
-    }
-
-  /** Pending (id, del_seq) tombstones of `tablePath`, if any. */
-  def pendingTombstones(s: SparkSession, tablePath: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$tablePath/_tombstones")
-    if (fs(s, p).exists(p))
-      Some(s.read.parquet(p.toString).select(col("id"), col("del_seq")).distinct())
-    else None
-  }
-
-  /** `df` minus rows masked by a pending tombstone — the serve-time
-    * filter every index read applies. Zero plan overhead when no delete
-    * is pending (the common case: no tombstone dir, no join). When
-    * deletes ARE pending, the table is re-read with the file-name
-    * pseudo-column so each row carries its sequence stamp (`df` must be
-    * a plain read of `tablePath`, which every caller's is — possibly
-    * memoized; the re-read deliberately bypasses the memo only on this
-    * rare path), and a row survives iff its file's stamp is strictly
-    * above every pending delete of its id. */
-  def minusTombstones(s: SparkSession, tablePath: String, df: DataFrame,
-      idCol: String): DataFrame =
-    pendingTombstones(s, tablePath).fold(df) { t =>
-      maskBySeq(s, t, s.read.parquet(tablePath), df.columns.toSeq, idCol)
-    }
-
-  /** [[minusTombstones]] over an explicit FILE SUBSET of `tablePath`
-    * (its appended tail, typically): the subset is re-read with the
-    * file-name pseudo-column so rows carry their sequence stamps, then
-    * masked against the TABLE's pending tombstones. Needed because the
-    * tail frames feeding MaxScore's contender-by-inclusion lists are
-    * not plain table reads — left unmasked, a mass takedown of tail
-    * docs would inflate the contender counts toward the candidate cap
-    * and flip the serve to the unbounded fallback over docs that are
-    * already dead. Identity (zero plan overhead) when no delete is
-    * pending, like the table form. */
-  private[graft] def minusTombstonesFiles(s: SparkSession, tablePath: String,
-      files: Seq[String], idCol: String): DataFrame = {
-    val base = s.read.parquet(files: _*)
-    pendingTombstones(s, tablePath).fold(base) { t =>
-      maskBySeq(s, t, base, base.columns.toSeq, idCol)
-    }
-  }
-
-  private def maskBySeq(s: SparkSession, tombs: DataFrame, reread: DataFrame,
-      columns: Seq[String], idCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.{lit, max, regexp_extract, when}
-    val dels = tombs.groupBy(col("id")).agg(max(col("del_seq")).as("_del_seq"))
-      .withColumnRenamed("id", idCol)
-    val stamp = regexp_extract(col("_metadata.file_name"), "\\.s(\\d+)\\.parquet$", 1)
-    reread
-      // no-match yields "" (unstamped build/compact files = seq 0);
-      // guard the cast — ANSI mode throws on "" -> long
-      .select(when(stamp === "", lit(0L)).otherwise(stamp.cast("long")).as("_fseq") +:
-        columns.map(col): _*)
-      // gated, not forced: dels grows with the takedown volume since
-      // the last compact — normally tiny, but a mass takedown must
-      // not be hint-collected onto the driver past the threshold
-      .join(JoinHints.broadcastIfSmall(dels), Seq(idCol), "left")
-      .filter(col("_del_seq").isNull || col("_fseq") > col("_del_seq"))
-      .select(columns.map(col): _*)
+      s"checkUnique($dir/$table): duplicate ${keyCols.mkString("(", ",", ")")} rows — " +
+      "a batch was folded twice")
   }
 }

@@ -233,8 +233,7 @@ object Retrieval {
     // index state it was stored under however late it is consumed.
     val lex = Artifacts.frameAtGeneration(s, idxDir,
         s"hybrid-lex-served|${banned.sorted.mkString("\u0001")}|$dir") {
-      val postings = IndexMaintenance.minusTombstones(s, s"$idxDir/postings",
-          s.read.parquet(s"$idxDir/postings"), "doc_id")
+      val postings = IndexMaintenance.scan(s, idxDir, "postings", "doc_id")
         .select(col("doc_id"), col("term"), col("tf"))
       lexRanksOver(s, dir, postings, banned,
         doclenStats = Some(TextAnalysis.textIndexDoclenStats(s, idxDir)))
@@ -326,22 +325,18 @@ object Retrieval {
   private[graft] def hybridMaxScoreLex(s: SparkSession, dir: String,
       idxDir: String,
       maxDfShare: Double = TextAnalysis.bm25MaxDfShare): Option[(DataFrame, DataFrame)] = {
-    val tsPath = new org.apache.hadoop.fs.Path(s"$idxDir/termstats")
-    if (!tsPath.getFileSystem(s.sparkContext.hadoopConfiguration).exists(tsPath))
-      return None
-    val ts = s.read.parquet(s"$idxDir/termstats")
-    if (!ts.columns.contains("ub")) return None
+    val snap = IndexMaintenance.snapshot(s, idxDir)
+    val ts = snap.read(s, "termstats")
     val tombPending =
-      IndexMaintenance.pendingTombstones(s, s"$idxDir/postings").isDefined ||
-      IndexMaintenance.pendingTombstones(s, s"$idxDir/doclen").isDefined
+      snap.tombstonesOf("postings").nonEmpty || snap.tombstonesOf("doclen").nonEmpty
     val banned = scala.util.Try(
       TextAnalysis.bannedTerms(s, idxDir, maxDfShare)).getOrElse(return None)
     if (banned.isEmpty) return None // no mega posting to avoid
-    val st = s.read.parquet(s"$idxDir/stats").head()
+    val st = snap.read(s, "stats").head()
     val nDocsFrozen = st.getLong(0)
     val slots = 1 to hybridQueryTerms
     val k = TextAnalysis.bm25TopK.toLong
-    val tailFiles = IndexMaintenance.appendedTailFiles(s, s"$idxDir/postings")
+    val tail = snap.tail(s, "postings", "doc_id")
     // dl + live 1-row stats — the exact frames the unbounded serve
     // scores with (consistency by shared source, not by precondition)
     val (doclen, statsLive) = TextAnalysis.textIndexDoclenStats(s, idxDir)
@@ -357,8 +352,7 @@ object Retrieval {
       .select(col("q_id"), col("pos"), col("qt"),
         coalesce(col("df"), lit(0L)).as("dict_df"),
         coalesce(col("ub"), lit(0.0)).as("ub"))
-    val maskedPostings = IndexMaintenance.minusTombstones(s, s"$idxDir/postings",
-      s.read.parquet(s"$idxDir/postings"), "doc_id")
+    val maskedPostings = snap.scan(s, "postings", "doc_id")
     val qslots = (if (tombPending) {
         // pending deletes: dict+tail arithmetic can't see which rows the
         // sequenced mask hides — join the masked per-term count instead
@@ -373,9 +367,9 @@ object Retrieval {
         dictSlots.join(liveDf, col("qt") === col("_tt"), "left")
           .withColumn("df", coalesce(col("_live_df"), lit(0L)))
           .drop("_tt", "_live_df")
-      } else if (tailFiles.isEmpty) dictSlots.withColumn("df", col("dict_df"))
+      } else if (tail.isEmpty) dictSlots.withColumn("df", col("dict_df"))
       else {
-        val tailDf = s.read.parquet(tailFiles: _*)
+        val tailDf = tail.get
           .groupBy(col("term").as("_tt")).agg(count(lit(1)).as("_tail_df"))
         dictSlots.join(tailDf, col("qt") === col("_tt"), "left")
           .withColumn("df", col("dict_df") + coalesce(col("_tail_df"), lit(0L)))
@@ -445,10 +439,7 @@ object Retrieval {
     // pivot never saw
     val megaSlots = qslots.filter(col("is_mega"))
       .select(col("q_id"), col("pos"), col("qt"), col("df").as("mdf"))
-    val tailMegaPairs: Option[DataFrame] =
-      if (tailFiles.isEmpty) None
-      else Some(IndexMaintenance.minusTombstonesFiles(s, s"$idxDir/postings",
-          tailFiles, "doc_id")
+    val tailMegaPairs: Option[DataFrame] = tail.map(_
         .filter(col("term").isin(banned: _*))
         .select(col("term").as("qt"), col("doc_id"))
         .join(megaSlots.select(col("q_id"), col("qt")), "qt")

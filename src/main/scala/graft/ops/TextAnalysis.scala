@@ -731,12 +731,12 @@ object TextAnalysis {
     f.delete(root, true)
     if (!f.rename(stage, root))
       throw new java.io.IOException(s"bpeModelPersist: rename $stage -> $root failed")
-    IndexMaintenance.commitMarkerCreate(f, root, bpeModelCommitMarker)
+    Lease.commitMarkerCreate(f, root, bpeModelCommitMarker)
   }
 
   /** Completion marker of a persisted BPE model dir, created after the
     * stage→root swap FINISHED — the copy-rename commit protocol shared
-    * with the ledger rollups ([[IndexMaintenance.commitMarkerCreate]]).
+    * with the ledger rollups ([[Lease.commitMarkerCreate]]).
     * A model dir without it is incomplete and every reader fails
     * loudly instead of serving a truncated tokenizer. MIGRATION NOTE:
     * artifacts persisted before this marker existed (pre-round-15)
@@ -749,7 +749,7 @@ object TextAnalysis {
 
   private def requireCommittedModel(s: SparkSession, modelDir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(modelDir)
-    if (!IndexMaintenance.commitMarkerPresent(
+    if (!Lease.commitMarkerPresent(
         p.getFileSystem(s.sparkContext.hadoopConfiguration), p, bpeModelCommitMarker))
       throw new IllegalStateException(
         s"BPE model at $modelDir has no $bpeModelCommitMarker — the artifact is " +
@@ -1407,8 +1407,7 @@ object TextAnalysis {
     * retrieval needs at 100 TB; same tail as the scan path ⇒ shared
     * oracle. */
   def textPhraseServed(s: SparkSession, indexDir: String): DataFrame = {
-    val hits = IndexMaintenance.minusTombstones(s, s"$indexDir/postings",
-        s.read.parquet(s"$indexDir/postings"), "doc_id")
+    val hits = IndexMaintenance.scan(s, indexDir, "postings", "doc_id")
       .filter(col("term").isin(phraseQuery: _*))
     phraseHits(phraseQuery.zipWithIndex.map { case (t, i) =>
       hits.filter(col("term") === t).select(col("doc_id"), col("positions").as(s"pos_$i"))
@@ -1571,27 +1570,35 @@ object TextAnalysis {
     * the serving read its shape (only the QUERY TERMS' postings are
     * scanned — pinned by the `PlanGuardSpec` pushdown guard). */
   def textIndexWrite(s: SparkSession, corpusDir: String, indexDir: String): Unit = {
-    val base = indexableDocs(Tables(s, corpusDir, "documents"))
-    // doclen doubles as the DOC-VALUES table (lang, source alongside
-    // dl): filtered serving prunes on these at the parquet scan without
-    // ever touching the corpus — the stored-fields shape every lexical
-    // engine persists next to its postings
-    base.select(col("doc_id"), col("dl"), col("lang"), col("source"))
-      .write.mode("overwrite").parquet(s"$indexDir/doclen")
-    // positions ride in the postings rows (the Lucene-standard layout):
-    // tf-only consumers ignore the column, phrase serving reads it —
-    // the honest storage cost of positional retrieval, ~the token
-    // stream itself, paid once at index time
+    // one tokenize feeds all four tables, which commit together
+    val base = indexableDocs(Tables(s, corpusDir, "documents")).persist()
+    try IndexMaintenance.transact(s, indexDir) { _ =>
+      // doclen doubles as the DOC-VALUES table (lang, source alongside
+      // dl): filtered serving prunes on these at the parquet scan without
+      // ever touching the corpus — the stored-fields shape every lexical
+      // engine persists next to its postings
+      val doclen = base.select(col("doc_id"), col("dl"), col("lang"), col("source"))
+      // positions ride in the postings rows (the Lucene-standard layout):
+      // tf-only consumers ignore the column, phrase serving reads it —
+      // the honest storage cost of positional retrieval, ~the token
+      // stream itself, paid once at index time
+      val postings = postingsOf(base)
+      IndexMaintenance.Change(replace = statsTables(doclen, postings) ++
+        Seq("doclen" -> doclen, "postings" -> postings))
+    } finally base.unpersist()
+  }
+
+  /** (term, doc_id, tf, positions) rows of a tokenized doc frame. */
+  private def postingsOf(base: DataFrame): DataFrame =
     base.select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "term")))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"),
         sort_array(collect_list(col("pos").cast("long"))).as("positions"))
-      .write.mode("overwrite").parquet(s"$indexDir/postings")
-    base.agg(count(lit(1)).as("n_docs"),
-        (sum(col("dl")).cast("double") / count(lit(1)).cast("double")).as("avgdl"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/stats")
-    writeTermStats(s, indexDir)
-  }
+
+  /** The 1-row corpus stats (n_docs, avgdl) of a doclen frame. */
+  private def statsOf(doclen: DataFrame): DataFrame =
+    doclen.agg(count(lit(1)).as("n_docs"),
+      (sum(col("dl")).cast("double") / count(lit(1)).cast("double")).as("avgdl"))
 
   /** The LIVE (doclen, 1-row stats) pair of a persisted text index —
     * the dl/n_docs/avgdl source the hybrid serving family shares, so
@@ -1608,20 +1615,18 @@ object TextAnalysis {
     * (the compaction cadence bounds that window). */
   private[graft] def textIndexDoclenStats(s: SparkSession,
       indexDir: String): (DataFrame, DataFrame) = {
-    val doclen = IndexMaintenance.minusTombstones(s, s"$indexDir/doclen",
-        s.read.parquet(s"$indexDir/doclen"), "doc_id")
-      .select(col("doc_id"), col("dl"))
-    val fresh =
-      IndexMaintenance.appendedTailFiles(s, s"$indexDir/doclen").isEmpty &&
-      IndexMaintenance.pendingTombstones(s, s"$indexDir/doclen").isEmpty
+    val snap = IndexMaintenance.snapshot(s, indexDir)
+    val doclen = snap.scan(s, "doclen", "doc_id").select(col("doc_id"), col("dl"))
+    val fresh = snap.appendedBatches("doclen") == 0 && snap.tombstonesOf("doclen").isEmpty
     val stats =
-      if (fresh) s.read.parquet(s"$indexDir/stats").select(col("n_docs"), col("avgdl"))
-      else doclen.agg(count(lit(1)).as("n_docs"),
-        (sum(col("dl")).cast("double") / count(lit(1)).cast("double")).as("avgdl"))
+      if (fresh) snap.read(s, "stats").select(col("n_docs"), col("avgdl"))
+      else statsOf(doclen)
     (doclen, stats)
   }
 
-  /** (Re)build the TERM DICTIONARY sidecar: one (term, df, ub) row per
+  /** The 1-row corpus stats of `doclen` and the TERM DICTIONARY of
+    * `postings`, as the two tables a build or compaction commits. The
+    * dictionary is one (term, df, ub) row per
     * vocabulary term, term-sorted so a query-term lookup prunes to a
     * few row groups. This is what lets the bounded serve decide "is
     * this query term a mega-posting stopword?" from an O(|query|) read
@@ -1643,23 +1648,16 @@ object TextAnalysis {
     * postings×doclen join at every rebuild, a real tax on the
     * streaming compact cadence for a bound whose slack the idf factor
     * dwarfs anyway. */
-  private def writeTermStats(s: SparkSession, indexDir: String): Unit = {
-    val dest = new org.apache.hadoop.fs.Path(s"$indexDir/termstats")
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/.termstats.tmp")
-    val st = s.read.parquet(s"$indexDir/stats").head()
-    val nDocs = st.getLong(0)
+  private def statsTables(doclen: DataFrame, postings: DataFrame): Seq[(String, DataFrame)] = {
+    val stats = materializedNow(doclen.sparkSession, statsOf(doclen))
+    val nDocs = stats.head().getLong(0)
     val idf = bm25Idf(col("df"), lit(nDocs.toDouble))
     val mtfn = (col("_maxtf").cast("double") * lit(bm25K1 + 1.0)) /
       (col("_maxtf").cast("double") + lit(bm25K1) * lit(1.0 - bm25B))
-    s.read.parquet(s"$indexDir/postings")
+    Seq("stats" -> stats.coalesce(1), "termstats" -> postings
       .groupBy(col("term")).agg(count(lit(1)).as("df"), max(col("tf")).as("_maxtf"))
       .select(col("term"), col("df"), (idf * mtfn).as("ub"))
-      .repartitionByRange(1, col("term")).sortWithinPartitions(col("term"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    val f = dest.getFileSystem(s.sparkContext.hadoopConfiguration)
-    f.delete(dest, true)
-    if (!f.rename(tmp, dest))
-      throw new java.io.IOException(s"writeTermStats: rename $tmp -> $dest failed")
+      .repartitionByRange(1, col("term")).sortWithinPartitions(col("term")))
   }
 
   /** The tokenized per-document frame both index writers share: one
@@ -1680,32 +1678,15 @@ object TextAnalysis {
     * [[textIndexCompact]] — the Lucene semantic (segment commits don't
     * re-estimate global statistics; merges do). Per-term df is immune:
     * the serve derives it from the postings at query time, so it is
-    * always current. `tag` gives the crash-safe deterministic file
-    * names ([[IndexMaintenance.appendBatchAs]]) the streaming ingest
-    * loop's retry semantics need. Both table appends run under ONE
-    * index-scoped maintenance acquisition, so a concurrent compaction
-    * cannot absorb the doclen files of a batch whose postings append is
-    * still in flight — the batch is atomic against maintenance, and the
-    * fold marker (written by the caller after this returns) is the
-    * commit point the sweep in [[IndexMaintenance.sweepIncompleteBatches]]
-    * discriminates on. */
+    * always current. Both tables commit as ONE log version, with the
+    * streaming batch `mark` when given: a compaction never sees half a
+    * batch, and a retried batch lands nothing. */
   def textIndexAppendBatch(s: SparkSession, batch: DataFrame, indexDir: String,
-      tag: Option[String] = None): Unit = IndexMaintenance.withIndexMaintenance(s, indexDir) {
+      mark: Option[(String, Long)] = None): Unit = {
     val base = indexableDocs(batch)
-    val doclen = base.select(col("doc_id"), col("dl"), col("lang"), col("source"))
-    val postings = base
-      .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "term")))
-      .groupBy(col("term"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos").cast("long"))).as("positions"))
-    tag match {
-      case Some(t) =>
-        IndexMaintenance.appendBatchAs(s, doclen, s"$indexDir/doclen", t)
-        IndexMaintenance.appendBatchAs(s, postings, s"$indexDir/postings", t)
-      case None =>
-        IndexMaintenance.appendPlain(s, doclen, s"$indexDir/doclen")
-        IndexMaintenance.appendPlain(s, postings, s"$indexDir/postings")
-    }
+    IndexMaintenance.append(s, indexDir, Seq(
+      "doclen" -> base.select(col("doc_id"), col("dl"), col("lang"), col("source")),
+      "postings" -> postingsOf(base)), mark)
   }
 
   /** BM25 over a PERSISTED index: the corpus is never re-tokenized —
@@ -1730,8 +1711,7 @@ object TextAnalysis {
     // which zeroes its score contribution and its candidate-membership
     // test — the semantics the bounded oracle restates in SQL.
     val activeTerms = maxDfShare.fold(bm25Query)(boundedQueryTerms(s, indexDir, bm25Query, _))
-    val hits = IndexMaintenance.minusTombstones(s, s"$indexDir/postings",
-        s.read.parquet(s"$indexDir/postings"), "doc_id")
+    val hits = IndexMaintenance.scan(s, indexDir, "postings", "doc_id")
       .filter(col("term").isin(activeTerms: _*))
     val perDocAggs = bm25Query.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"tf_$i")
@@ -1743,11 +1723,10 @@ object TextAnalysis {
     // df stays whole-corpus even when serving a slice — frozen index
     // statistics (see [[bm25FilterLang]])
     val dfs = hits.agg(dfAggs.head, dfAggs.tail: _*)
-    val stats = s.read.parquet(s"$indexDir/stats")
+    val stats = IndexMaintenance.read(s, indexDir, "stats")
     // the slice predicate prunes on the doc-values scan; the inner join
     // then drops out-of-slice posting hits before scoring
-    val doclenAll = IndexMaintenance.minusTombstones(s, s"$indexDir/doclen",
-      s.read.parquet(s"$indexDir/doclen"), "doc_id")
+    val doclenAll = IndexMaintenance.scan(s, indexDir, "doclen", "doc_id")
     val doclen = memberPred.fold(doclenAll)(doclenAll.filter(_))
     bm25Rank(perDoc
       .join(doclen, "doc_id")
@@ -1764,8 +1743,8 @@ object TextAnalysis {
     * n_docs/avgdl). */
   private[graft] def boundedQueryTerms(s: SparkSession, indexDir: String,
       terms: Seq[String], maxDfShare: Double): Seq[String] = {
-    val nDocs = s.read.parquet(s"$indexDir/stats").head().getLong(0)
-    val dfOf = s.read.parquet(s"$indexDir/termstats")
+    val nDocs = IndexMaintenance.read(s, indexDir, "stats").head().getLong(0)
+    val dfOf = IndexMaintenance.read(s, indexDir, "termstats")
       .filter(col("term").isin(terms: _*))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     terms.filter(t => dfOf.getOrElse(t, 0L).toDouble <= maxDfShare * nDocs)
@@ -1779,8 +1758,8 @@ object TextAnalysis {
     * collect is bounded in practice; the guard caps it loudly. */
   private[graft] def bannedTerms(s: SparkSession, indexDir: String,
       maxDfShare: Double, cap: Int = 10000): Seq[String] = {
-    val nDocs = s.read.parquet(s"$indexDir/stats").head().getLong(0)
-    val b = s.read.parquet(s"$indexDir/termstats")
+    val nDocs = IndexMaintenance.read(s, indexDir, "stats").head().getLong(0)
+    val b = IndexMaintenance.read(s, indexDir, "termstats")
       .filter(col("df").cast("double") > lit(maxDfShare) * lit(nDocs.toDouble))
       .select(col("term")).limit(cap + 1).collect().map(_.getString(0)).toSeq
     require(b.size <= cap,
@@ -1849,12 +1828,10 @@ object TextAnalysis {
     // doc seating the floor would push it too HIGH — an unsound prune —
     // and a delete-then-reappend's duplicated doclen row would double a
     // survivor's e the same way
-    val eScores = IndexMaintenance.minusTombstones(s, s"$indexDir/postings",
-        s.read.parquet(s"$indexDir/postings"), "doc_id")
+    val eScores = IndexMaintenance.scan(s, indexDir, "postings", "doc_id")
       .filter(col("term").isin(cheap: _*))
       .select(col("doc_id"), col("term"), col("tf"))
-      .join(IndexMaintenance.minusTombstones(s, s"$indexDir/doclen",
-          s.read.parquet(s"$indexDir/doclen"), "doc_id")
+      .join(IndexMaintenance.scan(s, indexDir, "doclen", "doc_id")
         .select(col("doc_id"), col("dl")), "doc_id")
       .groupBy(col("doc_id")).agg(sum(idfCol * tfn).as("e"))
     val floorDf = eScores.orderBy(col("e").desc, col("doc_id"))
@@ -1886,13 +1863,12 @@ object TextAnalysis {
     *     survivors are the CONTENDERS, typically ≈ k on a Zipf corpus
     *     (the mega head's ub ≈ idf ≈ 0 at high df-share).
     *
-    * SEGMENT MODEL (round 12 — Lucene's per-segment bounds): an append
-    * since the last rebuild no longer forces the unbounded serve. The
-    * dictionary exactly describes the COMPACTED segment (rebuilds and
-    * compacts recompute it; appends land as sequence-stamped files next
-    * to the unstamped base — [[IndexMaintenance.appendedTailFiles]]
-    * tells them apart from one FS listing, replacing the per-serve
-    * doclen footer count the old freshness probe paid). The appended
+    * SEGMENT MODEL (Lucene's per-segment bounds): an append since the
+    * last rebuild does not force the unbounded serve. The dictionary
+    * exactly describes the COMPACTED segment (rebuilds and compacts
+    * recompute it; appended files carry their commit's sequence in the
+    * index log, rewrites sequence 0 — [[IndexMaintenance.Snapshot.tail]]
+    * tells them apart with no listing). The appended
     * TAIL is scanned once, pruned to the query terms: its per-term rows
     * give the LIVE df (dict + tail — equal to the posting-row count the
     * unbounded serve derives), and every tail doc matching a mega term
@@ -1910,8 +1886,8 @@ object TextAnalysis {
     * the mega list to the contenders' row groups: the parquet analog of
     * Lucene's skip pointers.
     *
-    * TOMBSTONES (round 13 — Lucene's delete masks): a pending takedown
-    * no longer disables bounded serving until the next compact. The
+    * TOMBSTONES (Lucene's delete masks): a pending takedown does not
+    * disable bounded serving until the next compact. The
     * e-score floor scan is tombstone-masked (a deleted doc must not
     * seat the floor), the contender re-score masks like every index
     * read, and the live df comes from ONE masked, query-term-pruned
@@ -1928,8 +1904,7 @@ object TextAnalysis {
     * maxTf stays sound in both directions (appends are contenders by
     * inclusion, deletes only shrink it) and the bound's dl→0 limit is
     * avgdl-free.
-    * Remaining fallbacks (returning None): a dictionary without `ub`
-    * (pre-round-10), no mega term / no cheap term / cheap floor
+    * Remaining fallbacks (returning None): no mega term / no cheap term / cheap floor
     * unseated, a mega-only doc that could reach the floor, or a
     * contender set too large to push as an IN filter.
     *
@@ -1948,15 +1923,11 @@ object TextAnalysis {
 
   private def maxScoreContendersUncached(s: SparkSession, indexDir: String,
       maxDfShare: Double, minMegaRows: Long): Option[MaxScorePrune] = {
-    val tsPath = new org.apache.hadoop.fs.Path(s"$indexDir/termstats")
-    if (!tsPath.getFileSystem(s.sparkContext.hadoopConfiguration).exists(tsPath))
-      return None // pre-dictionary index layout: fall back, don't throw
-    val ts = s.read.parquet(s"$indexDir/termstats")
-    if (!ts.columns.contains("ub")) return None // pre-round-10 dictionary
+    val snap = IndexMaintenance.snapshot(s, indexDir)
+    val ts = snap.read(s, "termstats")
     val tombPending =
-      IndexMaintenance.pendingTombstones(s, s"$indexDir/postings").isDefined ||
-      IndexMaintenance.pendingTombstones(s, s"$indexDir/doclen").isDefined
-    val st = s.read.parquet(s"$indexDir/stats").head()
+      snap.tombstonesOf("postings").nonEmpty || snap.tombstonesOf("doclen").nonEmpty
+    val st = snap.read(s, "stats").head()
     val nDocs = st.getLong(0)
     val avgdl = st.getDouble(1)
     val dict = ts.filter(col("term").isin(bm25Query: _*))
@@ -1974,15 +1945,14 @@ object TextAnalysis {
     if (mega.map(t => dict(t)._1).sum < minMegaRows) return None
     // the appended tail's query-term rows: live df deltas + the tail's
     // mega-matching docs (contenders by inclusion, not by bound)
-    val tailFiles = IndexMaintenance.appendedTailFiles(s, s"$indexDir/postings")
     val (tailDf, megaTail): (Map[String, Long], Seq[Long]) =
-      if (tailFiles.isEmpty) (Map.empty, Seq.empty)
-      else {
+      snap.tail(s, "postings", "doc_id") match {
+        case None => (Map.empty, Seq.empty)
+        case Some(tail) =>
         // tombstone-masked like the table reads (identity when none
         // pending): a deleted tail doc must not count toward the
         // contender cap or the inclusion list
-        val tseg = IndexMaintenance.minusTombstonesFiles(s, s"$indexDir/postings",
-            tailFiles, "doc_id")
+        val tseg = tail
           .filter(col("term").isin(bm25Query: _*))
           .select(col("term"), col("doc_id"))
         // the tail df deltas feed only the no-tombstone arithmetic —
@@ -2007,8 +1977,7 @@ object TextAnalysis {
         // rows the sequenced mask hides — count the masked, term-pruned
         // posting rows instead (the identical relation the unbounded
         // serve aggregates its df from)
-        val m = IndexMaintenance.minusTombstones(s, s"$indexDir/postings",
-            s.read.parquet(s"$indexDir/postings"), "doc_id")
+        val m = snap.scan(s, "postings", "doc_id")
           .filter(col("term").isin(bm25Query: _*))
           .groupBy(col("term")).agg(count(lit(1)).as("n"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -2057,14 +2026,12 @@ object TextAnalysis {
     * term dictionary.
     *
     * CONCURRENCY NOTE: the pruned arm bakes decision-time index state
-    * (live df literals, the contender id list, a raw posting read)
-    * into the returned lazy frame — it is a SNAPSHOT of the index as
-    * of this call. The unbounded serve re-derives df and re-applies
-    * the tombstone mask at execution time, so a caller that holds the
-    * frame across a concurrent append/delete and collects late can
-    * observe the two diverge. When ingest is concurrent, collect the
-    * frame promptly (or re-derive it per serve) — the registered
-    * query and every streaming consumer do — or use
+    * (live df literals, the contender id list) into the returned lazy
+    * frame, and both arms scan the index snapshot of this call — a
+    * compaction before a late collect deletes files the frame reads.
+    * When ingest is concurrent, collect the frame promptly (or
+    * re-derive it per serve) — the registered query and every
+    * streaming consumer do — or use
     * [[textBm25ServedMaxScoreNow]], which materializes the bounded
     * result before returning and is immune to late collection by
     * construction (pinned with a concurrent-append arm in
@@ -2078,8 +2045,7 @@ object TextAnalysis {
         // tombstone-masked like every index read (free when none
         // pending): a deleted doc that slipped into the contender set
         // contributes no rows, so it never resurfaces in the ranking
-        val hits = IndexMaintenance.minusTombstones(s, s"$indexDir/postings",
-            s.read.parquet(s"$indexDir/postings"), "doc_id")
+        val hits = IndexMaintenance.scan(s, indexDir, "postings", "doc_id")
           .filter(col("term").isin(bm25Query: _*) &&
             col("doc_id").isin(cand: _*) &&
             col("doc_id") >= lit(cand.min) && col("doc_id") <= lit(cand.max))
@@ -2094,9 +2060,8 @@ object TextAnalysis {
         val dfs = Seq(1).toDF("_one").select(bm25Query.zipWithIndex.map { case (t, i) =>
           lit(dfLive.getOrElse(t, 0L)).as(s"df_$i")
         }: _*)
-        val stats = s.read.parquet(s"$indexDir/stats")
-        val doclen = IndexMaintenance.minusTombstones(s, s"$indexDir/doclen",
-          s.read.parquet(s"$indexDir/doclen"), "doc_id")
+        val stats = IndexMaintenance.read(s, indexDir, "stats")
+        val doclen = IndexMaintenance.scan(s, indexDir, "doclen", "doc_id")
         bm25Rank(perDoc
           .join(doclen, "doc_id")
           .crossJoin(broadcast(stats))
@@ -2134,35 +2099,22 @@ object TextAnalysis {
     * between delete and compact (deleted docs still shape scores, but
     * never appear), and compact is where statistics catch up.
     *
-    * The whole two-table sequence runs under ONE index-scoped
-    * maintenance acquisition, and the CROSS-TABLE incomplete-batch
-    * sweep runs FIRST: a markerless tag whose files stand in doclen but
-    * not postings is a crash between the batch's two appends
-    * ([[textIndexAppendBatch]] lands doclen first) — compacting doclen
-    * alone used to pin that tag's fold marker from the doclen files,
-    * making the stream's retry skip and silently losing the batch's
-    * postings rows forever. The sweep removes the uncommitted partial
-    * batch instead, and the retry re-lands both tables. */
-  def textIndexCompact(s: SparkSession, indexDir: String): (Int, Int) =
-      IndexMaintenance.withIndexMaintenance(s, indexDir) {
-    IndexMaintenance.sweepIncompleteBatches(s,
-      Seq(s"$indexDir/doclen", s"$indexDir/postings"), s"$indexDir/_batches")
-    IndexMaintenance.compactTable(s, s"$indexDir/doclen", Seq("doc_id"),
-      tombstoneCol = Some("doc_id"), markerDir = Some(s"$indexDir/_batches"))
-    val r = IndexMaintenance.compactTable(s, s"$indexDir/postings", Seq("term", "doc_id"),
-      tombstoneCol = Some("doc_id"), markerDir = Some(s"$indexDir/_batches"))
-    val dest = new org.apache.hadoop.fs.Path(s"$indexDir/stats")
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/.stats.tmp")
-    s.read.parquet(s"$indexDir/doclen")
-      .agg(count(lit(1)).as("n_docs"),
-        (sum(col("dl")).cast("double") / count(lit(1)).cast("double")).as("avgdl"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val f = dest.getFileSystem(s.sparkContext.hadoopConfiguration)
-    f.delete(dest, true)
-    if (!f.rename(tmp, dest))
-      throw new java.io.IOException(s"textIndexCompact: rename $tmp -> $dest failed")
-    writeTermStats(s, indexDir) // term dictionary catches up with stats
-    r
+    * doclen, postings, stats and termstats are rewritten in ONE log
+    * commit: no reader ever sees compacted postings next to stale
+    * stats, and a batch commits to both tables or neither, so there is
+    * no half-landed batch to absorb. */
+  def textIndexCompact(s: SparkSession, indexDir: String): (Int, Int) = {
+    var before = 0
+    val after = IndexMaintenance.transact(s, indexDir) { snap =>
+      before = snap.filesOf("postings").size
+      val doclen = snap.scan(s, "doclen", "doc_id")
+      val postings = snap.scan(s, "postings", "doc_id")
+      IndexMaintenance.Change(replace = statsTables(doclen, postings) ++ Seq(
+        "doclen" -> IndexMaintenance.rewrite(s, snap, "doclen", Seq("doc_id"), Some("doc_id")),
+        "postings" -> IndexMaintenance.rewrite(s, snap, "postings", Seq("term", "doc_id"),
+          Some("doc_id"))))
+    }
+    (before, after.map(_.filesOf("postings").size).getOrElse(0))
   }
 
   /** Retract documents from the lexical index (takedown): tombstoned
@@ -2170,10 +2122,8 @@ object TextAnalysis {
     * the next query's ranking and term dfs immediately — physically
     * dropped (and corpus stats recomputed) at the next
     * [[textIndexCompact]]. Idempotent. */
-  def textIndexDelete(s: SparkSession, indexDir: String, docIds: Seq[Long]): Unit = {
-    IndexMaintenance.deleteIds(s, s"$indexDir/postings", docIds)
-    IndexMaintenance.deleteIds(s, s"$indexDir/doclen", docIds)
-  }
+  def textIndexDelete(s: SparkSession, indexDir: String, docIds: Seq[Long]): Unit =
+    IndexMaintenance.delete(s, indexDir, Seq("postings", "doclen"), docIds)
 
   /** Operational health of a persisted text index — the lexical
     * sibling of `AnnIndex.ivfIndexHealth`. One row per metric:
@@ -2188,10 +2138,9 @@ object TextAnalysis {
     * posting table). Distributed aggregation; 1-row collects only. */
   def textIndexHealth(s: SparkSession, indexDir: String): DataFrame = {
     import s.implicits._
-    val postings = IndexMaintenance.minusTombstones(s, s"$indexDir/postings",
-      s.read.parquet(s"$indexDir/postings"), "doc_id")
-    val doclen = IndexMaintenance.minusTombstones(s, s"$indexDir/doclen",
-      s.read.parquet(s"$indexDir/doclen"), "doc_id")
+    val snap = IndexMaintenance.snapshot(s, indexDir)
+    val postings = snap.scan(s, "postings", "doc_id")
+    val doclen = snap.scan(s, "doclen", "doc_id")
     val pAgg = postings.agg(count(lit(1)).as("n_postings"),
       countDistinct(col("term")).as("n_terms")).head()
     val (nPostings, nTerms) = (pAgg.getLong(0), pAgg.getLong(1))
@@ -2201,10 +2150,9 @@ object TextAnalysis {
         case r if r.isNullAt(0) => 0L
         case r => r.getLong(0)
       }
-    val statsDocs = s.read.parquet(s"$indexDir/stats").head().getLong(0)
-    val pend = IndexMaintenance.pendingTombstones(s, s"$indexDir/postings")
-      .map(_.select(col("id")).distinct().count()).getOrElse(0L)
-    val files = IndexMaintenance.dataFiles(s, s"$indexDir/postings").size
+    val statsDocs = snap.read(s, "stats").head().getLong(0)
+    val pend = snap.pendingTombstones("postings")
+    val files = snap.filesOf("postings").size
     Seq(
       ("data_files", files.toDouble),
       ("max_df_share", if (nDocs == 0) 0.0 else maxDf.toDouble / nDocs),

@@ -10,8 +10,8 @@ import graft.ops.{AnnIndex, IndexMaintenance, Similarity}
   * re-bucket the standing corpus) and folded into the bucket table, so
   * the ANN index grows continuously as the corpus is embedded — no
   * rebuild, no re-read of standing vectors (the batch GENUINELY pays
-  * only its own hashing: the redelivery guard is an O(1) per-batch
-  * marker probe, not a standing-index scan — see below).
+  * only its own hashing: the redelivery guard is the batch mark in the
+  * index log, not a standing-index scan — see below).
   *
   * The quantizer-training corpus and the served corpus therefore
   * DIVERGE over time — which is the production reality (FAISS/SPANN
@@ -22,13 +22,10 @@ import graft.ops.{AnnIndex, IndexMaintenance, Similarity}
   * path DuckDB-oracle-able: the oracle restates the threshold average
   * over the seed slice and the bucket assignment over the full corpus.
   *
-  * Retries are idempotent via the per-batch marker sidecar
-  * (`$indexDir/_batches`, [[IndexMaintenance.batchSeen]]): a batch
-  * Structured Streaming re-presents after a crash-before-commit is
-  * skipped by one filesystem existence probe, and the crash window
-  * between data append and marker append is closed by deterministic
-  * per-batch file names ([[IndexMaintenance.appendBatchAs]] replaces a
-  * partial attempt's files instead of duplicating rows). The first-cut
+  * Retries are idempotent via the index log: a batch's rows commit in
+  * the same log version as its batch mark ([[IndexMaintenance.append]]),
+  * so a batch Structured Streaming re-presents after a crash is either
+  * skipped (its mark is in the snapshot) or was never visible. The first-cut
   * guard — anti-joining each batch against the standing index's
   * distinct vec_ids — was an O(index) scan + shuffle per trigger that
   * grew with stream age (and serve-key-sorted compaction left the
@@ -53,25 +50,16 @@ object AnnIngest {
     val lineage = IndexMaintenance.lineageTag(checkpointDir)
     IngestDedup.runLandingStream(s, landingDir, checkpointDir,
       IngestDedup.alarmCadence(s, Seq(indexDir)) {
-        IndexMaintenance.checkUnique(s, s"$indexDir/buckets",
-          Seq("vec_id", "tbl"), "vec_id")
+        IndexMaintenance.checkUnique(s, indexDir, "buckets", Seq("vec_id", "tbl"), "vec_id")
         AnnIndex.lshIndexCompact(s, indexDir)
       }) { (batch, batchId) =>
-      // one lease + lock acquisition for the whole trigger (probe,
-      // append, marker) — inner per-table ops reenter
-      IndexMaintenance.withIndexMaintenance(s, indexDir) {
-        if (!IndexMaintenance.batchSeen(s, indexDir, lineage, batchId)) {
-          AnnIndex.lshIndexAppendBatch(s, batch, indexDir,
-            tag = Some(IndexMaintenance.batchTag(lineage, batchId)))
-          IndexMaintenance.recordBatch(s, indexDir, lineage, batchId)
-        }
-      }
+      AnnIndex.lshIndexAppendBatch(s, batch, indexDir, mark = Some(lineage -> batchId))
     }
   }
 
   /** IVF twin: each landed batch is assigned to the persisted, frozen
     * centroids and folded into the inverted-list table — same loop,
-    * same per-batch marker guard, same compaction cadence. The
+    * same per-batch mark, same compaction cadence. The
     * STRIDE-seeded registered form ([[streamIvfIngest]]) carries a full
     * DuckDB oracle; the trained-quantizer deployment stays library+spec. */
   def streamIvfIngestToFiles(s: SparkSession, landingDir: String, indexDir: String,
@@ -79,16 +67,10 @@ object AnnIngest {
     val lineage = IndexMaintenance.lineageTag(checkpointDir)
     IngestDedup.runLandingStream(s, landingDir, checkpointDir,
       IngestDedup.alarmCadence(s, Seq(indexDir)) {
-        IndexMaintenance.checkUnique(s, s"$indexDir/lists", Seq("vec_id"), "vec_id")
+        IndexMaintenance.checkUnique(s, indexDir, "lists", Seq("vec_id"), "vec_id")
         AnnIndex.ivfIndexCompact(s, indexDir)
       }) { (batch, batchId) =>
-      IndexMaintenance.withIndexMaintenance(s, indexDir) {
-        if (!IndexMaintenance.batchSeen(s, indexDir, lineage, batchId)) {
-          AnnIndex.ivfIndexAppendBatch(s, batch, indexDir,
-            tag = Some(IndexMaintenance.batchTag(lineage, batchId)))
-          IndexMaintenance.recordBatch(s, indexDir, lineage, batchId)
-        }
-      }
+      AnnIndex.ivfIndexAppendBatch(s, batch, indexDir, mark = Some(lineage -> batchId))
     }
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.{Curation, IndexMaintenance}
 
 /** Streaming EVAL-SET ingest for the contamination index — the fifth
-  * and last persisted index family joins the marker-guarded,
+  * and last persisted index family joins the log-committed,
   * cadence-compacted append loop. The production story: benchmark
   * suites update continuously (new eval releases, new held-out sets),
   * and every new eval document must start guarding training-data
@@ -16,9 +16,8 @@ import graft.ops.{Curation, IndexMaintenance}
   * into the screen bloom at the index's frozen geometry, and the
   * advisory saturation statistic accumulates per batch — O(batch) per
   * trigger, like every sibling loop — and reconciles EXACTLY at the
-  * cadence compaction's rebuild (bloom bits are OR-idempotent under a
-  * crash-window retry; the counter can briefly over-estimate, which
-  * only makes the capacity warning conservative).
+  * cadence compaction's rebuild (a retry lands nothing: the shingle rows, the merged bloom and its
+  * counters commit with the batch mark as one log version).
   *
   * Growth semantics mirror the family: the bloom's GEOMETRY is frozen
   * at the seed build, so a heavily-grown index exceeds its sized
@@ -45,18 +44,10 @@ object DecontamIngest {
       // the alarm matters most HERE: a saturating bloom (capacity debt
       // the fixed cadence can't see) fires its rebuild mid-stream
       IngestDedup.alarmCadence(s, Seq(indexDir)) {
-        IndexMaintenance.checkUnique(s, s"$indexDir/eval_shingles",
-          Seq("eval_id", "h"), "eval_id")
+        IndexMaintenance.checkUnique(s, indexDir, "eval_shingles", Seq("eval_id", "h"), "eval_id")
         Curation.decontamIndexCompact(s, indexDir)
       }) { (batch, batchId) =>
-      // one lease + lock acquisition for the whole trigger
-      IndexMaintenance.withIndexMaintenance(s, indexDir) {
-        if (!IndexMaintenance.batchSeen(s, indexDir, lineage, batchId)) {
-          Curation.decontamIndexAppendBatch(s, batch, indexDir,
-            tag = Some(IndexMaintenance.batchTag(lineage, batchId)))
-          IndexMaintenance.recordBatch(s, indexDir, lineage, batchId)
-        }
-      }
+      Curation.decontamIndexAppendBatch(s, batch, indexDir, mark = Some(lineage -> batchId))
     }
   }
 

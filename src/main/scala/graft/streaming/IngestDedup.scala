@@ -105,7 +105,8 @@ object IngestDedup {
       Dedup.ingestIndexCompact(s, indexDir)
       Dedup.ingestSinkCompact(s, outDir)
     }) { (batch, batchId) =>
-      Dedup.ingestBatch(s, batch, indexDir, outDir, batchId)
+      Dedup.ingestBatch(s, batch, indexDir, outDir, batchId,
+        graft.ops.IndexMaintenance.lineageTag(checkpointDir))
     }
 
   /** Alarm-driven cadence (round 12): the fixed every-
@@ -137,7 +138,8 @@ object IngestDedup {
       Dedup.ingestIndexCompact(s, indexDir)
       Dedup.ingestSinkCompact(s, outDir)
     }) { (batch, batchId) =>
-      Dedup.ingestCurateBatch(s, batch, indexDir, outDir, batchId)
+      Dedup.ingestCurateBatch(s, batch, indexDir, outDir, batchId,
+        graft.ops.IndexMaintenance.lineageTag(checkpointDir))
     }
 
   /** Ingest-time manifest production path: the full attributable
@@ -152,10 +154,8 @@ object IngestDedup {
       Dedup.ingestIndexCompact(s, indexDir)
       Dedup.ingestSinkCompact(s, outDir)
     }, filesPerTrigger) { (batch, batchId) =>
-      // one lease + lock acquisition per trigger for the index tables
-      graft.ops.IndexMaintenance.withIndexMaintenance(s, indexDir) {
-        Dedup.ingestManifestBatch(s, batch, indexDir, outDir, batchId)
-      }
+      Dedup.ingestManifestBatch(s, batch, indexDir, outDir, batchId,
+        graft.ops.IndexMaintenance.lineageTag(checkpointDir))
     }
 
   /** Registered-query form: split the sf documents table into
@@ -171,7 +171,7 @@ object IngestDedup {
     val (root, landing) = replayRoot(s, dir)
     streamIngestDedupToFiles(s, landing, s"$root/index",
       s"$root/out", s"$root/checkpoint")
-    s.read.parquet(s"$root/out")
+    graft.ops.IndexMaintenance.read(s, s"$root/out", "")
       .select(col("doc_id"), col("batch"), col("is_dup"), col("dup_of"), col("min_hamming"))
       .distinct() // retried micro-batches re-append identical rows
       .orderBy(col("doc_id"))
@@ -184,7 +184,7 @@ object IngestDedup {
     val (root, landing) = replayRoot(s, dir)
     streamIngestCurateToFiles(s, landing, s"$root/index",
       s"$root/out", s"$root/checkpoint")
-    s.read.parquet(s"$root/out")
+    graft.ops.IndexMaintenance.read(s, s"$root/out", "")
       .select(col("doc_id"), col("batch"), col("verdict"), col("dup_of"), col("score"))
       .distinct() // retried micro-batches re-append identical rows
       .orderBy(col("doc_id"))
@@ -200,7 +200,7 @@ object IngestDedup {
     val (root, landing) = manifestReplayRoot(s, dir)
     streamIngestManifestToFiles(s, landing, s"$root/index",
       s"$root/out", s"$root/checkpoint")
-    s.read.parquet(s"$root/out")
+    graft.ops.IndexMaintenance.read(s, s"$root/out", "")
       .select(col("doc_id"), col("batch"), col("canon_id"), col("rep_id"),
         col("n_shared"), col("score"), col("split"), col("reason"), col("include"))
       .distinct() // retried micro-batches re-append identical rows

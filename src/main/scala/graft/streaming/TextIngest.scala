@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{IndexMaintenance, TextAnalysis}
+import graft.ops.{IndexMaintenance, Lease, TextAnalysis}
 
 /** Streaming LEXICAL-index ingest — the postings twin of [[AnnIngest]]:
   * document batches land as files and each micro-batch is tokenized
@@ -23,11 +23,10 @@ import graft.ops.{IndexMaintenance, TextAnalysis}
   * restates exactly that split: df and ranking over the full corpus,
   * n_docs/avgdl over the seed slice.
   *
-  * Retries ride the shared idempotence machinery: per-batch marker
-  * probe ([[IndexMaintenance.batchSeen]], O(1) per trigger regardless
-  * of index size) plus deterministic per-batch file names
-  * ([[IndexMaintenance.appendBatchAs]]) closing the append-vs-marker
-  * crash window. The compaction cadence runs the (term, doc_id)
+  * Retries ride the index log: each batch's rows commit together with
+  * its batch mark ([[IndexMaintenance.append]]), so a retried batch
+  * either finds its mark and lands nothing or was never visible. The
+  * compaction cadence runs the (term, doc_id)
   * uniqueness invariant before each compact — a doc indexed by two
   * DIFFERENT batches is an upstream id-assignment bug surfaced loudly,
   * not silently double-scored.
@@ -45,20 +44,12 @@ object TextIngest {
     val lineage = IndexMaintenance.lineageTag(checkpointDir)
     IngestDedup.runLandingStream(s, landingDir, checkpointDir,
       IngestDedup.alarmCadence(s, Seq(indexDir)) {
-        IndexMaintenance.checkUnique(s, s"$indexDir/postings",
-          Seq("term", "doc_id"), "doc_id")
+        IndexMaintenance.checkUnique(s, indexDir, "postings", Seq("term", "doc_id"), "doc_id")
         TextAnalysis.textIndexCompact(s, indexDir)
       }) { (batch, batchId) =>
-      // one lease + lock acquisition for the whole trigger: the probe,
-      // BOTH table appends, and the fold marker are atomic against a
-      // concurrent compaction (see textIndexAppendBatch's contract)
-      IndexMaintenance.withIndexMaintenance(s, indexDir) {
-        if (!IndexMaintenance.batchSeen(s, indexDir, lineage, batchId)) {
-          TextAnalysis.textIndexAppendBatch(s, batch, indexDir,
-            tag = Some(IndexMaintenance.batchTag(lineage, batchId)))
-          IndexMaintenance.recordBatch(s, indexDir, lineage, batchId)
-        }
-      }
+      // both tables and the batch mark commit as one log version: a
+      // retry after that commit finds the mark and lands nothing
+      TextAnalysis.textIndexAppendBatch(s, batch, indexDir, mark = Some(lineage -> batchId))
     }
   }
 
@@ -126,7 +117,7 @@ object TextIngest {
       // the batch write shares the ledger's maintenance scope: a
       // redelivery rewrite of an already-covered b dir can otherwise
       // race the compact's sweep of that same dir mid-write
-      IndexMaintenance.withIndexMaintenance(s, ledgerDir) {
+      Lease.withMaintenance(s, ledgerDir) {
         IndexMaintenance.labeledJob(s, s"token-ledger b$batchId: counts") {
           TextAnalysis.bpeSourceCounts(batch, merges, applyForm)
             .withColumn("batch_id", lit(batchId))
@@ -141,7 +132,7 @@ object TextIngest {
 
   /** Completion marker a rollup dir carries once its commit FINISHED —
     * the copy-rename commit protocol shared with the BPE model
-    * artifact (see [[IndexMaintenance.commitMarkerCreate]] for the
+    * artifact (see [[Lease.commitMarkerCreate]] for the
     * rationale). Without it the live-parts grammar would adopt a
     * crashed copy's PARTIAL `c<N>` dir as the high-water rollup and
     * silently undercount the batches it claims to cover; a marker-less
@@ -169,7 +160,7 @@ object TextIngest {
 
   private def isCommitted(f: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Boolean =
-    IndexMaintenance.commitMarkerPresent(f, dir, ledgerCommitMarker)
+    Lease.commitMarkerPresent(f, dir, ledgerCommitMarker)
 
   /** Stamp the rollup committed, with the rolled-up per-source totals
     * as the marker's payload — written at marker creation, so the
@@ -185,7 +176,7 @@ object TextIngest {
     val body = stats.sortBy(_._1).map { case (src, d, t) =>
       s"${enc.encodeToString(src.getBytes("UTF-8"))}\t$d\t$t"
     }.mkString("", "\n", "\n")
-    IndexMaintenance.commitMarkerCreate(f, dir, ledgerCommitMarker, body)
+    Lease.commitMarkerCreate(f, dir, ledgerCommitMarker, body)
   }
 
   /** The committed rollup's persisted per-source totals, if its marker
@@ -194,7 +185,7 @@ object TextIngest {
     * guess at dashboard numbers). */
   private def committedStats(f: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Option[Seq[(String, Long, Long)]] =
-    IndexMaintenance.commitMarkerContent(f, dir, ledgerCommitMarker).flatMap { body =>
+    Lease.commitMarkerContent(f, dir, ledgerCommitMarker).flatMap { body =>
       val dec = java.util.Base64.getDecoder
       try Some(body.split("\n").toSeq.filter(_.nonEmpty).map { line =>
         val Array(src, d, t) = line.split("\t", 3)
@@ -392,7 +383,7 @@ object TextIngest {
     * batches are also collected.
     *
     * Runs entirely through the Hadoop FS API under the index-scoped
-    * maintenance lock+lease ([[IndexMaintenance.withIndexMaintenance]]):
+    * maintenance lock+lease ([[Lease.withMaintenance]]):
     * a second process's compact fails loudly on the lease instead of
     * racing the rename ([[ledgerTotals]] reads optimistically WITHOUT
     * the lease and heals any sweep it races via its snapshot
@@ -406,7 +397,7 @@ object TextIngest {
     * still garbage — the retry or a later sweep collects it and the
     * `b` dirs re-roll). */
   private[graft] def ledgerCompact(s: SparkSession, ledgerDir: String, upTo: Long): String =
-      IndexMaintenance.withIndexMaintenance(s, ledgerDir) {
+      Lease.withMaintenance(s, ledgerDir) {
     val root = new org.apache.hadoop.fs.Path(ledgerDir)
     val f = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     val live = ledgerLiveParts(s, ledgerDir).filter { p =>
@@ -568,8 +559,7 @@ object TextIngest {
     * count, committed hwm, covered-garbage count) from one directory
     * listing plus one commit-marker probe per rollup dir, no Spark
     * read: this is what the autopilot's per-pass decision consumes
-    * (the bloomSatMemo rule — alarms must not pay a Spark job per
-    * evaluation). The single listing also makes the garbage count a
+    * (alarms must not pay a Spark job per evaluation). The single listing also makes the garbage count a
     * consistent snapshot — a second racing listing could see a compact
     * sweep dirs in between and transiently inflate it. Garbage counts
     * READER-VISIBLE debt (covered batches, stale or uncommitted
@@ -582,7 +572,7 @@ object TextIngest {
     * (every compact holds the heartbeated lease for its whole
     * duration), and without counting it here an autopilot-only
     * deployment would never trigger the rollup pass whose sweep
-    * collects it. The probe is [[IndexMaintenance.liveLeasePresent]]
+    * collects it. The probe is [[Lease.liveLeasePresent]]
     * — the lease FILE's mtime, NOT the staging directory's: object
     * stores report synthetic (commonly zero) directory mtimes, under
     * which an age test on the dir itself reads every fresh in-flight
@@ -600,7 +590,7 @@ object TextIngest {
     val hwm = live.collectFirst { case ledgerCompactedRe(n) => n.toLong }
     val unrolled = live.count(n => ledgerBatchRe.matches(n))
     // one lease-file stat, paid only when staging is present at all
-    lazy val maintenanceLive = IndexMaintenance.liveLeasePresent(s, ledgerDir)
+    lazy val maintenanceLive = Lease.liveLeasePresent(s, ledgerDir)
     val garbage = entries.count { e =>
       val n = e.getPath.getName
       if (live.contains(n) || n.startsWith("_")) false

@@ -120,14 +120,10 @@ class AutopilotSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$tmp/eval/documents.parquet")
     Curation.decontamBloomWrite(spark, s"$tmp/eval", s"$tmp/idx")
     Curation.decontamShingleWrite(spark, s"$tmp/eval", s"$tmp/idx")
-    // strip total_items — the pre-upgrade on-disk schema
-    spark.read.parquet(s"$tmp/idx/bloom").drop("total_items")
-      .write.parquet(s"$tmp/bloom-legacy")
-    val fs = new org.apache.hadoop.fs.Path(tmp)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/idx/bloom"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$tmp/bloom-legacy"),
-      new org.apache.hadoop.fs.Path(s"$tmp/idx/bloom"))
+    // strip total_items — the pre-upgrade schema, committed without
+    // the bloom counters
+    graft.ops.IndexMaintenance.replace(spark, s"$tmp/idx", Seq("bloom" ->
+      spark.read.parquet(s"$tmp/idx/bloom").drop("total_items")))
     // the r11 fix under pin: the legacy row must not throw, and the
     // saturation decision must read as a lower bound ("total unknown"),
     // not as a measured exactly-full filter; at the default threshold
@@ -187,34 +183,33 @@ class AutopilotSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.ops.{Autopilot, IndexMaintenance}
     val tmp = java.nio.file.Files.createTempDirectory("alarm-legs").toString
-    (1L to 40L).map(i => (i, i * 3)).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp/idx/t")
+    IndexMaintenance.replace(spark, s"$tmp/idx",
+      Seq("t" -> (1L to 40L).map(i => (i, i * 3)).toDF("id", "v")))
     // (a) ONE batch landing MANY files must not fire — the +40%
     // compact-per-trigger regression class (an append lands one file
     // per shuffle partition, 32 at the bench SF)
-    IndexMaintenance.appendBatchAs(spark,
-      (100L to 140L).map(i => (i, i * 3)).toDF("id", "v").repartition(20),
-      s"$tmp/idx/t", "wide_b0")
+    IndexMaintenance.append(spark, s"$tmp/idx",
+      Seq("t" -> (100L to 140L).map(i => (i, i * 3)).toDF("id", "v").repartition(20)),
+      Some("wide" -> 0L))
     assert(!Autopilot.maintenanceDue(spark, Seq(s"$tmp/idx"), maxAppendedBatches = 3),
       "a single wide append fired the batch-debt leg — the file-count latch is back")
     // (b) more DISTINCT append stamps than the floor DOES fire
     for (b <- 1L to 3L)
-      IndexMaintenance.appendBatchAs(spark,
-        Seq((200L + b, b)).toDF("id", "v"), s"$tmp/idx/t", s"wide_b$b")
+      IndexMaintenance.append(spark, s"$tmp/idx",
+        Seq("t" -> Seq((200L + b, b)).toDF("id", "v")), Some("wide" -> b))
     assert(Autopilot.maintenanceDue(spark, Seq(s"$tmp/idx"), maxAppendedBatches = 3),
       "4 un-absorbed batches above a floor of 3 did not fire the backstop")
     // (c) pending tombstones fire immediately and clear at compact
     val tmp2 = java.nio.file.Files.createTempDirectory("alarm-tomb").toString
-    (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp2/t")
+    IndexMaintenance.replace(spark, tmp2, Seq("t" -> (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v")))
     assert(!Autopilot.maintenanceDue(spark, Seq(tmp2)))
-    IndexMaintenance.deleteIds(spark, s"$tmp2/t", Seq(3L))
+    IndexMaintenance.delete(spark, tmp2, Seq("t"), Seq(3L))
     assert(Autopilot.maintenanceDue(spark, Seq(tmp2)), "pending tombstone did not fire")
-    IndexMaintenance.compactTable(spark, s"$tmp2/t", Seq("id"), tombstoneCol = Some("id"))
+    IndexMaintenance.compact(spark, tmp2, "t", Seq("id"), Some("id"))
     assert(!Autopilot.maintenanceDue(spark, Seq(tmp2)), "alarm latched after the compact")
-    // (d) bloom memo protocol: writer-fed value served without a read;
-    // an EXTERNAL rewrite flips the fingerprint and the next probe
-    // re-reads the real (saturated) row instead of serving stale 0.x
+    // (d) bloom counters ride the log: a rewrite committed by another
+    // writer moves the version, and the next probe reads its (saturated)
+    // counters instead of serving a stale 0.x
     val tmp3 = java.nio.file.Files.createTempDirectory("alarm-bloom").toString
     (1L to 4L).map(i => (i * graft.ops.Curation.evalStride,
         (0 until 20).map(w => s"s${i}w$w").mkString(" "), "en", "s"))
@@ -226,15 +221,11 @@ class AutopilotSpec extends AnyFunSuite {
       "fresh bloom reported saturated")
     // fabricate an external rewrite claiming saturation 2.0
     val meta = spark.read.parquet(s"$tmp3/idx/bloom").collect()(0)
-    Seq((meta.getAs[Array[Byte]]("bloom"), meta.getLong(1), meta.getDouble(2),
-        meta.getLong(1) * 2))
-      .toDF("bloom", "n_items", "fpp", "total_items")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp3/ext")
-    val f = new org.apache.hadoop.fs.Path(tmp3)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.delete(new org.apache.hadoop.fs.Path(s"$tmp3/idx/bloom"), true)
-    f.rename(new org.apache.hadoop.fs.Path(s"$tmp3/ext"),
-      new org.apache.hadoop.fs.Path(s"$tmp3/idx/bloom"))
+    IndexMaintenance.replace(spark, s"$tmp3/idx", Seq("bloom" ->
+      Seq((meta.getAs[Array[Byte]]("bloom"), meta.getLong(1), meta.getDouble(2),
+        meta.getLong(1) * 2)).toDF("bloom", "n_items", "fpp", "total_items").coalesce(1)),
+      Map("bloom.n_items" -> meta.getLong(1).toString,
+        "bloom.total_items" -> (meta.getLong(1) * 2).toString))
     assert(Autopilot.maintenanceDue(spark, Seq(s"$tmp3/idx")),
       "external bloom rewrite served the stale memoized saturation")
   }

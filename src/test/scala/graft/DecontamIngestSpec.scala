@@ -62,7 +62,7 @@ class DecontamIngestSpec extends AnyFunSuite {
       .getAs[Array[Byte]]("bloom").toSeq == bloomBytes,
       "redelivered batch re-merged the bloom")
     assert(serveOf(s"$r/index") === grown, "redelivery changed serving")
-    IndexMaintenance.checkUnique(spark, s"$r/index/eval_shingles",
+    IndexMaintenance.checkUnique(spark, s"$r/index", "eval_shingles",
       Seq("eval_id", "h"), "eval_id")
 
     // retracting every STREAMED eval doc rolls verdicts back to the

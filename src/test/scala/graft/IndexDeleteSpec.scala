@@ -59,8 +59,8 @@ class IndexDeleteSpec extends AnyFunSuite {
       .select(col("vec_id")).distinct().collect().map(_.getLong(0)).toSet
     assert(batchIds.forall(!remaining.contains(_)),
       "compaction left physically deleted rows")
-    assert(!new java.io.File(s"$tmp/index/buckets/_tombstones").exists(),
-      "compaction swap should clear the tombstone table")
+    assert(graft.ops.IndexMaintenance.snapshot(spark, s"$tmp/index").tombstonesOf("buckets").isEmpty,
+      "compaction should consume the pending tombstones")
     val afterCompact = AnnIndex.lshIndexServe(spark, s"$tmp/index",
       Seq(corpus, s"$tmp/batch"), q).collect().map(shape).toSeq
     assert(afterCompact === original, "post-compact serving diverged")
@@ -198,11 +198,11 @@ class IndexDeleteSpec extends AnyFunSuite {
     AnnIndex.lshIndexDelete(spark, s"$tmp/lsh", batchIds)
     AnnIndex.lshIndexAppend(spark, s"$tmp/batch", s"$tmp/lsh") // re-admission
     assert(lshServe() === lshWith, "[lsh] re-appended ids did not serve pre-compact")
-    graft.ops.IndexMaintenance.checkUnique(spark, s"$tmp/lsh/buckets",
+    graft.ops.IndexMaintenance.checkUnique(spark, s"$tmp/lsh", "buckets",
       Seq("vec_id", "tbl"), "vec_id") // masked original is not double-counted
     AnnIndex.lshIndexCompact(spark, s"$tmp/lsh")
     assert(lshServe() === lshWith, "[lsh] compaction changed the re-admitted serve")
-    assert(!new java.io.File(s"$tmp/lsh/buckets/_tombstones").exists())
+    assert(graft.ops.IndexMaintenance.snapshot(spark, s"$tmp/lsh").tombstonesOf("buckets").isEmpty)
     // IVF + IVF-PQ
     for ((name, write, append, delete, compact, serve) <- Seq(
       ("ivf",
@@ -222,7 +222,7 @@ class IndexDeleteSpec extends AnyFunSuite {
       append(spark, s"$tmp/batch", idx) // re-admission, no compact between
       assert(serve(idx).collect().map(shape).toSeq === withBatch,
         s"[$name] re-appended ids did not serve pre-compact")
-      graft.ops.IndexMaintenance.checkUnique(spark, s"$idx/lists",
+      graft.ops.IndexMaintenance.checkUnique(spark, s"$idx", "lists",
         Seq("vec_id"), "vec_id")
       compact(spark, idx)
       assert(serve(idx).collect().map(shape).toSeq === withBatch,
@@ -250,25 +250,27 @@ class IndexDeleteSpec extends AnyFunSuite {
     assert(flags() == Map(10L -> true), "post-compact re-admitted masking lost")
   }
 
-  test("compaction crash window: rename-aside state recovers at the next maintenance op") {
+  test("compaction crash window: files removed by a commit but not yet deleted never serve a delete") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("promote-crash").toString
-    (1L to 100L).map(i => (i, s"v$i")).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp/t")
-    // simulate a crash between rename-aside and promote: the table dir
-    // is ABSENT, the data intact under the .compact.old aside name
-    assert(new java.io.File(s"$tmp/t").renameTo(new java.io.File(s"$tmp/.t.compact.old")))
-    assert(!new java.io.File(s"$tmp/t").exists())
-    // the next maintenance op must heal before doing its work
-    graft.ops.IndexMaintenance.compactTable(spark, s"$tmp/t", Seq("id"))
-    assert(spark.read.parquet(s"$tmp/t").count() == 100L, "recovered table lost rows")
-    assert(!new java.io.File(s"$tmp/.t.compact.old").exists(), "aside dir left behind")
-    // deleteIds heals too (and its watermark then masks the recovered rows)
-    assert(new java.io.File(s"$tmp/t").renameTo(new java.io.File(s"$tmp/.t.compact.old")))
-    graft.ops.IndexMaintenance.deleteIds(spark, s"$tmp/t", Seq(1L))
-    val served = graft.ops.IndexMaintenance.minusTombstones(spark, s"$tmp/t",
-      spark.read.parquet(s"$tmp/t"), "id")
-    assert(served.count() == 99L, "delete after recovery did not mask")
+    val tmp = java.nio.file.Files.createTempDirectory("commit-crash").toString
+    graft.ops.IndexMaintenance.replace(spark, tmp,
+      Seq("t" -> (1L to 100L).map(i => (i, s"v$i")).toDF("id", "v")))
+    // a crash right after the compaction's commit leaves the removed
+    // files in place: simulated by restoring byte copies of them, aged
+    // past the orphan retention
+    val removed = graft.ops.IndexMaintenance.snapshot(spark, tmp).filesOf("t").map(_.path)
+    val saved = removed.map(p => p -> java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(tmp, p)))
+    graft.ops.IndexMaintenance.compact(spark, tmp, "t", Seq("id"))
+    saved.foreach { case (p, b) =>
+      MaintenanceSpec.age(java.nio.file.Files.write(java.nio.file.Paths.get(tmp, p), b)) }
+    assert(graft.ops.IndexMaintenance.read(spark, tmp, "t").count() == 100L,
+      "the leftover files were served next to the rewrite")
+    // a delete after the crash masks every served copy of the id
+    graft.ops.IndexMaintenance.delete(spark, tmp, Seq("t"), Seq(1L))
+    val served = graft.ops.IndexMaintenance.scan(spark, tmp, "t", "id")
+    assert(served.count() == 99L, "delete after the crash did not mask")
+    graft.ops.IndexMaintenance.compact(spark, tmp, "t", Seq("id"), Some("id"))
+    assert(spark.read.parquet(s"$tmp/t").count() == 99L, "the next compaction kept the leftovers")
   }
 
   test("decontam delete: retired eval doc stops flagging at once; compact rebuilds bloom") {

@@ -26,7 +26,7 @@ class IndexHealthSpec extends AnyFunSuite {
     // append WITHOUT compacting: global stats stay frozen — the health
     // report is where a deployment sees the gap
     TextAnalysis.textIndexAppendBatch(spark,
-      docs.filter(col("doc_id") % 3 === 1), s"$tmp/idx", tag = Some("h1"))
+      docs.filter(col("doc_id") % 3 === 1), s"$tmp/idx", mark = Some("h" -> 1L))
     val grown = metricsOf(TextAnalysis.textIndexHealth(spark, s"$tmp/idx"))
     assert(grown("stats_staleness") > 0.0, "append did not open the staleness gap")
     assert(grown("n_docs_indexed") ==

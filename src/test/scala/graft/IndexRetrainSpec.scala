@@ -48,15 +48,15 @@ class IndexRetrainSpec extends AnyFunSuite {
     AnnIndex.lshIndexWrite(spark, s"$tmp/a", s"$tmp/idx")
     AnnIndex.lshIndexAppend(spark, s"$tmp/b", s"$tmp/idx")
     AnnIndex.lshIndexDelete(spark, s"$tmp/idx", dropIds)
-    // a fold marker must survive the publish (batches stay folded)
-    graft.ops.IndexMaintenance.recordBatch(spark, s"$tmp/idx", "testlineage", 7L)
+    // a batch mark must survive the retrain (batches stay folded)
+    graft.ops.IndexMaintenance.append(spark, s"$tmp/idx", Nil, Some("testlineage" -> 7L))
     val oldThr = spark.read.parquet(s"$tmp/idx/meta").head().getSeq[Double](0)
     AnnIndex.lshIndexRetrain(spark, s"$tmp/idx", Seq(s"$tmp/a", s"$tmp/b"))
     val newThr = spark.read.parquet(s"$tmp/idx/meta").head().getSeq[Double](0)
     assert(oldThr !== newThr, "retrain did not refresh the thresholds")
     assert(graft.ops.IndexMaintenance.batchSeen(spark, s"$tmp/idx", "testlineage", 7L),
-      "fold marker lost across the retrain publish")
-    assert(!new java.io.File(s"$tmp/idx/buckets/_tombstones").exists(),
+      "batch mark lost across the retrain")
+    assert(graft.ops.IndexMaintenance.snapshot(spark, s"$tmp/idx").tombstonesOf("buckets").isEmpty,
       "retrain left pending tombstones (it rebuilds from survivors)")
     val q = queriesOf(tmp)
     AnnIndex.lshIndexWrite(spark, s"$tmp/surviving", s"$tmp/fresh")
@@ -74,7 +74,7 @@ class IndexRetrainSpec extends AnyFunSuite {
     AnnIndex.ivfIndexAppend(spark, s"$tmp/b", s"$tmp/idx")
     AnnIndex.ivfIndexDelete(spark, s"$tmp/idx", dropIds)
     AnnIndex.ivfIndexRetrain(spark, s"$tmp/idx", Seq(s"$tmp/a", s"$tmp/b"))
-    assert(!new java.io.File(s"$tmp/idx/lists/_tombstones").exists())
+    assert(graft.ops.IndexMaintenance.snapshot(spark, s"$tmp/idx").tombstonesOf("lists").isEmpty)
     val q = queriesOf(tmp)
     AnnIndex.ivfIndexWrite(spark, s"$tmp/surviving", s"$tmp/fresh")
     val retrained = AnnIndex.ivfIndexServe(spark, s"$tmp/idx",

@@ -1,449 +1,377 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.IndexMaintenance
 
-/** Round-9 maintenance hardening:
-  *
-  *  - cross-process LEASE: a second process's maintenance op fails
-  *    LOUDLY against a live foreign lease instead of silently racing
-  *    the swap; a stale lease (crashed holder) is broken and re-taken
-  *  - file-name SEQUENCE stamps replace mtime tombstone sequencing:
-  *    delete-then-re-append serves immediately even when every file
-  *    carries the SAME modification time (the coarse-granularity
-  *    object-store case the mtime watermark silently lost rows on)
-  *  - fold-marker RETIREMENT: the `_batches` sidecar stays bounded at
-  *    one marker per checkpoint lineage instead of one per micro-batch
-  *    forever
-  *  - ABSORBED-batch markers: a rewrite that absorbs an un-markered
-  *    batch's files (crash between data append and marker write, then
-  *    a compaction/retrain) pins the batch's marker, so the retry
-  *    skips instead of re-landing duplicate rows
+/** The index log under its crash windows and races, property by
+  * property: files written with no commit, a lost version race, a
+  * crash after a commit but before the removed files are deleted, a
+  * retry of a committed batch after a compaction or a retrain, a delete
+  * that races a rewrite, an append after a delete after a cold start. A
+  * writer in another process is simulated by creating the next log
+  * version directly, without this JVM's writer lock.
   */
 class MaintenanceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  import MaintenanceSpec._
 
-  private def file(p: String) = new java.io.File(p)
-  private def tmpDir(tag: String) =
-    java.nio.file.Files.createTempDirectory(tag).toString
+  private def rows(ids: Seq[Long], tag: String = "v"): DataFrame = {
+    import spark.implicits._
+    ids.map(i => (i, s"$tag$i")).toDF("id", "v")
+  }
+
+  private def served(dir: String): Set[(Long, String)] =
+    IndexMaintenance.scan(spark, dir, "t", "id").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toSet
+
+  private def expected(ids: Seq[Long], tag: String = "v") = ids.map(i => i -> s"$tag$i").toSet
+
+  test("lost version race: a commit whose version another writer took lands on top of it") {
+    val dir = tmpDir("race-append")
+    IndexMaintenance.replace(spark, dir, Seq("t" -> rows(1L to 10L)))
+    IndexMaintenance.transact(spark, dir) { snap =>
+      foreignCommit(dir, snap.version + 1,
+        s"""{"tombstone":{"table":"t","id":3,"seq":${snap.version + 1}}}""")
+      IndexMaintenance.Change(append = Seq("t" -> rows(11L to 12L)))
+    }
+    assert(IndexMaintenance.snapshot(spark, dir).version == 2L,
+      "the append did not retry at the next version")
+    assert(served(dir) == expected((1L to 12L).filter(_ != 3L)),
+      "one of the two racing commits was lost")
+  }
+
+  test("lost version race against a rewrite: the loser fails loudly and leaves the table untouched") {
+    val dir = tmpDir("race-rewrite")
+    IndexMaintenance.replace(spark, dir, Seq("t" -> rows(1L to 10L)))
+    IndexMaintenance.append(spark, dir, Seq("t" -> rows(11L to 12L)))
+    var victim: IndexMaintenance.DataFile = null
+    val err = intercept[IllegalStateException] {
+      IndexMaintenance.transact(spark, dir) { snap =>
+        // the other writer rewrites first: one file this compaction also
+        // removes moves to a new name in its commit
+        victim = snap.filesOf("t").head
+        val moved = victim.path.replace("part-", "part-moved-")
+        java.nio.file.Files.copy(java.nio.file.Paths.get(dir, victim.path),
+          java.nio.file.Paths.get(dir, moved))
+        foreignCommit(dir, snap.version + 1,
+          s"""{"remove":{"path":"${victim.path}"}}""",
+          s"""{"add":{"path":"$moved","table":"t","size":${victim.size},"seq":0,""" +
+            s""""schema":${quote(victim.schema)}}}""")
+        IndexMaintenance.Change(replace = Seq("t" -> IndexMaintenance.rewrite(spark, snap,
+          "t", Seq("id"), Some("id"))))
+      }
+    }
+    assert(err.getMessage.contains("concurrent rewrite"), err.getMessage)
+    // the other writer deletes what it removed once its commit is in
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, victim.path))
+    assert(served(dir) == expected(1L to 12L), "the losing rewrite changed the table")
+    val committed = IndexMaintenance.snapshot(spark, dir).filesOf("t").map(_.name).toSet
+    assert(parquetNames(s"$dir/t") == committed, "the loser's staged files were left behind")
+  }
+
+  test("append after a delete serves at once, also after a cold start") {
+    val dir = tmpDir("delete-reappend")
+    IndexMaintenance.replace(spark, dir, Seq("t" -> rows(1L to 10L)))
+    IndexMaintenance.delete(spark, dir, Seq("t"), Seq(5L))
+    IndexMaintenance.append(spark, dir, Seq("t" -> rows(Seq(5L), "re")))
+    val want = expected((1L to 10L).filter(_ != 5L)) + (5L -> "re5")
+    assert(served(dir) == want, "the re-append was masked by the earlier delete")
+    // cold start: a byte copy is a directory no process has read yet
+    val cold = tmpDir("delete-reappend-cold") + "/idx"
+    copyTree(dir, cold)
+    assert(served(cold) == want, "replay of the copied log changed the served rows")
+    IndexMaintenance.delete(spark, cold, Seq("t"), Seq(6L))
+    IndexMaintenance.append(spark, cold, Seq("t" -> rows(Seq(6L), "re")))
+    val want2 = want - (6L -> "v6") + (6L -> "re6")
+    assert(served(cold) == want2, "append after delete after a cold start was masked")
+    IndexMaintenance.compact(spark, cold, "t", Seq("id"), Some("id"))
+    assert(served(cold) == want2, "compaction changed the served rows")
+    assert(spark.read.parquet(s"$cold/t").count() == want2.size,
+      "compaction left masked rows on disk")
+  }
+
+  private def smallTextIndex(root: String): Unit = {
+    import spark.implicits._
+    Seq((1L, "alpha beta", "en", "s"), (2L, "beta gamma", "en", "s"))
+      .toDF("doc_id", "text", "lang", "source")
+      .write.parquet(s"$root/c/documents.parquet")
+    ops.TextAnalysis.textIndexWrite(spark, s"$root/c", s"$root/idx")
+  }
+
+  private def textBatch(id: Long, text: String): DataFrame = {
+    import spark.implicits._
+    Seq((id, text, "en", "s")).toDF("doc_id", "text", "lang", "source")
+  }
+
+  test("a text batch commits to both tables at one version; compacting one table keeps the other's rows") {
+    val root = tmpDir("text-commit")
+    smallTextIndex(root)
+    ops.TextAnalysis.textIndexAppendBatch(spark, textBatch(3L, "gamma delta"), s"$root/idx",
+      Some("L" -> 8L))
+    ops.TextAnalysis.textIndexAppendBatch(spark, textBatch(4L, "epsilon"), s"$root/idx",
+      Some("L" -> 9L))
+    val v = IndexMaintenance.snapshot(spark, s"$root/idx")
+    assert(v.filesOf("doclen").exists(_.seq == v.version) &&
+      v.filesOf("postings").exists(_.seq == v.version), "the two tables did not share a commit")
+    val postingsBefore = IndexMaintenance.scan(spark, s"$root/idx", "postings", "doc_id").count()
+    // a pass that compacted doc-values alone, then the full compaction
+    IndexMaintenance.compact(spark, s"$root/idx", "doclen", Seq("doc_id"), Some("doc_id"))
+    assert(IndexMaintenance.batchSeen(spark, s"$root/idx", "L", 8L) &&
+      IndexMaintenance.batchSeen(spark, s"$root/idx", "L", 9L),
+      "compacting one table forgot a committed batch")
+    ops.TextAnalysis.textIndexCompact(spark, s"$root/idx")
+    val postings = IndexMaintenance.scan(spark, s"$root/idx", "postings", "doc_id")
+    assert(postings.count() == postingsBefore, "a committed batch's postings rows were lost")
+    assert(postings.filter(col("doc_id") === 3L).count() == 2L, "gamma+delta rows must survive")
+    IndexMaintenance.checkUnique(spark, s"$root/idx", "postings", Seq("term", "doc_id"), "doc_id")
+  }
+
+  test("retry of a committed batch after a compaction lands nothing") {
+    val root = tmpDir("text-retry")
+    smallTextIndex(root)
+    val batch = textBatch(3L, "gamma delta")
+    ops.TextAnalysis.textIndexAppendBatch(spark, batch, s"$root/idx", Some("L" -> 0L))
+    ops.TextAnalysis.textIndexCompact(spark, s"$root/idx")
+    assert(IndexMaintenance.batchSeen(spark, s"$root/idx", "L", 0L),
+      "the compaction forgot the committed batch")
+    ops.TextAnalysis.textIndexAppendBatch(spark, batch, s"$root/idx", Some("L" -> 0L))
+    assert(IndexMaintenance.scan(spark, s"$root/idx", "doclen", "doc_id").count() == 3L,
+      "the retried batch re-landed its doc-values rows")
+    IndexMaintenance.checkUnique(spark, s"$root/idx", "postings", Seq("term", "doc_id"), "doc_id")
+  }
+
+  test("retry of a committed batch after a retrain lands nothing") {
+    val root = tmpDir("retrain-retry")
+    val emb = Tables(spark, TestSpark.sf0001, "embeddings")
+    emb.filter(col("vec_id") % 2 === 0).write.parquet(s"$root/a/embeddings.parquet")
+    emb.filter(col("vec_id") % 2 === 1).write.parquet(s"$root/b/embeddings.parquet")
+    ops.AnnIndex.lshIndexWrite(spark, s"$root/a", s"$root/idx")
+    val batch = Tables(spark, s"$root/b", "embeddings")
+    ops.AnnIndex.lshIndexAppendBatch(spark, batch, s"$root/idx", Some("L" -> 4L))
+    ops.AnnIndex.lshIndexRetrain(spark, s"$root/idx", Seq(s"$root/a", s"$root/b"))
+    val n = IndexMaintenance.read(spark, s"$root/idx", "buckets").count()
+    ops.AnnIndex.lshIndexAppendBatch(spark, batch, s"$root/idx", Some("L" -> 4L))
+    assert(IndexMaintenance.read(spark, s"$root/idx", "buckets").count() == n,
+      "the retried batch re-landed after the retrain")
+    assert(IndexMaintenance.batchSeen(spark, s"$root/idx", "L", 4L))
+  }
+
+  test("files written with no commit are never served; the next compaction deletes them") {
+    val dir = tmpDir("uncommitted")
+    IndexMaintenance.replace(spark, dir, Seq("t" -> rows(1L to 10L)))
+    // a crashed append: its files stand in the table dir, no version
+    // names them, and they are older than the orphan retention
+    rows(11L to 20L).coalesce(1).write.parquet(s"$dir/crashed")
+    parquetNames(s"$dir/crashed").foreach(n => age(java.nio.file.Files.move(
+      java.nio.file.Paths.get(dir, "crashed", n), java.nio.file.Paths.get(dir, "t", s"crash-$n"))))
+    assert(served(dir) == expected(1L to 10L), "uncommitted rows were served")
+    IndexMaintenance.compact(spark, dir, "t", Seq("id"), Some("id"))
+    assert(!parquetNames(s"$dir/t").exists(_.startsWith("crash-")),
+      "compaction left the uncommitted files")
+    assert(spark.read.parquet(s"$dir/t").count() == 10L)
+  }
+
+  test("a foreign writer's staged file survives a compaction; its later commit serves its rows") {
+    val dir = tmpDir("foreign-staged")
+    IndexMaintenance.replace(spark, dir, Seq("t" -> rows(1L to 10L)))
+    IndexMaintenance.append(spark, dir, Seq("t" -> rows(11L to 12L)))
+    // the other writer has staged its file in the table dir, not yet committed
+    rows(21L to 25L).coalesce(1).write.parquet(s"$dir/foreign")
+    val n = parquetNames(s"$dir/foreign").head
+    val staged = java.nio.file.Files.move(java.nio.file.Paths.get(dir, "foreign", n),
+      java.nio.file.Paths.get(dir, "t", s"foreign-$n"))
+    IndexMaintenance.compact(spark, dir, "t", Seq("id"), Some("id"))
+    assert(java.nio.file.Files.exists(staged), "the compaction deleted a live writer's staged file")
+    assert(served(dir) == expected(1L to 12L), "uncommitted rows were served")
+    val snap = IndexMaintenance.snapshot(spark, dir)
+    foreignCommit(dir, snap.version + 1,
+      s"""{"add":{"path":"t/foreign-$n","table":"t","size":${java.nio.file.Files.size(staged)},""" +
+        s""""seq":${snap.version + 1},"schema":${quote(snap.filesOf("t").head.schema)}}}""")
+    assert(served(dir) == expected((1L to 12L) ++ (21L to 25L)), "the foreign commit lost rows")
+    assert(spark.read.parquet(s"$dir/t").count() == 17L)
+  }
+
+  test("a commit on a version a checkpoint retired retries at the head instead of landing below it") {
+    val dir = tmpDir("retired-version")
+    IndexMaintenance.replace(spark, dir, Seq("t" -> rows(1L to 10L)))
+    IndexMaintenance.transact(spark, dir) { snap =>
+      // other writers run two checkpoints past this long rewrite, one of
+      // them a delete: the version it tries first is retired, so the
+      // create of that version succeeds
+      IndexMaintenance.delete(spark, dir, Seq("t"), Seq(3L))
+      for (b <- 0L until 2 * IndexMaintenance.checkpointInterval)
+        IndexMaintenance.append(spark, dir, Seq("u" -> rows(Seq(b))), Some("L" -> b))
+      assert(!new java.io.File(f"$dir/_log/${snap.version + 1}%020d.json").exists())
+      IndexMaintenance.Change(replace = Seq("t" -> IndexMaintenance.rewrite(spark, snap,
+        "t", Seq("id"), Some("id"))))
+    }
+    val head = IndexMaintenance.snapshot(spark, dir).version
+    assert(head == 2 * IndexMaintenance.checkpointInterval + 2, s"the rewrite landed at $head")
+    assert(served(dir) == expected((1L to 10L).filter(_ != 3L)),
+      "the rewrite lost the delete that raced it")
+    assert(spark.read.parquet(s"$dir/t").count() == 10L, "a committed file was deleted")
+    val vs = new java.io.File(s"$dir/_log").list().toSeq.collect {
+      case n if n.endsWith(".json") && !n.endsWith(".checkpoint.json") => n.take(20).toLong
+    }
+    assert(vs.size == vs.max - vs.min + 1, s"a stray version stands below the head: ${vs.sorted}")
+    assert(IndexMaintenance.scan(spark, dir, "u", "id").count() ==
+      2 * IndexMaintenance.checkpointInterval)
+  }
+
+  test("two first builds race: the loser fails loudly instead of landing beside the winner") {
+    val dir = tmpDir("race-build")
+    val err = intercept[IllegalStateException] {
+      IndexMaintenance.transact(spark, dir) { _ =>
+        // the other writer's build commits first
+        IndexMaintenance.replace(spark, dir, Seq("t" -> rows(1L to 10L)))
+        IndexMaintenance.Change(replace = Seq("t" -> rows(1L to 10L, "w")))
+      }
+    }
+    assert(err.getMessage.contains("concurrent rewrite"), err.getMessage)
+    assert(served(dir) == expected(1L to 10L), "the losing build landed")
+    val committed = IndexMaintenance.snapshot(spark, dir).filesOf("t").map(_.name).toSet
+    assert(parquetNames(s"$dir/t") == committed, "the loser's staged files were left behind")
+  }
+
+  /** A token ledger with a seed and one batch dir: the artifact the
+    * maintenance lease still guards. */
+  private def ledger(root: String): String = {
+    import spark.implicits._
+    Seq(("s1", 2L, 10L, -1L)).toDF("source", "n_docs", "n_tokens", "batch_id")
+      .coalesce(1).write.parquet(s"$root/ledger/seed")
+    Seq(("s1", 1L, 5L, 0L)).toDF("source", "n_docs", "n_tokens", "batch_id")
+      .coalesce(1).write.parquet(s"$root/ledger/b0")
+    s"$root/ledger"
+  }
+
+  private def subdirs(d: String): Seq[String] =
+    new java.io.File(d).listFiles().filter(_.isDirectory).map(_.getName).sorted.toSeq
+
+  private def leaseOf(ledgerDir: String) = new java.io.File(
+    graft.ops.Lease.leasePath(new org.apache.hadoop.fs.Path(ledgerDir)).toUri.getPath)
 
   test("lease: a live foreign lease fails maintenance loudly; a stale one is broken") {
-    import spark.implicits._
-    val tmp = tmpDir("lease")
-    (1L to 50L).map(i => (i, s"v$i")).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp/t")
-    // fabricate a concurrent writer: a foreign-owned lease, fresh
-    // mtime — the lease is scoped to the table's parent (index) dir and
-    // lives as a SIBLING of it, outside every swapped directory
-    val lease = file(s"${file(tmp).getParent}/.${file(tmp).getName}.lease")
-    val out = new java.io.FileOutputStream(lease)
-    out.write("00000000-dead-beef-0000-000000000000".getBytes("UTF-8")); out.close()
-    val e1 = intercept[IllegalStateException](
-      IndexMaintenance.deleteIds(spark, s"$tmp/t", Seq(1L)))
-    assert(e1.getMessage.contains("concurrent maintenance writer"))
-    val e2 = intercept[IllegalStateException](
-      IndexMaintenance.compactTable(spark, s"$tmp/t", Seq("id")))
-    assert(e2.getMessage.contains("concurrent maintenance writer"))
-    val e3 = intercept[IllegalStateException](
-      IndexMaintenance.appendPlain(spark,
-        Seq((99L, "x")).toDF("id", "v"), s"$tmp/t"))
-    assert(e3.getMessage.contains("concurrent maintenance writer"))
-    // the blocked ops left the table untouched
-    assert(spark.read.parquet(s"$tmp/t").count() == 50L)
-    assert(!file(s"$tmp/t/_tombstones").exists(), "delete landed despite the lease")
-    // stale (crashed holder): older than leaseStaleMs -> broken, op runs
-    assert(lease.setLastModified(
-      System.currentTimeMillis() - IndexMaintenance.leaseStaleMs - 60000L))
-    IndexMaintenance.deleteIds(spark, s"$tmp/t", Seq(1L))
-    assert(file(s"$tmp/t/_tombstones").exists(), "op did not run after breaking the stale lease")
-    assert(!lease.exists() || lease.length() == 0 ||
-      new String(java.nio.file.Files.readAllBytes(lease.toPath)) != "00000000-dead-beef-0000-000000000000",
-      "stale foreign lease not broken")
-    // and the lease is released afterwards: a second op proceeds
-    IndexMaintenance.compactTable(spark, s"$tmp/t", Seq("id"), tombstoneCol = Some("id"))
-    assert(spark.read.parquet(s"$tmp/t").count() == 49L)
+    val dir = ledger(tmpDir("lease"))
+    val lease = leaseOf(dir)
+    java.nio.file.Files.write(lease.toPath, "00000000-dead-beef-0000-000000000000".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](
+      graft.streaming.TextIngest.ledgerCompact(spark, dir, upTo = 1L))
+    assert(e.getMessage.contains("concurrent maintenance writer"), e.getMessage)
+    assert(subdirs(dir) == Seq("b0", "seed"), "the rollup ran despite the live lease")
+    // stale (a crashed holder): broken, the rollup runs and releases it
+    assert(lease.setLastModified(System.currentTimeMillis() - graft.ops.Lease.leaseStaleMs - 60000L))
+    graft.streaming.TextIngest.ledgerCompact(spark, dir, upTo = 1L)
+    assert(subdirs(dir) == Seq("c0"), s"no rollup after breaking the stale lease: ${subdirs(dir)}")
     assert(!lease.exists(), "lease leaked after release")
   }
 
-  test("sequence stamps: delete-then-re-append serves under a coarse-granularity clock") {
-    import spark.implicits._
-    val tmp = tmpDir("seqstamp")
-    (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp/t")
-    IndexMaintenance.deleteIds(spark, s"$tmp/t", Seq(5L))
-    IndexMaintenance.appendPlain(spark, Seq((5L, "re-admitted")).toDF("id", "v"), s"$tmp/t")
-    // simulate a second-resolution / mtime-less filesystem: EVERY file
-    // in the table carries the identical modification time, so any
-    // mtime-derived ordering collapses — the old watermark scheme
-    // masked (and at compact physically dropped) the re-append here
-    val now = System.currentTimeMillis()
-    file(s"$tmp/t").listFiles().filter(_.isFile).foreach(f => assert(f.setLastModified(now)))
-    def served() = IndexMaintenance.minusTombstones(spark, s"$tmp/t",
-      spark.read.parquet(s"$tmp/t"), "id")
-      .filter(col("id") === 5L).collect().map(_.getString(1)).toSeq
-    assert(served() === Seq("re-admitted"),
-      "re-appended row lost under a flat-mtime file set")
-    // compact PHYSICALLY keeps exactly the re-admitted copy
-    IndexMaintenance.compactTable(spark, s"$tmp/t", Seq("id"), tombstoneCol = Some("id"))
-    assert(spark.read.parquet(s"$tmp/t").filter(col("id") === 5L)
-      .collect().map(_.getString(1)).toSeq === Seq("re-admitted"),
-      "compaction dropped the re-admitted row (the mtime-granularity data-loss mode)")
-    assert(spark.read.parquet(s"$tmp/t").count() == 20L)
-  }
-
-  test("marker retirement: the _batches sidecar is bounded per lineage, newest kept") {
-    import spark.implicits._
-    val tmp = tmpDir("retire")
-    (1L to 10L).map(i => (i, i * 2)).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp/idx/t")
-    // 30 replayed batches on one lineage + 3 on an older checkpoint's
-    for (b <- 0L until 30L) IndexMaintenance.recordBatch(spark, s"$tmp/idx", "aaaa1111", b)
-    for (b <- 0L until 3L) IndexMaintenance.recordBatch(spark, s"$tmp/idx", "bbbb2222", b)
-    // filter the local FS's .crc sidecars — java.io.File sees them
-    def markers() = file(s"$tmp/idx/_batches").listFiles()
-      .map(_.getName).filterNot(_.startsWith(".")).toSet
-    assert(markers().size == 33)
-    IndexMaintenance.compactTable(spark, s"$tmp/idx/t", Seq("id"),
-      markerDir = Some(s"$tmp/idx/_batches"))
-    val left = markers()
-    assert(left == Set("aaaa1111_b29", "bbbb2222_b2"),
-      s"retirement kept $left — want exactly each lineage's max batch id")
-    // the survivors still answer batchSeen (the only ids that can retry)
-    assert(IndexMaintenance.batchSeen(spark, s"$tmp/idx", "aaaa1111", 29L))
-    assert(IndexMaintenance.batchSeen(spark, s"$tmp/idx", "bbbb2222", 2L))
-  }
-
-  test("absorbed batch: a rewrite pins the un-markered batch's fold marker (no re-land)") {
-    import spark.implicits._
-    val tmp = tmpDir("absorb")
-    val lineage = "cccc3333"
-    (1L to 10L).map(i => (i, i * 2)).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp/idx/t")
-    // batch 0: data landed via the idempotent tagged append, but the
-    // crash hit BEFORE recordBatch — no marker
-    val tag = IndexMaintenance.batchTag(lineage, 0L)
-    IndexMaintenance.appendBatchAs(spark,
-      (11L to 15L).map(i => (i, i * 2)).toDF("id", "v"), s"$tmp/idx/t", tag)
-    assert(!IndexMaintenance.batchSeen(spark, s"$tmp/idx", lineage, 0L))
-    // a compaction rewrites the table: the batch's b$tag files are
-    // absorbed into anonymous part files...
-    IndexMaintenance.compactTable(spark, s"$tmp/idx/t", Seq("id"),
-      markerDir = Some(s"$tmp/idx/_batches"))
-    assert(!file(s"$tmp/idx/t").listFiles().exists(_.getName.startsWith(s"b$tag")),
-      "compaction should have absorbed the batch files")
-    // ...so the marker MUST now exist: the restarted stream's retry
-    // consults it and skips, instead of re-landing 5 duplicate rows
-    assert(IndexMaintenance.batchSeen(spark, s"$tmp/idx", lineage, 0L),
-      "absorbed batch lost its fold marker — the retry would duplicate rows")
-    assert(spark.read.parquet(s"$tmp/idx/t").count() == 15L)
-    IndexMaintenance.checkUnique(spark, s"$tmp/idx/t", Seq("id"), "id")
-  }
-
-  test("stolen lease: an op that lost its lease aborts LOUDLY before its promote") {
-    import spark.implicits._
-    val tmp = tmpDir("steal")
-    (1L to 50L).map(i => (i, s"v$i")).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp/t")
-    val lease = file(s"${file(tmp).getParent}/.${file(tmp).getName}.lease")
-    // fabricate the expired-then-stolen shape: this process holds the
-    // scope lease (as a long-running compact would), a second process
-    // judges it stale and re-takes it — then OUR op reaches its promote
-    val e = intercept[IllegalStateException] {
-      IndexMaintenance.withIndexMaintenance(spark, tmp) {
-        val out = new java.io.FileOutputStream(lease)
-        out.write("00000000-dead-beef-0000-000000000000".getBytes("UTF-8")); out.close()
-        IndexMaintenance.compactTable(spark, s"$tmp/t", Seq("id"))
-      }
-    }
-    assert(e.getMessage.contains("stolen") || e.getMessage.contains("broken"),
-      s"wrong abort reason: ${e.getMessage}")
-    // aborted BEFORE the promote: the standing table is untouched and
-    // no intent/aside state was created (nothing for recovery to heal)
-    assert(spark.read.parquet(s"$tmp/t").count() == 50L)
-    assert(!file(s"$tmp/.t.promote.intent").exists(), "promote intent created after a stolen lease")
-    assert(!file(s"$tmp/.t.compact.old").exists(), "table renamed aside after a stolen lease")
-    lease.delete() // the thief's lease, not ours to release
-  }
-
-  test("a sibling thread of the same process reenters the lease instead of breaking it") {
-    import spark.implicits._
-    val tmp = tmpDir("lease-thread")
-    (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp/t")
-    val lease = file(s"${file(tmp).getParent}/.${file(tmp).getName}.lease")
-    var threadErr: Option[Throwable] = None
-    IndexMaintenance.withIndexMaintenance(spark, tmp) {
-      // a second THREAD of this process (an operator takedown landing
-      // while a compact holds the index lease): per-thread tracking
-      // used to mistake the live lease for a crashed leftover, break
-      // it, and delete it on release — leaving the long op unprotected
-      // and aborting its promote on the ownership re-check
-      val t = new Thread(() => try
-        IndexMaintenance.deleteIds(spark, s"$tmp/t", Seq(1L))
+  test("lease: a nested hold reenters without releasing; a sibling thread waits instead of breaking it") {
+    val dir = ledger(tmpDir("lease-thread"))
+    val lease = leaseOf(dir)
+    def ours = lease.exists() &&
+      new String(java.nio.file.Files.readAllBytes(lease.toPath), "UTF-8") == graft.ops.Lease.processId
+    @volatile var threadErr: Option[Throwable] = None
+    val t = new Thread(() => try graft.streaming.TextIngest.ledgerCompact(spark, dir, upTo = 1L)
       catch { case e: Throwable => threadErr = Some(e) })
-      t.start(); t.join()
-      assert(threadErr.isEmpty, s"sibling thread failed: $threadErr")
-      assert(lease.exists(), "sibling thread released the outer hold's lease")
-      // the outer hold still owns the lease: the promote gate passes
-      IndexMaintenance.verifyHeldLease(spark, s"$tmp/t")
+    graft.ops.Lease.withMaintenance(spark, dir) {
+      graft.ops.Lease.withMaintenance(spark, dir) {
+        assert(ours, "the nested hold does not see the outer hold's lease")
+      }
+      assert(ours, "the nested hold released the outer hold's lease")
+      // a second thread of this process (a rollup landing while another
+      // maintenance op holds the ledger) queues on the in-JVM lock
+      t.start()
+      t.join(1000L)
+      assert(t.isAlive && threadErr.isEmpty, s"the sibling thread ran inside the hold: $threadErr")
+      assert(ours && subdirs(dir) == Seq("b0", "seed"), "the sibling thread broke the live lease")
     }
-    assert(!lease.exists(), "lease leaked after the outer release")
-    assert(file(s"$tmp/t/_tombstones").exists(), "the sibling thread's delete was lost")
+    t.join(60000L)
+    assert(threadErr.isEmpty, s"sibling thread failed: $threadErr")
+    assert(subdirs(dir) == Seq("c0"), s"the sibling thread's rollup was lost: ${subdirs(dir)}")
+    assert(!lease.exists(), "lease leaked after the last release")
   }
 
-  test("text index: a batch crashed between doclen and postings appends is swept, not marker-pinned") {
+  test("a text batch crashed before its commit is never served and its retry lands once") {
     import spark.implicits._
-    val r = tmpDir("text-orphan")
-    val docs = Tables(spark, TestSpark.sf0001, "documents")
-    docs.filter(org.apache.spark.sql.functions.pmod(col("doc_id"), lit(3)) === 0)
-      .write.mode("overwrite").parquet(s"$r/seed/documents.parquet")
-    graft.ops.TextAnalysis.textIndexWrite(spark, s"$r/seed", s"$r/index")
-    val doclenBefore = spark.read.parquet(s"$r/index/doclen").count()
-    val postingsBefore = spark.read.parquet(s"$r/index/postings").count()
-    // the crash: textIndexAppendBatch lands doclen FIRST; the process
-    // dies before the postings append and before recordBatch
-    val lineage = "eeee5555"
-    val tag = IndexMaintenance.batchTag(lineage, 7L)
-    IndexMaintenance.appendBatchAs(spark,
-      Seq((900001L, 3L, "en", "web")).toDF("doc_id", "dl", "lang", "source"),
-      s"$r/index/doclen", tag)
-    assert(!IndexMaintenance.batchSeen(spark, s"$r/index", lineage, 7L))
-    // a compaction before the stream's retry: the old code pinned the
-    // fold marker from the doclen files alone — the retry then skipped
-    // and the batch's postings rows were silently lost forever
-    graft.ops.TextAnalysis.textIndexCompact(spark, s"$r/index")
-    assert(!IndexMaintenance.batchSeen(spark, s"$r/index", lineage, 7L),
-      "marker pinned from a doclen-only partial batch — the retry would skip " +
-      "and the batch's postings rows would be silently lost")
-    assert(spark.read.parquet(s"$r/index/doclen")
-      .filter(col("doc_id") === 900001L).count() == 0L,
-      "compaction absorbed the uncommitted partial batch's doclen rows")
-    // the retry re-lands the WHOLE batch and commits it
-    graft.ops.TextAnalysis.textIndexAppendBatch(spark,
-      Seq((900001L, "en", "web", "alpha beta alpha")).toDF("doc_id", "lang", "source", "text"),
-      s"$r/index", tag = Some(tag))
-    IndexMaintenance.recordBatch(spark, s"$r/index", lineage, 7L)
-    assert(spark.read.parquet(s"$r/index/doclen")
-      .filter(col("doc_id") === 900001L).count() == 1L)
-    assert(spark.read.parquet(s"$r/index/postings")
-      .filter(col("doc_id") === 900001L).count() == 2L, "alpha + beta posting rows")
-    assert(spark.read.parquet(s"$r/index/doclen").count() == doclenBefore + 1)
-    assert(spark.read.parquet(s"$r/index/postings").count() == postingsBefore + 2)
-    IndexMaintenance.checkUnique(spark, s"$r/index/postings", Seq("term", "doc_id"), "doc_id")
+    val root = tmpDir("text-crash")
+    Seq((1L, "alpha beta", "en", "s")).toDF("doc_id", "text", "lang", "source")
+      .write.parquet(s"$root/c/documents.parquet")
+    ops.TextAnalysis.textIndexWrite(spark, s"$root/c", s"$root/idx")
+    // the crash left the batch's doclen file, never committed
+    Seq((2L, 2L, "en", "s")).toDF("doc_id", "dl", "lang", "source")
+      .coalesce(1).write.parquet(s"$root/crashed")
+    parquetNames(s"$root/crashed").foreach(n => java.nio.file.Files.move(
+      java.nio.file.Paths.get(root, "crashed", n), java.nio.file.Paths.get(root, "idx", "doclen", n)))
+    assert(IndexMaintenance.scan(spark, s"$root/idx", "doclen", "doc_id").count() == 1L)
+    val batch = Seq((2L, "beta gamma", "en", "s")).toDF("doc_id", "text", "lang", "source")
+    ops.TextAnalysis.textIndexAppendBatch(spark, batch, s"$root/idx", Some("L" -> 0L))
+    ops.TextAnalysis.textIndexAppendBatch(spark, batch, s"$root/idx", Some("L" -> 0L))
+    assert(IndexMaintenance.scan(spark, s"$root/idx", "doclen", "doc_id").count() == 2L,
+      "the retried batch is not in doc-values exactly once")
+    assert(IndexMaintenance.scan(spark, s"$root/idx", "postings", "doc_id")
+      .filter(col("doc_id") === 2L).count() == 2L, "the batch's postings are not there once")
   }
 
-  test("committed batch whose marker was retired after one table's compact is re-pinned, not swept") {
-    import spark.implicits._
-    val r = tmpDir("retired-orphan")
-    val docs = Tables(spark, TestSpark.sf0001, "documents")
-    docs.filter(org.apache.spark.sql.functions.pmod(col("doc_id"), lit(3)) === 0)
-      .write.mode("overwrite").parquet(s"$r/seed/documents.parquet")
-    graft.ops.TextAnalysis.textIndexWrite(spark, s"$r/seed", s"$r/index")
-    // two COMMITTED batches (appended to both tables, markers recorded)
-    val lineage = "abcd9999"
-    def commit(b: Long, id: Long, text: String): Unit = {
-      graft.ops.TextAnalysis.textIndexAppendBatch(spark,
-        Seq((id, "en", "web", text)).toDF("doc_id", "lang", "source", "text"),
-        s"$r/index", tag = Some(IndexMaintenance.batchTag(lineage, b)))
-      IndexMaintenance.recordBatch(spark, s"$r/index", lineage, b)
-    }
-    commit(8L, 800001L, "alpha beta")
-    commit(9L, 900001L, "gamma")
-    // a crashed pass: the DOCLEN compact ran (absorbing both tags and
-    // retiring marker 8 — 9 is the lineage max), then the process died
-    // before the postings compact
-    IndexMaintenance.compactTable(spark, s"$r/index/doclen", Seq("doc_id"),
-      tombstoneCol = Some("doc_id"), markerDir = Some(s"$r/index/_batches"))
-    assert(!IndexMaintenance.batchSeen(spark, s"$r/index", lineage, 8L),
-      "staging failed: marker 8 should be retired by the doclen compact")
-    assert(IndexMaintenance.batchSeen(spark, s"$r/index", lineage, 9L))
-    val postingsBefore = spark.read.parquet(s"$r/index/postings").count()
-    // the next full compact sees batch 8's postings files complete but
-    // markerless, with its doclen copy long absorbed: the COMPLETE
-    // last-table file set is the commit witness — the batch must be
-    // re-pinned and retained, never judged 'crashed mid-append' and
-    // swept (that would silently lose a committed batch's rows forever)
-    graft.ops.TextAnalysis.textIndexCompact(spark, s"$r/index")
-    assert(spark.read.parquet(s"$r/index/postings").count() == postingsBefore,
-      "a committed batch's postings rows were lost by the sweep")
-    assert(spark.read.parquet(s"$r/index/postings")
-      .filter(col("doc_id") === 800001L).count() == 2L, "alpha+beta rows must survive")
-    IndexMaintenance.checkUnique(spark, s"$r/index/postings", Seq("term", "doc_id"), "doc_id")
+  test("a delete committed after a batch masks that batch across a later retry") {
+    val dir = tmpDir("delete-retry")
+    IndexMaintenance.replace(spark, dir, Seq("t" -> rows(1L to 10L)))
+    val batch = rows(11L to 20L)
+    assert(IndexMaintenance.append(spark, dir, Seq("t" -> batch), Some("L" -> 0L)))
+    IndexMaintenance.delete(spark, dir, Seq("t"), Seq(15L))
+    assert(!IndexMaintenance.append(spark, dir, Seq("t" -> batch), Some("L" -> 0L)),
+      "the retry of a committed batch landed again")
+    assert(served(dir) == expected((1L to 20L).filter(_ != 15L)), "the takedown was undone")
   }
 
-  test("incomplete landing: a partial b$tag file set (crash mid-renames) is swept, not pinned") {
-    import spark.implicits._
-    val tmp = tmpDir("partial")
-    val lineage = "ffff6666"
-    (1L to 10L).map(i => (i, i * 2)).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp/idx/t")
-    val tag = IndexMaintenance.batchTag(lineage, 0L)
-    IndexMaintenance.appendBatchAs(spark,
-      (11L to 40L).map(i => (i, i * 2)).toDF("id", "v").repartition(3), s"$tmp/idx/t", tag)
-    val landed = file(s"$tmp/idx/t").listFiles().filter(_.getName.startsWith(s"b$tag-"))
-    assert(landed.length == 3, s"expected 3 advertised parts, got ${landed.length}")
-    assert(landed.forall(_.getName.contains(".c3.")), "part files must advertise the part count")
-    // crash mid-landAs: one part never got renamed in
-    assert(landed.head.delete())
-    new java.io.File(landed.head.getParentFile, s".${landed.head.getName}.crc").delete()
-    IndexMaintenance.compactTable(spark, s"$tmp/idx/t", Seq("id"),
-      markerDir = Some(s"$tmp/idx/_batches"))
-    assert(!IndexMaintenance.batchSeen(spark, s"$tmp/idx", lineage, 0L),
-      "marker pinned from a partial file set — the missing part's rows would be lost")
-    assert(spark.read.parquet(s"$tmp/idx/t").count() == 10L,
-      "compaction absorbed the uncommitted partial landing")
-    // retry re-lands the full batch
-    IndexMaintenance.appendBatchAs(spark,
-      (11L to 40L).map(i => (i, i * 2)).toDF("id", "v").repartition(3), s"$tmp/idx/t", tag)
-    IndexMaintenance.recordBatch(spark, s"$tmp/idx", lineage, 0L)
-    assert(spark.read.parquet(s"$tmp/idx/t").count() == 40L)
-    IndexMaintenance.checkUnique(spark, s"$tmp/idx/t", Seq("id"), "id")
+  test("checkpoint: replay from the newest checkpoint equals the full history; old versions go") {
+    val dir = tmpDir("checkpoint")
+    IndexMaintenance.replace(spark, dir, Seq("t" -> rows(1L to 3L)))
+    for (b <- 0L until 24L)
+      IndexMaintenance.append(spark, dir, Seq("t" -> rows(Seq(100L + b))), Some("L" -> b))
+    IndexMaintenance.delete(spark, dir, Seq("t"), Seq(2L))
+    val live = IndexMaintenance.snapshot(spark, dir)
+    val names = new java.io.File(s"$dir/_log").list().toSeq
+    assert(names.exists(_.endsWith(".checkpoint.json")), s"no checkpoint in $names")
+    assert(!names.contains(f"${0}%020d.json"), "versions before the previous checkpoint kept")
+    val cold = tmpDir("checkpoint-cold") + "/idx"
+    copyTree(dir, cold)
+    val replayed = IndexMaintenance.snapshot(spark, cold)
+    assert(replayed.version == live.version && replayed.files == live.files &&
+      replayed.tombstones == live.tombstones && replayed.batches == live.batches)
+    assert(served(cold) == served(dir))
   }
+}
 
-  test("a tag containing a .cN. substring still advertises the TAIL part count (anchor pin)") {
-    import spark.implicits._
-    // the r11 fix under pin: an unanchored `\.c(\d+)\.` count regex took
-    // the FIRST match anywhere in the file name, so a tag carrying a
-    // `.cN.` substring advertised N as the part count and tagComplete
-    // judged the lineage's committed batches permanently incomplete —
-    // swept (rows lost) and re-landed at every compact
-    val tmp = tmpDir("ctag")
-    val tag = "aa.c9.bb_b0" // adversarial: '.c9.' inside the TAG itself
-    (1L to 10L).map(i => (i, i * 2)).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp/idx/t")
-    IndexMaintenance.appendBatchAs(spark,
-      (11L to 40L).map(i => (i, i * 2)).toDF("id", "v").repartition(3), s"$tmp/idx/t", tag)
-    val landed = file(s"$tmp/idx/t").listFiles().filter(_.getName.startsWith(s"b$tag-"))
-    assert(landed.length == 3, s"expected 3 parts, got ${landed.length}")
-    // unit pin: the advertised count is the tail `.c` stamp, never the tag's
-    assert(IndexMaintenance.partCountOf(landed.head.getName).contains(3),
-      s"partCountOf read the tag's .c9. as the part count: ${landed.head.getName}")
-    assert(IndexMaintenance.batchTagOf(landed.head.getName).contains(tag))
-    // end-to-end: the complete markerless batch is judged complete at the
-    // next compact — retained and re-pinned, not swept as crashed
-    IndexMaintenance.compactTable(spark, s"$tmp/idx/t", Seq("id"),
-      markerDir = Some(s"$tmp/idx/_batches"))
-    assert(spark.read.parquet(s"$tmp/idx/t").count() == 40L,
-      "a committed batch with .cN. in its tag was swept (unanchored count regex)")
-    assert(IndexMaintenance.batchSeen(spark, s"$tmp/idx", "aa.c9.bb", 0L),
-      "the absorbed batch's marker was not re-pinned")
-  }
+object MaintenanceSpec {
+  def tmpDir(tag: String): String = java.nio.file.Files.createTempDirectory(tag).toString
 
-  test("reuse stamp survives the zero-file crash window (takedown not resurrected)") {
-    import spark.implicits._
-    val tmp = tmpDir("reuse")
-    val lineage = "aaaa7777"
-    (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp/idx/t")
-    val tag = IndexMaintenance.batchTag(lineage, 0L)
-    IndexMaintenance.appendBatchAs(spark,
-      Seq((11L, "x"), (12L, "y")).toDF("id", "v"), s"$tmp/idx/t", tag)
-    // a takedown lands between the first landing and the retry: its
-    // tombstone watermarks at the first attempt's sequence stamp
-    IndexMaintenance.deleteIds(spark, s"$tmp/idx/t", Seq(11L))
-    // the crash window ADVICE flagged: the retry's sweep removed the
-    // first attempt's files, then the process died before any rename —
-    // zero b$tag files stand, only the persisted stamp sentinel remains
-    file(s"$tmp/idx/t").listFiles()
-      .filter(_.getName.startsWith(s"b$tag-")).foreach(f => assert(f.delete()))
-    IndexMaintenance.appendBatchAs(spark,
-      Seq((11L, "x"), (12L, "y")).toDF("id", "v"), s"$tmp/idx/t", tag)
-    val served = IndexMaintenance.minusTombstones(spark, s"$tmp/idx/t",
-      spark.read.parquet(s"$tmp/idx/t"), "id")
-      .filter(col("id") >= 11L).collect().map(_.getLong(0)).toSeq.sorted
-    assert(served === Seq(12L),
-      s"served $served — the retry minted a fresh sequence stamp and slipped past " +
-      "the tombstone watermark: an acknowledged takedown silently undone")
-  }
+  def parquetNames(dir: String): Set[String] =
+    Option(new java.io.File(dir).list()).toSeq.flatten
+      .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toSet
 
-  test("absorbed batch: a retrain publish pins the un-markered batch's fold marker") {
-    import org.apache.spark.sql.functions.col
-    import graft.ops.{AnnIndex, Similarity}
-    val tmp = tmpDir("absorb-pub")
-    val emb = Tables(spark, TestSpark.sf0001, "embeddings")
-    // disjoint seed / landed slices: the landed batch's vectors are NOT
-    // in the seed, exactly as in the streaming deployment
-    emb.filter(col("vec_id") % 97 =!= 3)
-      .write.mode("overwrite").parquet(s"$tmp/corpus/embeddings.parquet")
-    AnnIndex.lshIndexWrite(spark, s"$tmp/corpus", s"$tmp/idx")
-    // an un-markered landed batch (crash before recordBatch): hash a
-    // tiny slice through the batch append with a lineage tag
-    val lineage = "dddd4444"
-    val batch = emb.filter(col("vec_id") % 97 === 3)
-    batch.write.mode("overwrite").parquet(s"$tmp/landed/embeddings.parquet")
-    graft.ops.AnnIndex.lshIndexAppendBatch(spark, batch, s"$tmp/idx",
-      tag = Some(IndexMaintenance.batchTag(lineage, 4L)))
-    assert(!IndexMaintenance.batchSeen(spark, s"$tmp/idx", lineage, 4L))
-    // the retrain's rebuild (over the full corpus incl. the landed
-    // slice) absorbs the landed rows; publish must pin the marker so a
-    // restarted stream's retry skips instead of re-landing
-    AnnIndex.lshIndexRetrain(spark, s"$tmp/idx", Seq(s"$tmp/corpus", s"$tmp/landed"))
-    assert(IndexMaintenance.batchSeen(spark, s"$tmp/idx", lineage, 4L),
-      "retrain publish lost the absorbed batch's fold marker")
-  }
+  /** Set a file's mtime past the orphan retention: a crashed writer's
+    * leftover, not a live writer's staged file. */
+  def age(p: java.nio.file.Path): Unit =
+    java.nio.file.Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - IndexMaintenance.orphanRetentionMs - 60000L))
 
-  test("cold seqCache is never seeded below a pending tombstone watermark (lost append)") {
-    import spark.implicits._
-    // crash state under repro: files stamped ABOVE a finite del_seq
-    // tombstone were swept (a retry's sweep ran, its re-land never did),
-    // then the process restarted (cold cache). A files-only stamp noted
-    // by deleteIds — or a reuse-sentinel stamp noted by appendBatchAs —
-    // must NOT seed the cache, or the next append stamps at-or-below
-    // the pending watermark and its rows are masked and then physically
-    // dropped at the next compact.
-    def served(t: String) = IndexMaintenance.minusTombstones(spark, t,
-      spark.read.parquet(t), "id")
-      .filter(col("id") === 5L).collect().map(_.getString(1)).toSeq
-    def sweepStamped(t: String, stamps: Set[Long]): Unit =
-      file(t).listFiles().filter(f => f.isFile &&
-        stamps.exists(s => f.getName.contains(s".s$s."))).foreach(f => assert(f.delete()))
+  def quote(s: String): String =
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(s)
 
-    // --- arm 1: deleteIds on a cold cache (files-only watermark) ---
-    val tmp1 = tmpDir("coldseed1")
-    (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp1/t")
-    for (k <- 100L to 102L)  // stamps s1, s2, s3
-      IndexMaintenance.appendPlain(spark, Seq((k, s"x$k")).toDF("id", "v"), s"$tmp1/t")
-    IndexMaintenance.deleteIds(spark, s"$tmp1/t", Seq(5L))  // watermark 3
-    sweepStamped(s"$tmp1/t", Set(2L, 3L))
-    IndexMaintenance.forgetSeqForTest(spark, s"$tmp1/t")    // process restart
-    // the buggy path: this seeded the cache at max-file-stamp 1
-    IndexMaintenance.deleteIds(spark, s"$tmp1/t", Seq(6L))
-    IndexMaintenance.appendPlain(spark,
-      Seq((5L, "re-admitted")).toDF("id", "v"), s"$tmp1/t")
-    assert(served(s"$tmp1/t") === Seq("re-admitted"),
-      "append after a cold-cache deleteIds stamped under the pending watermark (masked)")
-    IndexMaintenance.compactTable(spark, s"$tmp1/t", Seq("id"), tombstoneCol = Some("id"))
-    assert(spark.read.parquet(s"$tmp1/t").filter(col("id") === 5L)
-      .collect().map(_.getString(1)).toSeq === Seq("re-admitted"),
-      "compaction physically dropped the re-append (the lost-append mode)")
+  /** A commit by a writer in another process: version `v` of `dir`'s
+    * log, created without this JVM's writer lock. */
+  def foreignCommit(dir: String, v: Long, actions: String*): Unit =
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_log", f"$v%020d.json"),
+      actions.mkString("", "\n", "\n").getBytes("UTF-8"))
 
-    // --- arm 2: appendBatchAs reusing a low sentinel stamp on a cold cache ---
-    val tmp2 = tmpDir("coldseed2")
-    (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp2/t")
-    for (k <- 100L to 102L)
-      IndexMaintenance.appendPlain(spark, Seq((k, s"x$k")).toDF("id", "v"), s"$tmp2/t")
-    IndexMaintenance.deleteIds(spark, s"$tmp2/t", Seq(5L))  // watermark 3
-    sweepStamped(s"$tmp2/t", Set(2L, 3L))
-    IndexMaintenance.forgetSeqForTest(spark, s"$tmp2/t")
-    // fabricate the first attempt's persisted stamp (seq 1): the retry
-    // legitimately REUSES it for its own files, but must not seed the
-    // carried sequence with it
-    val sentinel = file(s"$tmp2/.seq_t.lin_b0.s1")
-    assert(sentinel.createNewFile())
-    IndexMaintenance.appendBatchAs(spark,
-      Seq((200L, "batch")).toDF("id", "v"), s"$tmp2/t", "lin_b0")
-    IndexMaintenance.appendPlain(spark,
-      Seq((5L, "re-admitted")).toDF("id", "v"), s"$tmp2/t")
-    assert(served(s"$tmp2/t") === Seq("re-admitted"),
-      "append after a cold-cache sentinel-reusing appendBatchAs was masked")
-    // the physical lost-append mode, same as arm 1 (r11 advice: serve-time
-    // visibility alone leaves the compaction drop untested on this arm)
-    IndexMaintenance.compactTable(spark, s"$tmp2/t", Seq("id"), tombstoneCol = Some("id"))
-    assert(spark.read.parquet(s"$tmp2/t").filter(col("id") === 5L)
-      .collect().map(_.getString(1)).toSeq === Seq("re-admitted"),
-      "compaction physically dropped the re-append (sentinel arm)")
+  /** Byte copy of a directory tree, as an operator's `cp -r` makes it. */
+  def copyTree(from: String, to: String): Unit = {
+    val src = java.nio.file.Paths.get(from)
+    val w = java.nio.file.Files.walk(src)
+    try w.forEach { p =>
+      java.nio.file.Files.copy(p, java.nio.file.Paths.get(to).resolve(src.relativize(p).toString))
+    } finally w.close()
   }
 }

@@ -882,7 +882,7 @@ class OperatorSpec extends AnyFunSuite {
     val didx = java.nio.file.Files.createTempDirectory("sim-idx").toString
     graft.ops.Dedup.dedupIndexWrite(spark, sf0001, didx)
     graft.ops.Dedup.dedupIndexAppend(spark, sf0001, didx)
-    val filesBefore = graft.ops.IndexMaintenance.dataFiles(spark, s"$didx/simhash").size
+    val filesBefore = graft.ops.IndexMaintenance.snapshot(spark, didx).filesOf("simhash").size
     val (db, da) = graft.ops.Dedup.dedupIndexCompact(spark, didx)
     assert(db == filesBefore && db > da,
       s"simhash compaction did not reduce files ($db -> $da)")

@@ -306,7 +306,7 @@ class StreamingSpec extends AnyFunSuite {
     // round-7 anti-join's O(index)-per-trigger scan).
     val before = spark.read.parquet(s"$r/index/buckets").count()
     val bucketsBytes = graft.ops.IndexMaintenance
-      .dataFiles(spark, s"$r/index/buckets").map(_.getLen).sum
+      .snapshot(spark, s"$r/index").filesOf("buckets").map(_.size).sum
     def lastCommit(): java.io.File = new java.io.File(s"$r/checkpoint/commits")
       .listFiles().filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toInt)
     // the local checksummed FS keeps a .N.crc sibling per commit file;
@@ -335,22 +335,26 @@ class StreamingSpec extends AnyFunSuite {
     assert(serveOf(s"$r/index") === streamed, "redelivery changed serving")
     assert(redelBytes < bucketsBytes / 2,
       s"redelivery skip read $redelBytes B — O(index) ($bucketsBytes B) not O(1)")
-    // CRASH WINDOW between data append and marker append: the batch's
-    // files landed but the marker did not — the retry must REPLACE the
-    // partial attempt's deterministically-named files, not duplicate
-    // rows. Simulated by deleting the marker AND the commit.
+    // CRASH WINDOW before the log commit: the batch's files were
+    // written but never committed (a byte copy of a committed bucket
+    // file under a fresh name stands in for them) — the orphan is never
+    // served and the retry must not duplicate rows.
     val lineage = graft.ops.IndexMaintenance.lineageTag(s"$r/checkpoint")
     val lastId = lastCommit().getName.toInt
-    val marker = new java.io.File(s"$r/index/_batches/${lineage}_b$lastId")
-    assert(marker.exists(), s"expected marker ${marker.getPath}")
-    assert(marker.delete() && uncommit(lastCommit()))
+    assert(graft.ops.IndexMaintenance.batchSeen(spark, s"$r/index", lineage, lastId),
+      s"expected batch $lastId of lineage $lineage in the index log")
+    val committed = graft.ops.IndexMaintenance.snapshot(spark, s"$r/index")
+      .filesOf("buckets").last.path
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$r/index/$committed"),
+      java.nio.file.Paths.get(s"$r/index/buckets/part-orphan-$lastId.parquet"))
+    assert(uncommit(lastCommit()))
     graft.streaming.AnnIngest.streamAnnIngestToFiles(spark, s"$r/landing",
       s"$r/index", s"$r/checkpoint")
-    assert(spark.read.parquet(s"$r/index/buckets").count() == before,
+    assert(graft.ops.IndexMaintenance.read(spark, s"$r/index", "buckets").count() == before,
       "crash-window retry duplicated the batch's bucket rows")
     assert(serveOf(s"$r/index") === streamed, "crash-window retry changed serving")
     // the standing-id invariant the retired anti-join enforced inline
-    graft.ops.IndexMaintenance.checkUnique(spark, s"$r/index/buckets",
+    graft.ops.IndexMaintenance.checkUnique(spark, s"$r/index", "buckets",
       Seq("vec_id", "tbl"), "vec_id")
   }
 
@@ -396,7 +400,7 @@ class StreamingSpec extends AnyFunSuite {
       s"$r/index", s"$r/checkpoint")
     assert(listsOf(s"$r/index") === streamed,
       "redelivered batch changed the inverted lists")
-    graft.ops.IndexMaintenance.checkUnique(spark, s"$r/index/lists",
+    graft.ops.IndexMaintenance.checkUnique(spark, s"$r/index", "lists",
       Seq("vec_id"), "vec_id")
   }
 
@@ -437,8 +441,8 @@ class StreamingSpec extends AnyFunSuite {
     // file-count bound: 30 appends would leave ≥30 file groups per
     // store; the cadence's last firing was batch 29, so at most the
     // post-compaction files remain (vs 30+ uncompacted)
-    val sigFiles = graft.ops.IndexMaintenance.dataFiles(spark, s"$r/index/simhash").size
-    val cleanFiles = graft.ops.IndexMaintenance.dataFiles(spark, s"$r/index/clean").size
+    val sigFiles = graft.ops.IndexMaintenance.snapshot(spark, s"$r/index").filesOf("simhash").size
+    val cleanFiles = graft.ops.IndexMaintenance.snapshot(spark, s"$r/index").filesOf("clean").size
     assert(sigFiles <= 4, s"simhash file pileup: $sigFiles files after 30 batches")
     assert(cleanFiles <= 4, s"clean-store file pileup: $cleanFiles files after 30 batches")
     // serve-identity after mid-stream compactions: the index still

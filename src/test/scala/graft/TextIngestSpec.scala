@@ -87,7 +87,7 @@ class TextIngestSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$r/index/postings").count() == before,
       "redelivered batch appended duplicate posting rows")
     assert(serveOf(s"$r/index") === caught, "redelivery changed serving")
-    IndexMaintenance.checkUnique(spark, s"$r/index/postings",
+    IndexMaintenance.checkUnique(spark, s"$r/index", "postings",
       Seq("term", "doc_id"), "doc_id")
   }
 
@@ -308,7 +308,7 @@ class TextIngestSpec extends AnyFunSuite {
     // CRASHED compact's leftover, and it must surface as debt or an
     // autopilot-only deployment would never collect it
     assert(lease.setLastModified(
-      System.currentTimeMillis() - graft.ops.IndexMaintenance.leaseStaleMs - 60000L))
+      System.currentTimeMillis() - graft.ops.Lease.leaseStaleMs - 60000L))
     val (_, _, _, garbage2) =
       graft.streaming.TextIngest.ledgerListingStats(spark, s"$r/ledger")
     assert(garbage2 == 1, s"staging with no live lease not counted as debt: $garbage2")
