@@ -120,10 +120,10 @@ object Autopilot {
     }
 
   /** Run the autopilot pass on the index at `indexDir` (families
-    * detected from the on-disk layout: buckets+meta = LSH,
+    * detected from the tables in its log: buckets+meta = LSH,
     * lists+codebook = IVF-PQ, lists+centroids = IVF, postings+doclen =
     * text, bloom+eval_shingles = decontamination, simhash = dedup
-    * signature store, seed/b<i>/c<n> = token ledger — an
+    * signature store, counts = token ledger — an
     * ingest-manifest index legitimately carries bloom+simhash side by
     * side, and both are evaluated). Returns the
     * decision log: one row per evaluated trigger —
@@ -255,47 +255,31 @@ object Autopilot {
         "compact", wantCompact && pend > 0))
     }
 
-    // TOKEN LEDGER family (seed/b<i>/c<n> rollup grammar).
-    // The ledger's maintenance debt is live part-DIRECTORY count (no
-    // stamped appends, tombstones, or bloom — the index-shaped alarms
-    // are constant-false on it): `unrolled_batches` past the backstop
-    // means the stream's own cadence compaction is failing to absorb,
-    // and `covered_garbage` means a crashed sweep (or a copy-rename
-    // crash's uncommitted rollup) left dirs every totals read re-lists.
-    // Both are fixed by one rollup-all pass, whose lazy sweep also
-    // collects the garbage.
-    if (!matched && graft.streaming.TextIngest.isLedgerDir(s, indexDir)) {
+    // TOKEN LEDGER family (its `counts` table). Its debt is batch
+    // commits no rollup absorbed past the backstop — the stream's own
+    // cadence rollup is failing — and uncommitted files older than the
+    // orphan retention, which a crashed writer left and which only a
+    // rewrite's sweep deletes; a live writer's younger staged file is
+    // not debt, so the alarm cannot latch on it. One rollup fixes both.
+    // Both numbers come from the snapshot and one listing: no Spark job.
+    if (exists(graft.streaming.TextIngest.ledgerTable)) {
       matched = true
-      // listing-only stats, NOT the full health report: the decision
-      // consumes two directory-listing numbers, and the report's
-      // totals leg is a Spark aggregation (with a torn-read retry
-      // budget under churn) that a per-pass alarm must not pay — the
-      // same rule the bloom saturation leg follows for its family
-      val (_, unrolledN, _, garbageN) =
-        graft.streaming.TextIngest.ledgerListingStats(s, indexDir)
+      val (unrolledN, garbageN) = graft.streaming.TextIngest.ledgerDebt(s,
+        IndexMaintenance.snapshot(s, indexDir))
       val unrolled = unrolledN.toDouble
       val garbage = garbageN.toDouble
       val wantRollup = unrolled > maxUnabsorbedBatches || garbage > 0
-      // the rollup can REFUSE (a torn live part must not be absorbed as
-      // zero rows — see ledgerCompact); the decision log must say so
-      // instead of claiming an absorb that never happened while the
-      // unrolled_batches debt persists across "performed" passes. The
-      // lazy sweep runs on every invocation regardless of the refusal,
-      // so the garbage leg's `performed` stays truthful either way.
-      val outcome = if (wantRollup)
-        graft.streaming.TextIngest.ledgerRollupAll(s, indexDir) else ""
-      val refused = outcome == graft.streaming.TextIngest.RollupRefusedTornPart
+      if (wantRollup) graft.streaming.TextIngest.ledgerRollup(s, indexDir)
       rows += (("ledger", "unrolled_batches", unrolled, maxUnabsorbedBatches.toDouble,
-        if (refused) outcome else "rollup",
-        wantRollup && unrolled > maxUnabsorbedBatches && !refused))
+        "rollup", wantRollup && unrolled > maxUnabsorbedBatches))
       rows += (("ledger", "covered_garbage", garbage, 0.0,
-        if (refused) outcome else "rollup", wantRollup && garbage > 0))
+        "rollup", wantRollup && garbage > 0))
     }
 
     if (!matched) throw new IllegalArgumentException(
       s"indexAutopilot: no known index family at $indexDir " +
       "(want buckets+meta, lists+centroids[+codebook], postings+doclen, " +
-      "bloom+eval_shingles, simhash, or a seed/b<i>/c<n> token ledger)")
+      "bloom+eval_shingles, simhash, or a counts token ledger)")
 
     rows.toSeq.toDF("family", "trigger", "value", "threshold", "action", "performed")
   }

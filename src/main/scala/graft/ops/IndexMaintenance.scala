@@ -43,7 +43,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * version `v + 1` with `create(overwrite = false)`, where `v` is the
   * snapshot it read; the version file appearing is the commit. Writers
   * of one directory serialize on an in-JVM lock, so within a process
-  * the race is never lost. Files a commit removes are deleted before
+  * the race is never lost; readers in the process never see a version
+  * half-written. Files a commit removes are deleted before
   * the call returns, so a plain parquet read of a quiescent table
   * equals its snapshot.
   *
@@ -80,7 +81,7 @@ object IndexMaintenance {
 
   /** An uncommitted data file younger than this may be staged by a live
     * writer in another process; only older ones are deleted as orphans.
-    * The Delta Lake VACUUM retention idea, at the lease's stale window. */
+    * The Delta Lake VACUUM retention idea. */
   val orphanRetentionMs: Long = 15L * 60 * 1000
 
   /** Run `f` with a thread-local Spark job description (guide §1.5 —
@@ -232,7 +233,18 @@ object IndexMaintenance {
   /** [[snapshot]], or None for a directory without a log. */
   def snapshotIfAny(s: SparkSession, dir: String): Option[Snapshot] = load(s, qualify(s, dir))
 
-  private def load(s: SparkSession, root: Path, attempt: Int = 0): Option[Snapshot] = {
+  /** The in-JVM lock on a directory's version FILES: a commit creates,
+    * writes and closes its version under it, and a load lists and reads
+    * versions under it, so no reader in this JVM replays a version that
+    * is still being written. Held for log file I/O only. */
+  private val logLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  private def logLock(root: Path): Object = logLocks.computeIfAbsent(root.toString, _ => new Object)
+
+  private def load(s: SparkSession, root: Path, attempt: Int = 0): Option[Snapshot] =
+    logLock(root).synchronized(loadLog(s, root, attempt))
+
+  private def loadLog(s: SparkSession, root: Path, attempt: Int): Option[Snapshot] = {
     val f = fsOf(s, root)
     val listed = try f.listStatus(logDir(root)).toSeq
       catch { case _: java.io.FileNotFoundException => Seq.empty }
@@ -391,8 +403,10 @@ object IndexMaintenance {
         a.props.map { case (k, value) => action("prop", "key" -> k, "value" -> value) }
       val won =
         try {
-          val out = f.create(versionFile(root, v), false)
-          try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+          logLock(root).synchronized {
+            val out = f.create(versionFile(root, v), false)
+            try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+          }
           true
         } catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
       // a create can succeed on a version a checkpoint retired: a later
@@ -475,14 +489,22 @@ object IndexMaintenance {
 
   private def deleteOrphans(s: SparkSession, snap: Snapshot, table: String): Unit = {
     val f = fsOf(s, snap.root)
+    orphans(s, snap, table).foreach(f.delete(_, false))
+  }
+
+  /** The data files in `table`'s directory that `snap` does not name and
+    * that are older than [[orphanRetentionMs]]: exactly what the next
+    * rewrite of the table deletes. */
+  def orphans(s: SparkSession, snap: Snapshot, table: String): Seq[Path] = {
     val live = snap.filesOf(table).map(_.name).toSet
     val cutoff = System.currentTimeMillis() - orphanRetentionMs
-    f.listStatus(tableDir(snap.root, table)).foreach { st =>
+    val listed = try fsOf(s, snap.root).listStatus(tableDir(snap.root, table)).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    listed.filter { st =>
       val n = st.getPath.getName
-      if (st.isFile && !n.startsWith("_") && !n.startsWith(".") && !live.contains(n) &&
-          st.getModificationTime < cutoff)
-        f.delete(st.getPath, false)
-    }
+      st.isFile && !n.startsWith("_") && !n.startsWith(".") && !live.contains(n) &&
+        st.getModificationTime < cutoff
+    }.map(_.getPath)
   }
 
   // ------------------------------------------------- the write surface

@@ -684,96 +684,46 @@ object TextAnalysis {
     bpeModelPersist(s, textBpeTrainScaled(s, corpusDir, merges), modelDir,
       applyForm = "canonical")
 
-  /** Write a merge table + its APPLY-FORM marker as one model artifact.
-    * The marker (a 1-row `spec` table: `two_pass` for the demo
-    * trainer's boundary-anchored two-pass replace, `canonical` for the
-    * scaled trainer's leftmost sequential scan) records the artifact's
-    * PROVENANCE, so the serve side dispatches on what the trainer's
-    * internal state actually was instead of inferring it from table
-    * size — a ≤32-merge scaled artifact (a small corpus exhausting
-    * early) would otherwise be served with the wrong fixed point on
-    * same-symbol runs. SPEC-less artifacts (hand-built merge tables
-    * that declared completion but carry no provenance row) keep the
-    * size heuristic ([[bpeApplyMergesAuto]]); dirs without the r15
-    * COMPLETION marker fail loudly before any dispatch — a partial
-    * copy missing `spec` must not masquerade as a legacy artifact
-    * (see [[bpeModelCommitMarker]]). */
+  /** Write a merge table and its APPLY FORM as ONE commit of the index
+    * log at `modelDir`: the `merges` table plus the `merges.apply_form`
+    * prop — `two_pass` for the demo trainer's boundary-anchored two-pass
+    * replace, `canonical` for the scaled trainer's leftmost sequential
+    * scan. The prop records the artifact's PROVENANCE, so the serve side
+    * dispatches on what the trainer's internal state actually was
+    * instead of inferring it from table size — a ≤32-merge scaled
+    * artifact (a small corpus exhausting early) would otherwise be
+    * served with the wrong fixed point on same-symbol runs. A model
+    * committed without the prop (a hand-built merge table) keeps the
+    * size heuristic ([[bpeApplyMergesAuto]]). A crash before the commit
+    * leaves the previous model serving; a dir with no committed model
+    * fails loudly in every reader. */
   def bpeModelPersist(s: SparkSession, mergesDf: DataFrame, modelDir: String,
       applyForm: String): Unit = {
     require(applyForm == "two_pass" || applyForm == "canonical",
       s"unknown BPE apply form '$applyForm'")
-    import s.implicits._
-    // stage-then-swap: merges and the apply-form marker must land as
-    // ONE artifact — two in-place overwrites would open a crash window
-    // where a stale marker sits over a fresh table (silently served
-    // with the wrong fixed point) or a fresh table has no marker at
-    // all. Both torn states here are LOUD instead: a crash before the
-    // delete leaves the old artifact whole; between delete and rename,
-    // no artifact (readers fail on the missing dir; re-persist heals).
-    // The stage→root rename is atomic only on HDFS/local — on S3A it
-    // degrades to copy+delete, and a crash mid-copy leaves a PARTIAL
-    // artifact (a truncated multi-file merge table, possibly missing
-    // the spec) that would serve a silently wrong tokenizer. So the
-    // commit point is the [[bpeModelCommitMarker]] created AFTER the
-    // rename returns — readers ([[bpeModelMerges]] /
-    // [[bpeModelApplyForm]]) refuse a markerless dir loudly. The
-    // marker cannot ride inside the stage: copy-rename copies files in
-    // unspecified order, so it could land before the data it vouches
-    // for.
-    val root = new org.apache.hadoop.fs.Path(modelDir)
-    val f = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(
-      Option(root.getParent).getOrElse(root), s".${root.getName}.mstage")
-    f.delete(stage, true)
-    mergesDf.write.mode("overwrite").parquet(new org.apache.hadoop.fs.Path(stage, "merges").toString)
-    Seq(applyForm).toDF("apply").coalesce(1)
-      .write.mode("overwrite").parquet(new org.apache.hadoop.fs.Path(stage, "spec").toString)
-    f.delete(root, true)
-    if (!f.rename(stage, root))
-      throw new java.io.IOException(s"bpeModelPersist: rename $stage -> $root failed")
-    Lease.commitMarkerCreate(f, root, bpeModelCommitMarker)
+    IndexMaintenance.labeledJob(s, s"bpe-model: persist $applyForm") {
+      IndexMaintenance.replace(s, modelDir, Seq("merges" -> mergesDf),
+        props = Map("merges.apply_form" -> applyForm))
+    }
   }
 
-  /** Completion marker of a persisted BPE model dir, created after the
-    * stage→root swap FINISHED — the copy-rename commit protocol shared
-    * with the ledger rollups ([[Lease.commitMarkerCreate]]).
-    * A model dir without it is incomplete and every reader fails
-    * loudly instead of serving a truncated tokenizer. MIGRATION NOTE:
-    * artifacts persisted before this marker existed (pre-round-15)
-    * must be re-persisted once, or hand-marked — a deliberate one-time
-    * cost, because a complete legacy dir is indistinguishable from a
-    * torn copy. Hand-assembled model dirs (a merge table written
-    * without [[bpeModelPersist]]) likewise create this file LAST to
-    * declare themselves complete. */
-  private[graft] val bpeModelCommitMarker = "_MODEL_COMMITTED"
-
-  private def requireCommittedModel(s: SparkSession, modelDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(modelDir)
-    if (!Lease.commitMarkerPresent(
-        p.getFileSystem(s.sparkContext.hadoopConfiguration), p, bpeModelCommitMarker))
+  /** The committed model at `modelDir`. A dir without a committed
+    * merge table fails loudly instead of serving a truncated or foreign
+    * tokenizer. */
+  private def committedModel(s: SparkSession, modelDir: String): IndexMaintenance.Snapshot =
+    IndexMaintenance.snapshotIfAny(s, modelDir).filter(_.hasTable("merges")).getOrElse(
       throw new IllegalStateException(
-        s"BPE model at $modelDir has no $bpeModelCommitMarker — the artifact is " +
-        "incomplete (a crash mid-persist, a pre-marker-era dir, or a hand-built " +
-        "dir that never declared completion); re-persist through bpeModelPersist, " +
-        "or create the marker last if the dir is known complete")
-  }
+        s"BPE model at $modelDir has no committed merge table — the artifact is " +
+        "incomplete (a crash before its commit, or a dir not written through " +
+        "bpeModelPersist or IndexMaintenance.replace); re-persist it"))
 
-  /** The persisted model's apply-form marker, if it carries one.
-    * Requires the completion marker first: on a copy-rename filesystem
-    * a partially-copied artifact can be missing `spec` while carrying
-    * (some of) `merges` — without the completion gate that torn state
-    * would dispatch through the size heuristic as if it were a legacy
-    * markerless model, silently serving truncated merges. */
-  private[graft] def bpeModelApplyForm(s: SparkSession, modelDir: String): Option[String] = {
-    requireCommittedModel(s, modelDir)
-    val p = new org.apache.hadoop.fs.Path(s"$modelDir/spec")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) None
-    else Some(s.read.parquet(p.toString).head().getString(0))
-  }
+  /** The persisted model's recorded apply form, if it carries one. */
+  private[graft] def bpeModelApplyForm(s: SparkSession, modelDir: String): Option[String] =
+    committedModel(s, modelDir).props.get("merges.apply_form")
 
   /** Merge apply dispatched on the artifact's recorded provenance
-    * ([[bpeModelApplyForm]]); spec-less models fall back to the size
-    * heuristic. A `two_pass` marker on a table past
+    * ([[bpeModelApplyForm]]); models without one fall back to the size
+    * heuristic. A `two_pass` form on a table past
     * [[bpeReplaceChainMax]] fails loudly — the demo trainer never
     * produces one, and silently building its 2-nodes-per-merge
     * expression tree at production size is the analysis blowup the
@@ -788,20 +738,16 @@ object TextAnalysis {
         "re-train through textBpeTrainScaled/bpeModelWriteScaled for production sizes")
       bpeApplyMerges(words, merges)
     case Some(other) => throw new IllegalArgumentException(
-      s"unknown BPE apply form '$other' in the model spec")
+      s"unknown BPE apply form '$other' in the model")
     case None => bpeApplyMergesAuto(words, merges)
   }
 
   /** Step-ordered merge list of a persisted model — a bounded read
-    * (one row per merge). Completion-gated like [[bpeModelApplyForm]]:
-    * a merge table from a crashed copy-rename can be silently
-    * truncated, which is worse than missing. */
-  private[graft] def bpeModelMerges(s: SparkSession, modelDir: String): Seq[(String, String)] = {
-    requireCommittedModel(s, modelDir)
-    s.read.parquet(s"$modelDir/merges")
+    * (one row per merge) of its committed files. */
+  private[graft] def bpeModelMerges(s: SparkSession, modelDir: String): Seq[(String, String)] =
+    committedModel(s, modelDir).read(s, "merges")
       .select(col("step"), col("lhs"), col("rhs")).orderBy(col("step"))
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-  }
 
   /** SERVED BPE encode — [[textBpeEncode]]'s plan with the training
     * replaced by a bounded artifact read: per-doc token counts over
@@ -874,10 +820,10 @@ object TextAnalysis {
       d
     }
 
-  /** Registered SCALED-serve form (round 14): train the PRODUCTION
+  /** Registered SCALED-serve form: train the PRODUCTION
     * trainer at the gate merge count, persist with the canonical
-    * marker, serve the encode under the artifact — so the code path a
-    * deployment actually serves with (marker dispatch → the
+    * apply form, serve the encode under the artifact — so the code path a
+    * deployment actually serves with (apply-form dispatch → the
     * constant-plan-depth canonical encoder) rides the per-round gate,
     * not just its specs. Rows-only by design (the canonical leftmost
     * scan is stateful — the same no-SQL-restatement reason as the

@@ -109,25 +109,15 @@ object IngestDedup {
         graft.ops.IndexMaintenance.lineageTag(checkpointDir))
     }
 
-  /** Alarm-driven cadence (round 12): the fixed every-
-    * [[ingestCompactEvery]]-th-batch FLOOR, plus the autopilot's cheap
-    * per-trigger debt alarms over the loop's index and sink dirs —
-    * shared by all five ingest families. */
-  private[streaming] def alarmCadence(s: SparkSession, dirs: Seq[String])(
+  /** Alarm-driven cadence: the fixed every-[[ingestCompactEvery]]-th-
+    * batch FLOOR, plus the autopilot's cheap per-trigger debt alarms
+    * over the loop's log dirs — shared by the five ingest families and
+    * the token ledger. */
+  private[graft] def alarmCadence(s: SparkSession, dirs: Seq[String])(
       compact: => Unit): Long => Unit =
-    alarmCadenceAt(s, dirs)(_ => compact)
-
-  /** [[alarmCadence]] with the batch id passed through to the
-    * compaction (the token ledger's rollup covers "everything below
-    * the in-flight batch", so it needs the id), plus an optional
-    * EXTRA debt probe for stores the autopilot's index-shaped alarms
-    * don't describe — the ledger's debt is live part-DIRECTORY count,
-    * not appended file stamps or tombstones. */
-  private[graft] def alarmCadenceAt(s: SparkSession, dirs: Seq[String],
-      due: () => Boolean = () => false)(compact: Long => Unit): Long => Unit =
     batchId => if ((batchId + 1) % ingestCompactEvery == 0 ||
       graft.ops.Autopilot.maintenanceDue(s, dirs,
-        maxAppendedBatches = ingestCompactEvery) || due()) compact(batchId)
+        maxAppendedBatches = ingestCompactEvery)) compact
 
   /** Curation-at-ingest production path: scrub -> quality gate -> dedup
     * per landed file, admitted CLEAN text + signatures folded into the

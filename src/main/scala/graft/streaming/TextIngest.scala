@@ -1,8 +1,10 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{IndexMaintenance, Lease, TextAnalysis}
+import graft.ops.{IndexMaintenance, TextAnalysis}
 
 /** Streaming LEXICAL-index ingest — the postings twin of [[AnnIngest]]:
   * document batches land as files and each micro-batch is tokenized
@@ -83,414 +85,106 @@ object TextIngest {
     * under the FROZEN shipped tokenizer (a [[TextAnalysis.bpeModelWrite]]
     * artifact trained on the standing corpus at deployment — streaming
     * data never retrains the tokenizer, exactly like production) and
-    * appends its per-source `(n_docs, n_tokens)` rows to a ledger.
-    * Per-trigger cost is batch-sized: the merge apply runs over the
-    * BATCH's distinct words, the artifact is one bounded driver read at
-    * stream start, and nothing standing is re-read. Idempotence needs
-    * no marker here: each batch writes to its own DETERMINISTIC path
-    * with overwrite, so an at-least-once retry replaces its own rows
-    * instead of double-counting. Counting batch-by-batch under frozen
-    * merges sums to exactly one whole-corpus encode
-    * ([[TextAnalysis.bpeSourceCounts]]'s contract). Every
-    * [[IngestDedup.ingestCompactEvery]]-th trigger rolls the ledger up
-    * ([[ledgerCompact]]) so the dir count stays bounded by the cadence
-    * instead of growing one-per-trigger forever. */
+    * appends its per-source `(source, n_docs, n_tokens)` rows to the
+    * ledger's [[ledgerTable]]. Per-trigger cost is batch-sized: the
+    * merge apply runs over the BATCH's distinct words, the artifact is
+    * one bounded driver read at stream start, and nothing standing is
+    * re-read. The ledger is an index-log directory: each batch's rows
+    * commit together with its batch mark ([[IndexMaintenance.append]]),
+    * so an at-least-once retry finds its mark and lands nothing, also
+    * after a rollup. Counting batch-by-batch under frozen merges sums to
+    * exactly one whole-corpus encode ([[TextAnalysis.bpeSourceCounts]]'s
+    * contract). The shared alarm cadence rolls the ledger up
+    * ([[ledgerRollup]]) every [[IngestDedup.ingestCompactEvery]]-th
+    * trigger, or sooner when its appended batches pass that floor, so
+    * the table's file count stays bounded by the cadence. */
   def streamTokenLedgerToFiles(s: SparkSession, landingDir: String, modelDir: String,
       ledgerDir: String, checkpointDir: String): Unit = {
     val merges = TextAnalysis.bpeModelMerges(s, modelDir)
-    // the artifact's recorded apply form (r14): counting must use the
-    // semantics the model was TRAINED under, marker over heuristic
+    // counting must use the semantics the model was TRAINED under
     val applyForm = TextAnalysis.bpeModelApplyForm(s, modelDir)
+    val lineage = IndexMaintenance.lineageTag(checkpointDir)
     IngestDedup.runLandingStream(s, landingDir, checkpointDir,
-      // alarm-driven cadence like the five index loops: the fixed floor
-      // plus the ledger's own debt probe — live batch-DIR count past the
-      // floor (a crashed compact's backlog, which the counter alone
-      // would only repair at the next floor boundary). The autopilot's
-      // index-shaped alarms get NO dirs: the ledger layout has no
-      // stamped appends, tombstones, or bloom, so maintenanceDue is
-      // constant-false on it and would only pay listings per trigger
-      maintenance = IngestDedup.alarmCadenceAt(s, Seq.empty,
-        due = () => ledgerLiveParts(s, ledgerDir)
-          .count(p => ledgerBatchRe.matches(nameOf(p))) >
-            IngestDedup.ingestCompactEvery)(
-        batchId => ledgerCompact(s, ledgerDir, upTo = batchId))) { (batch, batchId) =>
-      // the batch write shares the ledger's maintenance scope: a
-      // redelivery rewrite of an already-covered b dir can otherwise
-      // race the compact's sweep of that same dir mid-write
-      Lease.withMaintenance(s, ledgerDir) {
-        IndexMaintenance.labeledJob(s, s"token-ledger b$batchId: counts") {
-          TextAnalysis.bpeSourceCounts(batch, merges, applyForm)
-            .withColumn("batch_id", lit(batchId))
-            .coalesce(1).write.mode("overwrite").parquet(s"$ledgerDir/b$batchId")
-        }
+      IngestDedup.alarmCadence(s, Seq(ledgerDir))(ledgerRollup(s, ledgerDir))) { (batch, batchId) =>
+      IndexMaintenance.labeledJob(s, s"token-ledger b$batchId: counts") {
+        IndexMaintenance.append(s, ledgerDir,
+          Seq(ledgerTable -> TextAnalysis.bpeSourceCounts(batch, merges, applyForm).coalesce(1)),
+          mark = Some(lineage -> batchId))
       }
     }
   }
 
-  private val ledgerBatchRe = "^b(\\d+)$".r
-  private val ledgerCompactedRe = "^c(\\d+)$".r
+  /** The ledger's one table: per-source `(source, n_docs, n_tokens)`
+    * rows, one file per seed, batch or rollup commit. */
+  private[graft] val ledgerTable = "counts"
 
-  /** Completion marker a rollup dir carries once its commit FINISHED —
-    * the copy-rename commit protocol shared with the BPE model
-    * artifact (see [[Lease.commitMarkerCreate]] for the
-    * rationale). Without it the live-parts grammar would adopt a
-    * crashed copy's PARTIAL `c<N>` dir as the high-water rollup and
-    * silently undercount the batches it claims to cover; a marker-less
-    * `c` dir is GARBAGE to readers and the sweep, and the covered `b`
-    * dirs stay live, so totals stay exact. */
-  private[graft] val ledgerCommitMarker = "_LEDGER_COMMITTED"
+  private def sumBySource(rows: DataFrame): DataFrame =
+    rows.groupBy(col("source"))
+      .agg(sum(col("n_docs")).cast("long").as("n_docs"),
+        sum(col("n_tokens")).cast("long").as("n_tokens"))
+      .orderBy(col("source"))
 
-  /** [[ledgerCompact]] / [[ledgerRollupAll]] outcomes — callers acting
-    * on the decision (the autopilot's `performed` flag) must be able to
-    * tell an absorb that RAN from one the compact refused or had
-    * nothing to do, or the decision log claims rollups that never
-    * happened while `unrolled_batches` debt persists across passes. */
-  private[graft] val RolledUp = "rolled_up"
-  /** Nothing to absorb (≤1 live part) — only the lazy sweep ran. */
-  private[graft] val SweepOnly = "sweep_only"
-  /** A covered live part has no data files (a crashed overwrite
-    * awaiting its stream's retry): absorbing it as zero rows would
-    * permanently drop its batch, so the rollup REFUSED; the sweep
-    * still ran. The next compact after the stream heals the part rolls
-    * up normally. */
-  private[graft] val RollupRefusedTornPart = "rollup_refused_torn_part"
+  /** A totals read re-reads at most this many times when a newer commit
+    * removed a file mid-read. */
+  private val ledgerReadAttempts = 10
 
-  private def nameOf(path: String): String =
-    new org.apache.hadoop.fs.Path(path).getName
-
-  private def isCommitted(f: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Boolean =
-    Lease.commitMarkerPresent(f, dir, ledgerCommitMarker)
-
-  /** Stamp the rollup committed, with the rolled-up per-source totals
-    * as the marker's payload — written at marker creation, so the
-    * stats land INSIDE the `_LEDGER_COMMITTED` transaction: a reader
-    * that sees the marker sees the stats, and steady-state health
-    * ([[ledgerHealth]]) serves the dashboard totals from one bounded
-    * file read instead of a Spark aggregation. Sources are
-    * base64-coded per line so arbitrary source strings round-trip. */
-  private def markCommitted(f: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path,
-      stats: Seq[(String, Long, Long)]): Unit = {
-    val enc = java.util.Base64.getEncoder
-    val body = stats.sortBy(_._1).map { case (src, d, t) =>
-      s"${enc.encodeToString(src.getBytes("UTF-8"))}\t$d\t$t"
-    }.mkString("", "\n", "\n")
-    Lease.commitMarkerCreate(f, dir, ledgerCommitMarker, body)
+  /** Per-source totals of the ledger as of its current snapshot,
+    * MATERIALIZED (one bounded row per source), never a lazy scan of
+    * files a rollup may delete. Readers take no lock: a rollup that
+    * commits mid-read deletes the files it replaced, so a read whose
+    * snapshot lost a file to a newer commit is re-read from the new
+    * snapshot, a bounded number of times. A committed file missing with
+    * no newer commit is damage and fails loudly, as does a directory
+    * with no ledger table (never seeded, or the wrong dir). */
+  private[graft] def ledgerTotals(s: SparkSession, ledgerDir: String): DataFrame = {
+    def attempt(n: Int): DataFrame = {
+      val snap = IndexMaintenance.snapshot(s, ledgerDir)
+      require(snap.hasTable(ledgerTable),
+        s"token ledger at $ledgerDir has no '$ledgerTable' table — not seeded, or the wrong dir")
+      val agg = sumBySource(snap.read(s, ledgerTable))
+      def lostFileToNewerCommit: Boolean = {
+        val f = snap.root.getFileSystem(s.sparkContext.hadoopConfiguration)
+        IndexMaintenance.snapshot(s, ledgerDir).generation != snap.generation &&
+          snap.filesOf(ledgerTable).exists(d => !f.exists(new Path(snap.root, d.path)))
+      }
+      try s.createDataFrame(java.util.Arrays.asList(agg.collect(): _*), agg.schema)
+      catch {
+        case NonFatal(_) if n < ledgerReadAttempts && lostFileToNewerCommit => attempt(n + 1)
+      }
+    }
+    attempt(1)
   }
 
-  /** The committed rollup's persisted per-source totals, if its marker
-    * carries them — None for a legacy payload-less marker (pre-r16
-    * rollups: fall back to the Spark read) or an unparsable one (never
-    * guess at dashboard numbers). */
-  private def committedStats(f: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Option[Seq[(String, Long, Long)]] =
-    Lease.commitMarkerContent(f, dir, ledgerCommitMarker).flatMap { body =>
-      val dec = java.util.Base64.getDecoder
-      try Some(body.split("\n").toSeq.filter(_.nonEmpty).map { line =>
-        val Array(src, d, t) = line.split("\t", 3)
-        (new String(dec.decode(src), "UTF-8"), d.toLong, t.toLong)
-      })
-      catch { case scala.util.control.NonFatal(_) => None }
-    }
-
-  /** The ledger directory's sub-directories through the Hadoop FS API —
-    * the ledger is a persisted deployment artifact like the six index
-    * families, so its maintenance must hold on HDFS/S3A, where
-    * `java.io.File` listing silently returns nothing (the r13 verdict's
-    * one real defect). Missing dir → empty (a ledger nobody seeded). */
-  private def ledgerDirs(s: SparkSession, ledgerDir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val p = new org.apache.hadoop.fs.Path(ledgerDir)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq.filter(_.isDirectory)
+  /** The rollup as a change on `snap`: [[ledgerTable]] replaced by its
+    * per-source aggregate, and the totals plus the covered batch mark
+    * restated as `counts.*` props in the same commit, which steady-state
+    * [[ledgerHealth]] serves from. Derived from the snapshot the commit
+    * reads, so a rollup or append that commits first makes this one fail
+    * loudly with the table untouched. */
+  private[graft] def ledgerRollupChange(s: SparkSession,
+      snap: IndexMaintenance.Snapshot): IndexMaintenance.Change = {
+    val agg = sumBySource(snap.read(s, ledgerTable))
+    val rows = agg.collect()
+    IndexMaintenance.Change(
+      replace = Seq(ledgerTable ->
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema).coalesce(1)),
+      props = Map(
+        s"$ledgerTable.n_sources" -> rows.length.toString,
+        s"$ledgerTable.n_docs" -> rows.map(_.getLong(1)).sum.toString,
+        s"$ledgerTable.n_tokens" -> rows.map(_.getLong(2)).sum.toString,
+        s"$ledgerTable.rollup_hwm" -> snap.batches.values.maxOption.getOrElse(-1L).toString))
   }
 
-  /** Live ledger parts under the sequence-stamp convention: the highest
-    * COMMITTED `c<hwm>` rollup (if any) plus every `b<i>` with
-    * `i > hwm` plus the `seed` rows when no rollup has absorbed them
-    * yet. Everything else in the directory — older rollups, covered
-    * batch dirs a crashed sweep left behind, `.cstage` staging, and any
-    * `c` dir WITHOUT its [[ledgerCommitMarker]] (a copy-rename that
-    * crashed mid-copy: partial content that must not shadow the `b`
-    * dirs it claims to cover) — is ignored, which is what makes the
-    * compact crash-safe at every boundary. */
-  private def ledgerLiveParts(s: SparkSession, ledgerDir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(ledgerDir)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    ledgerLiveStatuses(f, ledgerDirs(s, ledgerDir)).map(_.getPath.toString).sorted
-  }
-
-  /** The live-parts grammar over an ALREADY-LISTED entry set — so
-    * callers that also need the raw entries ([[ledgerListingStats]])
-    * pay one listing, not two racing ones. */
-  private def ledgerLiveStatuses(f: org.apache.hadoop.fs.FileSystem,
-      entries: Seq[org.apache.hadoop.fs.FileStatus]): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val hwm = entries.flatMap(e => e.getPath.getName match {
-      case ledgerCompactedRe(n) if isCommitted(f, e.getPath) => Some(n.toLong)
-      case _ => None
-    }).sorted.lastOption
-    entries.filter { e =>
-      e.getPath.getName match {
-        // dir names are unique, so the dir matching hwm IS the
-        // committed one the hwm scan just verified
-        case ledgerCompactedRe(n) => hwm.contains(n.toLong)
-        case ledgerBatchRe(n) => hwm.forall(n.toLong > _)
-        case "seed" => hwm.isEmpty
-        case _ => false
-      }
+  /** Roll the ledger up to one file — the small-files answer: without
+    * it a long-running stream lands one file per trigger forever. One
+    * commit covers the seed, any earlier rollup and every committed
+    * batch; a redelivered batch it covered finds its mark and lands
+    * nothing. Like every rewrite, it then deletes uncommitted files
+    * older than the orphan retention. */
+  private[graft] def ledgerRollup(s: SparkSession, ledgerDir: String): Unit =
+    IndexMaintenance.labeledJob(s, "token-ledger: rollup") {
+      IndexMaintenance.transact(s, ledgerDir)(ledgerRollupChange(s, _))
     }
-  }
-
-  /** True when `t` (or anything in its cause chain) says a file or
-    * path vanished between our listing and the read — the one failure
-    * an optimistic snapshot read over swap-able parts can hit. */
-  private def isFileGone(t: Throwable): Boolean = {
-    var c: Throwable = t
-    while (c != null) {
-      if (c.isInstanceOf[java.io.FileNotFoundException]) return true
-      val m = Option(c.getMessage).getOrElse("")
-      if (m.contains("does not exist") || m.contains("PATH_NOT_FOUND") ||
-          m.contains("FileNotFoundException") ||
-          // every part emptied out between the torn pre-check and the
-          // read (a sweep mid-race): parquet schema inference fails
-          // with neither a missing path nor an FNF in the chain
-          m.contains("UNABLE_TO_INFER_SCHEMA") ||
-          m.contains("Unable to infer schema")) return true
-      c = if (c.getCause eq c) null else c.getCause
-    }
-    false
-  }
-
-  /** Per-source totals over the live ledger parts — an OPTIMISTIC
-    * snapshot read that never takes the writer lease: monitoring reads
-    * must stay available WHILE maintenance runs (the r14 form acquired
-    * the exclusive cross-process lease, so a foreign compact made every
-    * totals probe fail loudly for its whole duration, and each read
-    * paid a lease create/delete round-trip). Consistency comes from the
-    * live-parts grammar instead: rollup content is deterministic in its
-    * mark and the commit marker lands only after a complete rollup, so
-    * EVERY listing is a consistent snapshot — the only race is a sweep
-    * deleting a listed part mid-read, which surfaces as FileNotFound
-    * and is healed by re-listing (bounded retries, then loud failure).
-    * The result is MATERIALIZED before returning (one bounded row per
-    * source), never a lazy scan of swap-able paths. A ledger with no
-    * live parts fails loudly — it was never seeded, or the dir is
-    * wrong. */
-  private[graft] def ledgerTotals(s: SparkSession, ledgerDir: String,
-      patienceMs: Long = 30000L): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(ledgerDir)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // DATA-file fingerprint of the live parts (name + length; Spark's
-    // per-write UUID part names make every rewrite visible). Equality
-    // before and after the read proves no writer touched the snapshot
-    // mid-read — the FileNotFound retry alone would miss a redelivery
-    // OVERWRITE of a live `b` dir, which reads as zero rows instead of
-    // an error mid-write. Two hardenings the first cut missed (r15
-    // review): (a) a dir with NO data files fingerprints as TORN, not
-    // as a stable empty listing — an in-flight overwrite holds only a
-    // `_temporary` subdir for its whole job, so a non-recursive
-    // listing would look IDENTICAL before and after while the read
-    // saw zero rows (every committed ledger write has >= 1 part
-    // file, so "no data files" always means mid-write); (b) a part
-    // vanishing between the exists probe and the listing (the sweep
-    // race) folds into the fingerprint as GONE instead of throwing
-    // from outside the retry loop.
-    def fingerprintOf(live: Seq[String]): String = live.map { d =>
-      val dp = new org.apache.hadoop.fs.Path(d)
-      try {
-        val files = f.listStatus(dp).filter(_.isFile)
-          .map(st => st.getPath.getName -> st.getLen)
-          .filterNot(_._1.startsWith("_")).filterNot(_._1.startsWith("."))
-        if (files.isEmpty) s"$d:TORN-${System.nanoTime()}" // mid-overwrite
-        else files.map { case (n, l) => s"$n:$l" }
-          .sorted.mkString(s"$d[", ",", "]")
-      } catch {
-        case _: java.io.FileNotFoundException => s"$d:GONE-${System.nanoTime()}"
-      }
-    }.mkString("|")
-    // TIME-bounded patience, not attempt-bounded: each torn read proves
-    // a compact/rewrite ran DURING it, so attempts measure writer churn,
-    // not reader health — under back-to-back maintenance a small retry
-    // count fails spuriously while the state is perfectly readable
-    // between passes. `patienceMs` (default 30 s) of continuous tearing, though, means
-    // maintenance is churning pathologically faster than one bounded
-    // aggregation — that IS worth a loud failure.
-    val deadline = System.nanoTime() + patienceMs * 1000 * 1000
-    var last: Throwable = null
-    var torn = 0
-    while (true) {
-      val live = ledgerLiveParts(s, ledgerDir)
-      require(live.nonEmpty,
-        s"token ledger at $ledgerDir has no live parts — not seeded, or the wrong dir")
-      val before = fingerprintOf(live)
-      // a snapshot already known torn must not be READ: the aggregation
-      // would be discarded by the post-read comparison regardless (the
-      // TORN/GONE tokens are unique), so reading just burns a Spark job
-      // per retry — and an all-parts-torn snapshot would fail parquet
-      // SCHEMA INFERENCE with an AnalysisException the file-gone guard
-      // doesn't match, escaping the retry loop entirely (r15 review #2)
-      if (!before.contains(":TORN-") && !before.contains(":GONE-")) try {
-        val agg = s.read.parquet(live: _*)
-          .groupBy(col("source"))
-          .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-            sum(col("n_tokens")).cast("long").as("n_tokens"))
-          .orderBy(col("source"))
-        // the frame's OWN schema — no literal twin to drift
-        val rows = agg.collect()
-        if (fingerprintOf(live) == before)
-          return s.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
-        last = null // torn by a concurrent writer: re-list and re-read
-      } catch {
-        case t: Throwable if isFileGone(t) => last = t
-      }
-      torn += 1
-      // overflow-safe per the nanoTime contract: compare via subtraction
-      if (System.nanoTime() - deadline > 0) throw new IllegalStateException(
-        s"ledgerTotals at $ledgerDir: $torn consecutive snapshot reads torn " +
-        s"over ${patienceMs / 1000} s — either maintenance is churning pathologically faster " +
-        "than one bounded aggregation can complete, or a live part has no " +
-        "data files (a write crashed mid-overwrite and its stream was never " +
-        "restarted to retry the batch — restart the ingest to heal)", last)
-      try Thread.sleep(math.min(500L, 50L * torn)) // maintenance in flight; re-list
-      catch { case ie: InterruptedException =>
-        // a read API must not swallow (or silently re-throw) the
-        // interrupt: restore the flag and fail loudly like the
-        // patience path
-        Thread.currentThread().interrupt()
-        throw new IllegalStateException(
-          s"ledgerTotals at $ledgerDir: interrupted while waiting out " +
-          "concurrent maintenance", ie)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Roll the ledger up to one per-source dir — the small-files answer:
-    * without it a long-running stream accumulates one directory per
-    * trigger forever (a year of minute-triggers is ~525k dirs) and
-    * every read lists them all. Covers the seed rows, any previous
-    * rollup, and every committed batch BELOW `upTo` — never the
-    * in-flight batch, whose trigger may still retry and rewrite its
-    * `b` dir (covering it would double-count the redelivery). The swap
-    * is the repo's sequence-stamp pattern: write to a dot-prefixed
-    * staging dir, rename to `c<upTo-1>` (the commit point — readers
-    * switch to the new rollup and ignore everything it covers), then
-    * sweep the covered dirs; a crash between rename and sweep leaves
-    * garbage the READER already ignores and the next compact deletes —
-    * the sweep runs on EVERY invocation, even when there is nothing
-    * new to roll up, so stale redelivery rewrites of already-covered
-    * batches are also collected.
-    *
-    * Runs entirely through the Hadoop FS API under the index-scoped
-    * maintenance lock+lease ([[Lease.withMaintenance]]):
-    * a second process's compact fails loudly on the lease instead of
-    * racing the rename ([[ledgerTotals]] reads optimistically WITHOUT
-    * the lease and heals any sweep it races via its snapshot
-    * fingerprint). On a filesystem without atomic dir rename (S3A) the
-    * commit point degrades to copy+delete — which is why the commit
-    * point is NOT the rename but the [[ledgerCommitMarker]] created
-    * after it: a crash mid-copy leaves a partial `c<N>` dir WITHOUT the
-    * marker, which readers and the sweep treat as garbage while the
-    * covered `b` dirs stay live, so totals never undercount. A crash
-    * between rename and marker is the same state (complete content,
-    * still garbage — the retry or a later sweep collects it and the
-    * `b` dirs re-roll). */
-  private[graft] def ledgerCompact(s: SparkSession, ledgerDir: String, upTo: Long): String =
-      Lease.withMaintenance(s, ledgerDir) {
-    val root = new org.apache.hadoop.fs.Path(ledgerDir)
-    val f = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val live = ledgerLiveParts(s, ledgerDir).filter { p =>
-      nameOf(p) match {
-        case ledgerBatchRe(n) => n.toLong < upTo
-        case _ => true // seed or current rollup
-      }
-    }
-    // a TORN part (no data files — a crashed overwrite awaiting its
-    // stream's retry) must NOT be absorbed: rolling it up as zero rows
-    // and sweeping it would permanently drop its batch, because the
-    // retry's deterministic rewrite then lands BELOW the new
-    // high-water mark and is ignored forever. Skip the rollup (the
-    // sweep below still runs) and SAY SO in the outcome; the next
-    // compact after the stream heals the part rolls up normally.
-    def hasDataFiles(d: String): Boolean =
-      try f.listStatus(new org.apache.hadoop.fs.Path(d)).exists(st =>
-        st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-      catch { case _: java.io.FileNotFoundException => false }
-    val outcome =
-      if (live.size <= 1) SweepOnly
-      else if (!live.forall(hasDataFiles)) RollupRefusedTornPart
-      else RolledUp
-    if (outcome == RolledUp) {
-      val stage = new org.apache.hadoop.fs.Path(root, ".cstage")
-      f.delete(stage, true)
-      // the rolled-up totals are one bounded row per source: collect
-      // them ONCE, write the rollup parquet from the local relation,
-      // and pin the same rows into the commit marker below — the
-      // aggregation runs once, and steady-state health reads become
-      // listing-only ([[ledgerHealth]])
-      val rolled = s.read.parquet(live: _*)
-        .groupBy(col("source"))
-        .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-          sum(col("n_tokens")).cast("long").as("n_tokens"))
-        .withColumn("batch_id", lit(upTo - 1))
-      val rows = rolled.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), rolled.schema)
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val target = new org.apache.hadoop.fs.Path(root, s"c${upTo - 1}")
-      // an existing COMMITTED target is a finished rollup at the same
-      // mark (a crash between its marker and sweep, retried): rollup
-      // content is deterministic in the mark, so ours is redundant —
-      // drop the stage and fall through to the sweep. An UNcommitted
-      // one is a crashed copy-rename's partial content: replace it.
-      if (f.exists(target) && isCommitted(f, target)) f.delete(stage, true)
-      else {
-        f.delete(target, true)
-        if (!f.rename(stage, target))
-          throw new java.io.IOException(s"ledger rollup rename failed: $target")
-        // the commit point readers switch on — stats ride the marker
-        markCommitted(f, target,
-          rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq)
-      }
-    }
-    // lazy sweep under the CURRENT high-water mark (re-listed, so it
-    // covers both what this rollup superseded and leftovers of earlier
-    // crashed sweeps or post-rollup redelivery rewrites)
-    val entries = ledgerDirs(s, ledgerDir)
-    entries.flatMap(e => e.getPath.getName match {
-      case ledgerCompactedRe(n) if isCommitted(f, e.getPath) => Some(n.toLong)
-      case _ => None
-    }).sorted.lastOption.foreach { hwm =>
-      entries.foreach { e =>
-        e.getPath.getName match {
-          case ledgerCompactedRe(n) if n.toLong < hwm => f.delete(e.getPath, true)
-          case ledgerBatchRe(n) if n.toLong <= hwm => f.delete(e.getPath, true)
-          case "seed" => f.delete(e.getPath, true)
-          case _ => ()
-        }
-      }
-    }
-    // uncommitted rollups are garbage at ANY mark (no foreign compact
-    // can be mid-commit here — we hold the lease, and our own commit
-    // marker landed above): collect them even when no committed hwm
-    // exists yet, or a crashed copy at a mark ABOVE the hwm would
-    // linger past every `< hwm` sweep forever. A leftover `.cstage`
-    // is the same story one step earlier (a compact that crashed
-    // before its rename): our own stage was consumed by the rename
-    // above, so any stage present now is a crashed run's — without
-    // this it would only be collected when a future rollup happens
-    // to run (the staging delete sits inside the rollup branch).
-    ledgerDirs(s, ledgerDir).foreach { e =>
-      e.getPath.getName match {
-        case ledgerCompactedRe(_) if !isCommitted(f, e.getPath) =>
-          f.delete(e.getPath, true)
-        case ".cstage" => f.delete(e.getPath, true)
-        case _ => ()
-      }
-    }
-    outcome
-  }
 
   /** Registered-query replay: train + persist the tokenizer on the
     * modulo-0 seed slice (the deployment moment — the model the stream
@@ -523,16 +217,16 @@ object TextIngest {
     val (root, landing) = IngestDedup.stageLanding(s, s"$dir|docs-tail", docs,
         batches = 1 until IngestDedup.ingestBatches) { root =>
       // the seed rows count under the SAME recorded apply form as every
-      // streamed batch — splitting the marker rule across the two halves
-      // would let ledgerTotals sum token counts computed under two
-      // different tokenizer semantics
+      // streamed batch — splitting the rule across the two halves would
+      // let ledgerTotals sum token counts computed under two different
+      // tokenizer semantics
       IndexMaintenance.labeledJob(s, "token-ledger: seed counts") {
-        TextAnalysis.bpeSourceCounts(
-            s.read.parquet(s"$proto/seed/documents.parquet"),
-            TextAnalysis.bpeModelMerges(s, s"$proto/model"),
-            TextAnalysis.bpeModelApplyForm(s, s"$proto/model"))
-          .withColumn("batch_id", lit(-1L))
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/ledger/seed")
+        IndexMaintenance.replace(s, s"$root/ledger", Seq(ledgerTable ->
+          TextAnalysis.bpeSourceCounts(
+              s.read.parquet(s"$proto/seed/documents.parquet"),
+              TextAnalysis.bpeModelMerges(s, s"$proto/model"),
+              TextAnalysis.bpeModelApplyForm(s, s"$proto/model"))
+            .coalesce(1)))
       }
     }
     streamTokenLedgerToFiles(s, landing, s"$proto/model",
@@ -540,156 +234,48 @@ object TextIngest {
     root
   }
 
+  /** The ledger's maintenance debt from its snapshot and one listing of
+    * its table, no Spark job: (appended batch commits no rollup has
+    * absorbed, uncommitted files older than the orphan retention). The
+    * first should stay under the cadence floor; the second is what a
+    * crashed writer left, and exactly what the next rollup deletes — a
+    * live writer's younger staged file is not debt. */
+  private[graft] def ledgerDebt(s: SparkSession, snap: IndexMaintenance.Snapshot): (Int, Int) =
+    (snap.appendedBatches(ledgerTable), IndexMaintenance.orphans(s, snap, ledgerTable).size)
+
   /** LEDGER HEALTH — the operational report of the token-ledger
     * artifact, mirroring [[TextAnalysis.textIndexHealth]]'s shape (one
-    * (metric, value) row each, metric-sorted): `live_parts` (dirs a
-    * totals read lists), `unrolled_batches` (committed `b` dirs no
-    * rollup has absorbed — the ROLLUP LAG a deployment pages on: it
-    * should stay under the cadence floor), `rollup_hwm` (the committed
-    * rollup's mark, −1 before the first rollup), `covered_garbage`
-    * (dirs the live-parts grammar ignores — covered batches, stale
-    * rollups, uncommitted copy-rename leftovers; nonzero past one
-    * cadence means the lazy sweep is not keeping up), `n_sources` /
+    * (metric, value) row each, metric-sorted): `live_parts` (commits
+    * whose files a totals read scans), `unrolled_batches` (batch
+    * commits no rollup has absorbed — the ROLLUP LAG a deployment pages
+    * on), `rollup_hwm` (the last rollup's covered batch mark, −1 before
+    * the first rollup), `covered_garbage` (uncommitted files past the
+    * orphan retention, which the next rollup deletes), `n_sources` /
     * `n_docs_total` / `n_tokens_total` (the dashboard totals
-    * themselves). Listing metrics are one FS listing; totals are
-    * LISTING-ONLY too in the steady state (served from the committed
-    * rollup marker's persisted stats — see the body), riding
-    * [[ledgerTotals]]'s snapshot read only as the fallback. */
-  /** Listing-only ledger state — (live part names, unrolled batch
-    * count, committed hwm, covered-garbage count) from one directory
-    * listing plus one commit-marker probe per rollup dir, no Spark
-    * read: this is what the autopilot's per-pass decision consumes
-    * (alarms must not pay a Spark job per evaluation). The single listing also makes the garbage count a
-    * consistent snapshot — a second racing listing could see a compact
-    * sweep dirs in between and transiently inflate it. Garbage counts
-    * READER-VISIBLE debt (covered batches, stale or uncommitted
-    * rollups, an orphaned seed) plus CRASHED staging: a `.cstage`
-    * under a LIVE maintenance lease is an in-flight compact's
-    * workspace — counting it would make a health probe racing the
-    * stream's own cadence flag, and an autopilot acting on it fire
-    * into, perfectly healthy maintenance — but one standing with NO
-    * live lease is a CRASHED compact's leftover copy of the ledger
-    * (every compact holds the heartbeated lease for its whole
-    * duration), and without counting it here an autopilot-only
-    * deployment would never trigger the rollup pass whose sweep
-    * collects it. The probe is [[Lease.liveLeasePresent]]
-    * — the lease FILE's mtime, NOT the staging directory's: object
-    * stores report synthetic (commonly zero) directory mtimes, under
-    * which an age test on the dir itself reads every fresh in-flight
-    * compact as stale garbage and re-creates exactly the spurious
-    * alarm the fresh/stale split exists to avoid. Underscore-prefixed
-    * entries stay excluded as filesystem noise (the [[isLedgerDir]]
-    * rule — e.g. a stray `_temporary` is a writer's workspace, never
-    * reader-visible). */
-  private[graft] def ledgerListingStats(s: SparkSession,
-      ledgerDir: String): (Seq[String], Int, Option[Long], Int) = {
-    val p = new org.apache.hadoop.fs.Path(ledgerDir)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val entries = ledgerDirs(s, ledgerDir)
-    val live = ledgerLiveStatuses(f, entries).map(_.getPath.getName).sorted
-    val hwm = live.collectFirst { case ledgerCompactedRe(n) => n.toLong }
-    val unrolled = live.count(n => ledgerBatchRe.matches(n))
-    // one lease-file stat, paid only when staging is present at all
-    lazy val maintenanceLive = Lease.liveLeasePresent(s, ledgerDir)
-    val garbage = entries.count { e =>
-      val n = e.getPath.getName
-      if (live.contains(n) || n.startsWith("_")) false
-      else if (n.startsWith(".")) n == ".cstage" && !maintenanceLive
-      else true
-    }
-    (live, unrolled, hwm, garbage)
-  }
-
+    * themselves). In the steady state — nothing appended since the last
+    * rollup — the totals are the rollup's props and the whole report
+    * runs ZERO Spark jobs; otherwise they ride [[ledgerTotals]]. */
   private[graft] def ledgerHealth(s: SparkSession, ledgerDir: String): DataFrame = {
     import s.implicits._
-    val (live, unrolled, hwm, garbage) = ledgerListingStats(s, ledgerDir)
-    // STEADY-STATE totals are listing-only (round 16): when every live
-    // part is the committed rollup — no unrolled batch, no orphan seed
-    // — the rollup's commit marker carries the per-source totals
-    // persisted inside the `_LEDGER_COMMITTED` transaction
-    // ([[markCommitted]]), so the dashboard numbers cost one bounded
-    // file read and ZERO Spark jobs. The Spark aggregation remains
-    // only as the fallback: unrolled batches standing (their rows are
-    // not in any marker), a pre-rollup ledger, a legacy payload-less
-    // marker, or the rollup swept between our listing and the marker
-    // read (committedStats returns None; the re-derive is the same
-    // optimistic-snapshot story as [[ledgerTotals]]).
-    val fromMarker: Option[Seq[(String, Long, Long)]] =
-      if (unrolled == 0 && live.size == 1) hwm.flatMap { m =>
-        val p = new org.apache.hadoop.fs.Path(ledgerDir, s"c$m")
-        committedStats(p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-      } else None
-    def metricRows(nSources: Double, nDocsTotal: Double,
-        nTokensTotal: Double): Seq[(String, Double)] = Seq(
+    val snap = IndexMaintenance.snapshot(s, ledgerDir)
+    val (unrolled, garbage) = ledgerDebt(s, snap)
+    def prop(k: String) = snap.props.get(s"$ledgerTable.$k")
+    val (nSources, nDocs, nTokens) =
+      (prop("n_sources"), prop("n_docs"), prop("n_tokens")) match {
+        case (Some(n), Some(d), Some(t)) if unrolled == 0 => (n.toLong, d.toLong, t.toLong)
+        case _ =>
+          val rows = ledgerTotals(s, ledgerDir).collect()
+          (rows.length.toLong, rows.map(_.getLong(1)).sum, rows.map(_.getLong(2)).sum)
+      }
+    // a local relation in metric order: its collect runs no Spark job
+    Seq(
       ("covered_garbage", garbage.toDouble),
-      ("live_parts", live.size.toDouble),
-      ("n_docs_total", nDocsTotal),
-      ("n_sources", nSources),
-      ("n_tokens_total", nTokensTotal),
-      ("rollup_hwm", hwm.fold(-1.0)(_.toDouble)),
-      ("unrolled_batches", unrolled.toDouble))
-    fromMarker match {
-      case Some(st) =>
-        // serve the whole report as a LOCAL relation: driver-side
-        // rounding (the same half-up rule Spark's round applies) and
-        // metric order by construction, so the collect is an
-        // executeCollect over a LocalTableScan — zero Spark jobs, the
-        // steady-state shape the spec pins
-        val rows = metricRows(st.size.toDouble, st.map(_._2).sum.toDouble,
-            st.map(_._3).sum.toDouble)
-          .map { case (m, v) => org.apache.spark.sql.Row(m,
-            BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) }
-        s.createDataFrame(java.util.Arrays.asList(rows: _*),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("metric",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("value",
-              org.apache.spark.sql.types.DoubleType, nullable = false))))
-      case None =>
-        // coalesce against the zero-row aggregate (live parts whose
-        // every row count is zero — e.g. a seed slice written from an
-        // empty corpus): sum() of nothing is null, and a bare getLong
-        // would die in an undiagnosable NPE
-        val totals = ledgerTotals(s, ledgerDir)
-          .agg(count(lit(1)),
-            coalesce(sum(col("n_docs")), lit(0L)),
-            coalesce(sum(col("n_tokens")), lit(0L))).head()
-        metricRows(totals.getLong(0).toDouble, totals.getLong(1).toDouble,
-            totals.getLong(2).toDouble)
-          .toDF("metric", "value")
-          .select(col("metric"), round(col("value"), 6).as("value"))
-          .orderBy(col("metric"))
-    }
-  }
-
-  /** Roll the ledger all the way up — the autopilot's on-demand form
-    * of the cadence compaction: no trigger is in flight when a
-    * maintenance pass runs, and even if a stream retries the covered
-    * top batch, its deterministic rewrite lands BELOW the new
-    * high-water mark and is ignored by readers, then collected by the
-    * next sweep (totals already include its content via the rollup).
-    * With nothing to roll up this degrades to the lazy sweep, which is
-    * how the autopilot clears `covered_garbage` debt. Returns the
-    * compact's outcome ([[RolledUp]] / [[SweepOnly]] /
-    * [[RollupRefusedTornPart]]) so the autopilot's decision log
-    * reports what actually ran — a refused absorb must not read as
-    * `performed`. */
-  private[graft] def ledgerRollupAll(s: SparkSession, ledgerDir: String): String = {
-    val upTo = ledgerLiveParts(s, ledgerDir).map(nameOf)
-      .collect { case ledgerBatchRe(n) => n.toLong }
-      .maxOption.map(_ + 1).getOrElse(0L)
-    ledgerCompact(s, ledgerDir, upTo)
-  }
-
-  /** True when `dir` holds a token-ledger layout: at least one
-    * grammar dir (`seed` / `b<i>` / `c<n>`) and nothing else but
-    * staging/marker noise — the autopilot's family detector. */
-  private[graft] def isLedgerDir(s: SparkSession, dir: String): Boolean = {
-    val names = ledgerDirs(s, dir).map(_.getPath.getName)
-    val grammar = names.filter(n => n == "seed" ||
-      ledgerBatchRe.matches(n) || ledgerCompactedRe.matches(n))
-    grammar.nonEmpty && names.forall(n => grammar.contains(n) ||
-      n.startsWith(".") || n.startsWith("_"))
+      ("live_parts", snap.filesOf(ledgerTable).map(_.seq).distinct.size.toDouble),
+      ("n_docs_total", nDocs.toDouble),
+      ("n_sources", nSources.toDouble),
+      ("n_tokens_total", nTokens.toDouble),
+      ("rollup_hwm", prop("rollup_hwm").fold(-1.0)(_.toDouble)),
+      ("unrolled_batches", unrolled.toDouble)).toDF("metric", "value")
   }
 
   /** One replayed ledger per (JVM, corpus) for the health query, a
@@ -701,11 +287,11 @@ object TextIngest {
     graft.ops.Artifacts.tempDir(s"ledger|$dir")(ledgerReplay(s, dir))
 
   /** Registered-query form of [[ledgerHealth]] over the memoized
-    * replayed ledger. The replay's final listing state is DETERMINISTIC
-    * (fixed batch count, cadence constants, and alarm thresholds), so
-    * every metric is oracle-able: the totals restate through the same
+    * replayed ledger. The replay's final state is DETERMINISTIC (fixed
+    * batch count, cadence constants, and alarm thresholds), so every
+    * metric is oracle-able: the totals restate through the same
     * train-on-seed / apply-to-all SQL chain as `stream_token_ledger`,
-    * and the listing metrics are literals derived from the SAME Scala
+    * and the layout metrics are literals derived from the SAME Scala
     * constants the replay runs under — a cadence change breaks the
     * gate loudly instead of silently re-shaping the artifact. */
   def streamLedgerHealth(s: SparkSession, dir: String): DataFrame =
@@ -717,15 +303,15 @@ object TextIngest {
     "stream_ledger_health" -> streamLedgerHealth _
   )
 
-  /** The health oracle's listing-metric literals, derived from the
+  /** The health oracle's layout-metric literals, derived from the
     * SAME constants the replay runs under. The registered replay
     * streams `ingestBatches − 1` batches, and with that count under
-    * the cadence floor neither the floor nor the dir-count debt probe
-    * ever fires — so the final listing is exactly seed + every `b` dir,
-    * no rollup, no garbage. The require is the drift alarm: if the
-    * cadence constants ever change enough that a rollup fires inside
-    * the replay, this fails at registration time instead of the gate
-    * silently comparing against stale literals. */
+    * the cadence floor neither the floor nor the appended-batch debt
+    * alarm ever fires — so the final state is exactly the seed commit
+    * plus one commit per batch, no rollup, no garbage. The require is
+    * the drift alarm: if the cadence constants ever change enough that
+    * a rollup fires inside the replay, this fails at registration time
+    * instead of the gate silently comparing against stale literals. */
   private def ledgerHealthOracleSql: String = {
     val streamed = IngestDedup.ingestBatches - 1
     require(streamed < IngestDedup.ingestCompactEvery,

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.TextAnalysis
+import graft.ops.{IndexMaintenance, TextAnalysis}
 
 /** BPE tokenizer induction against an independent in-memory reference
   * implementation of the same rules (overlap-counted pair frequencies,
@@ -232,11 +232,10 @@ class BpeTrainSpec extends AnyFunSuite {
     val first = TextAnalysis.bpeMergesDf(spark, dir)
       .orderBy(org.apache.spark.sql.functions.col("step")).collect().head
     val mergeList = Seq((first.getString(1), first.getString(2)))
-    Seq((1L, first.getString(1), first.getString(2), first.getString(3), first.getLong(4)))
-      .toDF("step", "lhs", "rhs", "merged", "pair_count")
-      .write.mode("overwrite").parquet(s"$tmp/merges")
-    // hand-built dirs declare completion LAST (the r15 torn-artifact contract)
-    assert(new java.io.File(tmp, TextAnalysis.bpeModelCommitMarker).createNewFile())
+    // a hand-built model commits its merge table through the index log
+    IndexMaintenance.replace(spark, tmp, Seq("merges" ->
+      Seq((1L, first.getString(1), first.getString(2), first.getString(3), first.getLong(4)))
+        .toDF("step", "lhs", "rhs", "merged", "pair_count")))
     val got = TextAnalysis.textBpeEncodeServed(spark, dir, tmp).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     val want = spark.read.parquet(s"$dir/documents.parquet")
@@ -276,9 +275,7 @@ class BpeTrainSpec extends AnyFunSuite {
   test("served encode of a 500-merge scaled artifact takes the scaled path, byte-identical to the canonical reference") {
     val dir = TestSpark.sf0001
     val model = java.nio.file.Files.createTempDirectory("bpe-scaled-model").toString
-    TextAnalysis.textBpeTrainScaled(spark, dir, 500)
-      .write.mode("overwrite").parquet(s"$model/merges")
-    assert(new java.io.File(model, TextAnalysis.bpeModelCommitMarker).createNewFile())
+    IndexMaintenance.replace(spark, model, Seq("merges" -> TextAnalysis.textBpeTrainScaled(spark, dir, 500)))
     val merges = TextAnalysis.bpeModelMerges(spark, model)
     assert(merges.size > TextAnalysis.bpeReplaceChainMax,
       s"corpus exhausted at ${merges.size} merges — below the scaled-path threshold; the arm proves nothing")
@@ -315,21 +312,20 @@ class BpeTrainSpec extends AnyFunSuite {
       // the two live merges plus inert pairs of symbols absent from the
       // corpus, only there to push the table across/below the
       // bpeReplaceChainMax dispatch threshold
-      (Seq((1L, "a", "a", "aa", 2L), (2L, "a", "aa", "aaa", 1L)) ++
-          (1 to nInert).map(i =>
-            ((i + 2).toLong, s"_$i", "_x", s"_$i" + "_x", 1L)))
-        .toDF("step", "lhs", "rhs", "merged", "pair_count")
-        .write.mode("overwrite").parquet(s"$d/merges")
-      assert(new java.io.File(d, TextAnalysis.bpeModelCommitMarker).createNewFile())
+      IndexMaintenance.replace(spark, d, Seq("merges" ->
+        (Seq((1L, "a", "a", "aa", 2L), (2L, "a", "aa", "aaa", 1L)) ++
+            (1 to nInert).map(i =>
+              ((i + 2).toLong, s"_$i", "_x", s"_$i" + "_x", 1L)))
+          .toDF("step", "lhs", "rhs", "merged", "pair_count")))
       d
     }
     def servedTokens(model: String): Long =
       TextAnalysis.textBpeEncodeServed(spark, tmp, model).collect().head.getLong(2)
     assert(servedTokens(modelOf(TextAnalysis.bpeReplaceChainMax - 2)) == 2L,
-      "a markerless threshold-sized model must keep the demo two-pass replace semantics (its oracle's form)")
+      "a threshold-sized model with no apply form must keep the demo two-pass replace semantics (its oracle's form)")
     assert(servedTokens(modelOf(TextAnalysis.bpeReplaceChainMax - 1)) == 3L,
-      "a markerless above-threshold model must encode through the scaled canonical path")
-    // r14 provenance marker: the artifact's recorded apply form beats
+      "an above-threshold model with no apply form must encode through the scaled canonical path")
+    // the artifact's recorded apply form beats
     // the size heuristic — a tiny CANONICAL-marked model (a scaled run
     // that exhausted a small corpus early) must encode canonically
     val marked = java.nio.file.Files.createTempDirectory("bpe-marked").toString
@@ -338,8 +334,8 @@ class BpeTrainSpec extends AnyFunSuite {
         .toDF("step", "lhs", "rhs", "merged", "pair_count"),
       marked, applyForm = "canonical")
     assert(servedTokens(marked) == 3L,
-      "a canonical-marked model below the size threshold was served with two-pass semantics — the marker must win")
-    // and a two_pass marker past the replace-chain bound fails loudly
+      "a canonical-marked model below the size threshold was served with two-pass semantics — the apply form must win")
+    // and a two_pass form past the replace-chain bound fails loudly
     // instead of silently building the per-merge expression blowup
     val tooBig = java.nio.file.Files.createTempDirectory("bpe-toobig").toString
     TextAnalysis.bpeModelPersist(spark,
@@ -353,36 +349,45 @@ class BpeTrainSpec extends AnyFunSuite {
       s"wrong failure for an oversized two_pass model: ${e.getMessage}")
     // the two write paths stamp their own provenance
     assert(TextAnalysis.bpeModelApplyForm(spark, TextAnalysis.bpeModelFor(spark, TestSpark.sf0001))
-      .contains("two_pass"), "bpeModelWrite must stamp the two_pass marker")
+      .contains("two_pass"), "bpeModelWrite must record the two_pass apply form")
     assert(TextAnalysis.bpeModelApplyForm(spark, TextAnalysis.scaledBpeModelFor(spark, TestSpark.sf0001))
-      .contains("canonical"), "the scaled-serve artifact must stamp the canonical marker")
+      .contains("canonical"), "the scaled-serve artifact must record the canonical apply form")
   }
 
-  test("torn model artifact (r15): a dir without the commit marker fails loudly instead of serving truncated merges") {
+  test("crashed model persist: staged merges with no commit fail loudly; a crash before the commit leaves the old model serving") {
     import spark.implicits._
-    val model = java.nio.file.Files.createTempDirectory("bpe-torn").toString
-    TextAnalysis.bpeModelPersist(spark,
-      Seq((1L, "a", "a", "aa", 2L)).toDF("step", "lhs", "rhs", "merged", "pair_count"),
-      model, applyForm = "canonical")
-    // a persisted artifact carries the marker and serves normally
-    assert(new java.io.File(model, TextAnalysis.bpeModelCommitMarker).exists(),
-      "bpeModelPersist did not create the completion marker")
+    def mergesDf(ms: (String, String)*) = ms.zipWithIndex.map { case ((l, r), i) =>
+      ((i + 1).toLong, l, r, l + r, 1L) }.toDF("step", "lhs", "rhs", "merged", "pair_count")
+    // a crashed persist's merge table: written into the table dir, never committed
+    def stageUncommitted(model: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      df.coalesce(1).write.parquet(s"$model/crashed")
+      new java.io.File(s"$model/crashed").listFiles().filter(_.getName.endsWith(".parquet"))
+        .foreach { f =>
+          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(model, "merges"))
+          java.nio.file.Files.move(f.toPath, java.nio.file.Paths.get(model, "merges", s"crashed-${f.getName}"))
+        }
+    }
+    val model = java.nio.file.Files.createTempDirectory("bpe-crash").toString
+    TextAnalysis.bpeModelPersist(spark, mergesDf("a" -> "a"), model, applyForm = "canonical")
     assert(TextAnalysis.bpeModelMerges(spark, model) == Seq(("a", "a")))
-    // simulate a crash mid copy-rename (S3A): content present — maybe
-    // partially — but the completion marker never landed
-    assert(new java.io.File(model, TextAnalysis.bpeModelCommitMarker).delete())
-    val e1 = intercept[IllegalStateException](TextAnalysis.bpeModelMerges(spark, model))
-    assert(e1.getMessage.contains("incomplete"),
-      s"wrong failure for a torn artifact: ${e1.getMessage}")
-    val e2 = intercept[IllegalStateException](TextAnalysis.bpeModelApplyForm(spark, model))
-    assert(e2.getMessage.contains("incomplete"),
-      "the apply-form reader must not dispatch off a torn artifact " +
-      "(a partial copy missing spec would silently fall back to the size heuristic)")
-    // re-persisting heals
-    TextAnalysis.bpeModelPersist(spark,
-      Seq((1L, "a", "a", "aa", 2L)).toDF("step", "lhs", "rhs", "merged", "pair_count"),
-      model, applyForm = "canonical")
+    // a re-persist that crashed before its commit: the old model serves
+    stageUncommitted(model, mergesDf("b" -> "b", "a" -> "b"))
+    assert(TextAnalysis.bpeModelMerges(spark, model) == Seq(("a", "a")),
+      "the uncommitted merge table was served")
     assert(TextAnalysis.bpeModelApplyForm(spark, model).contains("canonical"))
+    // a first persist that crashed before its commit: nothing to serve
+    val torn = java.nio.file.Files.createTempDirectory("bpe-torn").toString
+    stageUncommitted(torn, mergesDf("a" -> "a"))
+    val e1 = intercept[IllegalStateException](TextAnalysis.bpeModelMerges(spark, torn))
+    assert(e1.getMessage.contains("incomplete"),
+      s"wrong failure for an uncommitted model: ${e1.getMessage}")
+    val e2 = intercept[IllegalStateException](TextAnalysis.bpeModelApplyForm(spark, torn))
+    assert(e2.getMessage.contains("incomplete"),
+      "the apply-form reader must not fall back to the size heuristic on an uncommitted model")
+    // persisting heals
+    TextAnalysis.bpeModelPersist(spark, mergesDf("a" -> "a"), torn, applyForm = "canonical")
+    assert(TextAnalysis.bpeModelApplyForm(spark, torn).contains("canonical"))
+    assert(TextAnalysis.bpeModelMerges(spark, torn) == Seq(("a", "a")))
   }
 
   test("corpus swap + Artifacts.clear drops the frozen served model: served encode retrains with the scan form") {

@@ -4,12 +4,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.IndexMaintenance
+import graft.streaming.TextIngest
 
 /** The index log under its crash windows and races, property by
   * property: files written with no commit, a lost version race, a
   * crash after a commit but before the removed files are deleted, a
   * retry of a committed batch after a compaction or a retrain, a delete
-  * that races a rewrite, an append after a delete after a cold start. A
+  * that races a rewrite, an append after a delete after a cold start, a
+  * token-ledger rollup racing a foreign or a sibling rollup. A
   * writer in another process is simulated by creating the next log
   * version directly, without this JVM's writer lock.
   */
@@ -235,62 +237,107 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(parquetNames(s"$dir/t") == committed, "the loser's staged files were left behind")
   }
 
-  /** A token ledger with a seed and one batch dir: the artifact the
-    * maintenance lease still guards. */
+  /** A token ledger with a seed and one batch. */
   private def ledger(root: String): String = {
     import spark.implicits._
-    Seq(("s1", 2L, 10L, -1L)).toDF("source", "n_docs", "n_tokens", "batch_id")
-      .coalesce(1).write.parquet(s"$root/ledger/seed")
-    Seq(("s1", 1L, 5L, 0L)).toDF("source", "n_docs", "n_tokens", "batch_id")
-      .coalesce(1).write.parquet(s"$root/ledger/b0")
-    s"$root/ledger"
+    val dir = s"$root/ledger"
+    IndexMaintenance.replace(spark, dir, Seq(TextIngest.ledgerTable ->
+      Seq(("s1", 2L, 10L)).toDF("source", "n_docs", "n_tokens").coalesce(1)))
+    IndexMaintenance.append(spark, dir, Seq(TextIngest.ledgerTable ->
+      Seq(("s1", 1L, 5L), ("s2", 1L, 7L)).toDF("source", "n_docs", "n_tokens").coalesce(1)),
+      mark = Some("L" -> 0L))
+    dir
   }
 
-  private def subdirs(d: String): Seq[String] =
-    new java.io.File(d).listFiles().filter(_.isDirectory).map(_.getName).sorted.toSeq
+  private def ledgerTotals(dir: String): Seq[(String, Long, Long)] =
+    TextIngest.ledgerTotals(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
 
-  private def leaseOf(ledgerDir: String) = new java.io.File(
-    graft.ops.Lease.leasePath(new org.apache.hadoop.fs.Path(ledgerDir)).toUri.getPath)
+  private val ledgerWant = Seq(("s1", 3L, 15L), ("s2", 1L, 7L))
 
-  test("lease: a live foreign lease fails maintenance loudly; a stale one is broken") {
-    val dir = ledger(tmpDir("lease"))
-    val lease = leaseOf(dir)
-    java.nio.file.Files.write(lease.toPath, "00000000-dead-beef-0000-000000000000".getBytes("UTF-8"))
-    val e = intercept[IllegalStateException](
-      graft.streaming.TextIngest.ledgerCompact(spark, dir, upTo = 1L))
-    assert(e.getMessage.contains("concurrent maintenance writer"), e.getMessage)
-    assert(subdirs(dir) == Seq("b0", "seed"), "the rollup ran despite the live lease")
-    // stale (a crashed holder): broken, the rollup runs and releases it
-    assert(lease.setLastModified(System.currentTimeMillis() - graft.ops.Lease.leaseStaleMs - 60000L))
-    graft.streaming.TextIngest.ledgerCompact(spark, dir, upTo = 1L)
-    assert(subdirs(dir) == Seq("c0"), s"no rollup after breaking the stale lease: ${subdirs(dir)}")
-    assert(!lease.exists(), "lease leaked after release")
-  }
-
-  test("lease: a nested hold reenters without releasing; a sibling thread waits instead of breaking it") {
-    val dir = ledger(tmpDir("lease-thread"))
-    val lease = leaseOf(dir)
-    def ours = lease.exists() &&
-      new String(java.nio.file.Files.readAllBytes(lease.toPath), "UTF-8") == graft.ops.Lease.processId
-    @volatile var threadErr: Option[Throwable] = None
-    val t = new Thread(() => try graft.streaming.TextIngest.ledgerCompact(spark, dir, upTo = 1L)
-      catch { case e: Throwable => threadErr = Some(e) })
-    graft.ops.Lease.withMaintenance(spark, dir) {
-      graft.ops.Lease.withMaintenance(spark, dir) {
-        assert(ours, "the nested hold does not see the outer hold's lease")
+  test("ledger rollup race: a foreign rollup that commits first makes ours fail loudly; the ledger is untouched") {
+    val dir = ledger(tmpDir("ledger-race"))
+    val counts = s"$dir/${TextIngest.ledgerTable}"
+    var removed: Seq[IndexMaintenance.DataFile] = Nil
+    val err = intercept[IllegalStateException] {
+      IndexMaintenance.transact(spark, dir) { snap =>
+        // the other process's rollup commits first: its one aggregate
+        // file replaces every file this rollup also replaces
+        removed = snap.filesOf(TextIngest.ledgerTable)
+        TextIngest.ledgerTotals(spark, dir).coalesce(1).write.parquet(s"$dir/foreign")
+        val n = parquetNames(s"$dir/foreign").head
+        val theirs = java.nio.file.Files.move(java.nio.file.Paths.get(dir, "foreign", n),
+          java.nio.file.Paths.get(counts, s"foreign-$n"))
+        foreignCommit(dir, snap.version + 1, removed.map(d => s"""{"remove":{"path":"${d.path}"}}""") :+
+          (s"""{"add":{"path":"${TextIngest.ledgerTable}/foreign-$n","table":"${TextIngest.ledgerTable}",""" +
+            s""""size":${java.nio.file.Files.size(theirs)},"seq":0,"schema":${quote(removed.head.schema)}}}"""): _*)
+        TextIngest.ledgerRollupChange(spark, snap)
       }
-      assert(ours, "the nested hold released the outer hold's lease")
-      // a second thread of this process (a rollup landing while another
-      // maintenance op holds the ledger) queues on the in-JVM lock
+    }
+    assert(err.getMessage.contains("concurrent rewrite"), err.getMessage)
+    // the other process deletes what it removed once its commit is in
+    removed.foreach(d => java.nio.file.Files.delete(java.nio.file.Paths.get(dir, d.path)))
+    assert(ledgerTotals(dir) == ledgerWant, "the losing rollup changed the ledger")
+    val committed = IndexMaintenance.snapshot(spark, dir).filesOf(TextIngest.ledgerTable).map(_.name).toSet
+    assert(committed.size == 1 && committed.head.startsWith("foreign-"), s"not the winner's table: $committed")
+    assert(parquetNames(counts) == committed, "the loser's staged files were left behind")
+  }
+
+  test("ledger rollup race: a sibling thread's rollup waits on the writer lock, then commits on top of ours") {
+    val dir = ledger(tmpDir("ledger-sibling"))
+    val v0 = IndexMaintenance.snapshot(spark, dir).version
+    @volatile var threadErr: Option[Throwable] = None
+    val t = new Thread(() => try TextIngest.ledgerRollup(spark, dir)
+      catch { case e: Throwable => threadErr = Some(e) })
+    IndexMaintenance.transact(spark, dir) { snap =>
+      // a second thread of this process rolls up while ours runs: it
+      // queues on the in-JVM writer lock instead of racing our commit
       t.start()
       t.join(1000L)
-      assert(t.isAlive && threadErr.isEmpty, s"the sibling thread ran inside the hold: $threadErr")
-      assert(ours && subdirs(dir) == Seq("b0", "seed"), "the sibling thread broke the live lease")
+      assert(t.isAlive && threadErr.isEmpty, s"the sibling rollup ran inside ours: $threadErr")
+      TextIngest.ledgerRollupChange(spark, snap)
     }
     t.join(60000L)
-    assert(threadErr.isEmpty, s"sibling thread failed: $threadErr")
-    assert(subdirs(dir) == Seq("c0"), s"the sibling thread's rollup was lost: ${subdirs(dir)}")
-    assert(!lease.exists(), "lease leaked after the last release")
+    assert(threadErr.isEmpty, s"sibling rollup failed: $threadErr")
+    val snap = IndexMaintenance.snapshot(spark, dir)
+    assert(snap.version == v0 + 2, s"both rollups should commit, one after the other: v${snap.version}")
+    assert(ledgerTotals(dir) == ledgerWant, "the sibling rollups changed the ledger")
+    val committed = snap.filesOf(TextIngest.ledgerTable).map(_.name).toSet
+    assert(committed.size == 1 && parquetNames(s"$dir/${TextIngest.ledgerTable}") == committed,
+      "a rollup's replaced or staged files were left behind")
+  }
+
+  test("a reader racing commits in the same process never replays a half-written version") {
+    val dir = tmpDir("half-written")
+    // ~40 files per commit: each version's add lines outgrow one write buffer
+    def batch(b: Long) = rows((b * 1000L) until (b * 1000L + 200L)).repartition(40)
+    // the file count of each version, as its writer saw it committed
+    val committed = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    def record(): Unit = {
+      val snap = IndexMaintenance.snapshot(spark, dir)
+      committed.put(snap.version, snap.filesOf("t").size)
+    }
+    IndexMaintenance.replace(spark, dir, Seq("t" -> batch(0L)))
+    record()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int)]()
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val readerErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val reader = new Thread(() => {
+      try while (!stop.get()) {
+        val snap = IndexMaintenance.snapshot(spark, dir)
+        seen.add(snap.version -> snap.filesOf("t").size)
+      } catch { case t: Throwable => readerErr.set(t) }
+    })
+    reader.start()
+    try (1L to 12L).foreach { b =>
+      IndexMaintenance.append(spark, dir, Seq("t" -> batch(b)))
+      record()
+    } finally { stop.set(true); reader.join(60000) }
+    assert(readerErr.get() == null, s"a reader failed on a half-written version: ${readerErr.get()}")
+    import scala.jdk.CollectionConverters._
+    val torn = seen.asScala.toSeq.distinct.filter { case (v, n) => committed.get(v) != n }
+    assert(torn.isEmpty, s"(version, files) replayed from half-written versions: $torn; " +
+      s"committed: ${committed.asScala.toSeq.sorted}")
   }
 
   test("a text batch crashed before its commit is never served and its retry lands once") {

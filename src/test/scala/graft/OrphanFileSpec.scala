@@ -3,13 +3,14 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import graft.ops.{AnnIndex, Artifacts, Curation, Dedup, Similarity, TextAnalysis}
+import graft.ops.{AnnIndex, Artifacts, Curation, Dedup, IndexMaintenance, Similarity, TextAnalysis}
+import graft.streaming.TextIngest
 
 /** What a crashed writer leaves behind — data files nobody committed,
   * next to the committed ones, older than the orphan retention — must
   * change no served, health or ingest result, and the next compaction
-  * must delete it. Every index family
-  * and the ingest verdict sink are covered; a version from another
+  * must delete it. Every index family, the ingest verdict sink, the
+  * token ledger and the BPE model are covered; a version from another
   * writer lands in every log too. */
 class OrphanFileSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -52,8 +53,16 @@ class OrphanFileSpec extends AnyFunSuite {
     val docs = Tables(spark, manifestCorpus, "documents")
     Dedup.ingestManifestBatch(spark, docs.filter(col("doc_id") % 3 === 1),
       s"$root/manifest", s"$root/sink", 0L)
-    val dirs = Seq("text", "dedup", "lsh", "ivf", "ivfpq", "decontam", "manifest", "sink")
-      .map(d => s"$root/$d")
+    TextAnalysis.bpeModelWrite(spark, sf0001, s"$root/model")
+    val merges = TextAnalysis.bpeModelMerges(spark, s"$root/model")
+    val form = TextAnalysis.bpeModelApplyForm(spark, s"$root/model")
+    val corpus = Tables(spark, sf0001, "documents")
+    def ledgerRows(slice: Int) = Seq(TextIngest.ledgerTable -> TextAnalysis.bpeSourceCounts(
+      corpus.filter(col("doc_id") % 2 === slice), merges, form).coalesce(1))
+    IndexMaintenance.replace(spark, s"$root/ledger", ledgerRows(0))
+    IndexMaintenance.append(spark, s"$root/ledger", ledgerRows(1), mark = Some("L" -> 0L))
+    val dirs = Seq("text", "dedup", "lsh", "ivf", "ivfpq", "decontam", "manifest", "sink",
+      "ledger", "model").map(d => s"$root/$d")
     val q = Similarity.normed(spark, sf0001).filter(col("vec_id") % 9 === 1)
       .select(col("vec_id").as("q_id"), col("embedding"))
     var probe = 0
@@ -75,9 +84,15 @@ class OrphanFileSpec extends AnyFunSuite {
         AnnIndex.ivfPqIndexServe(spark, s"$root/ivfpq", Seq(sf0001), q),
         Curation.decontamServeTwoTier(spark, s"$root/decontam", sf0001),
         Dedup.cleanStore(spark, s"$root/manifest"),
-        spark.read.parquet(s"$root/probe-sink-$probe")
+        spark.read.parquet(s"$root/probe-sink-$probe"),
+        TextIngest.ledgerTotals(spark, s"$root/ledger"),
+        TextIngest.ledgerHealth(spark, s"$root/ledger"),
+        TextAnalysis.textBpeEncodeServed(spark, sf0001, s"$root/model")
       ).map(_.collect().toSeq.sortBy(_.toString))
     }
+    // rows of the metrics that describe a directory's layout, not its content
+    def without(metrics: String*)(rs: Seq[Seq[Row]]) =
+      rs.map(_.filterNot(r => metrics.contains(r.get(0))))
     val before = results()
     val sink = spark.read.parquet(s"$root/sink").collect().toSeq.sortBy(_.toString)
     dirs.foreach { d =>
@@ -85,7 +100,12 @@ class OrphanFileSpec extends AnyFunSuite {
         java.nio.file.Files.copy(p, p.resolveSibling(s"orphan-${p.getFileName}"))))
       foreignVersion(d)
     }
-    assert(results() == before, "uncommitted files changed a served, health or ingest result")
+    val planted = results()
+    assert(without("covered_garbage")(planted) == without("covered_garbage")(before),
+      "uncommitted files changed a served, health or ingest result")
+    // the ledger's garbage metric reports exactly the aged orphans its rollup deletes
+    assert(planted.flatten.filter(_.get(0) == "covered_garbage").map(_.getDouble(1)) ==
+      Seq(dataFiles(s"$root/ledger").count(_.getFileName.toString.startsWith("orphan-")).toDouble))
     TextAnalysis.textIndexCompact(spark, s"$root/text")
     Dedup.dedupIndexCompact(spark, s"$root/dedup")
     AnnIndex.lshIndexCompact(spark, s"$root/lsh")
@@ -94,12 +114,16 @@ class OrphanFileSpec extends AnyFunSuite {
     Curation.decontamIndexCompact(spark, s"$root/decontam")
     Dedup.ingestIndexCompact(spark, s"$root/manifest")
     Dedup.ingestSinkCompact(spark, s"$root/sink")
+    TextIngest.ledgerRollup(spark, s"$root/ledger")
+    TextAnalysis.bpeModelWrite(spark, sf0001, s"$root/model")
     val left = dirs.flatMap(dataFiles).filter(_.getFileName.toString.startsWith("orphan-"))
     assert(left.isEmpty, s"compaction left orphans: ${left.mkString(", ")}")
     val after = results()
-    // file counts legitimately move with the compactions
-    def noFiles(rs: Seq[Seq[Row]]) = rs.map(_.filterNot(r => r.get(0) == "data_files"))
-    assert(noFiles(after) == noFiles(before), "compaction changed a served result")
+    // file counts and the ledger's layout legitimately move with the
+    // compactions and the rollup
+    val layout = without("data_files", "live_parts", "unrolled_batches", "rollup_hwm",
+      "covered_garbage") _
+    assert(layout(after) == layout(before), "compaction changed a served result")
     assert(spark.read.parquet(s"$root/sink").collect().toSeq.sortBy(_.toString) == sink,
       "the compacted sink is not its committed rows")
   }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{IndexMaintenance, TextAnalysis}
+import graft.streaming.TextIngest
 
 /** Streaming lexical-index ingest: the grown postings equal a one-shot
   * full-corpus build, global stats stay frozen until compaction catches
@@ -31,7 +32,7 @@ class TextIngestSpec extends AnyFunSuite {
     docs.write.mode("overwrite").parquet(s"$r/full/documents.parquet")
     TextAnalysis.textIndexWrite(spark, s"$r/slice_0", s"$r/index")
     land(r, 1, "batch_1"); land(r, 2, "batch_2")
-    graft.streaming.TextIngest.streamTextIngestToFiles(spark, s"$r/landing",
+    TextIngest.streamTextIngestToFiles(spark, s"$r/landing",
       s"$r/index", s"$r/checkpoint")
 
     // postings + doc-values of the grown index match a one-shot build
@@ -82,13 +83,51 @@ class TextIngestSpec extends AnyFunSuite {
       .listFiles().filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toInt)
     new java.io.File(commits.getParentFile, s".${commits.getName}.crc").delete()
     assert(commits.delete(), "could not remove the last commit marker")
-    graft.streaming.TextIngest.streamTextIngestToFiles(spark, s"$r/landing",
+    TextIngest.streamTextIngestToFiles(spark, s"$r/landing",
       s"$r/index", s"$r/checkpoint")
     assert(spark.read.parquet(s"$r/index/postings").count() == before,
       "redelivered batch appended duplicate posting rows")
     assert(serveOf(s"$r/index") === caught, "redelivery changed serving")
     IndexMaintenance.checkUnique(spark, s"$r/index", "postings",
       Seq("term", "doc_id"), "doc_id")
+  }
+
+  /** A token ledger of hand-written rows: the seed (s1: 2 docs, 10
+    * tokens), then batches 0 (s1: 1, 5) and 1 (s2: 1, 7) of lineage `L`. */
+  private def smallLedger(tag: String): String = {
+    import spark.implicits._
+    val dir = s"${java.nio.file.Files.createTempDirectory(tag)}/ledger"
+    def rows(src: String, d: Long, t: Long) =
+      Seq((src, d, t)).toDF("source", "n_docs", "n_tokens").coalesce(1)
+    IndexMaintenance.replace(spark, dir, Seq(TextIngest.ledgerTable -> rows("s1", 2L, 10L)))
+    IndexMaintenance.append(spark, dir, Seq(TextIngest.ledgerTable -> rows("s1", 1L, 5L)),
+      mark = Some("L" -> 0L))
+    IndexMaintenance.append(spark, dir, Seq(TextIngest.ledgerTable -> rows("s2", 1L, 7L)),
+      mark = Some("L" -> 1L))
+    dir
+  }
+  private val smallLedgerTotals = Seq(("s1", 3L, 15L), ("s2", 1L, 7L))
+
+  private def totalsOf(ledger: String): Seq[(String, Long, Long)] =
+    TextIngest.ledgerTotals(spark, ledger)
+      .collect().map(x => (x.getString(0), x.getLong(1), x.getLong(2))).sorted.toSeq
+
+  private def healthOf(ledger: String): Map[String, Double] =
+    TextIngest.ledgerHealth(spark, ledger)
+      .collect().map(x => x.getString(0) -> x.getDouble(1)).toMap
+
+  /** The ledger table's data files on disk, committed or not. */
+  private def countFiles(ledger: String): Set[String] =
+    MaintenanceSpec.parquetNames(s"$ledger/${TextIngest.ledgerTable}")
+
+  private def committedFiles(ledger: String): Set[String] =
+    IndexMaintenance.snapshot(spark, ledger).filesOf(TextIngest.ledgerTable).map(_.name).toSet
+
+  /** An uncommitted copy of a committed ledger file, as a crashed or a
+    * live writer leaves it in the table dir. */
+  private def plantCopy(ledger: String, tag: String): java.nio.file.Path = {
+    val src = java.nio.file.Paths.get(ledger, TextIngest.ledgerTable, committedFiles(ledger).head)
+    java.nio.file.Files.copy(src, src.resolveSibling(s"$tag-${src.getFileName}"))
   }
 
   test("streaming token ledger: batch-by-batch totals == one whole-corpus encode under the frozen seed model; redelivery double-counts nothing") {
@@ -102,146 +141,101 @@ class TextIngestSpec extends AnyFunSuite {
     val merges = TextAnalysis.bpeModelMerges(spark, s"$r/model")
     val form = TextAnalysis.bpeModelApplyForm(spark, s"$r/model")
     assert(merges.nonEmpty && form.contains("two_pass"))
-    // seed's own ledger rows, stamped at deployment — counted under the
-    // model's recorded apply form like every streamed batch
-    TextAnalysis.bpeSourceCounts(
-        spark.read.parquet(s"$r/slice_0/documents.parquet"), merges, form)
-      .withColumn("batch_id", lit(-1L))
-      .coalesce(1).write.mode("overwrite").parquet(s"$r/ledger/seed")
+    val ledger = s"$r/ledger"
+    // seed's own ledger rows, committed at deployment — counted under
+    // the model's recorded apply form like every streamed batch
+    IndexMaintenance.replace(spark, ledger, Seq(TextIngest.ledgerTable -> TextAnalysis.bpeSourceCounts(
+      spark.read.parquet(s"$r/slice_0/documents.parquet"), merges, form).coalesce(1)))
     land(r, 1, "batch_1"); land(r, 2, "batch_2")
-    graft.streaming.TextIngest.streamTokenLedgerToFiles(spark, s"$r/landing",
-      s"$r/model", s"$r/ledger", s"$r/checkpoint")
-    def totals(): Seq[(String, Long, Long)] =
-      graft.streaming.TextIngest.ledgerTotals(spark, s"$r/ledger")
-        .collect().map(x => (x.getString(0), x.getLong(1), x.getLong(2))).sorted.toSeq
-    val got = totals()
+    def stream(): Unit = TextIngest.streamTokenLedgerToFiles(spark, s"$r/landing",
+      s"$r/model", ledger, s"$r/checkpoint")
+    stream()
     // batch-by-batch accounting under FROZEN merges == one whole-corpus
     // encode under the same merges (bpeSourceCounts' exactness contract)
     val want = TextAnalysis.bpeSourceCounts(docs, merges, form).collect()
       .map(x => (x.getString(0), x.getLong(1), x.getLong(2))).sorted.toSeq
-    assert(got.nonEmpty && got === want,
-      s"ledger totals diverged from the whole-corpus encode:\n got: $got\nwant: $want")
-    // redelivery: lose the last commit marker and re-run — the
-    // deterministic per-batch overwrite replaces rows, never adds
-    val commits = new java.io.File(s"$r/checkpoint/commits")
-      .listFiles().filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toInt)
-    new java.io.File(commits.getParentFile, s".${commits.getName}.crc").delete()
-    assert(commits.delete(), "could not remove the last commit marker")
-    graft.streaming.TextIngest.streamTokenLedgerToFiles(spark, s"$r/landing",
-      s"$r/model", s"$r/ledger", s"$r/checkpoint")
-    assert(totals() === want, "redelivered batch double-counted ledger rows")
+    assert(totalsOf(ledger).nonEmpty && totalsOf(ledger) === want,
+      s"ledger totals diverged from the whole-corpus encode:\n got: ${totalsOf(ledger)}\nwant: $want")
+    // redelivery: lose the last checkpoint commit and re-run — the batch
+    // finds its mark in the ledger's log and lands nothing
+    def redeliver(): Unit = {
+      val commits = new java.io.File(s"$r/checkpoint/commits")
+        .listFiles().filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toInt)
+      new java.io.File(commits.getParentFile, s".${commits.getName}.crc").delete()
+      assert(commits.delete(), "could not remove the last commit marker")
+      val v = IndexMaintenance.snapshot(spark, ledger).version
+      stream()
+      assert(IndexMaintenance.snapshot(spark, ledger).version == v,
+        "the redelivered batch committed again")
+    }
+    redeliver()
+    assert(totalsOf(ledger) === want, "redelivered batch double-counted ledger rows")
 
-    // ROLLUP: compacting seed + all committed batches into one c<hwm>
-    // dir changes nothing observable and bounds the dir count
-    graft.streaming.TextIngest.ledgerCompact(spark, s"$r/ledger", upTo = 2L)
-    def dirs(): Seq[String] = new java.io.File(s"$r/ledger").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted.toSeq
-    assert(dirs() === Seq("c1"), s"rollup left uncovered dirs: ${dirs()}")
-    assert(totals() === want, "rollup changed the ledger totals")
-    // crashed-sweep window: a covered batch dir reappearing next to the
-    // rollup (rename done, sweep pending) must be IGNORED by the reader
-    spark.read.parquet(s"$r/ledger/c1").limit(1)
-      .selectExpr("source", "CAST(999999 AS BIGINT) AS n_docs",
-        "CAST(999999 AS BIGINT) AS n_tokens", "CAST(0 AS BIGINT) AS batch_id")
-      .write.mode("overwrite").parquet(s"$r/ledger/b0")
-    assert(totals() === want, "reader counted a batch dir the rollup already covers")
-    // redelivery AFTER the rollup: the re-presented batch rewrites its
-    // b dir below the high-water mark; the reader ignores it (already
-    // in the rollup) — no double count from the compact/retry interplay
-    val commits2 = new java.io.File(s"$r/checkpoint/commits")
-      .listFiles().filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toInt)
-    new java.io.File(commits2.getParentFile, s".${commits2.getName}.crc").delete()
-    assert(commits2.delete(), "could not remove the last commit marker")
-    graft.streaming.TextIngest.streamTokenLedgerToFiles(spark, s"$r/landing",
-      s"$r/model", s"$r/ledger", s"$r/checkpoint")
-    assert(totals() === want, "post-rollup redelivery double-counted")
-    // and the next compact invocation sweeps the stale rewrites even
-    // with nothing new to roll up (the every-invocation sweep)
-    graft.streaming.TextIngest.ledgerCompact(spark, s"$r/ledger", upTo = 3L)
-    assert(dirs() === Seq("c1"), s"sweep left stale dirs: ${dirs()}")
-    assert(totals() === want, "sweep changed the ledger totals")
+    // ROLLUP: one commit replaces seed + batches with one file; nothing
+    // observable changes
+    TextIngest.ledgerRollup(spark, ledger)
+    assert(committedFiles(ledger).size == 1 && countFiles(ledger) == committedFiles(ledger),
+      s"rollup left more than its one file: ${countFiles(ledger)}")
+    assert(totalsOf(ledger) === want, "rollup changed the ledger totals")
+    // redelivery AFTER the rollup: the rollup carried the batch marks,
+    // so the re-presented batch still lands nothing
+    redeliver()
+    assert(totalsOf(ledger) === want, "post-rollup redelivery double-counted")
 
-    // CONCURRENT READ DURING COMPACT (r14): totals and rollups share
-    // the index-scoped maintenance lock+lease, so a reader that listed
-    // live parts can never have them swept mid-read. Churn the ledger
-    // (new live dirs + covering rollups + sweeps) while a reader loops;
-    // the zero-row batch dirs keep the expected totals constant.
+    // CONCURRENT READ DURING ROLLUP CHURN: a reader takes no lock, and
+    // every rollup deletes the file a running read may have listed.
+    // Zero-row batches keep the expected totals constant.
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val readerErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val reader = new Thread(() => {
-      try while (!stop.get()) assert(totals() === want)
+      try while (!stop.get()) assert(totalsOf(ledger) === want)
       catch { case t: Throwable => readerErr.set(t) }
     })
-    // zero-row batch dirs (materialized schema — the churn sweeps the
-    // dir a lazy frame would re-read) keep the expected totals constant
     val zero = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      spark.read.parquet(s"$r/ledger/c1").schema)
+      TextIngest.ledgerTotals(spark, ledger).schema)
     reader.start()
     try (4L to 13L).foreach { i =>
-      zero.write.mode("overwrite").parquet(s"$r/ledger/b$i")
-      graft.streaming.TextIngest.ledgerCompact(spark, s"$r/ledger", upTo = i + 1)
+      IndexMaintenance.append(spark, ledger, Seq(TextIngest.ledgerTable -> zero),
+        mark = Some("churn" -> i))
+      TextIngest.ledgerRollup(spark, ledger)
     } finally { stop.set(true); reader.join(60000) }
     assert(readerErr.get() == null,
-      s"concurrent ledgerTotals failed during compaction churn: ${readerErr.get()}")
-    assert(dirs() === Seq("c13"), s"churn left uncovered dirs: ${dirs()}")
-    assert(totals() === want, "churn changed the ledger totals")
+      s"concurrent ledgerTotals failed during rollup churn: ${readerErr.get()}")
+    assert(committedFiles(ledger).size == 1 && countFiles(ledger) == committedFiles(ledger),
+      s"churn left more than one file: ${countFiles(ledger)}")
+    assert(totalsOf(ledger) === want, "churn changed the ledger totals")
   }
 
-  test("ledger rollup commit marker (r15): an uncommitted c dir never shadows the batches it claims; health + autopilot see and clear it") {
-    import spark.implicits._
-    val r = java.nio.file.Files.createTempDirectory("graft-ledger-marker").toString
-    def row(src: String, d: Long, t: Long, b: Long) = (src, d, t, b)
-    Seq(row("s1", 2L, 10L, -1L)).toDF("source", "n_docs", "n_tokens", "batch_id")
-      .coalesce(1).write.parquet(s"$r/ledger/seed")
-    Seq(row("s1", 1L, 5L, 0L)).toDF("source", "n_docs", "n_tokens", "batch_id")
-      .coalesce(1).write.parquet(s"$r/ledger/b0")
-    Seq(row("s2", 1L, 7L, 1L)).toDF("source", "n_docs", "n_tokens", "batch_id")
-      .coalesce(1).write.parquet(s"$r/ledger/b1")
-    def totals(): Seq[(String, Long, Long)] =
-      graft.streaming.TextIngest.ledgerTotals(spark, s"$r/ledger")
-        .collect().map(x => (x.getString(0), x.getLong(1), x.getLong(2))).sorted.toSeq
-    val want = Seq(("s1", 3L, 15L), ("s2", 1L, 7L))
-    assert(totals() === want)
-    // a crashed copy-rename's PARTIAL rollup: complete-looking rows at
-    // a mark that claims to cover b0/b1, but NO commit marker — the
-    // pre-r15 grammar adopted it as hwm and silently undercounted
-    Seq(row("s1", 1L, 1L, 1L)).toDF("source", "n_docs", "n_tokens", "batch_id")
-      .coalesce(1).write.parquet(s"$r/ledger/c1")
-    assert(totals() === want,
-      "an uncommitted rollup shadowed the live batch dirs — silent undercount")
-    // health names the debt: the garbage dir is counted, nothing live
-    // is lost, and no hwm is adopted
-    def health(): Map[String, Double] =
-      graft.streaming.TextIngest.ledgerHealth(spark, s"$r/ledger")
-        .collect().map(x => x.getString(0) -> x.getDouble(1)).toMap
-    val h = health()
+  test("ledger rollup: aged uncommitted files never count; health and the autopilot see and clear them; steady-state health runs no Spark job") {
+    val ledger = smallLedger("graft-ledger-orphan")
+    // a crashed writer's leftover: a copy of committed rows that no
+    // version names, older than the orphan retention
+    val orphan = plantCopy(ledger, "crashed")
+    MaintenanceSpec.age(orphan)
+    assert(totalsOf(ledger) === smallLedgerTotals, "an uncommitted file was counted")
+    // health names the debt; nothing live is lost, no rollup mark yet
+    val h = healthOf(ledger)
     assert(h("covered_garbage") == 1.0 && h("rollup_hwm") == -1.0 &&
       h("unrolled_batches") == 2.0 && h("live_parts") == 3.0 &&
       h("n_docs_total") == 4.0 && h("n_tokens_total") == 22.0 && h("n_sources") == 2.0,
-      s"health misread the torn state: $h")
-    // the autopilot detects the ledger family, fires on the garbage,
-    // and the rollup-all pass commits a REAL rollup + sweeps the junk
-    val dec = graft.ops.Autopilot.indexAutopilot(spark, s"$r/ledger").collect()
+      s"health misread the ledger: $h")
+    // the autopilot detects the ledger by its table, fires on the
+    // garbage, and its rollup deletes the orphan
+    val dec = graft.ops.Autopilot.indexAutopilot(spark, ledger).collect()
       .map(x => (x.getString(0), x.getString(1), x.getDouble(2), x.getString(4), x.getBoolean(5)))
     assert(dec.exists(d => d._1 == "ledger" && d._2 == "covered_garbage" &&
       d._3 == 1.0 && d._4 == "rollup" && d._5),
       s"autopilot did not fire the rollup on garbage debt: ${dec.toSeq}")
-    assert(totals() === want, "the autopilot rollup changed the totals")
-    val h2 = health()
+    assert(!java.nio.file.Files.exists(orphan), "the rollup left the aged orphan")
+    assert(totalsOf(ledger) === smallLedgerTotals, "the autopilot rollup changed the totals")
+    val h2 = healthOf(ledger)
     assert(h2("covered_garbage") == 0.0 && h2("rollup_hwm") == 1.0 &&
       h2("unrolled_batches") == 0.0 && h2("live_parts") == 1.0,
-      s"rollup-all did not converge the listing state: $h2")
-    // and the committed rollup dir carries the marker file
-    assert(new java.io.File(s"$r/ledger/c1",
-      graft.streaming.TextIngest.ledgerCommitMarker).exists(),
-      "the committed rollup is missing its commit marker")
-    // STEADY-STATE health is LISTING-ONLY (r16): the marker's payload
-    // carries the rolled-up per-source totals (persisted inside the
-    // _LEDGER_COMMITTED transaction), so with every live part under
-    // the rollup the whole report — totals included — executes ZERO
-    // Spark jobs. The sentinel job flushes the async listener bus:
-    // events are ordered, so a count of exactly 1 proves the health
-    // call contributed none.
+      s"the rollup did not converge the ledger state: $h2")
+    // STEADY-STATE health serves its totals from the rollup commit's
+    // props, so the whole report runs ZERO Spark jobs. The sentinel job
+    // flushes the async listener bus: events are ordered, so a count of
+    // exactly 1 proves the health call contributed none.
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -250,10 +244,10 @@ class TextIngestSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val h3 = health()
+      val h3 = healthOf(ledger)
       assert(h3("n_docs_total") == 4.0 && h3("n_tokens_total") == 22.0 &&
         h3("n_sources") == 2.0 && h3("rollup_hwm") == 1.0,
-        s"marker-served totals diverged from the rolled-up stats: $h3")
+        s"prop-served totals diverged from the rolled-up rows: $h3")
       // RDD sentinel: exactly ONE job by construction (an SQL count
       // under AQE materializes per-stage and posts two)
       spark.sparkContext.parallelize(Seq(1), 1).count()
@@ -262,107 +256,66 @@ class TextIngestSpec extends AnyFunSuite {
         Thread.sleep(50)
       assert(jobs.get() == 1,
         s"steady-state ledgerHealth ran ${jobs.get() - 1} Spark job(s) — " +
-        "totals must serve listing-only from the committed rollup marker")
+        "totals must serve from the rollup commit's props")
     } finally spark.sparkContext.removeSparkListener(listener)
     // a second autopilot pass is a no-op (nothing fires)
-    val dec2 = graft.ops.Autopilot.indexAutopilot(spark, s"$r/ledger").collect()
+    val dec2 = graft.ops.Autopilot.indexAutopilot(spark, ledger).collect()
     assert(dec2.forall(!_.getBoolean(5)), "a clean ledger re-fired the autopilot")
   }
 
-  test("ledger snapshot read (r15 review): a data-file-less live part is TORN (loud after patience), staging is workspace not garbage, crashed staging is swept") {
-    import spark.implicits._
-    val r = java.nio.file.Files.createTempDirectory("graft-ledger-torn").toString
-    Seq(("s1", 2L, 10L, -1L)).toDF("source", "n_docs", "n_tokens", "batch_id")
-      .coalesce(1).write.parquet(s"$r/ledger/seed")
-    Seq(("s1", 1L, 5L, 0L)).toDF("source", "n_docs", "n_tokens", "batch_id")
-      .coalesce(1).write.parquet(s"$r/ledger/b0")
-    // a crashed mid-overwrite b dir: Spark deleted the old files and
-    // died before the job committed — only an underscore entry remains.
-    // A non-recursive name fingerprint would read it as a STABLE empty
-    // listing (zero rows, no error) and silently undercount; the
-    // data-file rule must classify it TORN and fail loudly instead.
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$r/ledger/b1/_temporary"))
-    val e = intercept[IllegalStateException](
-      graft.streaming.TextIngest.ledgerTotals(spark, s"$r/ledger", patienceMs = 1200L))
-    assert(e.getMessage.contains("no data files"),
-      s"wrong failure for a torn live part: ${e.getMessage}")
-    // a `.cstage` under a LIVE maintenance lease is an in-flight
-    // compact's WORKSPACE: health must not page on it, and the
-    // autopilot must not fire a rollup into the running compact's
-    // lease because of it. The probe is the lease FILE's mtime (r16,
-    // every compact holds it heartbeated) — the staging DIRECTORY's
-    // own mtime is synthetic (commonly 0) on object stores and would
-    // misread every fresh in-flight compact as stale garbage.
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$r/ledger/.cstage"))
-    val lease = new java.io.File(s"$r/.ledger.lease")
-    assert(lease.createNewFile(), "could not plant the in-flight compact's lease")
-    // the dir's own mtime is IRRELEVANT now — even an mtime-0 dir (the
-    // S3A synthetic-status shape) must read as workspace under a live lease
-    assert(new java.io.File(s"$r/ledger/.cstage").setLastModified(0L))
-    val (_, unrolled, _, garbage) =
-      graft.streaming.TextIngest.ledgerListingStats(spark, s"$r/ledger")
-    assert(garbage == 0 && unrolled == 2,
-      s"staging under a live lease counted as reader-visible garbage: unrolled=$unrolled garbage=$garbage")
-    // ...but once the lease is a crashed holder's (stale mtime — the
-    // same signal withLeaseScope breaks leases on), the staging is a
-    // CRASHED compact's leftover, and it must surface as debt or an
-    // autopilot-only deployment would never collect it
-    assert(lease.setLastModified(
-      System.currentTimeMillis() - graft.ops.Lease.leaseStaleMs - 60000L))
-    val (_, _, _, garbage2) =
-      graft.streaming.TextIngest.ledgerListingStats(spark, s"$r/ledger")
-    assert(garbage2 == 1, s"staging with no live lease not counted as debt: $garbage2")
-    // the autopilot fires on it — and the rollup pass must REFUSE to
-    // absorb the still-torn b1 (rolling it up as zero rows would
-    // permanently drop batch 1 once the stream's retry rewrite lands
-    // below the new high-water mark) while its sweep collects the
-    // crashed staging. The decision log must SAY it refused (r16 —
-    // ADVICE: `performed` rows claiming absorbs that never ran hide
-    // persisting unrolled_batches debt).
-    val refusedDec = graft.ops.Autopilot.indexAutopilot(spark, s"$r/ledger").collect()
-      .filter(_.getString(0) == "ledger")
-      .map(x => (x.getString(1), x.getString(4), x.getBoolean(5)))
-    assert(refusedDec.nonEmpty && refusedDec.forall(_._2 == "rollup_refused_torn_part"),
-      s"refused rollup not reported in the decision log: ${refusedDec.toSeq}")
-    assert(!refusedDec.exists(d => d._1 == "unrolled_batches" && d._3),
-      s"a refused absorb read as performed: ${refusedDec.toSeq}")
-    assert(!new java.io.File(s"$r/ledger/.cstage").exists(),
-      "crashed staging dir survived the autopilot's sweep")
-    assert(!new java.io.File(s"$r/ledger").listFiles().exists(_.getName.startsWith("c")),
-      "the rollup absorbed a torn part as zero rows — batch 1 would be dropped forever")
-    // heal the torn dir (the stream's retry path): the next compact
-    // rolls up normally and totals are whole
-    Seq(("s2", 1L, 7L, 1L)).toDF("source", "n_docs", "n_tokens", "batch_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$r/ledger/b1")
-    graft.streaming.TextIngest.ledgerCompact(spark, s"$r/ledger", upTo = 2L)
-    assert(new java.io.File(s"$r/ledger/c1").exists(), "post-heal rollup did not run")
-    val got = graft.streaming.TextIngest.ledgerTotals(spark, s"$r/ledger")
-      .collect().map(x => (x.getString(0), x.getLong(1), x.getLong(2))).sorted.toSeq
-    assert(got === Seq(("s1", 3L, 15L), ("s2", 1L, 7L)))
+  test("ledger health: a live writer's young staged file is not debt and survives a rollup; a committed file gone missing fails totals loudly") {
+    val ledger = smallLedger("graft-ledger-staged")
+    // another process has staged its batch file and not yet committed:
+    // younger than the retention, it is that writer's, not garbage
+    val staged = plantCopy(ledger, "staged")
+    assert(healthOf(ledger)("covered_garbage") == 0.0, "a live writer's staged file counted as debt")
+    val dec = graft.ops.Autopilot.indexAutopilot(spark, ledger).collect()
+    assert(dec.forall(!_.getBoolean(5)), s"the autopilot fired on a live writer's staged file: ${dec.toSeq}")
+    TextIngest.ledgerRollup(spark, ledger)
+    assert(java.nio.file.Files.exists(staged), "the rollup deleted a live writer's staged file")
+    assert(totalsOf(ledger) === smallLedgerTotals, "an uncommitted file was counted")
+    // once past the retention it is a crashed writer's, and the next rollup deletes it
+    MaintenanceSpec.age(staged)
+    assert(healthOf(ledger)("covered_garbage") == 1.0, "an aged orphan was not reported")
+    TextIngest.ledgerRollup(spark, ledger)
+    assert(!java.nio.file.Files.exists(staged), "the rollup left the aged orphan")
+    // a committed file deleted by hand, with no newer commit, is damage:
+    // the read fails instead of returning a silent undercount
+    java.nio.file.Files.delete(
+      java.nio.file.Paths.get(ledger, TextIngest.ledgerTable, committedFiles(ledger).head))
+    intercept[Exception](totalsOf(ledger))
   }
 
-  test("token ledger cadence: alarm fires off the floor, and a 12-batch stream keeps the dir count bounded") {
-    // the wiring: alarmCadenceAt runs the compaction on the floor OR
-    // when the extra debt probe trips, and passes the batch id through
-    val fired = scala.collection.mutable.ArrayBuffer[Long]()
-    var debt = false
-    val cadence = graft.streaming.IngestDedup.alarmCadenceAt(spark, Seq.empty,
-      due = () => debt)(fired += _)
-    cadence(3L); assert(fired.isEmpty, "compaction ran with no floor and no debt")
-    debt = true; cadence(4L)
-    assert(fired.toSeq == Seq(4L), "debt alarm did not fire the compaction off the floor")
-    debt = false
+  test("token ledger cadence: the appended-batch alarm fires off the floor, and a 12-batch stream keeps the file count bounded") {
+    import spark.implicits._
+    // the wiring: the shared alarm cadence rolls up on the floor OR when
+    // the ledger's appended batch commits pass the floor
+    val ledger = s"${java.nio.file.Files.createTempDirectory("graft-ledger-debt")}/ledger"
+    val one = Seq(("s1", 1L, 1L)).toDF("source", "n_docs", "n_tokens").coalesce(1)
+    IndexMaintenance.replace(spark, ledger, Seq(TextIngest.ledgerTable -> one))
+    (0L until graft.streaming.IngestDedup.ingestCompactEvery).foreach(b =>
+      IndexMaintenance.append(spark, ledger, Seq(TextIngest.ledgerTable -> one), mark = Some("L" -> b)))
+    var fired = 0
+    val cadence = graft.streaming.IngestDedup.alarmCadence(spark, Seq(ledger)) {
+      fired += 1
+      TextIngest.ledgerRollup(spark, ledger)
+    }
+    cadence(3L); assert(fired == 0, "rollup ran with no floor and no debt")
+    IndexMaintenance.append(spark, ledger, Seq(TextIngest.ledgerTable -> one),
+      mark = Some("L" -> graft.streaming.IngestDedup.ingestCompactEvery.toLong))
+    cadence(4L); assert(fired == 1, "debt alarm did not fire the rollup off the floor")
+    cadence(4L); assert(fired == 1, "the debt alarm stayed latched after the rollup")
     cadence(graft.streaming.IngestDedup.ingestCompactEvery - 1L)
-    assert(fired.size == 2, "floor boundary did not fire the compaction")
+    assert(fired == 2, "floor boundary did not fire the rollup")
 
-    // end to end: 12 streamed batches cross the floor once; the live
-    // dir count afterwards is bounded by the cadence, not the stream
+    // end to end: 12 streamed batches cross the floor once; the ledger's
+    // file count afterwards is bounded by the cadence, not the stream
     // length, and totals still equal one whole-corpus encode
     val r = java.nio.file.Files.createTempDirectory("graft-ledger-alarm").toString
     val docs = Tables(spark, TestSpark.sf0001, "documents")
     val nB = 12
-    graft.ops.TextAnalysis.bpeModelWrite(spark, TestSpark.sf0001, s"$r/model")
-    val merges = graft.ops.TextAnalysis.bpeModelMerges(spark, s"$r/model")
+    TextAnalysis.bpeModelWrite(spark, TestSpark.sf0001, s"$r/model")
+    val merges = TextAnalysis.bpeModelMerges(spark, s"$r/model")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$r/landing"))
     (0 until nB).foreach { b =>
       val tmp = s"$r/stage_$b"
@@ -373,16 +326,14 @@ class TextIngestSpec extends AnyFunSuite {
           java.nio.file.Paths.get(s"$r/landing/batch_$b.parquet"))
       }
     }
-    graft.streaming.TextIngest.streamTokenLedgerToFiles(spark, s"$r/landing",
+    TextIngest.streamTokenLedgerToFiles(spark, s"$r/landing",
       s"$r/model", s"$r/ledger", s"$r/checkpoint")
-    val nDirs = new java.io.File(s"$r/ledger").listFiles().count(_.isDirectory)
-    assert(nDirs <= graft.streaming.IngestDedup.ingestCompactEvery,
-      s"$nB streamed batches left $nDirs ledger dirs — the cadence is not bounding the count")
-    val got = graft.streaming.TextIngest.ledgerTotals(spark, s"$r/ledger")
-      .collect().map(x => (x.getString(0), x.getLong(1), x.getLong(2))).sorted.toSeq
-    val want = graft.ops.TextAnalysis.bpeSourceCounts(docs, merges,
-        graft.ops.TextAnalysis.bpeModelApplyForm(spark, s"$r/model")).collect()
+    val nFiles = countFiles(s"$r/ledger").size
+    assert(nFiles <= graft.streaming.IngestDedup.ingestCompactEvery,
+      s"$nB streamed batches left $nFiles ledger files — the cadence is not bounding the count")
+    val want = TextAnalysis.bpeSourceCounts(docs, merges,
+        TextAnalysis.bpeModelApplyForm(spark, s"$r/model")).collect()
       .map(x => (x.getString(0), x.getLong(1), x.getLong(2))).sorted.toSeq
-    assert(got === want, "bounded-dir ledger totals diverged from the whole-corpus encode")
+    assert(totalsOf(s"$r/ledger") === want, "bounded-file ledger totals diverged from the whole-corpus encode")
   }
 }
