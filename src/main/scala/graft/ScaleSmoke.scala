@@ -451,7 +451,7 @@ object ScaleSmoke {
       noop(ops.TextAnalysis.textBm25Served(spark, stopIdx)))
     time("text_bm25_served BOUNDED (df-share cut, term dictionary)")(
       noop(ops.TextAnalysis.textBm25Served(spark, stopIdx,
-        maxDfShare = Some(ops.TextAnalysis.bm25MaxDfShare))))
+        bound = ops.TextAnalysis.Bound.DfShare(ops.TextAnalysis.bm25MaxDfShare))))
     // the claim, measured at its source: ROWS LEAVING THE POSTINGS SCAN
     // under each serve's exact pushed predicate. (Bytes alone can't
     // discriminate here: BM25 serving never reads the fat positions
@@ -524,7 +524,8 @@ object ScaleSmoke {
     ops.Artifacts.reset()
     val tMs0 = System.nanoTime()
     val msServe = time("text_bm25_served MAXSCORE (exact, contender re-scan, COLD decision)") {
-      ops.TextAnalysis.textBm25ServedMaxScore(spark, stopIdx, minMegaRows = 0L).collect().map(_.toSeq).toSeq
+      ops.TextAnalysis.textBm25Served(spark, stopIdx,
+        bound = ops.TextAnalysis.Bound.MaxScore(minMegaRows = 0L)).collect().map(_.toSeq).toSeq
     }
     val msServeSecs = (System.nanoTime() - tMs0) / 1e9
     // the steady-state serving shape: same index generation, decision
@@ -532,7 +533,8 @@ object ScaleSmoke {
     // query on a frozen index
     val tHit0 = System.nanoTime()
     val msServeHit = time("text_bm25_served MAXSCORE (decision MEMO HIT, same generation)") {
-      ops.TextAnalysis.textBm25ServedMaxScore(spark, stopIdx, minMegaRows = 0L).collect().map(_.toSeq).toSeq
+      ops.TextAnalysis.textBm25Served(spark, stopIdx,
+        bound = ops.TextAnalysis.Bound.MaxScore(minMegaRows = 0L)).collect().map(_.toSeq).toSeq
     }
     val msHitSecs = (System.nanoTime() - tHit0) / 1e9
     val tUn0 = System.nanoTime()
@@ -914,8 +916,8 @@ object ScaleSmoke {
     time("text_bm25_served after compact") {
       ops.TextAnalysis.textBm25Served(spark, s"$troot/index").collect()
     }
-    val statsDocs = spark.read.parquet(s"$troot/index/stats")
-      .collect().head.getLong(0)
+    val statsDocs = ops.TextAnalysis.corpusStats(
+      ops.IndexMaintenance.snapshot(spark, s"$troot/index"))._1
     say(f"  -> grown lexical index: $grownDocs docs " +
       f"(${(nDocsT / 2) / math.max(0.1, tIngestSecs)}%.0f docs/s through the fold), " +
       s"post-compact stats n_docs=$statsDocs")

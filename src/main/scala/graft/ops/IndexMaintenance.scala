@@ -27,16 +27,17 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * ACTIONS. A version file is JSON lines, one action per line:
   *  - `add` — a data file: path relative to the directory, table, size,
   *    the SEQUENCE its rows are valid from (the committing version for
-  *    an append, 0 for a build/compaction/retrain output), and the
-  *    table schema;
+  *    an append, [[baseSeq]] — below every version — for a
+  *    build/compaction/retrain output), and the table schema;
   *  - `remove` — a data file leaves its table;
   *  - `tombstone` — an id of a table is deleted as of this version: it
   *    masks the id's rows in files whose sequence is BELOW the version,
   *    so a later append of the same id serves;
   *  - `consume` — a rewrite dropped a tombstone's rows physically;
   *  - `batch` — the high-water mark of a streaming lineage's batch ids;
-  *  - `prop` — a small `table.key` fact (bloom counters); a rewrite of
-  *    the table drops the facts it does not restate.
+  *  - `prop` — a small `table.key` fact (bloom counters, a text
+  *    index's corpus statistics); a rewrite of the table drops the
+  *    facts it does not restate.
   *
   * COMMIT RULE. A write stages its parquet files under fresh names,
   * refreshes their mtimes (failing loudly if one is gone), then creates
@@ -75,6 +76,10 @@ object IndexMaintenance {
   /** Target output file size. 128 MB ≈ one HDFS block / one scan task
     * per file — the conventional operating point. */
   val targetFileBytes: Long = 128L * 1024 * 1024
+
+  /** The sequence of a build/compaction/retrain output: below every
+    * version, so an append — even at version 0 — is always above it. */
+  val baseSeq: Long = -1L
 
   /** A checkpoint is written at every positive version divisible by this. */
   val checkpointInterval: Long = 10L
@@ -134,7 +139,7 @@ object IndexMaintenance {
 
     /** Distinct append commits since the table's last rewrite. */
     def appendedBatches(table: String): Int =
-      filesOf(table).map(_.seq).filter(_ > 0).distinct.size
+      filesOf(table).map(_.seq).filter(_ > baseSeq).distinct.size
 
     def batchSeen(lineage: String, batchId: Long): Boolean =
       batches.get(lineage).exists(_ >= batchId)
@@ -143,7 +148,7 @@ object IndexMaintenance {
     def generation: String = s"$version:$stamp"
 
     /** The table's rows as of this snapshot, no tombstone mask — for
-      * tables without an id column (metadata rows, stats, sinks). */
+      * tables without an id column (metadata rows, dictionaries, sinks). */
     def read(s: SparkSession, table: String): DataFrame = frame(s, table, filesOf(table))
 
     /** The table's rows minus those a pending tombstone masks. */
@@ -153,7 +158,7 @@ object IndexMaintenance {
     /** [[scan]] over the appended TAIL only (files landed since the
       * last rewrite); None when there is none. */
     def tail(s: SparkSession, table: String, idCol: String): Option[DataFrame] = {
-      val t = filesOf(table).filter(_.seq > 0)
+      val t = filesOf(table).filter(_.seq > baseSeq)
       if (t.isEmpty) None else Some(masked(s, table, t, idCol))
     }
 
@@ -332,7 +337,7 @@ object IndexMaintenance {
     locks.computeIfAbsent(root.toString, _ => new Object).synchronized(body)
 
   /** A staged file: written under its final name, not yet committed.
-    * `base` files carry sequence 0, appended ones their version. */
+    * `base` files carry [[baseSeq]], appended ones their version. */
   private final case class Staged(path: String, table: String, size: Long,
       schema: String, base: Boolean)
 
@@ -395,7 +400,7 @@ object IndexMaintenance {
       val v = snap.version + 1
       val lines =
         a.adds.map(st => addAction(DataFile(st.path, st.table, st.size,
-          if (st.base) 0L else v, st.schema))) ++
+          if (st.base) baseSeq else v, st.schema))) ++
         removes.map(r => action("remove", "path" -> r.path)) ++
         a.deletes.map { case (t, id) => tombAction("tombstone", Tombstone(t, id, v)) } ++
         a.replaced.toSeq.flatMap(read.tombstonesOf).map(tombAction("consume", _)) ++

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -78,14 +78,14 @@ object Retrieval {
     * alone: dl is the per-doc tf sum (≡ token count — tokenize runs
     * ONCE, and the served form never tokenizes at all), df/n_docs/avgdl
     * follow from the same grouped frame. The SERVED form passes
-    * `doclenStats` (the persisted doc-values table + its stats,
+    * `doclenStats` (the persisted doc-values table + its statistics,
     * [[TextAnalysis.textIndexDoclenStats]]) instead: identical longs by
     * the index writer's construction, one narrow table scan instead of
     * a corpus-wide posting aggregation, and — decisively — the SAME
-    * source frames its MaxScore twin prices its bounds against. */
+    * sources its MaxScore form prices its bounds against. */
   private[graft] def lexRanksOver(s: SparkSession, dir: String, postings: DataFrame,
       bannedTerms: Seq[String] = Seq.empty,
-      doclenStats: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+      doclenStats: Option[(DataFrame, DataFrame => DataFrame)] = None): DataFrame = {
     // dl/avgdl/df are WHOLE-CORPUS statistics and never shrink under
     // the df-share bound — only the scoring join excludes the banned
     // head, so a stopword slot contributes 0 without re-shaping every
@@ -94,39 +94,42 @@ object Retrieval {
     val doclen = doclenStats.fold(
       postings.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))(_._1)
     val dfr = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = doclenStats.fold(
-      doclen.agg(count(lit(1)).as("n_docs"),
-        (sum(col("dl")).cast("double") / count(lit(1)).cast("double")).as("avgdl")))(_._2)
+    val withStats = doclenStats.fold(TextAnalysis.withLiveStats(doclen) _)(_._2)
     val scoring =
       if (bannedTerms.isEmpty) postings
       else postings.filter(!col("term").isin(bannedTerms: _*))
-    val slots = 1 to hybridQueryTerms
-    val pivots = slots.flatMap { i =>
-      Seq(sum(when(col("pos") === i, col("tf"))).as(s"tf_$i"),
-        max(when(col("pos") === i, col("df"))).as(s"df_$i"))
-    }
+    val pivots = slotPivots("", "df")
     val piv = hybridQueryTermsOf(s, dir)
       .join(scoring, col("qt") === col("term"))
       .join(dfr, "term")
       .groupBy(col("q_id"), col("doc_id"))
       .agg(pivots.head, pivots.tail: _*)
-    val contrib = slots.map { i =>
-      val idf = TextAnalysis.bm25Idf(col(s"df_$i"), col("n_docs").cast("double"))
-      val tf = col(s"tf_$i").cast("double")
-      coalesce(idf * (tf * lit(TextAnalysis.bm25K1 + 1.0)) /
-        (tf + lit(TextAnalysis.bm25K1) * (lit(1.0 - TextAnalysis.bm25B) +
-          lit(TextAnalysis.bm25B) * col("dl").cast("double") / col("avgdl"))),
-        lit(0.0))
-    }
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("doc_id"))
-    piv
-      .join(doclen, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("score", round(contrib.reduce(_ + _), 6))
-      .withColumn("lex_rk", row_number().over(w).cast("long"))
+    lexTopK(withStats(piv.join(doclen, "doc_id")), i => col(s"tf_$i"), i => col(s"df_$i"))
+  }
+
+  /** Per-query lexical ranks (q_id, doc_id, lex_rk ≤ bm25TopK) of
+    * scored rows: the 6-decimal [[slotScore]], ties broken by doc_id. */
+  private def lexTopK(scored: DataFrame, tf: Int => Column, df: Int => Column): DataFrame =
+    scored.withColumn("score", round(slotScore(tf, df), 6))
+      .withColumn("lex_rk", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("score").desc, col("doc_id"))).cast("long"))
       .filter(col("lex_rk") <= TextAnalysis.bm25TopK)
       .select(col("q_id"), col("doc_id"), col("lex_rk"))
-  }
+
+  /** Per-slot pivot aggregates over (pos, tf, `dfCol`) rows:
+    * `<prefix>tf_i` sums the slot's tf, `<prefix>df_i` carries its df. */
+  private def slotPivots(prefix: String, dfCol: String): Seq[Column] =
+    (1 to hybridQueryTerms).flatMap { i =>
+      Seq(sum(when(col("pos") === i, col("tf"))).as(s"${prefix}tf_$i"),
+        max(when(col("pos") === i, col(dfCol))).as(s"${prefix}df_$i"))
+    }
+
+  /** The fixed-slot lexical score: the slots' BM25 contributions
+    * ([[TextAnalysis.bm25Contrib]]) summed in slot order, an absent slot
+    * contributing 0 — one expression for every hybrid scorer. */
+  private def slotScore(tf: Int => Column, df: Int => Column): Column =
+    (1 to hybridQueryTerms).map(i =>
+      coalesce(TextAnalysis.bm25Contrib(tf(i), df(i)), lit(0.0))).reduce(_ + _)
 
   /** Fused ranking over the stride query set: q_id, per-query fused
     * rank, doc_id, the two per-list ranks (null when the doc is absent
@@ -163,82 +166,75 @@ object Retrieval {
     }
   }
 
-  /** The BOUNDED served hybrid as a registered, oracled query:
-    * [[searchHybridRrfServed]] with the df-share cut at
-    * [[TextAnalysis.bm25MaxDfShare]], plus per-query-slot `act_i` flags
-    * (1 = the slot's term survives the bound, 0 = banned stopword head,
-    * its lexical contribution zeroed) — the same visible-contract
-    * pattern as `text_bm25_served_bounded`, extended to the hybrid's
-    * dynamic per-query terms. The flags come from the SAME persisted
-    * term dictionary the serve's anti-filter reads, and the oracle
-    * recomputes both the cut and the flags from corpus statistics. */
-  def searchHybridRrfServedBounded(s: SparkSession, dir: String): DataFrame = {
-    val idxDir = TextAnalysis.textIndexFor(s, dir)
-    // ONE banned-head resolution, plumbed through — the serve used to
-    // recompute it inside the maxDfShare plumbing (r12 verdict)
-    val banned = TextAnalysis.bannedTerms(s, idxDir, TextAnalysis.bm25MaxDfShare)
-    val fused = searchHybridRrfServedWith(s, dir, idxDir, banned)
-    val actCols = (1 to hybridQueryTerms).map { i =>
-      max(when(col("pos") === i,
-        when(if (banned.isEmpty) lit(false) else col("qt").isin(banned: _*), 0L)
-          .otherwise(1L))).as(s"act_$i")
-    }
-    val acts = hybridQueryTermsOf(s, dir)
-      .groupBy(col("q_id")).agg(actCols.head, actCols.tail: _*)
-    // gated, not forced: acts grows with the query set
-    // (corpus/queryStride rows), so an unconditional hint was the same
-    // growing-frame-forced-broadcast pattern r12 gated on the IVF probe
-    // re-join — past the threshold, the planner/AQE decide
-    fused.join(JoinHints.broadcastIfSmall(acts, 1.0 / Similarity.queryStride),
-        Seq("q_id"), "left")
-      .select(col("q_id") +: col("rk") +: col("doc_id") +: col("lex_rk") +:
-        col("sem_rk") +: col("rrf") +:
-        (1 to hybridQueryTerms).map(i => coalesce(col(s"act_$i"), lit(1L)).as(s"act_$i")): _*)
-      .orderBy(col("q_id"), col("rk"))
-  }
-
   /** SERVED hybrid retrieval: the lexical side reads the PERSISTED
-    * posting table (the shared text-index memo — same artifact the
-    * BM25/phrase serving family reads) instead of re-tokenizing the
-    * corpus; tombstoned docs are filtered like every index read. The
-    * posting rows are the identical (doc_id, term, tf) integers the
-    * scan derives, so the served form shares the scan form's oracle
-    * and is byte-identical to it (pinned in `OperatorSpec`). At corpus
-    * scale this is the difference between one tokenize pass per query
-    * set and none. */
+    * posting table (the shared text-index memo) instead of
+    * re-tokenizing the corpus; tombstoned docs are filtered like every
+    * index read. The posting rows are the identical (doc_id, term, tf)
+    * integers the scan derives, so the unbounded form shares the scan
+    * form's oracle and is byte-identical to it (pinned in
+    * `OperatorSpec`).
+    *
+    * `bound` picks the lexical read:
+    *  - [[TextAnalysis.Bound.DfShare]]: the query terms are per-query
+    *    slots, so the banned head (resolved once) is an anti-filter on
+    *    the scoring postings — a stopword slot contributes 0 instead of
+    *    dragging an O(corpus) posting list through the pivot join. The
+    *    result carries per-slot `act_i` flags (0 = banned) from that
+    *    same head, which the oracle recomputes from corpus statistics.
+    *  - [[TextAnalysis.Bound.MaxScore]]: per-query MaxScore
+    *    ([[hybridMaxScoreLex]]), result-identical to the unbounded serve
+    *    (every uncertain query falls back individually), so it shares
+    *    that oracle. Its `minMegaRows` is not read.
+    *
+    * The lex ranks are memoized per index generation, materialised
+    * inside the build ([[Artifacts.frameAtGeneration]]), so a returned
+    * frame holds the index state it was built at however late it is
+    * consumed; any append/compact/delete moves the generation (pinned
+    * in `BoundedServeSpec`). */
   def searchHybridRrfServed(s: SparkSession, dir: String,
-      maxDfShare: Option[Double] = None): DataFrame = {
+      bound: TextAnalysis.Bound = TextAnalysis.Bound.Unbounded): DataFrame = {
+    import TextAnalysis.Bound
     val idxDir = TextAnalysis.textIndexFor(s, dir)
-    val banned = maxDfShare.fold(Seq.empty[String])(TextAnalysis.bannedTerms(s, idxDir, _))
-    searchHybridRrfServedWith(s, dir, idxDir, banned)
-  }
-
-  /** [[searchHybridRrfServed]] with the banned head already resolved —
-    * the shared body callers with their own dictionary read plumb
-    * through instead of recomputing the (capped, but non-free) collect. */
-  private def searchHybridRrfServedWith(s: SparkSession, dir: String,
-      idxDir: String, banned: Seq[String]): DataFrame = {
-    // BOUNDED form: the hybrid's query terms are dynamic (per-query
-    // slots), so the mega-posting guard is an anti-filter against the
-    // term dictionary's banned head rather than a positive pushed IN —
-    // a stopword slot contributes 0 instead of dragging an O(corpus)
-    // posting list through the per-(query, doc) pivot join. Zipf keeps
-    // the banned list a broadcast-sized literal.
-    // The served lex ranks are memoized per index generation under the
-    // banned head they were cut with: per-query-top-k bounded,
-    // invalidated by any append/compact/delete of the text index
-    // (pinned in BoundedServeSpec — the appended-doc arm re-derives
-    // through exactly this generation). The entry is a DISTRIBUTED
-    // cached frame, materialised inside its build, so it holds the
-    // index state it was stored under however late it is consumed.
-    val lex = Artifacts.frameAtGeneration(s, idxDir,
-        s"hybrid-lex-served|${banned.sorted.mkString("\u0001")}|$dir") {
-      val postings = IndexMaintenance.scan(s, idxDir, "postings", "doc_id")
-        .select(col("doc_id"), col("term"), col("tf"))
-      lexRanksOver(s, dir, postings, banned,
-        doclenStats = Some(TextAnalysis.textIndexDoclenStats(s, idxDir)))
+    def servedLex(banned: Seq[String]): DataFrame =
+      Artifacts.frameAtGeneration(s, idxDir,
+          s"hybrid-lex-served|${banned.sorted.mkString("\u0001")}|$dir") {
+        val postings = IndexMaintenance.scan(s, idxDir, "postings", "doc_id")
+          .select(col("doc_id"), col("term"), col("tf"))
+        lexRanksOver(s, dir, postings, banned,
+          doclenStats = Some(TextAnalysis.textIndexDoclenStats(s, idxDir)))
+      }
+    val label = TextAnalysis.serveLabel("search_hybrid_rrf_served", bound,
+      IndexMaintenance.snapshot(s, idxDir))
+    IndexMaintenance.labeledJob(s, label) {
+      bound match {
+        case Bound.Unbounded => fuse(s, dir, servedLex(Nil))
+        case Bound.MaxScore(share, _) =>
+          Artifacts.frameOptAtGeneration(s, idxDir, s"hybrid-maxscore-lex|$share|$dir")(
+            hybridMaxScoreLex(s, dir, idxDir, share).map(_._1)) match {
+            case None => fuse(s, dir, servedLex(Nil))
+            case Some(lex) => fuse(s, dir, lex)
+          }
+        case Bound.DfShare(share) =>
+          val banned = TextAnalysis.bannedTerms(s, idxDir, share)
+          val actCols = (1 to hybridQueryTerms).map { i =>
+            max(when(col("pos") === i,
+              when(if (banned.isEmpty) lit(false) else col("qt").isin(banned: _*), 0L)
+                .otherwise(1L))).as(s"act_$i")
+          }
+          val acts = hybridQueryTermsOf(s, dir)
+            .groupBy(col("q_id")).agg(actCols.head, actCols.tail: _*)
+          // gated, not forced: acts grows with the query set
+          // (corpus/queryStride rows), so past the threshold the
+          // planner/AQE decide
+          fuse(s, dir, servedLex(banned))
+            .join(JoinHints.broadcastIfSmall(acts, 1.0 / Similarity.queryStride),
+              Seq("q_id"), "left")
+            .select(col("q_id") +: col("rk") +: col("doc_id") +: col("lex_rk") +:
+              col("sem_rk") +: col("rrf") +:
+              (1 to hybridQueryTerms).map(i => coalesce(col(s"act_$i"), lit(1L)).as(s"act_$i")): _*)
+            .orderBy(col("q_id"), col("rk"))
+      }
     }
-    fuse(s, dir, lex)
   }
 
   /** One 6-decimal rounding quantum — see
@@ -275,15 +271,14 @@ object Retrieval {
     *  5. merged cheap+mega slot frequencies re-score through the
     *     IDENTICAL fixed-slot expression and ranking tail.
     *
-    * SEGMENT MODEL (round 13 — the r12 fixed-query model, per query):
-    * an appended tail no longer forces the unbounded serve. The
-    * dictionary exactly describes the COMPACTED segment; the tail's
+    * SEGMENT MODEL (the fixed-query model, per query): an appended
+    * tail does not force the unbounded serve. The dictionary exactly describes the COMPACTED segment; the tail's
     * query-term df lands as an in-plan per-term count joined onto the
     * slots (live df = dict + tail, equal to the posting-row count the
     * unbounded serve derives), dl/n_docs/avgdl come from the SAME
     * [[TextAnalysis.textIndexDoclenStats]] frames the unbounded serve
-    * scores with (frozen 1-row stats when provably equal, the live
-    * doclen aggregate under a tail), and every tail doc matching a
+    * scores with (the frozen statistics facts when provably equal, the
+    * live doclen aggregate under a tail), and every tail doc matching a
     * mega term joins its query's contenders BY INCLUSION (tail docs
     * have no dictionary bound). Dictionary `ub` bounds BASE docs only,
     * and — unlike the fixed-query serve, whose frozen-stats scoring
@@ -296,10 +291,10 @@ object Retrieval {
     * tail-less index, and the ±1-ulp division noise sits 9 orders
     * under the ε the cut is already slackened by).
     *
-    * TOMBSTONES (round 13, with the fixed-query form): pending
-    * takedowns no longer force the unbounded serve either. Every
+    * TOMBSTONES (as in the fixed-query form): pending
+    * takedowns do not force the unbounded serve either. Every
     * posting read here is tombstone-masked (free when none pending),
-    * the shared doclen/stats frames already mask, and the per-slot
+    * the shared doclen source already masks, and the per-slot
     * live df switches from dictionary+tail arithmetic to ONE masked
     * per-term posting count — the same relation the unbounded serve's
     * dfr aggregates, so equality holds by shared source. That count
@@ -319,9 +314,8 @@ object Retrieval {
     * (q_id, mode)) — the decisions feed the ScaleSmoke accounting and
     * the BoundedServeSpec engagement pin. Like the fixed-query form,
     * the returned frame SNAPSHOTS decision-time index state (tail file
-    * list, banned head) — collect promptly when ingest is concurrent,
-    * or serve through [[searchHybridRrfServedMaxScoreNow]], which
-    * materializes before returning. */
+    * list, banned head) — collect promptly when ingest is concurrent;
+    * the served form memoizes it materialised per index generation. */
   private[graft] def hybridMaxScoreLex(s: SparkSession, dir: String,
       idxDir: String,
       maxDfShare: Double = TextAnalysis.bm25MaxDfShare): Option[(DataFrame, DataFrame)] = {
@@ -332,14 +326,12 @@ object Retrieval {
     val banned = scala.util.Try(
       TextAnalysis.bannedTerms(s, idxDir, maxDfShare)).getOrElse(return None)
     if (banned.isEmpty) return None // no mega posting to avoid
-    val st = snap.read(s, "stats").head()
-    val nDocsFrozen = st.getLong(0)
-    val slots = 1 to hybridQueryTerms
+    val nDocsFrozen = TextAnalysis.corpusStats(snap)._1
     val k = TextAnalysis.bm25TopK.toLong
     val tail = snap.tail(s, "postings", "doc_id")
-    // dl + live 1-row stats — the exact frames the unbounded serve
+    // dl + live statistics — the exact sources the unbounded serve
     // scores with (consistency by shared source, not by precondition)
-    val (doclen, statsLive) = TextAnalysis.textIndexDoclenStats(s, idxDir)
+    val (doclen, withStats) = TextAnalysis.textIndexDoclenStats(s, idxDir)
 
     // per-query slots classified against the dictionary (terms absent
     // from the vocabulary: df 0, ub 0, cheap — they match nothing in
@@ -377,10 +369,9 @@ object Retrieval {
       })
       .withColumn("is_mega", col("dict_df").cast("double") >
         lit(maxDfShare) * lit(nDocsFrozen.toDouble))
-    val ubMega = qslots
-      .crossJoin(broadcast(statsLive.select(col("n_docs").as("_n_live"))))
+    val ubMega = withStats(qslots)
       .withColumn("ub_adj", col("ub") * greatest(lit(1.0),
-        TextAnalysis.bm25Idf(col("df"), col("_n_live").cast("double")) /
+        TextAnalysis.bm25Idf(col("df"), col("n_docs").cast("double")) /
           TextAnalysis.bm25Idf(col("dict_df"), lit(nDocsFrozen.toDouble))))
       .groupBy(col("q_id")).agg(
         sum(when(col("is_mega"), col("ub_adj")).otherwise(lit(0.0))).as("ub_mega"),
@@ -393,30 +384,16 @@ object Retrieval {
     val cheapPost = maskedPostings
       .filter(!col("term").isin(banned: _*))
       .select(col("doc_id"), col("term"), col("tf"))
-    val cpivots = slots.flatMap { i =>
-      Seq(sum(when(col("pos") === i, col("tf"))).as(s"ctf_$i"),
-        max(when(col("pos") === i, col("df"))).as(s"cdf_$i"))
-    }
+    val cpivots = slotPivots("c", "df")
     val cpiv = qslots.filter(!col("is_mega"))
       .join(cheapPost, col("qt") === col("term"))
       .groupBy(col("q_id"), col("doc_id"))
       .agg(cpivots.head, cpivots.tail: _*)
-    // the per-slot contribution — the IDENTICAL expression the
-    // unbounded lexRanksOver evaluates over the identical live df and
-    // the identical statsLive columns, so the merged re-score below is
-    // bit-for-bit the unbounded score
-    def contrib(tfC: Int => org.apache.spark.sql.Column,
-        dfC: Int => org.apache.spark.sql.Column) = slots.map { i =>
-      val idf = TextAnalysis.bm25Idf(dfC(i), col("n_docs").cast("double"))
-      val tf = tfC(i).cast("double")
-      coalesce(idf * (tf * lit(TextAnalysis.bm25K1 + 1.0)) /
-        (tf + lit(TextAnalysis.bm25K1) * (lit(1.0 - TextAnalysis.bm25B) +
-          lit(TextAnalysis.bm25B) * col("dl").cast("double") / col("avgdl"))),
-        lit(0.0))
-    }
-    val eScored = cpiv.join(doclen, "doc_id")
-      .crossJoin(broadcast(statsLive))
-      .withColumn("e", contrib(i => col(s"ctf_$i"), i => col(s"cdf_$i")).reduce(_ + _))
+    // slotScore is the IDENTICAL expression the unbounded lexRanksOver
+    // evaluates, over the identical live df and statistics columns, so
+    // the merged re-score below is bit-for-bit the unbounded score
+    val eScored = withStats(cpiv.join(doclen, "doc_id"))
+      .withColumn("e", slotScore(i => col(s"ctf_$i"), i => col(s"cdf_$i")))
     val wq = Window.partitionBy(col("q_id")).orderBy(col("e").desc, col("doc_id"))
     val floors = eScored
       .withColumn("crk", row_number().over(wq))
@@ -458,7 +435,7 @@ object Retrieval {
     }
     val cheapFinal = cheapKept
       .select(col("q_id") +: col("doc_id") +:
-        slots.flatMap(i => Seq(col(s"ctf_$i"), col(s"cdf_$i"))): _*)
+        (1 to hybridQueryTerms).flatMap(i => Seq(col(s"ctf_$i"), col(s"cdf_$i"))): _*)
     // the pruned arm's contender pairs for the mega re-read: the kept
     // cheap pairs plus the tail-mega inclusions that matched no cheap
     // slot at all (distinct — a doubled pair would double its tf sum)
@@ -480,10 +457,7 @@ object Retrieval {
     val mpFallback = megaSlots
       .join(qdec.filter(col("mode") === "fallback").select(col("q_id")), "q_id")
       .join(megaPost, "qt")
-    val mpivots = slots.flatMap { i =>
-      Seq(sum(when(col("pos") === i, col("tf"))).as(s"mtf_$i"),
-        max(when(col("pos") === i, col("mdf"))).as(s"mdf_$i"))
-    }
+    val mpivots = slotPivots("m", "mdf")
     val mpiv = mpPruned.select(col("q_id"), col("doc_id"), col("pos"), col("mdf"), col("tf"))
       .union(mpFallback.select(col("q_id"), col("doc_id"), col("pos"), col("mdf"), col("tf")))
       .groupBy(col("q_id"), col("doc_id"))
@@ -492,63 +466,11 @@ object Retrieval {
     // merge (slots are disjoint per query: a slot is cheap or mega,
     // never both) and re-score through the identical expression + tail
     val merged = cheapFinal.join(mpiv, Seq("q_id", "doc_id"), "full_outer")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("doc_id"))
-    val lex = merged.join(doclen, "doc_id")
-      .crossJoin(broadcast(statsLive))
-      .withColumn("score", round(contrib(
-        i => coalesce(col(s"ctf_$i"), col(s"mtf_$i")),
-        i => coalesce(col(s"cdf_$i"), col(s"mdf_$i"))).reduce(_ + _), 6))
-      .withColumn("lex_rk", row_number().over(w).cast("long"))
-      .filter(col("lex_rk") <= TextAnalysis.bm25TopK)
-      .select(col("q_id"), col("doc_id"), col("lex_rk"))
+    val lex = lexTopK(withStats(merged.join(doclen, "doc_id")),
+      i => coalesce(col(s"ctf_$i"), col(s"mtf_$i")),
+      i => coalesce(col(s"cdf_$i"), col(s"mdf_$i")))
     Some((lex, qdec.select(col("q_id"), col("mode"))))
   }
-
-  /** EXACT bounded served hybrid — per-query MaxScore over the
-    * persisted index. Result-identical to [[searchHybridRrfServed]] on
-    * EVERY corpus (pruning removes only provably-sub-top-k docs; every
-    * uncertain query individually falls back), so it shares that
-    * oracle — at the DEFAULT cut no corpus term crosses, so that
-    * registered run takes the fallback arm, while the `_lowcut` twin
-    * (a cut the corpus does cross) puts per-query PRUNED serving under
-    * the same oracle; the pruning arms are additionally pinned by
-    * `BoundedServeSpec` and measured by ScaleSmoke.
-    * This closes the hybrid half of the bounded-serving story: where
-    * `search_hybrid_rrf_served_bounded` documents a semantic CHANGE
-    * (banned slots contribute 0), this keeps exact semantics at
-    * bounded cost. */
-  def searchHybridRrfServedMaxScore(s: SparkSession, dir: String,
-      maxDfShare: Double = TextAnalysis.bm25MaxDfShare): DataFrame = {
-    val idxDir = TextAnalysis.textIndexFor(s, dir)
-    // MEMOIZED per index generation: the per-query decision AND its
-    // pruned lexical ranks are a pure function of the frozen index +
-    // corpus + cut, and the lex frame is per-query-top-k BOUNDED — so
-    // the whole lexical half is derived once per index generation
-    // ([[Artifacts.frameOptAtGeneration]]) and served until an append/
-    // compact/delete moves it (pinned in `BoundedServeSpec`). The
-    // frame is materialised inside the build, so a caller holding the
-    // result across concurrent ingest still reads the decision-time
-    // index state (pinned there too). The fusion below re-evaluates per
-    // call (the semantic side has its own index).
-    val lexSnap = Artifacts.frameOptAtGeneration(s, idxDir,
-        s"hybrid-maxscore-lex|$maxDfShare|$dir")(
-      hybridMaxScoreLex(s, dir, idxDir, maxDfShare).map(_._1))
-    lexSnap match {
-      case None => searchHybridRrfServed(s, dir)
-      case Some(lex) => fuse(s, dir, lex)
-    }
-  }
-
-  /** PER-SERVE SNAPSHOT form of [[searchHybridRrfServedMaxScore]] —
-    * the hybrid half of the snapshot-race closure
-    * ([[TextAnalysis.textBm25ServedMaxScoreNow]] is the fixed-query
-    * half): the per-query decisions, pruned re-scores, and fusion all
-    * evaluate before this returns (per-query-top-k-bounded output), so
-    * the returned local relation is pinned to the decision-time index
-    * state no matter how late it is consumed. */
-  def searchHybridRrfServedMaxScoreNow(s: SparkSession, dir: String,
-      maxDfShare: Double = TextAnalysis.bm25MaxDfShare): DataFrame =
-    TextAnalysis.materializedNow(s, searchHybridRrfServedMaxScore(s, dir, maxDfShare))
 
   /** The fusion tail shared by the scan and served forms. */
   private def fuse(s: SparkSession, dir: String, lex: DataFrame): DataFrame = {
@@ -567,56 +489,31 @@ object Retrieval {
       .orderBy(col("q_id"), col("rk"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "search_hybrid_rrf" -> searchHybridRrf _,
-    "search_hybrid_rrf_served" -> ((s: org.apache.spark.sql.SparkSession, d: String) => searchHybridRrfServed(s, d)),
-    "search_hybrid_rrf_served_bounded" -> (searchHybridRrfServedBounded _),
-    "search_hybrid_rrf_served_maxscore" ->
-      ((s: org.apache.spark.sql.SparkSession, d: String) => searchHybridRrfServedMaxScore(s, d)),
-    // the lowcut twin at TextAnalysis.bm25LowDfShare — a cut the corpus
-    // distribution crosses, so per-query PRUNED serving (cheap floor,
-    // contender-bounded mega re-reads) executes under the oracle at
-    // sf0.01+ instead of only the fallback arm; exact at any cut, so it
-    // shares the unbounded serve's oracle
-    "search_hybrid_rrf_served_maxscore_lowcut" ->
-      ((s: org.apache.spark.sql.SparkSession, d: String) =>
-        searchHybridRrfServedMaxScore(s, d, TextAnalysis.bm25LowDfShare)),
-    // the PER-SERVE SNAPSHOT form on the per-round gate (round 15):
-    // lowcut so what materializes is the ENGAGED per-query pruned
-    // fusion, pinned to decision-time index state — the path a
-    // deployment holds across concurrent ingest. Identical rows to the
-    // unbounded serve by MaxScore exactness + materialization, so it
-    // shares the oracle.
-    "search_hybrid_rrf_served_maxscore_now" ->
-      ((s: org.apache.spark.sql.SparkSession, d: String) =>
-        searchHybridRrfServedMaxScoreNow(s, d, TextAnalysis.bm25LowDfShare))
-  )
+  /** The served hybrid family's registry table: one row per
+    * [[TextAnalysis.servedVariants]] entry. The unbounded and MaxScore
+    * rows read identical (doc_id, term, tf) integers from the persisted
+    * postings and are result-identical to each other, so they share the
+    * scan form's oracle; the df-share row's oracle restates the cut as
+    * a banned-term anti filter with per-slot act flags recomputed from
+    * the same corpus statistics. */
+  private lazy val servedRows = TextAnalysis.servedRows("search_hybrid_rrf_served", {
+    case TextAnalysis.Bound.DfShare(share) => hybridOracleSqlOf(Some(share))
+    case _ => hybridOracleSql
+  })
 
-  private val tokSql =
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map("search_hybrid_rrf" -> (searchHybridRrf _)) ++
+      servedRows.map(r => r.key -> r.query(searchHybridRrfServed))
+
+  private lazy val tokSql =
     graft.functions.TextFns.duckTokSql
 
   val oracles: Map[String, String] = Map(
-    // the served form reads identical (doc_id, term, tf) integers from
-    // the persisted postings, so it shares the scan form's oracle
-    "search_hybrid_rrf_served" -> hybridOracleSql,
-    // MaxScore form: result-identical to the unbounded serve by
-    // construction (per-query pruning removes only provably-sub-top-k
-    // docs), so it shares the same oracle
-    "search_hybrid_rrf_served_maxscore" -> hybridOracleSql,
-    // lowcut twin: exact at any cut — same oracle, engaged-pruning plan
-    "search_hybrid_rrf_served_maxscore_lowcut" -> hybridOracleSql,
-    // materialized snapshot serve: identical rows by construction
-    "search_hybrid_rrf_served_maxscore_now" -> hybridOracleSql,
     // semantic side: the LSH chain's `ranked` over the full stride set;
     // lexical side: the grouped BM25 restated with the same fixed-slot
     // pivot and 6-decimal quantization; fusion per (q_id, doc_id)
-    "search_hybrid_rrf" -> hybridOracleSql,
-    // bounded form: the df-share cut restated as a banned-term anti
-    // filter on the scoring postings, per-slot act flags recomputed
-    // from the same corpus statistics
-    "search_hybrid_rrf_served_bounded" ->
-      hybridOracleSqlOf(Some(TextAnalysis.bm25MaxDfShare))
-  )
+    "search_hybrid_rrf" -> hybridOracleSql
+  ) ++ servedRows.map(r => r.key -> r.oracle)
 
   private lazy val hybridOracleSql: String = hybridOracleSqlOf(None)
 

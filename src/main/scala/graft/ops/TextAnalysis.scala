@@ -1486,6 +1486,16 @@ object TextAnalysis {
   private[graft] def bm25IdfAt(df: Double, n: Double): Double =
     math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
+  /** One term's BM25 contribution over its tf and df columns and the
+    * frame's dl / n_docs / avgdl columns — the ONE expression the ranked
+    * tail below and the hybrid's per-slot sums evaluate, so their double
+    * arithmetic agrees bit for bit. */
+  private[graft] def bm25Contrib(tf: Column, df: Column): Column = {
+    val t = tf.cast("double")
+    bm25Idf(df, col("n_docs").cast("double")) * (t * lit(bm25K1 + 1.0)) /
+      (t + lit(bm25K1) * (lit(1.0 - bm25B) + lit(bm25B) * col("dl").cast("double") / col("avgdl")))
+  }
+
   /** The shared BM25 scoring tail: expects tf_i / df_i / dl / n_docs /
     * avgdl columns and produces the ranked top-k. ONE definition serves
     * the linear-scan path and the persisted-index path, so the double
@@ -1493,12 +1503,7 @@ object TextAnalysis {
     * correctly rounded, so BOTH engines sort on the rounded value) is
     * identical by construction. */
   private def bm25Rank(scored: DataFrame): DataFrame = {
-    val contrib = bm25Query.indices.map { i =>
-      val idf = bm25Idf(col(s"df_$i"), col("n_docs").cast("double"))
-      val tf = col(s"tf_$i").cast("double")
-      idf * (tf * lit(bm25K1 + 1.0)) /
-        (tf + lit(bm25K1) * (lit(1.0 - bm25B) + lit(bm25B) * col("dl").cast("double") / col("avgdl")))
-    }
+    val contrib = bm25Query.indices.map(i => bm25Contrib(col(s"tf_$i"), col(s"df_$i")))
     scored
       .withColumn("score", round(contrib.reduce(_ + _), 6))
       .filter(bm25Query.indices.map(i => col(s"tf_$i") > 0).reduce(_ || _))
@@ -1509,14 +1514,16 @@ object TextAnalysis {
   }
 
   /** Persist the text-search index: the (term, doc_id, tf) posting
-    * table, the (doc_id, dl) doc-length table, and the 1-row corpus
-    * stats (n_docs, avgdl) — the artifacts every lexical search engine
-    * stores. At 100 TB the posting table is additionally partitioned or
-    * bucketed by term; plain parquet + predicate pushdown already gives
-    * the serving read its shape (only the QUERY TERMS' postings are
-    * scanned — pinned by the `PlanGuardSpec` pushdown guard). */
+    * table, the (doc_id, dl) doc-length table and the term dictionary,
+    * with the corpus statistics (n_docs and the doc-length sum) as
+    * `doclen.*` facts of the same log version — the artifacts every
+    * lexical search engine stores. At 100 TB the posting table is
+    * additionally partitioned or bucketed by term; plain parquet +
+    * predicate pushdown already gives the serving read its shape (only
+    * the QUERY TERMS' postings are scanned — pinned by the
+    * `PlanGuardSpec` pushdown guard). */
   def textIndexWrite(s: SparkSession, corpusDir: String, indexDir: String): Unit = {
-    // one tokenize feeds all four tables, which commit together
+    // one tokenize feeds all three tables, which commit together
     val base = indexableDocs(Tables(s, corpusDir, "documents")).persist()
     try IndexMaintenance.transact(s, indexDir) { _ =>
       // doclen doubles as the DOC-VALUES table (lang, source alongside
@@ -1529,8 +1536,7 @@ object TextAnalysis {
       // the honest storage cost of positional retrieval, ~the token
       // stream itself, paid once at index time
       val postings = postingsOf(base)
-      IndexMaintenance.Change(replace = statsTables(doclen, postings) ++
-        Seq("doclen" -> doclen, "postings" -> postings))
+      rebuild(doclen, postings, doclen, postings)
     } finally base.unpersist()
   }
 
@@ -1541,50 +1547,67 @@ object TextAnalysis {
       .agg(count(lit(1)).as("tf"),
         sort_array(collect_list(col("pos").cast("long"))).as("positions"))
 
-  /** The 1-row corpus stats (n_docs, avgdl) of a doclen frame. */
-  private def statsOf(doclen: DataFrame): DataFrame =
-    doclen.agg(count(lit(1)).as("n_docs"),
-      (sum(col("dl")).cast("double") / count(lit(1)).cast("double")).as("avgdl"))
+  /** The log facts holding a text index's frozen corpus statistics. */
+  private val nDocsFact = "doclen.n_docs"
+  private val dlSumFact = "doclen.dl_sum"
 
-  /** The LIVE (doclen, 1-row stats) pair of a persisted text index —
-    * the dl/n_docs/avgdl source the hybrid serving family shares, so
-    * its bounded and unbounded forms are consistent BY CONSTRUCTION
-    * (both read these frames, not independent derivations). doclen is
-    * the tombstone-masked doc-values table; stats is the persisted
-    * 1-row table when it provably equals the live aggregate (no
+  /** The frozen corpus statistics of a text index snapshot: n_docs and
+    * avgdl = dl_sum / n_docs, the same double division a Spark
+    * aggregate does. An index whose log holds no statistics fails
+    * loudly, like a directory with no log. */
+  private[graft] def corpusStats(snap: IndexMaintenance.Snapshot): (Long, Double) = {
+    def fact(k: String): Long = snap.props.getOrElse(k, throw new IllegalStateException(
+      s"${snap.root} has no corpus statistics ($k) in its index log; build the index first"))
+      .toLong
+    val n = fact(nDocsFact)
+    (n, fact(dlSumFact).toDouble / n.toDouble)
+  }
+
+  /** `df` with [[corpusStats]] as the literal `n_docs` and `avgdl`
+    * columns the scoring tails read: no table, no broadcast, no job. */
+  private def withCorpusStats(snap: IndexMaintenance.Snapshot)(df: DataFrame): DataFrame = {
+    val (n, avgdl) = corpusStats(snap)
+    df.withColumn("n_docs", lit(n)).withColumn("avgdl", lit(avgdl))
+  }
+
+  /** The LIVE (doclen, corpus statistics) pair of a persisted text
+    * index — the dl/n_docs/avgdl source the hybrid serving family
+    * shares, so its bounded and unbounded forms are consistent BY
+    * CONSTRUCTION. doclen is the tombstone-masked doc-values table; the
+    * second element adds `n_docs`/`avgdl` columns to a frame: the
+    * committed facts when they provably equal the live aggregate (no
     * appended tail, no pending tombstones — rebuilds and compacts
-    * recompute it from these same doclen rows with this same
-    * expression), and the live doclen aggregate otherwise. The live
-    * branch is one narrow 2-column scan — at any scale a rounding
-    * error next to the posting aggregation the unbounded serve runs —
+    * compute them from these same doclen rows), and the live doclen
+    * aggregate otherwise. The live branch is one narrow 2-column scan
     * and only engages while a tail/tombstone is actually outstanding
     * (the compaction cadence bounds that window). */
   private[graft] def textIndexDoclenStats(s: SparkSession,
-      indexDir: String): (DataFrame, DataFrame) = {
+      indexDir: String): (DataFrame, DataFrame => DataFrame) = {
     val snap = IndexMaintenance.snapshot(s, indexDir)
     val doclen = snap.scan(s, "doclen", "doc_id").select(col("doc_id"), col("dl"))
     val fresh = snap.appendedBatches("doclen") == 0 && snap.tombstonesOf("doclen").isEmpty
-    val stats =
-      if (fresh) snap.read(s, "stats").select(col("n_docs"), col("avgdl"))
-      else statsOf(doclen)
-    (doclen, stats)
+    (doclen, if (fresh) withCorpusStats(snap) else withLiveStats(doclen))
   }
 
-  /** The 1-row corpus stats of `doclen` and the TERM DICTIONARY of
-    * `postings`, as the two tables a build or compaction commits. The
-    * dictionary is one (term, df, ub) row per
-    * vocabulary term, term-sorted so a query-term lookup prunes to a
-    * few row groups. This is what lets the bounded serve decide "is
-    * this query term a mega-posting stopword?" from an O(|query|) read
-    * instead of scanning the posting list it is trying to avoid. Like
-    * the 1-row stats table, it is FROZEN between compactions — appends
-    * and deletes leave it stale until [[textIndexCompact]] recomputes
-    * it (Lucene's semantic: the term dictionary is per-segment state
-    * that merges refresh).
+  /** `df` with the live `n_docs` and `avgdl` of a (doc_id, dl) frame. */
+  private[graft] def withLiveStats(doclen: DataFrame)(df: DataFrame): DataFrame =
+    df.crossJoin(broadcast(doclen.agg(count(lit(1)).as("n_docs"),
+      (sum(col("dl")).cast("double") / count(lit(1)).cast("double")).as("avgdl"))))
+
+  /** A build or compaction of the text index as ONE change: `doclen`
+    * and `postings` replace their tables (`doclenRows`/`postingRows`
+    * hold the same rows, unsorted), the corpus statistics commit as
+    * facts in the same version, and the TERM DICTIONARY is derived: one
+    * (term, df, ub) row per vocabulary term, term-sorted so a query-term
+    * lookup prunes to a few row groups — what lets the bounded serve
+    * decide "is this query term a mega-posting stopword?" without
+    * scanning the posting list it is trying to avoid. Facts and
+    * dictionary stay FROZEN across appends and deletes until the next
+    * compaction (Lucene's segment semantic).
     *
     * `ub` is a SCORE UPPER BOUND per term — at least the maximum BM25
     * contribution any posting of the term can make under the index's
-    * frozen stats (Lucene's per-term max score, the MaxScore/WAND
+    * frozen statistics (Lucene's per-term max score, the MaxScore/WAND
     * prerequisite). It is computed from the postings ALONE by taking
     * the tf normalization at its dl → 0 limit, idf(df) × (k1+1)·maxTf /
     * (maxTf + k1·(1−b)): sound (the true max has dl > 0 in the
@@ -1594,16 +1617,21 @@ object TextAnalysis {
     * postings×doclen join at every rebuild, a real tax on the
     * streaming compact cadence for a bound whose slack the idf factor
     * dwarfs anyway. */
-  private def statsTables(doclen: DataFrame, postings: DataFrame): Seq[(String, DataFrame)] = {
-    val stats = materializedNow(doclen.sparkSession, statsOf(doclen))
-    val nDocs = stats.head().getLong(0)
+  private def rebuild(doclen: DataFrame, postings: DataFrame, doclenRows: DataFrame,
+      postingRows: DataFrame): IndexMaintenance.Change = {
+    val agg = doclenRows.agg(count(lit(1)), sum(col("dl"))).head()
+    val nDocs = agg.getLong(0)
+    val dlSum = if (agg.isNullAt(1)) 0L else agg.getLong(1)
     val idf = bm25Idf(col("df"), lit(nDocs.toDouble))
     val mtfn = (col("_maxtf").cast("double") * lit(bm25K1 + 1.0)) /
       (col("_maxtf").cast("double") + lit(bm25K1) * lit(1.0 - bm25B))
-    Seq("stats" -> stats.coalesce(1), "termstats" -> postings
+    val dictionary = postingRows
       .groupBy(col("term")).agg(count(lit(1)).as("df"), max(col("tf")).as("_maxtf"))
       .select(col("term"), col("df"), (idf * mtfn).as("ub"))
-      .repartitionByRange(1, col("term")).sortWithinPartitions(col("term")))
+      .repartitionByRange(1, col("term")).sortWithinPartitions(col("term"))
+    IndexMaintenance.Change(
+      replace = Seq("doclen" -> doclen, "postings" -> postings, "termstats" -> dictionary),
+      props = Map(nDocsFact -> nDocs.toString, dlSumFact -> dlSum.toString))
   }
 
   /** The tokenized per-document frame both index writers share: one
@@ -1618,9 +1646,9 @@ object TextAnalysis {
   /** Fold a landed document batch into a persisted text index: the
     * batch is tokenized ONCE and its posting + doc-values rows appended
     * — the standing corpus is never re-read or re-tokenized, so the
-    * batch pays only its own indexing cost at any index size. The 1-row
-    * corpus stats (n_docs, avgdl) are deliberately NOT updated: they
-    * stay frozen at their last rebuild and catch up at the next
+    * batch pays only its own indexing cost at any index size. The
+    * corpus statistics (n_docs, dl_sum) are deliberately NOT updated:
+    * they stay frozen at their last rebuild and catch up at the next
     * [[textIndexCompact]] — the Lucene semantic (segment commits don't
     * re-estimate global statistics; merges do). Per-term df is immune:
     * the serve derives it from the postings at query time, so it is
@@ -1635,62 +1663,116 @@ object TextAnalysis {
       "postings" -> postingsOf(base)), mark)
   }
 
+  /** The posting-read bound of a served lexical read. */
+  sealed trait Bound
+  object Bound {
+    /** Read every query term's posting list. */
+    case object Unbounded extends Bound
+
+    /** Drop the query terms whose dictionary df-share exceeds `share`
+      * before their posting lists are read — a documented semantic
+      * change: a dropped term contributes 0. */
+    final case class DfShare(share: Double) extends Bound
+
+    /** EXACT bounded serving (Lucene's MaxScore): the query terms above
+      * the `share` cut are read only for the provable top-k contenders.
+      * `minMegaRows` is the fixed-query serve's auto-disengage floor
+      * ([[maxScoreMinMegaRows]]); the hybrid decides per query in-plan
+      * and reads only the cut. */
+    final case class MaxScore(share: Double = bm25MaxDfShare,
+        minMegaRows: Long = maxScoreMinMegaRows) extends Bound
+  }
+
+  /** The job label of a served read's construction-time actions: the
+    * family's registry entry, the bound and the log version read. */
+  private[graft] def serveLabel(entry: String, bound: Bound,
+      snap: IndexMaintenance.Snapshot): String =
+    s"$entry bound=$bound v${snap.version}"
+
   /** BM25 over a PERSISTED index: the corpus is never re-tokenized —
     * the serving plan reads the query terms' posting rows (predicate
     * pushed into the parquet scan), pivots them to per-doc tf columns,
     * derives per-term df from the same filtered postings, and scores
-    * through the shared [[bm25Rank]] tail. Where the linear-scan path
-    * touches every document at query time, this touches
-    * O(Σ posting-list length of the query terms) — the inverted-index
-    * read shape that makes lexical search serve at 100 TB. Byte-
-    * identical to `textBm25Search` (same integers in, same expression
-    * tree), so it shares its DuckDB oracle. */
+    * through the shared [[bm25Rank]] tail under the corpus statistics
+    * of the index log. It touches O(Σ posting-list length of the query
+    * terms), not every document — the inverted-index read shape that
+    * makes lexical search serve at 100 TB. Byte-identical to
+    * `textBm25Search` on a fresh index, so it shares its DuckDB oracle.
+    * `memberPred` slices the ranked set on the doc-values scan; df and
+    * the statistics stay whole-corpus (see [[bm25FilterLang]]).
+    *
+    * `bound` picks which posting rows are read:
+    *  - [[Bound.DfShare]] resolves the query terms against the term
+    *    dictionary FIRST (one O(|query|) pruned read) and drops any above
+    *    the cut, so the mega-posting term never reaches the pushed
+    *    `term IN (...)`. Its tf_i/df_i aggregate to 0, zeroing its score
+    *    and candidate test — the semantics the bounded oracle restates.
+    *  - [[Bound.MaxScore]] adds `doc_id IN (contenders)` to the pushed
+    *    filter and the decision's LIVE df as literals (the posting-row
+    *    counts the unbounded serve derives, same Long type, so the
+    *    double arithmetic is bit-identical) — [[maxScoreContenders]]
+    *    proves the set, and every uncertain case serves unbounded. Its
+    *    floor is not sound on a slice, so it refuses a `memberPred`.
+    *
+    * The frame bakes in the snapshot of this call (and, for MaxScore,
+    * the decision-time state): collect it promptly under concurrent
+    * ingest, or materialise it (the registered `_now` form). */
   def textBm25Served(s: SparkSession, indexDir: String,
-      memberPred: Option[org.apache.spark.sql.Column] = None,
-      maxDfShare: Option[Double] = None): DataFrame = {
-    // BOUNDED serving: resolve the query terms against the term
-    // dictionary FIRST (an O(|query|) pruned read of termstats) and
-    // drop any whose df-share exceeds the bound — the pushed
-    // `term IN (...)` below then never includes the mega-posting term,
-    // so its O(corpus) posting list never leaves the parquet scan. A
-    // dropped term's tf_i/df_i aggregate to 0 from the surviving hits,
-    // which zeroes its score contribution and its candidate-membership
-    // test — the semantics the bounded oracle restates in SQL.
-    val activeTerms = maxDfShare.fold(bm25Query)(boundedQueryTerms(s, indexDir, bm25Query, _))
-    val hits = IndexMaintenance.scan(s, indexDir, "postings", "doc_id")
-      .filter(col("term").isin(activeTerms: _*))
+      memberPred: Option[Column] = None, bound: Bound = Bound.Unbounded): DataFrame = {
+    require(memberPred.isEmpty || !bound.isInstanceOf[Bound.MaxScore],
+      s"textBm25Served($indexDir): the MaxScore floor is not sound on a memberPred slice")
+    val snap = IndexMaintenance.snapshot(s, indexDir)
+    val queryTerms = col("term").isin(bm25Query: _*)
+    // the posting predicate, and the live df when the decision fixed it
+    val (postingPred, dfLive): (Column, Option[Map[String, Long]]) =
+      IndexMaintenance.labeledJob(s, serveLabel("text_bm25_served", bound, snap)) {
+        bound match {
+          case Bound.Unbounded => (queryTerms, None)
+          case Bound.DfShare(share) =>
+            (col("term").isin(boundedQueryTerms(s, indexDir, bm25Query, share): _*), None)
+          case Bound.MaxScore(share, floor) => maxScoreContenders(s, indexDir, share, floor) match {
+            case None => (queryTerms, None)
+            case Some(MaxScorePrune(cand, live)) =>
+              (queryTerms && col("doc_id").isin(cand: _*) &&
+                col("doc_id") >= lit(cand.min) && col("doc_id") <= lit(cand.max), Some(live))
+          }
+        }
+      }
+    val hits = snap.scan(s, "postings", "doc_id").filter(postingPred)
     val perDocAggs = bm25Query.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"tf_$i")
     }
     val perDoc = hits.groupBy(col("doc_id")).agg(perDocAggs.head, perDocAggs.tail: _*)
-    val dfAggs = bm25Query.zipWithIndex.map { case (t, i) =>
-      sum(when(col("term") === t, 1L).otherwise(0L)).as(s"df_$i")
-    }
-    // df stays whole-corpus even when serving a slice — frozen index
-    // statistics (see [[bm25FilterLang]])
-    val dfs = hits.agg(dfAggs.head, dfAggs.tail: _*)
-    val stats = IndexMaintenance.read(s, indexDir, "stats")
     // the slice predicate prunes on the doc-values scan; the inner join
     // then drops out-of-slice posting hits before scoring
-    val doclenAll = IndexMaintenance.scan(s, indexDir, "doclen", "doc_id")
-    val doclen = memberPred.fold(doclenAll)(doclenAll.filter(_))
-    bm25Rank(perDoc
-      .join(doclen, "doc_id")
-      .crossJoin(broadcast(stats))
-      .crossJoin(broadcast(dfs)))
+    val doclenAll = snap.scan(s, "doclen", "doc_id")
+    val scored = withCorpusStats(snap)(
+      perDoc.join(memberPred.fold(doclenAll)(doclenAll.filter(_)), "doc_id"))
+    bm25Rank(dfLive match {
+      case None =>
+        val dfAggs = bm25Query.zipWithIndex.map { case (t, i) =>
+          sum(when(col("term") === t, 1L).otherwise(0L)).as(s"df_$i")
+        }
+        scored.crossJoin(broadcast(hits.agg(dfAggs.head, dfAggs.tail: _*)))
+      case Some(live) =>
+        scored.select(col("*") +: bm25Query.zipWithIndex.map { case (t, i) =>
+          lit(live.getOrElse(t, 0L)).as(s"df_$i")
+        }: _*)
+    })
   }
 
   /** The subset of `terms` whose df-share is within `maxDfShare`,
     * resolved from the persisted term dictionary (`termstats`) — an
-    * O(|terms|)-row pruned read plus the 1-row stats, never the posting
+    * O(|terms|)-row pruned read and the n_docs fact, never the posting
     * lists themselves. Terms ABSENT from the dictionary are kept: they
     * were not in the vocabulary at the last rebuild, so they cannot be
     * a standing mega-posting (frozen-statistics semantics, like
     * n_docs/avgdl). */
   private[graft] def boundedQueryTerms(s: SparkSession, indexDir: String,
       terms: Seq[String], maxDfShare: Double): Seq[String] = {
-    val nDocs = IndexMaintenance.read(s, indexDir, "stats").head().getLong(0)
-    val dfOf = IndexMaintenance.read(s, indexDir, "termstats")
+    val snap = IndexMaintenance.snapshot(s, indexDir)
+    val nDocs = corpusStats(snap)._1
+    val dfOf = snap.read(s, "termstats")
       .filter(col("term").isin(terms: _*))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     terms.filter(t => dfOf.getOrElse(t, 0L).toDouble <= maxDfShare * nDocs)
@@ -1704,8 +1786,9 @@ object TextAnalysis {
     * collect is bounded in practice; the guard caps it loudly. */
   private[graft] def bannedTerms(s: SparkSession, indexDir: String,
       maxDfShare: Double, cap: Int = 10000): Seq[String] = {
-    val nDocs = IndexMaintenance.read(s, indexDir, "stats").head().getLong(0)
-    val b = IndexMaintenance.read(s, indexDir, "termstats")
+    val snap = IndexMaintenance.snapshot(s, indexDir)
+    val nDocs = corpusStats(snap)._1
+    val b = snap.read(s, "termstats")
       .filter(col("df").cast("double") > lit(maxDfShare) * lit(nDocs.toDouble))
       .select(col("term")).limit(cap + 1).collect().map(_.getString(0)).toSeq
     require(b.size <= cap,
@@ -1725,22 +1808,20 @@ object TextAnalysis {
     * scan the mega list anyway — serve unbounded rather than pretend. */
   private val maxScoreCandCap = 10000
 
-  /** AUTO-DISENGAGE floor for the fixed-query MaxScore decision pass
-    * (round 15): the pruning's payoff is the SKIPPED mega posting rows,
-    * a quantity the term dictionary prices for free (Σ df over the mega
-    * terms), while the decision pass costs a cheap-postings floor scan
-    * plus ~0.3 s of flat driver actions (measured, PLANS.md round-14
-    * pricing: at 100k skipped rows the serve pays 1.56–1.68× the
-    * unbounded time — the saving was ~0.1 s against ~0.3 s of decision
-    * overhead, putting break-even near ~300k rows at local[32]). Below
-    * this floor the serve goes unbounded DIRECTLY, paying only the
-    * dictionary read — so the production default never eats the
-    * smoke-scale overhead, while a Zipf corpus whose mega head is
-    * posting-mass-heavy (a billion rows at 100 TB) still engages.
-    * Exactness is unaffected in both directions (MaxScore is exact at
-    * any cut; disengaging just serves the always-exact unbounded
-    * plan). Declared instruments (the `_lowcut` twins) pass 0 to force
-    * engagement under the oracle. */
+  /** AUTO-DISENGAGE floor for the fixed-query MaxScore decision pass:
+    * the pruning's payoff is the SKIPPED mega posting rows, a quantity
+    * the term dictionary prices for free (Σ df over the mega terms),
+    * while the decision pass costs a cheap-postings floor scan plus
+    * ~0.3 s of flat driver actions (measured in PLANS.md: at 100k
+    * skipped rows the serve paid 1.56–1.68× the unbounded time, putting
+    * break-even near ~300k rows at local[32]). Below this floor the
+    * serve goes unbounded DIRECTLY, paying only the dictionary read —
+    * so the production default never eats the smoke-scale overhead,
+    * while a Zipf corpus whose mega head is posting-mass-heavy (a
+    * billion rows at 100 TB) still engages. Exactness is unaffected in
+    * both directions (MaxScore is exact at any cut; disengaging just
+    * serves the always-exact unbounded plan). Declared instruments (the
+    * `_lowcut` rows) pass 0 to force engagement under the oracle. */
   private[graft] val maxScoreMinMegaRows = 1000000L
 
   /** One 6-decimal rounding quantum: the MaxScore floor/bound tests run
@@ -1757,9 +1838,8 @@ object TextAnalysis {
     * floor aggregate and the contender filter consume the SAME grouped
     * eScores subtree, whose aggregation exchange AQE collapses onto one
     * runtime computation (`ReusedExchange`, the text_unigram_lm shape)
-    * — one scan of the cheap postings and ONE Spark action where the
-    * round-10/11 form paid the subtree twice across two collects
-    * (r10 What's wrong #4). Exposed for the PlanGuardSpec reuse pin. */
+    * — one scan of the cheap postings and ONE Spark action. Exposed for
+    * the PlanGuardSpec reuse pin. */
   private[graft] def maxScoreCandFrame(s: SparkSession, indexDir: String,
       cheap: Seq[String], idfOf: Map[String, Double], avgdl: Double,
       ubMega: Double): DataFrame = {
@@ -1813,8 +1893,9 @@ object TextAnalysis {
     * last rebuild does not force the unbounded serve. The dictionary
     * exactly describes the COMPACTED segment (rebuilds and compacts
     * recompute it; appended files carry their commit's sequence in the
-    * index log, rewrites sequence 0 — [[IndexMaintenance.Snapshot.tail]]
-    * tells them apart with no listing). The appended
+    * index log, rewrites a sequence below every version —
+    * [[IndexMaintenance.Snapshot.tail]] tells them apart with no
+    * listing). The appended
     * TAIL is scanned once, pruned to the query terms: its per-term rows
     * give the LIVE df (dict + tail — equal to the posting-row count the
     * unbounded serve derives), and every tail doc matching a mega term
@@ -1822,15 +1903,9 @@ object TextAnalysis {
     * tail docs matching cheap terms flow through the e-score floor like
     * base docs, since the e-score scan reads base + tail). Dictionary
     * ub stays sound for BASE docs: their tf/dl are fixed, avgdl/n_docs
-    * are frozen stats both serves share, and the final idf can only
-    * shrink as live df grows. The tail is bounded by the compaction
-    * cadence — ~one trigger-batch of rows, not the corpus.
-    *
-    * The contenders then re-score EXACTLY through the shared serve
-    * pipeline with `doc_id IN (contenders)` pushed into the posting
-    * scan — on a compacted ((term, doc_id)-sorted) index that prunes
-    * the mega list to the contenders' row groups: the parquet analog of
-    * Lucene's skip pointers.
+    * are frozen statistics both serves share, and the final idf can
+    * only shrink as live df grows. The tail is bounded by the
+    * compaction cadence — ~one trigger-batch of rows, not the corpus.
     *
     * TOMBSTONES (Lucene's delete masks): a pending takedown does not
     * disable bounded serving until the next compact. The
@@ -1873,9 +1948,7 @@ object TextAnalysis {
     val ts = snap.read(s, "termstats")
     val tombPending =
       snap.tombstonesOf("postings").nonEmpty || snap.tombstonesOf("doclen").nonEmpty
-    val st = snap.read(s, "stats").head()
-    val nDocs = st.getLong(0)
-    val avgdl = st.getDouble(1)
+    val (nDocs, avgdl) = corpusStats(snap)
     val dict = ts.filter(col("term").isin(bm25Query: _*))
       .select(col("term"), col("df"), col("ub")).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
@@ -1937,10 +2010,10 @@ object TextAnalysis {
     // scores with the LIVE df under the frozen n — an APPEND grows df
     // (idf shrinks, ratio < 1, frozen ub stays the sound bound) while
     // a DELETE shrinks df (idf GROWS, and the unscaled ub would
-    // under-bound the surviving mega postings by the idf ratio — the
-    // round-13 review's mass-takedown soundness hole). maxTf is frozen
-    // sound in both directions: appends are covered by inclusion,
-    // deletes only shrink it.
+    // under-bound the surviving mega postings by the idf ratio — a mass
+    // takedown would prune true top-k docs). maxTf is frozen sound in
+    // both directions: appends are covered by inclusion, deletes only
+    // shrink it.
     val ubMega = mega.map { t =>
       val (dictDf, ub) = dict(t)
       ub * math.max(1.0, bm25IdfAt(dfLive(t).toDouble, nDocs.toDouble) /
@@ -1959,61 +2032,6 @@ object TextAnalysis {
     if (cand.size > maxScoreCandCap) None else Some(MaxScorePrune(cand, dfLive))
   }
 
-  /** EXACT bounded BM25 serving — MaxScore over the persisted index.
-    * Result-identical to [[textBm25Served]] on EVERY corpus (pruning
-    * only ever removes provably-sub-top-k docs; every uncertain case
-    * falls back to the unbounded serve), at bounded cost when the
-    * dictionary bounds let it prune: the mega posting list contributes
-    * only the contenders' rows to the final scan, and on a compacted
-    * index the pushed `doc_id IN` skips its other row groups entirely.
-    * This keeps exact BM25 semantics where the df-share cut
-    * ([[textBm25ServedBoundedQuery]]) documents a semantic change —
-    * the two bounded forms are complementary policies over the same
-    * term dictionary.
-    *
-    * CONCURRENCY NOTE: the pruned arm bakes decision-time index state
-    * (live df literals, the contender id list) into the returned lazy
-    * frame, and both arms scan the index snapshot of this call — a
-    * compaction before a late collect deletes files the frame reads.
-    * When ingest is concurrent, collect the frame promptly (or
-    * re-derive it per serve) — the registered query and every
-    * streaming consumer do — or use
-    * [[textBm25ServedMaxScoreNow]], which materializes the bounded
-    * result before returning and is immune to late collection by
-    * construction (pinned with a concurrent-append arm in
-    * `BoundedServeSpec`). */
-  def textBm25ServedMaxScore(s: SparkSession, indexDir: String,
-      maxDfShare: Double = bm25MaxDfShare,
-      minMegaRows: Long = maxScoreMinMegaRows): DataFrame =
-    maxScoreContenders(s, indexDir, maxDfShare, minMegaRows) match {
-      case None => textBm25Served(s, indexDir)
-      case Some(MaxScorePrune(cand, dfLive)) =>
-        // tombstone-masked like every index read (free when none
-        // pending): a deleted doc that slipped into the contender set
-        // contributes no rows, so it never resurfaces in the ranking
-        val hits = IndexMaintenance.scan(s, indexDir, "postings", "doc_id")
-          .filter(col("term").isin(bm25Query: _*) &&
-            col("doc_id").isin(cand: _*) &&
-            col("doc_id") >= lit(cand.min) && col("doc_id") <= lit(cand.max))
-        val perDocAggs = bm25Query.zipWithIndex.map { case (t, i) =>
-          sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"tf_$i")
-        }
-        val perDoc = hits.groupBy(col("doc_id")).agg(perDocAggs.head, perDocAggs.tail: _*)
-        // LIVE df values (dictionary base + appended tail) — equal to
-        // the posting-row counts the unbounded serve derives, same Long
-        // type, so the downstream double arithmetic is bit-identical
-        import s.implicits._
-        val dfs = Seq(1).toDF("_one").select(bm25Query.zipWithIndex.map { case (t, i) =>
-          lit(dfLive.getOrElse(t, 0L)).as(s"df_$i")
-        }: _*)
-        val stats = IndexMaintenance.read(s, indexDir, "stats")
-        val doclen = IndexMaintenance.scan(s, indexDir, "doclen", "doc_id")
-        bm25Rank(perDoc
-          .join(doclen, "doc_id")
-          .crossJoin(broadcast(stats))
-          .crossJoin(broadcast(dfs)))
-    }
-
   /** Materialize a BOUNDED result frame into a local relation with the
     * identical schema: the rows are collected here, so the returned
     * frame is pinned to the index state as of THIS call no matter how
@@ -2022,43 +2040,28 @@ object TextAnalysis {
   private[graft] def materializedNow(s: SparkSession, df: DataFrame): DataFrame =
     s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
-  /** PER-SERVE SNAPSHOT form of [[textBm25ServedMaxScore]] — the
-    * re-derivation hook that closes its documented snapshot race for
-    * callers that cannot promise a prompt collect: the decision, the
-    * contender re-score, and the ranking all evaluate BEFORE this
-    * returns (the output is top-k-bounded, so the collect is small by
-    * construction), and the returned local relation can be held across
-    * any amount of concurrent ingest without observing a mixed state.
-    * Each call re-derives everything from the index's current state. */
-  def textBm25ServedMaxScoreNow(s: SparkSession, indexDir: String,
-      maxDfShare: Double = bm25MaxDfShare,
-      minMegaRows: Long = maxScoreMinMegaRows): DataFrame =
-    materializedNow(s, textBm25ServedMaxScore(s, indexDir, maxDfShare, minMegaRows))
-
   /** Compact the posting table on term — the sort that puts each
     * term's posting list into contiguous, min/max-prunable row groups,
     * which is exactly what the serve path's pushed `term IN (...)`
     * predicate skips by. Doclen compacts on doc_id. Tombstoned docs
     * ([[textIndexDelete]]) are physically dropped from both, and the
-    * 1-row stats table is RECOMPUTED from the surviving doclen rows —
+    * corpus statistics are RECOMPUTED from the surviving doclen rows —
     * the Lucene semantic made explicit: n_docs/avgdl stay frozen
     * between delete and compact (deleted docs still shape scores, but
     * never appear), and compact is where statistics catch up.
     *
-    * doclen, postings, stats and termstats are rewritten in ONE log
-    * commit: no reader ever sees compacted postings next to stale
-    * stats, and a batch commits to both tables or neither, so there is
-    * no half-landed batch to absorb. */
+    * doclen, postings, termstats and the statistics facts are rewritten
+    * in ONE log commit: no reader ever sees compacted postings next to
+    * stale statistics, and a batch commits to both tables or neither,
+    * so there is no half-landed batch to absorb. */
   def textIndexCompact(s: SparkSession, indexDir: String): (Int, Int) = {
     var before = 0
     val after = IndexMaintenance.transact(s, indexDir) { snap =>
       before = snap.filesOf("postings").size
-      val doclen = snap.scan(s, "doclen", "doc_id")
-      val postings = snap.scan(s, "postings", "doc_id")
-      IndexMaintenance.Change(replace = statsTables(doclen, postings) ++ Seq(
-        "doclen" -> IndexMaintenance.rewrite(s, snap, "doclen", Seq("doc_id"), Some("doc_id")),
-        "postings" -> IndexMaintenance.rewrite(s, snap, "postings", Seq("term", "doc_id"),
-          Some("doc_id"))))
+      rebuild(
+        IndexMaintenance.rewrite(s, snap, "doclen", Seq("doc_id"), Some("doc_id")),
+        IndexMaintenance.rewrite(s, snap, "postings", Seq("term", "doc_id"), Some("doc_id")),
+        snap.scan(s, "doclen", "doc_id"), snap.scan(s, "postings", "doc_id"))
     }
     (before, after.map(_.filesOf("postings").size).getOrElse(0))
   }
@@ -2066,7 +2069,7 @@ object TextAnalysis {
   /** Retract documents from the lexical index (takedown): tombstoned
     * across postings and doc-values now — a deleted doc is absent from
     * the next query's ranking and term dfs immediately — physically
-    * dropped (and corpus stats recomputed) at the next
+    * dropped (and corpus statistics recomputed) at the next
     * [[textIndexCompact]]. Idempotent. */
   def textIndexDelete(s: SparkSession, indexDir: String, docIds: Seq[Long]): Unit =
     IndexMaintenance.delete(s, indexDir, Seq("postings", "doclen"), docIds)
@@ -2075,10 +2078,10 @@ object TextAnalysis {
     * sibling of `AnnIndex.ivfIndexHealth`. One row per metric:
     * `n_terms` (vocabulary), `n_postings` (servable posting rows),
     * `n_docs_indexed` (servable doc-values rows), `stats_n_docs` (the
-    * persisted 1-row global stats — FROZEN between appends and
-    * compaction), `stats_staleness` (n_docs_indexed − stats_n_docs —
-    * the Lucene gap a deployment watches to schedule compaction; 0 on
-    * a fresh or just-compacted index), `max_df_share` (heaviest term's
+    * committed n_docs fact — FROZEN between appends and compaction),
+    * `stats_staleness` (n_docs_indexed − stats_n_docs — the Lucene gap
+    * a deployment watches to schedule compaction; 0 on a fresh or
+    * just-compacted index), `max_df_share` (heaviest term's
     * document share — the boilerplate/stopword-head alarm),
     * `pending_tombstones`, `data_files` (compaction debt on the
     * posting table). Distributed aggregation; 1-row collects only. */
@@ -2096,7 +2099,7 @@ object TextAnalysis {
         case r if r.isNullAt(0) => 0L
         case r => r.getLong(0)
       }
-    val statsDocs = snap.read(s, "stats").head().getLong(0)
+    val statsDocs = corpusStats(snap)._1
     val pend = snap.pendingTombstones("postings")
     val files = snap.filesOf("postings").size
     Seq(
@@ -2132,65 +2135,54 @@ object TextAnalysis {
       d
     }
 
-  /** Registered-query form of [[textBm25Served]]. */
-  def textBm25ServedQuery(s: SparkSession, dir: String): DataFrame =
-    textBm25Served(s, textIndexFor(s, dir))
+  /** The served lexical variants both served families register — BM25
+    * ([[textBm25Served]]) and hybrid ([[Retrieval.searchHybridRrfServed]]):
+    * key suffix, bound, and whether the serve materialises before
+    * returning. `_bounded` documents the df-share semantic change;
+    * `_maxscore` is exact and, at the default cut, takes the fallback
+    * arm on the shared corpus; `_lowcut` is a DECLARED INSTRUMENT — a
+    * cut the corpus DOES cross ([[bm25LowDfShare]]) with engagement
+    * forced past the auto-disengage floor, so the ENGAGED pruned plan
+    * runs under the oracle; `_now` materialises that engaged plan
+    * ([[materializedNow]]) — the form a deployment holds across
+    * concurrent ingest. Every MaxScore row is result-identical to the
+    * unbounded serve, so it shares that oracle. */
+  private[graft] lazy val servedVariants: Seq[(String, Bound, Boolean)] = Seq(
+    ("", Bound.Unbounded, false),
+    ("_bounded", Bound.DfShare(bm25MaxDfShare), false),
+    ("_maxscore", Bound.MaxScore(bm25MaxDfShare), false),
+    ("_maxscore_lowcut", Bound.MaxScore(bm25LowDfShare, 0L), false),
+    ("_maxscore_now", Bound.MaxScore(bm25LowDfShare, 0L), true))
 
-  /** Registered-query form of the BOUNDED serve ([[bm25MaxDfShare]]):
-    * query terms above the df-share cut are dropped via the term
-    * dictionary before their posting lists are read. On this corpus no
-    * query term crosses the default cut, so the result equals
-    * [[textBm25ServedQuery]] — pinned by a spec — while the oracle
-    * restates the cut in SQL (act_i flags), so the CONTRACT is
-    * verified, not just the pass-through. */
-  def textBm25ServedBoundedQuery(s: SparkSession, dir: String): DataFrame =
-    textBm25Served(s, textIndexFor(s, dir), maxDfShare = Some(bm25MaxDfShare))
+  /** One row of a served family's registry table. */
+  private[graft] final case class ServedRow(key: String, bound: Bound, now: Boolean,
+      oracle: String) {
+    /** The registered query: `serve` at this row's bound, materialised
+      * first when `now`. */
+    def query(serve: (SparkSession, String, Bound) => DataFrame)
+        : (SparkSession, String) => DataFrame = (s, dir) => {
+      val df = serve(s, dir, bound)
+      if (now) materializedNow(s, df) else df
+    }
+  }
 
-  /** Registered-query form of the EXACT bounded serve
-    * ([[textBm25ServedMaxScore]]): result-identical to
-    * `text_bm25_served` by construction, so it shares that oracle — on
-    * this corpus no query term crosses the DEFAULT cut, so this run
-    * exercises the fallback arm, while the `_lowcut` twin below puts
-    * the engaged-pruning plan under the same oracle; the pruning arm
-    * is additionally pinned by `BoundedServeSpec` and measured by the
-    * ScaleSmoke scan-rows row. */
-  def textBm25ServedMaxScoreQuery(s: SparkSession, dir: String): DataFrame =
-    textBm25ServedMaxScore(s, textIndexFor(s, dir))
+  /** A served family's registry table: one row per [[servedVariants]]
+    * entry under `entry`, its oracle chosen by bound. */
+  private[graft] def servedRows(entry: String, oracle: Bound => String): Seq[ServedRow] =
+    servedVariants.map { case (sfx, b, now) => ServedRow(entry + sfx, b, now, oracle(b)) }
 
-  /** The default-cut twin at [[bm25LowDfShare]] — a cut this corpus's
-    * term distribution DOES cross ('join' goes mega at sf0.01+), so the
-    * ENGAGED-pruning plan itself executes under the DuckDB oracle:
-    * contender floor, live-df literals, masked re-score and all. Result
-    * still identical to `text_bm25_served` (MaxScore is exact at any
-    * cut — the cut moves work between arms, never the answer), so it
-    * shares that oracle; `BoundedServeSpec` asserts the run really
-    * takes the pruned path. A DECLARED INSTRUMENT: `minMegaRows = 0`
-    * forces engagement past the round-15 auto-disengage floor, which
-    * at gate scale would (correctly) refuse to pay the decision pass. */
-  def textBm25ServedMaxScoreLowcutQuery(s: SparkSession, dir: String): DataFrame =
-    textBm25ServedMaxScore(s, textIndexFor(s, dir), maxDfShare = bm25LowDfShare,
-      minMegaRows = 0L)
-
-  /** Registered form of the PER-SERVE SNAPSHOT serve
-    * ([[textBm25ServedMaxScoreNow]]) — the path a deployment holds
-    * across concurrent ingest, now riding the per-round hash gate
-    * (round 15): lowcut + forced engagement like the `_lowcut`
-    * instrument, so what materializes is the ENGAGED pruned plan's
-    * decision-time state, not the fallback's lazy frame. Result
-    * identical to `text_bm25_served` by MaxScore exactness +
-    * materialization (a local relation of the same rows), so it shares
-    * that oracle. */
-  def textBm25ServedMaxScoreNowQuery(s: SparkSession, dir: String): DataFrame =
-    textBm25ServedMaxScoreNow(s, textIndexFor(s, dir), maxDfShare = bm25LowDfShare,
-      minMegaRows = 0L)
+  private lazy val bm25ServedRows: Seq[ServedRow] = servedRows("text_bm25_served", {
+    case Bound.DfShare(share) => bm25BoundedOracleSql(share)
+    case _ => bm25OracleSql
+  })
 
   /** Registered-query form of [[textPhraseServed]] — shares the ONE
     * persisted index (build memo) with the BM25 serving family. */
   def textPhraseServedQuery(s: SparkSession, dir: String): DataFrame =
     textPhraseServed(s, textIndexFor(s, dir))
 
-  /** FILTERED lexical search: the SAME persisted index as
-    * [[textBm25ServedQuery]] (build memo shared), ranking restricted to
+  /** FILTERED lexical search: the SAME persisted index as the served
+    * BM25 rows (build memo shared), ranking restricted to
     * lang = [[bm25FilterLang]] via the doc-values scan, statistics
     * frozen whole-corpus. The lexical sibling of `sim_lsh_ann_filtered`
     * — full DuckDB oracle, byte-identity with the filtered linear scan
@@ -2203,11 +2195,6 @@ object TextAnalysis {
     "text_bm25_search" -> textBm25Search _,
     "text_phrase_search" -> textPhraseSearch _,
     "text_phrase_served" -> textPhraseServedQuery _,
-    "text_bm25_served" -> textBm25ServedQuery _,
-    "text_bm25_served_bounded" -> textBm25ServedBoundedQuery _,
-    "text_bm25_served_maxscore" -> textBm25ServedMaxScoreQuery _,
-    "text_bm25_served_maxscore_lowcut" -> textBm25ServedMaxScoreLowcutQuery _,
-    "text_bm25_served_maxscore_now" -> textBm25ServedMaxScoreNowQuery _,
     "text_index_health" -> textIndexHealthQuery _,
     "text_bpe_train" -> bpeMergesDf _,
     "text_bpe_train_scaled" -> textBpeTrainScaledQuery _,
@@ -2235,7 +2222,8 @@ object TextAnalysis {
     "text_pii_scrub" -> textPiiScrub _,
     "text_boilerplate" -> textBoilerplate _,
     "text_compress_ratio" -> textCompressRatio _,
-  )
+  ) ++ bm25ServedRows.map(r =>
+    r.key -> r.query((s, dir, b) => textBm25Served(s, textIndexFor(s, dir), bound = b)))
 
   private lazy val phraseOracleSql: String = {
     val pCtes = phraseQuery.zipWithIndex.map { case (t, i) =>
@@ -2254,7 +2242,7 @@ object TextAnalysis {
        |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
 
-  private val tokSql =
+  private lazy val tokSql =
     graft.functions.TextFns.duckTokSql
 
   /** `q(doc_id, score)` CTE for oracles that join the quality score
@@ -2431,11 +2419,11 @@ object TextAnalysis {
     * and candidate-membership test zeroed. Adding an exact 0.0 keeps
     * the surviving terms' double arithmetic bit-identical to the
     * unbounded serve. */
-  private[graft] lazy val bm25BoundedOracleSql: String =
+  private def bm25BoundedOracleSql(share: Double): String =
     s"""WITH $bm25OracleCtes,
        |act AS (
        |  SELECT ${bm25Query.indices.map(i =>
-             s"CASE WHEN CAST(df_$i AS DOUBLE) <= $bm25MaxDfShare * CAST(n_docs AS DOUBLE) THEN 1 ELSE 0 END AS act_$i")
+             s"CASE WHEN CAST(df_$i AS DOUBLE) <= $share * CAST(n_docs AS DOUBLE) THEN 1 ELSE 0 END AS act_$i")
              .mkString(",\n    ")}
        |  FROM cs)
        |SELECT doc_id, dl, ${bm25Query.indices.map(i =>
@@ -2542,21 +2530,6 @@ object TextAnalysis {
     // byte-identical by construction (shared adjacency tail; stored
     // positions are the same integers the scan path derives)
     "text_phrase_served" -> phraseOracleSql,
-    // the persisted-index serving path reads postings instead of
-    // re-tokenizing, but tf/df/dl/stats are the same integers and the
-    // scoring tail is the shared bm25Rank — identical result, identical
-    // oracle (byte-identity pinned in OperatorSpec)
-    "text_bm25_served" -> bm25OracleSql,
-    // the MaxScore serve is result-identical to the unbounded serve on
-    // every corpus (exactness is its contract), so it shares its oracle
-    "text_bm25_served_maxscore" -> bm25OracleSql,
-    // the materialized snapshot serve: identical rows by construction
-    // (engaged pruned plan collected into a local relation)
-    "text_bm25_served_maxscore_now" -> bm25OracleSql,
-    // the lowcut twin is exact at ANY cut — same oracle; what changes
-    // is WHICH plan runs under it (the engaged-pruning arm at sf0.01+)
-    "text_bm25_served_maxscore_lowcut" -> bm25OracleSql,
-    "text_bm25_served_bounded" -> bm25BoundedOracleSql,
     // health over a fresh build: staleness and tombstone debt are 0 BY
     // CONSTRUCTION and the oracle asserts exactly that; every content
     // metric recomputes from a SQL tokenize of the corpus
@@ -2791,5 +2764,9 @@ object TextAnalysis {
         |    (a, b) -> (a * 31 + b) % 1000000007) AS fp_poly,
         |  substr(md5(text), 1, 16) AS fp_md5
         |FROM documents ORDER BY doc_id""".stripMargin,
-  )
+  // the served rows read postings instead of re-tokenizing, but
+  // tf/df/dl and the statistics are the same integers and the scoring
+  // tail is the shared bm25Rank — the linear scan's oracle (byte-identity
+  // pinned in OperatorSpec); `_bounded` restates its cut
+  ) ++ bm25ServedRows.map(r => r.key -> r.oracle)
 }

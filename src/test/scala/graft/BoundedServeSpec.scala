@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ops.{Retrieval, TextAnalysis}
+import graft.ops.{IndexMaintenance, Retrieval, TextAnalysis}
 
 /** Bounded-term lexical serving (round 9): query terms whose df-share
   * exceeds [[TextAnalysis.bm25MaxDfShare]] are dropped via the term
@@ -25,13 +25,14 @@ class BoundedServeSpec extends AnyFunSuite {
   import TestSpark.sf0001
 
   test("pass-through: bounded == unbounded when no query term crosses the cut") {
-    val a = TextAnalysis.textBm25ServedQuery(spark, sf0001).collect().map(_.toSeq).toSeq
-    val b = TextAnalysis.textBm25ServedBoundedQuery(spark, sf0001).collect().map(_.toSeq).toSeq
+    val a = SparkEntry.queries("text_bm25_served")(spark, sf0001).collect().map(_.toSeq).toSeq
+    val b = SparkEntry.queries("text_bm25_served_bounded")(spark, sf0001).collect().map(_.toSeq).toSeq
     assert(a.nonEmpty, "vacuous comparison")
     assert(a === b, "bounded serve diverged though no term crosses the cut")
     val h0 = Retrieval.searchHybridRrfServed(spark, sf0001).collect().map(_.toSeq).toSeq
     val h1 = Retrieval.searchHybridRrfServed(spark, sf0001,
-      Some(TextAnalysis.bm25MaxDfShare)).collect().map(_.toSeq).toSeq
+      TextAnalysis.Bound.DfShare(TextAnalysis.bm25MaxDfShare))
+      .drop((1 to Retrieval.hybridQueryTerms).map(i => s"act_$i"): _*).collect().map(_.toSeq).toSeq
     assert(h0.nonEmpty && h0 === h1,
       "bounded hybrid serve diverged though the banned head is empty")
   }
@@ -65,7 +66,7 @@ class BoundedServeSpec extends AnyFunSuite {
     val banned = TextAnalysis.bannedTerms(spark, s"$tmp/idx", TextAnalysis.bm25MaxDfShare)
     assert(banned === Seq("spark"), s"banned head was $banned — want exactly the stopword")
     val bounded = TextAnalysis.textBm25Served(spark, s"$tmp/idx",
-      maxDfShare = Some(TextAnalysis.bm25MaxDfShare)).collect().map(_.toSeq).toSeq
+      bound = TextAnalysis.Bound.DfShare(TextAnalysis.bm25MaxDfShare)).collect().map(_.toSeq).toSeq
     val reference = TextAnalysis.textBm25Served(spark, s"$tmp/idxv")
       .collect().map(_.toSeq).toSeq
     assert(bounded.nonEmpty, "vacuous comparison")
@@ -100,7 +101,7 @@ class BoundedServeSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val unbounded = Retrieval.searchHybridRrfServed(spark, tmp).collect()
-    val bounded = Retrieval.searchHybridRrfServedBounded(spark, tmp).collect()
+    val bounded = Retrieval.searchHybridRrfServed(spark, tmp, TextAnalysis.Bound.DfShare(TextAnalysis.bm25MaxDfShare)).collect()
     assert(bounded.nonEmpty && unbounded.nonEmpty, "vacuous comparison")
     // the flags name the fired slot: slot 1 ('spark') banned, the
     // query's own fillers untouched
@@ -145,7 +146,7 @@ class BoundedServeSpec extends AnyFunSuite {
     assert(cand.get.contenders.size >= TextAnalysis.bm25TopK && cand.get.contenders.size < 60,
       s"contender set ${cand.get.contenders.size} — want a proper subset covering the top-k")
     val exact = TextAnalysis.textBm25Served(spark, s"$tmp/idx").collect().map(_.toSeq).toSeq
-    val ms = TextAnalysis.textBm25ServedMaxScore(spark, s"$tmp/idx", minMegaRows = 0L).collect().map(_.toSeq).toSeq
+    val ms = TextAnalysis.textBm25Served(spark, s"$tmp/idx", bound = TextAnalysis.Bound.MaxScore(minMegaRows = 0L)).collect().map(_.toSeq).toSeq
     assert(ms.nonEmpty && ms === exact,
       "MaxScore serve diverged from the unbounded serve — it must be EXACT")
     // registered-corpus arm: no query term crosses the cut -> fallback,
@@ -168,7 +169,7 @@ class BoundedServeSpec extends AnyFunSuite {
     assert(cand2.get.dfLive("spark") == 59L && cand2.get.dfLive("join") == 31L,
       s"live df must be dictionary + tail: ${cand2.get.dfLive}")
     val exact2 = TextAnalysis.textBm25Served(spark, s"$tmp/idx").collect().map(_.toSeq).toSeq
-    val ms2 = TextAnalysis.textBm25ServedMaxScore(spark, s"$tmp/idx", minMegaRows = 0L).collect().map(_.toSeq).toSeq
+    val ms2 = TextAnalysis.textBm25Served(spark, s"$tmp/idx", bound = TextAnalysis.Bound.MaxScore(minMegaRows = 0L)).collect().map(_.toSeq).toSeq
     assert(ms2 === exact2, "post-append pruned serve diverged from the unbounded serve")
     assert(exact2 != exact, "the appended doc must change the unbounded top-k " +
       "(otherwise the post-append identity is vacuous)")
@@ -181,7 +182,7 @@ class BoundedServeSpec extends AnyFunSuite {
     // (scores legitimately move at compact: the frozen n_docs/avgdl
     // catch up to the absorbed tail — the Lucene semantic)
     val exact3 = TextAnalysis.textBm25Served(spark, s"$tmp/idx").collect().map(_.toSeq).toSeq
-    val ms3 = TextAnalysis.textBm25ServedMaxScore(spark, s"$tmp/idx", minMegaRows = 0L).collect().map(_.toSeq).toSeq
+    val ms3 = TextAnalysis.textBm25Served(spark, s"$tmp/idx", bound = TextAnalysis.Bound.MaxScore(minMegaRows = 0L)).collect().map(_.toSeq).toSeq
     assert(ms3 === exact3)
     // TOMBSTONES (round 13 — Lucene's delete masks): a takedown no
     // longer disables bounded serving until the next compact. Doc 2
@@ -196,7 +197,7 @@ class BoundedServeSpec extends AnyFunSuite {
     assert(cand4.get.dfLive("spark") == 58L && cand4.get.dfLive("join") == 30L,
       s"live df must be the tombstone-masked posting count: ${cand4.get.dfLive}")
     val exact4 = TextAnalysis.textBm25Served(spark, s"$tmp/idx").collect().map(_.toSeq).toSeq
-    val ms4 = TextAnalysis.textBm25ServedMaxScore(spark, s"$tmp/idx", minMegaRows = 0L).collect().map(_.toSeq).toSeq
+    val ms4 = TextAnalysis.textBm25Served(spark, s"$tmp/idx", bound = TextAnalysis.Bound.MaxScore(minMegaRows = 0L)).collect().map(_.toSeq).toSeq
     assert(ms4 === exact4, "post-delete pruned serve diverged from the unbounded serve")
     assert(exact4 != exact3, "the takedown must change the unbounded top-k " +
       "(otherwise the post-delete identity is vacuous)")
@@ -214,7 +215,7 @@ class BoundedServeSpec extends AnyFunSuite {
     assert(cand5.isDefined,
       "pruning must stay engaged under moderate mega-df shrinkage")
     val exact5 = TextAnalysis.textBm25Served(spark, s"$tmp/idx").collect().map(_.toSeq).toSeq
-    val ms5 = TextAnalysis.textBm25ServedMaxScore(spark, s"$tmp/idx", minMegaRows = 0L).collect().map(_.toSeq).toSeq
+    val ms5 = TextAnalysis.textBm25Served(spark, s"$tmp/idx", bound = TextAnalysis.Bound.MaxScore(minMegaRows = 0L)).collect().map(_.toSeq).toSeq
     assert(ms5 === exact5, "mass-takedown pruned serve diverged from the unbounded serve")
     // Arm B — extreme inflation (all remaining spark-only docs + four
     // spark+vector docs): the rescaled bound exceeds any seatable
@@ -228,7 +229,7 @@ class BoundedServeSpec extends AnyFunSuite {
       "extreme mega-idf inflation must force the sound unbounded fallback " +
       "(an unscaled frozen bound would wrongly keep pruning)")
     val exact6 = TextAnalysis.textBm25Served(spark, s"$tmp/idx").collect().map(_.toSeq).toSeq
-    val ms6 = TextAnalysis.textBm25ServedMaxScore(spark, s"$tmp/idx", minMegaRows = 0L).collect().map(_.toSeq).toSeq
+    val ms6 = TextAnalysis.textBm25Served(spark, s"$tmp/idx", bound = TextAnalysis.Bound.MaxScore(minMegaRows = 0L)).collect().map(_.toSeq).toSeq
     assert(ms6 === exact6)
   }
 
@@ -250,7 +251,8 @@ class BoundedServeSpec extends AnyFunSuite {
     assert(TextAnalysis.maxScoreContenders(spark, s"$tmp/idx", minMegaRows = 0L).isDefined,
       "pruning must engage — the arm tests the PRUNED path's snapshot")
     val want = TextAnalysis.textBm25Served(spark, s"$tmp/idx").collect().map(_.toSeq).toSeq
-    val now = TextAnalysis.textBm25ServedMaxScoreNow(spark, s"$tmp/idx", minMegaRows = 0L)
+    val now = TextAnalysis.materializedNow(spark,
+      TextAnalysis.textBm25Served(spark, s"$tmp/idx", bound = TextAnalysis.Bound.MaxScore(minMegaRows = 0L)))
     // a concurrent append lands between the serve and its consumption
     TextAnalysis.textIndexAppendBatch(spark,
       Seq((61L, "spark join vector fresh", "en", "s"))
@@ -261,15 +263,17 @@ class BoundedServeSpec extends AnyFunSuite {
     // ...while a FRESH serve re-derives and equals the fresh unbounded
     // serve over base + tail (and genuinely differs from the snapshot)
     val freshWant = TextAnalysis.textBm25Served(spark, s"$tmp/idx").collect().map(_.toSeq).toSeq
-    val freshNow = TextAnalysis.textBm25ServedMaxScoreNow(spark, s"$tmp/idx", minMegaRows = 0L)
+    val freshNow = TextAnalysis.materializedNow(spark,
+      TextAnalysis.textBm25Served(spark, s"$tmp/idx", bound = TextAnalysis.Bound.MaxScore(minMegaRows = 0L)))
       .collect().map(_.toSeq).toSeq
     assert(freshNow === freshWant, "a fresh Now serve diverged from the fresh unbounded serve")
     assert(freshNow != want, "the append must move the top-k, or the immunity assertion is vacuous")
     // hybrid half: the Now form collects per-query-top-k rows eagerly
     // and matches the lazy served hybrid evaluated at the same moment
-    val hybridWant = ops.Retrieval.searchHybridRrfServedMaxScore(spark, sf0001)
+    val hybridWant = ops.Retrieval.searchHybridRrfServed(spark, sf0001, TextAnalysis.Bound.MaxScore())
       .collect().map(_.toSeq).toSeq
-    val hybridNow = ops.Retrieval.searchHybridRrfServedMaxScoreNow(spark, sf0001)
+    val hybridNow = TextAnalysis.materializedNow(spark,
+      ops.Retrieval.searchHybridRrfServed(spark, sf0001, TextAnalysis.Bound.MaxScore()))
       .collect().map(_.toSeq).toSeq
     assert(hybridNow === hybridWant && hybridNow.nonEmpty,
       "hybrid Now serve diverged from the lazy served hybrid at the same index state")
@@ -277,10 +281,10 @@ class BoundedServeSpec extends AnyFunSuite {
     // materialization — identical to the unbounded serves on the shared
     // corpus (the identity the per-round DuckDB oracle then re-verifies
     // at sf0.01 with the engaged plan)
-    val regBm25 = TextAnalysis.textBm25ServedMaxScoreNowQuery(spark, sf0001)
+    val regBm25 = SparkEntry.queries("text_bm25_served_maxscore_now")(spark, sf0001)
       .collect().map(_.toSeq).toSeq
     assert(regBm25.nonEmpty &&
-      regBm25 === TextAnalysis.textBm25ServedQuery(spark, sf0001).collect().map(_.toSeq).toSeq,
+      regBm25 === SparkEntry.queries("text_bm25_served")(spark, sf0001).collect().map(_.toSeq).toSeq,
       "registered bm25 snapshot serve diverged from the unbounded serve")
     val regHyb = ops.Retrieval.queries("search_hybrid_rrf_served_maxscore_now")(spark, sf0001)
       .collect().map(_.toSeq).toSeq
@@ -323,7 +327,7 @@ class BoundedServeSpec extends AnyFunSuite {
     assert(modes == Map(50L -> "pruned", 100L -> "fallback"),
       s"per-query modes $modes — want doc 50 pruned, doc 100 fallback")
     val unbounded = Retrieval.searchHybridRrfServed(spark, tmp).collect().map(_.toSeq).toSeq
-    val ms = Retrieval.searchHybridRrfServedMaxScore(spark, tmp).collect().map(_.toSeq).toSeq
+    val ms = Retrieval.searchHybridRrfServed(spark, tmp, TextAnalysis.Bound.MaxScore()).collect().map(_.toSeq).toSeq
     assert(ms.nonEmpty && ms === unbounded,
       "hybrid MaxScore serve diverged from the unbounded serve — it must be EXACT")
     // the pruned query's lexical list is where the mega posting would
@@ -386,7 +390,7 @@ class BoundedServeSpec extends AnyFunSuite {
       Seq(100L, 150L, 200L, 250L).forall(q => modes1.get(q) == "fallback"),
       s"mode coexistence under a tail: ${modes1.get}")
     val unbounded = Retrieval.searchHybridRrfServed(spark, tmp).collect().map(_.toSeq).toSeq
-    val ms = Retrieval.searchHybridRrfServedMaxScore(spark, tmp).collect().map(_.toSeq).toSeq
+    val ms = Retrieval.searchHybridRrfServed(spark, tmp, TextAnalysis.Bound.MaxScore()).collect().map(_.toSeq).toSeq
     assert(ms.nonEmpty && ms === unbounded,
       "post-append hybrid MaxScore diverged from the unbounded serve — it must stay EXACT")
     // the inclusion is DECISIVE, not vacuous: the tail doc outscores the
@@ -407,7 +411,7 @@ class BoundedServeSpec extends AnyFunSuite {
     assert(modes2.isDefined && modes2.get(50L) == "pruned",
       s"pruning must STAY engaged across a takedown: $modes2")
     val unbounded2 = Retrieval.searchHybridRrfServed(spark, tmp).collect().map(_.toSeq).toSeq
-    val ms2 = Retrieval.searchHybridRrfServedMaxScore(spark, tmp).collect().map(_.toSeq).toSeq
+    val ms2 = Retrieval.searchHybridRrfServed(spark, tmp, TextAnalysis.Bound.MaxScore()).collect().map(_.toSeq).toSeq
     assert(ms2 === unbounded2,
       "post-delete hybrid MaxScore diverged from the unbounded serve")
     assert(ms2.forall(r => !(r(2) == 274L && r(3) != null)),
@@ -430,7 +434,7 @@ class BoundedServeSpec extends AnyFunSuite {
     assert(cand.isDefined,
       "fixed-query pruning must engage at bm25LowDfShare on the oracle corpus")
     val exact = TextAnalysis.textBm25Served(spark, idx).collect().map(_.toSeq).toSeq
-    val low = TextAnalysis.textBm25ServedMaxScoreLowcutQuery(spark, sf001)
+    val low = SparkEntry.queries("text_bm25_served_maxscore_lowcut")(spark, sf001)
       .collect().map(_.toSeq).toSeq
     assert(low.nonEmpty && low === exact,
       "lowcut MaxScore serve must stay identical to the unbounded serve")
@@ -476,9 +480,9 @@ class BoundedServeSpec extends AnyFunSuite {
       "a cleared floor must engage: the gate reads the dictionary's mega df mass")
     // PARITY both ways: disengaged == unbounded == forced-engaged
     val exact = TextAnalysis.textBm25Served(spark, s"$tmp/idx").collect().map(_.toSeq).toSeq
-    assert(TextAnalysis.textBm25ServedMaxScore(spark, s"$tmp/idx")
+    assert(TextAnalysis.textBm25Served(spark, s"$tmp/idx", bound = TextAnalysis.Bound.MaxScore())
       .collect().map(_.toSeq).toSeq === exact)
-    assert(TextAnalysis.textBm25ServedMaxScore(spark, s"$tmp/idx", minMegaRows = 0L)
+    assert(TextAnalysis.textBm25Served(spark, s"$tmp/idx", bound = TextAnalysis.Bound.MaxScore(minMegaRows = 0L))
       .collect().map(_.toSeq).toSeq === exact)
   }
 
@@ -499,8 +503,8 @@ class BoundedServeSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$tmp/c/documents.parquet")
     TextAnalysis.textIndexWrite(spark, s"$tmp/c", s"$tmp/idx")
     def counters() = (Artifacts.hits.get(), Artifacts.misses.get())
-    def serve() = TextAnalysis.textBm25ServedMaxScore(spark, s"$tmp/idx",
-      minMegaRows = 0L).collect().map(_.toSeq).toSeq
+    def serve() = TextAnalysis.textBm25Served(spark, s"$tmp/idx",
+      bound = TextAnalysis.Bound.MaxScore(minMegaRows = 0L)).collect().map(_.toSeq).toSeq
     Artifacts.reset()
     val (h0, m0) = counters()
     val first = serve()
@@ -512,8 +516,8 @@ class BoundedServeSpec extends AnyFunSuite {
       "second serve on the frozen index must HIT — the decision pass ran twice")
     assert(second === first, "memo-hit serve diverged — must be byte-identical")
     // a different cut (or floor) is a DIFFERENT decision: its own entry
-    TextAnalysis.textBm25ServedMaxScore(spark, s"$tmp/idx",
-      maxDfShare = 0.5, minMegaRows = 0L).collect()
+    TextAnalysis.textBm25Served(spark, s"$tmp/idx",
+      bound = TextAnalysis.Bound.MaxScore(0.5, minMegaRows = 0L)).collect()
     assert(counters()._2 == m2 + 1, "a different cut must not share the memo entry")
     // APPEND invalidates: the fingerprint moves with the stamped files,
     // and the re-derived serve reflects the appended doc
@@ -562,7 +566,7 @@ class BoundedServeSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$tmpH/embeddings.parquet")
     val hIdx = TextAnalysis.textIndexFor(spark, tmpH)
-    def hserve() = Retrieval.searchHybridRrfServedMaxScore(spark, tmpH)
+    def hserve() = Retrieval.searchHybridRrfServed(spark, tmpH, TextAnalysis.Bound.MaxScore())
       .collect().map(_.toSeq).toSeq
     val hm0 = counters()._2
     val hFirst = hserve()
@@ -609,7 +613,7 @@ class BoundedServeSpec extends AnyFunSuite {
     val idx = TextAnalysis.textIndexFor(spark, tmp)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
     val want = rows(Retrieval.searchHybridRrfServed(spark, tmp))
-    val served = Retrieval.searchHybridRrfServedMaxScore(spark, tmp)
+    val served = Retrieval.searchHybridRrfServed(spark, tmp, TextAnalysis.Bound.MaxScore())
     // an append and a compaction land between the serve and its consumption
     TextAnalysis.textIndexAppendBatch(spark,
       Seq((121L, "spark alpha beta fresh", "en", "s"))
@@ -618,7 +622,7 @@ class BoundedServeSpec extends AnyFunSuite {
     assert(rows(served) === want && want.nonEmpty,
       "the late collect observed post-append index state — the served frame is not pinned")
     // a fresh serve re-derives at the new generation
-    val fresh = rows(Retrieval.searchHybridRrfServedMaxScore(spark, tmp))
+    val fresh = rows(Retrieval.searchHybridRrfServed(spark, tmp, TextAnalysis.Bound.MaxScore()))
     assert(fresh === rows(Retrieval.searchHybridRrfServed(spark, tmp)))
     assert(fresh != want, "the append must move the top-k, or the pin is vacuous")
   }
@@ -642,5 +646,44 @@ class BoundedServeSpec extends AnyFunSuite {
     TextAnalysis.textIndexCompact(spark, s"$tmp/idx")
     assert(dfOf("alpha") == 11L, "compact must recompute the dictionary")
     assert(dfOf("extra") == 1L)
+  }
+
+  test("constructing a served BM25 read runs no Spark job unbounded, and exactly the termstats collect under the df-share bound; MaxScore refuses a slice") {
+    val idx = TextAnalysis.textIndexFor(spark, sf0001)
+    IndexMaintenance.snapshot(spark, idx) // warm the log cache outside the count
+    // the zero-job health listener pattern: a labelled RDD sentinel job
+    // flushes the async listener bus, so every job posted before it has
+    // been counted once the sentinel is seen
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinelSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == "sentinel"))
+          sentinelSeen.set(true)
+        else jobs.incrementAndGet()
+    }
+    def jobsOf(construct: => org.apache.spark.sql.DataFrame): Int = {
+      jobs.set(0); sentinelSeen.set(false)
+      construct
+      IndexMaintenance.labeledJob(spark, "sentinel")(
+        spark.sparkContext.parallelize(Seq(1), 1).count())
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!sentinelSeen.get() && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(sentinelSeen.get(), "the sentinel job never reached the listener")
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val unbounded = jobsOf(TextAnalysis.textBm25Served(spark, idx))
+      assert(unbounded == 0, s"constructing the unbounded serve ran $unbounded Spark job(s) — " +
+        "the statistics must come from the index log")
+      val bounded = jobsOf(TextAnalysis.textBm25Served(spark, idx,
+        bound = TextAnalysis.Bound.DfShare(TextAnalysis.bm25MaxDfShare)))
+      assert(bounded == 1, s"constructing the df-share serve ran $bounded Spark job(s) — " +
+        "want exactly the termstats collect")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the MaxScore floor is seated over the whole corpus: not sound on a slice
+    intercept[IllegalArgumentException](TextAnalysis.textBm25Served(spark, idx,
+      Some(col("lang") === TextAnalysis.bm25FilterLang), TextAnalysis.Bound.MaxScore()))
   }
 }

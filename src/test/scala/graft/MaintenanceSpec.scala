@@ -144,6 +144,42 @@ class MaintenanceSpec extends AnyFunSuite {
     IndexMaintenance.checkUnique(spark, s"$root/idx", "postings", Seq("term", "doc_id"), "doc_id")
   }
 
+  test("corpus statistics are log facts: a build commits them, appends and deletes leave them frozen, compaction and a rebuild recompute them") {
+    import spark.implicits._
+    val root = tmpDir("text-facts")
+    smallTextIndex(root) // docs 1, 2 — two tokens each
+    val idx = s"$root/idx"
+    def facts: (Long, Long) = {
+      val p = IndexMaintenance.snapshot(spark, idx).props
+      (p("doclen.n_docs").toLong, p("doclen.dl_sum").toLong)
+    }
+    // what the hybrid serve scores with: the facts while the index is
+    // fresh, the live doclen aggregate under a tail or tombstones
+    def served: (Long, Double) = {
+      val (_, withStats) = ops.TextAnalysis.textIndexDoclenStats(spark, idx)
+      val r = withStats(Seq(1).toDF("one")).select(col("n_docs"), col("avgdl")).head()
+      (r.getLong(0), r.getDouble(1))
+    }
+    assert(facts == (2L, 4L), s"the build committed $facts")
+    assert(!IndexMaintenance.snapshot(spark, idx).hasTable("stats"), "the build wrote a stats table")
+    assert(ops.TextAnalysis.corpusStats(IndexMaintenance.snapshot(spark, idx)) == (2L, 2.0))
+    assert(served == (2L, 2.0))
+    ops.TextAnalysis.textIndexAppendBatch(spark, textBatch(3L, "gamma delta epsilon"), idx)
+    assert(facts == (2L, 4L), "an append re-estimated the frozen statistics")
+    assert(served == (3L, 7.0 / 3.0), "the live statistics missed the appended tail")
+    ops.TextAnalysis.textIndexDelete(spark, idx, Seq(1L))
+    assert(facts == (2L, 4L), "a delete re-estimated the frozen statistics")
+    assert(served == (2L, 2.5), "the live statistics counted a deleted doc")
+    ops.TextAnalysis.textIndexCompact(spark, idx)
+    assert(facts == (2L, 5L), "compaction did not recompute the statistics over the survivors")
+    assert(served == (2L, 2.5))
+    Seq((7L, "one two three four", "en", "s")).toDF("doc_id", "text", "lang", "source")
+      .write.parquet(s"$root/c2/documents.parquet")
+    ops.TextAnalysis.textIndexWrite(spark, s"$root/c2", idx)
+    assert(facts == (1L, 4L), "the rebuild kept the old corpus's statistics")
+    assert(served == (1L, 4.0))
+  }
+
   test("retry of a committed batch after a retrain lands nothing") {
     val root = tmpDir("retrain-retry")
     val emb = Tables(spark, TestSpark.sf0001, "embeddings")

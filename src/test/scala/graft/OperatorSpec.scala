@@ -15,7 +15,7 @@ class OperatorSpec extends AnyFunSuite {
     // scoring tail is shared, so the ranked frame must be identical
     import TestSpark.sf0001
     val shape = (r: org.apache.spark.sql.Row) => r.toSeq
-    val served = graft.ops.TextAnalysis.textBm25ServedQuery(spark, sf0001)
+    val served = SparkEntry.queries("text_bm25_served")(spark, sf0001)
       .collect().map(shape).toSeq
     val scan = graft.ops.TextAnalysis.textBm25Search(spark, sf0001)
       .collect().map(shape).toSeq
@@ -119,7 +119,7 @@ class OperatorSpec extends AnyFunSuite {
       graft.ops.TextAnalysis.bm25FilterLang), "served an out-of-slice doc")
     // frozen stats: scores must EQUAL the unfiltered run's for shared
     // docs (a per-slice df/avgdl re-estimate would change them)
-    val unfScore = graft.ops.TextAnalysis.textBm25ServedQuery(spark, sf0001)
+    val unfScore = SparkEntry.queries("text_bm25_served")(spark, sf0001)
       .collect().map(r => r.getLong(0) -> r.getDouble(r.length - 1)).toMap
     val drifted = filtered.count { r =>
       val id = r.head.asInstanceOf[Long]

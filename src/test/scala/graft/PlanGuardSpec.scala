@@ -530,6 +530,28 @@ class PlanGuardSpec extends AnyFunSuite {
       "scan-form hybrid no longer computes its lexical ranks from the corpus")
   }
 
+  test("served lexical plans scan no `stats` table: the corpus statistics are index-log facts") {
+    // walked on the plan tree, not its text: every file scan's root
+    // path, through AQE stages, reused exchanges, subqueries and the
+    // cached relations the hybrid serve memoizes
+    def scanRoots(p: SparkPlan): Seq[String] = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        scanRoots(a.executedPlan)
+      case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec => scanRoots(qs.plan)
+      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        scanRoots(m.relation.cachedPlan)
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => scanRoots(r.child)
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.rootPaths.map(_.toString)
+      case other => (other.children ++ other.subqueries).flatMap(scanRoots)
+    }
+    for (key <- Seq("text_bm25_served", "search_hybrid_rrf_served")) {
+      val roots = scanRoots(q(key).queryExecution.executedPlan)
+      assert(roots.exists(_.endsWith("/postings")), s"$key: the walk found no postings scan in $roots")
+      assert(!roots.exists(_.endsWith("/stats")), s"$key scans a stats table: $roots")
+    }
+  }
+
   test("maxscore floor + contender filter share ONE cheap-postings computation") {
     // r10 What's wrong #4: the cheap e-scores were evaluated twice —
     // once for the top-k floor collect, once for the contender filter.
@@ -570,7 +592,7 @@ class PlanGuardSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$tmp/c/documents.parquet")
     graft.ops.TextAnalysis.textIndexWrite(spark, s"$tmp/c", s"$tmp/idx")
     val txt = graft.ops.TextAnalysis.textBm25Served(spark, s"$tmp/idx",
-        maxDfShare = Some(graft.ops.TextAnalysis.bm25MaxDfShare))
+        bound = graft.ops.TextAnalysis.Bound.DfShare(graft.ops.TextAnalysis.bm25MaxDfShare))
       .queryExecution.executedPlan.toString
     val pushed = txt.linesIterator.filter(_.contains("PushedFilters")).mkString("\n")
     assert(pushed.contains("In(term"), "bounded serve lost the pushed term filter")

@@ -53,7 +53,9 @@ class TextIngestSpec extends AnyFunSuite {
       "grown doc-values diverged from the one-shot full-corpus build")
 
     // n_docs/avgdl stay FROZEN at the seed build after appends...
-    val seedStats = spark.read.parquet(s"$r/index/stats").collect().head
+    def statsOf(idx: String) = org.apache.spark.sql.Row.fromTuple(
+      TextAnalysis.corpusStats(IndexMaintenance.snapshot(spark, idx)))
+    val seedStats = statsOf(s"$r/index")
     val seedDocs = spark.read.parquet(s"$r/slice_0/documents.parquet")
       .filter(size(graft.functions.TextFns.tokens(col("text"))) >= 1).count()
     assert(seedStats.getLong(0) == seedDocs,
@@ -72,7 +74,7 @@ class TextIngestSpec extends AnyFunSuite {
     val caught = serveOf(s"$r/index")
     assert(caught === serveOf(s"$r/oneshot"),
       "post-compact serve diverged from the fresh full-corpus build")
-    val statsAfter = spark.read.parquet(s"$r/index/stats").collect().head
+    val statsAfter = statsOf(s"$r/index")
     assert(statsAfter.getLong(0) == doclenOf(s"$r/oneshot").size,
       "compaction did not recompute n_docs over the grown corpus")
 
@@ -284,6 +286,21 @@ class TextIngestSpec extends AnyFunSuite {
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(ledger, TextIngest.ledgerTable, committedFiles(ledger).head))
     intercept[Exception](totalsOf(ledger))
+  }
+
+  test("an unseeded ledger counts its first marked append as an appended batch, so 11 appends pass the alarm floor") {
+    import spark.implicits._
+    // no seed replace: the first append lands at version 0
+    val ledger = s"${java.nio.file.Files.createTempDirectory("graft-ledger-unseeded")}/ledger"
+    val one = Seq(("s1", 1L, 1L)).toDF("source", "n_docs", "n_tokens").coalesce(1)
+    (0L until 11L).foreach(b =>
+      IndexMaintenance.append(spark, ledger, Seq(TextIngest.ledgerTable -> one), mark = Some("L" -> b)))
+    assert(IndexMaintenance.snapshot(spark, ledger).appendedBatches(TextIngest.ledgerTable) == 11,
+      "the version-0 append was not counted as an appended batch")
+    assert(healthOf(ledger)("unrolled_batches") == 11.0, s"health misread the ledger: ${healthOf(ledger)}")
+    var fired = 0
+    graft.streaming.IngestDedup.alarmCadence(spark, Seq(ledger))(fired += 1)(3L)
+    assert(fired == 1, "11 appended batches did not fire the debt alarm off the floor")
   }
 
   test("token ledger cadence: the appended-batch alarm fires off the floor, and a 12-batch stream keeps the file count bounded") {
