@@ -249,7 +249,7 @@ object SelfChecks {
     * cost recall beyond a small ADC margin — at test scale the binding
     * constraint is the IVF pruning both paths share, so parity is the
     * right assertion; the ≥-PQ-auto-at-lower-budget claim only holds at
-    * scale and is measured in the 250k ScaleSmoke run instead). */
+    * scale; PLANS.md records the 250k measurement). */
   private def ivfPqCheck(s: SparkSession, dir: String): CheckResult = {
     val base = annCheck(ops.Similarity.simIvfPqTopk,
       "trained quantizer + statistic-derived probe count; not reproducible in static SQL")(s, dir)

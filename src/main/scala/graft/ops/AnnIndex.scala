@@ -317,8 +317,8 @@ object AnnIndex {
     * centroid array) and pushed into the list scan as `c_id IN (...)`,
     * which row-group-skips after [[ivfIndexCompact]]'s c_id sort —
     * unprobed lists' bytes are never read. Results are identical (the
-    * filter removes only lists the join would drop); bytes measured in
-    * ScaleSmoke, plan pinned in PlanGuardSpec. */
+    * filter removes only lists the join would drop); bytes pinned in
+    * AnnIndexSpec, plan in PlanGuardSpec. */
   def ivfIndexServe(s: SparkSession, indexDir: String, corpusDirs: Seq[String],
       queries: DataFrame, memberPred: Option[Column] = None,
       probeOverride: Option[Int] = None,
@@ -563,17 +563,6 @@ object AnnIndex {
       .select(col("c_id")).distinct().collect().map(_.getLong(0))
   }
 
-  /** Measurement accessor: the probed c_id set for `queries` against
-    * the persisted index's centroids, at the index's derived probe
-    * count or an explicit override (ScaleSmoke's bytes-read isolation
-    * uses both shapes). */
-  private[graft] def probedCellsOf(s: SparkSession, indexDir: String,
-      queries: DataFrame, probeOverride: Option[Int] = None): Array[Long] = {
-    val cent = IndexMaintenance.read(s, indexDir, "centroids")
-    probedCellsWith(cent, queries,
-      probeOverride.getOrElse(Similarity.ivfProbesFor(cent.count().toDouble)))
-  }
-
   // ------------------------------------------------------ drift retrain
   //
   // The append path freezes the quantizer (thresholds / centroids /
@@ -581,8 +570,8 @@ object AnnIndex {
   // the standing corpus. The cost of that semantic is DRIFT: as the
   // ingested corpus diverges from the seed distribution, frozen
   // thresholds unbalance buckets and frozen centroids stop covering the
-  // new region, so recall decays silently (measured in ScaleSmoke's
-  // drift experiment). Production deployments (FAISS/SPANN-style)
+  // new region, so buckets and lists crowd (pinned in IndexRetrainSpec's
+  // drift arm). Production deployments (FAISS/SPANN-style)
   // answer with an explicit OFFLINE RETRAIN on the current corpus —
   // train fresh quantizer, rebuild the assignment tables, commit them
   // as one log version — which is exactly what these operators do. The retrain

@@ -1148,7 +1148,7 @@ object Dedup {
     dedupSemanticWith(s, dir, _ => Similarity.trainedCentroidsOf(s, dir), tau)
 
   /** Clustered-geometry τ default, from the round-10 sweep on the
-    * 250k-vector ScaleSmoke corpora (PLANS.md has the full drop-rate
+    * 250k-vector scale corpora (PLANS.md has the full drop-rate
     * table per geometry). The measured cliff: on the 50-Gaussian
     * clustered family the drop rate is still 98.4% at τ=0.95 and falls
     * to 1.1% at τ=0.99 (planted-dup recall 0.936, false-drop 0.18%) —

@@ -311,8 +311,8 @@ object Retrieval {
     * avoid).
     *
     * The Some payload is (lexRanks frame, per-query decision frame
-    * (q_id, mode)) — the decisions feed the ScaleSmoke accounting and
-    * the BoundedServeSpec engagement pin. Like the fixed-query form,
+    * (q_id, mode)) — the decisions feed the BoundedServeSpec
+    * engagement and scan-row pins. Like the fixed-query form,
     * the returned frame SNAPSHOTS decision-time index state (tail file
     * list, banned head) — collect promptly when ingest is concurrent;
     * the served form memoizes it materialised per index generation. */

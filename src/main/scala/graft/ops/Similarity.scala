@@ -92,7 +92,7 @@ object Similarity {
 
   /** Brute force with an explicit member pool — the exact ground truth
     * for FILTERED ANN is "exhaustive over the slice", which is this
-    * with the filtered pool (ScaleSmoke's in-slice recall yardstick). */
+    * with the filtered pool (the in-slice recall yardstick). */
   private[graft] def simTopkBruteforceOver(s: SparkSession, dir: String,
       pool: DataFrame): DataFrame = {
     val n = normed(s, dir)
@@ -559,8 +559,8 @@ object Similarity {
     * corpora keep the oracle-checked configuration byte-for-byte (the
     * served/trained identity specs). Assignment becomes approximate
     * above it — a boundary vector can land in its second-best list —
-    * which the WIDE probe ring (the mass budget) absorbs; the clustered
-    * + near-orthogonal ScaleSmoke rows measure the recall. */
+    * which the WIDE probe ring (the mass budget) absorbs; PLANS.md
+    * ("Scale mains (deleted)") points at the 250k recall rows. */
   val twoLevelMinLists = 512
 
   /** Corpus-side list assignment for the auto path: exact below
@@ -672,6 +672,27 @@ object Similarity {
     * before the final ranking window. Rows-only (trained quantizer —
     * see [[trainedCentroidsOf]]). */
   def simIvfTopkAuto(s: SparkSession, dir: String): DataFrame = {
+    val (qlists, lists) = ivfAutoCells(s, dir)
+    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("cand_id"))
+    tiledTopkPairs(Seq("c_id"), qlists, lists)
+      .withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= topK)
+      .select(col("q_id"), col("rk"), col("cand_id"), col("cosine"))
+      .orderBy(col("q_id"), col("rk"))
+  }
+
+  /** Rows [[simIvfTopkAuto]] scores: Σ over probed lists of queries ×
+    * members, the work its mass budget bounds (brute force scores
+    * queries × corpus). */
+  private[graft] def ivfAutoScoredRows(s: SparkSession, dir: String): Long = {
+    val (qlists, lists) = ivfAutoCells(s, dir)
+    qlists.join(lists, "c_id")
+      .agg(sum(size(col("qs")).cast("long") * size(col("cands")))).head().getLong(0)
+  }
+
+  /** The auto path's probed cells, (c_id, qs), and its built lists,
+    * (c_id, cands). */
+  private def ivfAutoCells(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     // exact row count, not the byte-size estimate (round 8): cheap
     // (footer-only count-star) and it makes the statistic-derived probe
     // count EQUAL the served path's list-count-derived one everywhere,
@@ -700,12 +721,7 @@ object Similarity {
         cap, listSizes, massBudget, broadcastQueries = false)
       .groupBy(col("c_id"))
       .agg(collect_list(struct(col("vec_id"), col("embedding"), col("nrm"))).as("qs"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("cand_id"))
-    tiledTopkPairs(Seq("c_id"), qlists, lists)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= topK)
-      .select(col("q_id"), col("rk"), col("cand_id"), col("cosine"))
-      .orderBy(col("q_id"), col("rk"))
+    (qlists, lists)
   }
 
   // ---------------------------------------------------------------- PQ
@@ -1076,7 +1092,7 @@ object Similarity {
     * Rows-only (trained quantizer + statistic-derived probes); the
     * self-check asserts the usual exact-cosine/dense-rank contract,
     * recall parity with [[simIvfTopkAuto]] at test scale, and the
-    * 250k ScaleSmoke row measures the ≥-PQ-auto-at-lower-budget claim
+    * 250k row in PLANS.md measures the ≥-PQ-auto-at-lower-budget claim
     * where it actually holds (at toy scale the flat PQ scan is
     * near-exhaustive, so pruning necessarily costs recall there). */
   def simIvfPqTopk(s: SparkSession, dir: String): DataFrame = {

@@ -335,8 +335,8 @@ object TextAnalysis {
     *  - LINEAGE TRUNCATION: every [[bpeCheckpointRounds]] rounds the
     *    vocabulary localCheckpoints, so plan depth (and per-round
     *    analysis cost) is bounded by a constant instead of growing with
-    *    the merge count — flat per-merge wall time, measured in
-    *    ScaleSmoke at 500+ merges over the 100k-doc corpus.
+    *    the merge count — flat per-merge cost, pinned in BpeTrainSpec as
+    *    Spark jobs per batch of merges at 100 and 500 merges.
     *
     * The corpus is still read ONCE (the word-frequency aggregation);
     * every round runs over the vocabulary. Output schema matches the

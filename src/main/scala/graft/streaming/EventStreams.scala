@@ -48,10 +48,10 @@ object EventStreams {
     * 7.5 s). State partitioning is LOCKED at the first micro-batch by
     * `spark.sql.shuffle.partitions` (AQE never re-plans stateful
     * streams), so it must be sized to peak STATE volume up front — tiny
-    * here, hence 8. The production `*ToFiles` paths take the same knob
-    * as an explicit `statePartitions` parameter instead (see
-    * [[withOptStatePartitions]]): their operators own their checkpoint
-    * lifecycle, and a 100 TB deployment sizes partitions to ITS state. */
+    * here, hence 8. The production `*ToFiles` paths inherit the
+    * session's `spark.sql.shuffle.partitions`: their operators own their
+    * checkpoint lifecycle, so a deployment sizes that setting to ITS
+    * peak state before the first start. */
   private val harnessStatePartitions = 8
 
   /** Pin `spark.sql.shuffle.partitions` for the duration of a streaming
@@ -63,21 +63,6 @@ object EventStreams {
     s.conf.set(key, n.toString)
     try body finally s.conf.set(key, old)
   }
-
-  /** State-partition sizing for the production `*ToFiles` paths. Every
-    * stateful micro-batch pays one state-store commit PER PARTITION PER
-    * STORE regardless of how little state it holds (an interval join
-    * runs four stores), so partitions must be sized to peak state
-    * volume, not left at the session's scan-side default: the round-5/6
-    * replays measured the interval join at ~357 s on 5M trivial events
-    * at 32 partitions — 4·32·90 commits of overhead — on BOTH the HDFS
-    * and RocksDB providers, vs well under that when right-sized.
-    * `None` inherits the session setting (a 100 TB deployment with
-    * GB-scale state wants MANY partitions; a replay holding ~60k state
-    * rows wants few). The knob is deliberately per-query: state
-    * partitioning locks into the checkpoint at first start. */
-  private def withOptStatePartitions[T](s: SparkSession, n: Option[Int])(body: => T): T =
-    n.fold(body)(withStatePartitions(s, _)(body))
 
   /** Streaming tumbling-window counts per (hour, event_type). */
   def streamHourCounts(s: SparkSession, dir: String): DataFrame = {
@@ -274,8 +259,7 @@ object EventStreams {
     * (`maxFilesPerTrigger`) and stops — the same code with the default
     * continuous trigger is the live-ingestion deployment. */
   def streamHourCountsToFiles(s: SparkSession, srcDir: String, outDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1,
-      statePartitions: Option[Int] = None): Unit = {
+      checkpointDir: String, maxFilesPerTrigger: Int = 1): Unit = {
     val agg = s.readStream.schema(feedSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .parquet(srcDir)
@@ -283,7 +267,7 @@ object EventStreams {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("window.start").as("hour"), col("event_type"), col("n_events"))
-    withRocksDbState(s) { withOptStatePartitions(s, statePartitions) {
+    withRocksDbState(s) {
       val q = agg.writeStream
         .outputMode("append")
         .format("parquet")
@@ -292,7 +276,7 @@ object EventStreams {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } }
+    }
   }
 
   /** PRODUCTION landing-zone ingest-dedup: the deduped APPEND stream
@@ -303,14 +287,13 @@ object EventStreams {
     * sentinel is needed. Counterpart of the memory-sink
     * `streamDedupCounts` oracle harness above. */
   def streamDedupToFiles(s: SparkSession, srcDir: String, outDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1,
-      statePartitions: Option[Int] = None): Unit = {
+      checkpointDir: String, maxFilesPerTrigger: Int = 1): Unit = {
     val deduped = s.readStream.schema(feedSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .parquet(srcDir)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
-    withRocksDbState(s) { withOptStatePartitions(s, statePartitions) {
+    withRocksDbState(s) {
       val q = deduped.writeStream
         .outputMode("append")
         .format("parquet")
@@ -319,7 +302,7 @@ object EventStreams {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } }
+    }
   }
 
   /** PRODUCTION stream-stream interval join: click→error matches land
@@ -329,8 +312,7 @@ object EventStreams {
     * join state (rows older than watermark − interval are evicted).
     * Counterpart of the memory-sink `streamStreamJoin` harness. */
   def streamStreamJoinToFiles(s: SparkSession, srcDir: String, outDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1,
-      statePartitions: Option[Int] = None): Unit = {
+      checkpointDir: String, maxFilesPerTrigger: Int = 1): Unit = {
     def src = s.readStream.schema(feedSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .parquet(srcDir)
@@ -344,7 +326,7 @@ object EventStreams {
       expr("c_user = e_user AND e_ts >= c_ts AND e_ts <= c_ts + interval 5 minutes"))
       .select(col("c_user").as("user_id"), col("click_id"), col("err_id"),
         (unix_micros(col("e_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
-    withRocksDbState(s) { withOptStatePartitions(s, statePartitions) {
+    withRocksDbState(s) {
       val q = joined.writeStream
         .outputMode("append")
         .format("parquet")
@@ -353,7 +335,7 @@ object EventStreams {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } }
+    }
   }
 
   /** PRODUCTION stateful counts: `flatMapGroupsWithState` emits keyed
@@ -367,8 +349,7 @@ object EventStreams {
     * foreachBatch body would MERGE instead; parquet is what this
     * container has. */
   def streamStatefulCountsToFiles(s: SparkSession, srcDir: String, outDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1,
-      statePartitions: Option[Int] = None): Unit = {
+      checkpointDir: String, maxFilesPerTrigger: Int = 1): Unit = {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val updates = s.readStream.schema(feedSchema)
@@ -383,7 +364,7 @@ object EventStreams {
           Iterator((key, n))
         })
       .toDF("event_type", "n_events")
-    withRocksDbState(s) { withOptStatePartitions(s, statePartitions) {
+    withRocksDbState(s) {
       val q = updates.writeStream
         .outputMode("update")
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -397,7 +378,7 @@ object EventStreams {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } }
+    }
   }
 
   /** Serving view over the changelog `streamStatefulCountsToFiles`

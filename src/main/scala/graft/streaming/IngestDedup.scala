@@ -67,12 +67,11 @@ object IngestDedup {
     * file source requires an explicit schema: footer-read one landed
     * file (same move as EventStreams.eventsStream). */
   private[streaming] def runLandingStream(s: SparkSession, landingDir: String,
-      checkpointDir: String, maintenance: Long => Unit = _ => (),
-      filesPerTrigger: Int = 1)(
+      checkpointDir: String, maintenance: Long => Unit = _ => ())(
       process: (DataFrame, Long) => Unit): Unit = {
     val schema = s.read.parquet(landingDir).schema
     val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
+      .option("maxFilesPerTrigger", 1)
       .parquet(landingDir)
     // foreachBatch is AT-LEAST-ONCE: a batch retried after its writes
     // but before the checkpoint commit re-appends IDENTICAL rows. The
@@ -139,11 +138,11 @@ object IngestDedup {
     * seeded by [[Dedup.ingestManifestIndexInit]] (signature+md5 index,
     * eval bloom, eval shingle table). */
   def streamIngestManifestToFiles(s: SparkSession, landingDir: String, indexDir: String,
-      outDir: String, checkpointDir: String, filesPerTrigger: Int = 1): Unit =
+      outDir: String, checkpointDir: String): Unit =
     runLandingStream(s, landingDir, checkpointDir, alarmCadence(s, Seq(indexDir, outDir)) {
       Dedup.ingestIndexCompact(s, indexDir)
       Dedup.ingestSinkCompact(s, outDir)
-    }, filesPerTrigger) { (batch, batchId) =>
+    }) { (batch, batchId) =>
       Dedup.ingestManifestBatch(s, batch, indexDir, outDir, batchId,
         graft.ops.IndexMaintenance.lineageTag(checkpointDir))
     }

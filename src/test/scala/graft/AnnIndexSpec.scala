@@ -281,4 +281,63 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(filtered.forall(r => slice.contains(r.getLong(2))),
       "filtered stride twin served an out-of-slice candidate")
   }
+
+  test("probed-cell pushdown: c_id-sorted lists read under half the bytes of hash-scattered ones; pushed serve == full serve") {
+    import graft.ops.{Artifacts, IndexMaintenance}
+    val tmp = java.nio.file.Files.createTempDirectory("ivf-prune").toString
+    // 200k pseudo-noise vectors in 4 files: the fresh list table is the
+    // assignment output, so every row group spans the whole c_id range
+    // (8 dimensions keep the stride assignment cheap; lists hold ids only)
+    spark.range(200000).select(col("id").as("vec_id"),
+        transform(sequence(lit(1), lit(8)), d => TestSpark.noise(col("id"), d).cast("float"))
+          .as("embedding"),
+        pmod(col("id"), lit(10)).cast("int").as("label"))
+      .repartition(4).write.parquet(s"$tmp/c/embeddings.parquet")
+    val idx = s"$tmp/idx"
+    // production row-group geometry: at the 128 MB default each list
+    // file is ONE row group and nothing can be skipped
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("parquet.block.size" -> 256 * 1024, "parquet.page.size" -> 64 * 1024)
+    val olds = keys.map { case (k, _) => k -> Option(hconf.get(k)) }
+    try {
+      keys.foreach { case (k, v) => hconf.setInt(k, v) }
+      AnnIndex.ivfIndexWriteStride(spark, s"$tmp/c", idx)
+      // the point-lookup shape: two queries at the pinned nProbe probe a
+      // handful of the 2,000 lists
+      val q = Similarity.normed(spark, s"$tmp/c")
+        .filter(col("vec_id") % 100000 === 7)
+        .select(col("vec_id").as("q_id"), col("embedding"))
+      // each query's nProbe nearest centroids by cosine (c_id tie-break)
+      val cents = spark.read.parquet(s"$idx/centroids")
+        .select(col("c_id"), col("c_emb").cast("array<double>")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1)))
+      def cos(a: Seq[Double], b: Seq[Double]): Double =
+        a.zip(b).map { case (x, y) => x * y }.sum / math.sqrt(a.map(x => x * x).sum * b.map(x => x * x).sum)
+      val cells = q.select(col("embedding").cast("array<double>")).collect().flatMap { r =>
+        val e = r.getSeq[Double](0)
+        cents.sortBy { case (c, v) => (-cos(e, v), c) }.take(Similarity.nProbe).map(_._1)
+      }.distinct
+      // the list read of the pushed serve, measured alone (the serve's
+      // member join reads the whole embeddings table)
+      def listBytes(): Long = TestSpark.inputRead(_.bytesRead) {
+        IndexMaintenance.scan(spark, idx, "lists", "vec_id")
+          .filter(col("c_id").isin(cells: _*))
+          .agg(sum(col("vec_id") + col("c_id"))).collect(); ()
+      }
+      val scattered = listBytes()
+      AnnIndex.ivfIndexCompact(spark, idx)
+      val sorted = listBytes()
+      info(s"${cells.length} probed lists: hash-scattered read $scattered B, c_id-sorted $sorted B")
+      assert(cells.nonEmpty && sorted > 0 && sorted < scattered / 2,
+        s"c_id sort did not enable pruning: sorted+push $sorted B vs unsorted+push $scattered B")
+      def serve(push: Boolean) = {
+        Artifacts.invalidate(spark, s"$idx|")
+        AnnIndex.ivfIndexServe(spark, idx, Seq(s"$tmp/c"), q, pushProbedCells = push)
+          .collect().map(shape).toSeq
+      }
+      val pushed = serve(push = true)
+      assert(pushed.nonEmpty && pushed === serve(push = false),
+        "probed-cell pushdown changed the serve result")
+    } finally olds.foreach { case (k, o) => o.fold(hconf.unset(k))(hconf.set(k, _)) }
+  }
 }

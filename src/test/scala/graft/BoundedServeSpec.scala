@@ -420,6 +420,80 @@ class BoundedServeSpec extends AnyFunSuite {
       "(otherwise the post-delete identity is vacuous)")
   }
 
+  test("bounded serves keep the mega posting in the scan: df-share skips >= 90% of its rows, " +
+      "MaxScore half, hybrid MaxScore reads fewer rows than unbounded") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("bounded-scan").toString
+    // 10,000 docs: 20 filler words from a 200-word vocabulary, 'spark'
+    // six times in EVERY doc (a fat 10k-row posting run, the stopword
+    // shape), 'join' every 250th doc, 'vector' every 241st
+    val nDoc = 10000L
+    def filler(i: Long): Seq[String] = (0 until 20).map(w => s"w${(i * 31 + w * 7919) % 200}")
+    def corpus(ids: Seq[Long], text: Long => String, dir: String): Unit =
+      ids.map(i => (i, text(i), "en", "s")).toDF("doc_id", "text", "lang", "source")
+        .write.parquet(s"$dir/documents.parquet")
+    def stopText(i: Long): String = (filler(i) ++ Seq.fill(6)("spark") ++
+      (if (i % 250 == 0) Seq("join") else Nil) ++ (if (i % 241 == 0) Seq("vector") else Nil))
+      .mkString(" ")
+    corpus(1L to nDoc, stopText, s"$tmp/stop")
+    // the hybrid slice: 2,000 docs whose stride query docs lead with the
+    // stopword, so every query's slot 1 is mega and its other slots stay
+    // organic filler
+    corpus(1L to 2000L, i => (if (i % graft.ops.Similarity.queryStride == 0) "spark " else "") +
+      stopText(i), s"$tmp/hyb")
+    // small row groups and 20-row pages, so the skip a pushed predicate
+    // earns at production scale is visible on 10k docs; compaction's
+    // (term, doc_id) sort is what makes the predicates prune
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("parquet.block.size" -> (1 << 20), "parquet.page.row.count.limit" -> 20)
+    val olds = keys.map { case (k, _) => k -> Option(hc.get(k)) }
+    try {
+      keys.foreach { case (k, v) => hc.setInt(k, v) }
+      for (d <- Seq("stop", "hyb")) {
+        TextAnalysis.textIndexWrite(spark, s"$tmp/$d", s"$tmp/$d-idx")
+        TextAnalysis.textIndexCompact(spark, s"$tmp/$d-idx")
+      }
+    } finally olds.foreach { case (k, o) => o.fold(hc.unset(k))(hc.set(k, _)) }
+    // rows leaving the postings scan under each serve's pushed predicate
+    def scanRows(f: => Unit): Long = TestSpark.inputRead(_.recordsRead)(f)
+    val idx = s"$tmp/stop-idx"
+    def postingRows(pred: org.apache.spark.sql.Column): Long = scanRows {
+      IndexMaintenance.read(spark, idx, "postings").filter(pred)
+        .select(col("term"), col("doc_id"), col("tf"))
+        .write.mode("overwrite").format("noop").save()
+    }
+    val unbounded = postingRows(col("term").isin(TextAnalysis.bm25Query: _*))
+    val survivors = TextAnalysis.boundedQueryTerms(spark, idx,
+      TextAnalysis.bm25Query, TextAnalysis.bm25MaxDfShare)
+    assert(survivors == Seq("join", "vector"), s"df-share cut resolved $survivors")
+    val bounded = postingRows(col("term").isin(survivors: _*))
+    val cand = TextAnalysis.maxScoreContenders(spark, idx, minMegaRows = 0L)
+      .getOrElse(fail("MaxScore pruning must engage on the stopword corpus")).contenders
+    val maxScore = postingRows(col("term").isin(TextAnalysis.bm25Query: _*) &&
+      col("doc_id").isin(cand: _*) && col("doc_id") >= lit(cand.min) && col("doc_id") <= lit(cand.max))
+    val hybDir = s"$tmp/hyb"
+    val (hybLex, hybModes) = graft.ops.Retrieval.hybridMaxScoreLex(spark, hybDir, s"$hybDir-idx")
+      .getOrElse(fail("hybrid MaxScore must engage on the stopword corpus"))
+    assert(hybModes.filter(col("mode") === "pruned").count() > 0, "no hybrid query pruned")
+    def lexRows(df: org.apache.spark.sql.DataFrame): (Set[Seq[Any]], Long) = {
+      var rows = Set.empty[Seq[Any]]
+      val n = scanRows { rows = df.collect().map(_.toSeq).toSet }
+      (rows, n)
+    }
+    val (hybRows, hybScan) = lexRows(hybLex)
+    val (unRows, unScan) = lexRows(graft.ops.Retrieval.lexRanksOver(spark, hybDir,
+      IndexMaintenance.read(spark, s"$hybDir-idx", "postings")
+        .select(col("doc_id"), col("term"), col("tf"))))
+    info(s"postings rows read: unbounded $unbounded, df-share $bounded, MaxScore $maxScore " +
+      s"(${cand.size} contenders); hybrid lex MaxScore $hybScan vs unbounded $unScan")
+    assert(unbounded - bounded >= nDoc * 9 / 10,
+      s"df-share scan read $bounded rows vs $unbounded unbounded: the mega posting was not skipped")
+    assert(unbounded - maxScore >= nDoc / 2,
+      s"MaxScore contender scan read $maxScore rows vs $unbounded: under half the mega posting skipped")
+    assert(hybRows.nonEmpty && hybRows == unRows, "hybrid MaxScore lexical ranks diverged")
+    assert(hybScan < unScan, s"hybrid MaxScore read $hybScan rows vs $unScan unbounded")
+  }
+
   test("lowcut twins: the ENGAGED-pruning plan is what runs under the oracle (sf0.01)") {
     import TestSpark.sf001
     // the registered *_maxscore_lowcut queries exist so the PRUNED arm

@@ -458,4 +458,36 @@ class BpeTrainSpec extends AnyFunSuite {
       s"scale-mode BPE read ${acc.get()} B against a $docBytes B corpus — " +
         "rounds are re-reading the documents parquet instead of the checkpointed vocab")
   }
+
+  test("scale mode runs no more Spark jobs per batch of merges at 500 merges than at 100") {
+    // what a 500-merge training costs beyond a 100-merge one is its
+    // driver round-trips: one selection per BATCH of merges, with the
+    // lineage truncated every few rounds. Counted exactly: the jobs per
+    // batch must not grow from 100 to 500 merges, and a batch must cost
+    // a bounded handful of jobs — a per-merge selection would run
+    // bpeBatchMerges times as many
+    import spark.implicits._
+    // 400 docs of 40 words drawn from 3,000 random 4-10 letter words: a
+    // vocabulary that still has merges to learn past 500 (sf0.001's
+    // runs out near 90)
+    val dir = java.nio.file.Files.createTempDirectory("bpe-jobs").toString
+    val rnd = new scala.util.Random(17)
+    val vocab = Array.fill(3000)(Seq.fill(4 + rnd.nextInt(7))(('a' + rnd.nextInt(26)).toChar).mkString)
+    (0L until 400L).map(i => (i, Seq.fill(40)(vocab(rnd.nextInt(vocab.length))).mkString(" "), "en", "s"))
+      .toDF("doc_id", "text", "lang", "source")
+      .write.parquet(s"$dir/documents.parquet")
+    def jobsFor(k: Int): (Long, Int) = {
+      var learned = 0L
+      val jobs = TestSpark.jobsRun { learned = TextAnalysis.textBpeTrainScaled(spark, dir, k).count() }
+      (learned, jobs)
+    }
+    val ((m100, j100), (m500, j500)) = (jobsFor(100), jobsFor(500))
+    def batches(m: Long) = math.ceil(m.toDouble / TextAnalysis.bpeBatchMerges)
+    info(s"$j100 jobs for $m100 merges, $j500 jobs for $m500 merges")
+    assert(m100 == 100 && m500 == 500, s"learned $m100 and $m500 merges")
+    assert(j500 / batches(m500) <= j100 / batches(m100),
+      s"jobs per batch grew: $j100 jobs for $m100 merges, $j500 for $m500")
+    assert(j500 / batches(m500) < TextAnalysis.bpeBatchMerges / 2,
+      s"$j500 jobs for $m500 merges — selection is not batched")
+  }
 }

@@ -570,6 +570,43 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(auto === pinned, "auto-depth diverged from the pinned index on a small corpus")
   }
 
+  test("auto ANN on CLUSTERED geometry: LSH and IVF keep recall; mass-budgeted IVF " +
+      "scores fewer rows than brute force at recall >= 0.9") {
+    import org.apache.spark.sql.functions._
+    // 5,000 vectors from a mixture of 50 clusters with a linear size skew
+    // (c = floor(sqrt(h)) over h uniform in [0, 2500) makes P(c) ∝ 2c+1)
+    // and a 0.35 spread: the topical shape real sentence embeddings take,
+    // where list-count probing pays for the hot lists
+    val tmp = java.nio.file.Files.createTempDirectory("ann-clustered").toString
+    import TestSpark.noise
+    val c = floor(sqrt(pmod(hash(col("id")), lit(2500)).cast("double"))).cast("long")
+    val n = 5000L
+    spark.range(n).select(col("id").as("vec_id"),
+        transform(sequence(lit(1), lit(Similarity.embDims)), d =>
+          (noise(c * 7919L + 13L, d) + noise(col("id") + 31337L, d) * lit(0.35)).cast("float"))
+          .as("embedding"),
+        pmod(col("id"), lit(10)).cast("int").as("label"))
+      .write.parquet(s"$tmp/embeddings.parquet")
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("q_id", "cand_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = pairs(Similarity.simTopkBruteforce(spark, tmp))
+    def recall(got: Set[(Long, Long)]): Double = (exact intersect got).size.toDouble / exact.size
+    val lshRecall = recall(pairs(Similarity.simLshAnnAuto(spark, tmp)))
+    val ivfRecall = recall(pairs(Similarity.simIvfTopkAuto(spark, tmp)))
+    // the work the brute-force time paid for against the auto path's
+    val bruteRows = exact.map(_._1).size.toLong * n
+    val ivfRows = Similarity.ivfAutoScoredRows(spark, tmp)
+    info(f"recall@5: lsh auto $lshRecall%.3f, ivf auto $ivfRecall%.3f; " +
+      s"ivf auto scores $ivfRows rows vs brute force $bruteRows")
+    assert(exact.nonEmpty, "vacuous ground truth")
+    assert(lshRecall > 0.5 && ivfRecall > 0.5,
+      "auto-tuned ANN collapsed on clustered geometry — re-derive the constants")
+    assert(ivfRecall >= 0.9 && ivfRows < bruteRows,
+      f"mass-budgeted auto-IVF scored $ivfRows rows vs brute force $bruteRows, " +
+        f"recall $ivfRecall%.3f (want fewer rows at recall >= 0.9)")
+    graft.ops.Artifacts.invalidate(spark, s"$tmp|")
+  }
+
   test("range search returns exactly the in-radius subset of each query's neighbors") {
     import org.apache.spark.sql.functions._
     val inRange = Similarity.simRangeSearch(spark, sf0001).collect()

@@ -51,7 +51,7 @@ class IndexHealthSpec extends AnyFunSuite {
     // corpus whose mass crowds a cone around direction 0 (with
     // deterministic per-vector wobble) while the stride centroids sit
     // mostly in spread directions: one list takes nearly everything —
-    // the ScaleSmoke drift geometry in miniature
+    // a drift geometry in miniature
     val dims = graft.ops.Similarity.embDims
     val rows = (0L until 600L).map { i =>
       val v = Array.fill(dims)(0.001f)
@@ -73,8 +73,8 @@ class IndexHealthSpec extends AnyFunSuite {
     assert(h("data_files") >= 1.0)
     // ...and stays quiet on a spread corpus: the real testdata
     // embeddings are near-orthogonal, so the stride lists are balanced
-    // (the retrain-restores-balance half is measured on realistic
-    // drifted data in ScaleSmoke, skew 39.6 -> 2.2, asserted in-run)
+    // (the retrain-restores-balance half is pinned by IndexRetrainSpec's
+    // drift arm)
     val balIdx = java.nio.file.Files.createTempDirectory("ivf-health-bal").toString
     AnnIndex.ivfIndexWriteStride(spark, sf0001, balIdx)
     val hb = metricsOf(AnnIndex.ivfIndexHealth(spark, balIdx))

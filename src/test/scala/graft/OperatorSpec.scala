@@ -865,6 +865,19 @@ class OperatorSpec extends AnyFunSuite {
     // exact-confirms its flagged slice and carries a full DuckDB oracle)
   }
 
+  test("decontaminate_bloom_served flags every doc the exact shingle join flags") {
+    import org.apache.spark.sql.functions.col
+    import TestSpark.sf0001
+    // the bloom screen has no false negatives, so the two-tier serve's
+    // flagged set contains the exact join's, doc for doc
+    val exact = graft.ops.Curation.decontaminateNgram(spark, sf0001)
+      .filter(col("n_shared") > 0).select("doc_id").collect().map(_.getLong(0)).toSet
+    val bloom = graft.ops.Curation.decontaminateBloomServed(spark, sf0001)
+      .filter(col("is_contaminated")).select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(exact.nonEmpty, "no contaminated doc on the shared corpus: the comparison is vacuous")
+    assert(exact.subsetOf(bloom), s"bloom serve missed exact-flagged docs: ${exact -- bloom}")
+  }
+
   test("text and simhash index compaction: fewer files, identical serving") {
     import TestSpark.sf0001
     val idx = java.nio.file.Files.createTempDirectory("text-idx").toString

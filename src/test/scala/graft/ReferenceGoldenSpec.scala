@@ -153,11 +153,20 @@ class ReferenceGoldenSpec extends AnyFunSuite {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val ops = Seq("mci", "mtn", "rtl")
-    val rows = Seq.tabulate(300) { i =>
+    val generated = Seq.tabulate(300) { i =>
       val st = rnd.nextInt(500)
       val en = st + rnd.nextInt(100)
       (ops(rnd.nextInt(3)), s"n${rnd.nextInt(40)}", st, en)
     }
+    // fixed rows for the edges a sweep must get right, one op each:
+    // touching intervals (ends are inclusive, so both are active at 20),
+    // nested intervals, and one number whose intervals overlap and touch
+    // (it counts once, however many of its intervals are open)
+    val fixed = Seq(
+      ("touch", "a", 10, 20), ("touch", "b", 20, 30),
+      ("nest", "a", 0, 100), ("nest", "b", 10, 20), ("nest", "c", 12, 15),
+      ("same", "a", 0, 10), ("same", "a", 5, 15), ("same", "a", 15, 25), ("same", "b", 40, 50))
+    val rows = generated ++ fixed
     val path = java.nio.file.Files.createTempDirectory("w3").resolve("in.txt")
     java.nio.file.Files.write(path,
       rows.map { case (o, n, s0, e0) => s"$o $n $s0 $e0" }.mkString("\n").getBytes)
@@ -172,5 +181,6 @@ class ReferenceGoldenSpec extends AnyFunSuite {
     val got = ReferenceJobs.peakNumbers(spark, path.toString)
       .as[(String, Long)].collect().toMap
     assert(got === expected)
+    assert(Seq("touch", "nest", "same").map(got) === Seq(2L, 3L, 1L))
   }
 }

@@ -172,6 +172,89 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === want)
   }
 
+  /** Peak state rows, summed over the stateful operators, of the one
+    * streaming query `run` starts and drains. Waits for the query's
+    * terminated event: the listener bus delivers events in order, so
+    * every progress event has landed by then. */
+  private def peakStateRows(run: => Unit): Long = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val peak = new java.util.concurrent.atomic.AtomicLong()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val l = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        peak.accumulateAndGet(e.progress.stateOperators.map(_.numRowsTotal).sum, math.max(_, _))
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        done.countDown()
+    }
+    spark.streams.addListener(l)
+    try {
+      run
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "no terminated event")
+    } finally spark.streams.removeListener(l)
+    peak.get()
+  }
+
+  test("production stateful sinks: state stays within the watermark span, not the replay length") {
+    import org.apache.spark.sql.Row
+    // 16 event-time-ordered files of 2 hours each (a 32-hour replay),
+    // 200 events per hour over 40 users and 5 types; the dedup feed
+    // carries every row twice inside its file
+    val files = 16
+    val fileHours = 2
+    val perHour = 200
+    val types = Seq("view", "click", "purchase", "signup", "error")
+    val day0 = 1704067200000L // 2024-01-01 UTC, ms
+    val chunks = (0 until files).map { f =>
+      (0 until perHour * fileHours).map { k =>
+        val id = f.toLong * perHour * fileHours + k
+        Row(id, new java.sql.Timestamp(day0 + f * fileHours * 3600000L + k * 18000L),
+          id % 40, types(((id * 7 + 3) % 5).toInt), (id % 100) / 10.0)
+      }
+    }
+    val (_, schema) = feedRowsAndSchema()
+    val feed = chunks.flatten.size.toLong
+    def stage(tag: String, doubled: Boolean): java.nio.file.Path = {
+      val base = java.nio.file.Files.createTempDirectory(tag)
+      stageEventFiles(base, if (doubled) chunks.map(c => c ++ c) else chunks, schema)
+      base
+    }
+    def peakOf(tag: String, doubled: Boolean)(
+        sink: (String, String, String) => Unit): (Long, java.nio.file.Path) = {
+      val base = stage(tag, doubled)
+      (peakStateRows(sink(base.resolve("src").toString, base.resolve("out").toString,
+        base.resolve("ckpt").toString)), base)
+    }
+    val (aggPeak, _) = peakOf("state-hour", doubled = false)(
+      EventStreams.streamHourCountsToFiles(spark, _, _, _))
+    val (dedupPeak, dedupBase) = peakOf("state-dedup", doubled = true)(
+      EventStreams.streamDedupToFiles(spark, _, _, _))
+    val (joinPeak, _) = peakOf("state-join", doubled = false)(
+      EventStreams.streamStreamJoinToFiles(spark, _, _, _))
+    val (countsPeak, _) = peakOf("state-counts", doubled = false)(
+      EventStreams.streamStatefulCountsToFiles(spark, _, _, _))
+    // the doubled feed still lands once per event
+    assert(spark.read.parquet(dedupBase.resolve("out").toString).count() == feed)
+    // the 1-hour watermark trails the newest event by an hour and a
+    // trigger evicts against the previous trigger's watermark, so state
+    // can hold the events of the watermark plus two file spans; an
+    // unbounded operator holds the whole replay (6.4x that)
+    val spanHours = 1 + 2 * fileHours
+    val rowBound = perHour * spanHours
+    assert(feed > 6 * rowBound, "replay too short to tell a bound from growth")
+    info(s"peak state rows: hour counts $aggPeak, dedup $dedupPeak, join $joinPeak, " +
+      s"stateful counts $countsPeak; replay $feed events, bound $rowBound")
+    assert(dedupPeak > 0 && dedupPeak < rowBound, s"dedup state ($dedupPeak rows) not watermark-bounded")
+    assert(joinPeak > 0 && joinPeak < rowBound, s"join state ($joinPeak rows) not watermark-bounded")
+    // the hourly histogram keys state by (window, type): only windows
+    // inside the span stay open, against 32 x 5 over the whole replay
+    assert(aggPeak > 0 && aggPeak <= types.size * spanHours,
+      s"hour-count state ($aggPeak rows) not watermark-bounded")
+    // the changelog counts keep one row per key, whatever the replay
+    assert(countsPeak > 0 && countsPeak <= types.size,
+      s"stateful-counts state ($countsPeak rows) exceeds O(keys)")
+  }
+
   test("streaming ingest dedup: planted dups flagged; restart resumes index + checkpoint") {
     import org.apache.spark.sql.functions._
     import graft.streaming.IngestDedup
@@ -356,6 +439,61 @@ class StreamingSpec extends AnyFunSuite {
     // the standing-id invariant the retired anti-join enforced inline
     graft.ops.IndexMaintenance.checkUnique(spark, s"$r/index", "buckets",
       Seq("vec_id", "tbl"), "vec_id")
+  }
+
+  test("streaming ANN ingest: a late batch of fresh ids folds in O(batch) bytes; its redelivery skip reads O(1)") {
+    import org.apache.spark.sql.functions._
+    import graft.ops.{AnnIndex, IndexMaintenance}
+    val r = java.nio.file.Files.createTempDirectory("graft-ann-late-spec").toString
+    // the standing corpus: sf0.001's vectors under four id ranges, so the
+    // index outweighs the fixed per-trigger reads (footers, checkpoint)
+    val base = Tables(spark, TestSpark.sf0001, "embeddings")
+      .select(col("vec_id"), col("embedding"), col("label"))
+    (0 until 4).map(k => base.withColumn("vec_id", col("vec_id") + k * 1000000L))
+      .reduce(_ union _).write.parquet(s"$r/corpus/embeddings.parquet")
+    val emb = spark.read.parquet(s"$r/corpus/embeddings.parquet")
+    val n = emb.count()
+    AnnIndex.lshIndexWrite(spark, s"$r/corpus", s"$r/index")
+    // a LATE batch, 5% of the corpus under fresh ids, lands against the
+    // standing index: folding it must read the batch, not the index
+    val fresh = 10000000L
+    emb.filter(col("vec_id") < n / 20)
+      .select((col("vec_id") + fresh).as("vec_id"), col("embedding"), col("label"))
+      .coalesce(1).write.parquet(s"$r/stage")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$r/landing"))
+    new java.io.File(s"$r/stage").listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
+      java.nio.file.Files.move(f.toPath, java.nio.file.Paths.get(s"$r/landing/batch_late.parquet"))
+    }
+    val lateRows = spark.read.parquet(s"$r/landing").count()
+    val bucketsBytes = IndexMaintenance.snapshot(spark, s"$r/index").filesOf("buckets").map(_.size).sum
+    def bytesRead(f: => Unit): Long = TestSpark.inputRead(_.bytesRead)(f)
+    def ingest(): Unit = graft.streaming.AnnIngest.streamAnnIngestToFiles(spark, s"$r/landing",
+      s"$r/index", s"$r/checkpoint")
+    def freshIds(): Long = IndexMaintenance.read(spark, s"$r/index", "buckets")
+      .filter(col("vec_id") >= fresh).select(col("vec_id")).distinct().count()
+    // what one pass over the standing ids reads: the per-trigger cost
+    // of the anti-join guard the batch marks replaced
+    val idScanBytes = bytesRead {
+      IndexMaintenance.read(spark, s"$r/index", "buckets").select(col("vec_id")).distinct()
+        .write.mode("overwrite").format("noop").save()
+    }
+    val lateBytes = bytesRead(ingest())
+    assert(lateRows > 0 && freshIds() == lateRows, s"late batch did not fold: ${freshIds()} of $lateRows ids")
+    // TRUE redelivery of the late batch: drop the checkpoint's last
+    // commit (and its checksum sibling) so the same batch id re-runs
+    val commits = new java.io.File(s"$r/checkpoint/commits")
+    val last = commits.listFiles().filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toInt)
+    new java.io.File(commits, s".${last.getName}.crc").delete()
+    assert(last.delete(), "could not remove the last commit marker")
+    val before = IndexMaintenance.read(spark, s"$r/index", "buckets").count()
+    val redelBytes = bytesRead(ingest())
+    assert(IndexMaintenance.read(spark, s"$r/index", "buckets").count() == before,
+      "redelivered late batch appended duplicate bucket rows")
+    info(s"late fold read $lateBytes B, redelivery skip $redelBytes B, standing buckets " +
+      s"$bucketsBytes B, one pass over their ids $idScanBytes B")
+    assert(lateBytes < bucketsBytes / 2, s"late batch fold read O(index): $lateBytes B vs $bucketsBytes B standing")
+    assert(lateBytes < idScanBytes, s"late batch fold read $lateBytes B, more than a pass over the standing ids")
+    assert(redelBytes < bucketsBytes / 10, s"redelivery skip read O(index): $redelBytes B")
   }
 
   test("streaming IVF ingest: grown lists == one-shot appends; redelivery appends nothing") {

@@ -17,4 +17,47 @@ object TestSpark {
     * corpus the DuckDB oracle compare runs against (e.g. "the lowcut
     * MaxScore twins really take the pruned path there"). */
   val sf001 = "/root/testdata/sf0.01"
+
+  /** Deterministic pseudo-noise in (-1, 1) from an id and a dimension
+    * column: the hash the generated vector corpora are built from. */
+  def noise(id: org.apache.spark.sql.Column, d: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{lit, sin}
+    sin(id * 12.9898 + d * 78.233) * lit(43758.5453) % 1.0
+  }
+
+  /** Sum of one input metric over every task `f` runs (bytes or
+    * records read by its scans). */
+  def inputRead(metric: org.apache.spark.executor.InputMetrics => Long)(f: => Unit): Long = {
+    val acc = new java.util.concurrent.atomic.AtomicLong()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null) acc.addAndGet(metric(te.taskMetrics.inputMetrics))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { f; Thread.sleep(500) } finally spark.sparkContext.removeSparkListener(l)
+    acc.get()
+  }
+
+  /** Spark jobs `f` runs: a labelled sentinel job after it flushes the
+    * async listener bus, so every job posted before has been counted. */
+  def jobsRun(f: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinelSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == "sentinel"))
+          sentinelSeen.set(true)
+        else jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      f
+      graft.ops.IndexMaintenance.labeledJob(spark, "sentinel")(
+        spark.sparkContext.parallelize(Seq(1), 1).count())
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!sentinelSeen.get() && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      require(sentinelSeen.get(), "the sentinel job never reached the listener")
+    } finally spark.sparkContext.removeSparkListener(l)
+    jobs.get()
+  }
 }
