@@ -337,8 +337,7 @@ object AnnIndex {
     // walks its nearest lists (capped at the old list-count rule) until
     // the cumulative probed LIST MASS reaches ivfProbeFraction of the
     // corpus, so skew changes how many lists the budget takes, not how
-    // much work it buys (the round-9 clustered experiment's 10x lesson,
-    // now also on the persisted production path). The per-list sizes
+    // much work it buys (see Similarity.massTrimmedProbes). The per-list sizes
     // memoize per index (one tombstone-masked aggregation per process,
     // invalidated on append/delete/compact); the corpus size is the
     // masked sizes' own sum, so the budget covers the SERVABLE corpus.
@@ -351,7 +350,7 @@ object AnnIndex {
         // hint the probe re-join's query side ONLY when Catalyst's own
         // size estimate fits the broadcast threshold — an unconditional
         // hint bypassed AQE's size check, so an externally supplied
-        // large query batch could OOM the driver (r11 advice)
+        // large query batch could OOM the driver
         val thr = s.sessionState.conf.autoBroadcastJoinThreshold
         Similarity.massTrimmedProbes(cent, qn, cap, sizes, budget,
           broadcastQueries =
@@ -387,7 +386,7 @@ object AnnIndex {
     * per-list sizes AND their sum both come from the tombstone-masked
     * lists frame, so a heavily-retracted index buys probes proportional
     * to what it can actually serve, not to rows compaction hasn't swept
-    * yet (round-10 finding; tombstone-free indexes see identical
+    * yet (tombstone-free indexes see identical
     * numbers — the mask is a no-op anti join there). The masked
     * aggregation memoizes per process (invalidated on
     * append/delete/compact); the per-serve cost is a sum over
@@ -421,7 +420,7 @@ object AnnIndex {
       d
     }
 
-  /** STRIDE twin of [[simIvfTopkServed]] (round 9): the identical
+  /** STRIDE twin of [[simIvfTopkServed]]: the identical
     * persisted-index serve composition — index write, tombstone mask,
     * per-cell group-join, fused kernel, exact ranking — run with the
     * deterministic stride quantizer and the fixed [[Similarity.nProbe]]
@@ -659,7 +658,7 @@ object AnnIndex {
 
   // ------------------------------------------------------- index health
   //
-  // The drift experiment's operational lesson (PLANS.md round 8): for a
+  // The drift experiment's operational lesson (PLANS.md): for a
   // frozen quantizer, RECALL is the wrong drift alarm — a drifted
   // corpus crowds a few mega-lists near the seed centroids' edge, the
   // probe ring pays the mega-list scan, and recall holds while task

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions.broadcast
   * that grows with the corpus or query set overrides both the planner's
   * and AQE's size checks, so an externally grown input (a 100× query
   * batch, a mass takedown's tombstone set) would be collected onto the
-  * driver regardless — the round-11 IVF-probe lesson, generalized into
-  * the repo-wide rule in round 13. Under the gate, small inputs keep
+  * driver regardless (first seen on the IVF probe re-join). Under the
+  * gate, small inputs keep
   * their broadcast plan (and their oracle-pinned results and
   * plan-shape pins) byte-for-byte, while a grown frame is left
   * un-hinted for the planner/AQE to place by measured size.

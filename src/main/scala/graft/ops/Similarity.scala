@@ -72,7 +72,7 @@ object Similarity {
 
   /** Exact top-k cosine neighbors for the query subset.
     *
-    * Shape (round 5): the corpus is hash-grouped by id span into
+    * Shape: the corpus is hash-grouped by id span into
     * ~[[lshTile]]-row array cells (ONE narrow shuffle, no sort), the
     * query set folds into a handful of broadcastable array rows, and
     * each (query tile × corpus cell) pair runs the fused
@@ -82,8 +82,8 @@ object Similarity {
     * semantically identical but its map-side WindowGroupLimit sat above
     * a LOCAL SORT of all Q·N scored rows WITH both embedding vectors
     * (~600 B each): at 250k corpus × 5k queries that is ~750 GB through
-    * the sorter's spill path — the round-5 scale rerun filled the disk
-    * and killed the JVM twice. Per-cell top-k contains the global top-k
+    * the sorter's spill path, enough to fill the disk and kill the JVM.
+    * Per-cell top-k contains the global top-k
     * (cell rank lower-bounds global rank), and the kernel's left-fold
     * arithmetic is `vec_dot`'s, so results are bit-identical — the
     * DuckDB oracle and every recall baseline is unchanged. */
@@ -142,8 +142,8 @@ object Similarity {
   /** ANN via multi-probe multi-table hyperplane LSH: candidates = union
     * over tables of vectors in the query's bucket or any 1-flip probe of
     * it; exact scoring + top-k on candidates only, computed inside tiled
-    * cells (see [[lshScoredCandidates]]). DuckDB-oracle-checked since
-    * round 5 ([[lshAnnOracleSql]]: the seeded hyperplanes ship as SQL
+    * cells (see [[lshScoredCandidates]]). DuckDB-oracle-checked
+    * ([[lshAnnOracleSql]]: the seeded hyperplanes ship as SQL
     * literals); recall ≥ 0.6 and the scored-fraction ceiling are
     * additionally asserted in DedupSimilaritySpec. */
   def simLshAnn(s: SparkSession, dir: String): DataFrame =
@@ -181,7 +181,7 @@ object Similarity {
     * cheap even at 100 TB — and unlike the byte-size estimate it is
     * DETERMINISTIC, which is what lets the auto path carry a full DuckDB
     * oracle: the SQL recomputes count(*) in a CTE and applies the same
-    * floor formula (round 8; previously rows-only). The eager count is a
+    * floor formula. The eager count is a
     * documented deviation from the lazy-plan contract, like
     * [[trainedCentroidsOf]]. Identical to `simLshAnn` on recall-asserted
     * small corpora (the bits floor); sub-linear candidates on large
@@ -245,12 +245,11 @@ object Similarity {
     * every vector sharing a probed bucket with the query, each query's
     * per-cell top-[[topK]] only.
     *
-    * TILED SCORING EVERYWHERE (the round-5 redesign; rounds of history
-    * behind it): the round-4 experiment showed density-degenerate
-    * buckets flood any per-pair candidate pipeline — at 250k rows the
+    * TILED SCORING EVERYWHERE: density-degenerate buckets flood any
+    * per-pair candidate pipeline — at 250k rows the
     * equi-join + distinct + vector-re-join + rank path shuffled 23M
     * candidate pairs (60 GB of spill at fixed depth; still ~90 s at
-    * auto depth), and round 4's answer (DROP buckets over a cap) bought
+    * auto depth), and DROPPING buckets over a cap bought
     * runtime with a recall hole (0.554 < the 0.6 floor) — dense pockets
     * are exactly where true neighbors live. Here every probed bucket's
     * (queries × members) work runs inside lshTile-bounded cells
@@ -408,7 +407,7 @@ object Similarity {
   private[graft] val embDims = 64
 
   /** TRAINED coarse-quantizer centroids — the real k-means the stride
-    * sample stands in for (round-3 verdict #4). Spherical Lloyd:
+    * sample stands in for. Spherical Lloyd:
     * initialized from the SAME deterministic stride sample the
     * oracle-checkable path uses, then `iters` refinement steps; clusters
     * that lose all members keep their previous centroid so k never
@@ -530,7 +529,7 @@ object Similarity {
     * FIXED nProbe shrinks the probed fraction as the corpus grows (the
     * quantizer keeps k ∝ N/centroidStride, so nProbe=2 probes 28% of a
     * 725-vector corpus but 0.08% of a 250k one — measured recall@5
-    * collapse to 0.22-0.24 in the round-4 scale experiment). A fixed
+    * collapse to 0.22-0.24 in a 250k scale experiment). A fixed
     * FRACTION keeps the candidate set a constant multiple of
     * nProbe·centroidStride per corpus doubling: candidates/query ≈
     * probedFraction·N — a 16× saving over brute force at any size, with
@@ -551,7 +550,7 @@ object Similarity {
     * that is Θ(N²/stride) — at 250k vectors × 2500 centroids the
     * assignment alone (625M fused dots) cost more than HALF of what the
     * brute-force scan pays for the whole query batch, which is how the
-    * one-shot auto path lost to brute force in the round-9 measurement.
+    * one-shot auto path lost to brute force at 250k.
     * Two-level assignment (nearest of √k super-centroids, then nearest
     * child within that super's group — FAISS's approximate coarse
     * assignment) pays ~2√k dots per vector instead of k, a 25× cut at
@@ -648,7 +647,7 @@ object Similarity {
     *  - the probe budget is a fraction of VECTORS, not of lists
     *    ([[ivfProbeFraction]] of the corpus): each query walks its
     *    nearest lists in quantizer order and stops once the cumulative
-    *    probed LIST MASS reaches the budget. The round-9 clustered
+    *    probed LIST MASS reaches the budget. A clustered 250k
     *    experiment showed why list-count probing fails on real
     *    geometry: with 4.2× hot-list skew, a constant 156-of-2500-lists
     *    ring around a clustered query covers most of its Gaussian —
@@ -693,7 +692,7 @@ object Similarity {
   /** The auto path's probed cells, (c_id, qs), and its built lists,
     * (c_id, cands). */
   private def ivfAutoCells(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // exact row count, not the byte-size estimate (round 8): cheap
+    // exact row count, not the byte-size estimate: cheap
     // (footer-only count-star) and it makes the statistic-derived probe
     // count EQUAL the served path's list-count-derived one everywhere,
     // not just where the ~350 B/row calibration happened to round alike
@@ -917,8 +916,8 @@ object Similarity {
     * (≤ depthCell = 1024 rows); a single-cell corpus between that and
     * [[pqCellRows]] rows still gets a top-depthCell ADC shortlist per
     * query — approximate, with recall governed by the 1/64 fraction
-    * like every larger corpus. Fully oracled (round 8,
-    * [[pqRescoreAutoOracleSql]]): the constant per-cell depth and the
+    * like every larger corpus. Fully oracled
+    * ([[pqRescoreAutoOracleSql]]): the constant per-cell depth and the
     * `vec_id // pqCellRows` cell layout are both SQL-restatable. */
   def simPqRescoreAuto(s: SparkSession, dir: String): DataFrame = {
     val depthCell = math.max(pqRescoreDepth, (pqCellRows * pqRescoreFraction).toInt)
@@ -1114,8 +1113,8 @@ object Similarity {
     * codebook (`sim_pq_topk`'s) — and the fixed [[nProbe]] probe
     * count. Every stage is therefore SQL-restatable, so the COMPOSITION
     * itself (pruning ∘ compression ∘ rescore) gets a DuckDB oracle,
-    * not just its parts: the round-6 audit item the trained variants'
-    * rows-only status left open. The production variant stays
+    * not just its parts, which the trained variants' rows-only status
+    * leaves unchecked. The production variant stays
     * `sim_ivfpq_topk` (trained quantizer, statistic probes); this one
     * pins the plumbing. */
   def simIvfPqTopkStride(s: SparkSession, dir: String): DataFrame = {
@@ -1611,7 +1610,7 @@ object Similarity {
        |  FROM scored)""".stripMargin
   }
 
-  /** Oracle for the AUTO-depth LSH ANN (round 8): the depth is derived
+  /** Oracle for the AUTO-depth LSH ANN: the depth is derived
     * from the corpus row count INSIDE the SQL — `count(*)` in a CTE,
     * the same floor formula as [[lshBitsFor]] (`round(x)` restated as
     * `floor(x + 0.5)`, Scala's exact semantics; the .5 boundary cannot
@@ -1685,7 +1684,7 @@ object Similarity {
        |ORDER BY q_id, rk""".stripMargin
   }
 
-  /** Oracle for the AUTO PQ rescore path (round 8): its per-cell
+  /** Oracle for the AUTO PQ rescore path: its per-cell
     * fractional shortlist depth is a CONSTANT
     * (max([[pqRescoreDepth]], [[pqCellRows]]·[[pqRescoreFraction]])) and
     * the cell layout is `vec_id // pqCellRows` — both SQL-restatable, so
