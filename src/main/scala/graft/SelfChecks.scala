@@ -251,7 +251,7 @@ object SelfChecks {
     * right assertion; the ≥-PQ-auto-at-lower-budget claim only holds at
     * scale; PLANS.md records the 250k measurement). */
   private def ivfPqCheck(s: SparkSession, dir: String): CheckResult = {
-    val base = annCheck(ops.Similarity.simIvfPqTopk,
+    val base = annCheck(ops.AnnIndex.simIvfPqTopkServed,
       "trained quantizer + statistic-derived probe count; not reproducible in static SQL")(s, dir)
     val exact = ops.Similarity.simTopkBruteforce(s, dir).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
@@ -259,8 +259,8 @@ object SelfChecks {
       val got = df.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
       (exact intersect got).size.toDouble / math.max(1, exact.size)
     }
-    val rIvfPq = recallOf(ops.Similarity.simIvfPqTopk(s, dir))
-    val rIvfAuto = recallOf(ops.Similarity.simIvfTopkAuto(s, dir))
+    val rIvfPq = recallOf(ops.AnnIndex.simIvfPqTopkServed(s, dir))
+    val rIvfAuto = recallOf(ops.AnnIndex.simIvfTopkServed(s, dir))
     CheckResult(base.pass && rIvfPq >= rIvfAuto - 0.1, base.reason,
       base.check + " + recall within 0.1 of the pure-IVF auto path",
       base.detail + f" ivfAutoRecall=$rIvfAuto%.3f")
@@ -469,9 +469,9 @@ object SelfChecks {
   val checks: Map[String, (SparkSession, String) => CheckResult] = Map(
     "text_bpe_encode_scaled_served" -> (bpeEncodeScaledServedCheck _),
     "text_bpe_train_scaled" -> (bpeTrainScaledCheck _),
-    "sim_ivf_topk_trained" -> annCheck(ops.Similarity.simIvfTopkTrained,
+    "sim_ivf_topk_trained" -> annCheck(ops.AnnIndex.simIvfTopkTrained,
       "k-means training sums floats in partition order; centroids are not bit-reproducible in SQL"),
-    "sim_ivf_topk_auto" -> annCheck(ops.Similarity.simIvfTopkAuto,
+    "sim_ivf_topk_auto" -> annCheck(ops.AnnIndex.simIvfTopkServed,
       "trained centroids (k-means float-summation order); not reproducible in static SQL"),
     "sim_ivf_topk_served" -> annCheck(ops.AnnIndex.simIvfTopkServed,
       "serves a persisted TRAINED index; k-means centroids are not bit-reproducible in SQL"),

@@ -5,14 +5,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Persisted ANN indexes (LSH and IVF) — the serving-side artifacts the
-  * in-session `Similarity` paths compute transiently.
+/** Persisted ANN indexes (LSH, IVF and IVF-PQ) — the one read path of
+  * the vector family's ANN keys.
   *
   * A production ANN deployment does not re-hash the corpus per query
-  * session: the bucket index is built ONCE per corpus generation,
-  * persisted, and served against — exactly the shape
-  * `Similarity.lshBuckets`'s docstring promises. This module makes that
-  * artifact real:
+  * session: the index is built ONCE per corpus generation, persisted,
+  * and served against. Every registered LSH, IVF and IVF-PQ key reads
+  * such an index, built on first use into a standing [[Artifacts]] temp
+  * dir per (JVM, corpus, geometry):
   *
   *  - `lshIndexWrite` persists `indexDir/meta` (the hyperplane config +
   *    the corpus-mean thresholds — the learned part of the index) and
@@ -20,7 +20,7 @@ import graft.Tables
   *    O(N·tables) index itself). Embeddings are NOT duplicated into the
   *    index: at scale a `tables`-way copy of the corpus would dominate
   *    storage, so serving re-joins members to the corpus parquet by
-  *    vec_id (column-pruned scan) the same way the in-session path does.
+  *    vec_id (column-pruned scan).
   *  - `lshIndexAppend` hashes a NEW batch of vectors with the index's
   *    PERSISTED thresholds and appends — the landing-zone ingest form
   *    (counterpart of `Dedup.dedupIncrementalPaths`). Thresholds stay
@@ -30,12 +30,13 @@ import graft.Tables
   *  - `lshIndexServe` takes an EXTERNAL query frame (q_id, embedding) —
   *    not a stride sample of the corpus — hashes it with the persisted
   *    thresholds, 1-flip multi-probes, and scores within probed buckets
-  *    through the same tiled `cell_topk_pairs` kernel as the in-session
-  *    path. Per-cell rank lower-bounds bucket rank, so the result is
-  *    EXACT over the probed candidate set — which is why serving a
-  *    stride sample of the index's own corpus is byte-identical to
-  *    `simLshAnn` (pinned in `AnnIndexSpec`) and why the registered
-  *    `sim_lsh_ann_served` query shares `sim_lsh_ann`'s DuckDB oracle.
+  *    through the tiled `cell_topk_pairs` kernel
+  *    ([[Similarity.tiledTopkPairs]]). Per-cell rank lower-bounds bucket
+  *    rank, so the result is EXACT over the probed candidate set — which
+  *    is why `sim_lsh_ann` carries a DuckDB oracle that is a plain top-k
+  *    over all (bucket ∪ 1-flip probe) pairs.
+  *  - the IVF and IVF-PQ indexes follow the same write / append / serve
+  *    / compact / delete / retrain shape over (vec_id, c_id) lists.
   */
 object AnnIndex {
 
@@ -91,7 +92,17 @@ object AnnIndex {
     Artifacts.invalidate(s, s"$indexDir|lsh-index-buckets")
   }
 
-  /** LSH thresholds of `corpus`: the per-plane mean projection. */
+  /** LSH thresholds of `corpus`: the per-plane mean projection.
+    *
+    * Hyperplanes are thresholded at the CORPUS MEAN's projection, not 0:
+    * these embeddings are not centered, so raw dot-signs mostly agree —
+    * measured on sf0.001, uncentered 6×8-bit tables put 29% of the
+    * corpus in the query's bucket yet recalled 4% (giant buckets, no
+    * locality signal). Hashing compares dot(emb, h) > dot(mean, h),
+    * which equals the sign of the centered projection, so bits become
+    * ~balanced AND informative. By linearity of dot, the mean's
+    * projection is the average of per-row projections: one small
+    * aggregate. */
   private def lshMeta(corpus: DataFrame, tables: Int, bits: Int): DataFrame =
     corpus
       .select(proj(tables, bits)(col("embedding")).as("p"))
@@ -194,25 +205,39 @@ object AnnIndex {
       .orderBy(col("q_id"), col("rk"))
   }
 
-  /** The persisted LSH index dir for `dir` at the pinned geometry — one
-    * standing [[Artifacts]] temp dir per (JVM, corpus, geometry), built
-    * on first use so every later call (bench reps, repeated sessions on
-    * the same corpus) measures SERVING only; shared by every
+  /** The persisted LSH index dir for `dir` at geometry (tables, bits) —
+    * one standing [[Artifacts]] temp dir per (JVM, corpus, geometry),
+    * built on first use so every later call (bench reps, repeated
+    * sessions on the same corpus) measures SERVING only; shared by every
     * serving-form query. */
-  private[graft] def lshIndexFor(s: SparkSession, dir: String): String =
-    Artifacts.tempDir(s"lsh-index|$dir|${Similarity.lshTables}|${Similarity.lshBits}") {
+  private[graft] def lshIndexFor(s: SparkSession, dir: String,
+      tables: Int = Similarity.lshTables, bits: Int = Similarity.lshBits): String =
+    Artifacts.tempDir(s"lsh-index|$dir|$tables|$bits") {
       val d = java.nio.file.Files.createTempDirectory("graft-lsh-index").toString
-      lshIndexWrite(s, dir, d)
+      lshIndexWrite(s, dir, d, tables, bits)
       d
     }
 
-  /** The registered-query form: build (once) a persisted index for
-    * `dir`'s embeddings, then serve the same stride-sampled query set as
-    * `sim_lsh_ann` from it. Byte-identical to `sim_lsh_ann` (the serve
-    * path is exact over the same probed candidate set), so it shares its
-    * DuckDB oracle. */
+  /** `sim_lsh_ann`: build (once) a persisted index for `dir`'s
+    * embeddings at the pinned geometry, then serve the stride-sampled
+    * query set from it. Exact over the probed candidate set, so it
+    * carries a full DuckDB oracle. */
   def simLshAnnServed(s: SparkSession, dir: String): DataFrame =
     lshIndexServe(s, lshIndexFor(s, dir), Seq(dir), strideQueries(s, dir))
+
+  /** `sim_lsh_ann_auto`, the SCALE form: the same serve over an index
+    * whose depth is [[Similarity.lshBitsFor]] of the corpus's EXACT row
+    * count. `count()` on parquet is a footer-metadata job, so the
+    * statistic is cheap even at 100 TB, and unlike a byte-size estimate
+    * it is DETERMINISTIC, which is what lets the key carry a DuckDB
+    * oracle that recomputes count(*) and the same floor formula. Equal
+    * to `sim_lsh_ann` on small corpora (the bits floor); sub-linear
+    * candidates on large ones. */
+  def simLshAnnAuto(s: SparkSession, dir: String): DataFrame = {
+    val rows = Tables(s, dir, "embeddings").count().toDouble
+    lshIndexServe(s, lshIndexFor(s, dir, Similarity.lshTables, Similarity.lshBitsFor(rows)),
+      Seq(dir), strideQueries(s, dir))
+  }
 
   /** FILTERED ANN, the curation-pipeline shape ("top-k within
     * lang='en'"): the SAME persisted LSH index as [[simLshAnnServed]]
@@ -237,7 +262,7 @@ object AnnIndex {
   /** Build and persist the IVF index: the TRAINED k-means centroids
     * (the learned quantizer — `centroids`: c_id, c_emb array<double>,
     * c_nrm; doubles round-trip parquet exactly, so serving reproduces
-    * the in-session assignment bit-for-bit) and the keep=1 inverted-list
+    * an assignment to the memoized centroids bit-for-bit) and the keep=1 inverted-list
     * assignment (`lists`: vec_id, c_id — narrow rows, like the LSH
     * bucket table). Embeddings are again NOT copied in; serving re-joins
     * them by vec_id. Training pays its usual driver-side Lloyd cost
@@ -323,6 +348,32 @@ object AnnIndex {
       queries: DataFrame, memberPred: Option[Column] = None,
       probeOverride: Option[Int] = None,
       pushProbedCells: Boolean = false): DataFrame = {
+    val (qlists, lists) =
+      ivfServeCells(s, indexDir, corpusDirs, queries, memberPred, probeOverride, pushProbedCells)
+    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("cand_id"))
+    Similarity.tiledTopkPairs(Seq("c_id"), qlists, lists)
+      .withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= Similarity.topK)
+      .select(col("q_id"), col("rk"), col("cand_id"), col("cosine"))
+      .orderBy(col("q_id"), col("rk"))
+  }
+
+  /** Rows a default (mass-budgeted) [[ivfIndexServe]] scores: Σ over
+    * probed lists of queries × members, counted from the serve's own
+    * cell frames — the work the budget bounds (brute force scores
+    * queries × corpus). */
+  private[graft] def ivfServedScoredRows(s: SparkSession, indexDir: String,
+      corpusDirs: Seq[String], queries: DataFrame): Long = {
+    val (qlists, lists) = ivfServeCells(s, indexDir, corpusDirs, queries, None, None, false)
+    qlists.join(lists, "c_id")
+      .agg(sum(size(col("qs")).cast("long") * size(col("cands")))).head().getLong(0)
+  }
+
+  /** The serve's probed query cells, (c_id, qs), and its member lists,
+    * (c_id, cands). */
+  private def ivfServeCells(s: SparkSession, indexDir: String, corpusDirs: Seq[String],
+      queries: DataFrame, memberPred: Option[Column], probeOverride: Option[Int],
+      pushProbedCells: Boolean): (DataFrame, DataFrame) = {
     val cent = Artifacts.frame(s, s"$indexDir|ivf-index-centroids") {
       IndexMaintenance.read(s, indexDir, "centroids")
     }
@@ -333,28 +384,21 @@ object AnnIndex {
       .filter(col("nrm") > 0)
     // probe set: an explicit override keeps the pinned count (the
     // oracled stride twins and point lookups); otherwise the probes are
-    // MASS-budgeted exactly like the in-session auto path — each query
-    // walks its nearest lists (capped at the old list-count rule) until
-    // the cumulative probed LIST MASS reaches ivfProbeFraction of the
-    // corpus, so skew changes how many lists the budget takes, not how
-    // much work it buys (see Similarity.massTrimmedProbes). The per-list sizes
-    // memoize per index (one tombstone-masked aggregation per process,
-    // invalidated on append/delete/compact); the corpus size is the
-    // masked sizes' own sum, so the budget covers the SERVABLE corpus.
+    // MASS-budgeted — each query walks its nearest lists (capped at the
+    // list-count rule) until the cumulative probed LIST MASS reaches
+    // ivfProbeFraction of the corpus, so skew changes how many lists
+    // the budget takes, not how much work it buys (see
+    // Similarity.massTrimmedProbes). The per-list sizes memoize per
+    // index (one tombstone-masked aggregation per process, invalidated
+    // on append/delete/compact); the corpus size is the masked sizes'
+    // own sum, so the budget covers the SERVABLE corpus.
     val probeRows = probeOverride match {
       case Some(p) => Similarity.nearestCentroids(cent)(
         qn, "vec_id", "embedding", "nrm", p, carry = Seq("embedding", "nrm"))
       case None =>
-        val cap = Similarity.ivfProbesFor(cent.count().toDouble)
         val (sizes, budget) = ivfServableBudget(s, indexDir)
-        // hint the probe re-join's query side ONLY when Catalyst's own
-        // size estimate fits the broadcast threshold — an unconditional
-        // hint bypassed AQE's size check, so an externally supplied
-        // large query batch could OOM the driver
-        val thr = s.sessionState.conf.autoBroadcastJoinThreshold
-        Similarity.massTrimmedProbes(cent, qn, cap, sizes, budget,
-          broadcastQueries =
-            thr > 0 && qn.queryExecution.optimizedPlan.stats.sizeInBytes <= thr)
+        Similarity.massTrimmedProbes(cent, qn,
+          Similarity.ivfProbesFor(cent.count().toDouble), sizes, budget)
     }
     // the point-lookup shape deliberately BYPASSES the memoized cache:
     // materializing a whole-table cache to serve a handful of queries is
@@ -374,12 +418,7 @@ object AnnIndex {
     val qlists = probeRows
       .groupBy(col("c_id"))
       .agg(collect_list(struct(col("vec_id"), col("embedding"), col("nrm"))).as("qs"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("cand_id"))
-    Similarity.tiledTopkPairs(Seq("c_id"), qlists, lists)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= Similarity.topK)
-      .select(col("q_id"), col("rk"), col("cand_id"), col("cosine"))
-      .orderBy(col("q_id"), col("rk"))
+    (qlists, lists)
   }
 
   /** The persisted serve's mass budget, over the SERVABLE corpus: the
@@ -402,32 +441,37 @@ object AnnIndex {
     (sizes, rows * Similarity.ivfProbeFraction)
   }
 
-  /** Registered-query form: persist the trained IVF index once for
-    * `dir`, serve the stride query set from it. Rows-only like every
-    * trained-quantizer variant (k-means float-summation order), but
-    * byte-identical to `sim_ivf_topk_auto` on corpora where the
-    * statistic-derived and list-count-derived probe counts agree
-    * (pinned in `AnnIndexSpec` at sf0.001) and self-checked per Verify
+  /** `sim_ivf_topk_auto`, the IVF SCALE form: persist the trained IVF
+    * index once for `dir`, serve the stride query set from it with
+    * mass-budgeted probes. Rows-only like every trained-quantizer
+    * variant (k-means float-summation order), self-checked per Verify
     * run (cosine recompute + recall vs brute force). */
   def simIvfTopkServed(s: SparkSession, dir: String): DataFrame =
     ivfIndexServe(s, ivfIndexFor(s, dir), Seq(dir), strideQueries(s, dir))
 
+  /** `sim_ivf_topk_trained`: the same trained index at the fixed
+    * [[Similarity.nProbe]] — trained centroids balance the inverted
+    * lists and raise recall at equal probe cost against the stride
+    * quantizer (both asserted in DedupSimilaritySpec). Rows-only. */
+  def simIvfTopkTrained(s: SparkSession, dir: String): DataFrame =
+    ivfIndexServe(s, ivfIndexFor(s, dir), Seq(dir), strideQueries(s, dir),
+      probeOverride = Some(Similarity.nProbe))
+
   /** The shared per-corpus persisted trained IVF index. */
-  private def ivfIndexFor(s: SparkSession, dir: String): String =
+  private[graft] def ivfIndexFor(s: SparkSession, dir: String): String =
     Artifacts.tempDir(s"ivf-index|$dir") {
       val d = java.nio.file.Files.createTempDirectory("graft-ivf-index").toString
       ivfIndexWrite(s, dir, d)
       d
     }
 
-  /** STRIDE twin of [[simIvfTopkServed]]: the identical
-    * persisted-index serve composition — index write, tombstone mask,
-    * per-cell group-join, fused kernel, exact ranking — run with the
+  /** `sim_ivf_topk` and `sim_ivf_topk_served_stride`: the persisted
+    * serve composition — index write, tombstone mask, per-cell
+    * group-join, fused kernel, exact ranking — run with the
     * deterministic stride quantizer and the fixed [[Similarity.nProbe]]
     * probe count, so the SERVE PATH ITSELF carries a full DuckDB
-    * oracle (shared with `sim_ivf_topk`, to which it is value-equal by
-    * construction). The trained variant stays rows-only legitimately
-    * (k-means float-summation order); this pins the plumbing. */
+    * oracle. The trained variants stay rows-only legitimately (k-means
+    * float-summation order); this pins the plumbing. */
   def simIvfTopkServedStride(s: SparkSession, dir: String): DataFrame =
     ivfIndexServe(s, strideIndexFor(s, dir), Seq(dir), strideQueries(s, dir),
       probeOverride = Some(Similarity.nProbe))
@@ -484,7 +528,7 @@ object AnnIndex {
   /** Build and persist the composed IVF-PQ index: the trained centroids
     * (as in [[ivfIndexWrite]]), the PQ codebook (one row of doubles —
     * parquet round-trips them exactly, so served ADC scores reproduce
-    * the in-session ones bit-for-bit), and the inverted lists WITH the
+    * an in-memory composition's bit-for-bit), and the inverted lists WITH the
     * 8-byte codes inline — (c_id, vec_id, codes) rows, ~60 B each. This
     * is the index layout where serving never touches a raw embedding
     * until exact rescore: the compressed scan reads only the persisted
@@ -522,9 +566,8 @@ object AnnIndex {
   /** Serve top-k for an external (q_id, embedding) frame from a
     * persisted IVF-PQ index: probe count from the index's own list
     * count, compressed ADC scan over the probed lists' persisted code
-    * rows, exact rescore against the corpus union. Identical plan
-    * family to the in-session [[Similarity.simIvfPqTopk]] — byte-
-    * identity pinned in `AnnIndexSpec`. */
+    * rows, exact rescore against the corpus union, through the shared
+    * [[Similarity.ivfPqOver]] composition. */
   def ivfPqIndexServe(s: SparkSession, indexDir: String, corpusDirs: Seq[String],
       queries: DataFrame, pushProbedCells: Boolean = false): DataFrame = {
     val cent = Artifacts.frame(s, s"$indexDir|ivfpq-centroids") {
@@ -816,9 +859,14 @@ object AnnIndex {
   def ivfPqIndexDelete(s: SparkSession, indexDir: String, vecIds: Seq[Long]): Unit =
     IndexMaintenance.delete(s, indexDir, Seq("lists"), vecIds)
 
-  /** Registered-query form: persist the IVF-PQ index once for `dir`,
-    * serve the stride query set from it. Rows-only (trained quantizer);
-    * self-checked per Verify run like the other served paths. */
+  /** `sim_ivfpq_topk` and `sim_ivfpq_topk_served`: persist the IVF-PQ
+    * index once for `dir`, serve the stride query set from it. The
+    * standard 100 TB layout: IVF pruning (unprobed lists never enter a
+    * kernel), PQ compression (probed lists ship 8-byte code rows through
+    * the fused ADC loop), exact rescore of the per-list shortlist.
+    * Rows-only (trained quantizer); the self-check asserts the usual
+    * exact-cosine/dense-rank contract and recall parity with
+    * `sim_ivf_topk_auto`. */
   def simIvfPqTopkServed(s: SparkSession, dir: String): DataFrame = {
     val indexDir = Artifacts.tempDir(s"ivfpq-index|$dir") {
       val d = java.nio.file.Files.createTempDirectory("graft-ivfpq-index").toString

@@ -33,8 +33,6 @@ object JoinHints {
   def broadcastIfSmall(df: DataFrame, knownFraction: Double = 1.0): DataFrame = {
     val thr = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes.toDouble * knownFraction
-    if (sys.env.contains("GRAFT_DEBUG_HINTS"))
-      System.err.println(f"[broadcastIfSmall] est=$est%.0f thr=$thr fires=${thr > 0 && est <= thr.toDouble}")
     if (thr > 0 && est <= thr.toDouble) broadcast(df) else df
   }
 }

@@ -5,22 +5,22 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Similarity search over the `embeddings` table (64-dim float vectors).
+/** Similarity search over the `embeddings` table (64-dim float vectors):
+  * the exact paths, the quantizers, the shared scoring kernels and the
+  * DuckDB oracles of the vector family.
   *
-  * Two paths:
   *  - brute-force exact top-k: every (query, candidate) pair scored with
   *    a codegen'd double-precision dot product. The baseline and oracle.
   *    At 100 TB this is only viable per-query-batch with a broadcast of
   *    the query set — which is exactly how it is written (queries are
   *    broadcast; the big candidate side streams, never shuffles).
-  *  - LSH-bucketed ANN: multi-table mean-centered hyperplane hashing
-  *    with query-side 1-flip multi-probe; candidates are scored only
-  *    within probed buckets. Sub-linear candidate sets at scale; recall
-  *    and candidate fraction are checked against brute force in the
-  *    test suite.
-  *  - IVF ANN: a coarse quantizer (stride-sampled for the oracle path,
-  *    driver-side spherical k-means for serving) assigns vectors to
-  *    inverted lists; queries probe their nProbe nearest lists.
+  *  - quantizers: the seeded LSH hyperplanes, the stride and k-means
+  *    IVF centroids, and the prefix and trained PQ codebooks.
+  *  - kernels: [[tiledTopkPairs]], [[nearestCentroids]],
+  *    [[massTrimmedProbes]] and [[ivfPqOver]]. The LSH, IVF and IVF-PQ
+  *    ANN keys read a build-once persisted index through [[AnnIndex]],
+  *    which composes them; `sim_ivfpq_topk_stride` and the flat PQ
+  *    paths run in-session.
   *
   * Dot products are left-fold aggregates over zip_with (both engines fold
   * left-to-right in double precision → bit-identical results, so raw
@@ -139,16 +139,6 @@ object Similarity {
     Array.fill(tables * bits * embDims)(rnd.nextGaussian())
   }
 
-  /** ANN via multi-probe multi-table hyperplane LSH: candidates = union
-    * over tables of vectors in the query's bucket or any 1-flip probe of
-    * it; exact scoring + top-k on candidates only, computed inside tiled
-    * cells (see [[lshScoredCandidates]]). DuckDB-oracle-checked
-    * ([[lshAnnOracleSql]]: the seeded hyperplanes ship as SQL
-    * literals); recall ≥ 0.6 and the scored-fraction ceiling are
-    * additionally asserted in DedupSimilaritySpec. */
-  def simLshAnn(s: SparkSession, dir: String): DataFrame =
-    simLshAnnWith(s, dir, lshTables, lshBits, multiprobe = true)
-
   /** Expected vectors per bucket the auto-depth serving path targets. */
   val lshTargetBucket = 4
 
@@ -175,159 +165,23 @@ object Similarity {
     * to the [[lshBitsFor]] cap of 24 unchanged. */
   private[graft] val lshOracleMaxBits = 14
 
-  /** The SCALE serving path: depth chosen from the corpus's EXACT row
-    * count. `count()` on parquet is a footer-metadata job (the
-    * count-star optimization reads no column data), so the statistic is
-    * cheap even at 100 TB — and unlike the byte-size estimate it is
-    * DETERMINISTIC, which is what lets the auto path carry a full DuckDB
-    * oracle: the SQL recomputes count(*) in a CTE and applies the same
-    * floor formula. The eager count is a
-    * documented deviation from the lazy-plan contract, like
-    * [[trainedCentroidsOf]]. Identical to `simLshAnn` on recall-asserted
-    * small corpora (the bits floor); sub-linear candidates on large
-    * ones. */
-  def simLshAnnAuto(s: SparkSession, dir: String): DataFrame = {
-    val rows = Tables(s, dir, "embeddings").count().toDouble
-    simLshAnnWith(s, dir, lshTables, lshBitsFor(rows), multiprobe = true)
-  }
-
-  private[graft] def simLshAnnWith(s: SparkSession, dir: String,
-      tables: Int, bits: Int, multiprobe: Boolean): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("cand_id"))
-    lshScoredCandidates(s, dir, tables, bits, multiprobe)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= topK)
-      .select(col("q_id"), col("rk"), col("cand_id"), col("cosine"))
-      .orderBy(col("q_id"), col("rk"))
-  }
-
-  /** Deduped (q_id, cand_id) LSH candidate pairs — also the unit the
-    * candidate-fraction spec measures (pairs / (queries · corpus)).
-    *
-    * Hyperplanes are thresholded at the CORPUS MEAN's projection, not 0:
-    * these embeddings are not centered, so raw dot-signs mostly agree —
-    * measured on sf0.001, uncentered 6×8-bit tables put 29% of the
-    * corpus in the query's bucket yet recalled 4% (giant buckets, no
-    * locality signal). The mean is a 1-row aggregate broadcast into the
-    * plan (same lazy pattern as the ngram max-df statistic): hashing
-    * compares dot(emb, h) > dot(mean, h), which equals the sign of the
-    * centered projection, and bits become ~balanced AND informative. */
-  /** The (vec_id, tbl, bucket) index frame — the unit candidate
-    * generation and the candidate-fraction spec measure occupancy on.
-    *
-    * Memoized + cached per (corpus, config): `lshScoredCandidates`
-    * references this frame from two subtrees (the query probes and the
-    * bucket member arrays) — uncached, each reference re-hashes the
-    * corpus (the minhash double-compute lesson). The cache is the single-session analogue of
-    * what a production ANN deployment does anyway: the bucket index is
-    * THE artifact you persist and serve, not something recomputed per
-    * query. Narrow rows (3 longs × tables per vector), MEMORY_AND_DISK. */
-  private[graft] def lshBuckets(s: SparkSession, dir: String,
-      tables: Int, bits: Int): DataFrame =
-    Artifacts.frame(s, s"$dir|lsh-buckets-$tables-$bits") {
-      val planes = hyperplanesFor(tables, bits)
-      val proj = (c: Column) => graft.plans.VectorFunctions.lsh_projections(c, planes, embDims)
-      // per-plane threshold = the corpus-MEAN's projection = avg of per-row
-      // projections (linearity of dot) — one small aggregate, broadcast
-      val thrRow = Tables(s, dir, "embeddings")
-        .select(proj(col("embedding")).as("p"))
-        .select(array((0 until tables * bits).map(i =>
-          avg(element_at(col("p"), i + 1))): _*).as("thr"))
-      Tables(s, dir, "embeddings")
-        .crossJoin(broadcast(thrRow))
-        .select(col("vec_id"),
-          posexplode(graft.plans.VectorFunctions.lsh_buckets(
-            proj(col("embedding")), col("thr"), tables, bits))
-            .as(Seq("tbl", "bucket")))
-    }
-
-  /** Scored, deduped LSH candidate pairs: (q_id, cand_id, cosine) for
-    * every vector sharing a probed bucket with the query, each query's
-    * per-cell top-[[topK]] only.
-    *
-    * TILED SCORING EVERYWHERE: density-degenerate buckets flood any
-    * per-pair candidate pipeline — at 250k rows the
-    * equi-join + distinct + vector-re-join + rank path shuffled 23M
-    * candidate pairs (60 GB of spill at fixed depth; still ~90 s at
-    * auto depth), and DROPPING buckets over a cap bought
-    * runtime with a recall hole (0.554 < the 0.6 floor) — dense pockets
-    * are exactly where true neighbors live. Here every probed bucket's
-    * (queries × members) work runs inside lshTile-bounded cells
-    * hash-repartitioned BEFORE the quadratic work (the
-    * dedupEmbeddingBlockedWith lesson: one array-row's expansion
-    * otherwise pins Σ q·m work to a single task), and each cell emits
-    * at most topK SCORED rows per query through the fused
-    * `cell_topk_pairs` loop. Consequences:
-    *
-    *  - no hot/cold split, no drop cap, no recall hole: dense pockets
-    *    are paid, in parallel, with per-task work ≤ lshTile²;
-    *  - no candidate-pair shuffle and NO vector re-join: each vector's
-    *    bytes move once into its bucket array, scores are computed
-    *    in-cell, and only ≤ topK rows per (query, cell) ever exist;
-    *  - the result is EXACT over the probed candidate set: per-cell
-    *    rank lower-bounds bucket rank, so the final per-query ranking
-    *    equals the old join path's — which is why the DuckDB oracle for
-    *    `sim_lsh_ann` is a plain top-k over all (bucket ∪ 1-flip probe)
-    *    pairs, and why `DedupSimilaritySpec` pins byte-identity against
-    *    an independent join-form reference implementation.
-    *
-    * The same (q, cand) pair surfaces from every table/probe whose
-    * bucket holds both, with a BIT-IDENTICAL cosine (same left-fold) —
-    * hence the distinct on the full row, without which duplicates of
-    * one strong neighbor would crowd the per-query top-k ranks. */
-  private[graft] def lshScoredCandidates(s: SparkSession, dir: String,
-      tables: Int, bits: Int, multiprobe: Boolean): DataFrame = {
-    val buckets = lshBuckets(s, dir, tables, bits)
-    val qbase = buckets.filter(col("vec_id") % queryStride === 0)
-      .select(col("vec_id").as("q_id"), col("tbl"), col("bucket"))
-    val qb =
-      if (!multiprobe) qbase
-      else qbase.select(col("q_id"), col("tbl"),
-        explode(array(col("bucket") +:
-          (0 until bits).map(j => col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
-    val n = normed(s, dir)
-    val members = buckets.join(n, "vec_id")
-      .groupBy(col("tbl"), col("bucket"))
-      .agg(sort_array(collect_list(
-        struct(col("vec_id"), col("embedding"), col("nrm")))).as("cands"))
-    val queries = qb
-      .join(n.filter(col("vec_id") % queryStride === 0)
-        .withColumnRenamed("vec_id", "q_id"), "q_id")
-      .groupBy(col("tbl"), col("bucket"))
-      .agg(collect_list(struct(col("q_id"), col("embedding"), col("nrm"))).as("qs"))
-    tiledTopkPairs(Seq("tbl", "bucket"), queries, members).distinct()
-  }
-
-  /** Pair-scoring volume of the LSH index (Σ over probed buckets of
-    * queries × members) and the corpus size — the spec-facing statistic
-    * behind the candidate-fraction ceiling: scored-pairs / (Q · N) must
-    * stay well below 1 or the index isn't sub-linear. Counted from the
-    * same grouped frames the scoring path uses. */
-  private[graft] def lshScoredPairVolume(s: SparkSession, dir: String,
-      tables: Int, bits: Int, multiprobe: Boolean): Double = {
-    val buckets = lshBuckets(s, dir, tables, bits)
-    val qbase = buckets.filter(col("vec_id") % queryStride === 0)
-      .select(col("vec_id").as("q_id"), col("tbl"), col("bucket"))
-    val qb =
-      if (!multiprobe) qbase
-      else qbase.select(col("q_id"), col("tbl"),
-        explode(array(col("bucket") +:
-          (0 until bits).map(j => col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
-    val sizes = buckets.groupBy(col("tbl"), col("bucket")).agg(count(lit(1)).as("m"))
-    qb.join(sizes, Seq("tbl", "bucket"))
-      .agg(sum(col("m"))).head().getLong(0).toDouble
-  }
-
   /** Tile a per-key (queries × members) workload into lshTile-bounded
     * cells and return each cell's per-query top-[[topK]] scored pairs —
-    * the shared kernel behind hot-LSH-bucket scoring and the tiled IVF
-    * probe path. `queriesByKey` carries the key columns + an array
+    * the shared kernel behind the LSH bucket and IVF list serves
+    * ([[AnnIndex]]). `queriesByKey` carries the key columns + an array
     * column `qs`; `membersByKey` the key columns + an id-SORTED array
     * column `cands` (sortedness is the equal-cosine → lower-cand_id
     * tie-break); both arrays hold struct(id, embedding, nrm) rows.
     * Every (query tile × member tile) cell becomes its own row spread
     * by a hash repartition BEFORE the quadratic work runs, so one dense
-    * key costs many bounded tasks, not one unbounded one. */
+    * key costs many bounded tasks, not one unbounded one.
+    *
+    * Per-cell rank lower-bounds key rank, so the ranked result is EXACT
+    * over the candidate set that enters the cells: no (q, cand) pair
+    * set is ever expanded (at 250k rows the equi-join + distinct +
+    * vector re-join form shuffled 23M candidate pairs), no vector
+    * re-join runs, and dense keys are paid in parallel rather than
+    * dropped (dropping buckets over a cap left a recall hole). */
   private[graft] def tiledTopkPairs(keyCols: Seq[String],
       queriesByKey: DataFrame, membersByKey: DataFrame): DataFrame = {
     val nq = ((size(col("qs")) + lit(lshTile - 1)) / lit(lshTile)).cast("int")
@@ -372,8 +226,8 @@ object Similarity {
       .agg(sort_array(collect_list(col("c"))).as("cents"))
 
   /** (id, c_id): each source vector's `keep` nearest centroids by cosine,
-    * deterministic (cosine desc, c_id tie-break). Shared by simIvfTopk,
-    * Dedup.dedupEmbeddingBlocked, and k-means training — the SAME
+    * deterministic (cosine desc, c_id tie-break). Shared by the IVF
+    * index build and serve, Dedup.dedupEmbeddingBlocked, and k-means training — the SAME
     * assignment kernel serves search probes, dedup blocking, and Lloyd
     * steps, so one quantizer build covers all three.
     *
@@ -490,42 +344,7 @@ object Similarity {
       .toMap
   }
 
-  private def ivfTopkWith(s: SparkSession, dir: String, centFn: DataFrame => DataFrame): DataFrame = {
-    val n = normed(s, dir)
-    val cent = centFn(n)
-    val assign = nearestCentroids(cent)(
-      n.select(col("vec_id"), col("embedding"), col("nrm")), "vec_id", "embedding", "nrm", 1)
-    val q = n.filter(col("vec_id") % queryStride === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    val probes = nearestCentroids(cent)(q, "q_id", "q_emb", "q_nrm", nProbe)
-    val cand = probes.join(assign, "c_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("cand_id"))
-      .distinct()
-    val c = n.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb2"), col("nrm").as("c_nrm2"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("cand_id"))
-    cand.join(JoinHints.broadcastIfSmall(q, 1.0 / queryStride), "q_id").join(c, "cand_id")
-      .withColumn("cosine", dot(col("q_emb"), col("c_emb2")) / (col("q_nrm") * col("c_nrm2")))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= topK)
-      .select(col("q_id"), col("rk"), col("cand_id"), col("cosine"))
-      .orderBy(col("q_id"), col("rk"))
-  }
-
-  /** IVF ANN with the deterministic stride-sampled quantizer — the
-    * oracle-checkable variant. */
-  def simIvfTopk(s: SparkSession, dir: String): DataFrame =
-    ivfTopkWith(s, dir, centroidsOf)
-
-  /** IVF ANN with the TRAINED (k-means) quantizer — the 100 TB serving
-    * path: trained centroids balance the inverted lists (lower hot-block
-    * skew) and raise recall at equal probe cost, both asserted vs the
-    * stride variant in DedupSimilaritySpec. Rows-only (see
-    * [[trainedCentroidsOf]] for why no SQL oracle). */
-  def simIvfTopkTrained(s: SparkSession, dir: String): DataFrame =
-    ivfTopkWith(s, dir, _ => trainedCentroidsOf(s, dir))
-
-  /** Fraction of the inverted lists the AUTO serving path probes. A
+  /** Fraction of the inverted lists the mass-budgeted serve probes. A
     * FIXED nProbe shrinks the probed fraction as the corpus grows (the
     * quantizer keeps k ∝ N/centroidStride, so nProbe=2 probes 28% of a
     * 725-vector corpus but 0.08% of a 250k one — measured recall@5
@@ -544,86 +363,29 @@ object Similarity {
   def ivfProbesFor(nLists: Double): Int =
     math.max(nProbe, math.round(nLists * ivfProbeFraction).toInt)
 
-  /** Above this many inverted lists the AUTO path's corpus-side
-    * assignment goes TWO-LEVEL (coarse→fine): exact nearest-centroid
-    * assignment is Θ(N·k) dot products, and with k ∝ N/centroidStride
-    * that is Θ(N²/stride) — at 250k vectors × 2500 centroids the
-    * assignment alone (625M fused dots) cost more than HALF of what the
-    * brute-force scan pays for the whole query batch, which is how the
-    * one-shot auto path lost to brute force at 250k.
-    * Two-level assignment (nearest of √k super-centroids, then nearest
-    * child within that super's group — FAISS's approximate coarse
-    * assignment) pays ~2√k dots per vector instead of k, a 25× cut at
-    * k=2500. Below the threshold assignment stays EXACT, so small
-    * corpora keep the oracle-checked configuration byte-for-byte (the
-    * served/trained identity specs). Assignment becomes approximate
-    * above it — a boundary vector can land in its second-best list —
-    * which the WIDE probe ring (the mass budget) absorbs; PLANS.md
-    * ("Scale mains (deleted)") points at the 250k recall rows. */
-  val twoLevelMinLists = 512
-
-  /** Corpus-side list assignment for the auto path: exact below
-    * [[twoLevelMinLists]], two-level above (see there). Carries
-    * (embedding, nrm) alongside (vec_id, c_id) like the exact form. */
-  private def autoAssign(cent: DataFrame, n: DataFrame): DataFrame = {
-    val k = cent.count()
-    if (k < twoLevelMinLists)
-      nearestCentroids(cent)(n, "vec_id", "embedding", "nrm", 1,
-        carry = Seq("embedding", "nrm"))
-    else {
-      val k1 = math.max(1, math.round(math.sqrt(k.toDouble)).toInt)
-      val step = math.max(1, (k / k1).toInt)
-      // deterministic super sample: every step-th centroid in c_id order
-      val w = Window.orderBy(col("c_id"))
-      val supers = cent.withColumn("srk", row_number().over(w))
-        .filter(pmod(col("srk"), lit(step)) === 1).drop("srk")
-      val superArr = broadcast(centArrayOf(supers))
-      // centroid -> super (k rows, exact against the k1 supers)
-      val cnc = graft.plans.VectorFunctions.nearest_centroid_ids(
-        col("c_emb").cast("array<float>"), col("c_nrm"), col("cents"), 1)
-      val c2s = cent.crossJoin(superArr)
-        .select(col("c_id"), col("c_emb"), col("c_nrm"), explode(cnc).as("s_id"))
-      // per-super child-centroid arrays, broadcast to the vector scan
-      val groups = broadcast(c2s
-        .select(col("s_id"), struct(col("c_id"),
-          col("c_emb").cast("array<double>").as("c_emb"), col("c_nrm")).as("c"))
-        .groupBy(col("s_id")).agg(sort_array(collect_list(col("c"))).as("group_cents")))
-      // vector -> super (k1 dots) -> child within the super (k/k1 dots)
-      val snc = graft.plans.VectorFunctions.nearest_centroid_ids(
-        col("embedding"), col("nrm"), col("cents"), 1)
-      val gnc = graft.plans.VectorFunctions.nearest_centroid_ids(
-        col("embedding"), col("nrm"), col("group_cents"), 1)
-      n.select(col("vec_id"), col("embedding"), col("nrm"))
-        .crossJoin(superArr)
-        .select(col("vec_id"), col("embedding"), col("nrm"), explode(snc).as("s_id"))
-        .join(groups, "s_id")
-        .select(col("vec_id"), col("embedding"), col("nrm"), explode(gnc).as("c_id"))
-    }
-  }
-
-  /** Per-query probe set trimmed by cumulative LIST MASS — the shared
-    * policy of the in-session auto path and the persisted serve
-    * ([[AnnIndex.ivfIndexServe]]): each query's `cap` nearest centroids
-    * in quantizer order, kept while it is within the [[nProbe]] floor
-    * or the mass probed BEFORE it is under `budget` (so the budget is
-    * always reached, never undershot). Returns (vec_id, embedding,
-    * nrm, c_id) probe rows. The trim runs on NARROW rows — the
-    * cumulative-mass window sorts `cap` rows per query, and riding the
-    * embeddings through that shuffle would triple its width; they
-    * re-join from the query set after.
+  /** Per-query probe set trimmed by cumulative LIST MASS — the probe
+    * policy of the persisted IVF serve ([[AnnIndex.ivfIndexServe]]):
+    * each query's `cap` nearest centroids in quantizer order, kept while
+    * it is within the [[nProbe]] floor or the mass probed BEFORE it is
+    * under `budget` (so the budget is always reached, never undershot).
+    * Returns (vec_id, embedding, nrm, c_id) probe rows.
     *
-    * `broadcastQueries` hints that re-join. The persisted serve passes
-    * true (its query set is a handful of externally supplied vectors);
-    * the AUTO path passes false — there the query set is
-    * corpus/queryStride, 1/50 of ALL vectors with full embeddings, so a
-    * broadcast would grow linearly with corpus size and blow
-    * driver/executor memory at exactly the scales that path targets.
-    * Unhinted, AQE still broadcasts when the runtime size is under the
-    * threshold (small corpora keep the same physical plan) and falls
-    * back to a shuffle join when it is not. */
+    * The budget is a fraction of VECTORS, not of lists: with hot-list
+    * skew, a constant ring of lists around a clustered query covers most
+    * of its cluster, so list-count probing pays many times the work its
+    * budget intended. Mass probing makes the candidate count ≈
+    * budget BY CONSTRUCTION on every geometry (skew changes how many
+    * lists that takes, not how much work); the list-count rule survives
+    * as the ordinal `cap`, and the [[nProbe]] floor keeps small corpora
+    * on the oracle-checked configuration.
+    *
+    * The trim runs on NARROW rows — the cumulative-mass window sorts
+    * `cap` rows per query, and riding the embeddings through that
+    * shuffle would triple its width; they re-join from the query set
+    * after, hinted only under [[JoinHints.broadcastIfSmall]]'s size gate
+    * (a query set can grow with the corpus). */
   private[ops] def massTrimmedProbes(cent: DataFrame, qn: DataFrame,
-      cap: Int, listSizes: DataFrame, budget: Double,
-      broadcastQueries: Boolean = true): DataFrame = {
+      cap: Int, listSizes: DataFrame, budget: Double): DataFrame = {
     val nc = graft.plans.VectorFunctions.nearest_centroid_ids(
       col("embedding"), col("nrm"), col("cents"), cap)
     val wq = Window.partitionBy(col("vec_id")).orderBy(col("ord"))
@@ -634,93 +396,9 @@ object Similarity {
       .withColumn("cum_before", coalesce(sum(coalesce(col("lsz"), lit(0L))).over(wq), lit(0L)))
       .filter(col("ord") < nProbe || col("cum_before") < budget)
       .select(col("vec_id"), col("c_id"))
-      .join({
-        val qs = qn.select(col("vec_id"), col("embedding"), col("nrm"))
-        if (broadcastQueries) broadcast(qs) else qs
-      }, "vec_id")
+      .join(JoinHints.broadcastIfSmall(qn.select(col("vec_id"), col("embedding"), col("nrm"))),
+        "vec_id")
       .select(col("vec_id"), col("embedding"), col("nrm"), col("c_id"))
-  }
-
-  /** The IVF SCALE serving path: trained quantizer + MASS-budgeted
-    * probing + tiled per-list scoring. Differences from `ivfTopkWith`:
-    *
-    *  - the probe budget is a fraction of VECTORS, not of lists
-    *    ([[ivfProbeFraction]] of the corpus): each query walks its
-    *    nearest lists in quantizer order and stops once the cumulative
-    *    probed LIST MASS reaches the budget. A clustered 250k
-    *    experiment showed why list-count probing fails on real
-    *    geometry: with 4.2× hot-list skew, a constant 156-of-2500-lists
-    *    ring around a clustered query covers most of its Gaussian —
-    *    41.6 s vs 4.3 s brute force at 250k, a probe policy paying 10×
-    *    the work its budget intended. Mass probing makes the candidate
-    *    count ≈ probedFraction·N BY CONSTRUCTION on every geometry
-    *    (skew changes how many lists that takes, not how much work);
-    *  - the list-count rule survives as the ordinal CAP (a query never
-    *    probes more lists than the old policy) and [[nProbe]] stays the
-    *    floor, so small corpora keep the oracle-checked configuration
-    *    byte-for-byte;
-    *  - candidate scoring happens INSIDE per-list tile cells via the
-    *    fused `cell_topk_pairs` loop instead of expanding a (q_id,
-    *    cand_id) join — at 312 probes × 5k queries the join form would
-    *    shuffle ~156M candidate-pair rows through distinct + join +
-    *    window, where the tiled form forwards ≤ topK rows per (query,
-    *    cell) and each vector's bytes move once into its list array.
-    *
-    * Each vector lives in exactly ONE list (keep=1 assignment), so a
-    * (q, cand) pair surfaces in at most one cell — no distinct needed
-    * before the final ranking window. Rows-only (trained quantizer —
-    * see [[trainedCentroidsOf]]). */
-  def simIvfTopkAuto(s: SparkSession, dir: String): DataFrame = {
-    val (qlists, lists) = ivfAutoCells(s, dir)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("cand_id"))
-    tiledTopkPairs(Seq("c_id"), qlists, lists)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= topK)
-      .select(col("q_id"), col("rk"), col("cand_id"), col("cosine"))
-      .orderBy(col("q_id"), col("rk"))
-  }
-
-  /** Rows [[simIvfTopkAuto]] scores: Σ over probed lists of queries ×
-    * members, the work its mass budget bounds (brute force scores
-    * queries × corpus). */
-  private[graft] def ivfAutoScoredRows(s: SparkSession, dir: String): Long = {
-    val (qlists, lists) = ivfAutoCells(s, dir)
-    qlists.join(lists, "c_id")
-      .agg(sum(size(col("qs")).cast("long") * size(col("cands")))).head().getLong(0)
-  }
-
-  /** The auto path's probed cells, (c_id, qs), and its built lists,
-    * (c_id, cands). */
-  private def ivfAutoCells(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // exact row count, not the byte-size estimate: cheap
-    // (footer-only count-star) and it makes the statistic-derived probe
-    // count EQUAL the served path's list-count-derived one everywhere,
-    // not just where the ~350 B/row calibration happened to round alike
-    val rows = Tables(s, dir, "embeddings").count().toDouble
-    val cap = ivfProbesFor(rows / centroidStride)
-    val massBudget = rows * ivfProbeFraction
-    val n = normed(s, dir)
-    val cent = trainedCentroidsOf(s, dir)
-    val asg = autoAssign(cent, n)
-    // the built lists memoize per dir (the IVF value proposition: the
-    // assignment + group shuffle are BUILD cost, paid once — steady-state
-    // serving reads the cached lists), same memo the trained quantizer
-    // uses; Artifacts.clear()/invalidate on corpus replacement
-    val lists = Artifacts.frame(s, s"$dir|ivf-auto-lists") {
-      asg.groupBy(col("c_id"))
-        .agg(sort_array(collect_list(
-          struct(col("vec_id"), col("embedding"), col("nrm")))).as("cands"))
-    }
-    // per-list masses: k rows, broadcast to the probe trim below —
-    // derived from the SAME (memoized) grouped frame so the assignment
-    // is computed once, not paid a second time for a count
-    val listSizes = lists.select(col("c_id"), size(col("cands")).cast("long").as("lsz"))
-    val q = n.filter(col("vec_id") % queryStride === 0)
-    val qlists = massTrimmedProbes(cent, q.select(col("vec_id"), col("embedding"), col("nrm")),
-        cap, listSizes, massBudget, broadcastQueries = false)
-      .groupBy(col("c_id"))
-      .agg(collect_list(struct(col("vec_id"), col("embedding"), col("nrm"))).as("qs"))
-    (qlists, lists)
   }
 
   // ---------------------------------------------------------------- PQ
@@ -842,7 +520,7 @@ object Similarity {
     * API used to stop a user from running them there — now the plan
     * itself refuses (same unprunable raise_error shape as
     * `Dedup.dedupEmbeddingCosine`). The scale paths are
-    * [[simPqRescoreAuto]] and [[simIvfTopkAuto]]. */
+    * [[simPqRescoreAuto]] and `sim_ivf_topk_auto`. */
   val pqPinnedMaxRows = 100000L
 
   private def pqPinnedGuard(s: SparkSession, dir: String, maxRows: Long): DataFrame =
@@ -853,7 +531,7 @@ object Similarity {
           lit("oracle-pinned PQ variant refuses "),
           col("n_emb").cast("string"),
           lit(s" > $maxRows rows — its fixed shortlist depth collapses recall at scale; " +
-            "use simPqRescoreAuto or simIvfTopkAuto"))))
+            "use simPqRescoreAuto or sim_ivf_topk_auto"))))
         .as("guard_ok"))
 
   /** Bound-injectable variants so the over-limit refusal is testable
@@ -1037,9 +715,8 @@ object Similarity {
 
   /** The composed IVF-PQ plan over explicit (centroids, codebook,
     * assigned codes, queries, rescore pool) — shared by the in-session
-    * form and the persisted-index serve path
-    * ([[AnnIndex.ivfPqIndexServe]]), which is what makes the two
-    * byte-identical. Unprobed lists never reach a kernel (the inner
+    * `sim_ivfpq_topk_stride` and the persisted-index serve path
+    * ([[AnnIndex.ivfPqIndexServe]]) behind `sim_ivfpq_topk`. Unprobed lists never reach a kernel (the inner
     * join on c_id IS the pruning); each vector lives in exactly one
     * list, so no pair surfaces twice and no distinct is needed.
     *
@@ -1075,34 +752,6 @@ object Similarity {
         col("cands"), kEff, depthCell)).as("p"))
       .select(col("p.q_id").as("q_id"), col("p.cand_id").as("cand_id"))
     rescoreOver(queries, rescorePool, short)
-  }
-
-  /** IVF-PQ composed ANN — the standard 100 TB serving layout, both
-    * halves of which already exist separately:
-    *  1. IVF PRUNING ([[simIvfTopkAuto]]'s constant-fraction probe over
-    *     the trained quantizer): unprobed inverted lists are never
-    *     scanned — ~[[ivfProbeFraction]] of the corpus enters a kernel.
-    *  2. PQ COMPRESSION ([[simPqRescoreAuto]]'s compressed scan): the
-    *     probed lists ship as 8-byte code rows through the fused
-    *     [[graft.plans.CellPqTopk]] loop, ~32× narrower than vectors.
-    *  3. EXACT RESCORE: the per-list ADC shortlist fetches full
-    *     embeddings for true-cosine ranking — the output contract is
-    *     exact cosines, like every other serving ANN path.
-    * Rows-only (trained quantizer + statistic-derived probes); the
-    * self-check asserts the usual exact-cosine/dense-rank contract,
-    * recall parity with [[simIvfTopkAuto]] at test scale, and the
-    * 250k row in PLANS.md measures the ≥-PQ-auto-at-lower-budget claim
-    * where it actually holds (at toy scale the flat PQ scan is
-    * near-exhaustive, so pruning necessarily costs recall there). */
-  def simIvfPqTopk(s: SparkSession, dir: String): DataFrame = {
-    // exact count for the probe statistic — see simIvfTopkAuto
-    val rows = Tables(s, dir, "embeddings").count().toDouble
-    val n = normed(s, dir)
-    val cent = trainedCentroidsOf(s, dir)
-    val cb = pqCodebook(s, dir)
-    val q = n.filter(col("vec_id") % queryStride === 0)
-    ivfPqOver(cent, cb, ivfPqAssign(cent, cb, n), q, n,
-      rows / centroidStride)
   }
 
   /** The fully-ORACLED member of the composed family: the SAME IVF-PQ
@@ -1172,13 +821,13 @@ object Similarity {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sim_topk_bruteforce" -> simTopkBruteforce _,
     "sim_range_search" -> simRangeSearch _,
-    "sim_lsh_ann" -> simLshAnn _,
+    "sim_lsh_ann" -> AnnIndex.simLshAnnServed _,
     "sim_lsh_ann_served" -> AnnIndex.simLshAnnServed _,
     "sim_lsh_ann_filtered" -> AnnIndex.simLshAnnFiltered _,
-    "sim_lsh_ann_auto" -> simLshAnnAuto _,
-    "sim_ivf_topk" -> simIvfTopk _,
-    "sim_ivf_topk_trained" -> simIvfTopkTrained _,
-    "sim_ivf_topk_auto" -> simIvfTopkAuto _,
+    "sim_lsh_ann_auto" -> AnnIndex.simLshAnnAuto _,
+    "sim_ivf_topk" -> AnnIndex.simIvfTopkServedStride _,
+    "sim_ivf_topk_trained" -> AnnIndex.simIvfTopkTrained _,
+    "sim_ivf_topk_auto" -> AnnIndex.simIvfTopkServed _,
     "sim_ivf_topk_served" -> AnnIndex.simIvfTopkServed _,
     "sim_ivf_topk_filtered" -> AnnIndex.simIvfTopkFiltered _,
     "sim_ivf_topk_served_stride" -> AnnIndex.simIvfTopkServedStride _,
@@ -1187,7 +836,7 @@ object Similarity {
     "sim_pq_topk_trained" -> simPqTopkTrained _,
     "sim_pq_rescore" -> simPqRescore _,
     "sim_pq_rescore_auto" -> simPqRescoreAuto _,
-    "sim_ivfpq_topk" -> simIvfPqTopk _,
+    "sim_ivfpq_topk" -> AnnIndex.simIvfPqTopkServed _,
     "sim_ivfpq_topk_stride" -> simIvfPqTopkStride _,
     "sim_ivfpq_topk_served" -> AnnIndex.simIvfPqTopkServed _,
     "sim_knn_label" -> simKnnLabel _,
@@ -1466,8 +1115,8 @@ object Similarity {
     s"list_sum(list_transform(range(1, len($a) + 1), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
 
   /** Oracle for the stride-quantizer IVF ANN, parameterized on an extra
-    * centroid-training restriction: `centCond = "TRUE"` is the
-    * in-session `sim_ivf_topk`; the streamed-ingest form restricts the
+    * centroid-training restriction: `centCond = "TRUE"` is
+    * `sim_ivf_topk`; the streamed-ingest form restricts the
     * centroids to the SEED slice the persisted index was built from
     * (the quantizer-frozen train/serve divergence, same move as
     * [[lshAnnOracleSqlSeedThr]]) while assignment, probes, and scoring

@@ -319,11 +319,11 @@ case class LshBuckets(left: Expression, right: Expression, tables: Int, bits: In
       (right, isDoubleArray, "array<double>"))
 
   override def nullSafeEval(a: Any, b: Any): Any =
-    HashUtil.lshBuckets(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], tables, bits)
+    HashUtil.lshBucketIds(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], tables, bits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.plans.HashUtil.lshBuckets($a, $b, $tables, $bits)")
+      s"graft.plans.HashUtil.lshBucketIds($a, $b, $tables, $bits)")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -983,7 +983,7 @@ object HashUtil {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  def lshBuckets(proj: ArrayData, thr: ArrayData, tables: Int, bits: Int): ArrayData = {
+  def lshBucketIds(proj: ArrayData, thr: ArrayData, tables: Int, bits: Int): ArrayData = {
     val need = tables * bits
     if (proj.numElements() != need || thr.numElements() != need)
       throw new IllegalArgumentException(

@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.{AnnIndex, Similarity}
 
-/** The persisted LSH index: build → serve parity with the in-session
-  * path, external-query serving, and landing-zone append semantics. */
+/** The persisted ANN indexes: the registered keys' standing indexes
+  * against fresh builds and join-form references, external-query
+  * serving, and landing-zone append semantics. */
 class AnnIndexSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import TestSpark.sf0001
@@ -14,11 +15,17 @@ class AnnIndexSpec extends AnyFunSuite {
     (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
 
   test("persisted index serves the stride query set byte-identically to sim_lsh_ann") {
-    // the registered query: write-once to a temp index dir, serve from it
-    val served = AnnIndex.simLshAnnServed(spark, sf0001).collect().map(shape).toSeq
-    val inSession = Similarity.simLshAnn(spark, sf0001).collect().map(shape).toSeq
-    assert(served.nonEmpty && served === inSession,
-      "persisted-index serving diverged from the in-session ANN")
+    // the registered key reads the standing (write-once) temp-dir index;
+    // a FRESH lshIndexWrite of the same corpus must serve the same bytes,
+    // so the build-once memo never serves a stale or differently-built
+    // index
+    val registered = SparkEntry.queries("sim_lsh_ann")(spark, sf0001).collect().map(shape).toSeq
+    val tmp = java.nio.file.Files.createTempDirectory("ann-fresh")
+    AnnIndex.lshIndexWrite(spark, sf0001, s"$tmp/index")
+    val fresh = AnnIndex.lshIndexServe(spark, s"$tmp/index", Seq(sf0001),
+      AnnReference.strideQueries(spark, sf0001)).collect().map(shape).toSeq
+    assert(registered.nonEmpty && registered === fresh,
+      "the standing sim_lsh_ann index diverged from a fresh build")
   }
 
   test("append hashes a landing batch with the INDEX's thresholds, and serving sees it") {
@@ -62,14 +69,15 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("persisted IVF index serves byte-identically to the in-session auto path") {
-    // on sf0001 the statistic-derived probe count and the persisted
-    // list-count-derived one both floor at the pinned nProbe, the
-    // centroids round-trip parquet exactly, and the scoring kernel is
-    // shared — so the served frame must be byte-identical
-    val served = AnnIndex.simIvfTopkServed(spark, sf0001).collect().map(shape).toSeq
-    val inSession = Similarity.simIvfTopkAuto(spark, sf0001).collect().map(shape).toSeq
-    assert(served.nonEmpty && served === inSession,
-      "persisted-IVF serving diverged from the in-session auto path")
+    // on sf0001 the mass-budgeted probe count floors at the pinned
+    // nProbe and the centroids round-trip parquet exactly, so the
+    // registered sim_ivf_topk_auto serve must equal the join-form
+    // reference over the memoized trained centroids byte for byte
+    val served = SparkEntry.queries("sim_ivf_topk_auto")(spark, sf0001).collect().map(shape).toSeq
+    val reference = AnnReference.ivfJoin(spark, sf0001,
+      Similarity.trainedCentroidsOf(spark, sf0001), Similarity.nProbe).collect().map(shape).toSeq
+    assert(served.nonEmpty && served === reference,
+      "persisted-IVF serving diverged from the join-form trained reference")
   }
 
   test("IVF append assigns a landing batch with the persisted quantizer") {
@@ -99,13 +107,20 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("persisted IVF-PQ index serves byte-identically to the in-session composed path") {
     // centroids AND the codebook round-trip parquet exactly (doubles),
-    // the persisted code rows equal the in-session pq_codes projection,
+    // the persisted code rows equal an in-memory pq_codes projection,
     // probe counts agree at sf0001 (both floor at nProbe), and the ADC
-    // kernel + exact rescore are shared — so served == in-session
-    val served = AnnIndex.simIvfPqTopkServed(spark, sf0001).collect().map(shape).toSeq
-    val inSession = Similarity.simIvfPqTopk(spark, sf0001).collect().map(shape).toSeq
-    assert(served.nonEmpty && served === inSession,
-      "persisted IVF-PQ serving diverged from the in-session composed path")
+    // kernel + exact rescore are shared — so the registered serve must
+    // equal the composition over the memoized quantizers, computed here
+    val served = SparkEntry.queries("sim_ivfpq_topk")(spark, sf0001).collect().map(shape).toSeq
+    val rows = Tables(spark, sf0001, "embeddings").count().toDouble
+    val n = Similarity.normed(spark, sf0001)
+    val cent = Similarity.trainedCentroidsOf(spark, sf0001)
+    val cb = Similarity.pqCodebook(spark, sf0001)
+    val composed = Similarity.ivfPqOver(cent, cb, Similarity.ivfPqAssign(cent, cb, n),
+      n.filter(col("vec_id") % Similarity.queryStride === 0), n, rows / Similarity.centroidStride)
+      .collect().map(shape).toSeq
+    assert(served.nonEmpty && served === composed,
+      "persisted IVF-PQ serving diverged from the in-memory composition")
   }
 
   test("IVF-PQ append encodes a landing batch with the FROZEN quantizer and codebook") {
@@ -180,37 +195,16 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("filtered ANN equals an equi-join reference over the label slice, byte for byte") {
-    // reference: expand candidate pairs via the bucket equi-join (as in
-    // DedupSimilaritySpec's tiled-scoring reference), restrict MEMBERS
+    // reference: expand candidate pairs via the equi-join over the
+    // persisted index's bucket table (as in DedupSimilaritySpec's
+    // tiled-scoring reference), restrict MEMBERS
     // to the label slice, score, rank — filtered serving must match
     // exactly, because tiling is rank-exact over whatever candidate set
     // enters the cells
-    import org.apache.spark.sql.expressions.Window
-    val (tables, bits) = (Similarity.lshTables, Similarity.lshBits)
-    val buckets = Similarity.lshBuckets(spark, sf0001, tables, bits)
-    val qb = buckets.filter(col("vec_id") % Similarity.queryStride === 0)
-      .select(col("vec_id").as("q_id"), col("tbl"), col("bucket"))
-      .select(col("q_id"), col("tbl"),
-        explode(array(col("bucket") +:
-          (0 until bits).map(j => col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
+    val buckets = graft.ops.IndexMaintenance.read(spark, AnnIndex.lshIndexFor(spark, sf0001), "buckets")
     val sliceIds = Tables(spark, sf0001, "embeddings")
       .filter(col("label") === Similarity.annFilterLabel).select(col("vec_id"))
-    val cand = buckets.join(qb, Seq("tbl", "bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(sliceIds, "vec_id")
-      .select(col("q_id"), col("vec_id").as("cand_id"))
-      .distinct()
-    val n = Similarity.normed(spark, sf0001)
-    val q = n.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    val c = n.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("cand_id"))
-    val reference = cand.join(q, "q_id").join(c, "cand_id")
-      .withColumn("cosine", graft.plans.VectorFunctions.vec_dot(col("q_emb"), col("c_emb"))
-        / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= Similarity.topK)
-      .select(col("q_id"), col("rk"), col("cand_id"), col("cosine"))
-      .orderBy(col("q_id"), col("rk"))
+    val reference = AnnReference.lshJoin(spark, sf0001, buckets, Similarity.lshBits, Some(sliceIds))
       .collect().map(shape).toSeq
     val filtered = AnnIndex.simLshAnnFiltered(spark, sf0001).collect().map(shape).toSeq
     assert(filtered.nonEmpty && filtered === reference,
@@ -264,15 +258,19 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("stride twins: persisted-index serve == the oracled scan form; filter restricts members") {
-    // the round-9 oracle pin made executable at spec scale: the serve
-    // composition (persisted stride index, fixed probes) is value-equal
-    // to sim_ivf_topk, and the filtered twin's candidates all come from
-    // the label slice while its queries stay unrestricted
+    // the shared oracle made executable at spec scale: the serve
+    // composition (persisted stride index, fixed probes) behind
+    // sim_ivf_topk and its served twin equals the join-form reference
+    // over the stride centroids, and the filtered twin's candidates all
+    // come from the label slice while its queries stay unrestricted
     val servedStride = AnnIndex.simIvfTopkServedStride(spark, sf0001)
       .collect().map(shape).toSeq
-    val scan = Similarity.simIvfTopk(spark, sf0001).collect().map(shape).toSeq
-    assert(servedStride.nonEmpty && servedStride === scan,
-      "stride serve twin diverged from the oracled scan form")
+    val registered = SparkEntry.queries("sim_ivf_topk")(spark, sf0001).collect().map(shape).toSeq
+    val scan = AnnReference.ivfJoin(spark, sf0001,
+      Similarity.centroidsOf(Similarity.normed(spark, sf0001)), Similarity.nProbe)
+      .collect().map(shape).toSeq
+    assert(servedStride.nonEmpty && servedStride === scan && registered === scan,
+      "stride serve twin diverged from the join-form stride reference")
     val filtered = AnnIndex.simIvfTopkFilteredStride(spark, sf0001).collect()
     assert(filtered.nonEmpty, "filtered stride twin returned nothing (vacuous)")
     val slice = Tables(spark, sf0001, "embeddings")
@@ -339,5 +337,24 @@ class AnnIndexSpec extends AnyFunSuite {
       assert(pushed.nonEmpty && pushed === serve(push = false),
         "probed-cell pushdown changed the serve result")
     } finally olds.foreach { case (k, o) => o.fold(hconf.unset(k))(hconf.set(k, _)) }
+  }
+
+  test("persisted LSH thresholds are each plane's mean projection over the corpus") {
+    // the learned part of the index, recomputed independently: every
+    // plane's projection as a plain left-fold HOF (not the fused
+    // lsh_projections kernel), averaged over the corpus the index was
+    // built from — the persisted doubles must match exactly
+    val (tables, bits) = (Similarity.lshTables, Similarity.lshBits)
+    val planes = Similarity.hyperplanesFor(tables, bits)
+    val d = Similarity.embDims
+    val want = Tables(spark, sf0001, "embeddings").select((0 until tables * bits).map { p =>
+        val plane = lit(planes.slice(p * d, (p + 1) * d))
+        avg(aggregate(sequence(lit(1), lit(d)), lit(0.0), (acc, i) =>
+          acc + element_at(col("embedding"), i).cast("double") * element_at(plane, i)))
+      }: _*).head().toSeq.map(_.asInstanceOf[Double])
+    val meta = graft.ops.IndexMaintenance.read(spark, AnnIndex.lshIndexFor(spark, sf0001), "meta").head()
+    val thr = meta.getSeq[Double](meta.fieldIndex("thr"))
+    assert(want.exists(_ != 0.0), "vacuous: every recomputed threshold is 0")
+    assert(thr === want, "persisted thresholds are not the per-plane corpus-mean projections")
   }
 }

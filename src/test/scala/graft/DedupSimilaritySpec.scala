@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{AnnIndex, Dedup, IndexMaintenance, Similarity}
 
 /** Semantics checks for the sketch-based operators that have no SQL
   * oracle path (LSH ANN) plus recall properties of the ones that do. */
@@ -192,9 +192,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // recall@topK vs brute force, both quantizers at the SAME probe cost
     val exact = Similarity.simTopkBruteforce(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val stride = Similarity.simIvfTopk(spark, sf0001).collect()
+    val stride = SparkEntry.queries("sim_ivf_topk")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val trained = Similarity.simIvfTopkTrained(spark, sf0001).collect()
+    val trained = SparkEntry.queries("sim_ivf_topk_trained")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val strideRecall = (exact intersect stride).size.toDouble / exact.size
     val trainedRecall = (exact intersect trained).size.toDouble / exact.size
@@ -258,16 +258,20 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("tiled auto-probe IVF equals the join-path trained IVF on a small corpus") {
     // on sf0001 ivfProbesFor floors at the pinned nProbe and the trained
-    // quantizer is shared via the memo, so the ONLY difference between
-    // simIvfTopkAuto and simIvfTopkTrained is the candidate machinery:
+    // quantizer round-trips the index exactly, so the ONLY difference
+    // between the served sim_ivf_topk_auto and the join-form reference
+    // over the memoized trained centroids is the candidate machinery:
     // per-list tile cells + fused per-cell top-k versus the probe×assign
     // join + rescoring. Identical left-fold arithmetic → the ranked
-    // results must match to the bit, cosines included.
+    // results must match to the bit, cosines included. The fixed-probe
+    // sim_ivf_topk_trained serve over the same index must match too.
     val shape = (r: org.apache.spark.sql.Row) =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-    val auto = Similarity.simIvfTopkAuto(spark, sf0001).collect().map(shape).toSeq
-    val joined = Similarity.simIvfTopkTrained(spark, sf0001).collect().map(shape).toSeq
-    assert(auto.nonEmpty && auto === joined,
+    val auto = SparkEntry.queries("sim_ivf_topk_auto")(spark, sf0001).collect().map(shape).toSeq
+    val joined = AnnReference.ivfJoin(spark, sf0001,
+      Similarity.trainedCentroidsOf(spark, sf0001), Similarity.nProbe).collect().map(shape).toSeq
+    val trained = SparkEntry.queries("sim_ivf_topk_trained")(spark, sf0001).collect().map(shape).toSeq
+    assert(auto.nonEmpty && auto === joined && trained === joined,
       "tiled IVF probe path diverged from the join-path trained IVF")
   }
 
@@ -470,8 +474,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("auto-IVF never FORCES the query re-join broadcast: the size check stays in charge") {
-    // r11 advisory fix under pin (Similarity.scala massTrimmedProbes call
-    // site): the auto path's query set is corpus/queryStride WITH full
+    // Similarity.massTrimmedProbes' query re-join, through the served
+    // sim_ivf_topk_auto: the query set is corpus/queryStride WITH full
     // embeddings — a forced broadcast hint grew linearly with the corpus
     // and bypassed the size check. With the hint gone, a sub-threshold
     // query frame still broadcasts (so small corpora keep their plan and
@@ -483,11 +487,11 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val old = spark.conf.get(key)
     def shape(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-    val baseline = Similarity.simIvfTopkAuto(spark, sf0001).collect().map(shape).toSeq
+    val baseline = AnnIndex.simIvfTopkServed(spark, sf0001).collect().map(shape).toSeq
     assert(baseline.nonEmpty)
     spark.conf.set(key, "1KB")
     try {
-      val df = Similarity.simIvfTopkAuto(spark, sf0001)
+      val df = AnnIndex.simIvfTopkServed(spark, sf0001)
       val forced = df.queryExecution.sparkPlan.collect {
         case j: BroadcastHashJoinExec
             if (j.leftKeys ++ j.rightKeys).mkString(",").contains("vec_id") => j
@@ -537,6 +541,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("multi-probe LSH ANN: recall >= 0.6 at a bounded scored fraction") {
+    import org.apache.spark.sql.functions._
     val exact = Similarity.simTopkBruteforce(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val nCorpus = Tables(spark, sf0001, "embeddings").count()
@@ -546,16 +551,24 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // strictly harsher number than the old distinct-candidate fraction
     // (0.40 vs 0.31 on this corpus/config). Sub-linearity at scale comes
     // from auto depth; this ceiling just catches an index degenerating
-    // to brute force at the pinned small-corpus config.
-    def measure(tables: Int, bits: Int, mp: Boolean): (Double, Double) = {
-      val ann = Similarity.simLshAnnWith(spark, sf0001, tables, bits, mp).collect()
+    // to brute force at the pinned small-corpus config. Both arms serve
+    // the same persisted index; the volume is counted from its bucket
+    // table.
+    val (tables, bits) = (Similarity.lshTables, Similarity.lshBits)
+    val indexDir = AnnIndex.lshIndexFor(spark, sf0001, tables, bits)
+    val buckets = IndexMaintenance.read(spark, indexDir, "buckets")
+    val sizes = buckets.groupBy(col("tbl"), col("bucket")).agg(count(lit(1)).as("m"))
+    def measure(mp: Boolean): (Double, Double) = {
+      val ann = AnnIndex.lshIndexServe(spark, indexDir, Seq(sf0001),
+          AnnReference.strideQueries(spark, sf0001), multiprobe = mp).collect()
         .map(r => (r.getLong(0), r.getLong(2))).toSet
       val recall = (exact intersect ann).size.toDouble / exact.size
-      val scoredPairs = Similarity.lshScoredPairVolume(spark, sf0001, tables, bits, mp)
+      val scoredPairs = AnnReference.lshProbes(buckets, bits, mp)
+        .join(sizes, Seq("tbl", "bucket")).agg(sum(col("m"))).head().getLong(0).toDouble
       (recall, scoredPairs / (nQueries.toDouble * nCorpus))
     }
-    val (recall, frac) = measure(Similarity.lshTables, Similarity.lshBits, mp = true)
-    val (r0, f0) = measure(Similarity.lshTables, Similarity.lshBits, mp = false)
+    val (recall, frac) = measure(mp = true)
+    val (r0, f0) = measure(mp = false)
     info(f"LSH ANN recall@5 — multiprobe: $recall%.3f at scored fraction $frac%.3f; " +
       f"same tables w/o multiprobe: $r0%.3f at $f0%.3f")
     assert(recall >= 0.6, f"recall $recall%.3f below 0.6")
@@ -563,9 +576,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(recall > r0, "multiprobe failed to beat plain multi-table at the same index")
     // the auto-depth serving path clamps to the pinned (recall-asserted)
     // depth on a corpus this small — results must be identical
-    val auto = Similarity.simLshAnnAuto(spark, sf0001).collect()
+    val auto = SparkEntry.queries("sim_lsh_ann_auto")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val pinned = Similarity.simLshAnn(spark, sf0001).collect()
+    val pinned = SparkEntry.queries("sim_lsh_ann")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(auto === pinned, "auto-depth diverged from the pinned index on a small corpus")
   }
@@ -591,11 +604,20 @@ class DedupSimilaritySpec extends AnyFunSuite {
       df.select("q_id", "cand_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(Similarity.simTopkBruteforce(spark, tmp))
     def recall(got: Set[(Long, Long)]): Double = (exact intersect got).size.toDouble / exact.size
-    val lshRecall = recall(pairs(Similarity.simLshAnnAuto(spark, tmp)))
-    val ivfRecall = recall(pairs(Similarity.simIvfTopkAuto(spark, tmp)))
+    // the pinned-depth index is built FIRST, so an auto serve that
+    // reused it (an index memo keyed without the geometry) would read
+    // 8 bits where the corpus size asks for lshBitsFor(n)
+    assert(AnnIndex.simLshAnnServed(spark, tmp).count() > 0, "vacuous pinned-depth serve")
+    val lshRecall = recall(pairs(AnnIndex.simLshAnnAuto(spark, tmp)))
+    val autoBits = IndexMaintenance.read(spark, AnnIndex.lshIndexFor(spark, tmp,
+      Similarity.lshTables, Similarity.lshBitsFor(n.toDouble)), "meta").select(col("bits")).head().getInt(0)
+    assert(Similarity.lshBitsFor(n.toDouble) == 10 && autoBits == 10,
+      s"sim_lsh_ann_auto read a $autoBits-bit index on $n vectors, want lshBitsFor = 10")
+    val ivfRecall = recall(pairs(AnnIndex.simIvfTopkServed(spark, tmp)))
     // the work the brute-force time paid for against the auto path's
     val bruteRows = exact.map(_._1).size.toLong * n
-    val ivfRows = Similarity.ivfAutoScoredRows(spark, tmp)
+    val ivfRows = AnnIndex.ivfServedScoredRows(spark, AnnIndex.ivfIndexFor(spark, tmp),
+      Seq(tmp), AnnReference.strideQueries(spark, tmp))
     info(f"recall@5: lsh auto $lshRecall%.3f, ivf auto $ivfRecall%.3f; " +
       s"ivf auto scores $ivfRows rows vs brute force $bruteRows")
     assert(exact.nonEmpty, "vacuous ground truth")
@@ -622,40 +644,18 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("tiled LSH scoring equals an independent equi-join reference, byte for byte") {
-    // reference implementation, the pre-round-5 shape: expand every
-    // (q, cand) candidate pair via a bucket equi-join, re-attach the
-    // vectors, score with vec_dot, rank. The production path never
-    // builds the pair set (per-cell fused top-k) — but per-cell rank
-    // lower-bounds global rank, so the ranked result must be
-    // BYTE-identical, cosines included. Together with the DuckDB oracle
-    // this pins the tiling from two independent directions.
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val (tables, bits) = (Similarity.lshTables, Similarity.lshBits)
-    val buckets = Similarity.lshBuckets(spark, sf0001, tables, bits)
-    val qb = buckets.filter(col("vec_id") % Similarity.queryStride === 0)
-      .select(col("vec_id").as("q_id"), col("tbl"), col("bucket"))
-      .select(col("q_id"), col("tbl"),
-        explode(array(col("bucket") +:
-          (0 until bits).map(j => col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
-    val cand = buckets.join(qb, Seq("tbl", "bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("cand_id"))
-      .distinct()
-    val n = Similarity.normed(spark, sf0001)
-    val q = n.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    val c = n.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("cand_id"))
-    val reference = cand.join(q, "q_id").join(c, "cand_id")
-      .withColumn("cosine", graft.plans.VectorFunctions.vec_dot(col("q_emb"), col("c_emb"))
-        / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= Similarity.topK)
-      .select(col("q_id"), col("rk"), col("cand_id"), col("cosine"))
-      .orderBy(col("q_id"), col("rk"))
+    // reference implementation, the join shape: expand every (q, cand)
+    // candidate pair via an equi-join over the persisted index's bucket
+    // table, re-attach the vectors, score with vec_dot, rank. The
+    // production path never builds the pair set (per-cell fused top-k)
+    // — but per-cell rank lower-bounds global rank, so the ranked result
+    // must be BYTE-identical, cosines included. Together with the DuckDB
+    // oracle this pins the tiling from two independent directions.
+    val buckets = IndexMaintenance.read(spark, AnnIndex.lshIndexFor(spark, sf0001), "buckets")
+    val reference = AnnReference.lshJoin(spark, sf0001, buckets, Similarity.lshBits)
     val shape = (r: org.apache.spark.sql.Row) =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-    val tiled = Similarity.simLshAnn(spark, sf0001).collect().map(shape).toSeq
+    val tiled = SparkEntry.queries("sim_lsh_ann")(spark, sf0001).collect().map(shape).toSeq
     val ref = reference.collect().map(shape).toSeq
     assert(tiled.nonEmpty && tiled === ref,
       "tiled LSH scoring diverged from the equi-join reference")

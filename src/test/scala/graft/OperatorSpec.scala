@@ -26,9 +26,9 @@ class OperatorSpec extends AnyFunSuite {
   test("search_hybrid_rrf equals a per-query driver-side fusion over the stride set") {
     import TestSpark.sf0001
     import graft.ops.{Retrieval, Similarity}
-    // semantic side: the in-session stride ANN (byte-identical to the
-    // served path the operator uses, pinned in AnnIndexSpec)
-    val sem = graft.ops.Similarity.simLshAnn(spark, sf0001).collect()
+    // semantic side: the registered stride ANN, the served LSH path
+    // the operator uses
+    val sem = graft.ops.AnnIndex.simLshAnnServed(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(2)) -> r.getLong(1)).toMap
     // lexical side: full driver recompute from raw text — tokenization,
     // per-query first-distinct-3 terms, tf/df/dl/avgdl, BM25 with the
