@@ -51,6 +51,22 @@ object AnnIndex {
       IndexMaintenance.read(s, indexDir, "meta")
     }
 
+  /** The log facts holding an LSH index's geometry, committed with the
+    * meta table at build and retrain. */
+  private val tablesFact = "meta.tables"
+  private val bitsFact = "meta.bits"
+
+  private def geometryFacts(tables: Int, bits: Int): Map[String, String] =
+    Map(tablesFact -> tables.toString, bitsFact -> bits.toString)
+
+  /** (tables, bits) of an LSH index snapshot, read from its log facts —
+    * no Spark job. An index whose log holds no geometry fails loudly. */
+  private def lshGeometry(snap: IndexMaintenance.Snapshot): (Int, Int) = {
+    def fact(k: String): Int = snap.props.getOrElse(k, throw new IllegalStateException(
+      s"${snap.root} has no LSH geometry ($k) in its index log; build the index first")).toInt
+    (fact(tablesFact), fact(bitsFact))
+  }
+
   /** A vec_id table of the index, tombstone-masked: through the
     * per-session cache under `key` while no delete is pending (appends,
     * deletes and compactions invalidate it), straight from the snapshot
@@ -65,14 +81,14 @@ object AnnIndex {
   /** Hash `dir`'s embeddings against an explicit meta frame (broadcast
     * join — the thresholds are one row). Shared by build, append, and
     * the query side of serve. */
-  private def hashWith(s: SparkSession, dir: String, meta: DataFrame): DataFrame =
-    hashWithDf(Tables(s, dir, "embeddings"), meta)
+  private def hashWith(s: SparkSession, dir: String, meta: DataFrame,
+      geometry: (Int, Int)): DataFrame =
+    hashWithDf(Tables(s, dir, "embeddings"), meta, geometry)
 
   /** Same over an arbitrary (vec_id, embedding) frame — the streaming
     * ingest foreachBatch body hashes its landed batch directly. */
-  private def hashWithDf(vecs: DataFrame, meta: DataFrame): DataFrame = {
-    val geom = meta.select(col("tables"), col("bits")).head()
-    val (tables, bits) = (geom.getInt(0), geom.getInt(1))
+  private def hashWithDf(vecs: DataFrame, meta: DataFrame, geometry: (Int, Int)): DataFrame = {
+    val (tables, bits) = geometry
     vecs
       .crossJoin(broadcast(meta.select(col("thr"))))
       .select(col("vec_id"),
@@ -87,7 +103,8 @@ object AnnIndex {
     * mark, so a retry lands nothing. */
   private[graft] def lshIndexAppendBatch(s: SparkSession, batch: DataFrame,
       indexDir: String, mark: Option[(String, Long)] = None): Unit = {
-    val rows = hashWithDf(batch.select(col("vec_id"), col("embedding")), metaRow(s, indexDir))
+    val rows = hashWithDf(batch.select(col("vec_id"), col("embedding")), metaRow(s, indexDir),
+      lshGeometry(IndexMaintenance.snapshot(s, indexDir)))
     IndexMaintenance.append(s, indexDir, Seq("buckets" -> rows), mark)
     Artifacts.invalidate(s, s"$indexDir|lsh-index-buckets")
   }
@@ -117,7 +134,8 @@ object AnnIndex {
       tables: Int = Similarity.lshTables, bits: Int = Similarity.lshBits): Unit = {
     val meta = TextAnalysis.materializedNow(s, lshMeta(Tables(s, corpusDir, "embeddings"), tables, bits))
     IndexMaintenance.replace(s, indexDir,
-      Seq("meta" -> meta, "buckets" -> hashWith(s, corpusDir, meta)))
+      Seq("meta" -> meta, "buckets" -> hashWith(s, corpusDir, meta, (tables, bits))),
+      geometryFacts(tables, bits))
     Artifacts.invalidate(s, s"$indexDir|")
   }
 
@@ -125,8 +143,8 @@ object AnnIndex {
     * the index's persisted thresholds. The batch pays only its own
     * hashing — the standing corpus is untouched. */
   def lshIndexAppend(s: SparkSession, batchDir: String, indexDir: String): Unit = {
-    IndexMaintenance.append(s, indexDir,
-      Seq("buckets" -> hashWith(s, batchDir, metaRow(s, indexDir))))
+    IndexMaintenance.append(s, indexDir, Seq("buckets" -> hashWith(s, batchDir,
+      metaRow(s, indexDir), lshGeometry(IndexMaintenance.snapshot(s, indexDir)))))
     // a serve BEFORE this append may have memoized (and cached) the old
     // bucket file set — drop it so the next serve sees the batch
     Artifacts.invalidate(s, s"$indexDir|lsh-index-buckets")
@@ -164,8 +182,7 @@ object AnnIndex {
       queries: DataFrame, multiprobe: Boolean = true,
       memberPred: Option[Column] = None): DataFrame = {
     val meta = metaRow(s, indexDir)
-    val geom = meta.select(col("tables"), col("bits")).head()
-    val (tables, bits) = (geom.getInt(0), geom.getInt(1))
+    val (tables, bits) = lshGeometry(IndexMaintenance.snapshot(s, indexDir))
     val buckets = servedTable(s, indexDir, "buckets", "lsh-index-buckets")
     // the same zero-vector exclusion as Similarity.normed: a zero query
     // has no direction and its cosine would be NaN on every candidate
@@ -647,11 +664,12 @@ object AnnIndex {
     * stays pending and masks the rebuilt rows. */
   def lshIndexRetrain(s: SparkSession, indexDir: String, corpusDirs: Seq[String]): Unit = {
     IndexMaintenance.transact(s, indexDir) { snap =>
-      val geom = snap.read(s, "meta").select(col("tables"), col("bits")).head()
+      val (tables, bits) = lshGeometry(snap)
       val corpus = servableCorpus(s, snap, "buckets", rawCorpus(s, corpusDirs))
-      val meta = TextAnalysis.materializedNow(s, lshMeta(corpus, geom.getInt(0), geom.getInt(1)))
+      val meta = TextAnalysis.materializedNow(s, lshMeta(corpus, tables, bits))
       IndexMaintenance.Change(replace = Seq("meta" -> meta,
-        "buckets" -> hashWithDf(corpus.select(col("vec_id"), col("embedding")), meta)))
+        "buckets" -> hashWithDf(corpus.select(col("vec_id"), col("embedding")), meta,
+          (tables, bits))), props = geometryFacts(tables, bits))
     }
     Artifacts.invalidate(s, s"$indexDir|")
   }
@@ -781,7 +799,7 @@ object AnnIndex {
     // diverging from n_bucket_rows/n_tables IS the corruption signal
     // the rows-per-table invariant check reads from this report
     val nVec = buckets.select(col("vec_id")).distinct().count()
-    val tables = metaRow(s, indexDir).select(col("tables")).head().getInt(0)
+    val tables = lshGeometry(snap)._1
     val pend = snap.pendingTombstones("buckets")
     val files = snap.filesOf("buckets").size
     Seq(

@@ -67,11 +67,15 @@ private[graft] object Artifacts {
   def frame(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     lookup(Slot(s, key), Frame, standing = false, null)(build.cache())
 
-  /** A decision derived from the index at `indexDir`, served for as long
-    * as the index's log version stands. `key` must carry every
-    * parameter the value depends on. */
-  def atGeneration[T](s: SparkSession, indexDir: String, key: String)(build: => T): T =
-    lookup(Slot(s, s"$indexDir|$key"), Plain, standing = false, generation(s, indexDir))(build)
+  /** A decision derived from the index snapshot `snap`, served to every
+    * lookup at the same generation. `build` must read only `snap`, and
+    * `key` must carry every parameter the value depends on. Keyed on
+    * the caller's snapshot, not a fresh one: a serve that plans one
+    * snapshot's files gets that snapshot's decision even when a commit
+    * lands mid-construction. */
+  def atGeneration[T](s: SparkSession, snap: IndexMaintenance.Snapshot, key: String)(
+      build: => T): T =
+    lookup(Slot(s, s"${snap.root}|$key"), Plain, standing = false, snap.generation)(build)
 
   /** [[atGeneration]] for a frame: cached AND materialised inside the
     * build, so the frame holds the generation it is stored under even

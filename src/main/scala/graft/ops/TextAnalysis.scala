@@ -1650,9 +1650,11 @@ object TextAnalysis {
     * corpus statistics (n_docs, dl_sum) are deliberately NOT updated:
     * they stay frozen at their last rebuild and catch up at the next
     * [[textIndexCompact]] — the Lucene semantic (segment commits don't
-    * re-estimate global statistics; merges do). Per-term df is immune:
-    * the serve derives it from the postings at query time, so it is
-    * always current. Both tables commit as ONE log version, with the
+    * re-estimate global statistics; merges do). Per-term df stays
+    * current without re-reading the corpus: the append moves the index
+    * generation, and the next serve re-derives its query terms' df once
+    * as the frozen dictionary df plus their rows in the appended tail
+    * ([[queryTermDf]]). Both tables commit as ONE log version, with the
     * streaming batch `mark` when given: a compaction never sees half a
     * batch, and a retried batch lands nothing. */
   def textIndexAppendBatch(s: SparkSession, batch: DataFrame, indexDir: String,
@@ -1691,91 +1693,157 @@ object TextAnalysis {
 
   /** BM25 over a PERSISTED index: the corpus is never re-tokenized —
     * the serving plan reads the query terms' posting rows (predicate
-    * pushed into the parquet scan), pivots them to per-doc tf columns,
-    * derives per-term df from the same filtered postings, and scores
-    * through the shared [[bm25Rank]] tail under the corpus statistics
-    * of the index log. It touches O(Σ posting-list length of the query
-    * terms), not every document — the inverted-index read shape that
-    * makes lexical search serve at 100 TB. Byte-identical to
-    * `textBm25Search` on a fresh index, so it shares its DuckDB oracle.
-    * `memberPred` slices the ranked set on the doc-values scan; df and
-    * the statistics stay whole-corpus (see [[bm25FilterLang]]).
+    * pushed into the parquet scan), pivots them to per-doc tf columns
+    * (one hash exchange on doc_id), joins the doc-values table and
+    * scores through the shared [[bm25Rank]] tail under the corpus
+    * statistics of the index log. Per-term df enters as literal
+    * columns from [[queryTermDf]], derived once per index generation,
+    * so a read scans the postings once: postings scan → exchange →
+    * broadcast doc-values join → top-k. It touches O(Σ posting-list
+    * length of the query terms), not every document — the
+    * inverted-index read shape that makes lexical search serve at
+    * 100 TB. Byte-identical to `textBm25Search` on a fresh index, so it
+    * shares its DuckDB oracle. `memberPred` slices the ranked set on the
+    * doc-values scan; df and the statistics stay whole-corpus (see
+    * [[bm25FilterLang]]).
     *
     * `bound` picks which posting rows are read:
+    *  - [[Bound.Unbounded]] reads every query term's postings. Its df
+    *    literals resolve when the plan is first optimised
+    *    ([[graft.plans.DriverConstant]]), so constructing it runs no
+    *    Spark job; a generation's first read pays the derivation.
     *  - [[Bound.DfShare]] resolves the query terms against the term
-    *    dictionary FIRST (one O(|query|) pruned read) and drops any above
-    *    the cut, so the mega-posting term never reaches the pushed
-    *    `term IN (...)`. Its tf_i/df_i aggregate to 0, zeroing its score
-    *    and candidate test — the semantics the bounded oracle restates.
+    *    dictionary FIRST and drops any above the cut, so the
+    *    mega-posting term never reaches the pushed `term IN (...)`. A
+    *    dropped term's tf and df are 0, zeroing its score and
+    *    candidate test — the semantics the bounded oracle restates.
     *  - [[Bound.MaxScore]] adds `doc_id IN (contenders)` to the pushed
-    *    filter and the decision's LIVE df as literals (the posting-row
-    *    counts the unbounded serve derives, same Long type, so the
-    *    double arithmetic is bit-identical) — [[maxScoreContenders]]
-    *    proves the set, and every uncertain case serves unbounded. Its
-    *    floor is not sound on a slice, so it refuses a `memberPred`.
+    *    filter — [[maxScoreContenders]] proves the set, and every
+    *    uncertain case serves unbounded. Its floor is not sound on a
+    *    slice, so it refuses a `memberPred`.
     *
-    * The frame bakes in the snapshot of this call (and, for MaxScore,
-    * the decision-time state): collect it promptly under concurrent
-    * ingest, or materialise it (the registered `_now` form). */
+    * ONE snapshot: the postings, the doc values, the statistics, the
+    * df and the MaxScore decision all come from the snapshot this call
+    * takes, so a commit that lands while the read is built cannot mix
+    * two versions. The frame stays pinned to it: collect it promptly
+    * under concurrent ingest, or materialise it (the registered `_now`
+    * form). */
   def textBm25Served(s: SparkSession, indexDir: String,
       memberPred: Option[Column] = None, bound: Bound = Bound.Unbounded): DataFrame = {
     require(memberPred.isEmpty || !bound.isInstanceOf[Bound.MaxScore],
       s"textBm25Served($indexDir): the MaxScore floor is not sound on a memberPred slice")
     val snap = IndexMaintenance.snapshot(s, indexDir)
+    val label = serveLabel("text_bm25_served", bound, snap)
     val queryTerms = col("term").isin(bm25Query: _*)
-    // the posting predicate, and the live df when the decision fixed it
-    val (postingPred, dfLive): (Column, Option[Map[String, Long]]) =
-      IndexMaintenance.labeledJob(s, serveLabel("text_bm25_served", bound, snap)) {
-        bound match {
-          case Bound.Unbounded => (queryTerms, None)
-          case Bound.DfShare(share) =>
-            (col("term").isin(boundedQueryTerms(s, indexDir, bm25Query, share): _*), None)
-          case Bound.MaxScore(share, floor) => maxScoreContenders(s, indexDir, share, floor) match {
-            case None => (queryTerms, None)
-            case Some(MaxScorePrune(cand, live)) =>
-              (queryTerms && col("doc_id").isin(cand: _*) &&
-                col("doc_id") >= lit(cand.min) && col("doc_id") <= lit(cand.max), Some(live))
-          }
-        }
-      }
-    val hits = snap.scan(s, "postings", "doc_id").filter(postingPred)
+    // the posting predicate, and each query term's df column
+    val (postingPred, dfOf): (Column, String => Column) = bound match {
+      case Bound.Unbounded =>
+        lazy val live = IndexMaintenance.labeledJob(s, label)(queryTermDf(s, snap, bm25Query).live)
+        (queryTerms, t => graft.plans.VectorFunctions.driver_constant(s"df($t)", live(t)))
+      case Bound.DfShare(share) =>
+        val df = IndexMaintenance.labeledJob(s, label)(queryTermDf(s, snap, bm25Query))
+        val kept = withinDfShare(snap, df, bm25Query, share)
+        (col("term").isin(kept: _*), t => lit(if (kept.contains(t)) df.live(t) else 0L))
+      case Bound.MaxScore(share, floor) =>
+        val (prune, df) = IndexMaintenance.labeledJob(s, label)(maxScoreDecision(s, snap, share, floor))
+        (prune.fold(queryTerms)(cand => queryTerms && col("doc_id").isin(cand: _*) &&
+          col("doc_id") >= lit(cand.min) && col("doc_id") <= lit(cand.max)),
+          t => lit(df.live(t)))
+    }
     val perDocAggs = bm25Query.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"tf_$i")
     }
-    val perDoc = hits.groupBy(col("doc_id")).agg(perDocAggs.head, perDocAggs.tail: _*)
+    val perDoc = snap.scan(s, "postings", "doc_id").filter(postingPred)
+      .groupBy(col("doc_id")).agg(perDocAggs.head, perDocAggs.tail: _*)
     // the slice predicate prunes on the doc-values scan; the inner join
     // then drops out-of-slice posting hits before scoring
     val doclenAll = snap.scan(s, "doclen", "doc_id")
     val scored = withCorpusStats(snap)(
       perDoc.join(memberPred.fold(doclenAll)(doclenAll.filter(_)), "doc_id"))
-    bm25Rank(dfLive match {
-      case None =>
-        val dfAggs = bm25Query.zipWithIndex.map { case (t, i) =>
-          sum(when(col("term") === t, 1L).otherwise(0L)).as(s"df_$i")
-        }
-        scored.crossJoin(broadcast(hits.agg(dfAggs.head, dfAggs.tail: _*)))
-      case Some(live) =>
-        scored.select(col("*") +: bm25Query.zipWithIndex.map { case (t, i) =>
-          lit(live.getOrElse(t, 0L)).as(s"df_$i")
-        }: _*)
-    })
+    bm25Rank(scored.select(col("*") +:
+      bm25Query.zipWithIndex.map { case (t, i) => dfOf(t).as(s"df_$i") }: _*))
   }
 
-  /** The subset of `terms` whose df-share is within `maxDfShare`,
-    * resolved from the persisted term dictionary (`termstats`) — an
-    * O(|terms|)-row pruned read and the n_docs fact, never the posting
-    * lists themselves. Terms ABSENT from the dictionary are kept: they
-    * were not in the vocabulary at the last rebuild, so they cannot be
-    * a standing mega-posting (frozen-statistics semantics, like
+  /** The query terms' document frequencies at one index generation:
+    * `dict` maps each term the dictionary holds to its (df, ub) row,
+    * frozen at the last rebuild; `live` maps every query term to the
+    * df a serve scores with — the count of its servable posting rows,
+    * the relation the oracle restates. */
+  private[graft] final case class TermDf(dict: Map[String, (Long, Double)],
+      live: Map[String, Long])
+
+  /** [[TermDf]] of `terms` at `snap`, derived once per index generation
+    * (an [[Artifacts.atGeneration]] entry: an append, compaction or
+    * delete moves the generation and forces one re-derive). */
+  private[graft] def queryTermDf(s: SparkSession, snap: IndexMaintenance.Snapshot,
+      terms: Seq[String]): TermDf =
+    Artifacts.atGeneration(s, snap, s"bm25-df|${terms.mkString(",")}")(
+      deriveTermDf(s, snap, terms))
+
+  /** The one derivation behind [[queryTermDf]]:
+    *  - no pending tombstone: live df = dictionary df + the term's rows
+    *    in the appended tail ([[IndexMaintenance.Snapshot.tail]]).
+    *    Rebuilds and compactions write the dictionary from the posting
+    *    rows they commit, so the sum IS the posting-row count; the scan
+    *    touches only the tail's query-term rows, and nothing at all
+    *    beyond the dictionary on a compacted index.
+    *  - pending tombstones: dictionary + tail arithmetic cannot see
+    *    which rows the sequenced mask hides, so live df is the count of
+    *    the masked, query-term-pruned posting rows. The maintenance
+    *    alarm keeps that window short.
+    * A miss is ONE Spark job with no exchange: each scan partition
+    * folds its rows per term ([[sumByTerm]]) and the driver merges
+    * the partitions' few rows — an aggregation exchange would add a
+    * job, about 70 ms on 4 cores, to the first read of every
+    * generation. */
+  private def deriveTermDf(s: SparkSession, snap: IndexMaintenance.Snapshot,
+      terms: Seq[String]): TermDf = {
+    val isQuery = col("term").isin(terms: _*)
+    val masked = snap.tombstonesOf("postings").nonEmpty
+    val dict = snap.read(s, "termstats").filter(isQuery)
+      .select(col("term"), col("df"), col("ub"), lit(0L).as("n"))
+    val counted = if (masked) Some(snap.scan(s, "postings", "doc_id"))
+      else snap.tail(s, "postings", "doc_id")
+    val rows = counted.fold(dict)(c => dict.unionByName(c.filter(isQuery).select(col("term"),
+      lit(0L).as("df"), lit(null).cast("double").as("ub"), lit(1L).as("n"))))
+    val perTerm = sumByTerm(rows.rdd.mapPartitions(it => sumByTerm(it.map(r => (r.getString(0),
+      r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Double]), r.getLong(3)))).iterator)
+      .collect())
+    // a tail-only term has no dictionary row, hence no ub
+    val dictOf = perTerm.collect { case (t, df, Some(ub), _) => t -> (df, ub) }.toMap
+    val countOf = perTerm.map { case (t, _, _, n) => t -> n }.toMap
+    TermDf(dictOf, terms.map { t =>
+      t -> ((if (masked) 0L else dictOf.get(t).fold(0L)(_._1)) + countOf.getOrElse(t, 0L))
+    }.toMap)
+  }
+
+  /** (term, df, ub, n) rows summed per term: df and n add, ub is the
+    * largest present. */
+  private def sumByTerm(rows: IterableOnce[(String, Long, Option[Double], Long)])
+      : Seq[(String, Long, Option[Double], Long)] =
+    rows.iterator.toSeq.groupMapReduce(_._1)(identity) { case ((t, d1, u1, n1), (_, d2, u2, n2)) =>
+      (t, d1 + d2, (u1 ++ u2).maxOption, n1 + n2)
+    }.values.toSeq
+
+  /** The subset of `terms` whose DICTIONARY df-share is within
+    * `maxDfShare`. Terms absent from the dictionary are kept: they were
+    * not in the vocabulary at the last rebuild, so they cannot be a
+    * standing mega-posting (frozen-statistics semantics, like
     * n_docs/avgdl). */
+  private def withinDfShare(snap: IndexMaintenance.Snapshot, df: TermDf, terms: Seq[String],
+      maxDfShare: Double): Seq[String] = {
+    val nDocs = corpusStats(snap)._1
+    terms.filter(t => df.dict.get(t).fold(0L)(_._1).toDouble <= maxDfShare * nDocs)
+  }
+
+  /** [[withinDfShare]] of `terms` at the current snapshot of `indexDir`,
+    * resolved through [[queryTermDf]] — an O(|terms|)-row pruned read
+    * of the term dictionary and the n_docs fact, never the posting
+    * lists themselves. */
   private[graft] def boundedQueryTerms(s: SparkSession, indexDir: String,
       terms: Seq[String], maxDfShare: Double): Seq[String] = {
     val snap = IndexMaintenance.snapshot(s, indexDir)
-    val nDocs = corpusStats(snap)._1
-    val dfOf = snap.read(s, "termstats")
-      .filter(col("term").isin(terms: _*))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    terms.filter(t => dfOf.getOrElse(t, 0L).toDouble <= maxDfShare * nDocs)
+    withinDfShare(snap, queryTermDf(s, snap, terms), terms, maxDfShare)
   }
 
   /** All dictionary terms ABOVE the df-share bound — the banned list
@@ -1799,9 +1867,8 @@ object TextAnalysis {
 
   /** Decision payload of [[maxScoreContenders]]: the provable top-k
     * contender set, plus the LIVE per-query-term document frequency
-    * (dictionary/base-segment df + appended-tail rows) the exact
-    * re-score needs — equal by construction to what the unbounded
-    * serve derives by counting posting rows. */
+    * ([[TermDf.live]]) the exact re-score needs — the same literals
+    * every other serve scores with. */
   final case class MaxScorePrune(contenders: Seq[Long], dfLive: Map[String, Long])
 
   /** Contender-set cap: a set too large to push as an IN filter would
@@ -1840,7 +1907,7 @@ object TextAnalysis {
     * runtime computation (`ReusedExchange`, the text_unigram_lm shape)
     * — one scan of the cheap postings and ONE Spark action. Exposed for
     * the PlanGuardSpec reuse pin. */
-  private[graft] def maxScoreCandFrame(s: SparkSession, indexDir: String,
+  private[graft] def maxScoreCandFrame(s: SparkSession, snap: IndexMaintenance.Snapshot,
       cheap: Seq[String], idfOf: Map[String, Double], avgdl: Double,
       ubMega: Double): DataFrame = {
     val idfCol = cheap.tail.foldLeft(
@@ -1854,11 +1921,10 @@ object TextAnalysis {
     // doc seating the floor would push it too HIGH — an unsound prune —
     // and a delete-then-reappend's duplicated doclen row would double a
     // survivor's e the same way
-    val eScores = IndexMaintenance.scan(s, indexDir, "postings", "doc_id")
+    val eScores = snap.scan(s, "postings", "doc_id")
       .filter(col("term").isin(cheap: _*))
       .select(col("doc_id"), col("term"), col("tf"))
-      .join(IndexMaintenance.scan(s, indexDir, "doclen", "doc_id")
-        .select(col("doc_id"), col("dl")), "doc_id")
+      .join(snap.scan(s, "doclen", "doc_id").select(col("doc_id"), col("dl")), "doc_id")
       .groupBy(col("doc_id")).agg(sum(idfCol * tfn).as("e"))
     val floorDf = eScores.orderBy(col("e").desc, col("doc_id"))
       .limit(bm25TopK)
@@ -1895,10 +1961,8 @@ object TextAnalysis {
     * recompute it; appended files carry their commit's sequence in the
     * index log, rewrites a sequence below every version —
     * [[IndexMaintenance.Snapshot.tail]] tells them apart with no
-    * listing). The appended
-    * TAIL is scanned once, pruned to the query terms: its per-term rows
-    * give the LIVE df (dict + tail — equal to the posting-row count the
-    * unbounded serve derives), and every tail doc matching a mega term
+    * listing). The LIVE df is [[deriveTermDf]]'s dictionary + tail
+    * count, and every tail doc matching a mega term
     * joins the contenders outright (tail docs have no dictionary bound;
     * tail docs matching cheap terms flow through the e-score floor like
     * base docs, since the e-score scan reads base + tail). Dictionary
@@ -1911,14 +1975,8 @@ object TextAnalysis {
     * disable bounded serving until the next compact. The
     * e-score floor scan is tombstone-masked (a deleted doc must not
     * seat the floor), the contender re-score masks like every index
-    * read, and the live df comes from ONE masked, query-term-pruned
-    * posting count — exactly the relation the unbounded serve derives
-    * its df from, so the serves stay equal by shared source. That
-    * count does read the mega list's (term, doc_id) columns (the
-    * sequenced mask cannot be priced from the dictionary alone), but
-    * the expensive parts stay bounded: no corpus-wide pivot, window,
-    * or tf fetch ever sees the mega rows, and the maintenance alarm
-    * keeps the tombstone window short. Dictionary ub is RESCALED by
+    * read, and the live df is [[deriveTermDf]]'s masked posting count
+    * — the relation every serve scores with. Dictionary ub is RESCALED by
     * max(1, idf_live/idf_frozen) before the bound tests: a delete
     * shrinks df under the frozen n, which RAISES the serve's idf past
     * the dictionary-time value (the append direction only shrinks it);
@@ -1929,82 +1987,64 @@ object TextAnalysis {
     * unseated, a mega-only doc that could reach the floor, or a
     * contender set too large to push as an IN filter.
     *
-    * MEMOIZED per index generation: the whole decision — Some(prune)
-    * and None alike — is a pure function of the index's on-disk state
-    * and the two parameters, so it is an [[Artifacts.atGeneration]]
-    * entry: a frozen index pays the dictionary collect + floor scan
-    * once, and any append/compact/delete moves the generation and
-    * forces the re-derive (pinned in `BoundedServeSpec`).
-    * Byte-identical results by determinism. */
+    * MEMOIZED per index generation ([[maxScoreDecision]]). */
   def maxScoreContenders(s: SparkSession, indexDir: String,
       maxDfShare: Double = bm25MaxDfShare,
       minMegaRows: Long = maxScoreMinMegaRows): Option[MaxScorePrune] =
-    Artifacts.atGeneration(s, indexDir, s"bm25-maxscore|$maxDfShare|$minMegaRows")(
-      maxScoreContendersUncached(s, indexDir, maxDfShare, minMegaRows))
+    maxScoreContenders(s, IndexMaintenance.snapshot(s, indexDir), maxDfShare, minMegaRows)
 
-  private def maxScoreContendersUncached(s: SparkSession, indexDir: String,
+  /** [[maxScoreContenders]] at the snapshot `snap`. */
+  private[graft] def maxScoreContenders(s: SparkSession, snap: IndexMaintenance.Snapshot,
       maxDfShare: Double, minMegaRows: Long): Option[MaxScorePrune] = {
-    val snap = IndexMaintenance.snapshot(s, indexDir)
-    val ts = snap.read(s, "termstats")
-    val tombPending =
-      snap.tombstonesOf("postings").nonEmpty || snap.tombstonesOf("doclen").nonEmpty
+    val (prune, df) = maxScoreDecision(s, snap, maxDfShare, minMegaRows)
+    prune.map(MaxScorePrune(_, df.live))
+  }
+
+  /** The MaxScore decision at `snap` — the contenders (None: serve
+    * unbounded) and the [[TermDf]] it was derived from, which the serve
+    * scores with either way. The whole decision is a pure function of
+    * the snapshot and the two parameters, so it is ONE
+    * [[Artifacts.atGeneration]] entry: a frozen index pays the
+    * derivation and the floor scan once, and any append, compaction or
+    * delete moves the generation and forces the re-derive (pinned in
+    * `BoundedServeSpec`). The derivation runs inside the entry's build
+    * rather than as its own lookup, so a serve costs one memo probe.
+    * Byte-identical results by determinism. */
+  private def maxScoreDecision(s: SparkSession, snap: IndexMaintenance.Snapshot,
+      maxDfShare: Double, minMegaRows: Long): (Option[Seq[Long]], TermDf) =
+    Artifacts.atGeneration(s, snap, s"bm25-maxscore|$maxDfShare|$minMegaRows") {
+      val df = deriveTermDf(s, snap, bm25Query)
+      (maxScorePrune(s, snap, df, maxDfShare, minMegaRows), df)
+    }
+
+  private def maxScorePrune(s: SparkSession, snap: IndexMaintenance.Snapshot, df: TermDf,
+      maxDfShare: Double, minMegaRows: Long): Option[Seq[Long]] = {
     val (nDocs, avgdl) = corpusStats(snap)
-    val dict = ts.filter(col("term").isin(bm25Query: _*))
-      .select(col("term"), col("df"), col("ub")).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val mega = bm25Query.filter(t => dict.get(t)
+    val mega = bm25Query.filter(t => df.dict.get(t)
       .exists(_._1.toDouble > maxDfShare * nDocs))
     if (mega.isEmpty) return None  // no mega posting to avoid
     val cheap = bm25Query.filterNot(mega.contains)
     if (cheap.isEmpty) return None // all-stopword query: no cheap floor
-    // AUTO-DISENGAGE ([[maxScoreMinMegaRows]]): everything above this
-    // line is one dictionary collect — if the posting mass the pruning
-    // would skip can't pay for the floor scan + decision actions,
-    // serve unbounded without paying them
-    if (mega.map(t => dict(t)._1).sum < minMegaRows) return None
-    // the appended tail's query-term rows: live df deltas + the tail's
-    // mega-matching docs (contenders by inclusion, not by bound)
-    val (tailDf, megaTail): (Map[String, Long], Seq[Long]) =
-      snap.tail(s, "postings", "doc_id") match {
-        case None => (Map.empty, Seq.empty)
-        case Some(tail) =>
-        // tombstone-masked like the table reads (identity when none
-        // pending): a deleted tail doc must not count toward the
-        // contender cap or the inclusion list
-        val tseg = tail
-          .filter(col("term").isin(bm25Query: _*))
-          .select(col("term"), col("doc_id"))
-        // the tail df deltas feed only the no-tombstone arithmetic —
-        // under pending deletes dfLive recounts from the masked table,
-        // so don't pay this aggregation action just to discard it
-        val d =
-          if (tombPending) Map.empty[String, Long]
-          else tseg.groupBy(col("term")).agg(count(lit(1)).as("n"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val m = tseg.filter(col("term").isin(mega: _*))
+    // AUTO-DISENGAGE ([[maxScoreMinMegaRows]]): if the posting mass the
+    // pruning would skip can't pay for the floor scan + decision
+    // actions, serve unbounded without paying them
+    if (mega.map(t => df.dict(t)._1).sum < minMegaRows) return None
+    // the appended tail's mega-matching docs: contenders by inclusion,
+    // not by bound (tombstone-masked like the table reads, identity when
+    // none pending: a deleted tail doc must not count toward the
+    // contender cap or the inclusion list)
+    val megaTail: Seq[Long] = snap.tail(s, "postings", "doc_id") match {
+      case None => Seq.empty
+      case Some(tail) =>
+        val m = tail.filter(col("term").isin(mega: _*))
           .select(col("doc_id")).distinct()
           .limit(maxScoreCandCap + 1).collect().map(_.getLong(0)).toSeq
         if (m.size > maxScoreCandCap) return None // compaction overdue
-        (d, m)
-      }
-    val dfLive: Map[String, Long] =
-      if (!tombPending) bm25Query.map { t =>
-        t -> (dict.get(t).map(_._1).getOrElse(0L) + tailDf.getOrElse(t, 0L))
-      }.toMap
-      else {
-        // pending deletes: dictionary + tail arithmetic can't see which
-        // rows the sequenced mask hides — count the masked, term-pruned
-        // posting rows instead (the identical relation the unbounded
-        // serve aggregates its df from)
-        val m = snap.scan(s, "postings", "doc_id")
-          .filter(col("term").isin(bm25Query: _*))
-          .groupBy(col("term")).agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        bm25Query.map(t => t -> m.getOrElse(t, 0L)).toMap
-      }
+        m
+    }
     // floor idf uses the LIVE df — the exact per-term factor the final
     // serve scores with, keeping the e-scores true underestimates
-    val idfOf = cheap.map(t => t -> bm25IdfAt(dfLive(t).toDouble, nDocs.toDouble)).toMap
+    val idfOf = cheap.map(t => t -> bm25IdfAt(df.live(t).toDouble, nDocs.toDouble)).toMap
     // per-term bound rescaled by max(1, idf_live/idf_frozen): the
     // dictionary's ub froze idf at the rebuild's df, but the serve
     // scores with the LIVE df under the frozen n — an APPEND grows df
@@ -2015,11 +2055,11 @@ object TextAnalysis {
     // both directions: appends are covered by inclusion, deletes only
     // shrink it.
     val ubMega = mega.map { t =>
-      val (dictDf, ub) = dict(t)
-      ub * math.max(1.0, bm25IdfAt(dfLive(t).toDouble, nDocs.toDouble) /
+      val (dictDf, ub) = df.dict(t)
+      ub * math.max(1.0, bm25IdfAt(df.live(t).toDouble, nDocs.toDouble) /
         bm25IdfAt(dictDf.toDouble, nDocs.toDouble))
     }.sum
-    val rows = maxScoreCandFrame(s, indexDir, cheap, idfOf, avgdl, ubMega)
+    val rows = maxScoreCandFrame(s, snap, cheap, idfOf, avgdl, ubMega)
       .limit(maxScoreCandCap + 1).collect()
     if (rows.isEmpty) return None
     if (rows.head.getLong(2) < bm25TopK) return None // cheap floor unseated
@@ -2029,7 +2069,7 @@ object TextAnalysis {
     if (!(ubMega < floor - maxScoreRoundEps)) return None
     if (rows.length > maxScoreCandCap) return None
     val cand = (rows.map(_.getLong(0)) ++ megaTail).distinct.sorted.toSeq
-    if (cand.size > maxScoreCandCap) None else Some(MaxScorePrune(cand, dfLive))
+    if (cand.size > maxScoreCandCap) None else Some(cand)
   }
 
   /** Materialize a BOUNDED result frame into a local relation with the

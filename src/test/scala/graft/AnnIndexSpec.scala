@@ -357,4 +357,30 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(want.exists(_ != 0.0), "vacuous: every recomputed threshold is 0")
     assert(thr === want, "persisted thresholds are not the per-plane corpus-mean projections")
   }
+
+  test("LSH geometry is a log fact: build, append, compaction and retrain keep it; " +
+      "a serve over a log without it fails loudly") {
+    import graft.ops.IndexMaintenance
+    val tmp = java.nio.file.Files.createTempDirectory("ann-geometry")
+    val idx = s"$tmp/index"
+    AnnIndex.lshIndexWrite(spark, sf0001, idx, tables = 3, bits = 5)
+    def facts = {
+      val p = IndexMaintenance.snapshot(spark, idx).props
+      (p.get("meta.tables"), p.get("meta.bits"))
+    }
+    assert(facts == (Some("3"), Some("5")), s"build committed geometry facts $facts")
+    val meta = IndexMaintenance.read(spark, idx, "meta").select(col("tables"), col("bits")).head()
+    assert((meta.getInt(0), meta.getInt(1)) == (3, 5), "the facts must restate the meta row")
+    AnnIndex.lshIndexAppend(spark, sf0001, idx)
+    IndexMaintenance.compact(spark, idx, "buckets", Seq("tbl", "bucket"), Some("vec_id"))
+    AnnIndex.lshIndexRetrain(spark, idx, Seq(sf0001))
+    assert(facts == (Some("3"), Some("5")), s"append, compaction and retrain left $facts")
+    val queries = AnnReference.strideQueries(spark, sf0001)
+    assert(AnnIndex.lshIndexServe(spark, idx, Seq(sf0001), queries).count() > 0)
+    // a log version that retracts the fact (an empty prop value removes it)
+    IndexMaintenance.transact(spark, idx)(_ =>
+      IndexMaintenance.Change(props = Map("meta.bits" -> "")))
+    val e = intercept[IllegalStateException](AnnIndex.lshIndexServe(spark, idx, Seq(sf0001), queries))
+    assert(e.getMessage.contains("meta.bits"), e.getMessage)
+  }
 }

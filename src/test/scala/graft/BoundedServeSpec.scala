@@ -760,4 +760,128 @@ class BoundedServeSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](TextAnalysis.textBm25Served(spark, idx,
       Some(col("lang") === TextAnalysis.bm25FilterLang), TextAnalysis.Bound.MaxScore()))
   }
+
+  /** The canonical stopword corpus of the MaxScore arms: 'spark' in
+    * 58 of 60 docs (df-share 0.967, mega), 'join' and 'vector' cheap. */
+  private def stopwordIndex(name: String): String = {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory(name).toString
+    def tok(i: Long): Seq[String] = {
+      val b = Seq.newBuilder[String]
+      if (i <= 58) b += "spark"
+      if (i % 2 == 0) b += "join"
+      if (i % 3 == 0) b += "vector"
+      (0 until (3 + (i % 5)).toInt).foreach(w => b += s"f${i}w$w")
+      b.result()
+    }
+    (1L to 60L).map(i => (i, tok(i).mkString(" "), "en", "s"))
+      .toDF("doc_id", "text", "lang", "source")
+      .write.mode("overwrite").parquet(s"$tmp/c/documents.parquet")
+    TextAnalysis.textIndexWrite(spark, s"$tmp/c", s"$tmp/idx")
+    s"$tmp/idx"
+  }
+
+  /** Each query term's servable posting rows at `snap`: the masked,
+    * query-term-pruned count the unbounded serve's df stands for. */
+  private def maskedPostingCount(snap: IndexMaintenance.Snapshot): Map[String, Long] = {
+    val n = snap.scan(spark, "postings", "doc_id")
+      .filter(col("term").isin(TextAnalysis.bm25Query: _*))
+      .groupBy(col("term")).count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    TextAnalysis.bm25Query.map(t => t -> n.getOrElse(t, 0L)).toMap
+  }
+
+  test("a warm unbounded served read runs at most 3 jobs and scans the postings once, " +
+      "with no single-partition exchange") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    val idx = TextAnalysis.textIndexFor(spark, sf0001)
+    TextAnalysis.textBm25Served(spark, idx).collect() // the generation's df derivation
+    var served: org.apache.spark.sql.DataFrame = null
+    val jobs = TestSpark.jobsRun {
+      served = TextAnalysis.textBm25Served(spark, idx)
+      served.collect()
+    }
+    assert(jobs <= 3, s"a warm unbounded served read ran $jobs Spark jobs — want at most 3 " +
+      "(postings exchange, doc-values broadcast, top-k)")
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case r: ReusedExchangeExec => r +: nodes(r.child)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    val plan = nodes(served.queryExecution.executedPlan)
+    val postingScans = plan.collect {
+      case f: FileSourceScanExec if f.relation.location.rootPaths.exists(_.toString.endsWith("/postings")) => f
+    }
+    assert(postingScans.size == 1, s"${postingScans.size} postings scans in the executed plan — " +
+      "the df must come from the derivation, not a second scan")
+    val single = plan.collect {
+      case e: ShuffleExchangeExec
+          if e.outputPartitioning == org.apache.spark.sql.catalyst.plans.physical.SinglePartition => e
+    }
+    assert(single.isEmpty, s"single-partition exchange(s) in the served read: $single")
+  }
+
+  test("the df literals equal the masked query-term posting-row count after an append, " +
+      "a delete and a compaction") {
+    import spark.implicits._
+    val idx = stopwordIndex("df-literals")
+    def check(stage: String): Map[String, Long] = {
+      val snap = IndexMaintenance.snapshot(spark, idx)
+      val live = TextAnalysis.queryTermDf(spark, snap, TextAnalysis.bm25Query).live
+      val want = maskedPostingCount(snap)
+      assert(live == want, s"$stage: df literals $live, masked posting-row count $want")
+      live
+    }
+    val fresh = check("fresh build")
+    TextAnalysis.textIndexAppendBatch(spark,
+      Seq((61L, "spark join vector fresh", "en", "s"), (62L, "spark spark join", "en", "s"))
+        .toDF("doc_id", "text", "lang", "source"), idx)
+    val appended = check("after an append")
+    assert(appended("spark") == fresh("spark") + 2 && appended("vector") == fresh("vector") + 1,
+      s"the append must move df: $fresh -> $appended")
+    // doc 6 (base: spark, join, vector) and doc 62 (tail: spark, join)
+    TextAnalysis.textIndexDelete(spark, idx, Seq(6L, 62L))
+    val deleted = check("after a delete")
+    assert(deleted("spark") == appended("spark") - 2 && deleted("join") == appended("join") - 2,
+      s"the delete must move df: $appended -> $deleted")
+    TextAnalysis.textIndexCompact(spark, idx)
+    assert(check("after a compaction") == deleted, "a compaction must not move df")
+    // the served read scores with these literals: equal to the MaxScore
+    // serve, whose decision carries them
+    val exact = TextAnalysis.textBm25Served(spark, idx).collect().map(_.toSeq).toSeq
+    assert(exact.nonEmpty && exact === TextAnalysis.textBm25Served(spark, idx,
+      bound = TextAnalysis.Bound.MaxScore(minMegaRows = 0L)).collect().map(_.toSeq).toSeq)
+  }
+
+  test("one snapshot per served read: the df derivation and the MaxScore decision at an " +
+      "old snapshot keep that version's values across an append") {
+    import spark.implicits._
+    val idx = stopwordIndex("one-snapshot")
+    val old = IndexMaintenance.snapshot(spark, idx)
+    val share = TextAnalysis.bm25MaxDfShare
+    val dfOld = TextAnalysis.queryTermDf(spark, old, TextAnalysis.bm25Query)
+    val decOld = TextAnalysis.maxScoreContenders(spark, old, share, 0L)
+    assert(decOld.isDefined, "pruning must engage on the stopword corpus")
+    TextAnalysis.textIndexAppendBatch(spark,
+      Seq((61L, "spark join vector fresh", "en", "s"), (63L, "spark vector", "en", "s"))
+        .toDF("doc_id", "text", "lang", "source"), idx)
+    val now = IndexMaintenance.snapshot(spark, idx)
+    assert(now.generation != old.generation)
+    // the current generation's entries are derived first, so a memo that
+    // ignored the generation would hand them to the old snapshot below
+    val dfNow = TextAnalysis.queryTermDf(spark, now, TextAnalysis.bm25Query)
+    val decNow = TextAnalysis.maxScoreContenders(spark, now, share, 0L)
+    assert(dfNow.live != dfOld.live && decNow != decOld,
+      "the append must move the df and the decision, or the pin is vacuous")
+    assert(TextAnalysis.queryTermDf(spark, old, TextAnalysis.bm25Query) == dfOld,
+      "the derivation at the old snapshot returned another version's df")
+    assert(dfOld.live == maskedPostingCount(old))
+    val decAgain = TextAnalysis.maxScoreContenders(spark, old, share, 0L)
+    assert(decAgain == decOld,
+      s"the MaxScore decision at the old snapshot moved: $decOld -> $decAgain")
+    assert(!decAgain.get.contenders.exists(Set(61L, 63L)),
+      "an appended doc is a contender of the version before its append")
+  }
 }

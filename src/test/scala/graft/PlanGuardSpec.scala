@@ -568,8 +568,8 @@ class PlanGuardSpec extends AnyFunSuite {
     graft.ops.TextAnalysis.textIndexWrite(spark, s"$tmp/c", s"$tmp/idx")
     val cheap = Seq("join", "vector")
     val idfOf = cheap.map(_ -> 1.0).toMap
-    val df = graft.ops.TextAnalysis.maxScoreCandFrame(spark, s"$tmp/idx",
-      cheap, idfOf, 5.0, 0.1)
+    val df = graft.ops.TextAnalysis.maxScoreCandFrame(spark,
+      graft.ops.IndexMaintenance.snapshot(spark, s"$tmp/idx"), cheap, idfOf, 5.0, 0.1)
     df.collect()
     val txt = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     assert("ReusedExchange".r.findAllIn(txt).length >= 1,
