@@ -2,31 +2,34 @@
 """Compare two checkouts on one benchmark workload in alternating pairs.
 
     python3 scripts/perf_pairs.py PARENT CHANGE --workload W --seed N --pairs K
-        [--claim METRIC] [--seconds S] [--runs FILE]
+        [--claim METRIC] [--runs FILE]
     python3 scripts/perf_pairs.py --analyze FILE [--claim METRIC]
 
-Each pair runs `perfbench/run.py --trace 0` once in PARENT and once in
-CHANGE, each from its own checkout; pair i runs PARENT first when i is
-even and CHANGE first when it is odd. Every run's JSON result is
-appended to FILE (default `perf_pairs-<workload>-seed<N>.jsonl` in the
-working directory): a second call on the same file adds pairs after
-the ones it holds, and `--analyze` redoes the verdict over every pair
-in the file (all workloads and seeds it holds) without running
-anything.
+Each pair runs `perfbench/run.py --trace 0` for BENCHMARK.json's
+`run_seconds` once in PARENT and once in CHANGE, each from its own
+checkout; pair i runs PARENT first when i is even and CHANGE first when
+it is odd. The benchmark spec is read from PARENT (from the working
+directory under `--analyze`). Every run's JSON result is appended to
+FILE (default `perf_pairs-<workload>-seed<N>.jsonl` in the working
+directory): a second call on the same file adds pairs after the ones it
+holds, and `--analyze` redoes the verdicts without running anything.
 
-For each end-to-end metric of BENCHMARK.json it prints both sides'
-median and quartiles and the pairs the change won, the median over
-runs of each op kind's `op_p50_s`, then a verdict:
+The pairs are judged per (workload, seed): one verdict per metric and
+group, never pooled across workloads or seeds. For each group and each
+end-to-end metric it prints both sides' median and quartiles and the
+pairs the change won, the median over runs of each op kind's
+`op_p50_s`, then a verdict:
 
 - the `--claim`ed metric holds when the change wins at least 9/10 of
-  all pairs run (ties count for neither side) AND the medians differ,
+  the group's pairs (ties count for neither side) AND the medians differ,
   in the better direction, by more than the parent's interquartile
   range;
 - every other metric fails when the change's median is worse than the
   parent's by more than the metric's relative bound;
 - the change fails when a larger share of its ops failed.
 
-The exit status is 0 when every verdict passes, 1 otherwise.
+The exit status is 0 when every verdict of every group passes, 1
+otherwise.
 """
 import argparse
 import json
@@ -103,19 +106,39 @@ def load_runs(path):
         return [json.loads(l) for l in f if l.strip()]
 
 
-def report(runs, spec, claim):
-    """Print the per-metric table and verdicts; True when all pass."""
+def groups(runs):
+    """The complete (parent, change) pairs of `runs`, keyed by
+    (workload, seed) in sorted order."""
     by = {}
     for r in runs:
-        by.setdefault((r["workload"], r["seed"], r["pair"]), {})[r["side"]] = r["result"]
-    full = [by[i] for i in sorted(by) if len(by[i]) == 2]
-    if not full:
-        raise SystemExit("perf_pairs: no complete pair to analyze")
-    ok = True
+        by.setdefault((r["workload"], r["seed"]), {}).setdefault(r["pair"], {})[r["side"]] = r["result"]
+    out = {}
+    for key in sorted(by):
+        full = [by[key][i] for i in sorted(by[key]) if len(by[key][i]) == 2]
+        if full:
+            out[key] = full
+    return out
+
+
+def report(runs, spec, claim):
+    """Print each (workload, seed) group's table and verdicts; True when
+    every group passes."""
     names = [m["name"] for m in spec["end_to_end"]]
     if claim is not None and claim not in names:
         raise SystemExit(f"perf_pairs: --claim {claim} is not an end-to-end metric: {names}")
-    print(f"{len(full)} pairs")
+    by = groups(runs)
+    if not by:
+        raise SystemExit("perf_pairs: no complete pair to analyze")
+    ok = True
+    for (workload, seed), full in by.items():
+        print(f"== {workload}, seed {seed}: {len(full)} pairs")
+        ok &= report_group(full, spec, claim)
+    return ok
+
+
+def report_group(full, spec, claim):
+    """Print one group's per-metric table and verdicts; True when all pass."""
+    ok = True
     for m in spec["end_to_end"]:
         pairs = [(p["parent"]["metrics"][m["name"]]["value"], p["change"]["metrics"][m["name"]]["value"])
                  for p in full]
@@ -145,19 +168,16 @@ def main():
     ap.add_argument("--workload")
     ap.add_argument("--seed", type=int)
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seconds", type=float)
     ap.add_argument("--claim", help="the end-to-end metric the change claims to improve")
     ap.add_argument("--runs", help="JSON-lines file of run results (appended to)")
     ap.add_argument("--analyze", metavar="FILE", help="only print the verdict of FILE's runs")
-    ap.add_argument("--benchmark", default="BENCHMARK.json")
     a = ap.parse_args()
-    with open(a.benchmark if a.analyze else os.path.join(a.parent, a.benchmark)) as f:
+    with open("BENCHMARK.json" if a.analyze else os.path.join(a.parent, "BENCHMARK.json")) as f:
         spec = json.load(f)
     if a.analyze:
         sys.exit(0 if report(load_runs(a.analyze), spec, a.claim) else 1)
     if not (a.parent and a.change and a.workload and a.seed is not None):
         ap.error("PARENT, CHANGE, --workload and --seed are required unless --analyze")
-    seconds = a.seconds if a.seconds is not None else spec["run_seconds"]
     path = a.runs or f"perf_pairs-{a.workload}-seed{a.seed}.jsonl"
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
     # a rerun on the same file resumes the pair numbering (and alternation)
@@ -167,7 +187,7 @@ def main():
     for i in range(start, start + a.pairs):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            res = run_one(sides[side], a.workload, a.seed, seconds)
+            res = run_one(sides[side], a.workload, a.seed, spec["run_seconds"])
             with open(path, "a") as f:
                 f.write(json.dumps({"pair": i, "side": side, "workload": a.workload,
                                     "seed": a.seed, "result": res}) + "\n")

@@ -8,7 +8,7 @@ import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from perf_pairs import quartiles, verdict  # noqa: E402
+from perf_pairs import groups, quartiles, verdict  # noqa: E402
 
 
 def pairs(parent, change):
@@ -61,6 +61,27 @@ class VerdictTest(unittest.TestCase):
     def test_quartiles(self):
         self.assertEqual(quartiles([1.0, 2.0, 3.0, 4.0, 5.0]), (2.0, 3.0, 4.0))
         self.assertEqual(quartiles([7.0]), (7.0, 7.0, 7.0))
+
+
+class GroupsTest(unittest.TestCase):
+    @staticmethod
+    def run_(workload, seed, pair, side):
+        return {"workload": workload, "seed": seed, "pair": pair, "side": side,
+                "result": {"tag": f"{workload}-{seed}-{pair}-{side}"}}
+
+    def test_pairs_are_judged_per_workload_and_seed(self):
+        runs = [self.run_(w, seed, i, side) for w, seed in (("ingest", 7), ("batch", 7), ("ingest", 5))
+                for i in range(2) for side in ("parent", "change")]
+        g = groups(runs)
+        self.assertEqual(list(g), [("batch", 7), ("ingest", 5), ("ingest", 7)])
+        for (w, seed), full in g.items():
+            self.assertEqual(len(full), 2)
+            self.assertEqual({p["parent"]["tag"].rsplit("-", 2)[0] for p in full}, {f"{w}-{seed}"})
+
+    def test_an_incomplete_pair_is_left_out(self):
+        runs = [self.run_("ingest", 7, 0, "parent"), self.run_("ingest", 7, 0, "change"),
+                self.run_("ingest", 7, 1, "change"), self.run_("batch", 7, 0, "parent")]
+        self.assertEqual({k: len(v) for k, v in groups(runs).items()}, {("ingest", 7): 1})
 
 
 if __name__ == "__main__":

@@ -458,10 +458,13 @@ object IndexMaintenance {
     * compaction or retrain), removing every file they held and
     * consuming their pending tombstones — the replacement must be
     * derived from the snapshot handed to the body; `deletes` tombstones
-    * (table, id) pairs. */
+    * (table, id) pairs; `written` adds props read off the tables once
+    * they are staged (the metrics of an observed frame,
+    * `Dataset.observe`), so a fact about the written rows commits with
+    * them at no extra Spark job. */
   final case class Change(append: Seq[(String, DataFrame)] = Nil,
       replace: Seq[(String, DataFrame)] = Nil, props: Map[String, String] = Map.empty,
-      deletes: Seq[(String, Long)] = Nil)
+      deletes: Seq[(String, Long)] = Nil, written: () => Map[String, String] = () => Map.empty)
 
   /** One write transaction on the log at `dir`, under its writer lock:
     * `body` derives the change from the snapshot it is handed; its
@@ -484,7 +487,7 @@ object IndexMaintenance {
         // a replaced table's facts go with it unless restated
         val cleared = snap.props.keys.filter(k => replaced.exists(t => k.startsWith(s"$t.")))
         val out = commit(s, snap, Actions(staged, replaced, c.deletes, mark,
-          cleared.map(_ -> "").toMap ++ c.props))
+          cleared.map(_ -> "").toMap ++ c.props ++ c.written()))
         if (replaced.nonEmpty)
           out.foreach(next => next.files.values.map(_.table).toSet.foreach(deleteOrphans(s, next, _)))
         out

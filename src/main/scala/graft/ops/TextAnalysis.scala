@@ -1629,9 +1629,10 @@ object TextAnalysis {
       .groupBy(col("term")).agg(count(lit(1)).as("df"), max(col("tf")).as("_maxtf"))
       .select(col("term"), col("df"), (idf * mtfn).as("ub"))
       .repartitionByRange(1, col("term")).sortWithinPartitions(col("term"))
+    val (counted, written) = countingQueryDf(postings)
     IndexMaintenance.Change(
-      replace = Seq("doclen" -> doclen, "postings" -> postings, "termstats" -> dictionary),
-      props = Map(nDocsFact -> nDocs.toString, dlSumFact -> dlSum.toString))
+      replace = Seq("doclen" -> doclen, "postings" -> counted, "termstats" -> dictionary),
+      props = Map(nDocsFact -> nDocs.toString, dlSumFact -> dlSum.toString), written = written)
   }
 
   /** The tokenized per-document frame both index writers share: one
@@ -1651,18 +1652,39 @@ object TextAnalysis {
     * they stay frozen at their last rebuild and catch up at the next
     * [[textIndexCompact]] — the Lucene semantic (segment commits don't
     * re-estimate global statistics; merges do). Per-term df stays
-    * current without re-reading the corpus: the append moves the index
-    * generation, and the next serve re-derives its query terms' df once
-    * as the frozen dictionary df plus their rows in the appended tail
-    * ([[queryTermDf]]). Both tables commit as ONE log version, with the
-    * streaming batch `mark` when given: a compaction never sees half a
-    * batch, and a retried batch lands nothing. */
+    * current without re-reading the corpus: the write counts the query
+    * terms' posting rows it appends and commits them as a fact
+    * ([[countingQueryDf]]), so a serve sums facts and never derives
+    * ([[queryTermDf]]). Both tables and the fact commit as ONE log
+    * version, with the streaming batch `mark` when given: a compaction
+    * never sees half a batch, and a retried batch lands nothing. */
   def textIndexAppendBatch(s: SparkSession, batch: DataFrame, indexDir: String,
       mark: Option[(String, Long)] = None): Unit = {
     val base = indexableDocs(batch)
-    IndexMaintenance.append(s, indexDir, Seq(
+    val (postings, written) = countingQueryDf(postingsOf(base))
+    IndexMaintenance.transact(s, indexDir, mark)(_ => IndexMaintenance.Change(append = Seq(
       "doclen" -> base.select(col("doc_id"), col("dl"), col("lang"), col("source")),
-      "postings" -> postingsOf(base)), mark)
+      "postings" -> postings), written = written))
+  }
+
+  /** The fact-key prefix of the served query's df. Every write of
+    * posting rows (build, compaction, append) commits one
+    * `postings.query_df.<id>` fact, `term=rows,…` over [[bm25Query]]:
+    * the posting rows it wrote per query term. A build or compaction
+    * replaces the postings and with them every such fact, then states
+    * its own. */
+  private val queryDfFact = "postings.query_df."
+
+  /** `postings` counted while it is written: the frame to stage, and
+    * the [[queryDfFact]] its write commits, read off the write's
+    * observed metrics (no extra Spark job). */
+  private def countingQueryDf(postings: DataFrame): (DataFrame, () => Map[String, String]) = {
+    val rows = org.apache.spark.sql.Observation()
+    val perTerm = bm25Query.map(t => count(when(col("term") === t, 1)).as(t))
+    (postings.observe(rows, perTerm.head, perTerm.tail: _*), () => {
+      val n = rows.get
+      Map(queryDfFact + java.util.UUID.randomUUID() -> bm25Query.map(t => s"$t=${n(t)}").mkString(","))
+    })
   }
 
   /** The posting-read bound of a served lexical read. */
@@ -1697,7 +1719,7 @@ object TextAnalysis {
     * (one hash exchange on doc_id), joins the doc-values table and
     * scores through the shared [[bm25Rank]] tail under the corpus
     * statistics of the index log. Per-term df enters as literal
-    * columns from [[queryTermDf]], derived once per index generation,
+    * columns from [[queryTermDf]], the sum of the index log's df facts,
     * so a read scans the postings once: postings scan → exchange →
     * broadcast doc-values join → top-k. It touches O(Σ posting-list
     * length of the query terms), not every document — the
@@ -1708,15 +1730,15 @@ object TextAnalysis {
     * [[bm25FilterLang]]).
     *
     * `bound` picks which posting rows are read:
-    *  - [[Bound.Unbounded]] reads every query term's postings. Its df
-    *    literals resolve when the plan is first optimised
-    *    ([[graft.plans.DriverConstant]]), so constructing it runs no
-    *    Spark job; a generation's first read pays the derivation.
+    *  - [[Bound.Unbounded]] reads every query term's postings.
+    *    Constructing it runs no Spark job unless a delete is pending
+    *    (then the first read of the generation counts the masked df).
     *  - [[Bound.DfShare]] resolves the query terms against the term
-    *    dictionary FIRST and drops any above the cut, so the
-    *    mega-posting term never reaches the pushed `term IN (...)`. A
-    *    dropped term's tf and df are 0, zeroing its score and
-    *    candidate test — the semantics the bounded oracle restates.
+    *    dictionary FIRST ([[boundedQueryTerms]], one pruned read) and
+    *    drops any above the cut, so the mega-posting term never reaches
+    *    the pushed `term IN (...)` nor a df count. A dropped term's tf
+    *    and df are 0, zeroing its score and candidate test — the
+    *    semantics the bounded oracle restates.
     *  - [[Bound.MaxScore]] adds `doc_id IN (contenders)` to the pushed
     *    filter — [[maxScoreContenders]] proves the set, and every
     *    uncertain case serves unbounded. Its floor is not sound on a
@@ -1735,21 +1757,20 @@ object TextAnalysis {
     val snap = IndexMaintenance.snapshot(s, indexDir)
     val label = serveLabel("text_bm25_served", bound, snap)
     val queryTerms = col("term").isin(bm25Query: _*)
-    // the posting predicate, and each query term's df column
-    val (postingPred, dfOf): (Column, String => Column) = bound match {
-      case Bound.Unbounded =>
-        lazy val live = IndexMaintenance.labeledJob(s, label)(queryTermDf(s, snap, bm25Query).live)
-        (queryTerms, t => graft.plans.VectorFunctions.driver_constant(s"df($t)", live(t)))
-      case Bound.DfShare(share) =>
-        val df = IndexMaintenance.labeledJob(s, label)(queryTermDf(s, snap, bm25Query))
-        val kept = withinDfShare(snap, df, bm25Query, share)
-        (col("term").isin(kept: _*), t => lit(if (kept.contains(t)) df.live(t) else 0L))
-      case Bound.MaxScore(share, floor) =>
-        val (prune, df) = IndexMaintenance.labeledJob(s, label)(maxScoreDecision(s, snap, share, floor))
-        (prune.fold(queryTerms)(cand => queryTerms && col("doc_id").isin(cand: _*) &&
-          col("doc_id") >= lit(cand.min) && col("doc_id") <= lit(cand.max)),
-          t => lit(df.live(t)))
-    }
+    // the posting predicate, and the live df of the terms it reads
+    val (postingPred, dfLive): (Column, Map[String, Long]) =
+      IndexMaintenance.labeledJob(s, label) {
+        bound match {
+          case Bound.Unbounded => (queryTerms, queryTermDf(s, snap, bm25Query))
+          case Bound.DfShare(share) =>
+            val kept = boundedQueryTerms(s, snap, bm25Query, share)
+            (col("term").isin(kept: _*), queryTermDf(s, snap, kept))
+          case Bound.MaxScore(share, floor) =>
+            val (prune, live) = maxScoreDecision(s, snap, share, floor)
+            (prune.fold(queryTerms)(cand => queryTerms && col("doc_id").isin(cand: _*) &&
+              col("doc_id") >= lit(cand.min) && col("doc_id") <= lit(cand.max)), live)
+        }
+      }
     val perDocAggs = bm25Query.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"tf_$i")
     }
@@ -1761,90 +1782,71 @@ object TextAnalysis {
     val scored = withCorpusStats(snap)(
       perDoc.join(memberPred.fold(doclenAll)(doclenAll.filter(_)), "doc_id"))
     bm25Rank(scored.select(col("*") +:
-      bm25Query.zipWithIndex.map { case (t, i) => dfOf(t).as(s"df_$i") }: _*))
+      bm25Query.zipWithIndex.map { case (t, i) => lit(dfLive.getOrElse(t, 0L)).as(s"df_$i") }: _*))
   }
 
-  /** The query terms' document frequencies at one index generation:
-    * `dict` maps each term the dictionary holds to its (df, ub) row,
-    * frozen at the last rebuild; `live` maps every query term to the
-    * df a serve scores with — the count of its servable posting rows,
-    * the relation the oracle restates. */
-  private[graft] final case class TermDf(dict: Map[String, (Long, Double)],
-      live: Map[String, Long])
-
-  /** [[TermDf]] of `terms` at `snap`, derived once per index generation
-    * (an [[Artifacts.atGeneration]] entry: an append, compaction or
-    * delete moves the generation and forces one re-derive). */
+  /** The live df of `terms` (a subset of [[bm25Query]]) at `snap`:
+    * each term's servable posting rows, the relation the oracle
+    * restates. With no pending tombstone it is the sum of the
+    * [[queryDfFact]] facts, read from the log with no Spark job: a
+    * build or compaction states the rows it wrote, each append adds
+    * its own. While a delete is pending the facts cannot see which rows
+    * the sequenced mask hides, so the masked, query-term-pruned posting
+    * rows are counted once per index generation (an
+    * [[Artifacts.atGeneration]] entry; the maintenance alarm keeps that
+    * window short). */
   private[graft] def queryTermDf(s: SparkSession, snap: IndexMaintenance.Snapshot,
-      terms: Seq[String]): TermDf =
-    Artifacts.atGeneration(s, snap, s"bm25-df|${terms.mkString(",")}")(
-      deriveTermDf(s, snap, terms))
+      terms: Seq[String]): Map[String, Long] =
+    if (snap.tombstonesOf("postings").isEmpty) liveDf(s, snap, terms)
+    else Artifacts.atGeneration(s, snap, s"bm25-df|${terms.mkString(",")}")(liveDf(s, snap, terms))
 
-  /** The one derivation behind [[queryTermDf]]:
-    *  - no pending tombstone: live df = dictionary df + the term's rows
-    *    in the appended tail ([[IndexMaintenance.Snapshot.tail]]).
-    *    Rebuilds and compactions write the dictionary from the posting
-    *    rows they commit, so the sum IS the posting-row count; the scan
-    *    touches only the tail's query-term rows, and nothing at all
-    *    beyond the dictionary on a compacted index.
-    *  - pending tombstones: dictionary + tail arithmetic cannot see
-    *    which rows the sequenced mask hides, so live df is the count of
-    *    the masked, query-term-pruned posting rows. The maintenance
-    *    alarm keeps that window short.
-    * A miss is ONE Spark job with no exchange: each scan partition
-    * folds its rows per term ([[sumByTerm]]) and the driver merges
-    * the partitions' few rows — an aggregation exchange would add a
-    * job, about 70 ms on 4 cores, to the first read of every
-    * generation. */
-  private def deriveTermDf(s: SparkSession, snap: IndexMaintenance.Snapshot,
-      terms: Seq[String]): TermDf = {
-    val isQuery = col("term").isin(terms: _*)
-    val masked = snap.tombstonesOf("postings").nonEmpty
-    val dict = snap.read(s, "termstats").filter(isQuery)
-      .select(col("term"), col("df"), col("ub"), lit(0L).as("n"))
-    val counted = if (masked) Some(snap.scan(s, "postings", "doc_id"))
-      else snap.tail(s, "postings", "doc_id")
-    val rows = counted.fold(dict)(c => dict.unionByName(c.filter(isQuery).select(col("term"),
-      lit(0L).as("df"), lit(null).cast("double").as("ub"), lit(1L).as("n"))))
-    val perTerm = sumByTerm(rows.rdd.mapPartitions(it => sumByTerm(it.map(r => (r.getString(0),
-      r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Double]), r.getLong(3)))).iterator)
-      .collect())
-    // a tail-only term has no dictionary row, hence no ub
-    val dictOf = perTerm.collect { case (t, df, Some(ub), _) => t -> (df, ub) }.toMap
-    val countOf = perTerm.map { case (t, _, _, n) => t -> n }.toMap
-    TermDf(dictOf, terms.map { t =>
-      t -> ((if (masked) 0L else dictOf.get(t).fold(0L)(_._1)) + countOf.getOrElse(t, 0L))
-    }.toMap)
-  }
+  /** [[queryTermDf]] without the memo. */
+  private def liveDf(s: SparkSession, snap: IndexMaintenance.Snapshot,
+      terms: Seq[String]): Map[String, Long] =
+    if (snap.tombstonesOf("postings").nonEmpty) {
+      // one job, no exchange: each partition counts its rows per term
+      // and the driver adds up the partitions' few counts
+      val n = snap.scan(s, "postings", "doc_id").filter(col("term").isin(terms: _*))
+        .select(col("term")).rdd
+        .mapPartitions(_.map(_.getString(0)).toSeq.groupMapReduce(identity)(_ => 1L)(_ + _).iterator)
+        .collect().toSeq.groupMapReduce(_._1)(_._2)(_ + _)
+      terms.map(t => t -> n.getOrElse(t, 0L)).toMap
+    } else {
+      val writes = snap.props.toSeq.collect { case (k, v) if k.startsWith(queryDfFact) =>
+        v.split(',').map { kv => val i = kv.lastIndexOf('='); kv.take(i) -> kv.drop(i + 1).toLong }.toMap
+      }
+      require(writes.nonEmpty && writes.forall(w => terms.forall(w.contains)),
+        s"${snap.root} has no df facts ($queryDfFact*) for ${terms.mkString(", ")} in its " +
+          "index log; rebuild the index")
+      terms.map(t => t -> writes.map(_(t)).sum).toMap
+    }
 
-  /** (term, df, ub, n) rows summed per term: df and n add, ub is the
-    * largest present. */
-  private def sumByTerm(rows: IterableOnce[(String, Long, Option[Double], Long)])
-      : Seq[(String, Long, Option[Double], Long)] =
-    rows.iterator.toSeq.groupMapReduce(_._1)(identity) { case ((t, d1, u1, n1), (_, d2, u2, n2)) =>
-      (t, d1 + d2, (u1 ++ u2).maxOption, n1 + n2)
-    }.values.toSeq
+  /** The dictionary rows of `terms` at `snap`: (df, ub) for each term
+    * the dictionary holds, frozen at the last rebuild. One
+    * O(|terms|)-row pruned read of the term-sorted dictionary. */
+  private def termDictionary(s: SparkSession, snap: IndexMaintenance.Snapshot,
+      terms: Seq[String]): Map[String, (Long, Double)] =
+    snap.read(s, "termstats").filter(col("term").isin(terms: _*))
+      .select(col("term"), col("df"), col("ub")).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
 
-  /** The subset of `terms` whose DICTIONARY df-share is within
-    * `maxDfShare`. Terms absent from the dictionary are kept: they were
-    * not in the vocabulary at the last rebuild, so they cannot be a
-    * standing mega-posting (frozen-statistics semantics, like
-    * n_docs/avgdl). */
-  private def withinDfShare(snap: IndexMaintenance.Snapshot, df: TermDf, terms: Seq[String],
-      maxDfShare: Double): Seq[String] = {
-    val nDocs = corpusStats(snap)._1
-    terms.filter(t => df.dict.get(t).fold(0L)(_._1).toDouble <= maxDfShare * nDocs)
-  }
-
-  /** [[withinDfShare]] of `terms` at the current snapshot of `indexDir`,
-    * resolved through [[queryTermDf]] — an O(|terms|)-row pruned read
-    * of the term dictionary and the n_docs fact, never the posting
-    * lists themselves. */
-  private[graft] def boundedQueryTerms(s: SparkSession, indexDir: String,
+  /** The subset of `terms` whose DICTIONARY df-share at `snap` is
+    * within `maxDfShare`: one pruned read of the term dictionary and
+    * the n_docs fact, never the posting lists themselves. Terms absent
+    * from the dictionary are kept: they were not in the vocabulary at
+    * the last rebuild, so they cannot be a standing mega-posting
+    * (frozen-statistics semantics, like n_docs/avgdl). */
+  private[graft] def boundedQueryTerms(s: SparkSession, snap: IndexMaintenance.Snapshot,
       terms: Seq[String], maxDfShare: Double): Seq[String] = {
-    val snap = IndexMaintenance.snapshot(s, indexDir)
-    withinDfShare(snap, queryTermDf(s, snap, terms), terms, maxDfShare)
+    val nDocs = corpusStats(snap)._1
+    val dict = termDictionary(s, snap, terms)
+    terms.filter(t => dict.get(t).fold(0L)(_._1).toDouble <= maxDfShare * nDocs)
   }
+
+  /** [[boundedQueryTerms]] at the current snapshot of `indexDir`. */
+  private[graft] def boundedQueryTerms(s: SparkSession, indexDir: String,
+      terms: Seq[String], maxDfShare: Double): Seq[String] =
+    boundedQueryTerms(s, IndexMaintenance.snapshot(s, indexDir), terms, maxDfShare)
 
   /** All dictionary terms ABOVE the df-share bound — the banned list
     * for serve paths whose query terms are dynamic (the hybrid
@@ -1867,7 +1869,7 @@ object TextAnalysis {
 
   /** Decision payload of [[maxScoreContenders]]: the provable top-k
     * contender set, plus the LIVE per-query-term document frequency
-    * ([[TermDf.live]]) the exact re-score needs — the same literals
+    * ([[queryTermDf]]) the exact re-score needs — the same literals
     * every other serve scores with. */
   final case class MaxScorePrune(contenders: Seq[Long], dfLive: Map[String, Long])
 
@@ -1961,9 +1963,9 @@ object TextAnalysis {
     * recompute it; appended files carry their commit's sequence in the
     * index log, rewrites a sequence below every version —
     * [[IndexMaintenance.Snapshot.tail]] tells them apart with no
-    * listing). The LIVE df is [[deriveTermDf]]'s dictionary + tail
-    * count, and every tail doc matching a mega term
-    * joins the contenders outright (tail docs have no dictionary bound;
+    * listing). The LIVE df is [[queryTermDf]]'s, and every tail doc
+    * matching a mega term joins the contenders outright (tail docs have
+    * no dictionary bound;
     * tail docs matching cheap terms flow through the e-score floor like
     * base docs, since the e-score scan reads base + tail). Dictionary
     * ub stays sound for BASE docs: their tf/dl are fixed, avgdl/n_docs
@@ -1975,7 +1977,7 @@ object TextAnalysis {
     * disable bounded serving until the next compact. The
     * e-score floor scan is tombstone-masked (a deleted doc must not
     * seat the floor), the contender re-score masks like every index
-    * read, and the live df is [[deriveTermDf]]'s masked posting count
+    * read, and the live df is [[queryTermDf]]'s masked posting count
     * — the relation every serve scores with. Dictionary ub is RESCALED by
     * max(1, idf_live/idf_frozen) before the bound tests: a delete
     * shrinks df under the frozen n, which RAISES the serve's idf past
@@ -1996,12 +1998,12 @@ object TextAnalysis {
   /** [[maxScoreContenders]] at the snapshot `snap`. */
   private[graft] def maxScoreContenders(s: SparkSession, snap: IndexMaintenance.Snapshot,
       maxDfShare: Double, minMegaRows: Long): Option[MaxScorePrune] = {
-    val (prune, df) = maxScoreDecision(s, snap, maxDfShare, minMegaRows)
-    prune.map(MaxScorePrune(_, df.live))
+    val (prune, live) = maxScoreDecision(s, snap, maxDfShare, minMegaRows)
+    prune.map(MaxScorePrune(_, live))
   }
 
   /** The MaxScore decision at `snap` — the contenders (None: serve
-    * unbounded) and the [[TermDf]] it was derived from, which the serve
+    * unbounded) and the live df it was derived from, which the serve
     * scores with either way. The whole decision is a pure function of
     * the snapshot and the two parameters, so it is ONE
     * [[Artifacts.atGeneration]] entry: a frozen index pays the
@@ -2011,16 +2013,18 @@ object TextAnalysis {
     * rather than as its own lookup, so a serve costs one memo probe.
     * Byte-identical results by determinism. */
   private def maxScoreDecision(s: SparkSession, snap: IndexMaintenance.Snapshot,
-      maxDfShare: Double, minMegaRows: Long): (Option[Seq[Long]], TermDf) =
+      maxDfShare: Double, minMegaRows: Long): (Option[Seq[Long]], Map[String, Long]) =
     Artifacts.atGeneration(s, snap, s"bm25-maxscore|$maxDfShare|$minMegaRows") {
-      val df = deriveTermDf(s, snap, bm25Query)
-      (maxScorePrune(s, snap, df, maxDfShare, minMegaRows), df)
+      val live = liveDf(s, snap, bm25Query)
+      (maxScorePrune(s, snap, termDictionary(s, snap, bm25Query), live, maxDfShare, minMegaRows),
+        live)
     }
 
-  private def maxScorePrune(s: SparkSession, snap: IndexMaintenance.Snapshot, df: TermDf,
+  private def maxScorePrune(s: SparkSession, snap: IndexMaintenance.Snapshot,
+      dict: Map[String, (Long, Double)], live: Map[String, Long],
       maxDfShare: Double, minMegaRows: Long): Option[Seq[Long]] = {
     val (nDocs, avgdl) = corpusStats(snap)
-    val mega = bm25Query.filter(t => df.dict.get(t)
+    val mega = bm25Query.filter(t => dict.get(t)
       .exists(_._1.toDouble > maxDfShare * nDocs))
     if (mega.isEmpty) return None  // no mega posting to avoid
     val cheap = bm25Query.filterNot(mega.contains)
@@ -2028,7 +2032,7 @@ object TextAnalysis {
     // AUTO-DISENGAGE ([[maxScoreMinMegaRows]]): if the posting mass the
     // pruning would skip can't pay for the floor scan + decision
     // actions, serve unbounded without paying them
-    if (mega.map(t => df.dict(t)._1).sum < minMegaRows) return None
+    if (mega.map(t => dict(t)._1).sum < minMegaRows) return None
     // the appended tail's mega-matching docs: contenders by inclusion,
     // not by bound (tombstone-masked like the table reads, identity when
     // none pending: a deleted tail doc must not count toward the
@@ -2044,7 +2048,7 @@ object TextAnalysis {
     }
     // floor idf uses the LIVE df — the exact per-term factor the final
     // serve scores with, keeping the e-scores true underestimates
-    val idfOf = cheap.map(t => t -> bm25IdfAt(df.live(t).toDouble, nDocs.toDouble)).toMap
+    val idfOf = cheap.map(t => t -> bm25IdfAt(live(t).toDouble, nDocs.toDouble)).toMap
     // per-term bound rescaled by max(1, idf_live/idf_frozen): the
     // dictionary's ub froze idf at the rebuild's df, but the serve
     // scores with the LIVE df under the frozen n — an APPEND grows df
@@ -2055,8 +2059,8 @@ object TextAnalysis {
     // both directions: appends are covered by inclusion, deletes only
     // shrink it.
     val ubMega = mega.map { t =>
-      val (dictDf, ub) = df.dict(t)
-      ub * math.max(1.0, bm25IdfAt(df.live(t).toDouble, nDocs.toDouble) /
+      val (dictDf, ub) = dict(t)
+      ub * math.max(1.0, bm25IdfAt(live(t).toDouble, nDocs.toDouble) /
         bm25IdfAt(dictDf.toDouble, nDocs.toDouble))
     }.sum
     val rows = maxScoreCandFrame(s, snap, cheap, idfOf, avgdl, ubMega)

@@ -1406,28 +1406,8 @@ object HashUtil {
   }
 }
 
-/** A Long constant the driver computes when the plan holding it is
-  * first optimised, not when the plan is built: it is foldable, so
-  * constant folding replaces it with its literal before physical
-  * planning, and `value` runs at most once per expression. It lets a
-  * DataFrame carry a memoised fact that costs a Spark job to derive (a
-  * served read's per-term df) while constructing the DataFrame runs
-  * none. Never evaluated per row. */
-case class DriverConstant(name: String, value: () => Long)
-    extends org.apache.spark.sql.catalyst.expressions.LeafExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  private lazy val computed: Long = value()
-  override def foldable: Boolean = true
-  override def nullable: Boolean = false
-  override def dataType: DataType = LongType
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = computed
-  override def toString: String = name
-}
-
 /** Column-level API for the custom expressions. */
 object VectorFunctions {
-  def driver_constant(name: String, value: => Long): Column =
-    GraftBridge.column(DriverConstant(name, () => value))
   def vec_dot(a: Column, b: Column): Column =
     GraftBridge.column(DotProduct(GraftBridge.expression(a), GraftBridge.expression(b)))
   def poly_hash(c: Column): Column =

@@ -17,9 +17,9 @@ import graft.ops.{IndexMaintenance, TextAnalysis}
   *
   * The statistics semantic mirrors the ANN twins' train/serve
   * divergence, but with the lexical engine's own staleness model:
-  * per-term df is current (the dictionary df plus the appended tail's
-  * rows, derived once per index generation by the first serve that
-  * reads it — [[graft.ops.TextAnalysis.queryTermDf]]), while the 1-row
+  * per-term df is current (each append commits its query-term posting
+  * rows as a log fact, which serves sum —
+  * [[graft.ops.TextAnalysis.queryTermDf]]), while the 1-row
   * n_docs/avgdl stats stay FROZEN at their
   * last rebuild until a compaction recomputes them — Lucene's segment
   * model (commits don't re-estimate global stats; merges do). The

@@ -823,13 +823,30 @@ class BoundedServeSpec extends AnyFunSuite {
     assert(single.isEmpty, s"single-partition exchange(s) in the served read: $single")
   }
 
+  test("the first served read after an append runs at most 3 jobs: its df is read from the " +
+      "index log, not derived; with a delete pending, construction counts the masked df once") {
+    import spark.implicits._
+    val idx = stopwordIndex("first-read")
+    TextAnalysis.textBm25Served(spark, idx).collect()
+    TextAnalysis.textIndexAppendBatch(spark,
+      Seq((61L, "spark join vector fresh", "en", "s")).toDF("doc_id", "text", "lang", "source"), idx)
+    val first = TestSpark.jobsRun(TextAnalysis.textBm25Served(spark, idx).collect())
+    assert(first <= 3, s"the first read after an append ran $first Spark jobs — want at most 3")
+    TextAnalysis.textIndexDelete(spark, idx, Seq(6L))
+    val missed = TestSpark.jobsRun(TextAnalysis.textBm25Served(spark, idx))
+    assert(missed >= 1 && missed <= 2,
+      s"constructing the first read with a delete pending ran $missed Spark jobs — want 1 or 2")
+    val hit = TestSpark.jobsRun(TextAnalysis.textBm25Served(spark, idx))
+    assert(hit == 0, s"constructing the second read of the generation ran $hit Spark jobs")
+  }
+
   test("the df literals equal the masked query-term posting-row count after an append, " +
       "a delete and a compaction") {
     import spark.implicits._
     val idx = stopwordIndex("df-literals")
     def check(stage: String): Map[String, Long] = {
       val snap = IndexMaintenance.snapshot(spark, idx)
-      val live = TextAnalysis.queryTermDf(spark, snap, TextAnalysis.bm25Query).live
+      val live = TextAnalysis.queryTermDf(spark, snap, TextAnalysis.bm25Query)
       val want = maskedPostingCount(snap)
       assert(live == want, s"$stage: df literals $live, masked posting-row count $want")
       live
@@ -846,8 +863,14 @@ class BoundedServeSpec extends AnyFunSuite {
     val deleted = check("after a delete")
     assert(deleted("spark") == appended("spark") - 2 && deleted("join") == appended("join") - 2,
       s"the delete must move df: $appended -> $deleted")
+    // a second generation with the delete still pending
+    TextAnalysis.textIndexAppendBatch(spark,
+      Seq((64L, "spark vector", "en", "s")).toDF("doc_id", "text", "lang", "source"), idx)
+    val pending = check("after an append with a delete pending")
+    assert(pending("spark") == deleted("spark") + 1 && pending("vector") == deleted("vector") + 1,
+      s"the append must move df: $deleted -> $pending")
     TextAnalysis.textIndexCompact(spark, idx)
-    assert(check("after a compaction") == deleted, "a compaction must not move df")
+    assert(check("after a compaction") == pending, "a compaction must not move df")
     // the served read scores with these literals: equal to the MaxScore
     // serve, whose decision carries them
     val exact = TextAnalysis.textBm25Served(spark, idx).collect().map(_.toSeq).toSeq
@@ -869,15 +892,15 @@ class BoundedServeSpec extends AnyFunSuite {
         .toDF("doc_id", "text", "lang", "source"), idx)
     val now = IndexMaintenance.snapshot(spark, idx)
     assert(now.generation != old.generation)
-    // the current generation's entries are derived first, so a memo that
-    // ignored the generation would hand them to the old snapshot below
+    // the current generation's decision is derived first, so a memo that
+    // ignored the generation would hand it to the old snapshot below
     val dfNow = TextAnalysis.queryTermDf(spark, now, TextAnalysis.bm25Query)
     val decNow = TextAnalysis.maxScoreContenders(spark, now, share, 0L)
-    assert(dfNow.live != dfOld.live && decNow != decOld,
+    assert(dfNow != dfOld && decNow != decOld,
       "the append must move the df and the decision, or the pin is vacuous")
     assert(TextAnalysis.queryTermDf(spark, old, TextAnalysis.bm25Query) == dfOld,
       "the derivation at the old snapshot returned another version's df")
-    assert(dfOld.live == maskedPostingCount(old))
+    assert(dfOld == maskedPostingCount(old))
     val decAgain = TextAnalysis.maxScoreContenders(spark, old, share, 0L)
     assert(decAgain == decOld,
       s"the MaxScore decision at the old snapshot moved: $decOld -> $decAgain")
