@@ -541,7 +541,7 @@ object Curation {
   }
 
   /** Bloom-served decontamination — the SERVING shape of
-    * [[decontaminateNgram]], two-tier since round 7: the eval set
+    * [[decontaminateNgram]], two-tier: the eval set
     * compresses into a few-hundred-KB Bloom filter that rides with the
     * plan, and the corpus-side SCREEN is `size(filter(shingles,
     * bloom))` — a pure scan-local projection. NO join, NO shuffle for

@@ -116,10 +116,9 @@ object Dedup {
     * Prefix length is integer arithmetic from jaccardNum/jaccardDen — no
     * fp wobble, and it cannot drift from the oracle threshold. */
   def dedupNgramJaccard(s: SparkSession, dir: String): DataFrame =
-    // computed per call (round 17): the r16 per-session result memo on
-    // this SCAN-form query meant every bench rep after the warmup
-    // measured a cache read, not the declared prefix-join + verify
-    // computation — the r16 verdict's gaming finding (item 1). A
+    // computed per call: a per-session result memo on this SCAN-form
+    // query would make every bench rep after the warmup measure a cache
+    // read, not the declared prefix-join + verify computation. A
     // deployment that wants the pair table as a standing artifact
     // persists it through a maintenance path and reads THAT; the
     // registered scan form prices the derivation. Consumers inside ONE
@@ -240,8 +239,7 @@ object Dedup {
   val unionFindMaxPairs = 2000000L
 
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
-    // computed per call — the r16 result memo un-gamed like
-    // dedupNgramJaccard's (the label frame is THE query result; a
+    // computed per call, like dedupNgramJaccard (the label frame is THE query result; a
     // bench rep serving it from a session map measures nothing)
     dedupClustersBuild(s, dir)
 
@@ -398,7 +396,7 @@ object Dedup {
     * locally — `mk(x, y)` builds the output struct. Used instead of a
     * bucket self-join: a self-join would place TWO copies of the
     * (expensive) signature-aggregation subtree in the plan, which the
-    * round-2 plan audit measured as the dominant cost of the LSH queries;
+    * plan audit measured as the dominant cost of the LSH queries;
     * grouping once and expanding pairs keeps exactly ONE aggregation
     * subtree and the same bucket-local O(m²) output. The per-bucket array
     * is bounded by bucket size m — LSH band signatures keep m small, and
@@ -454,7 +452,7 @@ object Dedup {
     * them all): excluded here exactly as the oracle's token explode drops
     * them. The signature table is memo-cached so joins read ONE computed
     * copy from storage instead of recomputing the tokenize+md5 pass per
-    * side (round-2 verdict). Banding stays a JOIN input, not a
+    * side. Banding stays a JOIN input, not a
     * bucket-array expansion: byte-band buckets are only 256 values per
     * band, so natural-language bit skew produces hot buckets whose
     * collected pair arrays serialize on one task (measured 2.4× slower) —
@@ -630,26 +628,6 @@ object Dedup {
   private def readSigIndex(s: SparkSession, indexDir: String): DataFrame =
     IndexMaintenance.scan(s, indexDir, "simhash", "doc_id")
 
-  /** Per-micro-batch verdict + admission for the STREAMING ingest path
-    * ([[graft.streaming.IngestDedup]]): flag each batch doc whose
-    * signature lands within [[hammingThreshold]] of any ALREADY-ADMITTED
-    * corpus signature (the persisted index) OR of any LOWER-ID member of
-    * the same batch — C4-style keep-first masking. A doc is flagged even
-    * when its lower-id match was itself flagged; that convention (drop
-    * all-but-first of a dup group) is what makes the rule DISTRIBUTIVE
-    * inside a batch: verdicts are one banded self-join plus one banded
-    * index join, no sequential fold over the batch. Appends the verdicts
-    * to `outDir` and the ADMITTED (is_dup = false) signatures to the
-    * index, so the next micro-batch dedupes against everything admitted
-    * so far. Deliberately returns nothing: a verdict/admission count
-    * would cost two extra Spark jobs per micro-batch (the sink parquet
-    * is the record), and micro-batch fixed overhead is exactly what an
-    * ingest path must keep low.
-    *
-    * Scale shape: the batch side is one landing file (small by
-    * construction — AQE broadcasts it); the index side reads the
-    * ~14 B/doc signature parquet, never corpus text. Index growth is
-    * append-only; [[dedupIndexCompact]] is the maintenance op. */
   /** (doc_id, dup_of, min_hamming) for every batch signature within
     * [[hammingThreshold]] of the standing index OR a lower-id batch
     * member — the hit set both ingest forms share. */
@@ -659,7 +637,7 @@ object Dedup {
     // through a static BroadcastHashJoin: no exchange is ever planned,
     // where the unhinted plan paid a full shuffle pair (plus its AQE
     // stage-materialization jobs per micro-batch) before the runtime
-    // rewrite (guide §3.1; optimization round 16)
+    // rewrite
     val batchBands = JoinHints.broadcastIfSmall(simBandsOf(sig))
     val idxBands = simBandsOf(readSigIndex(s, indexDir))
     def near(y: DataFrame, cond: Column) =
@@ -684,6 +662,26 @@ object Dedup {
       .agg(min(col("cand")).as("dup_of"), min(col("hamming")).as("min_hamming"))
   }
 
+  /** Per-micro-batch verdict + admission for the STREAMING ingest path
+    * ([[graft.streaming.IngestDedup]]): flag each batch doc whose
+    * signature lands within [[hammingThreshold]] of any ALREADY-ADMITTED
+    * corpus signature (the persisted index) OR of any LOWER-ID member of
+    * the same batch — C4-style keep-first masking. A doc is flagged even
+    * when its lower-id match was itself flagged; that convention (drop
+    * all-but-first of a dup group) is what makes the rule DISTRIBUTIVE
+    * inside a batch: verdicts are one banded self-join plus one banded
+    * index join, no sequential fold over the batch. Appends the verdicts
+    * to `outDir` and the ADMITTED (is_dup = false) signatures to the
+    * index, so the next micro-batch dedupes against everything admitted
+    * so far. Deliberately returns nothing: a verdict/admission count
+    * would cost two extra Spark jobs per micro-batch (the sink parquet
+    * is the record), and micro-batch fixed overhead is exactly what an
+    * ingest path must keep low.
+    *
+    * Scale shape: the batch side is one landing file (small by
+    * construction — AQE broadcasts it); the index side reads the
+    * ~14 B/doc signature parquet, never corpus text. Index growth is
+    * append-only; [[dedupIndexCompact]] is the maintenance op. */
   private[graft] def ingestBatch(s: SparkSession, batchDocs: DataFrame,
       indexDir: String, outDir: String, batchId: Long, lineage: String = ""): Unit = {
     val docs = batchDocs.persist()
@@ -987,8 +985,8 @@ object Dedup {
     // the job-free-construction invariant the other dedup ops keep.
     // The guard column must be CONSUMED (the filter below) — a bare
     // drop() lets column pruning + CollapseProject eliminate the
-    // raise_error expression entirely (round-3 advice; PlanGuardSpec
-    // pins raise_error surviving into the optimized plan).
+    // raise_error expression entirely (PlanGuardSpec pins raise_error
+    // surviving into the optimized plan).
     val guard = Tables(s, dir, "embeddings")
       .agg(count(lit(1)).as("n_emb"))
       .select(when(col("n_emb") <= maxRows, lit(1L))
@@ -1063,8 +1061,7 @@ object Dedup {
     * block; callers dedupe across probe blocks if probes > 1. */
   private def tiledBlockPairs(asg: DataFrame,
       threshold: Double = cosineThreshold): DataFrame = {
-    // TRIANGLE TILING (found by the round-4 100× experiment, second
-    // pass): expanding a whole block's pairs from its single array row
+    // TRIANGLE TILING (found by a 100× scale experiment): expanding a whole block's pairs from its single array row
     // pins Σ m² work to ONE task — a skewed quantizer's mega-block
     // (~100k members under stride centroids here) ran 42 minutes on one
     // core while 31 idled, and the tight codegen loop never reached a
@@ -1121,13 +1118,13 @@ object Dedup {
     * like the other `_trained` paths.
     *
     * τ IS A CORPUS-GEOMETRY POLICY, NOT A UNIVERSAL CONSTANT — the
-    * round-9 clustered-geometry experiment measured the default
+    * clustered-geometry experiment measured the default
     * dropping 247,500 of 250,000 vectors (2,500 planted dups) on a
     * 50-Gaussian mixture: when embeddings cluster (the geometry real
     * sentence embeddings have), within-cluster cosine sits far above a
     * threshold calibrated on scattered corpora, and the keep rule
-    * degenerates to one representative per cluster. The round-10 τ
-    * sweep (PLANS.md) measured the drop-rate curve per geometry; on
+    * degenerates to one representative per cluster. The τ sweep
+    * (PLANS.md) measured the drop-rate curve per geometry; on
     * clustered corpora start from [[semanticTauClustered]], on
     * scattered ones the shared [[cosineThreshold]] holds, and when the
     * duplicate BUDGET is the known quantity (the paper's own tuning
@@ -1147,7 +1144,7 @@ object Dedup {
       tau: Double = cosineThreshold): DataFrame =
     dedupSemanticWith(s, dir, _ => Similarity.trainedCentroidsOf(s, dir), tau)
 
-  /** Clustered-geometry τ default, from the round-10 sweep on the
+  /** Clustered-geometry τ default, from the τ sweep on the
     * 250k-vector scale corpora (PLANS.md has the full drop-rate
     * table per geometry). The measured cliff: on the 50-Gaussian
     * clustered family the drop rate is still 98.4% at τ=0.95 and falls
@@ -1212,7 +1209,7 @@ object Dedup {
     * redundant vectors corpus-wide are dropped. Self-calibrating by
     * construction: on clustered geometry the cutoff lands wherever the
     * within-cluster mass puts it, instead of a fixed τ silently
-    * flushing 99% of the corpus (the round-9 finding).
+    * flushing 99% of the corpus.
     *
     * Scale shape: the same 1-probe triangle-tiled kernel; the head
     * selection is exact top-K by (score desc, vec_id) in BOTH forms —

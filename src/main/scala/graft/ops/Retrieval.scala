@@ -20,8 +20,8 @@ import graft.functions.TextFns
   * calibration between the BM25 log-scale and the cosine scale — which
   * is why it is the default fusion in production hybrid search.
   *
-  * The whole path is QUERY-SET shaped (round-7 generalization of the
-  * single hardcoded query): every stride doc is a hybrid query — its
+  * The whole path is QUERY-SET shaped (a generalization of the single
+  * hardcoded query): every stride doc is a hybrid query — its
   * embedding probes the persisted LSH index, and its first
   * [[hybridQueryTerms]] distinct tokens form its lexical query. Scale
   * shape: the semantic side scores only the query set's probed buckets
@@ -136,12 +136,11 @@ object Retrieval {
     * from that list), and the RRF score. Exact over both input
     * rankings, so it carries a full DuckDB oracle composed from the LSH
     * oracle CTE chain and the grouped-BM25 restatement. The SCAN form
-    * computes its lexical ranks per call (round 17: the r16 per-session
-    * result memo made every bench rep after the first measure a cache
-    * read instead of the declared tokenize + pivot + rank computation —
-    * the r16 verdict's gaming finding; the serving-shaped memo now
-    * lives only on the `_served` twins, whose declared computation IS
-    * an artifact read). */
+    * computes its lexical ranks per call: a per-session result memo
+    * would make every bench rep after the first measure a cache read
+    * instead of the declared tokenize + pivot + rank computation; the
+    * serving-shaped memo lives only on the `_served` twins, whose
+    * declared computation IS an artifact read. */
   def searchHybridRrf(s: SparkSession, dir: String): DataFrame =
     fuse(s, dir, lexRanks(s, dir))
 

@@ -216,7 +216,7 @@ object TextAnalysis {
     * 1.8 s -> 0.6-0.95 s across every A/B run). Everything else
     * measured at or under the ambient noise band — or LOST to the
     * extra exchange + 32-way tiny stages — so only the one decisive
-    * winner keeps it (A/B-benched per query, round 16). */
+    * winner keeps it (A/B-benched per query). */
   private def docsScanSpread(s: SparkSession, dir: String) =
     Tables.spreadIfTiny(s, dir, "documents", "doc_id")
 
@@ -1018,14 +1018,14 @@ object TextAnalysis {
     * unigram form. */
   def textBigramLm(s: SparkSession, dir: String): DataFrame = {
     // both corpus passes (bigram pairs + unigram counts) go through the
-    // gated scan spread: the r17 profile showed the two tokenize map
-    // stages serialized on ONE task each (0.57 s + 0.34 s on the
+    // gated scan spread: a profile showed the two tokenize map stages
+    // serialized on ONE task each (0.57 s + 0.34 s on the
     // single-row-group layout) — the same compute-dense one-pass shape
-    // the char-trigram spread won on; A/B in OPTIMIZATION_r17.md
+    // the char-trigram spread won on
     val toks = docsScanSpread(s, dir)
       .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
-    // per-(doc, v, w) counts come out of ONE fused row-local expression
-    // (round 17, guide §2.4): a doc's positions all live in its tokens
+    // per-(doc, v, w) counts come out of ONE fused row-local expression:
+    // a doc's positions all live in its tokens
     // array, so the former explode(arrays_zip) → groupBy(doc_id, v, w)
     // chain paid a corpus-sized exchange plus partial+final hash
     // aggregation over every token POSITION to group rows that were
@@ -1040,7 +1040,7 @@ object TextAnalysis {
     // corpus-wide term counts aggregate STRAIGHT off the token explode:
     // the former per-(doc, term) grouping was consumed only by this sum
     // (Σ per-doc counts ≡ total count, exact longs), so its own
-    // corpus-sized exchange bought nothing (round 17)
+    // corpus-sized exchange bought nothing
     val cf = docsScanSpread(s, dir)
       .select(explode(TextFns.tokens(col("text"))).as("term"))
       .filter(col("term").isNotNull)
@@ -1181,7 +1181,7 @@ object TextAnalysis {
   val mgCounters = 1024
 
   /** Sketch-ONLY heavy hitters — the serving path `textHeavyHitters`'
-    * exact comparison pass would defeat at scale (round-3 verdict #5).
+    * exact comparison pass would defeat at scale.
     * No exact global word count anywhere:
     *
     *  1. ONE bounded pass builds the CMS (`treeAggregate`, fixed size);
@@ -1288,7 +1288,7 @@ object TextAnalysis {
     // rank<=k ids (collect_list skips the nulls), so the aggregation
     // buffer stays <=k yet the token stream is scanned, exploded, and
     // tf-aggregated exactly once. A stats-side + heads-side split would
-    // recompute that whole subtree twice (the round-2 minhash lesson).
+    // recompute that whole subtree twice (the minhash double-compute lesson).
     // The window and the groupBy both key on term — one exchange serves
     // both; the per-partition sort is by (term, doc_id), spillable.
     tf
