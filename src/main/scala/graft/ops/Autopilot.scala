@@ -56,7 +56,7 @@ object Autopilot {
 
   /** Bloom saturation alarm for the decontamination index: cumulative
     * inserts over the filter's sized capacity (the accounting
-    * `decontamBloomAppend` warns on). Past 1.0 the actual FP rate
+    * `decontamIndexAppendBatch` warns on). Past 1.0 the actual FP rate
     * exceeds the built fpp — the exact-confirm tier absorbs the extra
     * false positives (correctness holds) but every FP pays a confirm
     * join, so the screen tier is decaying toward a no-op. The fix is

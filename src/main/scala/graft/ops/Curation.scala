@@ -260,48 +260,51 @@ object Curation {
     * under 1% at typical span counts. */
   val contamBloomFpp = 1e-4
 
-  /** Distinct shingle hashes of the eval slice (the benchmark side). */
-  private def evalShingleHashes(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "documents")
+  /** PERSIST the contamination index over `evalDir`'s eval slice as ONE
+    * commit of two tables:
+    *  - `bloom`, the SCREEN: one row carrying the serialized filter plus
+    *    the sizing it was built with (append needs the identical
+    *    geometry to OR-merge);
+    *  - `eval_shingles`, the EXACT side: the eval slice's shingle
+    *    hashes WITH their eval doc ids. The bloom screens every doc
+    *    map-only (no false negatives), and only the tiny flagged slice
+    *    equi-joins this table to confirm and count true shared
+    *    shingles, which is what makes the served n_shared bit-identical
+    *    to the exact [[decontaminateNgram]] join (and hence
+    *    DuckDB-oracle-able — bloom false positives never reach the
+    *    output). The doc attribution is what makes RETRACTION possible:
+    *    an eval benchmark retired from the contamination set deletes by
+    *    eval_id ([[decontamIndexDelete]]), which the bloom alone could
+    *    never honor (bits cannot be unset).
+    * Both tables are eval-sized by construction; the corpus is never
+    * read. One commit means a crash leaves either no index or a whole
+    * one, never a screen without its confirm side. */
+  def decontamIndexWrite(s: SparkSession, evalDir: String, indexDir: String): Unit = {
+    val rows = Tables(s, evalDir, "documents")
       .filter(col("doc_id") % evalStride === 0)
-      .select(explode(graft.plans.VectorFunctions.word_shingle_hashes(
-        col("text"), contamShingleN)).as("h"))
+      .select(col("doc_id").as("eval_id"),
+        explode(graft.plans.VectorFunctions.word_shingle_hashes(
+          col("text"), contamShingleN)).as("h"))
       .distinct()
+    val (bloom, props) = freshBloom(s, rows.select(col("h")).distinct())
+    IndexMaintenance.replace(s, indexDir, Seq("bloom" -> bloom, "eval_shingles" -> rows), props)
+  }
 
-  /** The eval bloom, memoised per (session, corpus) — an eager small
-    * build, like the PQ codebooks (the eval set is benchmark-sized by
-    * construction). */
-  private[graft] def evalBloom(s: SparkSession, dir: String): org.apache.spark.util.sketch.BloomFilter =
-    Artifacts.memo(s, s"$dir|eval-bloom") {
-      val evalH = evalShingleHashes(s, dir)
-      val n = math.max(1024L, evalH.count())
-      evalH.stat.bloomFilter("h", n, contamBloomFpp)
-    }
-
-  /** PERSIST the eval-set Bloom index: one parquet row carrying the
-    * serialized filter plus the sizing it was built with (append needs
-    * the identical geometry to OR-merge). Build is eager — two small
-    * jobs over the eval slice only; the 100 TB corpus is never read. */
-  def decontamBloomWrite(s: SparkSession, evalDir: String, indexDir: String): Unit = {
-    val evalH = evalShingleHashes(s, evalDir)
-    val cnt = evalH.count()
-    // 2x headroom, matching the compact rebuild's sizing: a streaming
-    // contamination index seeded here starts BELOW capacity, so the
-    // append path's saturation-overrun warning doesn't fire spuriously
-    // on the very first appended batch (total = cnt + batch would
-    // exceed an exactly-sized n immediately)
+  /** A bloom built fresh over the distinct hashes `h`, as the `bloom`
+    * table row plus its capacity props. Sized with 2× headroom so an
+    * append's cumulative-capacity accounting starts from the ACTUAL
+    * item count, not at 100% of an exactly-sized filter (total_items
+    * records the inserts, not the sized capacity). An empty `h` is
+    * legal (every eval doc shorter than a shingle, or retracted):
+    * `stat.bloomFilter` fails on an empty frame, and an explicit empty
+    * filter screens nothing, which is exactly right. */
+  private def freshBloom(s: SparkSession, h: DataFrame): (DataFrame, Map[String, String]) = {
+    val cnt = h.count()
     val n = math.max(1024L, cnt * 2)
-    // an eval slice of only sub-shingle-length docs is legal;
-    // stat.bloomFilter NPEs on an empty frame, and an explicit empty
-    // filter screens nothing — exactly right (same guard as compact)
     val bloom =
       if (cnt == 0L) org.apache.spark.util.sketch.BloomFilter.create(n, contamBloomFpp)
-      else evalH.stat.bloomFilter("h", n, contamBloomFpp)
-    // totalItems records ACTUAL inserts (cnt), not the sized capacity —
-    // the floor would start small indexes' saturation accounting at
-    // 100% and make the append path's overrun warning fire spuriously
-    IndexMaintenance.replace(s, indexDir, Seq("bloom" -> bloomRow(s, bloom, n, contamBloomFpp, cnt)),
-      bloomProps(n, cnt))
+      else h.stat.bloomFilter("h", n, contamBloomFpp)
+    (bloomRow(s, bloom, n, contamBloomFpp, cnt), bloomProps(n, cnt))
   }
 
   /** The persisted bloom: one row carrying the serialized filter plus
@@ -321,26 +324,15 @@ object Curation {
   private def bloomProps(nItems: Long, totalItems: Long): Map[String, String] =
     Map("bloom.n_items" -> nItems.toString, "bloom.total_items" -> totalItems.toString)
 
-  /** PERSIST the eval slice's shingle hashes WITH their eval doc ids
-    * alongside the bloom — the EXACT side of the two-tier contamination
-    * probe the ingest-time manifest runs: the bloom screens every doc
-    * map-only (no false negatives), and only the tiny flagged slice
-    * equi-joins this table to confirm and count true shared shingles,
-    * which is what makes the streamed n_shared bit-identical to the
-    * exact [[decontaminateNgram]] join (and hence DuckDB-oracle-able —
-    * bloom false positives never reach the output). The doc attribution
-    * is what makes RETRACTION possible: an eval benchmark retired from
-    * the contamination set deletes by eval_id ([[decontamIndexDelete]]),
-    * which the bloom alone could never honor (bits cannot be unset).
-    * The table is eval-sized by construction, never corpus-sized. */
-  def decontamShingleWrite(s: SparkSession, evalDir: String, indexDir: String): Unit =
-    IndexMaintenance.replace(s, indexDir, Seq("eval_shingles" ->
-      Tables(s, evalDir, "documents")
-        .filter(col("doc_id") % evalStride === 0)
-        .select(col("doc_id").as("eval_id"),
-          explode(graft.plans.VectorFunctions.word_shingle_hashes(
-            col("text"), contamShingleN)).as("h"))
-        .distinct()))
+  /** The contamination index over `dir`'s own eval slice, written once
+    * per (JVM, corpus) as a standing [[Artifacts]] temp dir — the
+    * registered serve's artifact, like [[TextAnalysis.textIndexFor]]. */
+  private[graft] def decontamIndexFor(s: SparkSession, dir: String): String =
+    Artifacts.tempDir(s"decontam-index|$dir") {
+      val d = java.nio.file.Files.createTempDirectory("graft-decontam-index").toString
+      decontamIndexWrite(s, dir, d)
+      d
+    }
 
   /** The eval shingle table with pending retractions filtered — the
     * read the exact confirm tier uses, so a retracted eval doc stops
@@ -367,23 +359,12 @@ object Curation {
     var before = 0
     val after = IndexMaintenance.transact(s, indexDir) { snap =>
       before = snap.filesOf("eval_shingles").size
-      val surviving = snap.scan(s, "eval_shingles", "eval_id").select(col("h")).distinct()
-      val cnt = surviving.count()
-      // sized with append headroom (2× the surviving count) so the next
-      // append's cumulative-capacity accounting starts from the ACTUAL
-      // item count, not at 100% of an exactly-sized filter
-      val n = math.max(1024L, cnt * 2)
-      // stat.bloomFilter returns a null buffer on an empty frame (every
-      // eval doc retracted — legal); an explicit empty filter screens
-      // nothing, which is exactly right
-      val bloom =
-        if (cnt == 0L) org.apache.spark.util.sketch.BloomFilter.create(n, contamBloomFpp)
-        else surviving.stat.bloomFilter("h", n, contamBloomFpp)
+      val (bloom, props) = freshBloom(s,
+        snap.scan(s, "eval_shingles", "eval_id").select(col("h")).distinct())
       IndexMaintenance.Change(replace = Seq(
         "eval_shingles" -> IndexMaintenance.rewrite(s, snap, "eval_shingles",
           Seq("eval_id", "h"), Some("eval_id")),
-        "bloom" -> bloomRow(s, bloom, n, contamBloomFpp, cnt)),
-        props = bloomProps(n, cnt))
+        "bloom" -> bloom), props = props)
     }
     (before, after.map(_.filesOf("eval_shingles").size).getOrElse(0))
   }
@@ -393,60 +374,27 @@ object Curation {
     org.apache.spark.util.sketch.BloomFilter.readFrom(
       new java.io.ByteArrayInputStream(meta.getAs[Array[Byte]]("bloom")))
 
-  /** The persisted bloom (shared by serve/append and the ingest-time
-    * manifest probe). */
+  /** The persisted bloom (shared by the two-tier serve and the
+    * ingest-time manifest probe). */
   private[graft] def loadBloom(s: SparkSession, indexDir: String): org.apache.spark.util.sketch.BloomFilter =
     bloomOf(IndexMaintenance.read(s, indexDir, "bloom").head())
 
-  /** Landing-zone append: OR-merge a new eval batch into the persisted
-    * filter. The batch bloom is built at the INDEX's recorded geometry
-    * (same expectedNumItems/fpp ⇒ same bit count and hash count —
-    * `mergeInPlace`'s compatibility requirement), so merging equals
-    * having built from the union. */
-  def decontamBloomAppend(s: SparkSession, evalDir: String, indexDir: String): Unit =
-    IndexMaintenance.transact(s, indexDir) { snap =>
-      val batchH = evalShingleHashes(s, evalDir)
-      mergedBloom(s, snap, indexDir, batchH, batchH.count(), "decontamBloomAppend")
-    }
-
-  /** The bloom rewrite of an append: `batchH` OR-merged into the
-    * snapshot's filter, cumulative inserts vs the sized capacity
-    * tracked — OR-merging beyond the geometry's n_items silently lifts
-    * the actual FP rate above the recorded fpp, so warn (serve re-checks
-    * it too). */
-  private def mergedBloom(s: SparkSession, snap: IndexMaintenance.Snapshot, indexDir: String,
-      batchH: DataFrame, batchN: Long, who: String): IndexMaintenance.Change = {
-    val meta = snap.read(s, "bloom").head()
-    val existing = bloomOf(meta)
-    val n = meta.getAs[Long]("n_items")
-    val fpp = meta.getAs[Double]("fpp")
-    val priorTotal = if (meta.schema.fieldNames.contains("total_items"))
-      meta.getAs[Long]("total_items") else n
-    // empty-shingle batches are legal (all-short docs); stat.bloomFilter
-    // NPEs on an empty frame, and an empty merge is a no-op anyway
-    if (batchN > 0) existing.mergeInPlace(batchH.stat.bloomFilter("h", n, fpp))
-    val total = priorTotal + batchN
-    if (total > n)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"$who: cumulative $total items exceed the sized capacity $n at $indexDir — " +
-        s"actual FP rate now exceeds fpp=$fpp (the exact-confirm tier absorbs the extra " +
-        "false positives; rebuild via decontamIndexCompact)")
-    IndexMaintenance.Change(replace = Seq("bloom" -> bloomRow(s, existing, n, fpp, total)),
-      props = bloomProps(n, total))
-  }
-
   /** Fold a landed EVAL-document batch into the contamination index —
-    * the streaming-ingest form of [[decontamBloomAppend]] +
-    * [[decontamShingleWrite]] in one commit (a benchmark suite updates
-    * over time; its new eval docs must start guarding admission without
-    * an index rebuild). The batch's shingle rows append to the exact
-    * tier (retraction-capable), its hashes OR-merge into the screen
-    * bloom at the index's recorded geometry, and both commit with the
-    * batch mark, so a retry lands nothing. The batch pays only ITS OWN
-    * distinct-hash count: hashes already standing count again, an
-    * ADVISORY over-estimate reconciled exactly at the cadence
-    * compaction's rebuild (a per-batch exact recount of the standing
-    * table would be O(index) per trigger). */
+    * the streaming-ingest form of [[decontamIndexWrite]] (a benchmark
+    * suite updates over time; its new eval docs must start guarding
+    * admission without an index rebuild). The batch's shingle rows
+    * append to the exact tier (retraction-capable); its hashes OR-merge
+    * into the screen bloom at the index's RECORDED geometry (same
+    * expectedNumItems/fpp ⇒ same bit count and hash count —
+    * `mergeInPlace`'s compatibility requirement — so merging equals
+    * having built from the union); both commit with the batch mark, so
+    * a retry lands nothing. The batch pays only ITS OWN distinct-hash
+    * count: hashes already standing count again, an ADVISORY
+    * over-estimate reconciled exactly at the compaction's rebuild (a
+    * per-batch exact recount of the standing table would be O(index)
+    * per trigger). OR-merging beyond the geometry's n_items silently
+    * lifts the actual FP rate above the recorded fpp, so the
+    * cumulative count is tracked and an overrun warns. */
   def decontamIndexAppendBatch(s: SparkSession, batch: DataFrame, indexDir: String,
       mark: Option[(String, Long)] = None): Unit =
     IndexMaintenance.transact(s, indexDir, mark) { snap =>
@@ -456,140 +404,61 @@ object Curation {
             col("text"), contamShingleN)).as("h"))
         .distinct()
       val batchH = rows.select(col("h")).distinct()
-      mergedBloom(s, snap, indexDir, batchH, batchH.count(), "decontamIndexAppendBatch")
-        .copy(append = Seq("eval_shingles" -> rows))
+      val batchN = batchH.count()
+      val meta = snap.read(s, "bloom").head()
+      val bloom = bloomOf(meta)
+      val n = meta.getAs[Long]("n_items")
+      val fpp = meta.getAs[Double]("fpp")
+      val priorTotal = if (meta.schema.fieldNames.contains("total_items"))
+        meta.getAs[Long]("total_items") else n
+      // empty-shingle batches are legal (all-short docs); stat.bloomFilter
+      // fails on an empty frame, and an empty merge is a no-op anyway
+      if (batchN > 0) bloom.mergeInPlace(batchH.stat.bloomFilter("h", n, fpp))
+      val total = priorTotal + batchN
+      if (total > n)
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"decontamIndexAppendBatch: cumulative $total items exceed the sized capacity $n " +
+          s"at $indexDir — actual FP rate now exceeds fpp=$fpp (the exact-confirm tier " +
+          "absorbs the extra false positives; rebuild via decontamIndexCompact)")
+      IndexMaintenance.Change(replace = Seq("bloom" -> bloomRow(s, bloom, n, fpp, total)),
+        append = Seq("eval_shingles" -> rows), props = bloomProps(n, total))
     }
 
   /** Two-tier contamination check served from a PERSISTED index over
-    * `dir`'s train slice: bloom screen (map-only), exact confirm on the
-    * flagged slice against the index's shingle table. Output is
-    * BIT-IDENTICAL to the in-session [[decontaminateBloomServed]]
-    * whenever the index covers `dir`'s full eval slice — the
-    * exact-confirm tier makes the result independent of the bloom's
-    * false positives, which is what lets the streamed-ingest registered
-    * form share the same DuckDB oracle. */
+    * `dir`'s train slice (every doc but the eval stride): the SCREEN is
+    * `filter(shingles, bloom)` — a pure scan-local projection, the
+    * eval set compressed into a few-hundred-KB filter that rides with
+    * the plan; NO join, NO shuffle for the overwhelmingly-clean bulk.
+    * The tiny FLAGGED slice (docs with ≥1 maybe-hit — the bloom has no
+    * false negatives) then equi-joins the index's shingle table to
+    * confirm and count true overlaps, so the output is BIT-IDENTICAL
+    * to the exact [[decontaminateNgram]] join whenever the index
+    * covers `dir`'s full eval slice, independent of the bloom's false
+    * positives — which is what lets the registered form and the
+    * streamed-ingest form share one DuckDB oracle. */
   def decontamServeTwoTier(s: SparkSession, indexDir: String, dir: String): DataFrame = {
-    val evalH = evalShingleIndex(s, indexDir).select(col("h")).distinct()
-    val flagged = serveBloom(Tables(s, dir, "documents"), loadBloom(s, indexDir),
-        excludeEvalDocs = true)
-      .filter(col("n_maybe_shared") > 0)
-      .select(col("doc_id"))
-      .join(Tables(s, dir, "documents"), "doc_id")
-      .select(col("doc_id"),
-        explode(graft.plans.VectorFunctions.word_shingle_hashes(
-          col("text"), contamShingleN)).as("h"))
-      .join(evalH, "h")
+    val bloom = loadBloom(s, indexDir)
+    val train = Tables(s, dir, "documents").filter(col("doc_id") % evalStride =!= 0)
+    val flagged = train
+      .select(col("doc_id"), filter(
+        graft.plans.VectorFunctions.word_shingle_hashes(col("text"), contamShingleN),
+        h => graft.plans.VectorFunctions.bloom_might_contain(h, bloom)).as("maybe"))
+      .filter(size(col("maybe")) > 0)
+      .select(col("doc_id"), explode(col("maybe")).as("h"))
+      .join(evalShingleIndex(s, indexDir).select(col("h")).distinct(), "h")
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("h")).as("n_shared"))
-    Tables(s, dir, "documents")
-      .filter(col("doc_id") % evalStride =!= 0)
-      .select(col("doc_id"))
+    train.select(col("doc_id"))
       .join(flagged, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("n_shared"), lit(0L)).as("n_shared"),
         (coalesce(col("n_shared"), lit(0L)) > 0).as("is_contaminated"))
       .orderBy(col("doc_id"))
   }
 
-  /** Maintenance audit for the bloom index — its file is one row, so
-    * there are no small files to merge; "compaction" here is the
-    * saturation re-check the append path's warning defers: recompute
-    * the filter's CURRENT expected FP probability from its actual bit
-    * saturation (`BloomFilter.expectedFpp`, which reflects every
-    * insert ever OR-merged in) and audit it against the recorded
-    * construction fpp and the cumulative [[decontamBloomAppend]]
-    * insert count. Returns the observed expectedFpp; throws past
-    * `maxFpp` — a saturated bloom cannot be compacted in place (bits
-    * cannot be unset), the remedy is a [[decontamBloomWrite]] rebuild
-    * over the full eval union, and silently serving a saturated
-    * filter would quietly flag everything as contaminated. */
-  def decontamBloomCompact(s: SparkSession, indexDir: String,
-      maxFpp: Double = 100 * contamBloomFpp): Double = {
-    val meta = IndexMaintenance.read(s, indexDir, "bloom").head()
-    val bloom = bloomOf(meta)
-    val observed = bloom.expectedFpp()
-    val sized = meta.getAs[Long]("n_items")
-    val total = if (meta.schema.fieldNames.contains("total_items"))
-      meta.getAs[Long]("total_items") else sized
-    if (observed > maxFpp)
-      throw new IllegalStateException(
-        f"bloom index at $indexDir is saturated: expectedFpp=$observed%.2e > " +
-        f"$maxFpp%.2e after $total inserts into capacity $sized — rebuild with " +
-        "decontamBloomWrite over the full eval union")
-    observed
-  }
-
-  /** Serve contamination checks for train corpora from a PERSISTED
-    * bloom index — see [[decontaminateBloomServed]] for the shape.
-    * External corpora are served UNFILTERED: the eval-stride exclusion
-    * only makes sense when the corpus dir IS the dir the eval slice was
-    * carved from (the in-session shape below); an external train corpus
-    * has no eval docs to exclude, and skipping `doc_id % 50 == 0` there
-    * would silently leave 1-in-50 train docs without a verdict. */
-  def decontamBloomServe(s: SparkSession, indexDir: String, corpusDirs: Seq[String]): DataFrame = {
-    val meta = IndexMaintenance.read(s, indexDir, "bloom").head()
-    val bloom = bloomOf(meta)
-    val sized = meta.getAs[Long]("n_items")
-    val total = if (meta.schema.fieldNames.contains("total_items"))
-      meta.getAs[Long]("total_items") else sized
-    if (total > sized)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"decontamBloomServe: index at $indexDir holds $total inserted items but was " +
-        s"sized for $sized — actual FP rate exceeds the recorded fpp; rebuild with " +
-        "decontamBloomWrite over the full eval union")
-    val docs = corpusDirs.map(Tables(s, _, "documents")).reduce(_ unionByName _)
-    serveBloom(docs, bloom, excludeEvalDocs = false)
-  }
-
-  /** Bloom-served decontamination — the SERVING shape of
-    * [[decontaminateNgram]], two-tier: the eval set
-    * compresses into a few-hundred-KB Bloom filter that rides with the
-    * plan, and the corpus-side SCREEN is `size(filter(shingles,
-    * bloom))` — a pure scan-local projection. NO join, NO shuffle for
-    * the overwhelmingly-clean bulk: at 100 TB the contamination pass
-    * is a map-only scan, where the exact equi-join shuffles every
-    * corpus shingle. The tiny FLAGGED slice (docs with ≥1 maybe-hit —
-    * the bloom has no false negatives) then equi-joins the eval-sized
-    * shingle set to confirm and count true overlaps, so the output is
-    * BIT-IDENTICAL to the exact join — which upgraded this query from
-    * rows-only+self-check to a full DuckDB oracle (the exact-join
-    * restatement) without touching the scale shape: screen cost is
-    * unchanged, and the confirm join's left side is the flagged slice,
-    * not the corpus. */
-  def decontaminateBloomServed(s: SparkSession, dir: String): DataFrame = {
-    val flagged = serveBloom(Tables(s, dir, "documents"), evalBloom(s, dir),
-        excludeEvalDocs = true)
-      .filter(col("n_maybe_shared") > 0)
-      .select(col("doc_id"))
-      .join(Tables(s, dir, "documents"), "doc_id")
-      .select(col("doc_id"),
-        explode(graft.plans.VectorFunctions.word_shingle_hashes(
-          col("text"), contamShingleN)).as("h"))
-      .join(evalShingleHashes(s, dir), "h")
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("h")).as("n_shared"))
-    Tables(s, dir, "documents")
-      .filter(col("doc_id") % evalStride =!= 0)
-      .select(col("doc_id"))
-      .join(flagged, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("n_shared"), lit(0L)).as("n_shared"),
-        (coalesce(col("n_shared"), lit(0L)) > 0).as("is_contaminated"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** `excludeEvalDocs` drops the `doc_id % evalStride == 0` rows — ONLY
-    * correct when `docs` is the same dir the eval slice was carved from
-    * (checking eval docs against their own shingles is vacuous). */
-  private def serveBloom(docs: DataFrame,
-      bloom: org.apache.spark.util.sketch.BloomFilter,
-      excludeEvalDocs: Boolean): DataFrame =
-    (if (excludeEvalDocs) docs.filter(col("doc_id") % evalStride =!= 0) else docs)
-      .select(col("doc_id"),
-        size(filter(
-          graft.plans.VectorFunctions.word_shingle_hashes(col("text"), contamShingleN),
-          h => graft.plans.VectorFunctions.bloom_might_contain(h, bloom)))
-          .cast("long").as("n_maybe_shared"))
-      .withColumn("is_contaminated", col("n_maybe_shared") > 0)
-      .orderBy(col("doc_id"))
+  /** The registered decontamination serve: [[decontamServeTwoTier]]
+    * over `dir`'s own build-once index ([[decontamIndexFor]]). */
+  def decontaminateBloomServed(s: SparkSession, dir: String): DataFrame =
+    decontamServeTwoTier(s, decontamIndexFor(s, dir), dir)
 
   /** Corpus-composition "dataset card": per (source, lang) document and
     * token counts, each cell's share of all corpus tokens — the first

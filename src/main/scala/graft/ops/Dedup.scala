@@ -504,42 +504,6 @@ object Dedup {
     * oracle generator and [[graft.streaming.IngestDedup]] share it. */
   val ingestBatches = 3
 
-  /** Incremental (landing-zone) dedup: flag each NEW-batch doc that
-    * near-duplicates any doc already in the corpus — the nightly-crawl
-    * shape, asymmetric where `dedupSimhash` is a self-join. Exact dups
-    * are subsumed (identical text ⇒ identical signature ⇒ hamming 0).
-    *
-    * Scale shape: on a real deployment the corpus's banded signature
-    * table is computed once and stored (here it is the memoized
-    * signature cache) — the incremental cost is hashing the batch plus
-    * ONE equi-join on (band, byte), with the batch side small enough
-    * that AQE broadcasts it; the 100 TB corpus side never reshuffles.
-    * Every batch doc is returned (is_dup=false for clean ones), so the
-    * operator composes directly with an append sink. */
-  def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val banded = simBandedCached(s, dir)
-    incrementalAgainst(
-      Tables(s, dir, "documents").filter(col("doc_id") % batchMod === 0),
-      banded.filter(col("doc_id") % batchMod === 0),
-      banded.filter(col("doc_id") % batchMod =!= 0))
-  }
-
-  /** Path-based incremental dedup — the real landing-zone API the
-    * modulo split above stands in for: `batchDir` holds the incoming
-    * crawl's `documents.parquet` (e.g. a directory the streaming ingest
-    * sink appends to), `corpusDir` the already-ingested corpus. Same
-    * asymmetric banded join, but the corpus signature table is memoized
-    * PER PATH — the standing artifact a deployment computes once per
-    * ingest generation, while each new batch pays only its own hashing
-    * plus one (band, byte) equi-join (batch side broadcastable). The
-    * equivalence spec pins this against a full recompute over the
-    * physical union of both directories. */
-  def dedupIncrementalPaths(s: SparkSession, batchDir: String, corpusDir: String): DataFrame = {
-    val batchDocs = Tables(s, batchDir, "documents")
-    incrementalAgainst(batchDocs, simBandsOf(simSigOf(batchDocs)),
-      simBandedCached(s, corpusDir))
-  }
-
   /** Persist the corpus's simhash signature table (doc_id, simhash) —
     * the standing dedup artifact of a 100 TB deployment: ~14 bytes/doc
     * instead of the documents themselves, so the nightly incremental
@@ -611,15 +575,34 @@ object Dedup {
     (before, after.map(a => stores.map(a.filesOf(_).size).sum).getOrElse(0))
   }
 
-  /** Landing-zone near-dup check against a PERSISTED signature index:
-    * the batch is hashed fresh; the corpus side is the signature parquet
-    * only. Same asymmetric (band, byte) equi-join as the path form —
-    * signatures are deterministic, so the result is byte-identical to
-    * recomputing from corpus text (pinned in `DedupSimilaritySpec`). */
+  /** Incremental (landing-zone) dedup against a PERSISTED signature
+    * index: flag each doc of `batchDir` that near-duplicates any doc
+    * already in the corpus — the nightly-crawl shape, asymmetric where
+    * `dedupSimhash` is a self-join. Exact dups are subsumed (identical
+    * text ⇒ identical signature ⇒ hamming 0). The batch is hashed
+    * fresh; the corpus side is the signature parquet only, never corpus
+    * text, so each batch pays its own hashing plus ONE (band, byte)
+    * equi-join with the batch side small enough that AQE broadcasts
+    * it. Signatures are deterministic, so the result equals a recompute
+    * from corpus text (pinned in `DedupSimilaritySpec`). Every batch
+    * doc is returned (is_dup=false for clean ones), so the result
+    * composes with an append sink. */
   def dedupIncrementalIndexed(s: SparkSession, batchDir: String, indexDir: String): DataFrame = {
     val batchDocs = Tables(s, batchDir, "documents")
-    incrementalAgainst(batchDocs, simBandsOf(simSigOf(batchDocs)),
-      simBandsOf(readSigIndex(s, indexDir)))
+    val near = simBandsOf(simSigOf(batchDocs)).as("x")
+      .join(simBandsOf(readSigIndex(s, indexDir)).as("y"),
+        col("x.band") === col("y.band") && col("x.bval") === col("y.bval"))
+      .withColumn("hamming",
+        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long"))
+      .filter(col("hamming") <= hammingThreshold)
+      .groupBy(col("x.doc_id").as("doc_id"))
+      .agg(min(col("y.doc_id")).as("dup_of"), min(col("hamming")).as("min_hamming"))
+    batchDocs
+      .select(col("doc_id"))
+      .join(near, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("dup_of").isNotNull.as("is_dup"),
+        col("dup_of"), col("min_hamming"))
+      .orderBy(col("doc_id"))
   }
 
   /** The signature index with pending tombstones filtered — every
@@ -902,8 +885,7 @@ object Dedup {
           org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("simhash", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("tmd5", org.apache.spark.sql.types.StringType))))))
-    Curation.decontamBloomWrite(s, evalDir, indexDir)
-    Curation.decontamShingleWrite(s, evalDir, indexDir)
+    Curation.decontamIndexWrite(s, evalDir, indexDir)
   }
 
   /** Seed an EMPTY signature index (stream-from-scratch ingest; the
@@ -915,12 +897,12 @@ object Dedup {
           org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))))))
 
-  /** Registered-query form: split the corpus into the modulo landing
-    * batch and standing corpus ONCE per (JVM, corpus) (a standing temp
-    * dir), persist the standing side's signature index, and run the
-    * indexed check — byte-identical to [[dedupIncremental]], so it
-    * shares its DuckDB oracle. Bench reps measure the true incremental
-    * cost: batch hashing + one equi-join against the signature parquet. */
+  /** Registered-query form of [[dedupIncrementalIndexed]]: split the
+    * corpus into the modulo landing batch ([[batchMod]]) and standing
+    * corpus ONCE per (JVM, corpus) (a standing temp dir), persist the
+    * standing side's signature index, and run the indexed check. Bench
+    * reps measure the true incremental cost: batch hashing + one
+    * equi-join against the signature parquet. */
   def dedupIncrementalIndexedQuery(s: SparkSession, dir: String): DataFrame = {
     val root = Artifacts.tempDir(s"dedup-index|$dir") {
       val d = java.nio.file.Files.createTempDirectory("graft-dedup-index").toString
@@ -933,27 +915,6 @@ object Dedup {
       d
     }
     dedupIncrementalIndexed(s, s"$root/batch", s"$root/index")
-  }
-
-  /** The asymmetric near-dup join shared by both incremental forms: flag
-    * each batch doc whose signature lands within [[hammingThreshold]] of
-    * any corpus signature; every batch doc is returned (is_dup=false for
-    * clean ones) so the result composes with an append sink. */
-  private def incrementalAgainst(batchDocs: DataFrame,
-      batch: DataFrame, corpus: DataFrame): DataFrame = {
-    val near = batch.as("x").join(corpus.as("y"),
-        col("x.band") === col("y.band") && col("x.bval") === col("y.bval"))
-      .withColumn("hamming",
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long"))
-      .filter(col("hamming") <= hammingThreshold)
-      .groupBy(col("x.doc_id").as("doc_id"))
-      .agg(min(col("y.doc_id")).as("dup_of"), min(col("hamming")).as("min_hamming"))
-    batchDocs
-      .select(col("doc_id"))
-      .join(near, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_of").isNotNull.as("is_dup"),
-        col("dup_of"), col("min_hamming"))
-      .orderBy(col("doc_id"))
   }
 
   /** The exact all-pairs cosine variant refuses corpora above this row
@@ -1502,7 +1463,7 @@ object Dedup {
     "dedup_ngram_jaccard" -> dedupNgramJaccard _,
     "dedup_minhash_lsh" -> dedupMinhashLsh _,
     "dedup_simhash" -> dedupSimhash _,
-    "dedup_incremental" -> dedupIncremental _,
+    "dedup_incremental" -> dedupIncrementalIndexedQuery _,
     "dedup_incremental_indexed" -> dedupIncrementalIndexedQuery _,
     "dedup_clusters" -> dedupClusters _,
     "dedup_embedding_cosine" -> dedupEmbeddingCosine _,

@@ -436,38 +436,36 @@ object TextAnalysis {
   def textBpeTrainScaledQuery(s: SparkSession, dir: String): DataFrame =
     textBpeTrainScaled(s, dir, bpeScaledTrainMerges, checkpointEvery = 1)
 
-  /** Learned merge table, memoized per (session, corpus) so the three
-    * BPE queries (train / encode / token-freq) train ONCE per session:
-    * [[textBpeTrain]] is eager (the merge loop collects its argmax per
-    * step), so memoizing the bounded [[bpeTrainMerges]]-row output
-    * frame memoizes the training work itself. */
+  /** Learned merge table, memoized per (session, corpus) so the
+    * registered trainer and the model write ([[bpeModelFor]]) train
+    * ONCE per session: [[textBpeTrain]] is eager (the merge loop
+    * collects its argmax per step), so memoizing the bounded
+    * [[bpeTrainMerges]]-row output frame memoizes the training work
+    * itself. */
   private[graft] def bpeMergesDf(s: SparkSession, dir: String): DataFrame =
     Artifacts.frame(s, s"$dir|bpe_merges")(textBpeTrain(s, dir))
 
-  /** ENCODED VOCABULARY — every distinct word of the corpus with its
-    * BPE segmentation under the learned merge table, `(word, w, freq)`
-    * where `w` is the space-joined symbol sequence. This is where the
-    * 100 TB scale story of BPE ENCODING lives: merges are applied to
-    * word TYPES (a vocabulary — millions of rows), never to the
+  /** ENCODED VOCABULARY — every distinct word of `dir` with its BPE
+    * segmentation under the PERSISTED model at `modelDir`, `(word, w,
+    * freq)` where `w` is the space-joined symbol sequence. This is where
+    * the 100 TB scale story of BPE ENCODING lives: merges are applied
+    * to word TYPES (a vocabulary — millions of rows), never to the
     * trillions of corpus tokens; the corpus pays one word-frequency
-    * aggregation (already needed for training) plus, per consumer, a
-    * hash join back from words to their encodings. The apply is the
-    * merge-ordered chain of boundary-anchored two-pass replaces —
-    * operation-for-operation the trainer's own apply
-    * ([[textBpeTrain]]'s scaladoc explains the two-pass fixed point),
-    * so the encoded vocabulary here is bit-identical to the trainer's
-    * final internal state and to the DuckDB oracle's `s{K}` CTE. All
-    * [[bpeTrainMerges]] replaces fold into ONE projection over the
-    * vocabulary (no per-merge driver round-trip beyond training's
-    * own), memoized per (session, corpus) for the queries that share
-    * it. */
-  private[graft] def bpeEncodedVocab(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, s"$dir|bpe_encoded_vocab") {
-      val merges = bpeMergesDf(s, dir).select(col("step"), col("lhs"), col("rhs"))
-        .orderBy(col("step")).collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      bpeApplyMerges(bpeWordVocab(s, dir), merges)
-    }
+    * aggregation plus, per consumer, a hash join back from words to
+    * their encodings. The merges are a bounded artifact read (one row
+    * per merge), applied through [[bpeApplyDispatch]] — for the demo
+    * trainer's own model ([[bpeModelFor]]) the merge-ordered chain of
+    * boundary-anchored two-pass replaces, operation-for-operation the
+    * trainer's apply ([[textBpeTrain]]'s scaladoc explains the two-pass
+    * fixed point), so the vocabulary is bit-identical to the trainer's
+    * final internal state and to the DuckDB oracle's `s{K}` CTE. The
+    * authority is the FILE: a hand-edited merge table changes the
+    * output (no retraining sneaks in). Memoized per (session, corpus,
+    * model) — the one vocabulary every BPE encode consumer reads. */
+  private[graft] def bpeEncodedVocab(s: SparkSession, dir: String, modelDir: String): DataFrame =
+    Artifacts.frame(s, s"$dir|bpe_encoded_vocab@$modelDir")(
+      bpeApplyDispatch(bpeWordVocab(s, dir), bpeModelMerges(s, modelDir),
+        bpeModelApplyForm(s, modelDir)))
 
   /** The corpus word-frequency vocabulary with the word kept:
     * `(word, w, freq)`, `w` the split-symbol form. */
@@ -593,7 +591,8 @@ object TextAnalysis {
     if (merges.size <= bpeReplaceChainMax) bpeApplyMerges(words, merges)
     else bpeApplyMergesScaled(words, merges)
 
-  /** BPE ENCODE — apply the trained tokenizer to the corpus: per-doc
+  /** BPE ENCODE — apply the corpus-trained tokenizer, persisted once
+    * per (JVM, corpus) as [[bpeModelFor]], to the corpus: per-doc
     * token counts under the learned merge table, the number every
     * downstream packing / token-budget / mixing step actually needs
     * (whitespace-token counts under- or over-state a real tokenizer's
@@ -604,7 +603,7 @@ object TextAnalysis {
     * tokenizer achieves on that doc (0.0 for token-less docs).
     *
     * Scale shape: encoding runs on the VOCABULARY once
-    * ([[bpeEncodedVocab]]); the corpus side is one explode + hash join
+    * ([[bpeEncodedVocab]]), under the bounded model read; the corpus side is one explode + hash join
     * on `word` + per-doc aggregation — partial aggregation applies,
     * nothing corpus-sized crosses the driver, and the join key is the
     * word (Zipf-distributed, but the heavy words are few and the
@@ -645,10 +644,9 @@ object TextAnalysis {
     * the same cache weight class as the dedup shingle memos. */
   private[ops] def bpeDocCounts(s: SparkSession, dir: String): DataFrame =
     Artifacts.frame(s, s"$dir|bpe_doc_counts")(
-      bpeDocCountsWith(s, dir, bpeEncodedVocab(s, dir)))
+      bpeDocCountsWith(s, dir, bpeEncodedVocab(s, dir, bpeModelFor(s, dir))))
 
-  /** [[bpeDocCounts]] under an explicit encoded vocabulary (the served
-    * form passes the persisted model's apply). */
+  /** [[bpeDocCounts]] under an explicit encoded vocabulary. */
   private def bpeDocCountsWith(s: SparkSession, dir: String,
       vocab: DataFrame): DataFrame = {
     val enc = vocab
@@ -749,18 +747,11 @@ object TextAnalysis {
       .select(col("step"), col("lhs"), col("rhs")).orderBy(col("step"))
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
 
-  /** SERVED BPE encode — [[textBpeEncode]]'s plan with the training
-    * replaced by a bounded artifact read: per-doc token counts over
-    * `dir` under the PERSISTED model at `modelDir`, whatever corpus
-    * that model was trained on. The authority is the FILE: the spec's
-    * doctored-model arm pins that a hand-edited merge table changes the
-    * output (no retraining sneaks in). */
-  def textBpeEncodeServed(s: SparkSession, dir: String, modelDir: String): DataFrame = {
-    val vocab = Artifacts.frame(s, s"$dir|bpe_encoded_vocab@$modelDir")(
-      bpeApplyDispatch(bpeWordVocab(s, dir), bpeModelMerges(s, modelDir),
-        bpeModelApplyForm(s, modelDir)))
-    bpeEncodePresentation(bpeDocCountsWith(s, dir, vocab))
-  }
+  /** [[textBpeEncode]] under ANY persisted model: per-doc token counts
+    * over `dir` under the model at `modelDir`, whatever corpus that
+    * model was trained on. */
+  def textBpeEncodeServed(s: SparkSession, dir: String, modelDir: String): DataFrame =
+    bpeEncodePresentation(bpeDocCountsWith(s, dir, bpeEncodedVocab(s, dir, modelDir)))
 
   /** Per-source `(source, n_docs, n_tokens)` of a DOCUMENT FRAME under
     * an explicit merge list — the streaming token ledger's per-trigger
@@ -791,22 +782,14 @@ object TextAnalysis {
   }
 
   /** The persisted tokenizer model for `dir`, written once per (JVM,
-    * corpus) as a standing [[Artifacts]] temp dir — the served-encode
-    * registered query's artifact, mirroring [[textIndexFor]]. */
+    * corpus) as a standing [[Artifacts]] temp dir — the model every
+    * registered encode consumer reads, mirroring [[textIndexFor]]. */
   private[graft] def bpeModelFor(s: SparkSession, dir: String): String =
     Artifacts.tempDir(s"bpe-model|$dir") {
       val d = java.nio.file.Files.createTempDirectory("graft-bpe-model").toString
       bpeModelWrite(s, dir, d)
       d
     }
-
-  /** Registered-query form of [[textBpeEncodeServed]]: the model is the
-    * demo trainer's own merge table persisted once per session, so the
-    * result is byte-identical to [[textBpeEncode]] and shares its
-    * oracle — what the oracle then checks is the artifact round-trip
-    * (train → write → read → apply). */
-  def textBpeEncodeServedQuery(s: SparkSession, dir: String): DataFrame =
-    textBpeEncodeServed(s, dir, bpeModelFor(s, dir))
 
   /** The persisted SCALED tokenizer artifact for `dir`: the
     * production write path ([[bpeModelWriteScaled]]) at the gate merge
@@ -842,7 +825,7 @@ object TextAnalysis {
     * Σ_word freq(word)·|encode(word)| = Σ_doc n_tokens(doc) is pinned
     * against [[textBpeEncode]] in `BpeTrainSpec`. */
   def textBpeTokenFreq(s: SparkSession, dir: String): DataFrame =
-    bpeEncodedVocab(s, dir)
+    bpeEncodedVocab(s, dir, bpeModelFor(s, dir))
       .select(explode(split(col("w"), " ")).as("token"), col("freq"))
       .groupBy(col("token")).agg(sum(col("freq")).cast("long").as("freq"))
       .orderBy(col("freq").desc, col("token"))
@@ -2243,7 +2226,7 @@ object TextAnalysis {
     "text_bpe_train" -> bpeMergesDf _,
     "text_bpe_train_scaled" -> textBpeTrainScaledQuery _,
     "text_bpe_encode" -> textBpeEncode _,
-    "text_bpe_encode_served" -> textBpeEncodeServedQuery _,
+    "text_bpe_encode_served" -> textBpeEncode _,
     "text_bpe_encode_scaled_served" -> textBpeEncodeScaledServedQuery _,
     "text_bpe_token_freq" -> textBpeTokenFreq _,
     "text_bm25_filtered" -> textBm25FilteredQuery _,

@@ -35,8 +35,8 @@ object DecontamIngest {
 
   /** Drive the landing stream: one eval-document file per micro-batch,
     * oldest first, folded into the persisted contamination index at
-    * `indexDir` (seeded by [[Curation.decontamBloomWrite]] +
-    * [[Curation.decontamShingleWrite]] over the standing eval set). */
+    * `indexDir` (seeded by [[Curation.decontamIndexWrite]] over the
+    * standing eval set). */
   def streamDecontamIngestToFiles(s: SparkSession, landingDir: String, indexDir: String,
       checkpointDir: String): Unit = {
     val lineage = IndexMaintenance.lineageTag(checkpointDir)
@@ -56,8 +56,8 @@ object DecontamIngest {
     * in as landing files, then run the two-tier contamination check
     * over the train slice from the GROWN index. Because the grown
     * index covers the full eval slice and the exact-confirm tier
-    * absorbs bloom false positives, the output is bit-identical to the
-    * in-session `decontaminate_bloom_served` — same oracle, now also
+    * absorbs bloom false positives, the output is bit-identical to
+    * `decontaminate_bloom_served` — same oracle, now also
     * checking that the ingest loop grew both tiers correctly (a missed
     * shingle batch would under-flag and hash-mismatch). */
   def streamDecontamIngest(s: SparkSession, dir: String): DataFrame = {
@@ -70,8 +70,7 @@ object DecontamIngest {
       val proto = IngestDedup.prototype(s, s"$dir|decontamingest-seed") { p =>
         eval.filter(pmod(col("doc_id"), lit(IngestDedup.ingestBatches.toLong)) === 0)
           .write.mode("overwrite").parquet(s"$p/seed/documents.parquet")
-        Curation.decontamBloomWrite(s, s"$p/seed", s"$p/index")
-        Curation.decontamShingleWrite(s, s"$p/seed", s"$p/index")
+        Curation.decontamIndexWrite(s, s"$p/seed", s"$p/index")
       }
       IngestDedup.copyDir(s, s"$proto/index", s"$root/index")
     }
@@ -84,7 +83,7 @@ object DecontamIngest {
   )
 
   val oracles: Map[String, String] = Map(
-    // bit-identical to the in-session two-tier serve (see above)
+    // bit-identical to the registered two-tier serve (see above)
     "stream_decontam_ingest" -> Curation.oracles("decontaminate_bloom_served")
   )
 }

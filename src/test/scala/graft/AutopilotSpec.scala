@@ -84,8 +84,7 @@ class AutopilotSpec extends AnyFunSuite {
     (1L to 4L).map(i => evalDoc(i * Curation.evalStride, "seed"))
       .toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$tmp/eval/documents.parquet")
-    Curation.decontamBloomWrite(spark, s"$tmp/eval", s"$tmp/idx")
-    Curation.decontamShingleWrite(spark, s"$tmp/eval", s"$tmp/idx")
+    Curation.decontamIndexWrite(spark, s"$tmp/eval", s"$tmp/idx")
     def sat(): Double = {
       val m = spark.read.parquet(s"$tmp/idx/bloom")
         .select(col("n_items"), col("total_items")).head()
@@ -118,8 +117,7 @@ class AutopilotSpec extends AnyFunSuite {
     (1L to 4L).map(i => evalDoc(i * Curation.evalStride, "seed"))
       .toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$tmp/eval/documents.parquet")
-    Curation.decontamBloomWrite(spark, s"$tmp/eval", s"$tmp/idx")
-    Curation.decontamShingleWrite(spark, s"$tmp/eval", s"$tmp/idx")
+    Curation.decontamIndexWrite(spark, s"$tmp/eval", s"$tmp/idx")
     // strip total_items — the pre-upgrade schema, committed without
     // the bloom counters
     graft.ops.IndexMaintenance.replace(spark, s"$tmp/idx", Seq("bloom" ->
@@ -172,8 +170,7 @@ class AutopilotSpec extends AnyFunSuite {
         (0 until 20).map(w => s"ev${i}w$w").mkString(" "), "en", "s"))
       .toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$tmp/eval/documents.parquet")
-    Curation.decontamBloomWrite(spark, s"$tmp/eval", s"$tmp/idx")
-    Curation.decontamShingleWrite(spark, s"$tmp/eval", s"$tmp/idx")
+    Curation.decontamIndexWrite(spark, s"$tmp/eval", s"$tmp/idx")
     val d3 = decisions(Autopilot.indexAutopilot(spark, s"$tmp/idx"))
     assert(d3.map(_._1).toSet == Set("decontam", "signature"),
       s"dual-family dir must report both families: $d3")
@@ -215,8 +212,7 @@ class AutopilotSpec extends AnyFunSuite {
         (0 until 20).map(w => s"s${i}w$w").mkString(" "), "en", "s"))
       .toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$tmp3/eval/documents.parquet")
-    graft.ops.Curation.decontamBloomWrite(spark, s"$tmp3/eval", s"$tmp3/idx")
-    graft.ops.Curation.decontamShingleWrite(spark, s"$tmp3/eval", s"$tmp3/idx")
+    graft.ops.Curation.decontamIndexWrite(spark, s"$tmp3/eval", s"$tmp3/idx")
     assert(!Autopilot.maintenanceDue(spark, Seq(s"$tmp3/idx")),
       "fresh bloom reported saturated")
     // fabricate an external rewrite claiming saturation 2.0

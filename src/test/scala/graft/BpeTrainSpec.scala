@@ -154,6 +154,27 @@ class BpeTrainSpec extends AnyFunSuite {
     w.split(" ").toSeq
   }
 
+  /** Per-doc `(doc_id, n_words, n_tokens, chars_per_token)` of the
+    * corpus at `dir` under [[referenceEncode]] of `merges`, computed on
+    * the driver from the raw documents — the encode queries' contract,
+    * restated without Spark. */
+  private def referenceDocs(dir: String,
+      merges: Seq[(String, String)]): Seq[(Long, Long, Long, Double)] =
+    spark.read.parquet(s"$dir/documents.parquet").selectExpr("doc_id", "text").collect()
+      .map { r =>
+        val ws = Option(r.getString(1)).getOrElse("")
+          .split(graft.functions.TextFns.WhitespaceRegex).filter(_.nonEmpty).toSeq
+        val nTok = ws.map(referenceEncode(_, merges).size.toLong).sum
+        val chars = ws.map(_.length.toLong).sum
+        val cpt = if (nTok == 0) 0.0
+          else BigDecimal(chars.toDouble / nTok.toDouble)
+            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        (r.getLong(0), ws.size.toLong, nTok, cpt)
+      }.sortBy(_._1).toSeq
+
+  private def encodeRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+
   test("encode + token-freq match the in-memory reference on a planted corpus") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("bpe-encode").toString
@@ -208,7 +229,7 @@ class BpeTrainSpec extends AnyFunSuite {
     // Σ_word freq·|encode(word)| == Σ_doc n_tokens — the vocabulary-side
     // identity textBpeTokenFreq's scaladoc promises (full distribution,
     // not the top-k slice)
-    val vocabTokens = TextAnalysis.bpeEncodedVocab(spark, dir)
+    val vocabTokens = TextAnalysis.bpeEncodedVocab(spark, dir, TextAnalysis.bpeModelFor(spark, dir))
       .selectExpr("sum(freq * size(split(w, ' ')))").collect()(0).getLong(0)
     assert(vocabTokens == enc.map(_.getLong(2)).sum,
       "vocabulary-weighted token mass != per-doc token mass")
@@ -220,10 +241,14 @@ class BpeTrainSpec extends AnyFunSuite {
   test("served encode follows the persisted artifact: identity on own model, divergence on a doctored one") {
     import spark.implicits._
     val dir = TestSpark.sf0001
-    // own model: train -> write -> read -> apply is byte-identical to the scan form
-    val scan = TextAnalysis.textBpeEncode(spark, dir).collect().map(_.toString).toSeq
-    val served = TextAnalysis.textBpeEncodeServedQuery(spark, dir).collect().map(_.toString).toSeq
-    assert(scan == served, "served encode diverged from the scan encode under the same model")
+    // own model: train -> write -> read -> apply equals the in-memory
+    // reference encode under the trained merge table, doc for doc
+    val trainedMerges = TextAnalysis.bpeMergesDf(spark, dir)
+      .orderBy(org.apache.spark.sql.functions.col("step")).collect()
+      .map(r => (r.getString(1), r.getString(2))).toSeq
+    val served = encodeRows(SparkEntry.queries("text_bpe_encode_served")(spark, dir))
+    assert(served.nonEmpty && served == referenceDocs(dir, trainedMerges),
+      "served encode diverged from the reference encode under its own model")
     // doctored model: persist a TRUNCATED merge table (first trained
     // merge only); the serve must follow the FILE (no retraining) —
     // counts match the in-memory reference under exactly that one merge,
@@ -398,16 +423,19 @@ class BpeTrainSpec extends AnyFunSuite {
         .toDF("doc_id", "text", "lang", "source")
         .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     write(Seq("low lower lowest low low", "new newer newest new"))
-    val v1 = TextAnalysis.textBpeEncodeServedQuery(spark, tmp).collect().map(_.toString).toSeq
-    assert(v1 == TextAnalysis.textBpeEncode(spark, tmp).collect().map(_.toString).toSeq)
+    def words(texts: Seq[String]) = texts.flatMap(_.split("\\s+"))
+    def reference(texts: Seq[String]) = referenceDocs(tmp,
+      referenceBpe(words(texts), TextAnalysis.bpeTrainMerges).map { case (_, l, r, _, _) => (l, r) })
+    val v1 = encodeRows(SparkEntry.queries("text_bpe_encode_served")(spark, tmp))
+    assert(v1 == reference(Seq("low lower lowest low low", "new newer newest new")))
     // replace the corpus files at the SAME path — the library contract
     // says call clear(); afterwards the served query must serve the
     // RETRAINED model, not the pre-swap frozen artifact (r13 advice)
-    write(Seq("wide wider widest wide wide", "west western wests", "ban banana bananas"))
+    val swapped = Seq("wide wider widest wide wide", "west western wests", "ban banana bananas")
+    write(swapped)
     graft.ops.Artifacts.clear()
-    val v2served = TextAnalysis.textBpeEncodeServedQuery(spark, tmp).collect().map(_.toString).toSeq
-    val v2scan = TextAnalysis.textBpeEncode(spark, tmp).collect().map(_.toString).toSeq
-    assert(v2served == v2scan,
+    val v2served = encodeRows(SparkEntry.queries("text_bpe_encode_served")(spark, tmp))
+    assert(v2served == reference(swapped),
       "after corpus swap + clear(), the served encode still used the stale frozen model")
     assert(v2served != v1, "swap arm proves nothing — the two corpora encode identically")
   }

@@ -4,15 +4,41 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.{Curation, IndexMaintenance}
 
-/** Streaming eval-set ingest: the grown contamination index serves
-  * bit-identically to the in-session two-tier check, redelivery folds
-  * nothing twice, and retracting the streamed eval docs rolls the
-  * verdicts back to the seed's. */
+/** The contamination index: one write commits both tiers at once, the
+  * grown index serves bit-identically to the exact shingle join,
+  * redelivery folds nothing twice, and retracting the streamed eval
+  * docs rolls the verdicts back to the seed's. */
 class DecontamIngestSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import TestSpark.sf0001
 
-  test("streaming eval ingest: grown index == in-session serve; redelivery appends nothing; retraction rolls back") {
+  test("decontamIndexWrite commits the bloom and the eval shingle table in one log version") {
+    val idx = java.nio.file.Files.createTempDirectory("decontam-write").toString
+    def versions(): Seq[java.io.File] = new java.io.File(s"$idx/_log").listFiles()
+      .filter(_.getName.matches("\\d{20}\\.json")).sortBy(_.getName).toSeq
+    def tablesOf(v: java.io.File): Set[String] = {
+      val src = scala.io.Source.fromFile(v)
+      try src.getLines().filter(_.contains("\"add\""))
+        .flatMap("\"table\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(_).map(_.group(1))).toSet
+      finally src.close()
+    }
+    Curation.decontamIndexWrite(spark, sf0001, idx)
+    assert(versions().size == 1, s"a fresh write committed ${versions().size} log versions")
+    assert(tablesOf(versions().head) == Set("bloom", "eval_shingles"),
+      s"the one version holds ${tablesOf(versions().head)}")
+    // a rewrite over a standing index is one more version replacing both
+    val before = IndexMaintenance.snapshot(spark, idx)
+    Curation.decontamIndexWrite(spark, sf0001, idx)
+    val after = IndexMaintenance.snapshot(spark, idx)
+    assert(versions().size == 2 && after.version == before.version + 1,
+      s"a rewrite moved the log from v${before.version} to v${after.version}")
+    assert(tablesOf(versions().last) == Set("bloom", "eval_shingles"))
+    Seq("bloom", "eval_shingles").foreach(t => assert(
+      after.filesOf(t).nonEmpty && after.filesOf(t).toSet.intersect(before.filesOf(t).toSet).isEmpty,
+      s"the rewrite did not replace $t"))
+  }
+
+  test("streaming eval ingest: grown index == exact shingle join; redelivery appends nothing; retraction rolls back") {
     val dir = sf0001
     val r = java.nio.file.Files.createTempDirectory("decontam-ingest-spec").toString
     val eval = Tables(spark, dir, "documents")
@@ -20,8 +46,7 @@ class DecontamIngestSpec extends AnyFunSuite {
     // seed = mod-0 third of the eval slice; land the other two thirds
     eval.filter(pmod(col("doc_id"), lit(3)) === 0)
       .write.mode("overwrite").parquet(s"$r/seed/documents.parquet")
-    Curation.decontamBloomWrite(spark, s"$r/seed", s"$r/index")
-    Curation.decontamShingleWrite(spark, s"$r/seed", s"$r/index")
+    Curation.decontamIndexWrite(spark, s"$r/seed", s"$r/index")
     val streamedIds = new scala.collection.mutable.ArrayBuffer[Long]()
     (1 to 2).foreach { b =>
       val slice = eval.filter(pmod(col("doc_id"), lit(3)) === b)
@@ -41,10 +66,11 @@ class DecontamIngestSpec extends AnyFunSuite {
     def serveOf(idx: String) = Curation.decontamServeTwoTier(spark, idx, dir)
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getBoolean(2))).toSeq
     val grown = serveOf(s"$r/index")
-    val insession = Curation.decontaminateBloomServed(spark, dir)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getBoolean(2))).toSeq
-    assert(grown.nonEmpty && grown === insession,
-      "grown contamination index diverged from the in-session two-tier check")
+    // the independent reference: the exact train x eval shingle join
+    val exact = Curation.decontaminateNgram(spark, dir)
+      .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(1) > 0)).toSeq
+    assert(grown.nonEmpty && exact.exists(_._3) && grown === exact,
+      "grown contamination index diverged from the exact shingle join")
 
     // TRUE redelivery: marker skips the re-presented batch in BOTH tiers
     val before = spark.read.parquet(s"$r/index/eval_shingles").count()
@@ -69,8 +95,7 @@ class DecontamIngestSpec extends AnyFunSuite {
     // seed-only index's (exact tier immediately; the stale bloom bits
     // are absorbed by the confirm join)
     Curation.decontamIndexDelete(spark, s"$r/index", streamedIds.toSeq)
-    Curation.decontamBloomWrite(spark, s"$r/seed", s"$r/seedidx")
-    Curation.decontamShingleWrite(spark, s"$r/seed", s"$r/seedidx")
+    Curation.decontamIndexWrite(spark, s"$r/seed", s"$r/seedidx")
     assert(serveOf(s"$r/index") === serveOf(s"$r/seedidx"),
       "retracting the streamed eval docs did not roll back to the seed verdicts")
   }
@@ -89,8 +114,7 @@ class DecontamIngestSpec extends AnyFunSuite {
     (1L to 4L).map(i => evalDoc(i * Curation.evalStride, "seed"))
       .toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$r/seed/documents.parquet")
-    Curation.decontamBloomWrite(spark, s"$r/seed", s"$r/index")
-    Curation.decontamShingleWrite(spark, s"$r/seed", s"$r/index")
+    Curation.decontamIndexWrite(spark, s"$r/seed", s"$r/index")
     def bloomMeta(): (Long, Long) = {
       val m = spark.read.parquet(s"$r/index/bloom")
         .select(col("n_items"), col("total_items")).head()

@@ -568,7 +568,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(partial.nonEmpty)
   }
 
-  test("dedupIncremental agrees with the symmetric simhash pair set") {
+  test("dedup_incremental agrees with the symmetric simhash pair set") {
     val dir = TestSpark.sf0001
     val pairs = ops.Dedup.dedupSimhash(spark, dir).collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")))
@@ -576,7 +576,7 @@ class OperatorSpec extends AnyFunSuite {
     val expectDup = pairs.flatMap { case (a, b) =>
       Seq(a, b).filter(x => x % m == 0 && (if (x == a) b else a) % m != 0)
     }.toSet
-    val got = ops.Dedup.dedupIncremental(spark, dir).collect()
+    val got = SparkEntry.queries("dedup_incremental")(spark, dir).collect()
       .filter(_.getAs[Boolean]("is_dup")).map(_.getAs[Long]("doc_id")).toSet
     assert(got === expectDup)
   }
@@ -814,55 +814,36 @@ class OperatorSpec extends AnyFunSuite {
     assert(chk.pass, chk.detail)
   }
 
-  test("bloom decontamination: disk-served == in-session; append is idempotent; self-check holds") {
+  test("decontamination index: two-tier serve == exact join; a re-landed eval slice doubles total_items; retraction unflags") {
     import TestSpark.sf0001
+    import graft.ops.Curation
     val idx = java.nio.file.Files.createTempDirectory("bloom-idx").toString
-    graft.ops.Curation.decontamBloomWrite(spark, sf0001, idx)
+    Curation.decontamIndexWrite(spark, sf0001, idx)
     val shape = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getLong(1), r.getBoolean(2))
-    // in-session is two-tier since round 7 (bloom screen + exact
-    // confirm): n_shared is the EXACT overlap, which the disk-served
-    // screen-only read must bound from above with no false negatives
-    val inSession = graft.ops.Curation.decontaminateBloomServed(spark, sf0001)
-      .collect().map(shape).toSeq
-    val fromDisk = graft.ops.Curation.decontamBloomServe(spark, idx, Seq(sf0001))
-      .collect().map(shape).toSeq
-    // external corpora are served UNFILTERED (round-6 advice: the
-    // eval-stride exclusion only applies to the same-dir in-session
-    // shape) — eval rows are present too, mostly self-flagging (their
-    // own shingles are in the filter; only sub-shingle-length docs
-    // don't)
-    val (evalRows, trainRows) =
-      fromDisk.partition(_._1 % graft.ops.Curation.evalStride == 0)
-    val sessionById = inSession.map(t => t._1 -> t).toMap
-    assert(inSession.nonEmpty && trainRows.map(_._1) === inSession.map(_._1),
-      "persisted-bloom serving lost train docs")
-    trainRows.foreach { case (id, maybe, flagged) =>
-      val (_, nShared, contaminated) = sessionById(id)
-      assert(maybe >= nShared, s"doc $id: screen count $maybe < exact $nShared")
-      assert(flagged || !contaminated, s"doc $id: bloom false negative")
-    }
-    assert(evalRows.nonEmpty && evalRows.count(_._3) > evalRows.size / 2,
-      "eval docs served from an external-corpus read must self-flag")
-    // merging the same eval set back in flips no additional bits
+    def served() = Curation.decontamServeTwoTier(spark, idx, sf0001).collect().map(shape).toSeq
+    // the independent reference: the exact train x eval shingle join
+    val exact = Curation.decontaminateNgram(spark, sf0001)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(1) > 0)).toSeq
+    val first = served()
+    assert(exact.exists(_._3), "no contaminated doc on the shared corpus: the comparison is vacuous")
+    assert(first === exact, "the two-tier serve diverged from the exact shingle join")
+    // re-landing the same eval slice through the append path: the served
+    // verdicts stay put, and the counter accumulates ACTUAL inserts (the
+    // write path records the distinct-hash count, not the 1024-floored
+    // capacity) — the same eval set exactly doubles it
     val seedTotal = spark.read.parquet(s"$idx/bloom").head().getAs[Long]("total_items")
-    graft.ops.Curation.decontamBloomAppend(spark, sf0001, idx)
-    val afterAppend = graft.ops.Curation.decontamBloomServe(spark, idx, Seq(sf0001))
-      .collect().map(shape).toSeq
-    assert(afterAppend === fromDisk, "idempotent append changed the served result")
-    // the counter accumulates ACTUAL inserts (round-8 review: the write
-    // path records cnt, not the 1024-floored capacity) — re-appending
-    // the same eval set exactly doubles it
-    val meta = spark.read.parquet(s"$idx/bloom").head()
-    assert(seedTotal > 0 && meta.getAs[Long]("total_items") == 2 * seedTotal,
-      s"append did not accumulate total_items: $seedTotal -> ${meta.getAs[Long]("total_items")}")
-    // the saturation audit: re-appending the SAME eval set flips no new
-    // bits, so the observed expectedFpp stays at the construction level
-    // and well under the 100x rebuild threshold
-    val observed = graft.ops.Curation.decontamBloomCompact(spark, idx)
-    assert(observed <= 100 * graft.ops.Curation.contamBloomFpp,
-      f"bloom audit reports saturation after an idempotent append: $observed%.2e")
-    // (the former rows-only self-check is gone: decontaminate_bloom_served
-    // exact-confirms its flagged slice and carries a full DuckDB oracle)
+    val eval = Tables(spark, sf0001, "documents").filter(col("doc_id") % Curation.evalStride === 0)
+    Curation.decontamIndexAppendBatch(spark, eval, idx)
+    assert(served() === first, "re-landing the eval slice changed the served result")
+    val total = spark.read.parquet(s"$idx/bloom").head().getAs[Long]("total_items")
+    assert(seedTotal > 0 && total == 2 * seedTotal,
+      s"append did not accumulate total_items: $seedTotal -> $total")
+    // retract every eval doc: the bloom still screens the contaminated
+    // docs in on its stale bits, and the confirm tier must refuse them all
+    Curation.decontamIndexDelete(spark, idx,
+      eval.select("doc_id").collect().map(_.getLong(0)).toSeq)
+    assert(served() === exact.map { case (id, _, _) => (id, 0L, false) },
+      "a retracted eval set still flags train docs: the exact confirm tier did not run")
   }
 
   test("decontaminate_bloom_served flags every doc the exact shingle join flags") {

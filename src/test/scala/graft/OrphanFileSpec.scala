@@ -47,8 +47,7 @@ class OrphanFileSpec extends AnyFunSuite {
     AnnIndex.lshIndexWrite(spark, sf0001, s"$root/lsh")
     AnnIndex.ivfIndexWriteStride(spark, sf0001, s"$root/ivf")
     AnnIndex.ivfPqIndexWrite(spark, sf0001, s"$root/ivfpq")
-    Curation.decontamBloomWrite(spark, sf0001, s"$root/decontam")
-    Curation.decontamShingleWrite(spark, sf0001, s"$root/decontam")
+    Curation.decontamIndexWrite(spark, sf0001, s"$root/decontam")
     Dedup.ingestManifestIndexInit(spark, s"$root/manifest", manifestCorpus)
     val docs = Tables(spark, manifestCorpus, "documents")
     Dedup.ingestManifestBatch(spark, docs.filter(col("doc_id") % 3 === 1),
