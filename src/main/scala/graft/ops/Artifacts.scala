@@ -80,17 +80,16 @@ private[graft] object Artifacts {
   /** [[atGeneration]] for a frame: cached AND materialised inside the
     * build, so the frame holds the generation it is stored under even
     * if the index changes before a caller consumes it. */
-  def frameAtGeneration(s: SparkSession, indexDir: String, key: String)(
+  def frameAtGeneration(s: SparkSession, snap: IndexMaintenance.Snapshot, key: String)(
       build: => DataFrame): DataFrame =
-    lookup(Slot(s, s"$indexDir|$key"), Frame, standing = false,
-      generation(s, indexDir))(pinned(build))
+    lookup(Slot(s, s"${snap.root}|$key"), Frame, standing = false, snap.generation)(pinned(build))
 
   /** [[frameAtGeneration]] for a decision that may conclude "no frame"
     * (the `None` is itself the memoised decision). */
-  def frameOptAtGeneration(s: SparkSession, indexDir: String, key: String)(
+  def frameOptAtGeneration(s: SparkSession, snap: IndexMaintenance.Snapshot, key: String)(
       build: => Option[DataFrame]): Option[DataFrame] =
-    lookup(Slot(s, s"$indexDir|$key"), Frame, standing = false,
-      generation(s, indexDir))(build.map(pinned))
+    lookup(Slot(s, s"${snap.root}|$key"), Frame, standing = false, snap.generation)(
+      build.map(pinned))
 
   /** A standing on-disk artifact for the whole JVM: `build` creates a
     * local temp dir, fills it and returns its path. Kept by [[reset]],
@@ -173,9 +172,4 @@ private[graft] object Artifacts {
     entries.forEach((slot, _) => out += slot.key)
     out.result()
   }
-
-  /** The generation of the index at `indexDir`: its log version, one
-    * `_log` listing when nothing changed. */
-  private def generation(s: SparkSession, indexDir: String): String =
-    IndexMaintenance.snapshot(s, indexDir).generation
 }

@@ -156,7 +156,7 @@ object Retrieval {
     * reach the driver. */
   private def semRanks(s: SparkSession, dir: String): DataFrame = {
     val idxDir = AnnIndex.lshIndexFor(s, dir)
-    Artifacts.frameAtGeneration(s, idxDir, s"hybrid-sem-ranks|$dir") {
+    Artifacts.frameAtGeneration(s, IndexMaintenance.snapshot(s, idxDir), s"hybrid-sem-ranks|$dir") {
       AnnIndex.lshIndexServe(s, idxDir, Seq(dir),
           Similarity.normed(s, dir)
             .filter(col("vec_id") % Similarity.queryStride === 0)
@@ -185,36 +185,40 @@ object Retrieval {
     *    (every uncertain query falls back individually), so it shares
     *    that oracle. Its `minMegaRows` is not read.
     *
-    * The lex ranks are memoized per index generation, materialised
-    * inside the build ([[Artifacts.frameAtGeneration]]), so a returned
-    * frame holds the index state it was built at however late it is
-    * consumed; any append/compact/delete moves the generation (pinned
-    * in `BoundedServeSpec`). */
+    * The serve takes ONE index snapshot and every read below — the job
+    * label, the banned head, the MaxScore decision, the doc-length
+    * statistics and the postings scan — reads that snapshot, so a
+    * commit landing mid-construction cannot pair one dictionary's
+    * banned list with another's `is_mega` slots. The lex ranks are
+    * memoized per index generation, materialised inside the build
+    * ([[Artifacts.frameAtGeneration]]), so a returned frame holds the
+    * index state it was built at however late it is consumed; any
+    * append/compact/delete moves the generation (pinned in
+    * `BoundedServeSpec`). */
   def searchHybridRrfServed(s: SparkSession, dir: String,
       bound: TextAnalysis.Bound = TextAnalysis.Bound.Unbounded): DataFrame = {
     import TextAnalysis.Bound
-    val idxDir = TextAnalysis.textIndexFor(s, dir)
+    val snap = IndexMaintenance.snapshot(s, TextAnalysis.textIndexFor(s, dir))
     def servedLex(banned: Seq[String]): DataFrame =
-      Artifacts.frameAtGeneration(s, idxDir,
+      Artifacts.frameAtGeneration(s, snap,
           s"hybrid-lex-served|${banned.sorted.mkString("\u0001")}|$dir") {
-        val postings = IndexMaintenance.scan(s, idxDir, "postings", "doc_id")
+        val postings = snap.scan(s, "postings", "doc_id")
           .select(col("doc_id"), col("term"), col("tf"))
         lexRanksOver(s, dir, postings, banned,
-          doclenStats = Some(TextAnalysis.textIndexDoclenStats(s, idxDir)))
+          doclenStats = Some(TextAnalysis.textIndexDoclenStats(s, snap)))
       }
-    val label = TextAnalysis.serveLabel("search_hybrid_rrf_served", bound,
-      IndexMaintenance.snapshot(s, idxDir))
+    val label = TextAnalysis.serveLabel("search_hybrid_rrf_served", bound, snap)
     IndexMaintenance.labeledJob(s, label) {
       bound match {
         case Bound.Unbounded => fuse(s, dir, servedLex(Nil))
         case Bound.MaxScore(share, _) =>
-          Artifacts.frameOptAtGeneration(s, idxDir, s"hybrid-maxscore-lex|$share|$dir")(
-            hybridMaxScoreLex(s, dir, idxDir, share).map(_._1)) match {
+          Artifacts.frameOptAtGeneration(s, snap, s"hybrid-maxscore-lex|$share|$dir")(
+            hybridMaxScoreLex(s, dir, snap, share).map(_._1)) match {
             case None => fuse(s, dir, servedLex(Nil))
             case Some(lex) => fuse(s, dir, lex)
           }
         case Bound.DfShare(share) =>
-          val banned = TextAnalysis.bannedTerms(s, idxDir, share)
+          val banned = TextAnalysis.bannedTerms(s, snap, share)
           val actCols = (1 to hybridQueryTerms).map { i =>
             max(when(col("pos") === i,
               when(if (banned.isEmpty) lit(false) else col("qt").isin(banned: _*), 0L)
@@ -312,25 +316,24 @@ object Retrieval {
     * The Some payload is (lexRanks frame, per-query decision frame
     * (q_id, mode)) — the decisions feed the BoundedServeSpec
     * engagement and scan-row pins. Like the fixed-query form,
-    * the returned frame SNAPSHOTS decision-time index state (tail file
-    * list, banned head) — collect promptly when ingest is concurrent;
-    * the served form memoizes it materialised per index generation. */
+    * every read is of the caller's snapshot `snap` (tail file list,
+    * banned head, dictionary, statistics, postings); the served form
+    * memoizes the result materialised per index generation. */
   private[graft] def hybridMaxScoreLex(s: SparkSession, dir: String,
-      idxDir: String,
+      snap: IndexMaintenance.Snapshot,
       maxDfShare: Double = TextAnalysis.bm25MaxDfShare): Option[(DataFrame, DataFrame)] = {
-    val snap = IndexMaintenance.snapshot(s, idxDir)
     val ts = snap.read(s, "termstats")
     val tombPending =
       snap.tombstonesOf("postings").nonEmpty || snap.tombstonesOf("doclen").nonEmpty
     val banned = scala.util.Try(
-      TextAnalysis.bannedTerms(s, idxDir, maxDfShare)).getOrElse(return None)
+      TextAnalysis.bannedTerms(s, snap, maxDfShare)).getOrElse(return None)
     if (banned.isEmpty) return None // no mega posting to avoid
     val nDocsFrozen = TextAnalysis.corpusStats(snap)._1
     val k = TextAnalysis.bm25TopK.toLong
     val tail = snap.tail(s, "postings", "doc_id")
     // dl + live statistics — the exact sources the unbounded serve
     // scores with (consistency by shared source, not by precondition)
-    val (doclen, withStats) = TextAnalysis.textIndexDoclenStats(s, idxDir)
+    val (doclen, withStats) = TextAnalysis.textIndexDoclenStats(s, snap)
 
     // per-query slots classified against the dictionary (terms absent
     // from the vocabulary: df 0, ub 0, cheap — they match nothing in

@@ -1553,8 +1553,8 @@ object TextAnalysis {
     df.withColumn("n_docs", lit(n)).withColumn("avgdl", lit(avgdl))
   }
 
-  /** The LIVE (doclen, corpus statistics) pair of a persisted text
-    * index — the dl/n_docs/avgdl source the hybrid serving family
+  /** The LIVE (doclen, corpus statistics) pair of a text index
+    * snapshot — the dl/n_docs/avgdl source the hybrid serving family
     * shares, so its bounded and unbounded forms are consistent BY
     * CONSTRUCTION. doclen is the tombstone-masked doc-values table; the
     * second element adds `n_docs`/`avgdl` columns to a frame: the
@@ -1565,8 +1565,7 @@ object TextAnalysis {
     * and only engages while a tail/tombstone is actually outstanding
     * (the compaction cadence bounds that window). */
   private[graft] def textIndexDoclenStats(s: SparkSession,
-      indexDir: String): (DataFrame, DataFrame => DataFrame) = {
-    val snap = IndexMaintenance.snapshot(s, indexDir)
+      snap: IndexMaintenance.Snapshot): (DataFrame, DataFrame => DataFrame) = {
     val doclen = snap.scan(s, "doclen", "doc_id").select(col("doc_id"), col("dl"))
     val fresh = snap.appendedBatches("doclen") == 0 && snap.tombstonesOf("doclen").isEmpty
     (doclen, if (fresh) withCorpusStats(snap) else withLiveStats(doclen))
@@ -1831,21 +1830,20 @@ object TextAnalysis {
       terms: Seq[String], maxDfShare: Double): Seq[String] =
     boundedQueryTerms(s, IndexMaintenance.snapshot(s, indexDir), terms, maxDfShare)
 
-  /** All dictionary terms ABOVE the df-share bound — the banned list
+  /** All dictionary terms ABOVE the df-share bound at `snap` — the banned list
     * for serve paths whose query terms are dynamic (the hybrid
     * retrieval's per-query slots), where a positive pushed `IN` is not
     * available and the mega-postings are excluded by an anti-filter
     * instead. Zipf makes this list tiny (the stopword head), so the
     * collect is bounded in practice; the guard caps it loudly. */
-  private[graft] def bannedTerms(s: SparkSession, indexDir: String,
+  private[graft] def bannedTerms(s: SparkSession, snap: IndexMaintenance.Snapshot,
       maxDfShare: Double, cap: Int = 10000): Seq[String] = {
-    val snap = IndexMaintenance.snapshot(s, indexDir)
     val nDocs = corpusStats(snap)._1
     val b = snap.read(s, "termstats")
       .filter(col("df").cast("double") > lit(maxDfShare) * lit(nDocs.toDouble))
       .select(col("term")).limit(cap + 1).collect().map(_.getString(0)).toSeq
     require(b.size <= cap,
-      s"bannedTerms($indexDir): more than $cap terms above df-share $maxDfShare — " +
+      s"bannedTerms(${snap.root}): more than $cap terms above df-share $maxDfShare — " +
       "the bound is set below the distribution's body, not its stopword head")
     b
   }

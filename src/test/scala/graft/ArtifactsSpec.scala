@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
-import graft.ops.{AnnIndex, Artifacts, Curation, Retrieval, Similarity}
+import graft.ops.{AnnIndex, Artifacts, Curation, IndexMaintenance, Retrieval, Similarity}
 
 /** Lifecycle pins of the one artifact and memo registry: what `clear()`
   * releases, that a corpus swap followed by `clear()` leaves no stale
@@ -38,7 +38,8 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(Retrieval.searchHybridRrfServed(spark, dir).count() > 0)
     // the serve's semantic ranks, fetched back through the registry
     // (a hit: the build must not run)
-    val sem = Artifacts.frameAtGeneration(spark, AnnIndex.lshIndexFor(spark, dir),
+    val sem = Artifacts.frameAtGeneration(spark,
+      IndexMaintenance.snapshot(spark, AnnIndex.lshIndexFor(spark, dir)),
       s"hybrid-sem-ranks|$dir")(fail("the hybrid serve did not memoise its semantic ranks"))
     assert(sem.storageLevel != StorageLevel.NONE,
       "the generation-keyed rank frame is not in the cache manager")

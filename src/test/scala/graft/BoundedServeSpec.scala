@@ -63,7 +63,8 @@ class BoundedServeSpec extends AnyFunSuite {
     assert(TextAnalysis.boundedQueryTerms(spark, s"$tmp/idx",
       TextAnalysis.bm25Query, TextAnalysis.bm25MaxDfShare) === Seq("join", "vector"),
       "df-share cut did not drop exactly the stopword")
-    val banned = TextAnalysis.bannedTerms(spark, s"$tmp/idx", TextAnalysis.bm25MaxDfShare)
+    val banned = TextAnalysis.bannedTerms(spark, IndexMaintenance.snapshot(spark, s"$tmp/idx"),
+      TextAnalysis.bm25MaxDfShare)
     assert(banned === Seq("spark"), s"banned head was $banned — want exactly the stopword")
     val bounded = TextAnalysis.textBm25Served(spark, s"$tmp/idx",
       bound = TextAnalysis.Bound.DfShare(TextAnalysis.bm25MaxDfShare)).collect().map(_.toSeq).toSeq
@@ -321,7 +322,7 @@ class BoundedServeSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val idxDir = TextAnalysis.textIndexFor(spark, tmp)
-    val dec = Retrieval.hybridMaxScoreLex(spark, tmp, idxDir)
+    val dec = Retrieval.hybridMaxScoreLex(spark, tmp, IndexMaintenance.snapshot(spark, idxDir))
     assert(dec.isDefined, "hybrid MaxScore must engage on the stopword corpus")
     val modes = dec.get._2.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(modes == Map(50L -> "pruned", 100L -> "fallback"),
@@ -368,7 +369,7 @@ class BoundedServeSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val idxDir = TextAnalysis.textIndexFor(spark, tmp)
-    def modesOf = Retrieval.hybridMaxScoreLex(spark, tmp, idxDir)
+    def modesOf = Retrieval.hybridMaxScoreLex(spark, tmp, IndexMaintenance.snapshot(spark, idxDir))
       .map(_._2.collect().map(r => r.getLong(0) -> r.getString(1)).toMap)
     val modes0 = modesOf
     assert(modes0.exists(_.get(50L).contains("pruned")),
@@ -472,7 +473,8 @@ class BoundedServeSpec extends AnyFunSuite {
     val maxScore = postingRows(col("term").isin(TextAnalysis.bm25Query: _*) &&
       col("doc_id").isin(cand: _*) && col("doc_id") >= lit(cand.min) && col("doc_id") <= lit(cand.max))
     val hybDir = s"$tmp/hyb"
-    val (hybLex, hybModes) = graft.ops.Retrieval.hybridMaxScoreLex(spark, hybDir, s"$hybDir-idx")
+    val (hybLex, hybModes) = graft.ops.Retrieval.hybridMaxScoreLex(spark, hybDir,
+      IndexMaintenance.snapshot(spark, s"$hybDir-idx"))
       .getOrElse(fail("hybrid MaxScore must engage on the stopword corpus"))
     assert(hybModes.filter(col("mode") === "pruned").count() > 0, "no hybrid query pruned")
     def lexRows(df: org.apache.spark.sql.DataFrame): (Set[Seq[Any]], Long) = {
@@ -512,7 +514,8 @@ class BoundedServeSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSeq
     assert(low.nonEmpty && low === exact,
       "lowcut MaxScore serve must stay identical to the unbounded serve")
-    val dec = Retrieval.hybridMaxScoreLex(spark, sf001, idx, TextAnalysis.bm25LowDfShare)
+    val dec = Retrieval.hybridMaxScoreLex(spark, sf001, IndexMaintenance.snapshot(spark, idx),
+      TextAnalysis.bm25LowDfShare)
     assert(dec.isDefined, "hybrid lowcut MaxScore must engage on the oracle corpus")
     val modeCounts = dec.get._2.groupBy("mode").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -906,5 +909,55 @@ class BoundedServeSpec extends AnyFunSuite {
       s"the MaxScore decision at the old snapshot moved: $decOld -> $decAgain")
     assert(!decAgain.get.contenders.exists(Set(61L, 63L)),
       "an appended doc is a contender of the version before its append")
+  }
+
+  test("hybrid one snapshot per serve: at snapshot v, the MaxScore decision and lex ranks keep v's " +
+      "values after a delete, a compaction and an append land") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("hybrid-one-snapshot").toString
+    // 'spark' is the mega term (116/120); 'alpha' (90/120) sits under
+    // the cut until the delete below takes 24 alpha-less docs out, after
+    // which the compacted dictionary bans it too
+    def htok(i: Long): Seq[String] = {
+      val b = Seq.newBuilder[String]
+      if (i <= 116) b += "spark"
+      if (i % 4 != 0) b += "alpha"
+      if (i % 2 == 0 && i <= 60) b += "beta"
+      (0 until (3 + (i % 5)).toInt).foreach(w => b += s"f${i}w$w")
+      b.result()
+    }
+    (1L to 120L).map(i => (i, htok(i).mkString(" "), "en", "s"))
+      .toDF("doc_id", "text", "lang", "source")
+      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val idx = TextAnalysis.textIndexFor(spark, tmp)
+    def at(snap: IndexMaintenance.Snapshot) = Retrieval.hybridMaxScoreLex(spark, tmp, snap)
+      .map { case (lex, modes) =>
+        (lex.collect().map(_.toSeq).toSet, modes.collect().map(_.toSeq).toSet) }
+    val v = IndexMaintenance.snapshot(spark, idx)
+    val before = at(v)
+    assert(before.isDefined, "hybrid MaxScore must engage on the stopword corpus")
+    // v's data files, kept aside: the compaction deletes the files it
+    // replaces, and the arm reads v after it (as a retention window would)
+    val kept = java.nio.file.Files.createTempDirectory("hybrid-one-snapshot-kept")
+    v.files.values.foreach { d =>
+      val to = kept.resolve(d.path)
+      java.nio.file.Files.createDirectories(to.getParent)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(idx, d.path), to)
+    }
+    TextAnalysis.textIndexDelete(spark, idx, (4L to 96L by 4L).toSeq)
+    TextAnalysis.textIndexCompact(spark, idx)
+    TextAnalysis.textIndexAppendBatch(spark,
+      Seq((121L, "spark alpha beta fresh", "en", "s")).toDF("doc_id", "text", "lang", "source"), idx)
+    v.files.values.foreach { d =>
+      val back = java.nio.file.Paths.get(idx, d.path)
+      if (!java.nio.file.Files.exists(back)) java.nio.file.Files.copy(kept.resolve(d.path), back)
+    }
+    val now = IndexMaintenance.snapshot(spark, idx)
+    assert(now.generation != v.generation)
+    assert(TextAnalysis.bannedTerms(spark, now, TextAnalysis.bm25MaxDfShare).toSet ==
+      Set("spark", "alpha"), "the compaction must move the banned head, or the pin is vacuous")
+    assert(at(now) != before, "the commits must move the decision or the ranks")
+    assert(at(v) == before,
+      "the decision at snapshot v read another version's dictionary, statistics or postings")
   }
 }

@@ -156,7 +156,8 @@ class MaintenanceSpec extends AnyFunSuite {
     // what the hybrid serve scores with: the facts while the index is
     // fresh, the live doclen aggregate under a tail or tombstones
     def served: (Long, Double) = {
-      val (_, withStats) = ops.TextAnalysis.textIndexDoclenStats(spark, idx)
+      val (_, withStats) = ops.TextAnalysis.textIndexDoclenStats(spark,
+        ops.IndexMaintenance.snapshot(spark, idx))
       val r = withStats(Seq(1).toDF("one")).select(col("n_docs"), col("avgdl")).head()
       (r.getLong(0), r.getDouble(1))
     }
