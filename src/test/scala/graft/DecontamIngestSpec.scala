@@ -43,13 +43,16 @@ class DecontamIngestSpec extends AnyFunSuite {
     val r = java.nio.file.Files.createTempDirectory("decontam-ingest-spec").toString
     val eval = Tables(spark, dir, "documents")
       .filter(col("doc_id") % Curation.evalStride === 0)
-    // seed = mod-0 third of the eval slice; land the other two thirds
-    eval.filter(pmod(col("doc_id"), lit(3)) === 0)
+    // seed = the mod-1 third of the eval slice; land the other two
+    // thirds, which hold every eval doc a train doc of this corpus
+    // shares a shingle with — the streamed batches, not the seed, carry
+    // the contamination verdicts under test
+    eval.filter(pmod(col("doc_id"), lit(3)) === 1)
       .write.mode("overwrite").parquet(s"$r/seed/documents.parquet")
     Curation.decontamIndexWrite(spark, s"$r/seed", s"$r/index")
     val streamedIds = new scala.collection.mutable.ArrayBuffer[Long]()
-    (1 to 2).foreach { b =>
-      val slice = eval.filter(pmod(col("doc_id"), lit(3)) === b)
+    Seq(1 -> 0, 2 -> 2).foreach { case (b, third) =>
+      val slice = eval.filter(pmod(col("doc_id"), lit(3)) === third)
       streamedIds ++= slice.select(col("doc_id")).collect().map(_.getLong(0))
       val tmp = s"$r/stage_$b"
       slice.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -96,6 +99,8 @@ class DecontamIngestSpec extends AnyFunSuite {
     // are absorbed by the confirm join)
     Curation.decontamIndexDelete(spark, s"$r/index", streamedIds.toSeq)
     Curation.decontamIndexWrite(spark, s"$r/seed", s"$r/seedidx")
+    assert(serveOf(s"$r/seedidx") != grown,
+      "the seed alone already yields the grown verdicts: the retraction is vacuous")
     assert(serveOf(s"$r/index") === serveOf(s"$r/seedidx"),
       "retracting the streamed eval docs did not roll back to the seed verdicts")
   }
