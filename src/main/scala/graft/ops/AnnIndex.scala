@@ -23,7 +23,7 @@ import graft.Tables
   *    vec_id (column-pruned scan).
   *  - `lshIndexAppend` hashes a NEW batch of vectors with the index's
   *    PERSISTED thresholds and appends — the landing-zone ingest form
-  *    (counterpart of `Dedup.dedupIncrementalPaths`). Thresholds stay
+  *    (counterpart of `Dedup.dedupIndexAppend`). Thresholds stay
   *    fixed at the generation the index was trained on, which is the
   *    production semantic: re-centering would silently re-bucket the
   *    existing corpus, so drift is handled by a rebuild, not an append.

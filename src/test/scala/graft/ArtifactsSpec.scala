@@ -54,11 +54,11 @@ class ArtifactsSpec extends AnyFunSuite {
     def rows(d: String) = Tables(spark, d, "documents").orderBy(col("doc_id"))
       .collect().map(_.toSeq).toSeq
     // the eval bloom of the standing decontamination index built over `d`
-    def evalBloom(d: String) = Curation.loadBloom(spark, Curation.decontamIndexFor(spark, d))
+    def indexBloom(d: String) = Curation.loadBloom(spark, Curation.decontamIndexFor(spark, d))
     writeCorpus(dir, 1)
     val before = (Similarity.pqCodebook(spark, dir),
       Similarity.pqCodebookTrained(spark, dir, iters = 2),
-      evalBloom(dir),
+      indexBloom(dir),
       rows(dir))
     // replace the corpus files at the SAME path, then the swap call
     writeCorpus(dir, 2)
@@ -71,9 +71,9 @@ class ArtifactsSpec extends AnyFunSuite {
         Similarity.pqCodebookTrained(spark, fresh, iters = 2)),
       "pqCodebookTrained still serves the pre-swap codebook")
     assert(!near(Similarity.pqCodebookTrained(spark, dir, iters = 2), before._2))
-    assert(evalBloom(dir) == evalBloom(fresh),
+    assert(indexBloom(dir) == indexBloom(fresh),
       "the decontamination index still serves the pre-swap bloom")
-    assert(evalBloom(dir) != before._3)
+    assert(indexBloom(dir) != before._3)
     assert(rows(dir) == rows(fresh), "Tables still reads the pre-swap file listing")
     assert(rows(dir) != before._4)
   }
